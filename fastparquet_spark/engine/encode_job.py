@@ -15,9 +15,9 @@ Spark translation of the reference's ``write()`` pipeline
   breaks);
 - each task also writes a JSON lineage manifest (input rows, bytes
   in/out, per-column codec chosen, encode seconds) to
-  ``_manifests/part-{pid:05d}.json`` — the Iceberg-snapshot stand-in:
-  commit is the atomic rename of the manifest, resume is "skip
-  partitions whose manifest already exists".
+  ``_manifests/part-{pid:05d}.json`` — the Iceberg-snapshot stand-in.
+  Staging, publication, the manifest commit and resume follow the one
+  protocol in engine/commit.py.
 
 Iceberg mapping (so a real catalog can slot in without changing the
 job): one ``append_dataset`` generation == one Iceberg SNAPSHOT (the
@@ -26,9 +26,9 @@ job): one ``append_dataset`` generation == one Iceberg SNAPSHOT (the
 + row/byte counts + per-column codec stats — the same fields Iceberg
 manifests carry); the re-merged ``_metadata`` sidecar == the table
 metadata pointer flip, the single atomic publish step.  Swapping the
-JSON writes for Iceberg catalog calls changes only the commit functions
-in this module — task logic, naming determinism and idempotent resume
-are already Iceberg-shaped.
+JSON writes for Iceberg catalog calls changes only engine/commit.py —
+task logic, naming determinism and idempotent resume are already
+Iceberg-shaped.
 """
 
 from __future__ import annotations
@@ -40,13 +40,10 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
-MANIFEST_DIR = "_manifests"
+# MANIFEST_DIR is re-exported: scripts and tests import it from here
+from fastparquet_spark.engine.commit import MANIFEST_DIR, _u_join, begin_job  # noqa: F401
+
 _MAX_BUFFER_BYTES = 512 << 20  # byte cap on buffered rows per output file
-
-
-def _u_join(base: str, rel: str) -> str:
-    """Path join that preserves URI schemes (s3://... stays s3://...)."""
-    return base.rstrip("/") + "/" + rel
 
 MANIFEST_SCHEMA_JSON = {
     "partition": "int", "file": "string", "rows": "long",
@@ -193,43 +190,14 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
     if layout == "hive" and not pcols:
         raise ValueError("hive layout needs at least one partition column")
 
-    from fastparquet_spark.io import get_fs
-
-    drv_fs = get_fs(out_dir)
-    drv_fs.makedirs(out_dir)
-    drv_fs.makedirs(_u_join(out_dir, MANIFEST_DIR))
-    # a pre-existing _metadata sidecar cannot see the files this job is
-    # about to add — drop it so footer-only readers fall back to the
-    # footer walk instead of silently missing new data; append_dataset
-    # re-merges it (incrementally) after the job commits
-    for name in ("_metadata", "_common_metadata"):
-        sidecar = _u_join(out_dir, name)
-        if drv_fs.exists(sidecar):
-            drv_fs.remove(sidecar)
-
     if num_partitions is None:
         num_partitions = max(spark.sparkContext.defaultParallelism, 1)
     # resume identity is the PARTITION ID: a re-run with a different
     # num_partitions (e.g. resuming on a different-sized cluster with
     # the defaultParallelism default) assigns DIFFERENT rows to the
-    # pids whose manifests exist — silent data loss.  The first run
-    # records its plan; resumes must match it.
-    plan_marker = _u_join(out_dir, f"{MANIFEST_DIR}/_plan_{file_prefix}.json")
-    if resume and drv_fs.exists(plan_marker):
-        with drv_fs.open_read(plan_marker) as fh:
-            prev = json.loads(fh.read())
-        if prev.get("num_partitions") != num_partitions:
-            raise ValueError(
-                f"resume with num_partitions={num_partitions} but the "
-                f"interrupted run used {prev.get('num_partitions')} — "
-                f"pass num_partitions={prev.get('num_partitions')} "
-                f"explicitly, or resume=False to start over")
-    else:
-        tmp = f"{plan_marker}.tmp"
-        with drv_fs.open_write(tmp) as fh:
-            fh.write(json.dumps(
-                {"num_partitions": num_partitions}).encode())
-        drv_fs.replace(tmp, plan_marker)
+    # pids whose manifests exist — silent data loss
+    begin_job(out_dir, file_prefix, {"num_partitions": num_partitions},
+              resume)
     work = _salted(df, partition_cols, salt_rows, num_partitions)
     sort_cols = [c for c in (sort_within or ()) if c in df.columns]
     if layout == "hive":
@@ -257,6 +225,7 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
         import pyarrow as pa_w
         from pyspark import TaskContext
 
+        from fastparquet_spark.engine.commit import TaskCommit
         from fastparquet_spark.format.writer import ParquetWriter
         from fastparquet_spark.io import get_fs
 
@@ -264,15 +233,13 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
 
         fs = get_fs(out_dir_)  # same seam as the driver: URIs work end to end
         ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        fname = f"{file_prefix_}-{pid:05d}.parquet"
-        mpath = _u_join(out_dir_, f"{MANIFEST_DIR}/{file_prefix_}-{pid:05d}.json")
-        if resume_ and fs.exists(mpath):
-            # checkpoint hit: partition already committed -> skip
-            with fs.open_read(mpath) as fh:
-                prev = json.loads(fh.read())
-            for row in prev if isinstance(prev, list) else [prev]:
-                row["skipped"] = True
+        pid = ctx.partitionId()
+        family = f"{file_prefix_}-{pid:05d}"
+        fname = f"{family}.parquet"
+        task = TaskCommit(fs, out_dir_, family, ctx.taskAttemptId())
+        prev = task.committed_rows() if resume_ else None
+        if prev is not None:  # checkpoint hit: partition already committed
+            for row in prev:
                 yield _arrow_manifest_batch(row)
             return
 
@@ -284,17 +251,10 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
 
             def __init__(self, rel: str, schema_: pa.Schema):
                 self.rel = rel
-                self.final = _u_join(out_dir_, rel)
+                final = _u_join(out_dir_, rel)
                 if "/" in rel:
-                    fs.makedirs(self.final.rsplit("/", 1)[0])
-                # attempt-suffixed, DOT-HIDDEN stage name: a failed or
-                # speculative attempt never publishes anything under a
-                # final name, twin attempts can't collide on the stage
-                # file, and Spark/Hive readers (which skip '.'/'_'
-                # basenames) can't see in-flight data
-                d, b = self.final.rsplit("/", 1)
-                self.tmp = f"{d}/.{b}.stage-{attempt}"
-                self.sink = fs.open_write(self.tmp)
+                    fs.makedirs(final.rsplit("/", 1)[0])
+                self.sink = fs.open_write(task.stage(final))
                 self.writer = ParquetWriter(self.sink, schema_,
                                             compression=compression_,
                                             encodings=encodings_,
@@ -342,13 +302,10 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
 
             def finish(self) -> dict:
                 # close the sink but do NOT publish: all of this task's
-                # files are renamed together at task commit, just before
-                # the manifest write — a task that dies mid-way leaves
-                # only .stage-N garbage, never committed-looking data
+                # files publish together at task commit
                 self.flush(final=True)
                 res = self.writer.close()
                 self.sink.close()
-                pending.append((self.tmp, self.final))
                 cols = {c.name: c.encoding for c in res.columns}
                 return {"partition": pid, "file": self.rel, "rows": self.rows,
                         "input_bytes": self.in_bytes,
@@ -356,16 +313,8 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
                         "encode_secs": 0.0, "kernel_secs": 0.0,
                         "skipped": False, "columns": json.dumps(cols)}
 
-            def abort(self):
-                try:
-                    self.sink.close()
-                finally:
-                    if fs.exists(self.tmp):
-                        fs.remove(self.tmp)
-
         outs: dict[tuple, _Out] = {}
         done_rows: list[dict] = []
-        pending: list[tuple[str, str]] = []  # (staged, final) publish queue
         seqs: dict[tuple, int] = {}  # files already closed per key
         try:
             for b in batches:
@@ -410,7 +359,7 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
                         # the earlier published file is never clobbered
                         seq = seqs.get(key, 0)
                         base = fname if seq == 0 else \
-                            f"{file_prefix_}-{pid:05d}-r{seq}.parquet"
+                            f"{family}-r{seq}.parquet"
                         rel = f"{_hive_dir(pcols_, key)}/{base}"
                         out = outs[key] = _Out(rel, data_schema)
                     out.add(part)
@@ -429,57 +378,19 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
             for row in done_rows:
                 row["encode_secs"] = total_secs
                 row["kernel_secs"] = kernel_secs
-            # task commit: (1) publish ALL staged files (atomic per
-            # file), (2) sweep stale finals/stages this partition id
-            # left in any touched hive dir from a dead attempt (batch
-            # boundaries after a shuffle are not deterministic, so the
-            # old attempt's -rN split may not be reproduced), (3) write
-            # the manifest marker.  Publish-FIRST ordering:
-            # sweeping before publishing let two simultaneous twins
-            # delete each other's in-flight stages and leave ZERO
-            # finals, and a zombie's sweep could remove a committed
-            # -rN file while that attempt's manifest still claimed it —
-            # now any destruction happens only after OUR complete set
-            # is on disk, and a swept twin's failed rename (final
-            # already present) reads as success, not data loss.
-            finals = {f for _t, f in pending}
-            staged = {t for t, _f in pending}
-            for tmp, final in pending:
-                try:
-                    fs.replace(tmp, final)  # atomic per file
-                except OSError:
-                    if not fs.exists(final):
-                        raise
-            if layout_ == "hive":
-                me = f"{file_prefix_}-{pid:05d}"
-                for d in sorted({f.rsplit("/", 1)[0] for f in finals}):
-                    for p in fs.listdir(d):
-                        base = p.rsplit("/", 1)[1]
-                        core = base[1:] if base.startswith(".") else base
-                        if (p not in finals and p not in staged
-                                and (core.startswith(me + ".")
-                                     or core.startswith(me + "-r"))):
-                            try:
-                                fs.remove(p)  # dead attempt's leftover
-                            except OSError:
-                                pass
-            # manifest written AFTER all data files: its existence == commit
-            payload = done_rows[0] if (layout_ == "flat" and len(done_rows) == 1) \
-                else done_rows
-            with fs.open_write(f"{mpath}.tmp-{attempt}") as fh:
-                fh.write(json.dumps(payload).encode())
-            fs.replace(f"{mpath}.tmp-{attempt}", mpath)
+            # batch boundaries after a shuffle are not deterministic, so
+            # a dead attempt's -rN split may not be reproduced: the
+            # commit's sweep removes it
+            task.commit(done_rows[0] if (layout_ == "flat" and len(done_rows) == 1)
+                        else done_rows)
             for row in done_rows:
                 yield _arrow_manifest_batch(row)
         except BaseException:
-            for out in outs.values():
-                out.abort()
-            for staged, _final in pending:
-                try:
-                    if fs.exists(staged):
-                        fs.remove(staged)
-                except OSError:
-                    pass
+            try:
+                for out in outs.values():
+                    out.sink.close()
+            finally:
+                task.abort()
             raise
 
     return work.mapInArrow(encode_partition, schema)

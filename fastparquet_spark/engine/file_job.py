@@ -15,70 +15,44 @@ Skew handling here is plan-time: a mega-file contributes one split per
 row group, so no task exceeds the row-group budget regardless of file
 size — the moral equivalent of the shuffle path's salting.
 
-Resume works exactly like encode_job: deterministic split ids, one
-part file + one JSON manifest per split, manifest rename = commit.
+Both formats run one task body (``_encode_splits``) with a format
+plug-in.  Each split is one commit of engine/commit.py's protocol:
+deterministic split ids, one staged part file + one JSON manifest per
+split, manifest rename = commit, resume skips committed splits.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import time
 from collections.abc import Iterator
 
 import pyarrow as pa
 
+from fastparquet_spark.engine.commit import TaskCommit, _u_join, begin_job
 from fastparquet_spark.engine.encode_job import (
-    MANIFEST_DIR,
     _arrow_manifest_batch,
     _manifest_struct,
-    _u_join,
 )
 
 
 def _prepare_split_job(spark, input_dir: str, out_dir: str,
                        rows_per_task: int, resume: bool):
-    """Shared driver scaffold for both split encoders: output dirs,
-    stale-sidecar invalidation, split planning, and the PLAN-IDENTITY
-    guard — resume keys on split ids, and split ids shift if the input
-    file set or rows_per_task changes between runs, so a resume against
-    a different plan would skip splits now holding different rows.  Returns
-    (splits, sdf) — sdf None when there is nothing to do."""
+    """Shared driver scaffold for both split encoders: split planning,
+    then ``commit.begin_job`` with the split fingerprint as the plan
+    identity — split ids shift if the input file set or rows_per_task
+    changes between runs.  Returns (splits, sdf) — sdf None when there
+    is nothing to do."""
     import hashlib
 
-    from fastparquet_spark.io import get_fs
-
-    drv_fs = get_fs(out_dir)
-    drv_fs.makedirs(out_dir)
-    drv_fs.makedirs(_u_join(out_dir, MANIFEST_DIR))
-    # a pre-existing sidecar cannot see the files this job adds —
-    # sidecar-preferring readers would silently miss them
-    for name in ("_metadata", "_common_metadata"):
-        sidecar = _u_join(out_dir, name)
-        if drv_fs.exists(sidecar):
-            drv_fs.remove(sidecar)
     splits = plan_splits(input_dir, rows_per_task)
     if not splits:
         return splits, None
     fingerprint = hashlib.sha256(json.dumps(
         [(s["file"], s["row_groups"]) for s in splits],
         sort_keys=True).encode()).hexdigest()
-    plan_marker = _u_join(out_dir, f"{MANIFEST_DIR}/_plan_files.json")
-    if resume and drv_fs.exists(plan_marker):
-        with drv_fs.open_read(plan_marker) as fh:
-            prev = json.loads(fh.read())
-        if prev.get("fingerprint") != fingerprint:
-            raise ValueError(
-                "resume against a DIFFERENT split plan (input files or "
-                "rows_per_task changed since the interrupted run) — "
-                "split ids no longer map to the same row groups; pass "
-                "resume=False to start over")
-    else:
-        tmp = f"{plan_marker}.tmp"
-        with drv_fs.open_write(tmp) as fh:
-            fh.write(json.dumps({"fingerprint": fingerprint,
-                                 "n_splits": len(splits)}).encode())
-        drv_fs.replace(tmp, plan_marker)
+    begin_job(out_dir, "files",
+              {"fingerprint": fingerprint, "n_splits": len(splits)}, resume)
     split_rows = [(s["split"], s["file"], json.dumps(s["row_groups"]))
                   for s in splits]
     # exactly one split per partition: hash repartition would collide
@@ -137,83 +111,65 @@ def plan_splits(input_dir: str, rows_per_task: int = 2_000_000,
     return splits
 
 
-def _stage_name(opath: str, attempt) -> str:
-    """Attempt-suffixed, DOT-HIDDEN stage path for ``opath`` — the
-    encode_dataset task-commit protocol (encode_job.py): a failed or
-    speculative attempt never publishes under a final name, twin
-    attempts cannot collide on the stage file, and directory-listing
-    readers (Spark/Hive skip '.'/'_' basenames) never see in-flight
-    data.  r4's ``opath + '.inprogress'`` violated all three."""
-    d, b = opath.rsplit("/", 1)
-    return f"{d}/.{b}.stage-{attempt}"
+def _encode_splits(sdf, input_dir: str, out_dir: str, columns, resume: bool,
+                   preserve_layout: bool, suffix: str, write):
+    """The split-encode task body both formats share.  ``suffix`` and
+    ``write(sink, table) -> ({column: codec}, bytes)`` are the format
+    plug-in; each split reads its row groups with pyarrow, stages one
+    ``part-{split}{suffix}`` file and commits it with its manifest."""
+    columns = list(columns) if columns else None
+    prefix = input_dir.rstrip("/") + "/"
 
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow as pa_w
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
 
-def _sweep_stale_stages(fs, opath: str, keep: str) -> None:
-    """Remove dead attempts' stage files for this output (same-name
-    twins from failed/zombie attempts), sparing our own ``keep``."""
-    d, b = opath.rsplit("/", 1)
-    prefix = f".{b}.stage-"
-    try:
-        entries = fs.listdir(d)
-    except OSError:
-        return
-    for p in entries:
-        if p != keep and p.rsplit("/", 1)[1].startswith(prefix):
-            try:
-                fs.remove(p)
-            except OSError:
-                pass
+        from fastparquet_spark.io import get_fs
 
+        fs = get_fs(out_dir)
+        attempt = TaskContext.get().taskAttemptId()
 
-def _publish(fs, body_writer, opath: str, attempt) -> None:
-    """Stage -> write -> atomic rename -> sweep stale twins.  On any
-    failure the stage file is removed; nothing committed-looking is
-    ever left behind.
+        # one Arrow thread per worker: N workers x default pool (ncpus)
+        # oversubscribes the box N-fold and collapses kernel throughput
+        pa_w.set_cpu_count(1)
+        pa_w.set_io_thread_count(2)
 
-    The sweep runs strictly AFTER our own publish: sweeping first
-    allowed two simultaneous twins to delete each other's in-flight
-    stage and leave ZERO finals (both renames failing).  With
-    publish-first, a sweep victim's failed rename always means a twin
-    already published a COMPLETE final — treated as success."""
-    tmp = _stage_name(opath, attempt)
-    try:
-        with fs.open_write(tmp) as sink:
-            body_writer(sink)
-        try:
-            fs.replace(tmp, opath)
-        except OSError:
-            # two legitimate twin outcomes: (a) our stage was SWEPT by
-            # a twin — sweeps run only after that twin published a
-            # complete final; (b) the rename failed with our stage
-            # intact — then the final must BYTE-MATCH our staged size
-            # (the writer is deterministic, so twins' outputs are
-            # identical; a stale file from an earlier run is not) —
-            # blessing ANY existing file masked real rename failures
-            #
-            ok = False
-            try:
-                if fs.exists(opath):
-                    if not fs.exists(tmp):
-                        ok = True  # swept by a published twin
-                    else:
-                        ok = fs.size(opath) == fs.size(tmp)
-            except OSError:
-                pass
-            if not ok:
-                raise  # no twin final: a real failure
-            try:  # our stage, if left, was not consumed
-                if fs.exists(tmp):
-                    fs.remove(tmp)
-            except OSError:
-                pass
-        _sweep_stale_stages(fs, opath, keep=tmp)
-    except BaseException:
-        try:
-            if fs.exists(tmp):
-                fs.remove(tmp)
-        except OSError:
-            pass
-        raise
+        for b in batches:
+            for sid, fpath, rgs_json in zip(b.column("split").to_pylist(),
+                                            b.column("file").to_pylist(),
+                                            b.column("rgs").to_pylist()):
+                family = f"part-{sid:05d}"
+                fname = family + suffix
+                rel = fpath[len(prefix):]
+                if preserve_layout and fpath.startswith(prefix) and "/" in rel:
+                    rel_dir = rel.rsplit("/", 1)[0]
+                    fs.makedirs(_u_join(out_dir, rel_dir))
+                    fname = f"{rel_dir}/{fname}"
+                task = TaskCommit(fs, out_dir, family, attempt)
+                prev = task.committed_rows() if resume else None
+                if prev is not None:
+                    yield _arrow_manifest_batch(prev[0])
+                    continue
+                t0 = time.perf_counter()
+                tbl = pq.ParquetFile(fpath).read_row_groups(
+                    json.loads(rgs_json), columns=columns, use_threads=False)
+                k0 = time.perf_counter()
+                try:
+                    with fs.open_write(task.stage(_u_join(out_dir, fname))) as sink:
+                        cols, nbytes = write(sink, tbl)
+                    done = time.perf_counter()
+                    row = {"partition": sid, "file": fname, "rows": tbl.num_rows,
+                           "input_bytes": tbl.nbytes, "output_bytes": nbytes,
+                           "encode_secs": done - t0, "kernel_secs": done - k0,
+                           "skipped": False, "columns": json.dumps(cols)}
+                    task.commit(row)
+                except BaseException:
+                    task.abort()
+                    raise
+                yield _arrow_manifest_batch(row)
+
+    return sdf.mapInArrow(run, _manifest_struct())
 
 
 def encode_files(spark, input_dir: str, out_dir: str, *,
@@ -236,79 +192,16 @@ def encode_files(spark, input_dir: str, out_dir: str, *,
     if sdf is None:
         return spark.createDataFrame([], _manifest_struct())
 
-    out_dir_ = out_dir
-    input_dir_ = input_dir
-    compression_ = compression
-    encodings_ = encodings
-    columns_ = list(columns) if columns else None
-    preserve_ = preserve_layout
-    bloom_ = bloom_filters
-    page_rows_ = page_rows
-    compat_ = compat
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow as pa_w
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
+    def write(sink, tbl):
         from fastparquet_spark.format.writer import write_file
-        from fastparquet_spark.io import get_fs
 
-        fs = get_fs(out_dir_)
-        attempt = TaskContext.get().taskAttemptId()
+        res = write_file(sink, tbl, compression=compression,
+                         encodings=encodings, bloom_filters=bloom_filters,
+                         page_rows=page_rows, compat=compat)
+        return {c.name: c.encoding for c in res.columns}, res.file_bytes
 
-        # one Arrow thread per worker: N workers x default pool (ncpus)
-        # oversubscribes the box N-fold and collapses kernel throughput
-        pa_w.set_cpu_count(1)
-        pa_w.set_io_thread_count(2)
-
-        for b in batches:
-            for sid, fpath, rgs_json in zip(b.column("split").to_pylist(),
-                                            b.column("file").to_pylist(),
-                                            b.column("rgs").to_pylist()):
-                fname = f"part-{sid:05d}.parquet"
-                if preserve_:
-                    prefix = input_dir_.rstrip("/") + "/"
-                    rel_dir = fpath[len(prefix):].rsplit("/", 1)[0] \
-                        if fpath.startswith(prefix) and "/" in fpath[len(prefix):] else ""
-                    if rel_dir:
-                        fs.makedirs(out_dir_.rstrip("/") + "/" + rel_dir)
-                        fname = f"{rel_dir}/part-{sid:05d}.parquet"
-                opath = out_dir_.rstrip("/") + "/" + fname
-                mpath = out_dir_.rstrip("/") + f"/{MANIFEST_DIR}/part-{sid:05d}.json"
-                if resume and fs.exists(mpath):
-                    with fs.open_read(mpath) as fh:
-                        prev = json.loads(fh.read())
-                    prev["skipped"] = True
-                    yield _arrow_manifest_batch(prev)
-                    continue
-                t0 = time.perf_counter()
-                tbl = pq.ParquetFile(fpath).read_row_groups(
-                    json.loads(rgs_json), columns=columns_, use_threads=False)
-                k0 = time.perf_counter()
-                res_box = []
-                _publish(fs, lambda sink: res_box.append(
-                    write_file(sink, tbl, compression=compression_,
-                               encodings=encodings_,
-                               bloom_filters=bloom_,
-                               page_rows=page_rows_,
-                               compat=compat_)), opath, attempt)
-                res = res_box[0]
-                kernel = time.perf_counter() - k0
-                cols = {c.name: c.encoding for c in res.columns}
-                row = {"partition": sid, "file": fname, "rows": tbl.num_rows,
-                       "input_bytes": tbl.nbytes, "output_bytes": res.file_bytes,
-                       "encode_secs": time.perf_counter() - t0,
-                       "kernel_secs": kernel, "skipped": False,
-                       "columns": json.dumps(cols)}
-                # manifest written AFTER the data file: existence == commit;
-                # its temp is attempt-suffixed for the same twin-safety
-                with fs.open_write(f"{mpath}.tmp-{attempt}") as fh:
-                    fh.write(json.dumps(row).encode())
-                fs.replace(f"{mpath}.tmp-{attempt}", mpath)
-                yield _arrow_manifest_batch(row)
-
-    return sdf.mapInArrow(run, _manifest_struct())
+    return _encode_splits(sdf, input_dir, out_dir, columns, resume,
+                          preserve_layout, ".parquet", write)
 
 
 def encode_files_fpsc(spark, input_dir: str, out_dir: str, *,
@@ -350,65 +243,16 @@ def encode_files_fpsc(spark, input_dir: str, out_dir: str, *,
         decisions = decide_string_codecs(head, pretrained,
                                          compression=compression)
 
-    out_dir_ = out_dir
-    compression_ = compression
-    columns_ = list(columns) if columns else None
-    pretrained_ = pretrained
-    decisions_ = decisions
-    fbloom_ = bloom_filters
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow as pa_w
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
+    def write(sink, tbl):
         from fastparquet_spark.format.container import write_container
-        from fastparquet_spark.io import get_fs
 
-        fs = get_fs(out_dir_)
-        attempt = TaskContext.get().taskAttemptId()
-        pa_w.set_cpu_count(1)
-        pa_w.set_io_thread_count(2)
-        fsst_cache: dict = dict(pretrained_)
+        # a copy: tables one split trains must not carry over to the
+        # next split a reused worker runs
+        blocks = write_container(sink, tbl, compression=compression,
+                                 fsst_cache=dict(pretrained),
+                                 bloom_filters=bloom_filters,
+                                 codec_decisions=decisions)
+        return {c.name: c.codec for c in blocks}, sink.tell()
 
-        for b in batches:
-            for sid, fpath, rgs_json in zip(b.column("split").to_pylist(),
-                                            b.column("file").to_pylist(),
-                                            b.column("rgs").to_pylist()):
-                fname = f"part-{sid:05d}.fpsc"
-                opath = out_dir_.rstrip("/") + "/" + fname
-                mpath = out_dir_.rstrip("/") + \
-                    f"/{MANIFEST_DIR}/part-{sid:05d}.json"
-                if resume and fs.exists(mpath):
-                    with fs.open_read(mpath) as fh:
-                        prev = json.loads(fh.read())
-                    prev["skipped"] = True
-                    yield _arrow_manifest_batch(prev)
-                    continue
-                t0 = time.perf_counter()
-                tbl = pq.ParquetFile(fpath).read_row_groups(
-                    json.loads(rgs_json), columns=columns_, use_threads=False)
-                k0 = time.perf_counter()
-                blocks_box = []
-                _publish(fs, lambda sink: blocks_box.append(
-                    write_container(sink, tbl,
-                                    compression=compression_,
-                                    fsst_cache=fsst_cache,
-                                    bloom_filters=fbloom_,
-                                    codec_decisions=decisions_)),
-                         opath, attempt)
-                blocks = blocks_box[0]
-                kernel = time.perf_counter() - k0
-                row = {"partition": sid, "file": fname, "rows": tbl.num_rows,
-                       "input_bytes": tbl.nbytes,
-                       "output_bytes": fs.size(opath),
-                       "encode_secs": time.perf_counter() - t0,
-                       "kernel_secs": kernel, "skipped": False,
-                       "columns": json.dumps({c.name: c.codec
-                                              for c in blocks})}
-                with fs.open_write(f"{mpath}.tmp-{attempt}") as fh:
-                    fh.write(json.dumps(row).encode())
-                fs.replace(f"{mpath}.tmp-{attempt}", mpath)
-                yield _arrow_manifest_batch(row)
-
-    return sdf.mapInArrow(run, _manifest_struct())
+    return _encode_splits(sdf, input_dir, out_dir, columns, resume, False,
+                          ".fpsc", write)

@@ -2,9 +2,10 @@
 
 The parquet-compat jobs must stay inside the standard encoding set so
 third-party readers accept the files (SURVEY.md §7.4); this job is the
-other half of the dual-mode design: same planning/manifest/resume
-contract, but the per-task payload is an FPSC container where string
-columns may pick FSST (best-of vs plain+block codec).  Decode is ours
+other half of the dual-mode design: the same plan marker, task commit
+and resume (engine/commit.py), but the per-task payload is a set of
+FPSC containers where string columns may pick FSST (best-of vs
+plain+block codec).  Decode is ours
 alone — ``read_fpsc`` distributes container paths and inflates them
 inside Python workers (vectorized FSST expansion, no per-row Python).
 """
@@ -17,13 +18,32 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
+from fastparquet_spark.engine.commit import _u_join, begin_job
 from fastparquet_spark.engine.encode_job import (
-    MANIFEST_DIR,
     _arrow_manifest_batch,
     _manifest_struct,
     _salted,
-    _u_join,
 )
+
+
+def container_chunks(batches, rows: int) -> Iterator[pa.Table]:
+    """Cut a stream of record batches into tables of ``rows`` rows, then
+    the remainder — one container each, so a writer's memory is bounded
+    by the chunk, not the partition."""
+    buf: list[pa.RecordBatch] = []
+    n = 0
+    for b in batches:
+        buf.append(b)
+        n += b.num_rows
+        if n >= rows:
+            tbl = pa.Table.from_batches(buf)
+            end = (n // rows) * rows
+            for start in range(0, end, rows):
+                yield tbl.slice(start, rows)
+            buf, n = (tbl.slice(end).to_batches(), n - end) if end < n \
+                else ([], 0)
+    if n:
+        yield pa.Table.from_batches(buf)
 
 
 def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
@@ -49,13 +69,10 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
 
     All IO goes through the ``io.get_fs`` seam, so ``out_dir`` may be a
     ``file://``/``s3://``-style URI like every other engine path."""
-    from fastparquet_spark.io import get_fs
-
-    drv_fs = get_fs(out_dir)
-    drv_fs.makedirs(out_dir)
-    drv_fs.makedirs(_u_join(out_dir, MANIFEST_DIR))
     if num_partitions is None:
         num_partitions = max(spark.sparkContext.defaultParallelism, 1)
+    # resume keys on partition ids, as in encode_dataset
+    begin_job(out_dir, "part", {"num_partitions": num_partitions}, resume)
     work = _salted(df, partition_cols, salt_rows, num_partitions)
 
     pretrained: dict = {}
@@ -82,114 +99,58 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
         import pyarrow as pa_w
         from pyspark import TaskContext
 
-        from fastparquet_spark.engine.file_job import _stage_name
+        from fastparquet_spark.engine.commit import TaskCommit
         from fastparquet_spark.format.container import write_container
         from fastparquet_spark.io import get_fs
 
         pa_w.set_cpu_count(1)
         fs = get_fs(out_dir_)
         ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        mpath = _u_join(out_dir_, f"{MANIFEST_DIR}/part-{pid:05d}.json")
-        if resume_ and fs.exists(mpath):
-            with fs.open_read(mpath) as fh:
-                prev = json.loads(fh.read())
-            for row in prev if isinstance(prev, list) else [prev]:
-                row["skipped"] = True
+        pid = ctx.partitionId()
+        task = TaskCommit(fs, out_dir_, f"part-{pid:05d}", ctx.taskAttemptId())
+        prev = task.committed_rows() if resume_ else None
+        if prev is not None:
+            for row in prev:
                 yield _arrow_manifest_batch(row)
             return
 
         fsst_cache: dict = dict(pretrained_)  # driver-trained tables
         done_rows: list[dict] = []
-        pending: list[tuple[str, str]] = []  # (staged, final)
-        buf: list[pa.RecordBatch] = []
-        buf_rows = 0
         task_start = time.perf_counter()
 
-        def write_one(tbl: pa.Table):
+        try:
             # STAGE only — all containers publish together at task
             # commit, so a failed/racing attempt never leaves a partial
             # final-named set that read_fpsc (which lists *.fpsc,
             # manifest-blind) would read
-            k = len(done_rows)
-            fname = f"part-{pid:05d}-{k:03d}.fpsc"
-            fpath = _u_join(out_dir_, fname)
-            tmp = _stage_name(fpath, attempt)
-            t0 = time.perf_counter()
-            with fs.open_write(tmp) as sink:
-                blocks = write_container(sink, tbl,
-                                         compression=compression_,
-                                         fsst_cache=fsst_cache,
-                                         bloom_filters=bloom_,
-                                         codec_decisions=decisions_)
-            kernel = time.perf_counter() - t0
-            pending.append((tmp, fpath))
-            done_rows.append(
-                {"partition": pid, "file": fname, "rows": tbl.num_rows,
-                 "input_bytes": tbl.nbytes,
-                 "output_bytes": fs.size(tmp),
-                 "encode_secs": 0.0, "kernel_secs": kernel,
-                 "skipped": False,
-                 "columns": json.dumps({b.name: b.codec for b in blocks})})
-
-        def flush_chunk(final: bool = False):
-            nonlocal buf, buf_rows
-            if not buf_rows:
-                return
-            tbl = pa.Table.from_batches(buf)
-            n = tbl.num_rows
-            end = n if final else (n // rows_per_) * rows_per_
-            for start in range(0, end, rows_per_):
-                write_one(tbl.slice(start, rows_per_))
-            if end < n:
-                buf, buf_rows = tbl.slice(end).to_batches(), n - end
-            else:
-                buf, buf_rows = [], 0  # release buffered batches
-
-        try:
-            for b in batches:
-                buf.append(b)
-                buf_rows += b.num_rows
-                if buf_rows >= rows_per_:
-                    flush_chunk()
-            flush_chunk(final=True)
+            for tbl in container_chunks(batches, rows_per_):
+                fname = f"part-{pid:05d}-{len(done_rows):03d}.fpsc"
+                staged = task.stage(_u_join(out_dir_, fname))
+                t0 = time.perf_counter()
+                with fs.open_write(staged) as sink:
+                    blocks = write_container(sink, tbl,
+                                             compression=compression_,
+                                             fsst_cache=fsst_cache,
+                                             bloom_filters=bloom_,
+                                             codec_decisions=decisions_)
+                kernel = time.perf_counter() - t0
+                done_rows.append(
+                    {"partition": pid, "file": fname, "rows": tbl.num_rows,
+                     "input_bytes": tbl.nbytes,
+                     "output_bytes": fs.size(staged),
+                     "encode_secs": 0.0, "kernel_secs": kernel,
+                     "skipped": False,
+                     "columns": json.dumps({b.name: b.codec for b in blocks})})
             if not done_rows:
                 return
-            # task commit: publish the COMPLETE container set first
-            # (each rename atomic; a swept stage with the final present
-            # means a twin already published a complete file), then
-            # sweep a dead twin's extra-index finals, then the manifest
-            for tmp, fpath in pending:
-                try:
-                    fs.replace(tmp, fpath)
-                except OSError:
-                    if not fs.exists(fpath):
-                        raise
-            finals = {f for _t, f in pending}
-            me = f"part-{pid:05d}-"
-            for pth in fs.listdir(out_dir_):
-                base = pth.rsplit("/", 1)[1]
-                if base.startswith(me) and base.endswith(".fpsc") \
-                        and pth not in finals:
-                    try:
-                        fs.remove(pth)
-                    except OSError:
-                        pass
             total = time.perf_counter() - task_start
             for row in done_rows:
                 row["encode_secs"] = total
-            with fs.open_write(f"{mpath}.tmp-{attempt}") as fh:
-                fh.write(json.dumps(done_rows).encode())
-            fs.replace(f"{mpath}.tmp-{attempt}", mpath)
+            task.commit(done_rows)
             for row in done_rows:
                 yield _arrow_manifest_batch(row)
         except BaseException:
-            for tmp, _f in pending:
-                try:
-                    if fs.exists(tmp):
-                        fs.remove(tmp)
-                except OSError:
-                    pass
+            task.abort()
             raise
 
     return work.mapInArrow(run, _manifest_struct())

@@ -33,13 +33,13 @@ The Python Data Source API has no column-pruning hook yet; pass
 end, partition columns appended last (Spark's convention).
 
 Write side (``df.write.format("fps").save(dir)``): each task streams
-its Arrow batches through ``format.writer.write_file`` into one
-staged ``part-<job>-<pid>.parquet`` per task attempt; ``commit``
-renames the one successful attempt per task to its deterministic
-final name and sweeps stale stages (the engine's twin-safe
-publish-first protocol), then re-merges the ``_metadata`` /
-``_common_metadata`` sidecars so footer-only readers see the new
-files in one fetch.
+its Arrow batches through ``format.writer.ParquetWriter`` into one
+staged ``part-<job>-<pid>.parquet`` per task attempt; the driver's
+``commit`` publishes the one successful attempt per task with
+engine/commit.py's ``publish_job`` (publish first, then remove the old
+files on overwrite, then sweep this job's stages), then re-merges the
+``_metadata`` / ``_common_metadata`` sidecars so footer-only readers
+see the new files in one fetch.
 """
 
 from __future__ import annotations
@@ -242,29 +242,59 @@ class _Committed(WriterCommitMessage):
     files: tuple = ()  # (staged_rel, final_rel) pairs
 
 
-class FpsWriter(DataSourceArrowWriter):
-    """Twin-safe staged commit, same protocol as the engine's file
-    jobs: tasks write ``.<final>.stage-<attempt>`` (dot-hidden, so no
-    reader or lister ever sees a partial file), the driver's ``commit``
-    renames exactly the winning attempt per task and sweeps the rest."""
+class StagedWriter(DataSourceArrowWriter):
+    """Driver half of a DataSource write, shared by the fps and fpsc
+    writers: tasks stage ``part-<job>-...`` files (engine/commit.py
+    names) and report them relative to ``path``; ``commit`` sees exactly
+    ONE message per task — the successful attempt — and publishes it
+    with ``publish_job``; ``abort`` removes this job's stages.  The job
+    token (minted once on the driver, shared by all attempts via
+    pickling) keeps distinct jobs — e.g. successive appends — from
+    colliding or sweeping each other's stages."""
 
-    def __init__(self, path: str, compression: str, row_group_rows: int,
-                 overwrite: bool):
+    suffix: str  # the data files ``overwrite`` replaces
+
+    def __init__(self, path: str, overwrite: bool):
         import uuid
 
         self.path = path
-        self.compression = compression
-        self.row_group_rows = row_group_rows
         self.overwrite = overwrite
         self.job = uuid.uuid4().hex[:8]
 
     def _full(self, rel: str) -> str:
         return self.path.rstrip("/") + "/" + rel
 
+    def commit(self, messages):
+        from fastparquet_spark.engine.commit import publish_job
+        from fastparquet_spark.io import get_fs
+
+        pending = [(self._full(s), self._full(f))
+                   for m in messages for s, f in m.files]
+        publish_job(get_fs(self.path), self.path.rstrip("/"), pending,
+                    f"part-{self.job}", self.suffix, self.overwrite)
+
+    def abort(self, messages):
+        from fastparquet_spark.engine.commit import abort_job
+        from fastparquet_spark.io import get_fs
+
+        abort_job(get_fs(self.path), self.path.rstrip("/"),
+                  f"part-{self.job}")
+
+
+class FpsWriter(StagedWriter):
+    suffix = ".parquet"
+
+    def __init__(self, path: str, compression: str, row_group_rows: int,
+                 overwrite: bool):
+        super().__init__(path, overwrite)
+        self.compression = compression
+        self.row_group_rows = row_group_rows
+
     def write(self, iterator: Iterator) -> _Committed:
         import pyarrow as pa
         from pyspark import TaskContext
 
+        from fastparquet_spark.engine.commit import discard, stage_name
         from fastparquet_spark.format.writer import ParquetWriter
         from fastparquet_spark.io import get_fs
 
@@ -272,9 +302,8 @@ class FpsWriter(DataSourceArrowWriter):
         fs = get_fs(self.path)
         fs.makedirs(self.path)
         ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        final = f"part-{self.job}-{pid:05d}.parquet"
-        staged = f".{final}.stage-{attempt}"
+        final = f"part-{self.job}-{ctx.partitionId():05d}.parquet"
+        staged = stage_name(final, ctx.taskAttemptId())
         # STREAM batches into row groups — memory is bounded by one row
         # group, never the whole task partition (a multi-GB partition
         # must not be buffered as a single Table before writing)
@@ -311,53 +340,13 @@ class FpsWriter(DataSourceArrowWriter):
             try:
                 if out is not None:
                     out.close()
-                if fs.exists(self._full(staged)):
-                    fs.remove(self._full(staged))
-            except OSError:
-                pass
+            finally:
+                discard(fs, [self._full(staged)])
             raise
         return _Committed(((staged, final),))
 
     def commit(self, messages):
-        from fastparquet_spark.io import get_fs
-
-        import os as _os
-
-        fs = get_fs(self.path)
-        root = self.path.rstrip("/")
-        if self.overwrite:
-            # walk, not a root-level glob: hive-layout data lives in
-            # key=value subdirectories and surviving files would be
-            # swept back into the new sidecar
-            for p in fs.walk_files(root):
-                base = _os.path.basename(p)
-                if p.endswith(".parquet") and not base.startswith("."):
-                    fs.remove(p)
-            for name in ("_metadata", "_common_metadata"):
-                if fs.exists(f"{root}/{name}"):
-                    fs.remove(f"{root}/{name}")
-        for msg in messages:
-            for staged, final in msg.files:
-                fs.replace(self._full(staged), self._full(final))
-        # sweep stale stages from failed/speculative attempts
-        for p in fs.glob(f"{root}/.part-{self.job}-*.stage-*"):
-            try:
-                fs.remove(p)
-            except OSError:
-                pass
         from fastparquet_spark.format.dataset import write_metadata_sidecar
 
+        super().commit(messages)
         write_metadata_sidecar(self.path)
-
-    def abort(self, messages):
-        from fastparquet_spark.io import get_fs
-
-        fs = get_fs(self.path)
-        for msg in messages:
-            if msg is None:
-                continue
-            for staged, _final in msg.files:
-                try:
-                    fs.remove(self._full(staged))
-                except OSError:
-                    pass

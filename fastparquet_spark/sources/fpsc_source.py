@@ -18,28 +18,23 @@ container's footer.
 
 Write side: an Arrow writer — each task streams its batches into
 containers of ~``rows_per_container`` rows (bounded memory, FSST table
-trained once per column per task).  Tasks STAGE files under
-attempt-suffixed names; ``commit`` (driver-side, fed only by the one
-successful attempt per task) renames them to deterministic final names
-and sweeps leftovers from failed/speculative attempts — so a task
-retry can never leave duplicate rows in the dataset.  ``mode
-("overwrite")`` removes pre-existing containers at commit;  ``abort``
-removes this job's staged files.
+trained once per column per task), staged under engine/commit.py's
+names; the driver's ``commit`` publishes them to deterministic final
+names ``part-<job>-<pid>-<k>.fpsc`` with ``publish_job`` and sweeps
+leftovers from failed/speculative attempts — so a task retry can never
+leave duplicate rows in the dataset.  ``mode("overwrite")`` removes
+the pre-existing containers after the new ones are published;
+``abort`` removes this job's staged files.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceArrowWriter,
-    DataSourceReader,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
+
+from fastparquet_spark.sources.fps_source import StagedWriter, _Committed
 
 
 def _list_fpsc(path: str) -> list[str]:
@@ -156,39 +151,22 @@ class FpscReader(DataSourceReader):
         yield from read_container(partition.value).to_batches()
 
 
-@dataclass
-class _Committed(WriterCommitMessage):
-    files: tuple = ()  # (staged_rel, final_rel) pairs
-
-
-class FpscWriter(DataSourceArrowWriter):
-    """Staged two-phase commit: tasks write ``<final>.stage-<attempt>``
-    files; only ``commit`` (which sees exactly ONE message per task —
-    the successful attempt) renames them to their deterministic final
-    names ``part-<job>-<pid>-<k>.fpsc``.  A failed or speculative
-    attempt's staged files are swept at commit/abort, so retries can
-    never duplicate rows.  The job token (minted once on the driver,
-    shared by all attempts via pickling) keeps distinct jobs — e.g.
-    successive appends — from colliding."""
+class FpscWriter(StagedWriter):
+    suffix = ".fpsc"
 
     def __init__(self, path: str, compression: str, rows_per_container: int,
                  overwrite: bool, bloom_filters: dict | None = None):
-        import uuid
-
-        self.path = path
+        super().__init__(path, overwrite)
         self.compression = compression
         self.rows_per = rows_per_container
-        self.overwrite = overwrite
         self.bloom = bloom_filters
-        self.job = uuid.uuid4().hex[:8]
-
-    def _full(self, rel: str) -> str:
-        return self.path.rstrip("/") + "/" + rel
 
     def write(self, iterator: Iterator) -> _Committed:
         import pyarrow as pa
         from pyspark import TaskContext
 
+        from fastparquet_spark.engine.commit import stage_name
+        from fastparquet_spark.engine.fpsc_job import container_chunks
         from fastparquet_spark.format.container import write_container
         from fastparquet_spark.io import get_fs
 
@@ -199,79 +177,12 @@ class FpscWriter(DataSourceArrowWriter):
         pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
         fsst_cache: dict = {}
         done: list[tuple[str, str]] = []
-        buf: list[pa.RecordBatch] = []
-        buf_rows = 0
-
-        def flush(final: bool = False):
-            nonlocal buf, buf_rows
-            if not buf_rows:
-                return
-            tbl = pa.Table.from_batches(buf)
-            n = tbl.num_rows
-            end = n if final else (n // self.rows_per) * self.rows_per
-            for start in range(0, end, self.rows_per):
-                final_rel = f"part-{self.job}-{pid:05d}-{len(done):03d}.fpsc"
-                staged_rel = f"{final_rel}.stage-{attempt}"
-                with fs.open_write(self._full(staged_rel)) as sink:
-                    write_container(sink, tbl.slice(start, self.rows_per),
-                                    compression=self.compression,
-                                    fsst_cache=fsst_cache,
-                                    bloom_filters=self.bloom)
-                done.append((staged_rel, final_rel))
-            if end < n:
-                buf, buf_rows = tbl.slice(end).to_batches(), n - end
-            else:
-                buf, buf_rows = [], 0
-
-        for b in iterator:
-            buf.append(b)
-            buf_rows += b.num_rows
-            if buf_rows >= self.rows_per:
-                flush()
-        flush(final=True)
+        for tbl in container_chunks(iterator, self.rows_per):
+            final_rel = f"part-{self.job}-{pid:05d}-{len(done):03d}.fpsc"
+            staged_rel = stage_name(final_rel, attempt)
+            with fs.open_write(self._full(staged_rel)) as sink:
+                write_container(sink, tbl, compression=self.compression,
+                                fsst_cache=fsst_cache,
+                                bloom_filters=self.bloom)
+            done.append((staged_rel, final_rel))
         return _Committed(tuple(done))
-
-    def _sweep_stages(self, fs) -> None:
-        """Remove staged leftovers from THIS job's failed/speculative
-        attempts only — a concurrent job's in-flight stages (different
-        job token in the name) must survive our commit/abort."""
-        import os
-
-        for p in fs.walk_files(self.path):
-            base = os.path.basename(p)
-            if ".fpsc.stage-" in base and base.startswith(f"part-{self.job}-"):
-                fs.remove(p)
-
-    def commit(self, messages):
-        import os
-
-        from fastparquet_spark.io import get_fs
-
-        fs = get_fs(self.path)
-        renames = [(s, f) for m in messages
-                   for (s, f) in (getattr(m, "files", ()) or ())]
-        # overwrite ordering: snapshot the pre-existing containers FIRST,
-        # publish the new ones, and only then remove the old — a crash
-        # mid-commit can leave extra old files (re-run heals) but can
-        # never lose the old data with the new not yet visible
-        old: list[str] = []
-        if self.overwrite:
-            keep = {f for _s, f in renames}
-            old = [p for p in fs.walk_files(self.path)
-                   if p.endswith(".fpsc") and os.path.basename(p) not in keep]
-        for staged, final in renames:
-            fs.replace(self._full(staged), self._full(final))
-        for p in old:
-            fs.remove(p)
-        self._sweep_stages(fs)
-
-    def abort(self, messages):
-        from fastparquet_spark.io import get_fs
-
-        fs = get_fs(self.path)
-        for m in messages:
-            for staged, _final in getattr(m, "files", ()) or ():
-                full = self._full(staged)
-                if fs.exists(full):
-                    fs.remove(full)
-        self._sweep_stages(fs)

@@ -8,12 +8,28 @@ import os
 import pytest
 
 from fastparquet_spark.engine import encode_files, plan_splits, synthetic_source_table
+from fastparquet_spark.engine.commit import TaskCommit, stage_name, sweep
 
 
 @pytest.fixture(scope="module")
 def src_dir(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("src"))
     return d
+
+
+def _publish(fs, body_writer, opath: str, attempt) -> None:
+    """One single-file task commit of ``opath`` through engine/commit.py
+    (its manifest lands beside ``opath``'s directory, not in it)."""
+    out_dir = os.path.dirname(os.path.dirname(opath))
+    fs.makedirs(os.path.join(out_dir, "_manifests"))
+    task = TaskCommit(fs, out_dir, "part-00000", attempt)
+    try:
+        with fs.open_write(task.stage(opath)) as sink:
+            body_writer(sink)
+        task.commit({})
+    except BaseException:
+        task.abort()
+        raise
 
 
 def _materialize(spark, d):
@@ -176,11 +192,6 @@ def test_staged_commit_protocol(spark, src_dir, tmp_path):
 
     import pyarrow as pa
 
-    from fastparquet_spark.engine.file_job import (
-        _publish,
-        _stage_name,
-        _sweep_stale_stages,
-    )
     from fastparquet_spark.format.writer import write_file
     from fastparquet_spark.io import LocalFS
 
@@ -217,14 +228,14 @@ def test_staged_commit_protocol(spark, src_dir, tmp_path):
 
     # stage names are dot-hidden + attempt-suffixed (Spark readers skip
     # '.'-prefixed basenames)
-    s = _stage_name(opath, 42)
+    s = stage_name(opath, 42)
     assert s.rsplit("/", 1)[1] == ".part-00000.parquet.stage-42"
 
     # a zombie attempt's stale stage is swept at commit
-    stale = _stage_name(opath, 99)
+    stale = stage_name(opath, 99)
     with open(stale, "wb") as fh:
         fh.write(b"partial")
-    _sweep_stale_stages(fs, opath, keep="nonexistent")
+    sweep(fs, [opath], "part-00000")
     assert not os.path.exists(stale)
 
     # end-to-end: a full job leaves no non-committed visible files, and
@@ -265,7 +276,6 @@ def test_publish_three_twins_hammer(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from fastparquet_spark.engine.file_job import _publish
     from fastparquet_spark.format.writer import write_file
     from fastparquet_spark.io import LocalFS
 

@@ -130,12 +130,14 @@ def test_staged_leftovers_never_read_and_sweep_is_job_scoped(registered,
     _df(spark, 500).write.format("fpsc").mode("append").save(str(out))
     stale = out / "part-deadbeef-00000-000.fpsc.stage-99"
     stale.write_bytes(b"garbage from a dead attempt")
+    hidden = out / ".part-deadbeef-00000-001.fpsc.stage-98"
+    hidden.write_bytes(b"garbage from a dead attempt")
     assert spark.read.format("fpsc").load(str(out)).count() == 500
     _df(spark, 100).write.format("fpsc").mode("append").save(str(out))
-    # the foreign stage survives (concurrent-job safety) but stays invisible
-    assert stale.exists()
+    # the foreign stages survive (concurrent-job safety) but stay invisible
+    assert stale.exists() and hidden.exists()
     assert spark.read.format("fpsc").load(str(out)).count() == 600
     # and no stage file from the jobs that DID commit remains
     others = [f for f in os.listdir(out)
-              if ".stage-" in f and not f.startswith("part-deadbeef-")]
+              if ".stage-" in f and not f.lstrip(".").startswith("part-deadbeef-")]
     assert others == []

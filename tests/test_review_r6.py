@@ -266,24 +266,32 @@ def test_hive_nan_partition_value_rows_survive(spark, tmp_path):
 
 def test_resume_rejects_changed_num_partitions(spark, tmp_path):
     """(r6 engine review #7) resume with a different num_partitions
-    would skip pids now holding different rows — must raise."""
+    would skip pids now holding different rows — must raise, on the
+    parquet and the fpsc shuffle encoders alike."""
     from fastparquet_spark.engine import encode_dataset
+    from fastparquet_spark.engine.fpsc_job import (
+        encode_dataset_fpsc, read_fpsc,
+    )
 
-    out = str(tmp_path / "np")
     df = spark.range(500).selectExpr("id", "concat('x', id) AS content")
-    encode_dataset(spark, df, out, partition_cols=(), num_partitions=2,
-                   resume=True).collect()
-    with pytest.raises(ValueError, match="num_partitions"):
-        encode_dataset(spark, df, out, partition_cols=(),
-                       num_partitions=3, resume=True).collect()
-    # same value resumes fine (all partitions skip)
-    rows = encode_dataset(spark, df, out, partition_cols=(),
-                          num_partitions=2, resume=True).collect()
-    assert all(r.skipped for r in rows)
-    # resume=False starts over regardless
-    encode_dataset(spark, df, out, partition_cols=(), num_partitions=3,
-                   resume=False).collect()
-    assert spark.read.parquet(out).count() == 500
+    for name, encode, read in (
+            ("np", encode_dataset, spark.read.parquet),
+            ("np_fpsc", encode_dataset_fpsc,
+             lambda out: read_fpsc(spark, out))):
+        out = str(tmp_path / name)
+        encode(spark, df, out, partition_cols=(), num_partitions=2,
+               resume=True).collect()
+        with pytest.raises(ValueError, match="num_partitions"):
+            encode(spark, df, out, partition_cols=(),
+                   num_partitions=3, resume=True).collect()
+        # same value resumes fine (all partitions skip)
+        rows = encode(spark, df, out, partition_cols=(),
+                      num_partitions=2, resume=True).collect()
+        assert all(r.skipped for r in rows)
+        # resume=False starts over regardless
+        encode(spark, df, out, partition_cols=(), num_partitions=3,
+               resume=False).collect()
+        assert read(out).count() == 500
 
 
 def test_encode_files_plan_guard_and_sidecar_drop(spark, tmp_path):

@@ -13,6 +13,8 @@ same bits on Spark and DuckDB regardless of partial-agg order.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -48,6 +50,20 @@ def _scan_splits(path: str, max_partition_bytes: int) -> int | None:
         return None
 
 
+_BYTE_UNITS = {"": 0, "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2,
+               "g": 3, "gb": 3, "t": 4, "tb": 4, "p": 5, "pb": 5}
+
+
+def _byte_size(text: str) -> int:
+    """Bytes in a Spark size setting ("134217728b", "128m", "128MB",
+    "1g"), with binary k/m/g/t/p suffixes like Spark's own
+    ``JavaUtils.byteStringAs``; ValueError for anything else."""
+    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", text.lower())
+    if m is None or m.group(2) not in _BYTE_UNITS:
+        raise ValueError(f"not a byte size: {text!r}")
+    return int(m.group(1)) << (10 * _BYTE_UNITS[m.group(2)])
+
+
 def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Scale-adaptive map-side parallelism for compute-heavy pipelines
     (guide §2.5 'input skew' / §6 'input split size').
@@ -68,8 +84,7 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     sc = spark.sparkContext
     par = sc.defaultParallelism
     try:
-        mpb = int(spark.conf.get("spark.sql.files.maxPartitionBytes")
-                  .rstrip("b"))
+        mpb = _byte_size(spark.conf.get("spark.sql.files.maxPartitionBytes"))
     except Exception:
         mpb = 128 * 1024 * 1024
     splits = _scan_splits(path, mpb)

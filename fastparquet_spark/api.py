@@ -1079,13 +1079,15 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
                 # times can use the sentinel values NaN and NaT' —
                 # NaT is iNaT (int64 min) AS A VALUE in a REQUIRED
                 # time column, exactly like NaN in a float one.  The
-                # sentinel must be stamped in the STORED unit (us):
-                # a unit cast after filling would divide it into a
-                # non-sentinel number, so convert first (truncating
-                # like the reference), then fill.
+                # sentinel must be stamped in the STORED unit (ns for
+                # times='int96' timestamps, else us): a unit cast after
+                # filling would rescale it into a non-sentinel number or
+                # overflow, so convert first (truncating like the
+                # reference), then fill.
                 target = pa.duration("us") \
                     if pa.types.is_duration(f.type) \
-                    else pa.timestamp("us", tz=f.type.tz)
+                    else pa.timestamp("ns" if times == "int96" else "us",
+                                      tz=f.type.tz)
                 col = table.column(i)
                 if col.type != target:
                     col = pc.cast(col, options=pc.CastOptions(

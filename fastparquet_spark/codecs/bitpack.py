@@ -13,9 +13,12 @@ from __future__ import annotations
 
 import numpy as np
 
+from fastparquet_spark.codecs.compression import byte_view
 
-def pack_bits(values: np.ndarray, width: int) -> bytes:
-    """Pack non-negative ints into ``width`` bits each, LSB-first."""
+
+def pack_bits(values: np.ndarray, width: int):
+    """Pack non-negative ints into ``width`` bits each, LSB-first;
+    returns a bytes-like buffer."""
     if width == 0 or len(values) == 0:
         return b""
     if width > 64:
@@ -26,7 +29,7 @@ def pack_bits(values: np.ndarray, width: int) -> bytes:
 
         res = pack_bits_native(v, width)
         if res is not None:
-            return res
+            return byte_view(res)
     if width % 8 == 0:
         # byte-multiple widths: the LSB-first layout IS the low bytes of
         # each little-endian word — slice, no bit matrix (8x less temp)

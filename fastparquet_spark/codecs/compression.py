@@ -4,6 +4,11 @@ The reference routes through cramjam (fastparquet/compression.py:8-94);
 cramjam is not available here, so we use pyarrow's bundled codecs, which
 produce the exact framing Parquet specifies (raw snappy, gzip member
 stream, zstd frame), with a zlib fallback for GZIP.
+
+Pages move as buffers, not ``bytes`` copies: both directions hand back
+the ``pa.Buffer`` pyarrow's codec produced, viewed as an unsigned-byte
+``memoryview`` (a raw ``memoryview`` of a ``pa.Buffer`` has format
+``'b'``, so indexing it would return signed bytes).
 """
 
 from __future__ import annotations
@@ -62,16 +67,25 @@ def codec_spec(spec) -> tuple[int, int | None]:
 _LEVELS = {ZSTD: 1, GZIP: 6, BROTLI: 4}
 
 
-def _lz4_hadoop_compress(data: bytes) -> bytes:
+def byte_view(buf) -> memoryview:
+    """Flat unsigned-byte view of any C-contiguous buffer (``pa.Buffer``,
+    ndarray of any dtype or shape, bytes), no copy: its ``len`` is the
+    byte count, indexing returns ints 0..255, and ``==`` compares bytes."""
+    view = memoryview(buf)
+    # memoryview refuses to cast a view with a zero in its shape
+    return view.cast("B") if view.nbytes else memoryview(b"")
+
+
+def _lz4_hadoop_compress(data) -> bytes:
     """Hadoop LZ4 framing (parquet codec id 5): 4-byte big-endian
     uncompressed size, 4-byte big-endian compressed size, one raw-lz4
     block (the layout arrow's Lz4HadoopCodec and parquet-mr emit)."""
-    block = pa.Codec("lz4_raw").compress(data).to_pybytes()
-    return (len(data).to_bytes(4, "big") + len(block).to_bytes(4, "big")
-            + block)
+    block = pa.Codec("lz4_raw").compress(data)
+    return b"".join((len(data).to_bytes(4, "big"),
+                     block.size.to_bytes(4, "big"), block))
 
 
-def _lz4_hadoop_decompress(data: bytes, usize: int) -> bytes:
+def _lz4_hadoop_decompress(data, usize: int):
     """Decode Hadoop-framed LZ4, tolerating multiple chunks; falls back
     to whole-buffer raw lz4 for writers that skipped the framing (the
     same permissive strategy arrow's reader uses)."""
@@ -85,16 +99,21 @@ def _lz4_hadoop_decompress(data: bytes, usize: int) -> bytes:
             pos += 8
             if clen <= 0 or pos + clen > len(data):
                 raise ValueError("bad hadoop-lz4 chunk header")
-            out += raw.decompress(data[pos:pos + clen], ulen).to_pybytes()
+            out += raw.decompress(data[pos:pos + clen], ulen)
             pos += clen
         if len(out) != usize:
             raise ValueError("hadoop-lz4 size mismatch")
-        return bytes(out)
+        return byte_view(out)
     except (ValueError, NotImplementedError, OSError):
-        return raw.decompress(data, usize).to_pybytes()
+        return byte_view(raw.decompress(data, usize))
 
 
-def compress(data: bytes, codec: int, level: int | None = None) -> bytes:
+def compress(data, codec: int, level: int | None = None):
+    """Compress one page body (any C-contiguous bytes-like object).
+
+    Returns a bytes-like buffer, not a ``bytes`` copy: ``data`` itself
+    for UNCOMPRESSED, else an unsigned-byte ``memoryview`` of the codec's
+    output buffer (``bytes`` for legacy LZ4 and the zlib fallback)."""
     if codec == UNCOMPRESSED:
         return data
     if codec == LZ4:
@@ -102,7 +121,8 @@ def compress(data: bytes, codec: int, level: int | None = None) -> bytes:
     lvl = level if level is not None else _LEVELS.get(codec)
     if codec in _PA_NAMES:
         try:
-            return pa.Codec(_PA_NAMES[codec], compression_level=lvl).compress(data).to_pybytes()
+            return byte_view(pa.Codec(_PA_NAMES[codec], compression_level=lvl)
+                               .compress(data))
         except (ValueError, NotImplementedError):
             if codec != GZIP:
                 raise
@@ -112,14 +132,20 @@ def compress(data: bytes, codec: int, level: int | None = None) -> bytes:
     raise ValueError(f"unsupported codec id {codec}")
 
 
-def decompress(data: bytes, codec: int, uncompressed_size: int) -> bytes:
+def decompress(data, codec: int, uncompressed_size: int):
+    """Inflate one page body.
+
+    Returns a bytes-like buffer, not a ``bytes`` copy: ``data`` itself
+    for UNCOMPRESSED, else an unsigned-byte ``memoryview`` of the
+    decompressed buffer (``bytes`` from the zlib fallback)."""
     if codec == UNCOMPRESSED:
         return data
     if codec == LZ4:
         return _lz4_hadoop_decompress(data, uncompressed_size)
     if codec in _PA_NAMES:
         try:
-            return pa.Codec(_PA_NAMES[codec]).decompress(data, uncompressed_size).to_pybytes()
+            return byte_view(pa.Codec(_PA_NAMES[codec])
+                               .decompress(data, uncompressed_size))
         except (ValueError, NotImplementedError):
             if codec != GZIP:
                 raise

@@ -29,6 +29,7 @@ from __future__ import annotations
 import numpy as np
 
 from fastparquet_spark.codecs.bitpack import pack_bits, unpack_bits
+from fastparquet_spark.codecs.compression import byte_view
 from fastparquet_spark.codecs.varint import (
     uvarint_decode,
     uvarint_encode,
@@ -84,8 +85,9 @@ def _excl_cumsum(a: np.ndarray, axis=None) -> np.ndarray:
     return out
 
 
-def delta_encode(values: np.ndarray, bit_width: int = 64) -> bytes:
-    """Encode an int array (int32/int64) as DELTA_BINARY_PACKED.
+def delta_encode(values: np.ndarray, bit_width: int = 64):
+    """Encode an int array (int32/int64) as DELTA_BINARY_PACKED;
+    returns a bytes-like buffer.
 
     ``bit_width``: physical type width (32 for INT32 pages) — deltas use
     modular arithmetic at that width so miniblock widths never exceed it
@@ -97,7 +99,7 @@ def delta_encode(values: np.ndarray, bit_width: int = 64) -> bytes:
 
     res = delta_pack_native(v, bit_width)
     if res is not None:
-        return res
+        return byte_view(res)
     header = (
         uvarint_encode(BLOCK_SIZE)
         + uvarint_encode(MINIBLOCKS)
@@ -166,7 +168,7 @@ def delta_encode(values: np.ndarray, bit_width: int = 64) -> bytes:
         step = (VALUES_PER_MINIBLOCK * int(w)) >> 3
         tgt = pay_start[sel][:, None] + np.arange(step)
         out[tgt.ravel()] = packed
-    return out.tobytes()
+    return byte_view(out)
 
 
 def delta_decode(buf, offset: int = 0, count: int | None = None,

@@ -39,6 +39,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from fastparquet_spark.codecs.compression import byte_view
+
 MAX_SYMBOLS = 128
 MAX_SYMBOL_LEN = 8
 _NGRAM_SIZES = (2, 3, 4, 6, 8)
@@ -291,8 +293,9 @@ def _plan_of(table: FsstTable) -> _EncodePlan:
     return plan
 
 
-def fsst_encode(data: np.ndarray, table: FsstTable) -> bytes:
-    """Encode a uint8 buffer with the given table.
+def fsst_encode(data: np.ndarray, table: FsstTable):
+    """Encode a uint8 buffer with the given table; returns a bytes-like
+    buffer.
 
     Fast path: the ~80-line C greedy-scan kernel (codecs/native.py,
     compiled on first use, the analog of the reference's Cython
@@ -306,7 +309,7 @@ def fsst_encode(data: np.ndarray, table: FsstTable) -> bytes:
 
         res = fsst_encode_native(buf, _plan_of(table), table.escape)
         if res is not None:
-            return res
+            return byte_view(res)
     # 1) escape reserved bytes: b -> (escape, b), vectorized scatter
     is_reserved = np.zeros(256, dtype=bool)
     is_reserved[table.escape] = True
@@ -323,7 +326,7 @@ def fsst_encode(data: np.ndarray, table: FsstTable) -> bytes:
         buf = out
     m = len(buf)
     if m < 2 or not table.symbols:
-        return buf.tobytes()
+        return byte_view(buf)
     plan = _plan_of(table)
 
     # 2) one discovery pass: candidate positions via the 2-byte-prefix
@@ -342,7 +345,7 @@ def fsst_encode(data: np.ndarray, table: FsstTable) -> bytes:
         head[m - 3:][need2[m - 3:]] = 0  # too close to the end for len>=4
     cand = np.nonzero(head)[0]
     if not len(cand):
-        return buf.tobytes()
+        return byte_view(buf)
     sid = head[cand].astype(np.int64) - 1
     padded = np.concatenate((buf, np.zeros(8, dtype=np.uint8)))
     win = np.lib.stride_tricks.as_strided(
@@ -364,7 +367,7 @@ def fsst_encode(data: np.ndarray, table: FsstTable) -> bytes:
             fidx = fidx[~ok2 & (plan.nxt[s2] >= 0)]
     pos_all = cand[ok]
     if not len(pos_all):
-        return buf.tobytes()
+        return byte_view(buf)
     sid_all = sid[ok]
     len_all = plan.lens[sid_all]
 
@@ -372,7 +375,7 @@ def fsst_encode(data: np.ndarray, table: FsstTable) -> bytes:
     # true FSST scan order, one pass over all lengths together
     keep = _select_var(pos_all, len_all)
     if not len(keep):
-        return buf.tobytes()
+        return byte_view(buf)
     starts = pos_all[keep]
     nlen = len_all[keep]
     codes = plan.out_codes[sid_all[keep]]
@@ -387,7 +390,7 @@ def fsst_encode(data: np.ndarray, table: FsstTable) -> bytes:
     rank = np.cumsum(keep_byte) - 1
     out = buf[keep_byte]
     out[rank[starts]] = codes
-    return out.tobytes()
+    return byte_view(out)
 
 
 class _DecodePlan:

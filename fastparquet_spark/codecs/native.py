@@ -633,7 +633,8 @@ def _load() -> ctypes.CDLL | None:
 
 
 def fsst_encode_native(buf, plan, escape: int):
-    """C-kernel encode of a contiguous uint8 array; None if unavailable.
+    """C-kernel encode of a contiguous uint8 array; a uint8 view of the
+    output, or None if unavailable.
 
     ``plan`` is fsst.py's _EncodePlan (lut16s/nxt/lens/vals/masks/
     out_codes/reserved arrays); output is bit-identical to the numpy
@@ -651,11 +652,13 @@ def fsst_encode_native(buf, plan, escape: int):
         plan.lens.ctypes.data, plan.vals.ctypes.data,
         plan.masks.ctypes.data, plan.out_codes.ctypes.data,
         escape, plan.reserved.ctypes.data)
-    return out[:written].tobytes()
+    return out[:written]
 
 
-def pack_byte_array_native(lengths, data):
-    """C framing of <u4 len><bytes>...; None if unavailable."""
+def pack_byte_array_native(lengths, data, head=b""):
+    """C framing of <u4 len><bytes>... behind ``head`` in ONE uint8
+    array (a v1 page's level bytes go in front of its values without a
+    second copy of the page); None if unavailable."""
     import numpy as np
 
     lib = _load()
@@ -664,10 +667,12 @@ def pack_byte_array_native(lengths, data):
     lengths = np.ascontiguousarray(lengths, dtype=np.int64)
     data = np.ascontiguousarray(data, dtype=np.uint8)
     n = len(lengths)
-    out = np.empty(4 * n + int(lengths.sum()), dtype=np.uint8)
+    h = len(head)
+    out = np.empty(h + 4 * n + int(lengths.sum()), dtype=np.uint8)
+    out[:h] = np.frombuffer(head, np.uint8)
     written = lib.pack_byte_array_c(lengths.ctypes.data, n,
-                                    data.ctypes.data, out.ctypes.data)
-    return out[:written].tobytes()
+                                    data.ctypes.data, out.ctypes.data + h)
+    return out[:h + written]
 
 
 def unpack_byte_array_native(buf, count: int, offset: int):
@@ -689,7 +694,7 @@ def unpack_byte_array_native(buf, count: int, offset: int):
 
 
 def encode_hybrid_native(values, width: int, min_run: int):
-    """C RLE/bit-packed hybrid encode (widths 1..57); bytes or None.
+    """C RLE/bit-packed hybrid encode (widths 1..57); uint8 array or None.
 
     Bit-identical to rle.py's numpy run-detection path at the same
     ``min_run`` — the levels/dictionary-codes hot loop of every write,
@@ -709,11 +714,11 @@ def encode_hybrid_native(values, width: int, min_run: int):
     out = np.empty(cap, dtype=np.uint8)
     written = lib.encode_hybrid_c(v.ctypes.data, n, width, min_run,
                                   out.ctypes.data)
-    return out[:written].tobytes()
+    return out[:written]
 
 
 def pack_bits_native(values, width: int):
-    """C LSB-first bit pack (widths 1..57); bytes or None."""
+    """C LSB-first bit pack (widths 1..57); uint8 array or None."""
     import numpy as np
 
     lib = _load()
@@ -722,7 +727,7 @@ def pack_bits_native(values, width: int):
     v = np.ascontiguousarray(values, dtype="<u8")
     out = np.empty((len(v) * width + 7) // 8, dtype=np.uint8)
     written = lib.pack_bits_c(v.ctypes.data, len(v), width, out.ctypes.data)
-    return out[:written].tobytes()
+    return out[:written]
 
 
 def unpack_bits_native(buf, width: int, count: int, offset: int):
@@ -744,7 +749,7 @@ def unpack_bits_native(buf, width: int, count: int, offset: int):
 
 
 def delta_pack_native(values, bit_width: int):
-    """C DELTA_BINARY_PACKED encode; bytes, or None when unavailable or
+    """C DELTA_BINARY_PACKED encode; uint8 array, or None when unavailable or
     a miniblock needs >57-bit packing (caller falls back to numpy —
     whose output is bit-identical where both run)."""
     import numpy as np
@@ -759,7 +764,7 @@ def delta_pack_native(values, bit_width: int):
     written = lib.delta_pack_c(v.ctypes.data, n, out.ctypes.data, bit_width)
     if written == -2:
         return None
-    return out[:written].tobytes()
+    return out[:written]
 
 
 def delta_unpack_native(buf, offset: int, total: int):

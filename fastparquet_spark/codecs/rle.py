@@ -24,6 +24,7 @@ from __future__ import annotations
 import numpy as np
 
 from fastparquet_spark.codecs.bitpack import pack_bits, unpack_bits
+from fastparquet_spark.codecs.compression import byte_view
 from fastparquet_spark.codecs.varint import uvarint_encode, uvarint_decode
 
 # An RLE run costs ~1-5 header bytes + value bytes; a value inside a
@@ -58,8 +59,9 @@ def _bp_run(values: np.ndarray, width: int) -> bytes:
     return uvarint_encode((groups << 1) | 1) + pack_bits(values, width)
 
 
-def encode_hybrid(values: np.ndarray, width: int, prepend_length: bool = False) -> bytes:
-    """Encode non-negative ints as an RLE/bit-packed hybrid stream."""
+def encode_hybrid(values: np.ndarray, width: int, prepend_length: bool = False):
+    """Encode non-negative ints as an RLE/bit-packed hybrid stream;
+    returns a bytes-like buffer."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
     n = len(v)
     parts: list[bytes] = []
@@ -87,6 +89,7 @@ def encode_hybrid(values: np.ndarray, width: int, prepend_length: bool = False) 
 
             body = encode_hybrid_native(v, width, min_run)
             if body is not None:
+                body = byte_view(body)
                 if prepend_length:
                     return len(body).to_bytes(4, "little") + body
                 return body

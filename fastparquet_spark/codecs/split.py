@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from fastparquet_spark.codecs.compression import byte_view
 from fastparquet_spark.codecs.delta import delta_decode, delta_encode
 
 # physical type ids (parquet spec, same values as format.metadata.Type)
@@ -38,7 +39,7 @@ def bss_width(ptype: int, type_length: int = 0) -> int:
     return type_length if ptype == _FLBA else _WIDTHS[ptype]
 
 
-def bss_encode(values, ptype: int, type_length: int = 0) -> bytes:
+def bss_encode(values, ptype: int, type_length: int = 0):
     """BYTE_STREAM_SPLIT a numpy value array ((n, w) uint8 for FLBA)."""
     w = bss_width(ptype, type_length)
     if ptype == _FLBA:
@@ -46,7 +47,7 @@ def bss_encode(values, ptype: int, type_length: int = 0) -> bytes:
     else:
         v = np.ascontiguousarray(values).astype(_DTYPES[ptype], copy=False)
         rows = v.view(np.uint8).reshape(-1, w)
-    return np.ascontiguousarray(rows.T).tobytes()
+    return byte_view(np.ascontiguousarray(rows.T))
 
 
 def bss_decode(buf, ptype: int, count: int, offset: int = 0,
@@ -63,7 +64,7 @@ def bss_decode(buf, ptype: int, count: int, offset: int = 0,
 def dlba_encode(lengths: np.ndarray, data: np.ndarray) -> bytes:
     """DELTA_LENGTH_BYTE_ARRAY: delta-packed int32 lengths + raw bytes."""
     head = delta_encode(np.asarray(lengths, dtype=np.int64), bit_width=32)
-    return head + np.ascontiguousarray(data, dtype=np.uint8).tobytes()
+    return b"".join((head, np.ascontiguousarray(data, dtype=np.uint8)))
 
 
 def dlba_decode(buf, count: int, offset: int = 0):
@@ -90,8 +91,8 @@ def dba_encode(lengths: np.ndarray, data: np.ndarray) -> bytes:
     data = np.ascontiguousarray(data, dtype=np.uint8)
     n = len(lengths)
     if n == 0 or len(data) == 0:  # empty column / all-empty strings
-        return delta_encode(np.zeros(n, np.int64), bit_width=32) + \
-            dlba_encode(lengths, data[:0])
+        return b"".join((delta_encode(np.zeros(n, np.int64), bit_width=32),
+                         dlba_encode(lengths, data[:0])))
     starts = np.concatenate(([0], np.cumsum(lengths)))[:-1]
     C = _DBA_PREFIX_CAP
     col = np.arange(C)
@@ -114,7 +115,8 @@ def dba_encode(lengths: np.ndarray, data: np.ndarray) -> bytes:
     within = np.arange(total, dtype=np.int64) - np.repeat(
         np.concatenate(([0], np.cumsum(suf_lens)))[:-1], suf_lens)
     suf_data = data[np.repeat(starts + prefix, suf_lens) + within]
-    return delta_encode(prefix, bit_width=32) + dlba_encode(suf_lens, suf_data)
+    return b"".join((delta_encode(prefix, bit_width=32),
+                     dlba_encode(suf_lens, suf_data)))
 
 
 def dba_decode(buf, count: int, offset: int = 0):

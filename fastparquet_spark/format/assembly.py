@@ -123,7 +123,7 @@ def _slot_validity(node: Node, streams, path) -> np.ndarray:
 def _validity_buf(validity: np.ndarray):
     if validity.all():
         return None, 0
-    return (pa.py_buffer(np.packbits(validity, bitorder="little").tobytes()),
+    return (pa.py_buffer(np.packbits(validity, bitorder="little")),
             int((~validity).sum()))
 
 
@@ -157,7 +157,7 @@ def _assemble(node: Node, streams, path, to_arrow_leaf,
                          to_arrow_leaf, as_content=True)
         typ = pa.list_(pa.field(*_elem_field(node, elem.type)))
         return pa.Array.from_buffers(
-            typ, n_slots, [None, pa.py_buffer(offsets.tobytes())],
+            typ, n_slots, [None, pa.py_buffer(offsets)],
             children=[elem])
 
     if node.is_leaf:

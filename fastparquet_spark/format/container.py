@@ -40,7 +40,8 @@ from fastparquet_spark.codecs.plain import decode_plain, encode_plain
 from fastparquet_spark.codecs.rle import decode_hybrid, encode_hybrid
 from fastparquet_spark.codecs.selection import column_stats
 from fastparquet_spark.format.metadata import Type
-from fastparquet_spark.format.writer import _binary_parts, _map_type
+from fastparquet_spark.format.reader import _binary_array, _fill_rows
+from fastparquet_spark.format.writer import _binary_parts, _map_type, _one_array
 
 MAGIC = b"FPSC"
 
@@ -106,7 +107,7 @@ def decide_string_codecs(table: pa.Table, fsst_cache: dict,
                 or pa.types.is_binary(field.type)
                 or pa.types.is_large_binary(field.type)):
             continue
-        arr = table.column(field.name).combine_chunks()
+        arr = _one_array(table.column(field.name))
         if arr.null_count:
             arr = arr.drop_null()
         if len(arr) == 0:
@@ -173,7 +174,7 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
                   for k, v in (bloom_filters or {}).items()}
         bloom_inputs: dict[str, tuple] = {}  # name -> (values, ptype)
         for field in table.schema:
-            arr = table.column(field.name).combine_chunks()
+            arr = _one_array(table.column(field.name))
             # fail fast: anything the read path can't restore is rejected at
             # write time instead of producing an unreadable container
             _type_from_name(_arrow_type_name(field.type))
@@ -196,20 +197,19 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
             if pa.types.is_list(field.type):
                 # composite LIST block: row validity + delta-coded list
                 # lengths + child validity + plain+codec child values
-                col_bytes, meta_extra, raw_bytes = _write_list_block(
+                parts, meta_extra, raw_bytes = _write_list_block(
                     arr_nn, validity_b, codec)
-                f.write(col_bytes)
+                size = _write_parts(f, parts)
                 cols_meta.append({"name": field.name, "codec": "list",
                                   "arrow_type": _arrow_type_name(field.type),
                                   "ptype": _map_type(field.type.value_type)[0],
                                   "n": n, "null_count": null_count,
-                                  "offset": pos, "size": len(col_bytes),
+                                  "offset": pos, "size": size,
                                   "block_codec": codec, **meta_extra})
                 blocks.append(ColumnBlock(field.name, "list",
                                           _arrow_type_name(field.type), n,
-                                          null_count, raw_bytes,
-                                          len(col_bytes)))
-                pos += len(col_bytes)
+                                          null_count, raw_bytes, size))
+                pos += size
                 continue
             ptype, _, cast_to = _map_type(field.type)
             if (cast_to is not None and arr_nn.type != cast_to
@@ -219,7 +219,7 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
                 # parquet's cast-to-µs would truncate ns and is not needed here
                 arr_nn = arr_nn.cast(cast_to)
 
-            parts: list[bytes] = [validity_b]
+            parts = [validity_b]
             if ptype == Type.BYTE_ARRAY:
                 lengths, data = _binary_parts(arr_nn)
                 if field.name in blooms:
@@ -293,18 +293,17 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
                 parts += [len(raw).to_bytes(8, "little"),
                           len(body).to_bytes(8, "little"), body]
 
-            col_bytes = b"".join(parts)
-            f.write(col_bytes)
+            size = _write_parts(f, parts)
             cols_meta.append({"name": field.name, "codec": codec_name,
                               "arrow_type": _arrow_type_name(field.type),
                               "ptype": ptype, "n": n, "null_count": null_count,
-                              "offset": pos, "size": len(col_bytes),
+                              "offset": pos, "size": size,
                               "block_codec": codec,
                               **_column_stats_meta(arr_nn, ptype)})
             blocks.append(ColumnBlock(field.name, codec_name,
                                       _arrow_type_name(field.type), n,
-                                      null_count, raw_bytes, len(col_bytes)))
-            pos += len(col_bytes)
+                                      null_count, raw_bytes, size))
+            pos += size
         if bloom_inputs:
             from fastparquet_spark.codecs.bloom import (
                 SplitBlockBloom, hash_values,
@@ -331,11 +330,19 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
             f.close()
 
 
-def _write_list_block(arr_nn: pa.Array, validity_b: bytes,
-                      codec: int) -> tuple[bytes, dict, int]:
-    """Serialize the sections of a LIST column (non-null rows already
-    selected): <row validity> <u4 + delta lengths> <u1 child-nulls
-    flag [+ child validity]> <u8 raw + u8 comp + plain child values>."""
+def _write_parts(f, parts) -> int:
+    """Write a column block's sections back to back (no joined copy of
+    the block); returns its size."""
+    for part in parts:
+        f.write(part)
+    return sum(len(part) for part in parts)
+
+
+def _write_list_block(arr_nn: pa.Array, validity_b,
+                      codec: int) -> tuple[list, dict, int]:
+    """The sections of a LIST column (non-null rows already selected):
+    <row validity> <u4 + delta lengths> <u1 child-nulls flag [+ child
+    validity]> <u8 raw + u8 comp + plain child values>."""
     import pyarrow.compute as pc
 
     from fastparquet_spark.codecs.delta import delta_encode
@@ -369,8 +376,7 @@ def _write_list_block(arr_nn: pa.Array, validity_b: bytes,
     body = comp.compress(raw, codec)
     parts += [len(raw).to_bytes(8, "little"),
               len(body).to_bytes(8, "little"), body]
-    return b"".join(parts), {"child_n": len(flat),
-                             "child_null_count": child_nulls}, \
+    return parts, {"child_n": len(flat), "child_null_count": child_nulls}, \
         int(lengths.sum()) * 8 + len(lengths) * 8
 
 
@@ -480,6 +486,7 @@ def _decode_column(buf, cm: dict, pos: int) -> pa.Array:
     """Inflate one column from ``buf`` starting at ``pos`` (0 when
     ``buf`` is the column's ranged slice, the footer offset when it is
     the whole container)."""
+    buf = memoryview(buf)  # block slices below are views, not copies
     n = cm["n"]
     ptype = cm["ptype"]
     null_count = cm["null_count"]
@@ -539,40 +546,27 @@ def _decode_list_column(buf, cm: dict, pos: int, validity: np.ndarray,
     full_lens[validity] = lengths
     offsets = np.concatenate(([0], np.cumsum(full_lens))).astype(np.int32)
     nulls = not validity.all()
-    vbuf = pa.py_buffer(np.packbits(validity, bitorder="little").tobytes()) \
+    vbuf = pa.py_buffer(np.packbits(validity, bitorder="little")) \
         if nulls else None
     return pa.Array.from_buffers(
-        list_type, n, [vbuf, pa.py_buffer(offsets.tobytes())],
+        list_type, n, [vbuf, pa.py_buffer(offsets)],
         null_count=int((~validity).sum()) if nulls else 0,
         children=[child])
 
 
 def _assemble(validity: np.ndarray, vals, cm: dict) -> pa.Array:
+    """Arrow array over the decoded buffers, without copying them."""
     at = _type_from_name(cm["arrow_type"])
     n = len(validity)
     nulls = not validity.all()
-    vbuf = pa.py_buffer(np.packbits(validity, bitorder="little").tobytes()) if nulls else None
+    vbuf = pa.py_buffer(np.packbits(validity, bitorder="little")) if nulls else None
     nc = int((~validity).sum()) if nulls else 0
     if cm["ptype"] == Type.BYTE_ARRAY:
-        lengths, data = vals
-        full = np.zeros(n, dtype=np.int64)
-        full[validity] = lengths
-        offs64 = np.concatenate(([0], np.cumsum(full)))
         text = at in (pa.string(), pa.large_string())
-        if int(offs64[-1]) >= 2**31:  # int32 offsets would wrap
-            storage = pa.large_utf8() if text else pa.large_binary()
-            offsets = offs64
-        else:
-            storage = pa.utf8() if text else pa.binary()
-            offsets = offs64.astype(np.int32)
-        return pa.Array.from_buffers(storage, n,
-                                     [vbuf, pa.py_buffer(offsets.tobytes()),
-                                      pa.py_buffer(np.ascontiguousarray(data).tobytes())],
-                                     null_count=nc).cast(at)
+        return _binary_array(validity, nulls, vals, text, vbuf, nc).cast(at)
     if at == pa.bool_():
-        full = np.zeros(n, dtype=np.bool_)
-        full[validity] = np.asarray(vals, dtype=np.bool_)
-        dbuf = pa.py_buffer(np.packbits(full, bitorder="little").tobytes())
+        full = _fill_rows(validity, vals, nulls, np.bool_)
+        dbuf = pa.py_buffer(np.packbits(full, bitorder="little"))
         return pa.Array.from_buffers(at, n, [vbuf, dbuf], null_count=nc)
     np_dt = {pa.int8(): np.int8, pa.int16(): np.int16, pa.int32(): np.int32,
              pa.int64(): np.int64, pa.float32(): np.float32,
@@ -583,10 +577,8 @@ def _assemble(validity: np.ndarray, vals, cm: dict) -> pa.Array:
         np_dt = np.int64
     elif at == pa.date32():
         np_dt = np.int32
-    full = np.zeros(n, dtype=np_dt)
-    if vals is not None:
-        full[validity] = np.asarray(vals).astype(np_dt, copy=False)
-    return pa.Array.from_buffers(at, n, [vbuf, pa.py_buffer(full.tobytes())],
+    full = _fill_rows(validity, vals, nulls, np_dt)
+    return pa.Array.from_buffers(at, n, [vbuf, pa.py_buffer(full)],
                                  null_count=nc)
 
 

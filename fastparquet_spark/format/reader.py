@@ -146,6 +146,7 @@ def _read_column_chunk(buf: bytes, cmd: dict, type_length: int = 0,
     fastparquet/test/test_read.py:70-127 interop matrix).  ``max_rep>0``
     reads repetition levels too (nested columns — assembled by
     format/assembly.py)."""
+    buf = memoryview(buf)  # page slices below are views, not copies
     ptype = cmd["type"]
     codec = cmd["codec"]
     n_total = cmd["num_values"]
@@ -218,7 +219,7 @@ def _read_column_chunk(buf: bytes, cmd: dict, type_length: int = 0,
                 raw = comp.decompress(vals_part, codec,
                                       ph["uncompressed_page_size"] - rlen - dlen)
             else:
-                raw = bytes(vals_part)
+                raw = vals_part
             off = 0
         else:
             raise NotImplementedError(f"page type {ph['type']}")
@@ -295,23 +296,62 @@ def _materialize(vals, dictionary, ptype):
     if isinstance(vals, tuple) and len(vals) == 2 and isinstance(vals[0], str) and vals[0] == "codes":
         codes = vals[1]
         if ptype == Type.BYTE_ARRAY:
+            # Arrow's take gathers the strings in C; 64-bit offsets so
+            # an expansion past 2 GiB cannot wrap
             lengths, data = dictionary
-            cum = np.concatenate(([0], np.cumsum(lengths)))
-            out_lens = lengths[codes]
-            total = int(out_lens.sum())
-            within = np.arange(total, dtype=np.int64) - np.repeat(
-                np.concatenate(([0], np.cumsum(out_lens)))[:-1], out_lens)
-            out = data[np.repeat(cum[codes], out_lens) + within]
-            return out_lens, out
+            offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+            np.cumsum(lengths, out=offsets[1:])
+            labels = pa.Array.from_buffers(
+                pa.large_binary(), len(lengths),
+                [None, pa.py_buffer(offsets), pa.py_buffer(data)])
+            out = labels.take(pa.array(codes, pa.int64()))
+            out_offs = np.frombuffer(out.buffers()[1], np.int64,
+                                     count=len(out) + 1)
+            return np.diff(out_offs), np.frombuffer(
+                out.buffers()[2], np.uint8, count=int(out_offs[-1]))
         return np.asarray(dictionary)[codes]
     return vals
 
 
+def _fill_rows(validity: np.ndarray, vals, nulls: bool, dtype,
+               row_shape: tuple = ()) -> np.ndarray:
+    """The non-null ``vals`` at their rows of a zero-filled array — or
+    ``vals`` themselves, uncopied, when no row is null (copied only if
+    they sit misaligned in their page: Arrow wants aligned values)."""
+    if not nulls and vals is not None:
+        return np.require(vals, dtype, ("C", "A"))
+    full = np.zeros((len(validity),) + row_shape, dtype=dtype)
+    if vals is not None:
+        full[validity] = vals
+    return full
+
+
+def _binary_array(validity: np.ndarray, nulls: bool, vals, text: bool,
+                  vbuf, null_count: int) -> pa.Array:
+    """String (``text``) or binary array over decoded (lengths, data);
+    64-bit offsets only when the data passes what int32 offsets hold."""
+    lengths, data = vals
+    n = len(validity)
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(_fill_rows(validity, lengths, nulls, np.int64), out=offsets[1:])
+    if int(offsets[-1]) >= 2**31:  # int32 offsets would wrap
+        typ = pa.large_utf8() if text else pa.large_binary()
+    else:
+        typ = pa.utf8() if text else pa.binary()
+        offsets = offsets.astype(np.int32)
+    return pa.Array.from_buffers(
+        typ, n, [vbuf, pa.py_buffer(offsets),
+                 pa.py_buffer(np.ascontiguousarray(data))],
+        null_count=null_count)
+
+
 def _to_arrow(validity: np.ndarray, vals, elem: dict) -> pa.Array:
+    """Arrow array over the decoded buffers: ``pa.py_buffer`` wraps the
+    NumPy arrays without copying them."""
     at = _arrow_type(elem)
     n = len(validity)
     nulls = not validity.all()
-    vbuf_ = pa.py_buffer(np.packbits(validity, bitorder="little").tobytes()) if nulls else None
+    vbuf_ = pa.py_buffer(np.packbits(validity, bitorder="little")) if nulls else None
     nc_ = int((~validity).sum()) if nulls else 0
     if pa.types.is_decimal(at):
         if vals is not None and getattr(vals, "ndim", 1) == 2:
@@ -321,10 +361,9 @@ def _to_arrow(validity: np.ndarray, vals, elem: dict) -> pa.Array:
             sign = np.where(vals[:, 0] >= 128, 255, 0).astype(np.uint8)
             full16 = np.repeat(sign[:, None], 16, axis=1)
             full16[:, :w] = vals[:, ::-1]
-            storage = np.zeros((n, 16), dtype=np.uint8)
-            storage[validity] = full16
+            storage = _fill_rows(validity, full16, nulls, np.uint8, (16,))
             return pa.Array.from_buffers(
-                at, n, [vbuf_, pa.py_buffer(storage.tobytes())], null_count=nc_)
+                at, n, [vbuf_, pa.py_buffer(storage)], null_count=nc_)
         if isinstance(vals, tuple) and len(vals) == 2:
             # variable-length BINARY decimal (parquet-avro/-java emit
             # these): big-endian two's complement unscaled bytes per
@@ -334,7 +373,7 @@ def _to_arrow(validity: np.ndarray, vals, elem: dict) -> pa.Array:
             lengths, data = vals
             scale = elem.get("scale", 0)
             cum = np.concatenate(([0], np.cumsum(lengths)))
-            dbytes = data.tobytes()
+            dbytes = memoryview(np.ascontiguousarray(data))
             out = [None] * n
             vi = 0
             for i in range(n):
@@ -345,13 +384,11 @@ def _to_arrow(validity: np.ndarray, vals, elem: dict) -> pa.Array:
                     vi += 1
             return pa.array(out, type=at)
         # int64 unscaled -> decimal128 storage (low word + sign extension)
-        low = np.zeros(n, dtype=np.int64)
-        if vals is not None:
-            low[validity] = np.asarray(vals, dtype=np.int64)
+        low = _fill_rows(validity, vals, nulls, np.int64)
         words = np.empty((n, 2), dtype=np.int64)
         words[:, 0] = low
         words[:, 1] = low >> 63
-        return pa.Array.from_buffers(at, n, [vbuf_, pa.py_buffer(words.tobytes())],
+        return pa.Array.from_buffers(at, n, [vbuf_, pa.py_buffer(words)],
                                      null_count=nc_)
     if at == pa.month_day_nano_interval():
         # FIXED(12) LE (months, days, millis) -> arrow's 16-byte
@@ -365,45 +402,30 @@ def _to_arrow(validity: np.ndarray, vals, elem: dict) -> pa.Array:
             ns = raw[:, 8:12].copy().view("<u4").ravel().astype("<i8") * 1_000_000
             part[:, 8:] = ns.view(np.uint8).reshape(k, 8)
             st[validity] = part
-        return pa.Array.from_buffers(at, n, [vbuf_, pa.py_buffer(st.tobytes())],
+        return pa.Array.from_buffers(at, n, [vbuf_, pa.py_buffer(st)],
                                      null_count=nc_)
     if elem["type"] == Type.FIXED_LEN_BYTE_ARRAY:
-        width = at.byte_width
-        full = np.zeros((n, width), dtype=np.uint8)
-        if vals is not None:
-            full[validity] = vals
-        return pa.Array.from_buffers(at, n, [vbuf_, pa.py_buffer(full.tobytes())],
+        full = _fill_rows(validity, vals, nulls, np.uint8, (at.byte_width,))
+        return pa.Array.from_buffers(at, n, [vbuf_, pa.py_buffer(full)],
                                      null_count=nc_)
     if elem["type"] == Type.INT96:
         # INT96 -> datetime64[ns]: nanos-of-day (low 8B LE) + Julian day
         # (reference fastparquet/converted_types.py:159-162)
-        full = np.zeros(n, dtype=np.int64)
+        stamps = None
         if vals is not None and len(vals):
             raw = np.ascontiguousarray(vals, dtype=np.uint8)
             nanos = raw[:, :8].copy().view("<i8").ravel()
             julian = raw[:, 8:].copy().view("<i4").ravel().astype(np.int64)
-            full[validity] = (julian - 2440588) * 86_400_000_000_000 + nanos
+            stamps = (julian - 2440588) * 86_400_000_000_000 + nanos
+        full = _fill_rows(validity, stamps, nulls, np.int64)
         return pa.Array.from_buffers(pa.timestamp("ns"), n,
-                                     [vbuf_, pa.py_buffer(full.tobytes())],
+                                     [vbuf_, pa.py_buffer(full)],
                                      null_count=nc_)
     if elem["type"] == Type.BYTE_ARRAY:
-        lengths, data = vals if vals is not None else (np.zeros(0, np.int64), np.zeros(0, np.uint8))
-        full_lens = np.zeros(n, dtype=np.int64)
-        full_lens[validity] = lengths
-        offs64 = np.concatenate(([0], np.cumsum(full_lens)))
-        large = int(offs64[-1]) >= 2**31  # int32 offsets would wrap
-        if large:
-            btype = pa.large_utf8() if at == pa.string() else pa.large_binary()
-            offsets = offs64
-        else:
-            btype = pa.utf8() if at == pa.string() else pa.binary()
-            offsets = offs64.astype(np.int32)
-        arr = pa.Array.from_buffers(
-            btype, n,
-            [vbuf_, pa.py_buffer(offsets.tobytes()),
-             pa.py_buffer(data.tobytes())],
-            null_count=nc_)
-        return arr
+        if vals is None:
+            vals = (np.zeros(0, np.int64), np.zeros(0, np.uint8))
+        return _binary_array(validity, nulls, vals, at == pa.string(),
+                             vbuf_, nc_)
     np_dtype = {pa.bool_(): np.bool_, pa.int32(): np.int32, pa.int64(): np.int64,
                 pa.float32(): np.float32, pa.float64(): np.float64}.get(at)
     if pa.types.is_timestamp(at) or pa.types.is_time64(at):
@@ -412,16 +434,11 @@ def _to_arrow(validity: np.ndarray, vals, elem: dict) -> pa.Array:
         np_dtype = np.int32
     elif np_dtype is None:
         np_dtype = np.dtype(at.to_pandas_dtype())
-    full = np.zeros(n, dtype=np_dtype)
-    if vals is not None:
-        full[validity] = np.asarray(vals).astype(np_dtype, copy=False)
+    full = _fill_rows(validity, vals, nulls, np_dtype)
     if at == pa.bool_():
-        dbuf = pa.py_buffer(np.packbits(full, bitorder="little").tobytes())
-    else:
-        dbuf = pa.py_buffer(np.ascontiguousarray(full).tobytes())
-    vbuf = pa.py_buffer(np.packbits(validity, bitorder="little").tobytes()) if nulls else None
-    return pa.Array.from_buffers(at, n, [vbuf, dbuf],
-                                 null_count=int((~validity).sum()) if nulls else 0)
+        full = np.packbits(full, bitorder="little")
+    return pa.Array.from_buffers(at, n, [vbuf_, pa.py_buffer(full)],
+                                 null_count=nc_)
 
 
 class _ByteSource:
@@ -432,7 +449,8 @@ class _ByteSource:
 
     def __init__(self, source, fs=None):
         if isinstance(source, (bytes, bytearray, memoryview)):
-            self._buf = bytes(source)
+            # ranges are views of the one immutable copy
+            self._buf = memoryview(bytes(source))
             self._f = None
         elif isinstance(source, (str, os.PathLike)):
             from fastparquet_spark.io import get_fs

@@ -52,13 +52,22 @@ from fastparquet_spark.format.metadata import (
 CREATED_BY = "fastparquet_spark 0.1.0"
 
 
-def _crc(payload: bytes) -> int:
+def _crc(*parts) -> int:
     """Spec page checksum: CRC32 of the bytes FOLLOWING the page header
-    (the potentially-compressed page body), as a signed i32 for thrift.
-    parquet-mr writes and (optionally) verifies the same field; pyarrow
-    verifies under page_checksum_verification=True."""
-    c = zlib.crc32(payload) & 0xFFFFFFFF
+    (the potentially-compressed page body, given as consecutive
+    buffers), as a signed i32 for thrift.  parquet-mr writes and
+    (optionally) verifies the same field; pyarrow verifies under
+    page_checksum_verification=True."""
+    c = 0
+    for part in parts:
+        c = zlib.crc32(part, c)
     return c - (1 << 32) if c >= (1 << 31) else c
+
+
+def _length_prefixed(*streams) -> bytes:
+    """v1 level streams, each behind its u4 byte length, as one head."""
+    return b"".join(part for st in streams
+                    for part in (len(st).to_bytes(4, "little"), st))
 
 
 @dataclass
@@ -179,10 +188,17 @@ def _logical_type(t: pa.DataType) -> dict | None:
     return None
 
 
+def _one_array(arr) -> pa.Array:
+    """An Array or ChunkedArray as one Array; a lone chunk is returned as
+    is (``combine_chunks`` copies even a single chunk)."""
+    if not isinstance(arr, pa.ChunkedArray):
+        return arr
+    return arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
+
+
 def _binary_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     """(lengths, data) from an Arrow binary/string array's buffers, zero-copy."""
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
+    arr = _one_array(arr)
     big = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
     odt = np.int64 if big else np.int32
     bufs = arr.buffers()
@@ -196,7 +212,7 @@ def _binary_parts(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 def _decimal_unscaled(arr: pa.Array) -> np.ndarray:
     """Unscaled int64 values of a decimal128 array (p<=18 fits the low
     word; the high word is pure sign extension)."""
-    arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+    arr = _one_array(arr)
     buf = arr.buffers()[1]
     words = np.frombuffer(buf, dtype="<i8", count=2 * (arr.offset + len(arr)))
     return words.reshape(-1, 2)[arr.offset:, 0][: len(arr)].copy()
@@ -224,7 +240,7 @@ def _extract(arr: pa.Array, ptype: int):
         if pa.types.is_decimal(arr.type):
             # decimal128 storage is 16B little-endian; the parquet FIXED
             # decimal layout is big-endian two's complement
-            arr2 = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+            arr2 = _one_array(arr)
             raw = np.frombuffer(arr2.buffers()[1], np.uint8,
                                 count=(arr2.offset + len(arr2)) * 16)
             le = raw[arr2.offset * 16:].reshape(len(arr2), 16)
@@ -270,7 +286,7 @@ def _stat_bytes(value, ptype: int):
     return None
 
 
-def _def_levels(arr: pa.Array, n: int, v2: bool = False) -> tuple[bytes, int]:
+def _def_levels(arr: pa.Array, n: int, v2: bool = False):
     """Definition levels (RLE hybrid) for an OPTIONAL column; v1 carries a
     uint32 length prefix, v2 stores the length in the page header instead
     (fastparquet/writer.py:375-408 make_definitions, :564-591 v2 layout).
@@ -282,33 +298,33 @@ def _def_levels(arr: pa.Array, n: int, v2: bool = False) -> tuple[bytes, int]:
     else:
         validity = arr.is_valid().to_numpy(zero_copy_only=False).astype(np.uint8)
         body = encode_hybrid(validity, 1)
-    if not v2:
-        body = len(body).to_bytes(4, "little") + body
-    return body, int(null_count)
+    return (body if v2 else _length_prefixed(body)), int(null_count)
 
 
-def _encode_values(values, ptype: int, encoding: int):
-    """Returns (data_bytes, dict_page_values_or_None, n_dict)."""
+def _encode_values(values, ptype: int, encoding: int, head=b""):
+    """``head`` (a v1 page's level bytes) followed by the encoded values,
+    as one bytes-like page body.  PLAIN writes the values straight
+    behind ``head``, so the body costs no copy beyond the encoding."""
     if encoding == Encoding.PLAIN:
-        return encode_plain(values, ptype), None, 0
+        return encode_plain(values, ptype, head)
     if encoding == Encoding.DELTA_BINARY_PACKED:
-        return delta_encode(values, bit_width=32 if ptype == Type.INT32 else 64), None, 0
-    if encoding == Encoding.BYTE_STREAM_SPLIT:
+        data = delta_encode(values, bit_width=32 if ptype == Type.INT32 else 64)
+    elif encoding == Encoding.BYTE_STREAM_SPLIT:
         from fastparquet_spark.codecs.split import bss_encode
 
         tl = values.shape[1] if getattr(values, "ndim", 1) == 2 else 0
-        return bss_encode(values, ptype, type_length=tl), None, 0
-    if encoding == Encoding.DELTA_LENGTH_BYTE_ARRAY:
+        data = bss_encode(values, ptype, type_length=tl)
+    elif encoding == Encoding.DELTA_LENGTH_BYTE_ARRAY:
         from fastparquet_spark.codecs.split import dlba_encode
 
-        lengths, data = values
-        return dlba_encode(lengths, data), None, 0
-    if encoding == Encoding.DELTA_BYTE_ARRAY:
+        data = dlba_encode(*values)
+    elif encoding == Encoding.DELTA_BYTE_ARRAY:
         from fastparquet_spark.codecs.split import dba_encode
 
-        lengths, data = values
-        return dba_encode(lengths, data), None, 0
-    raise ValueError(f"encoding {encoding} handled elsewhere")
+        data = dba_encode(*values)
+    else:
+        raise ValueError(f"encoding {encoding} handled elsewhere")
+    return b"".join((head, data)) if len(head) else data
 
 
 def write_file(sink, table: pa.Table, compression: str | int = "SNAPPY",
@@ -662,36 +678,19 @@ class ParquetWriter:
             flat = flat.drop_null()
         if ecast is not None and flat.type != ecast:
             flat = flat.cast(ecast)
-        values = _extract(flat, eptype)
-        data = encode_plain(values, eptype)
-        rep_b = encode_hybrid(reps, 1)
-        def_b = encode_hybrid(defs, 2)
-        body = (len(rep_b).to_bytes(4, "little") + rep_b
-                + len(def_b).to_bytes(4, "little") + def_b + data)
-        comp_body = comp.compress(body, self.codec, self.level)
-        ph = thrift.write_struct("PageHeader", {
-            "type": PageType.DATA_PAGE,
-            "uncompressed_page_size": len(body),
-            "compressed_page_size": len(comp_body),
-            "crc": _crc(comp_body),
-            "data_page_header": {
-                "num_values": total, "encoding": Encoding.PLAIN,
-                "definition_level_encoding": Encoding.RLE,
-                "repetition_level_encoding": Encoding.RLE},
-        }, SPECS)
-        written = len(ph) + len(comp_body)
-        self.f.write(ph)
-        self.f.write(comp_body)
+        head = _length_prefixed(encode_hybrid(reps, 1), encode_hybrid(defs, 2))
+        written, uncomp = self._write_data_page(
+            encode_plain(_extract(flat, eptype), eptype, head), total)
         cmd = {"type": eptype, "encodings": [Encoding.RLE, Encoding.PLAIN],
                "path_in_schema": [name, "list", "element"],
                "codec": self.codec, "num_values": total,
-               "total_uncompressed_size": len(body) + len(ph),
+               "total_uncompressed_size": uncomp,
                "total_compressed_size": written,
                "data_page_offset": pos}
         nulls = int((defs < 3).sum())
         colres = ColumnResult(
             name=name, encoding="plain", num_values=total,
-            null_count=nulls, uncompressed_size=len(body) + len(ph),
+            null_count=nulls, uncompressed_size=uncomp,
             compressed_size=written)
         return written, {"file_offset": pos, "meta_data": cmd}, colres
 
@@ -745,29 +744,14 @@ class ParquetWriter:
         for leaf, defs, leaf_arr, lptype in (
                 ("key", kdefs, keys, kptype),
                 ("value", vdefs, items_nn, vptype)):
-            def_b = encode_hybrid(defs, 2)
-            data = encode_plain(_extract(leaf_arr, lptype), lptype)
-            body = (len(rep_b).to_bytes(4, "little") + rep_b
-                    + len(def_b).to_bytes(4, "little") + def_b + data)
-            comp_body = comp.compress(body, self.codec, self.level)
-            ph = thrift.write_struct("PageHeader", {
-                "type": PageType.DATA_PAGE,
-                "uncompressed_page_size": len(body),
-                "compressed_page_size": len(comp_body),
-                "crc": _crc(comp_body),
-                "data_page_header": {
-                    "num_values": total, "encoding": Encoding.PLAIN,
-                    "definition_level_encoding": Encoding.RLE,
-                    "repetition_level_encoding": Encoding.RLE},
-            }, SPECS)
-            self.f.write(ph)
-            self.f.write(comp_body)
-            written = len(ph) + len(comp_body)
+            head = _length_prefixed(rep_b, encode_hybrid(defs, 2))
+            written, uncomp = self._write_data_page(
+                encode_plain(_extract(leaf_arr, lptype), lptype, head), total)
             cmd = {"type": lptype,
                    "encodings": [Encoding.RLE, Encoding.PLAIN],
                    "path_in_schema": [name, "key_value", leaf],
                    "codec": self.codec, "num_values": total,
-                   "total_uncompressed_size": len(body) + len(ph),
+                   "total_uncompressed_size": uncomp,
                    "total_compressed_size": written,
                    "data_page_offset": pos + written_total}
             entries_out.append({"file_offset": pos + written_total,
@@ -775,8 +759,7 @@ class ParquetWriter:
             colres_out.append(ColumnResult(
                 name=f"{name}.{leaf}", encoding="plain", num_values=total,
                 null_count=int((defs < (2 if leaf == "key" else 3)).sum()),
-                uncompressed_size=len(body) + len(ph),
-                compressed_size=written))
+                uncompressed_size=uncomp, compressed_size=written))
             written_total += written
         return written_total, entries_out, colres_out
 
@@ -789,35 +772,21 @@ class ParquetWriter:
         child = arr.field(leaf)
         cvalid = child.is_valid().to_numpy(zero_copy_only=False) & svalid
         defs = np.where(cvalid, 2, np.where(svalid, 1, 0)).astype(np.uint8)
-        def_b = encode_hybrid(defs, 2)
         leaf_nn = child.filter(pa.array(cvalid))
         if scast is not None and leaf_nn.type != scast:
             leaf_nn = leaf_nn.cast(scast)
-        data = encode_plain(_extract(leaf_nn, sptype), sptype)
-        body = len(def_b).to_bytes(4, "little") + def_b + data
-        comp_body = comp.compress(body, self.codec, self.level)
         n = len(arr)
-        ph = thrift.write_struct("PageHeader", {
-            "type": PageType.DATA_PAGE,
-            "uncompressed_page_size": len(body),
-            "compressed_page_size": len(comp_body),
-            "crc": _crc(comp_body),
-            "data_page_header": {
-                "num_values": n, "encoding": Encoding.PLAIN,
-                "definition_level_encoding": Encoding.RLE,
-                "repetition_level_encoding": Encoding.RLE},
-        }, SPECS)
-        written = len(ph) + len(comp_body)
-        self.f.write(ph)
-        self.f.write(comp_body)
+        written, uncomp = self._write_data_page(
+            encode_plain(_extract(leaf_nn, sptype), sptype,
+                         _length_prefixed(encode_hybrid(defs, 2))), n)
         cmd = {"type": sptype, "encodings": [Encoding.RLE, Encoding.PLAIN],
                "path_in_schema": [name, leaf], "codec": self.codec,
                "num_values": n,
-               "total_uncompressed_size": len(body) + len(ph),
+               "total_uncompressed_size": uncomp,
                "total_compressed_size": written, "data_page_offset": pos}
         colres = ColumnResult(
             name=f"{name}.{leaf}", encoding="plain", num_values=n,
-            null_count=int((~cvalid).sum()), uncompressed_size=len(body) + len(ph),
+            null_count=int((~cvalid).sum()), uncompressed_size=uncomp,
             compressed_size=written)
         return written, {"file_offset": pos, "meta_data": cmd}, colres
 
@@ -891,23 +860,44 @@ class ParquetWriter:
         bf.insert(h)
         self._blooms.append((cmd, bf))
 
-    def _emit_dict_page(self, dict_page_bytes: bytes,
-                        n_dict: int) -> tuple[int, int]:
-        """Compress and write one PLAIN dictionary page; returns
-        (total_bytes_written, compressed_body_len)."""
-        comp_dict = comp.compress(dict_page_bytes, self.codec, self.level)
-        ph = thrift.write_struct("PageHeader", {
-            "type": PageType.DICTIONARY_PAGE,
-            "uncompressed_page_size": len(dict_page_bytes),
-            "compressed_page_size": len(comp_dict),
-            "crc": _crc(comp_dict),
-            "dictionary_page_header": {
-                "num_values": n_dict,
-                "encoding": Encoding.PLAIN_DICTIONARY},
-        }, SPECS)
+    def _write_page(self, header: dict, body, levels=b"") -> tuple[int, int]:
+        """Compress ``body`` and write it as one page behind its header
+        (``header`` without the size and crc fields).  ``levels`` are a
+        v2 page's level bytes, written uncompressed in front of the
+        compressed values — as separate writes, so no buffer holds the
+        whole page.  Returns (bytes written, uncompressed bytes), both
+        including the page header."""
+        comp_body = comp.compress(body, self.codec, self.level)
+        size = len(levels) + len(comp_body)
+        ph = thrift.write_struct("PageHeader", dict(
+            header, uncompressed_page_size=len(levels) + len(body),
+            compressed_page_size=size, crc=_crc(levels, comp_body)), SPECS)
         self.f.write(ph)
-        self.f.write(comp_dict)
-        return len(ph) + len(comp_dict), len(comp_dict)
+        if len(levels):
+            self.f.write(levels)
+        self.f.write(comp_body)
+        return len(ph) + size, len(ph) + len(levels) + len(body)
+
+    def _write_data_page(self, body, num_values: int,
+                         encoding: int = Encoding.PLAIN,
+                         stats: dict | None = None) -> tuple[int, int]:
+        """One v1 data page (RLE levels inside ``body``); see _write_page."""
+        dph = {"num_values": num_values, "encoding": encoding,
+               "definition_level_encoding": Encoding.RLE,
+               "repetition_level_encoding": Encoding.RLE}
+        if stats:
+            dph["statistics"] = stats
+        return self._write_page(
+            {"type": PageType.DATA_PAGE, "data_page_header": dph}, body)
+
+    def _emit_dict_page(self, dict_page_bytes, n_dict: int) -> tuple[int, int]:
+        """Compress and write one PLAIN dictionary page; see _write_page."""
+        return self._write_page(
+            {"type": PageType.DICTIONARY_PAGE,
+             "dictionary_page_header": {
+                 "num_values": n_dict,
+                 "encoding": Encoding.PLAIN_DICTIONARY}},
+            dict_page_bytes)
 
     def _write_flat_pages(self, arr, name: str, ptype: int, encoding: int,
                           pos: int, values):
@@ -916,31 +906,25 @@ class ParquetWriter:
         independent units per the spec (DELTA/DBA chains restart), so a
         reader can decode any subset; a dictionary page, when the chunk
         is dict-encoded, fronts the chunk and is shared by all pages."""
-        f, codec, level = self.f, self.codec, self.level
         n = len(arr)
         chunk_offset = pos
         dict_off = None
         written = 0
+        uncomp_total = 0
         n_dict = 0
         codes = None
-        dict_page_bytes = None
         if encoding == Encoding.PLAIN_DICTIONARY:
             nonnull = arr.drop_null() if arr.null_count else arr
             codes, labels = dict_build(nonnull)
             n_dict = len(labels)
-            dict_page_bytes = encode_plain(_extract_labels(labels, ptype),
-                                           ptype)
             dict_off = pos
-            w, comp_dict_len = self._emit_dict_page(dict_page_bytes, n_dict)
-            written += w
-            pos += w
+            written, uncomp_total = self._emit_dict_page(
+                encode_plain(_extract_labels(labels, ptype), ptype), n_dict)
+            pos += written
 
         locs, null_pages, mins, maxs, null_counts = [], [], [], [], []
         index_ok = True
         data_off = None
-        uncomp_total = written - (0 if dict_page_bytes is None
-                                  else comp_dict_len) + \
-            (len(dict_page_bytes) if dict_page_bytes is not None else 0)
         total_nulls = 0
         nn_seen = 0
         for start in range(0, n, self.page_rows):
@@ -951,7 +935,8 @@ class ParquetWriter:
             pvals = None
             if codes is not None:
                 nn = pn - nulls
-                data = dict_data_page(codes[nn_seen:nn_seen + nn], n_dict)
+                body = b"".join((defs, dict_data_page(
+                    codes[nn_seen:nn_seen + nn], n_dict)))
                 nn_seen += nn
                 if self.want_stats and nn:
                     # stats need physical values even when the page body is
@@ -960,27 +945,15 @@ class ParquetWriter:
                     pvals = _extract(parr, ptype)
             else:
                 pvals = _extract(parr, ptype)
-                data, _, _ = _encode_values(pvals, ptype, encoding)
-            body = defs + data
-            comp_body = comp.compress(body, codec, level)
+                body = _encode_values(pvals, ptype, encoding, head=defs)
             pst = _make_stats(parr, pvals, ptype, nulls, 0) \
                 if self.want_stats and pn else None
-            dph = {"num_values": pn, "encoding": encoding,
-                   "definition_level_encoding": Encoding.RLE,
-                   "repetition_level_encoding": Encoding.RLE}
-            if pst:
-                dph["statistics"] = pst
-            ph = thrift.write_struct("PageHeader", {
-                "type": PageType.DATA_PAGE,
-                "uncompressed_page_size": len(body),
-                "compressed_page_size": len(comp_body),
-                "crc": _crc(comp_body),
-                "data_page_header": dph,
-            }, SPECS)
+            page_bytes, page_uncomp = self._write_data_page(
+                body, pn, encoding, pst)
             if data_off is None:
                 data_off = pos
             locs.append({"offset": pos,
-                         "compressed_page_size": len(ph) + len(comp_body),
+                         "compressed_page_size": page_bytes,
                          "first_row_index": start})
             all_null = nulls == pn
             null_pages.append(all_null)
@@ -995,18 +968,16 @@ class ParquetWriter:
             mins.append(b"" if all_null or lob is None else lob)
             maxs.append(b"" if all_null or hib is None else hib)
             null_counts.append(nulls)
-            f.write(ph); f.write(comp_body)
-            written += len(ph) + len(comp_body)
-            uncomp_total += len(ph) + len(body)
-            pos += len(ph) + len(comp_body)
+            written += page_bytes
+            uncomp_total += page_uncomp
+            pos += page_bytes
 
         st = _make_stats(arr, values, ptype, total_nulls, n_dict) \
             if self.want_stats and n else None
         enc_list = sorted({Encoding.RLE, encoding} |
-                          ({Encoding.PLAIN}
-                           if dict_page_bytes is not None else set()))
+                          ({Encoding.PLAIN} if codes is not None else set()))
         cmd = {"type": ptype, "encodings": enc_list,
-               "path_in_schema": [name], "codec": codec,
+               "path_in_schema": [name], "codec": self.codec,
                "num_values": n,
                "total_uncompressed_size": uncomp_total,
                "total_compressed_size": written,
@@ -1106,29 +1077,22 @@ class ParquetWriter:
         return self.result
 
     def _write_row_group(self, chunk: pa.Table) -> None:
-        f = self.f
-        codec = self.codec
-        level = self.level
         encodings = self.encodings
         want_stats = self.want_stats
         page_version = self.page_version
         pos = self.pos
         chunks_cols = []
-        rg_bytes = 0
         for ci, (ptype, cast_to, name) in enumerate(self.col_meta):
             if self._col_comp is not None:
-                # per-column codec: helpers read self.codec, this
-                # branch reads the loop locals — refresh both
+                # per-column codec: every page of this chunk reads it
                 self.codec, self.level = self._col_comp.get(
                     name, self._default_comp)
-                codec, level = self.codec, self.level
-            arr = chunk.column(ci).combine_chunks()
+            arr = _one_array(chunk.column(ci))
             if ptype == "list":
                 written, cmd_entry, colres = self._write_list_column(
                     arr, name, cast_to, pos)
                 chunks_cols.append(cmd_entry)
                 self.result.columns.append(colres)
-                rg_bytes += written
                 pos += written
                 continue
             if ptype == "map":
@@ -1136,7 +1100,6 @@ class ParquetWriter:
                     arr, name, cast_to, pos)
                 chunks_cols.extend(entries)
                 self.result.columns.extend(colres_list)
-                rg_bytes += written
                 pos += written
                 continue
             if ptype == "struct":
@@ -1145,7 +1108,6 @@ class ParquetWriter:
                         arr, name, leaf_name, sptype, scast, pos)
                     chunks_cols.append(cmd_entry)
                     self.result.columns.append(colres)
-                    rg_bytes += written
                     pos += written
                 continue
             if cast_to is not None and arr.type != cast_to:
@@ -1210,85 +1172,57 @@ class ParquetWriter:
                 self._page_index.append((entry, idx))
                 chunks_cols.append(entry)
                 self.result.columns.append(colres)
-                rg_bytes += written
                 pos += written
                 continue
-            dict_page_bytes = None
+            # v1: the levels lead the page body and are compressed with
+            # it; v2: they stay uncompressed outside the compressed
+            # values (fastparquet/writer.py:564-591)
+            v1 = page_version == 1
+            head = defs if v1 else b""
             n_dict = 0
+            chunk_offset = pos
+            dict_off = None
+            written = uncomp_total = 0
             if encoding == Encoding.PLAIN_DICTIONARY:
                 nonnull = arr.drop_null() if arr.null_count else arr
                 codes, labels = dict_build(nonnull)
                 n_dict = len(labels)
-                dict_page_bytes = encode_plain(_extract_labels(labels, ptype), ptype)
-                data = dict_data_page(codes, n_dict)
+                dict_off = pos
+                written, uncomp_total = self._emit_dict_page(
+                    encode_plain(_extract_labels(labels, ptype), ptype),
+                    n_dict)
+                pos += written
+                body = b"".join((head, dict_data_page(codes, n_dict)))
             else:
-                data, _, _ = _encode_values(values, ptype, encoding)
-            body = defs + data
+                body = _encode_values(values, ptype, encoding, head)
 
             # statistics over non-null values
             st = None
             if want_stats and n:
                 st = _make_stats(arr, values, ptype, null_count, n_dict)
-
-            chunk_offset = pos
-            dict_off = None
-            written = 0
-            comp_dict_len = 0
-            if dict_page_bytes is not None:
-                dict_off = pos
-                w, comp_dict_len = self._emit_dict_page(
-                    dict_page_bytes, n_dict)
-                written += w
-                pos += w
-            if page_version == 1:
-                comp_body = comp.compress(body, codec, level)
-                dph = {"num_values": n,
-                       "encoding": encoding,
-                       "definition_level_encoding": Encoding.RLE,
-                       "repetition_level_encoding": Encoding.RLE}
-                if st:
-                    dph["statistics"] = st
-                ph = thrift.write_struct("PageHeader", {
-                    "type": PageType.DATA_PAGE,
-                    "uncompressed_page_size": len(body),
-                    "compressed_page_size": len(comp_body),
-                    "crc": _crc(comp_body),
-                    "data_page_header": dph,
-                }, SPECS)
+            if v1:
+                page_bytes, page_uncomp = self._write_data_page(
+                    body, n, encoding, st)
             else:
-                # v2: levels uncompressed outside the compressed values
-                # section (fastparquet/writer.py:564-591)
-                comp_data = comp.compress(data, codec, level)
-                comp_body = defs + comp_data
                 dph = {"num_values": n, "num_nulls": null_count,
                        "num_rows": n, "encoding": encoding,
                        "definition_levels_byte_length": len(defs),
                        "repetition_levels_byte_length": 0,
-                       "is_compressed": codec != 0}
+                       "is_compressed": self.codec != 0}
                 if st:
                     dph["statistics"] = st
-                ph = thrift.write_struct("PageHeader", {
-                    "type": PageType.DATA_PAGE_V2,
-                    "uncompressed_page_size": len(body),
-                    "compressed_page_size": len(comp_body),
-                    "crc": _crc(comp_body),
-                    "data_page_header_v2": dph,
-                }, SPECS)
+                page_bytes, page_uncomp = self._write_page(
+                    {"type": PageType.DATA_PAGE_V2,
+                     "data_page_header_v2": dph}, body, levels=defs)
             data_off = pos
-            f.write(ph); f.write(comp_body)
-            written += len(ph) + len(comp_body)
-            pos += len(ph) + len(comp_body)
-            rg_bytes += written
-
-            uncomp_pages = len(body) + (len(dict_page_bytes)
-                                        if dict_page_bytes is not None else 0)
-            headers_len = written - len(comp_body) - comp_dict_len
-            uncomp_total = uncomp_pages + headers_len  # incl. page headers, per spec
+            written += page_bytes
+            uncomp_total += page_uncomp  # incl. page headers, per spec
+            pos += page_bytes
             enc_list = sorted({Encoding.RLE, encoding} |
                               ({Encoding.PLAIN}
-                               if dict_page_bytes is not None else set()))
+                               if dict_off is not None else set()))
             cmd = {"type": ptype, "encodings": enc_list,
-                   "path_in_schema": [name], "codec": codec,
+                   "path_in_schema": [name], "codec": self.codec,
                    "num_values": n,
                    "total_uncompressed_size": uncomp_total,
                    "total_compressed_size": written,
@@ -1305,8 +1239,7 @@ class ParquetWriter:
                 null_count=null_count, uncompressed_size=uncomp_total,
                 compressed_size=written, dict_entries=n_dict))
         # spec: total_byte_size is the UNCOMPRESSED column data total
-        # (planners size splits/memory from it); rg_bytes tracks the
-        # compressed bytes physically written
+        # (planners size splits/memory from it)
         rg = {"columns": chunks_cols,
               "total_byte_size": sum(
                   cc["meta_data"]["total_uncompressed_size"]

@@ -25,9 +25,7 @@ from fastparquet_spark import api
 def test_masked_int64_above_2_53_exact(tmp_path):
     big = 4611686018427400249  # not representable in float64
     df = pd.DataFrame({"a": pd.array([big, None, 7], dtype="Int64"),
-                       "u": pd.array([2 ** 63 + 11, None], dtype="UInt64")[
-                           [0, 1, 1]].tolist()})
-    df["u"] = pd.array([2 ** 63 + 11, None, 3], dtype="UInt64")
+                       "u": pd.array([2 ** 63 + 11, None, 3], dtype="UInt64")})
     p = os.path.join(tmp_path, "m.parquet")
     api.write(p, df)
     back = api.ParquetFile(p).to_pandas()
@@ -43,13 +41,16 @@ def test_nat_sentinel_under_has_nulls_false(tmp_path):
         "t": pd.to_datetime(["2020-01-02 03:04:05.123456", None]),
         "td": pd.to_timedelta([1234567, None], unit="us"),
     })
-    p = os.path.join(tmp_path, "n.parquet")
-    api.write(p, df, has_nulls=False)  # reference contract: NaT sentinel
-    back = api.ParquetFile(p).to_pandas()
-    assert back["t"][0] == pd.Timestamp("2020-01-02 03:04:05.123456")
-    assert pd.isna(back["t"][1])
-    assert back["td"][0] == pd.to_timedelta(1234567, unit="us")
-    assert pd.isna(back["td"][1])
+    # int96 stores timestamps in ns: the sentinel must not be cast there
+    for times in ("int64", "int96"):
+        p = os.path.join(tmp_path, f"n-{times}.parquet")
+        # reference contract: NaT sentinel
+        api.write(p, df, has_nulls=False, times=times)
+        back = api.ParquetFile(p).to_pandas()
+        assert back["t"][0] == pd.Timestamp("2020-01-02 03:04:05.123456")
+        assert pd.isna(back["t"][1])
+        assert back["td"][0] == pd.to_timedelta(1234567, unit="us")
+        assert pd.isna(back["td"][1])
 
 
 def test_sub_us_timedelta_truncates_like_reference(tmp_path):

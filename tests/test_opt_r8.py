@@ -8,6 +8,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from fastparquet_spark.analytics import relational, text
@@ -83,6 +84,23 @@ def test_rollup_cube_preaggregate_before_expand(spark):
         first_agg = p.index("HashAggregate")
         assert first_agg < p.index("Expand") or \
             p[:p.index("Expand")].count("HashAggregate") >= 1
+
+
+def test_max_partition_bytes_parser():
+    """_spread sizes splits from spark.sql.files.maxPartitionBytes in any
+    form Spark accepts; Spark's default equals the 128 MiB fallback."""
+    from fastparquet_spark.analytics.relational import _byte_size
+
+    mib = 1024 * 1024
+    assert _byte_size("128MB") == _byte_size("134217728b") == 128 * mib
+    assert _byte_size("134217728") == 128 * mib
+    assert _byte_size("128m") == _byte_size("128M") == 128 * mib
+    assert _byte_size("1g") == _byte_size("1GB") == 1024 * mib
+    assert _byte_size("64k") == _byte_size("64kb") == 64 * 1024
+    assert _byte_size("2t") == 2 * 1024 ** 4
+    for bad in ("", "1.5g", "12x", "m", "-1m"):
+        with pytest.raises(ValueError):
+            _byte_size(bad)
 
 
 def test_spread_is_noop_at_scale(spark, tmp_path, monkeypatch):

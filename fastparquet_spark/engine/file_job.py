@@ -15,6 +15,11 @@ Skew handling here is plan-time: a mega-file contributes one split per
 row group, so no task exceeds the row-group budget regardless of file
 size — the moral equivalent of the shuffle path's salting.
 
+The split table's partitions are built on the JVM (engine/tasks.py):
+a ``Range`` of split ids, one split per task, with the splits' rows in
+the task closure.  No Python RDD carries the table, so each task starts
+exactly one Python worker, the one that encodes its split.
+
 Both formats run one task body (``_encode_splits``) with a format
 plug-in.  Each split is one commit of engine/commit.py's protocol:
 deterministic split ids, one staged part file + one JSON manifest per
@@ -34,6 +39,7 @@ from fastparquet_spark.engine.encode_job import (
     _arrow_manifest_batch,
     _manifest_struct,
 )
+from fastparquet_spark.engine.tasks import map_tasks
 
 
 def _prepare_split_job(spark, input_dir: str, out_dir: str,
@@ -41,26 +47,19 @@ def _prepare_split_job(spark, input_dir: str, out_dir: str,
     """Shared driver scaffold for both split encoders: split planning,
     then ``commit.begin_job`` with the split fingerprint as the plan
     identity — split ids shift if the input file set or rows_per_task
-    changes between runs.  Returns (splits, sdf) — sdf None when there
-    is nothing to do."""
+    changes between runs.  Returns the splits, empty when there is
+    nothing to do."""
     import hashlib
 
     splits = plan_splits(input_dir, rows_per_task)
     if not splits:
-        return splits, None
+        return splits
     fingerprint = hashlib.sha256(json.dumps(
         [(s["file"], s["row_groups"]) for s in splits],
         sort_keys=True).encode()).hexdigest()
     begin_job(out_dir, "files",
               {"fingerprint": fingerprint, "n_splits": len(splits)}, resume)
-    split_rows = [(s["split"], s["file"], json.dumps(s["row_groups"]))
-                  for s in splits]
-    # exactly one split per partition: hash repartition would collide
-    # splits into shared partitions and leave others empty, putting 2-3
-    # tasks on the critical path
-    rdd = spark.sparkContext.parallelize(split_rows, len(splits))
-    sdf = spark.createDataFrame(rdd, "split int, file string, rgs string")
-    return splits, sdf
+    return splits
 
 
 def plan_splits(input_dir: str, rows_per_task: int = 2_000_000,
@@ -111,12 +110,13 @@ def plan_splits(input_dir: str, rows_per_task: int = 2_000_000,
     return splits
 
 
-def _encode_splits(sdf, input_dir: str, out_dir: str, columns, resume: bool,
-                   preserve_layout: bool, suffix: str, write):
-    """The split-encode task body both formats share.  ``suffix`` and
-    ``write(sink, table) -> ({column: codec}, bytes)`` are the format
-    plug-in; each split reads its row groups with pyarrow, stages one
-    ``part-{split}{suffix}`` file and commits it with its manifest."""
+def _encode_splits(spark, splits, input_dir: str, out_dir: str, columns,
+                   resume: bool, preserve_layout: bool, suffix: str, write):
+    """The split-encode task body both formats share, one split per
+    task.  ``suffix`` and ``write(sink, table) -> ({column: codec},
+    bytes)`` are the format plug-in; each split reads its row groups
+    with pyarrow, stages one ``part-{split}{suffix}`` file and commits
+    it with its manifest."""
     columns = list(columns) if columns else None
     prefix = input_dir.rstrip("/") + "/"
 
@@ -169,7 +169,15 @@ def _encode_splits(sdf, input_dir: str, out_dir: str, columns, resume: bool,
                     raise
                 yield _arrow_manifest_batch(row)
 
-    return sdf.mapInArrow(run, _manifest_struct())
+    table = pa.table({
+        "split": pa.array([s["split"] for s in splits], pa.int32()),
+        "file": pa.array([s["file"] for s in splits], pa.string()),
+        "rgs": pa.array([json.dumps(s["row_groups"]) for s in splits],
+                        pa.string())})
+    # one split per task, so the critical path is the largest split; a
+    # hash repartition would collide splits into shared partitions and
+    # leave others empty
+    return map_tasks(spark, table, len(splits), run, _manifest_struct())
 
 
 def encode_files(spark, input_dir: str, out_dir: str, *,
@@ -187,9 +195,9 @@ def encode_files(spark, input_dir: str, out_dir: str, *,
     hive ``key=value`` partitions) under ``out_dir``, so a partitioned
     input re-encodes into an equally partition-prunable output without
     any shuffle — the plan moves, the clustering stays."""
-    splits, sdf = _prepare_split_job(spark, input_dir, out_dir,
-                                     rows_per_task, resume)
-    if sdf is None:
+    splits = _prepare_split_job(spark, input_dir, out_dir, rows_per_task,
+                                resume)
+    if not splits:
         return spark.createDataFrame([], _manifest_struct())
 
     def write(sink, tbl):
@@ -200,7 +208,7 @@ def encode_files(spark, input_dir: str, out_dir: str, *,
                          page_rows=page_rows, compat=compat)
         return {c.name: c.encoding for c in res.columns}, res.file_bytes
 
-    return _encode_splits(sdf, input_dir, out_dir, columns, resume,
+    return _encode_splits(spark, splits, input_dir, out_dir, columns, resume,
                           preserve_layout, ".parquet", write)
 
 
@@ -217,9 +225,9 @@ def encode_files_fpsc(spark, input_dir: str, out_dir: str, *,
     a small pyarrow sample and shipped through the closure, so tasks
     never pay the training cost (fpsc_job.encode_dataset_fpsc has the
     same option for the shuffle path)."""
-    splits, sdf = _prepare_split_job(spark, input_dir, out_dir,
-                                     rows_per_task, resume)
-    if sdf is None:
+    splits = _prepare_split_job(spark, input_dir, out_dir, rows_per_task,
+                                resume)
+    if not splits:
         return spark.createDataFrame([], _manifest_struct())
 
     pretrained: dict = {}
@@ -254,5 +262,5 @@ def encode_files_fpsc(spark, input_dir: str, out_dir: str, *,
                                  codec_decisions=decisions)
         return {c.name: c.codec for c in blocks}, sink.tell()
 
-    return _encode_splits(sdf, input_dir, out_dir, columns, resume, False,
-                          ".fpsc", write)
+    return _encode_splits(spark, splits, input_dir, out_dir, columns, resume,
+                          False, ".fpsc", write)

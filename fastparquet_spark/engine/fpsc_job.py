@@ -24,6 +24,7 @@ from fastparquet_spark.engine.encode_job import (
     _manifest_struct,
     _salted,
 )
+from fastparquet_spark.engine.tasks import map_tasks
 
 
 def container_chunks(batches, rows: int) -> Iterator[pa.Table]:
@@ -167,8 +168,6 @@ def read_fpsc(spark, in_dir: str, schema=None, columns=None):
     ``columns``: projection — workers make RANGED reads of only the
     requested columns' byte spans (footer offsets), the same IO
     contract as a parquet column-chunk scan."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from fastparquet_spark.io import get_fs
 
     fs = get_fs(in_dir)
@@ -192,15 +191,6 @@ def read_fpsc(spark, in_dir: str, schema=None, columns=None):
             [(cm["name"], _type_from_name(cm["arrow_type"]))
              for cm in cms]))
 
-    # task granularity: several container files per task, not one —
-    # 100k single-file tasks would be pure scheduler overhead; 4x the
-    # core count keeps every executor busy with work-stealing headroom
-    # while the inflate loop streams file-by-file (bounded memory)
-    n_parts = max(1, min(len(files),
-                         4 * spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize([(f,) for f in files], n_parts)
-    paths_df = spark.createDataFrame(
-        rdd, StructType([StructField("path", StringType())]))
     columns_ = list(columns) if columns is not None else None
 
     def inflate(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -214,4 +204,9 @@ def read_fpsc(spark, in_dir: str, schema=None, columns=None):
                 tbl = read_container(path, columns=columns_)
                 yield from tbl.to_batches()
 
-    return paths_df.mapInArrow(inflate, schema)
+    # task granularity: several container files per task, not one —
+    # 100k single-file tasks would be pure scheduler overhead; 4x the
+    # core count keeps every executor busy with work-stealing headroom
+    # while the inflate loop streams file-by-file (bounded memory)
+    return map_tasks(spark, pa.table({"path": pa.array(files, pa.string())}),
+                     4 * spark.sparkContext.defaultParallelism, inflate, schema)

@@ -25,6 +25,8 @@ from collections.abc import Iterator
 
 import pyarrow as pa
 
+from fastparquet_spark.engine.tasks import map_tasks
+
 
 def _eval_partition_term(v, op, val) -> bool:
     """Evaluate one predicate term against a file's constant partition
@@ -414,7 +416,6 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     and dropped from the result; may include partition columns).
     """
     from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StringType, StructField, StructType
 
     from fastparquet_spark.format.dataset import (
         filter_row_groups, load_dataset_metas,
@@ -482,18 +483,6 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     if not units:
         return spark.createDataFrame([], out_schema)
 
-    # several files per task (read_fpsc's granularity rule): single-file
-    # tasks at 100k files are pure scheduler overhead
-    n_parts = max(1, min(len(units),
-                         4 * spark.sparkContext.defaultParallelism))
-    rdd = spark.sparkContext.parallelize(units, n_parts)
-    paths_df = spark.createDataFrame(
-        rdd, StructType([StructField("path", StringType()),
-                         StructField("rgs", StringType()),
-                         StructField("parts", StringType()),
-                         StructField("absent", StringType()),
-                         StructField("fallback", StringType())]))
-
     clauses_ = [list(c) for c in filters]
     file_cols_ = list(file_cols)
     drop_cols_ = list(drop_cols)
@@ -518,4 +507,9 @@ def paged_read(spark, in_dir: str, filters, columns=None,
                     fallback, clauses_, file_cols_, drop_cols_,
                     part_cols_, arrow_schema_, exact_)
 
-    return paths_df.mapInArrow(scan, out_schema)
+    # several files per task (read_fpsc's granularity rule): single-file
+    # tasks at 100k files are pure scheduler overhead
+    return map_tasks(spark, pa.table(
+        {k: pa.array(col, pa.string()) for k, col in zip(
+            ("path", "rgs", "parts", "absent", "fallback"), zip(*units))}),
+        4 * spark.sparkContext.defaultParallelism, scan, out_schema)

@@ -210,3 +210,44 @@ def test_pack_sequences_window_is_sharded(spark):
 
     p = plan_of(text.text_pack_sequences(spark, SF))
     assert re.search(r"windowspecdefinition\(lang#\d+, shard#\d+", p)
+
+
+def _engine_job(spark, job: str, d):
+    """A small input for ``job`` under ``d`` and the job's DataFrame."""
+    import pyarrow as pa
+
+    from fastparquet_spark.engine import encode_files, paged_read
+    from fastparquet_spark.engine.file_job import encode_files_fpsc
+    from fastparquet_spark.engine.fpsc_job import read_fpsc
+    from fastparquet_spark.format.container import write_container
+    from fastparquet_spark.format.writer import write_file
+
+    src = d / "src"
+    src.mkdir()
+    for i in range(2):
+        tbl = pa.table({"k": pa.array(range(i * 100, (i + 1) * 100)),
+                        "s": pa.array([f"v{j % 7}" for j in range(100)])})
+        write_file(str(src / f"p{i}.parquet"), tbl, row_group_rows=50)
+        write_container(str(src / f"c{i}.fpsc"), tbl)
+    out = str(d / "out")
+    if job == "encode_files":
+        return encode_files(spark, str(src), out, rows_per_task=50, resume=False)
+    if job == "encode_files_fpsc":
+        return encode_files_fpsc(spark, str(src), out, rows_per_task=50,
+                                 resume=False)
+    if job == "read_fpsc":
+        return read_fpsc(spark, str(src))
+    return paged_read(spark, str(src), [("k", ">=", 120)])
+
+
+@pytest.mark.parametrize("job", ["encode_files", "encode_files_fpsc",
+                                 "read_fpsc", "paged_read"])
+def test_engine_task_table_is_built_on_the_jvm(spark, tmp_path, job):
+    """The engine jobs' tasks are partitions of a JVM ``Range``, never
+    of a Python RDD: a ``Scan ExistingRDD`` under the ``MapInArrow``
+    costs every task a second Python worker that only unpickles the
+    task's rows, and a broadcast of the rows costs a second job."""
+    p = plan_of(_engine_job(spark, job, tmp_path))
+    assert "MapInArrow" in p and "Range" in p
+    assert "Scan ExistingRDD" not in p
+    assert "Exchange" not in p

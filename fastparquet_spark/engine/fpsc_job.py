@@ -157,6 +157,37 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
     return work.mapInArrow(run, _manifest_struct())
 
 
+def fpsc_files(path: str, columns=None, probe: bool = True):
+    """(files, schema) of an FPSC dataset — the one listing + schema
+    probe behind ``read_fpsc`` and the fpsc data source: the sorted
+    ``.fpsc`` containers under ``path`` (through the fs seam, so
+    ``path`` may be a URI) and, with ``probe``, the Spark schema of the
+    FIRST container's footer (footer tail only, never the data
+    blocks), projected to ``columns``.  Probing a directory with no
+    containers raises ValueError; without ``probe`` the schema is
+    None."""
+    from fastparquet_spark.io import get_fs
+
+    fs = get_fs(path)
+    files = sorted(p for p in fs.walk_files(path) if p.endswith(".fpsc"))
+    if not probe:
+        return files, None
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from fastparquet_spark.format.container import (
+        _type_from_name, read_container_footer,
+    )
+
+    if not files:
+        raise ValueError(f"no .fpsc files under {path}")
+    cms = read_container_footer(files[0], fs=fs)["columns"]
+    if columns is not None:
+        by_name = {cm["name"]: cm for cm in cms}
+        cms = [by_name[c] for c in columns]
+    return files, from_arrow_schema(pa.schema(
+        [(cm["name"], _type_from_name(cm["arrow_type"])) for cm in cms]))
+
+
 def read_fpsc(spark, in_dir: str, schema=None, columns=None):
     """Distributed decode of an FPSC dataset back to a DataFrame:
     container paths fan out to tasks; each Python worker inflates its
@@ -168,28 +199,9 @@ def read_fpsc(spark, in_dir: str, schema=None, columns=None):
     ``columns``: projection — workers make RANGED reads of only the
     requested columns' byte spans (footer offsets), the same IO
     contract as a parquet column-chunk scan."""
-    from fastparquet_spark.io import get_fs
-
-    fs = get_fs(in_dir)
-    files = sorted(p for p in fs.walk_files(in_dir) if p.endswith(".fpsc"))
+    files, probed = fpsc_files(in_dir, columns, probe=schema is None)
     if schema is None:
-        import pyarrow as pa_s
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        from fastparquet_spark.format.container import (
-            _type_from_name, read_container_footer,
-        )
-
-        if not files:
-            raise ValueError(f"no .fpsc files under {in_dir}")
-        meta = read_container_footer(files[0], fs=fs)
-        cms = meta["columns"]
-        if columns is not None:
-            by_name = {cm["name"]: cm for cm in cms}
-            cms = [by_name[c] for c in columns]
-        schema = from_arrow_schema(pa_s.schema(
-            [(cm["name"], _type_from_name(cm["arrow_type"]))
-             for cm in cms]))
+        schema = probed
 
     columns_ = list(columns) if columns is not None else None
 

@@ -215,167 +215,156 @@ def _absent_clauses(clauses, absent):
     return out
 
 
-def build_scan_units(by_file, metas, file_cols, names_all, present,
-                     ptypes):
-    """One (file, row_groups, pvals, absent, fallback) tuple per
-    surviving file — shared by paged_read and the fps data source.
+def plan_scan(root: str, metas, filters, columns, fs=None):
+    """The driver plan of a pruned scan — the ONE planner behind
+    ``paged_read`` and the fps data source.  Returns
+    ``(arrow_schema, file_cols, drop_cols, part_cols, units)``:
 
-    Partition values are coerced HERE to the column's RESOLVED type: a
-    string-typed column (mixed spellings, k=3 beside k=abc) stringifies
-    int-spelled values, so executor-side partition-term decisions and
-    the attached constants agree with the result schema.  ``absent``
-    lists projected columns this file predates (schema evolution);
-    ``fallback`` names a present column to carry row cardinality when
-    every projected column is absent."""
-    pmap = {}
-    for m in metas:
-        pv = dict(m.get("partitions") or {})
-        for k, v in pv.items():
-            t = ptypes.get(k)
-            if t is not None and pa.types.is_string(t) \
-                    and v is not None and not isinstance(v, str):
-                pv[k] = str(v)
-        pmap[m["file"]] = pv
+    - the result schema is the UNION of the per-file leaf schemas
+      (metadata-only; schema-evolution-tolerant — typed-null fill for
+      files predating a column), FLAT leaves only (the page reader
+      cannot decode nested subtrees; use spark.read.parquet for nested
+      datasets), then the ``columns`` projection, then the hive
+      partition columns last, typed from their observed values;
+    - a partition-only projection still needs per-row cardinality: it
+      decodes ONE file column (``drop_cols``) to carry the row count,
+      dropped before the constants are attached;
+    - a truthy DNF ``filters`` prunes row groups on stats + concurrent
+      bloom probes (partition values act as pseudo-stats, so a
+      partition predicate prunes whole files); otherwise every row
+      group survives;
+    - ``units`` holds one ``(path, row_groups, pvals, absent,
+      fallback)`` per surviving file, in file order.  Partition values
+      are coerced to the column's RESOLVED type: a string-typed column
+      (mixed spellings, k=3 beside k=abc) stringifies int-spelled
+      values, so executor-side partition-term decisions and the
+      attached constants agree with the result schema.  ``absent``
+      lists projected columns the file predates; ``fallback`` names a
+      present column to carry row cardinality when every projected
+      column is absent."""
+    from fastparquet_spark.format.dataset import filter_row_groups
+    from fastparquet_spark.format.reader import _arrow_type
+
+    names_all, elems, present = union_leaf_elems(metas)
+    names_all = [n for n in names_all
+                 if elems[n].get("num_children") is None]
+    parts = {m["file"]: dict(m.get("partitions") or {}) for m in metas}
+    pnames = list(metas[0].get("partitions") or {})
+    ptypes = {k: _partition_arrow_type([parts[m["file"]].get(k)
+                                        for m in metas]) for k in pnames}
+    drop_cols: list[str] = []
+    if columns is None:
+        file_cols, part_cols = list(names_all), pnames
+    else:
+        file_cols = [c for c in columns if c in names_all]
+        part_cols = [c for c in columns if c in pnames]
+        if not file_cols and names_all:
+            file_cols, drop_cols = [names_all[0]], [names_all[0]]
+    arrow_schema = pa.schema(
+        [(n, _arrow_type(elems[n])) for n in file_cols
+         if n not in drop_cols]
+        + [(n, ptypes[n]) for n in part_cols])
+
+    if filters:
+        survivors = filter_row_groups(root, filters, fs=fs, metas=metas)
+    else:
+        survivors = [(m["file"], ri) for m in metas
+                     for ri in range(len(m["fmd"]["row_groups"]))]
+    by_file: dict[str, list[int]] = {}
+    for f, ri in survivors:
+        by_file.setdefault(f, []).append(ri)
+    base = root.rstrip("/")
     units = []
     for f, ris in sorted(by_file.items()):
+        pvals = parts[f]
+        for k, v in pvals.items():
+            if k in ptypes and pa.types.is_string(ptypes[k]) \
+                    and v is not None and not isinstance(v, str):
+                pvals[k] = str(v)
         absent = [c for c in file_cols if c not in present[f]]
         fallback = ""
         if file_cols and len(absent) == len(file_cols):
-            mine = [c for c in names_all if c in present[f]]
-            if mine:
-                fallback = mine[0]
-        units.append((f, sorted(ris), pmap[f], absent, fallback))
-    return units
+            fallback = next((c for c in names_all if c in present[f]), "")
+        units.append((f"{base}/{f}", sorted(ris), pvals, absent, fallback))
+    return arrow_schema, file_cols, drop_cols, part_cols, units
 
 
-def _unit_plan(pvals, absent, fallback, clauses, file_cols, drop_cols):
-    """Shared head of the unit scanners: per-file DNF rewrite
-    (partition substitution + absent-column 3VL) and the projection for
-    THIS file.  Returns (fclauses, cols_here, drop_here) or None when
-    no DNF branch can match the file."""
+def scan_unit(path, ris, pvals, absent, fallback, clauses, file_cols,
+              drop_cols, part_cols, arrow_schema, exact):
+    """Executor-side scan of ONE (file, row-groups) unit from
+    ``plan_scan`` — the generator both paged_read's mapInArrow fn and
+    FpsReader.read run, so the per-file clause/evolution/partition
+    logic cannot drift between the two consumers.  Yields
+    RecordBatches cast to ``arrow_schema``; nothing when no DNF branch
+    can match this file."""
     fclauses = _file_clauses(clauses, pvals)
     if absent and fclauses:
         # schema evolution: terms on columns this file predates
         # evaluate as all-null
         fclauses = _absent_clauses(fclauses, set(absent))
     if not fclauses:
-        return None
+        return
     cols_here = [c for c in file_cols if c not in absent]
     drop_here = [c for c in drop_cols if c not in absent]
     if not cols_here and fallback:
         cols_here, drop_here = [fallback], [fallback]
-    return fclauses, cols_here, drop_here
 
-
-def _finish_unit(tbl, drop_here, file_cols, absent, drop_cols,
-                 part_cols, pvals, arrow_schema):
-    """Shared tail of the unit scanners: projection drop, typed-null
-    fill for evolution columns, partition constants, schema-order cast.
-    Works per-Table OR per-batch (wrapped as a Table, zero-copy)."""
-    if drop_here:
-        tbl = tbl.drop_columns(drop_here)
-    for c in file_cols:
-        if c in absent and c not in drop_cols:
+    def finish(tbl):
+        """Projection drop, typed-null fill for evolution columns,
+        partition constants, schema-order cast — per Table or per
+        batch (wrapped as a Table, zero-copy)."""
+        if drop_here:
+            tbl = tbl.drop_columns(drop_here)
+        for c in file_cols:
+            if c in absent and c not in drop_cols:
+                tbl = tbl.append_column(
+                    c, pa.nulls(tbl.num_rows, arrow_schema.field(c).type))
+        for name in part_cols:
+            ptype = arrow_schema.field(name).type
+            pval = pvals.get(name)
+            if pa.types.is_string(ptype) and pval is not None:
+                pval = str(pval)  # belt: units built by plan_scan
+            # O(1) repeated scalar, not an O(rows) Python list — this
+            # runs once per 131k-row batch per partition column
             tbl = tbl.append_column(
-                c, pa.nulls(tbl.num_rows, arrow_schema.field(c).type))
-    for name in part_cols:
-        ptype = arrow_schema.field(name).type
-        pval = pvals.get(name)
-        if pa.types.is_string(ptype) and pval is not None:
-            pval = str(pval)  # belt: units built by build_scan_units
-        # O(1) repeated scalar, not an O(rows) Python list — this runs
-        # once per 131k-row batch per partition column on executors
-        tbl = tbl.append_column(
-            name, pa.repeat(pa.scalar(pval, type=ptype), tbl.num_rows))
-    # evolution columns were appended out of order; restore schema order
-    return tbl.select(arrow_schema.names).cast(arrow_schema)
+                name, pa.repeat(pa.scalar(pval, type=ptype), tbl.num_rows))
+        # evolution columns were appended out of order; restore order
+        return tbl.select(arrow_schema.names).cast(arrow_schema)
 
+    if all(fclauses):
+        from fastparquet_spark.format.dataset import read_pages
 
-def scan_unit(path, ris, pvals, absent, fallback, clauses, file_cols,
-              drop_cols, part_cols, arrow_schema, exact):
-    """Executor-side scan of ONE (file, row-groups) unit — the shared
-    body of paged_read's mapInArrow fn and FpsReader.read, so the
-    per-file clause/evolution/partition logic cannot drift between the
-    two consumers.  Returns a Table cast to ``arrow_schema``, or None
-    when no DNF branch can match this file."""
-    from fastparquet_spark.format.dataset import read_pages
-
-    plan = _unit_plan(pvals, absent, fallback, clauses, file_cols,
-                      drop_cols)
-    if plan is None:
-        return None
-    fclauses, cols_here, drop_here = plan
-    if any(not cl for cl in fclauses):
-        # match-all DNF for this file (no filter survived partition
-        # substitution): ColumnIndex page skipping has nothing to skip,
-        # so the pure-Python page reader only adds decode tax — read
-        # the surviving row groups through pyarrow's C++ parquet reader
-        # instead (~2.7x on full scans, BENCH.md r6 scan probe).  The
-        # selective path below is unchanged and byte-proof-tested.
-        import pyarrow.parquet as pq
-
-        from fastparquet_spark.io import _is_uri, get_fs
-
-        # close the remote handle after the read — long scan jobs leak
-        # connections/fds otherwise (they only died at GC)
-        if _is_uri(path):
-            with get_fs(path).open_read(path) as src:
-                tbl = pq.ParquetFile(src).read_row_groups(
-                    sorted(ris), columns=cols_here, use_threads=False)
-        else:
-            tbl = pq.ParquetFile(path).read_row_groups(
-                sorted(ris), columns=cols_here, use_threads=False)
-    else:
         tbl = read_pages(path, fclauses, columns=cols_here, exact=exact,
                          row_groups=set(ris))
-    return _finish_unit(tbl, drop_here, file_cols, absent, drop_cols,
-                        part_cols, pvals, arrow_schema)
-
-
-def scan_unit_batches(path, ris, pvals, absent, fallback, clauses,
-                      file_cols, drop_cols, part_cols, arrow_schema,
-                      exact, batch_rows=131_072):
-    """Streaming variant of ``scan_unit`` — yields RecordBatches.
-
-    Match-all units stream through ``pyarrow.parquet.iter_batches`` so
-    C++ decode OVERLAPS the Arrow-IPC write back to the JVM (the
-    consumer yields each batch before the next is decoded) instead of
-    materializing the whole unit table first; peak memory is one batch,
-    not one file.  Selective units delegate to ``scan_unit`` (the
-    byte-proof page-skipping path needs whole-chunk assembly anyway)."""
-    plan = _unit_plan(pvals, absent, fallback, clauses, file_cols,
-                      drop_cols)
-    if plan is None:
+        yield from finish(tbl).to_batches(max_chunksize=65_536)
         return
-    fclauses, cols_here, drop_here = plan
-    if any(not cl for cl in fclauses):
-        import pyarrow.parquet as pq
+    # match-all DNF for this file (no filter survived partition
+    # substitution): ColumnIndex page skipping has nothing to skip, so
+    # the pure-Python page reader only adds decode tax — stream the
+    # surviving row groups through pyarrow's C++ reader instead (~2.7x
+    # on full scans, BENCH.md r6 scan probe).  Streaming OVERLAPS decode
+    # with the Arrow-IPC write back to the JVM (the consumer takes each
+    # batch before the next is decoded); peak memory is one batch, not
+    # one file.  The selective path above is byte-proof-tested.
+    import pyarrow.parquet as pq
 
-        from fastparquet_spark.io import _is_uri, get_fs
+    from fastparquet_spark.io import _is_uri, get_fs
 
-        # local paths go to pyarrow as plain paths (OS-level reads);
-        # URIs (s3/gs/hdfs) open through the io layer's pyarrow.fs
-        # NativeFile — pq.ParquetFile itself does no URI inference
-        src = get_fs(path).open_read(path) if _is_uri(path) else path
-        try:
-            for b in pq.ParquetFile(src).iter_batches(
-                    batch_size=batch_rows, row_groups=sorted(ris),
-                    columns=cols_here, use_threads=False):
-                yield from _finish_unit(
-                    pa.Table.from_batches([b]), drop_here, file_cols,
-                    absent, drop_cols, part_cols, pvals,
-                    arrow_schema).to_batches(max_chunksize=batch_rows)
-        finally:
-            # close the remote handle even on partial consumption —
-            # long scan jobs leak connections/fds otherwise
-            if src is not path:
-                src.close()
-    else:
-        tbl = scan_unit(path, ris, pvals, absent, fallback, clauses,
-                        file_cols, drop_cols, part_cols, arrow_schema,
-                        exact)
-        if tbl is not None:
-            yield from tbl.to_batches(max_chunksize=65_536)
+    # local paths go to pyarrow as plain paths (OS-level reads); URIs
+    # (s3/gs/hdfs) open through the io layer's pyarrow.fs NativeFile —
+    # pq.ParquetFile itself does no URI inference
+    src = get_fs(path).open_read(path) if _is_uri(path) else path
+    try:
+        for b in pq.ParquetFile(src).iter_batches(
+                batch_size=131_072, row_groups=sorted(ris),
+                columns=cols_here, use_threads=False):
+            yield from finish(pa.Table.from_batches([b])).to_batches(
+                max_chunksize=131_072)
+    finally:
+        # close the remote handle even on partial consumption — long
+        # scan jobs leak connections/fds otherwise
+        if src is not path:
+            src.close()
 
 
 def _partition_arrow_type(values):
@@ -399,7 +388,7 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     ``[[...], [...]]`` — the reference's filter contract) under
     ``in_dir``, read through the three-tier pruning stack:
 
-    1. driver: row-group stats + bloom pruning (``filter_row_groups``,
+    1. driver: row-group stats + bloom pruning (``plan_scan``,
        concurrent footer/bloom fetches; hive partition values prune as
        pseudo-stats) -> surviving (file, row-group) units;
     2. executor: ColumnIndex page skipping inside each surviving group
@@ -417,10 +406,7 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     """
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    from fastparquet_spark.format.dataset import (
-        filter_row_groups, load_dataset_metas,
-    )
-    from fastparquet_spark.format.reader import _arrow_type
+    from fastparquet_spark.format.dataset import load_dataset_metas
     from fastparquet_spark.io import get_fs
 
     if filters and isinstance(filters[0], tuple):
@@ -428,67 +414,14 @@ def paged_read(spark, in_dir: str, filters, columns=None,
 
     fs = get_fs(in_dir, fs)
     in_dir, metas = load_dataset_metas(in_dir, fs=fs)
-    # driver-side tier: stats + concurrent bloom pruning (partition
-    # values participate as pseudo-stats, so a partition predicate
-    # prunes whole files here).  An empty filter list means SCAN ALL
-    # (filter_row_groups would read [] as an empty DNF -> no rows).
-    if not filters:
-        filters = [[]]
-        survivors = [(m["file"], ri) for m in metas
-                     for ri in range(len(m["fmd"]["row_groups"]))]
-    else:
-        survivors = filter_row_groups(in_dir, filters, fs=fs, metas=metas)
-    by_file: dict[str, list[int]] = {}
-    for f, ri in survivors:
-        by_file.setdefault(f, []).append(ri)
-    parts_by_file = {m["file"]: (m.get("partitions") or {}) for m in metas}
-
-    # result schema = UNION of the per-file leaf schemas (metadata-
-    # only; schema-evolution-tolerant — typed-null fill for files
-    # predating a column); partition columns appended last, typed from
-    # observed values.  FLAT leaves only: the page reader cannot
-    # decode nested subtrees (documented contract; use
-    # spark.read.parquet for nested datasets)
-    names_all, elems, present = union_leaf_elems(metas)
-    names_all = [n for n in names_all
-                 if elems[n].get("num_children") is None]
-    pnames = [k for k in (metas[0].get("partitions") or {})]
-    ptypes = {k: _partition_arrow_type(
-        [parts_by_file[m["file"]].get(k) for m in metas]) for k in pnames}
-    if columns is not None:
-        file_cols = [c for c in columns if c in names_all]
-        part_cols = [c for c in columns if c in pnames]
-        if not file_cols and names_all:
-            # a partition-only projection still needs per-row
-            # cardinality: decode ONE (narrow) file column to carry the
-            # row count, dropped before the constants are attached
-            file_cols = [names_all[0]]
-            drop_cols = [names_all[0]]
-        else:
-            drop_cols = []
-    else:
-        file_cols, part_cols = list(names_all), list(pnames)
-        drop_cols = []
-    arrow_schema = pa.schema(
-        [(n, _arrow_type(elems[n])) for n in file_cols
-         if n not in drop_cols]
-        + [(n, ptypes[n]) for n in part_cols])
+    arrow_schema, file_cols, drop_cols, part_cols, units = plan_scan(
+        in_dir, metas, filters, columns, fs=fs)
     out_schema = from_arrow_schema(arrow_schema)
-
-    root = in_dir.rstrip("/")
-    units = [(f"{root}/{f}", ",".join(map(str, ris)), json.dumps(pvals),
-              json.dumps(absent), fallback)
-             for f, ris, pvals, absent, fallback in build_scan_units(
-                 by_file, metas, file_cols, names_all, present, ptypes)]
     if not units:
         return spark.createDataFrame([], out_schema)
 
-    clauses_ = [list(c) for c in filters]
-    file_cols_ = list(file_cols)
-    drop_cols_ = list(drop_cols)
-    part_cols_ = list(part_cols)
-    exact_ = exact
-    arrow_schema_ = arrow_schema
+    # [[]] is the match-all DNF (an empty list would mean NO branch)
+    clauses = [list(c) for c in filters] if filters else [[]]
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow as pa_w
@@ -502,14 +435,17 @@ def paged_read(spark, in_dir: str, filters, columns=None,
                     b.column("absent").to_pylist(),
                     b.column("fallback").to_pylist()):
                 ris = [int(x) for x in rgs.split(",")] if rgs else []
-                yield from scan_unit_batches(
+                yield from scan_unit(
                     path, ris, json.loads(pjson), json.loads(absjson),
-                    fallback, clauses_, file_cols_, drop_cols_,
-                    part_cols_, arrow_schema_, exact_)
+                    fallback, clauses, file_cols, drop_cols, part_cols,
+                    arrow_schema, exact)
 
     # several files per task (read_fpsc's granularity rule): single-file
     # tasks at 100k files are pure scheduler overhead
+    rows = [(path, ",".join(map(str, ris)), json.dumps(pvals),
+             json.dumps(absent), fallback)
+            for path, ris, pvals, absent, fallback in units]
     return map_tasks(spark, pa.table(
         {k: pa.array(col, pa.string()) for k, col in zip(
-            ("path", "rgs", "parts", "absent", "fallback"), zip(*units))}),
+            ("path", "rgs", "parts", "absent", "fallback"), zip(*rows))}),
         4 * spark.sparkContext.defaultParallelism, scan, out_schema)

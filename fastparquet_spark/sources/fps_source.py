@@ -9,14 +9,15 @@ is the idiomatic spelling of ``engine.scan_job.paged_read``:
 
 1. ``pushFilters`` receives Catalyst's translated predicates and keeps
    the comparison/null/in terms as one DNF AND-clause;
-2. ``partitions()`` (driver, metadata-only) runs row-group stats +
-   bloom pruning (``filter_row_groups`` — sidecar-aware footer fetch,
-   concurrent bloom probes; hive partition values prune whole files as
-   pseudo-stats) and emits one input partition per group of surviving
-   files;
-3. ``read()`` (executor) runs ColumnIndex page skipping inside each
-   surviving row group (``read_pages`` — ranged reads of surviving
-   spans only) and yields the page-granular superset as Arrow batches.
+2. ``partitions()`` (driver, metadata-only) runs paged_read's planner,
+   ``scan_job.plan_scan`` — row-group stats + bloom pruning
+   (sidecar-aware footer fetch, concurrent bloom probes; hive partition
+   values prune whole files as pseudo-stats) — and emits one input
+   partition per group of surviving files;
+3. ``read()`` (executor) runs paged_read's unit reader,
+   ``scan_job.scan_unit`` — ColumnIndex page skipping inside each
+   surviving row group (ranged reads of surviving spans only) — and
+   yields the page-granular superset as Arrow batches.
 
 Every filter is returned to Spark as unsupported, so Spark keeps
 responsibility for exactness and applies the full predicate over the
@@ -26,11 +27,18 @@ Spark requires ``spark.sql.python.filterPushdown.enabled=true`` (it
 raises DATA_SOURCE_PUSHDOWN_DISABLED otherwise); the conf is
 runtime-settable via ``spark.conf.set``.
 
+Concurrent queries need one ``load()`` each.  Spark 4.1 keeps ONE
+mutable read plan per Python data source relation (PythonDataSourceV2's
+``readInfo``), so two queries planned at the same time on one shared
+DataFrame can each be handed the partitions pruned for the OTHER's
+filters and return wrong (often empty) rows.  Sequential queries on a
+shared DataFrame are fine.
+
 The Python Data Source API has no column-pruning hook yet; pass
 ``.option("columns", "a,b")`` to project at the page-reader level
-(predicate columns are decoded as needed and dropped, mirroring
-``paged_read``'s contract).  Hive ``key=value`` datasets work end to
-end, partition columns appended last (Spark's convention).
+(predicate columns are decoded as needed and dropped — the same
+``plan_scan`` as ``paged_read``).  Hive ``key=value`` datasets work end
+to end, partition columns appended last (Spark's convention).
 
 Write side (``df.write.format("fps").save(dir)``): each task streams
 its Arrow batches through ``format.writer.ParquetWriter`` into one
@@ -44,7 +52,6 @@ see the new files in one fetch.
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -52,7 +59,15 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
     InputPartition,
+    IsNotNull,
+    IsNull,
+    LessThan,
+    LessThanOrEqual,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
@@ -60,43 +75,18 @@ from pyspark.sql.types import StructType
 _MAX_TASKS = 4096  # ceiling on scheduler units for 100k-file datasets
 
 
-def _result_columns(metas, columns):
-    """(file_cols, part_cols, drop_cols, arrow_schema, names_all,
-    present, ptypes) — same contract as ``paged_read``: the UNION of
-    the per-file leaf schemas in first-seen order (schema-evolution-
-    tolerant, type conflicts error), partition columns (typed from
-    observed values) appended last."""
-    import pyarrow as pa
-
-    from fastparquet_spark.engine.scan_job import (
-        _partition_arrow_type, union_leaf_elems,
-    )
-    from fastparquet_spark.format.reader import _arrow_type
-
-    names_all, elems, present = union_leaf_elems(metas)
-    # flat leaves only (page-reader contract, same as paged_read)
-    names_all = [n for n in names_all
-                 if elems[n].get("num_children") is None]
-    pnames = list(metas[0].get("partitions") or {})
-    ptypes = {k: _partition_arrow_type(
-        [(m.get("partitions") or {}).get(k) for m in metas])
-        for k in pnames}
-    drop_cols: list[str] = []
-    if columns is not None:
-        file_cols = [c for c in columns if c in names_all]
-        part_cols = [c for c in columns if c in pnames]
-        if not file_cols and names_all:
-            # partition-only projection still needs row cardinality
-            file_cols = [names_all[0]]
-            drop_cols = [names_all[0]]
-    else:
-        file_cols, part_cols = list(names_all), list(pnames)
-    arrow_schema = pa.schema(
-        [(n, _arrow_type(elems[n])) for n in file_cols
-         if n not in drop_cols]
-        + [(n, ptypes[n]) for n in part_cols])
-    return (file_cols, part_cols, drop_cols, arrow_schema, names_all,
-            present, ptypes)
+def _pushed_clause(filters) -> list[tuple]:
+    """Catalyst -> DNF translation shared by the fps and fpsc readers:
+    the comparison / null / IN terms of Spark's pushed conjunction
+    become ONE AND-clause of ``(col, op, val)`` terms for the pruning
+    stack; anything else is left out (the readers return every filter
+    to Spark as unsupported, so Spark re-applies the exact predicate)."""
+    ops = {EqualTo: "==", GreaterThan: ">", GreaterThanOrEqual: ">=",
+           LessThan: "<", LessThanOrEqual: "<=", In: "in",
+           IsNull: "is_null", IsNotNull: "is_not_null"}
+    return [(f.attribute[0], ops[type(f)], getattr(f, "value", None))
+            for f in filters  # In.value is a tuple
+            if type(f) in ops and len(f.attribute) == 1]
 
 
 class FpsDataSource(DataSource):
@@ -123,9 +113,11 @@ class FpsDataSource(DataSource):
     def schema(self):
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        _root, metas = self._plan()
-        arrow_schema = _result_columns(metas, self._columns_opt())[3]
-        return from_arrow_schema(arrow_schema)
+        from fastparquet_spark.engine.scan_job import plan_scan
+
+        root, metas = self._plan()
+        return from_arrow_schema(
+            plan_scan(root, metas, None, self._columns_opt())[0])
 
     def reader(self, schema: StructType):
         return FpsReader(self.options["path"], self._columns_opt(),
@@ -155,24 +147,12 @@ class FpsReader(DataSourceReader):
         return state
 
     def pushFilters(self, filters):
-        """Catalyst -> DNF translation.  Spark hands the conjunction of
-        the query's source-level predicates; the comparison / null / IN
-        terms become ONE AND-clause for the pruning stack.  ALL filters
-        are returned (unsupported), so Spark re-applies the exact
-        predicate over the page-granular superset we yield."""
-        from pyspark.sql.datasource import (
-            EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull,
-            IsNull, LessThan, LessThanOrEqual,
-        )
-
-        ops = {EqualTo: "==", GreaterThan: ">", GreaterThanOrEqual: ">=",
-               LessThan: "<", LessThanOrEqual: "<=", In: "in",
-               IsNull: "is_null", IsNotNull: "is_not_null"}
-        for f in filters:
-            op = ops.get(type(f))
-            if op is not None and len(f.attribute) == 1:
-                val = getattr(f, "value", None)  # In.value is a tuple
-                self._clauses.append((f.attribute[0], op, val))
+        """Spark hands the conjunction of the query's source-level
+        predicates; the translatable terms become ONE AND-clause for
+        the pruning stack.  ALL filters are returned (unsupported), so
+        Spark re-applies the exact predicate over the page-granular
+        superset we yield."""
+        self._clauses += _pushed_clause(filters)
         return filters
 
     def partitions(self):
@@ -183,27 +163,13 @@ class FpsReader(DataSourceReader):
         clauses / result schema header): Spark pickles the reader
         object before this runs, so executor-side ``read`` must not
         depend on driver-side mutations of ``self``."""
-        from fastparquet_spark.engine.scan_job import build_scan_units
-        from fastparquet_spark.format.dataset import (
-            filter_row_groups, load_dataset_metas,
-        )
+        from fastparquet_spark.engine.scan_job import plan_scan
+        from fastparquet_spark.format.dataset import load_dataset_metas
 
         root, metas = self._plan or load_dataset_metas(self.path)
-        (file_cols, part_cols, drop_cols, aschema, names_all, present,
-         ptypes) = _result_columns(metas, self.columns)
-        filters = [self._clauses] if self._clauses else None
-        if filters:
-            survivors = filter_row_groups(root, filters, metas=metas)
-        else:
-            survivors = [(m["file"], ri) for m in metas
-                         for ri in range(len(m["fmd"]["row_groups"]))]
-        by_file: dict[str, list[int]] = {}
-        for f, ri in survivors:
-            by_file.setdefault(f, []).append(ri)
-        units = [(f"{root}/{f}", ris, pvals, absent, fallback)
-                 for f, ris, pvals, absent, fallback in build_scan_units(
-                     by_file, metas, file_cols, names_all, present,
-                     ptypes)]
+        aschema, file_cols, drop_cols, part_cols, units = plan_scan(
+            root, metas, [self._clauses] if self._clauses else None,
+            self.columns)
         header = {"file_cols": file_cols, "part_cols": part_cols,
                   "drop_cols": drop_cols,
                   "schema": aschema.serialize().to_pybytes(),
@@ -218,7 +184,7 @@ class FpsReader(DataSourceReader):
             return
         import pyarrow as pa
 
-        from fastparquet_spark.engine.scan_job import scan_unit_batches
+        from fastparquet_spark.engine.scan_job import scan_unit
 
         pa.set_cpu_count(1)
         header, units = partition.value
@@ -231,7 +197,7 @@ class FpsReader(DataSourceReader):
             # IPC write back to the JVM (the r6 full-scan tax); the
             # default 128k rows of a ~100B content column is ~13 MB
             # per batch — peak executor memory is ONE batch, not a file
-            yield from scan_unit_batches(
+            yield from scan_unit(
                 path, ris, pvals, absent, fallback, clauses,
                 header["file_cols"], header["drop_cols"],
                 header["part_cols"], aschema, exact=False)
@@ -295,6 +261,7 @@ class FpsWriter(StagedWriter):
         from pyspark import TaskContext
 
         from fastparquet_spark.engine.commit import discard, stage_name
+        from fastparquet_spark.engine.fpsc_job import container_chunks
         from fastparquet_spark.format.writer import ParquetWriter
         from fastparquet_spark.io import get_fs
 
@@ -304,36 +271,19 @@ class FpsWriter(StagedWriter):
         ctx = TaskContext.get()
         final = f"part-{self.job}-{ctx.partitionId():05d}.parquet"
         staged = stage_name(final, ctx.taskAttemptId())
-        # STREAM batches into row groups — memory is bounded by one row
-        # group, never the whole task partition (a multi-GB partition
-        # must not be buffered as a single Table before writing)
-        writer = None
-        out = None
-        buf: list = []
-        buffered = 0
+        # STREAM batches into row groups of row_group_rows rows (then
+        # the remainder) — memory is bounded by one row group, never
+        # the whole task partition
+        writer = out = None
         try:
-            for b in iterator:
-                if b.num_rows == 0:
-                    continue
+            for tbl in container_chunks(iterator, self.row_group_rows):
                 if writer is None:
                     out = fs.open_write(self._full(staged))
-                    writer = ParquetWriter(out, b.schema,
+                    writer = ParquetWriter(out, tbl.schema,
                                            compression=self.compression)
-                # slice incoming batches so row groups honor
-                # row_group_rows even when Spark hands one huge batch
-                while buffered + b.num_rows >= self.row_group_rows:
-                    take = self.row_group_rows - buffered
-                    buf.append(b.slice(0, take))
-                    writer.write_row_group(pa.Table.from_batches(buf))
-                    buf, buffered = [], 0
-                    b = b.slice(take)
-                if b.num_rows:
-                    buf.append(b)
-                    buffered += b.num_rows
+                writer.write_row_group(tbl)
             if writer is None:
                 return _Committed(())  # empty partition: no file
-            if buf:
-                writer.write_row_group(pa.Table.from_batches(buf))
             writer.close()
             out.close()
         except BaseException:

@@ -9,12 +9,17 @@ DataFrame reader/writer API instead of engine-specific helpers:
     spark.read.format("fpsc").load("/data/cache")
 
 File-level filter pushdown (footer min/max stats) requires
-``spark.sql.python.filterPushdown.enabled=true``.
+``spark.sql.python.filterPushdown.enabled=true``.  As with the fps
+source, run concurrent filtered queries on one ``load()`` each: Spark
+keeps one mutable read plan per Python data source relation, so
+queries planned at the same time on a shared DataFrame can swap their
+pruned partitions.
 
 Read side: one input partition per ``.fpsc`` file, each worker inflates
 its container with the vectorized decoders and yields Arrow record
-batches (zero row-at-a-time Python).  Schema comes from the first
-container's footer.
+batches (zero row-at-a-time Python).  Listing and schema come from
+``fpsc_job.fpsc_files`` (the first container's footer), as in
+``read_fpsc``.
 
 Write side: an Arrow writer — each task streams its batches into
 containers of ~``rows_per_container`` rows (bounded memory, FSST table
@@ -34,14 +39,9 @@ from typing import Iterator
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-from fastparquet_spark.sources.fps_source import StagedWriter, _Committed
-
-
-def _list_fpsc(path: str) -> list[str]:
-    from fastparquet_spark.io import get_fs
-
-    fs = get_fs(path)
-    return [p for p in fs.walk_files(path) if p.endswith(".fpsc")]
+from fastparquet_spark.sources.fps_source import (
+    StagedWriter, _Committed, _pushed_clause,
+)
 
 
 class FpscDataSource(DataSource):
@@ -50,20 +50,9 @@ class FpscDataSource(DataSource):
         return "fpsc"
 
     def schema(self):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import from_arrow_schema
+        from fastparquet_spark.engine.fpsc_job import fpsc_files
 
-        from fastparquet_spark.format.container import (
-            _type_from_name, read_container_footer,
-        )
-
-        files = _list_fpsc(self.options["path"])
-        if not files:
-            raise ValueError(f"no .fpsc files under {self.options['path']}")
-        meta = read_container_footer(files[0])  # footer tail only
-        return from_arrow_schema(pa.schema(
-            [(cm["name"], _type_from_name(cm["arrow_type"]))
-             for cm in meta["columns"]]))
+        return fpsc_files(self.options["path"])[1]
 
     def reader(self, schema: StructType):
         return FpscReader(self.options["path"])
@@ -89,23 +78,13 @@ class FpscReader(DataSourceReader):
         container footers' min/max stats.  Everything is returned as
         unsupported — pruning here is conservative (whole files that
         cannot match), Spark still applies the exact row predicate."""
-        from pyspark.sql.datasource import (
-            EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull,
-            IsNull, LessThan, LessThanOrEqual,
-        )
-
-        ops = {EqualTo: "==", GreaterThan: ">", GreaterThanOrEqual: ">=",
-               LessThan: "<", LessThanOrEqual: "<=", In: "in",
-               IsNull: "is_null", IsNotNull: "is_not_null"}
-        for f in filters:
-            op = ops.get(type(f))
-            if op is not None and len(f.attribute) == 1:
-                self._clauses.append(
-                    (f.attribute[0], op, getattr(f, "value", None)))
-        return filters  # Spark keeps responsibility for exactness
+        self._clauses += _pushed_clause(filters)
+        return filters
 
     def partitions(self):
-        files = _list_fpsc(self.path)
+        from fastparquet_spark.engine.fpsc_job import fpsc_files
+
+        files = fpsc_files(self.path, probe=False)[0]
         if not self._clauses:
             return [InputPartition(p) for p in files]
         from concurrent.futures import ThreadPoolExecutor

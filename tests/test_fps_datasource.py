@@ -223,8 +223,9 @@ def test_matchall_fast_path_uses_arrow_reader(tmp_path):
     with mock.patch.object(scan_job, "pa", pa), \
          mock.patch("fastparquet_spark.format.dataset.read_pages",
                     side_effect=AssertionError("page reader on match-all")):
-        tbl = scan_job.scan_unit(p, [0, 1], {}, [], None, [[]],
-                                 ["k", "s"], [], [], schema, exact=False)
+        tbl = pa.Table.from_batches(list(scan_job.scan_unit(
+            p, [0, 1], {}, [], None, [[]], ["k", "s"], [], [], schema,
+            exact=False)), schema=schema)
     assert tbl.column("k").to_pylist() == list(range(100))
 
     # filtered: read_pages IS the path
@@ -234,8 +235,9 @@ def test_matchall_fast_path_uses_arrow_reader(tmp_path):
         called["yes"] = True
         return t.select(columns)
     with mock.patch("fastparquet_spark.format.dataset.read_pages", spy):
-        scan_job.scan_unit(p, [0, 1], {}, [], None, [[("k", ">=", 10)]],
-                           ["k", "s"], [], [], schema, exact=False)
+        list(scan_job.scan_unit(p, [0, 1], {}, [], None,
+                                [[("k", ">=", 10)]], ["k", "s"], [], [],
+                                schema, exact=False))
     assert called.get("yes")
 
 
@@ -260,3 +262,41 @@ def test_full_scan_fast_path_with_hive_and_evolution(registered, spark,
     import pandas as pd
 
     pd.testing.assert_frame_equal(got, ref)
+
+
+def test_concurrent_lookups_one_load_per_query(registered, tmp_path):
+    """Concurrent bloom-pruned lookups, each on its OWN ``load()``, return
+    DuckDB's row sets.  One load() per concurrent query is the documented
+    rule: Spark keeps one mutable read plan per Python data source
+    relation, so queries planned concurrently on one shared DataFrame
+    can be handed each other's pruned partitions."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    spark = registered
+    d = tmp_path / "paths"
+    d.mkdir()
+    for i in range(4):
+        n = 2_000
+        write_file(str(d / f"part-{i}.parquet"),
+                   pa.table({"id": pa.array(range(i * n, (i + 1) * n)),
+                             "path": pa.array([f"f{i}/p{j % 50}.py"
+                                               for j in range(n)])}),
+                   row_group_rows=500, bloom_filters={"path": 0.01})
+    wanted = [f"f{i % 4}/p{(7 * i) % 50}.py" for i in range(8)]
+    con = duckdb.connect()
+    expected = {v: set(con.execute(
+        f"select id, path from read_parquet('{d}/*.parquet') "
+        f"where path = ?", [v]).fetchall()) for v in wanted}
+    assert all(expected.values())
+
+    def lookup(v):
+        df = spark.read.format("fps").load(str(d))
+        return {(r.id, r.path) for r in
+                df.filter(F.col("path") == v).select("id", "path").collect()}
+
+    with ThreadPoolExecutor(8) as ex:
+        got = dict(zip(wanted, ex.map(lookup, wanted)))
+    assert got == expected

@@ -1,0 +1,130 @@
+"""The one scan planner, ``engine.scan_job.plan_scan``, without Spark:
+the driver plan that paged_read and the 'fps' data source both run
+(union schema, projection, partition typing, pruned units), and the
+executor-side ``scan_unit`` that consumes its units."""
+
+from __future__ import annotations
+
+import pyarrow as pa
+import pytest
+
+from fastparquet_spark.engine.scan_job import plan_scan, scan_unit
+from fastparquet_spark.format.dataset import (
+    filter_row_groups, load_dataset_metas,
+)
+from fastparquet_spark.format.writer import write_file
+
+OLD_FILE = "k=abc/part-0.parquet"
+NEW_FILE = "k=3/part-0.parquet"
+
+
+@pytest.fixture()
+def hive(tmp_path):
+    """Two hive partitions, k=abc and k=3, so k resolves to string; the
+    newer k=3 file adds the ``extra`` column.  ``s`` carries a bloom
+    filter and both files span the same s range (even values in one,
+    odd in the other), so only the bloom can tell them apart."""
+    root = tmp_path / "hive"
+    for rel, parity, extra in ((OLD_FILE, 0, False), (NEW_FILE, 1, True)):
+        (root / rel).parent.mkdir(parents=True)
+        ids = list(range(parity, 200, 2))
+        cols = {"id": pa.array(ids, pa.int64()),
+                "s": pa.array([f"s{i:03d}" for i in ids])}
+        if extra:
+            cols["extra"] = pa.array([i / 2 for i in ids])
+        write_file(str(root / rel), pa.table(cols), row_group_rows=50,
+                   bloom_filters={"s": 0.01})
+    return load_dataset_metas(str(root))
+
+
+def _units(units):
+    root_free = {}
+    for path, ris, pvals, absent, fallback in units:
+        rel = path.split("/hive/", 1)[1]
+        root_free[rel] = (ris, pvals, absent, fallback)
+    return root_free
+
+
+def test_full_plan_schema_order_and_units(hive):
+    root, metas = hive
+    schema, file_cols, drop_cols, part_cols, units = plan_scan(
+        root, metas, None, None)
+    # file columns (union, first-seen order), then partition columns
+    assert schema.names == ["id", "s", "extra", "k"]
+    assert schema.field("extra").type == pa.float64()
+    assert schema.field("k").type == pa.string()  # mixed spellings
+    assert (file_cols, drop_cols, part_cols) == (["id", "s", "extra"], [],
+                                                 ["k"])
+    assert all(u[0].startswith(root.rstrip("/") + "/") for u in units)
+    got = _units(units)
+    assert list(got) == sorted(got)  # one unit per file, in file order
+    # no filter: every row group survives
+    assert got[OLD_FILE] == ([0, 1], {"k": "abc"}, ["extra"], "")
+    # the int-spelled partition value is stringified to the column type
+    assert got[NEW_FILE] == ([0, 1], {"k": "3"}, [], "")
+    assert isinstance(got[NEW_FILE][1]["k"], str)
+
+
+def test_partition_only_projection_decodes_one_dropped_column(hive):
+    root, metas = hive
+    schema, file_cols, drop_cols, part_cols, _units_ = plan_scan(
+        root, metas, None, ["k"])
+    assert schema.names == ["k"]
+    assert (file_cols, drop_cols, part_cols) == (["id"], ["id"], ["k"])
+
+
+def test_absent_column_falls_back_to_a_present_one(hive):
+    root, metas = hive
+    schema, file_cols, drop_cols, _parts, units = plan_scan(
+        root, metas, None, ["extra"])
+    assert schema.names == ["extra"] and drop_cols == []
+    got = _units(units)
+    # the older file predates ``extra``: it reads as nulls, and ``id``
+    # (first present union column) carries the row count
+    assert got[OLD_FILE][2:] == (["extra"], "id")
+    assert got[NEW_FILE][2:] == ([], "")
+
+
+def test_bloom_and_stats_filters_drop_units(hive):
+    root, metas = hive
+    clause = [("s", "==", "s050")]  # even: only in the k=abc file
+    # stats alone keep both files (same min/max) ...
+    by_stats = {f for f, _ri in filter_row_groups(root, [clause],
+                                                  metas=metas,
+                                                  use_bloom=False)}
+    assert by_stats == {OLD_FILE, NEW_FILE}
+    # ... the bloom probe drops the k=3 file's unit
+    *_, units = plan_scan(root, metas, [clause], None)
+    assert list(_units(units)) == [OLD_FILE]
+    assert _units(units)[OLD_FILE][0] == [0]  # row group 1 starts at s100
+    # a stats-only miss drops every unit
+    *_, units = plan_scan(root, metas, [[("id", ">", 10_000)]], None)
+    assert units == []
+
+
+def test_units_scan_to_the_planned_rows(hive):
+    """Feeding every planned unit through scan_unit reproduces the
+    dataset in the planned schema: typed nulls for the evolved column,
+    partition constants of the resolved type."""
+    root, metas = hive
+    schema, file_cols, drop_cols, part_cols, units = plan_scan(
+        root, metas, None, None)
+    batches = [b for path, ris, pvals, absent, fallback in units
+               for b in scan_unit(path, ris, pvals, absent, fallback, [[]],
+                                  file_cols, drop_cols, part_cols, schema,
+                                  exact=True)]
+    got = pa.Table.from_batches(batches, schema=schema).sort_by("id")
+    assert got.column("id").to_pylist() == list(range(200))
+    assert got.column("k").to_pylist() == ["abc", "3"] * 100
+    assert got.column("extra").to_pylist() == [
+        None if i % 2 == 0 else i / 2 for i in range(200)]
+
+    # a selective clause goes through the page reader, exact rows only
+    schema, file_cols, drop_cols, part_cols, units = plan_scan(
+        root, metas, [[("s", "==", "s051")]], ["id", "k"])
+    rows = [r for path, ris, pvals, absent, fallback in units
+            for b in scan_unit(path, ris, pvals, absent, fallback,
+                               [[("s", "==", "s051")]], file_cols,
+                               drop_cols, part_cols, schema, exact=True)
+            for r in b.to_pylist()]
+    assert rows == [{"id": 51, "k": "3"}]

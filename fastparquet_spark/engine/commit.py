@@ -2,7 +2,10 @@
 output becomes visible.  Every writer follows it — the split and
 shuffle encode jobs (``TaskCommit`` on the executors, ``begin_job`` on
 the driver) and both DataSource writers (``publish_job`` /
-``abort_job`` on the driver):
+``abort_job`` on the driver).  The files themselves come from one
+writer, engine/write.py: ``write_partition`` (or, for the split jobs'
+one file per task, a format plug-in directly) writes each file to the
+path ``TaskCommit.stage`` or the DataSource's ``stage_name`` gives it:
 
 1. **stage** — a task attempt writes each output under
    ``.{final}.stage-{attempt}``: dot-hidden, so Spark/Hive listers
@@ -149,12 +152,14 @@ class TaskCommit:
         self.pending.append((staged, final))
         return staged
 
-    def commit(self, manifest) -> None:
-        """Publish every staged file, sweep, then write ``manifest``."""
+    def commit(self, rows: list) -> None:
+        """Publish every staged file, sweep, then write the manifest:
+        ``rows[0]`` alone for a one-file task (the round-1 dict shape),
+        else the list."""
         publish(self.fs, self.pending)
         sweep(self.fs, [f for _s, f in self.pending], self.family)
         with self.fs.open_write(self.manifest_tmp) as fh:
-            fh.write(json.dumps(manifest).encode())
+            fh.write(json.dumps(rows[0] if len(rows) == 1 else rows).encode())
         self.fs.replace(self.manifest_tmp, self.manifest)
 
     def abort(self) -> None:

@@ -8,11 +8,12 @@ Spark translation of the reference's ``write()`` pipeline
   slicing: explicit ``repartition`` on the partition columns plus a
   SALT column so one mega-repo (Zipf head) cannot overload a single
   task — salt counts derive from a cheap broadcast-joined groupBy;
-- each executor task runs the codec kernels over Arrow batches inside
-  ``mapInArrow`` (no per-row Python) and writes ONE deterministic
-  output file ``part-{pid:05d}.parquet`` (the reference writes
-  uuid+time names, fastparquet/writer.py:1002 — we must not, or resume
-  breaks);
+- each executor task streams its Arrow batches inside ``mapInArrow``
+  (no per-row Python) through engine/write.py's ``write_partition``
+  into deterministic ``part-{pid:05d}.parquet`` files, one per task or
+  per hive key (fpsc_job runs the same task body with the fpsc
+  plug-in).  The reference writes uuid+time names
+  (fastparquet/writer.py:1002) — we must not, or resume breaks;
 - each task also writes a JSON lineage manifest (input rows, bytes
   in/out, per-column codec chosen, encode seconds) to
   ``_manifests/part-{pid:05d}.json`` — the Iceberg-snapshot stand-in.
@@ -33,7 +34,6 @@ Iceberg-shaped.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 from collections.abc import Iterator
@@ -42,48 +42,9 @@ import pyarrow as pa
 
 # MANIFEST_DIR is re-exported: scripts and tests import it from here
 from fastparquet_spark.engine.commit import MANIFEST_DIR, _u_join, begin_job  # noqa: F401
-
-_MAX_BUFFER_BYTES = 512 << 20  # byte cap on buffered rows per output file
-
-MANIFEST_SCHEMA_JSON = {
-    "partition": "int", "file": "string", "rows": "long",
-    "input_bytes": "long", "output_bytes": "long", "encode_secs": "double",
-    "skipped": "boolean", "columns": "string",  # json {name: encoding}
-    "kernel_secs": "double",
-}
-
-
-def _manifest_struct():
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, IntegerType, LongType, StringType,
-        StructField, StructType,
-    )
-    return StructType([
-        StructField("partition", IntegerType()),
-        StructField("file", StringType()),
-        StructField("rows", LongType()),
-        StructField("input_bytes", LongType()),
-        StructField("output_bytes", LongType()),
-        StructField("encode_secs", DoubleType()),
-        StructField("kernel_secs", DoubleType()),
-        StructField("skipped", BooleanType()),
-        StructField("columns", StringType()),
-    ])
-
-
-def _arrow_manifest_batch(row: dict) -> pa.RecordBatch:
-    return pa.record_batch({
-        "partition": pa.array([row["partition"]], pa.int32()),
-        "file": pa.array([row["file"]]),
-        "rows": pa.array([row["rows"]], pa.int64()),
-        "input_bytes": pa.array([row["input_bytes"]], pa.int64()),
-        "output_bytes": pa.array([row["output_bytes"]], pa.int64()),
-        "encode_secs": pa.array([row["encode_secs"]], pa.float64()),
-        "kernel_secs": pa.array([row.get("kernel_secs", 0.0)], pa.float64()),
-        "skipped": pa.array([row["skipped"]], pa.bool_()),
-        "columns": pa.array([row["columns"]]),
-    })
-
+from fastparquet_spark.engine.write import (
+    ParquetFormat, _arrow_manifest_batch, _manifest_struct, write_partition,
+)
 
 # payload-ish columns are excluded from the salt hash: hashing the full
 # content column would touch every byte of a 100 TB table just to pick a
@@ -147,19 +108,6 @@ def _salted(df, partition_cols, salt_rows: int, num_partitions: int):
     return df.repartition(num_partitions, *cols, F.col("__salt")).drop("__salt")
 
 
-def _hive_dir(pcols: list[str], key: tuple) -> str:
-    """``key=value`` path segment per partition column (the reference's
-    partition layout, fastparquet/writer.py:969-1047), values URL-escaped
-    the way Spark/Hive escape them; None -> the Hive default marker."""
-    from urllib.parse import quote
-
-    parts = []
-    for c, v in zip(pcols, key):
-        sv = "__HIVE_DEFAULT_PARTITION__" if v is None else quote(str(v), safe="")
-        parts.append(f"{c}={sv}")
-    return "/".join(parts)
-
-
 def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
                    partition_cols=("repo", "lang"), num_partitions: int | None = None,
                    salt_rows: int = 250_000, sort_within: tuple = ("repo", "path"),
@@ -207,193 +155,59 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
     if sort_cols:
         work = work.sortWithinPartitions(*sort_cols)
 
-    schema = _manifest_struct()
-    compression_ = compression
-    encodings_ = encodings
-    bloom_ = bloom_filters
-    page_rows_ = page_rows
-    compat_ = compat
-    sort_cols_ = tuple(sort_cols)  # stamped as footer SortingColumn metadata
-    row_group_rows_ = row_group_rows
-    out_dir_ = out_dir
-    resume_ = resume
-    layout_ = layout
-    pcols_ = pcols
-    file_prefix_ = file_prefix
+    fmt = ParquetFormat(compression=compression, encodings=encodings,
+                        bloom_filters=bloom_filters, page_rows=page_rows,
+                        compat=compat,
+                        # stamped as footer SortingColumn metadata
+                        sorting_columns=list(sort_cols))
+    return _encode_shuffled(work, out_dir, fmt, file_prefix=file_prefix,
+                            chunk_rows=row_group_rows, resume=resume,
+                            hive_cols=pcols if layout == "hive" else ())
 
-    def encode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+
+def _encode_shuffled(work, out_dir: str, fmt, *, file_prefix: str,
+                     chunk_rows: int, resume: bool, hive_cols=()):
+    """The task body both shuffle encoders share: task ``pid`` streams
+    its rows through ``write_partition`` as family
+    ``{file_prefix}-{pid:05d}`` and commits the files with one manifest
+    (engine/commit.py).  A committed task is skipped on resume; an
+    empty one commits nothing.  Returns the manifest DataFrame."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow as pa_w
         from pyspark import TaskContext
 
         from fastparquet_spark.engine.commit import TaskCommit
-        from fastparquet_spark.format.writer import ParquetWriter
         from fastparquet_spark.io import get_fs
 
         pa_w.set_cpu_count(1)  # see file_job.run: avoid pool oversubscription
-
-        fs = get_fs(out_dir_)  # same seam as the driver: URIs work end to end
+        fs = get_fs(out_dir)  # same seam as the driver: URIs work end to end
         ctx = TaskContext.get()
         pid = ctx.partitionId()
-        family = f"{file_prefix_}-{pid:05d}"
-        fname = f"{family}.parquet"
-        task = TaskCommit(fs, out_dir_, family, ctx.taskAttemptId())
-        prev = task.committed_rows() if resume_ else None
-        if prev is not None:  # checkpoint hit: partition already committed
-            for row in prev:
-                yield _arrow_manifest_batch(row)
-            return
-
-        t0 = time.perf_counter()
-        kernel_secs = 0.0
-
-        class _Out:
-            """One in-progress output file (lazy-opened on first rows)."""
-
-            def __init__(self, rel: str, schema_: pa.Schema):
-                self.rel = rel
-                final = _u_join(out_dir_, rel)
-                if "/" in rel:
-                    fs.makedirs(final.rsplit("/", 1)[0])
-                self.sink = fs.open_write(task.stage(final))
-                self.writer = ParquetWriter(self.sink, schema_,
-                                            compression=compression_,
-                                            encodings=encodings_,
-                                            bloom_filters=bloom_,
-                                            page_rows=page_rows_,
-                                            compat=compat_,
-                                            sorting_columns=list(sort_cols_))
-                self.buf: list[pa.Table] = []
-                self.buf_rows = 0
-                self.buf_bytes = 0
-                self.rows = 0
-                self.in_bytes = 0
-
-            def add(self, tbl: pa.Table):
-                self.buf.append(tbl)
-                self.buf_rows += tbl.num_rows
-                self.buf_bytes += tbl.nbytes
-                self.rows += tbl.num_rows
-                self.in_bytes += tbl.nbytes
-                if self.buf_rows >= row_group_rows_:
-                    self.flush()
-                elif self.buf_bytes >= _MAX_BUFFER_BYTES:
-                    # fat rows: bytes cap the buffer before the row cap
-                    # does — emit a short row group rather than grow
-                    self.flush(final=True)
-
-            def flush(self, final: bool = False):
-                nonlocal kernel_secs
-                if not self.buf_rows:
-                    return
-                tbl = pa.concat_tables(self.buf)
-                n = tbl.num_rows
-                # emit only FULL row groups; the remainder stays buffered so
-                # steady-state groups are uniformly row_group_rows wide
-                end = n if final else (n // row_group_rows_) * row_group_rows_
-                k0 = time.perf_counter()
-                for start in range(0, end, row_group_rows_):
-                    self.writer.write_row_group(tbl.slice(start, row_group_rows_))
-                kernel_secs += time.perf_counter() - k0
-                if end < n:
-                    self.buf, self.buf_rows = [tbl.slice(end)], n - end
-                    self.buf_bytes = self.buf[0].nbytes
-                else:
-                    self.buf, self.buf_rows, self.buf_bytes = [], 0, 0
-
-            def finish(self) -> dict:
-                # close the sink but do NOT publish: all of this task's
-                # files publish together at task commit
-                self.flush(final=True)
-                res = self.writer.close()
-                self.sink.close()
-                cols = {c.name: c.encoding for c in res.columns}
-                return {"partition": pid, "file": self.rel, "rows": self.rows,
-                        "input_bytes": self.in_bytes,
-                        "output_bytes": res.file_bytes,
-                        "encode_secs": 0.0, "kernel_secs": 0.0,
-                        "skipped": False, "columns": json.dumps(cols)}
-
-        outs: dict[tuple, _Out] = {}
-        done_rows: list[dict] = []
-        seqs: dict[tuple, int] = {}  # files already closed per key
-        try:
-            for b in batches:
-                tbl = pa.Table.from_batches([b])
-                if layout_ == "flat":
-                    out = outs.get(())
-                    if out is None:
-                        out = outs[()] = _Out(fname, tbl.schema)
-                    out.add(tbl)
-                    continue
-                # hive: split the batch by partition-key combination
-                # (vectorized: distinct combos via Arrow group_by, then one
-                # boolean-mask take per combo — combos per task are few by
-                # construction, the repartition clusters them)
-                import pyarrow.compute as pc
-
-                combos = tbl.select(pcols_).group_by(pcols_).aggregate([])
-                data_schema = pa.schema(
-                    [f for f in tbl.schema if f.name not in pcols_])
-                batch_keys = set()
-                for combo in combos.to_pylist():
-                    mask = None
-                    for c in pcols_:
-                        col = tbl.column(c)
-                        if combo[c] is None:
-                            m = pc.is_null(col)
-                        elif isinstance(combo[c], float) and \
-                                combo[c] != combo[c]:
-                            # NaN combo: NaN != NaN, plain equality
-                            # silently dropped every NaN row
-                            m = pc.is_nan(col)
-                        else:
-                            m = pc.equal(col, combo[c])
-                        mask = m if mask is None else pc.and_kleene(mask, m)
-                    part = tbl.filter(mask).drop_columns(pcols_)
-                    key = tuple(combo[c] for c in pcols_)
-                    batch_keys.add(key)
-                    out = outs.get(key)
-                    if out is None:
-                        # reopened keys (possible only if the sort order
-                        # didn't cluster them) get a sequence suffix so
-                        # the earlier published file is never clobbered
-                        seq = seqs.get(key, 0)
-                        base = fname if seq == 0 else \
-                            f"{family}-r{seq}.parquet"
-                        rel = f"{_hive_dir(pcols_, key)}/{base}"
-                        out = outs[key] = _Out(rel, data_schema)
-                    out.add(part)
-                # eager close: the sort clusters keys, so a writer whose
-                # key is absent from this batch will never see rows again
-                # — closing it bounds open files at keys-per-batch, not
-                # distinct keys per task
-                for key in [k for k in outs if k not in batch_keys]:
-                    seqs[key] = seqs.get(key, 0) + 1
-                    done_rows.append(outs.pop(key).finish())
-            if not outs and not done_rows:
-                return  # empty partition: nothing to commit
-            for out in outs.values():
-                done_rows.append(out.finish())
-            total_secs = time.perf_counter() - t0
-            for row in done_rows:
-                row["encode_secs"] = total_secs
-                row["kernel_secs"] = kernel_secs
-            # batch boundaries after a shuffle are not deterministic, so
-            # a dead attempt's -rN split may not be reproduced: the
-            # commit's sweep removes it
-            task.commit(done_rows[0] if (layout_ == "flat" and len(done_rows) == 1)
-                        else done_rows)
-            for row in done_rows:
-                yield _arrow_manifest_batch(row)
-        except BaseException:
+        task = TaskCommit(fs, out_dir, f"{file_prefix}-{pid:05d}",
+                          ctx.taskAttemptId())
+        prev = task.committed_rows() if resume else None
+        if prev is None:
+            t0 = time.perf_counter()
             try:
-                for out in outs.values():
-                    out.sink.close()
-            finally:
+                files = write_partition(batches, fmt, task.stage, fs, out_dir,
+                                        task.family, chunk_rows=chunk_rows,
+                                        hive_cols=hive_cols)
+                secs = time.perf_counter() - t0
+                prev = [{"partition": pid, **f, "encode_secs": secs,
+                         "skipped": False} for f in files]
+                # batch boundaries after a shuffle are not deterministic,
+                # so a dead attempt's -rN split may not be reproduced:
+                # the commit's sweep removes it
+                if prev:
+                    task.commit(prev)
+            except BaseException:
                 task.abort()
-            raise
+                raise
+        for row in prev:
+            yield _arrow_manifest_batch(row)
 
-    return work.mapInArrow(encode_partition, schema)
+    return work.mapInArrow(run, _manifest_struct())
 
 
 def append_dataset(spark, df, out_dir: str, **kwargs):

@@ -21,9 +21,10 @@ the task closure.  No Python RDD carries the table, so each task starts
 exactly one Python worker, the one that encodes its split.
 
 Both formats run one task body (``_encode_splits``) with a format
-plug-in.  Each split is one commit of engine/commit.py's protocol:
-deterministic split ids, one staged part file + one JSON manifest per
-split, manifest rename = commit, resume skips committed splits.
+plug-in of engine/write.py, the plug-ins every writer uses.  Each split
+is one commit of engine/commit.py's protocol: deterministic split ids,
+one staged part file + one JSON manifest per split, manifest rename =
+commit, resume skips committed splits.
 """
 
 from __future__ import annotations
@@ -35,11 +36,10 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from fastparquet_spark.engine.commit import TaskCommit, _u_join, begin_job
-from fastparquet_spark.engine.encode_job import (
-    _arrow_manifest_batch,
-    _manifest_struct,
-)
 from fastparquet_spark.engine.tasks import map_tasks
+from fastparquet_spark.engine.write import (
+    FpscFormat, ParquetFormat, _arrow_manifest_batch, _manifest_struct,
+)
 
 
 def _prepare_split_job(spark, input_dir: str, out_dir: str,
@@ -111,12 +111,11 @@ def plan_splits(input_dir: str, rows_per_task: int = 2_000_000,
 
 
 def _encode_splits(spark, splits, input_dir: str, out_dir: str, columns,
-                   resume: bool, preserve_layout: bool, suffix: str, write):
+                   resume: bool, preserve_layout: bool, fmt):
     """The split-encode task body both formats share, one split per
-    task.  ``suffix`` and ``write(sink, table) -> ({column: codec},
-    bytes)`` are the format plug-in; each split reads its row groups
-    with pyarrow, stages one ``part-{split}{suffix}`` file and commits
-    it with its manifest."""
+    task: each split reads its row groups with pyarrow, writes them as
+    one ``part-{split}{fmt.suffix}`` file of the format plug-in
+    (engine/write.py) and commits it with its manifest."""
     columns = list(columns) if columns else None
     prefix = input_dir.rstrip("/") + "/"
 
@@ -140,7 +139,7 @@ def _encode_splits(spark, splits, input_dir: str, out_dir: str, columns,
                                             b.column("file").to_pylist(),
                                             b.column("rgs").to_pylist()):
                 family = f"part-{sid:05d}"
-                fname = family + suffix
+                fname = family + fmt.suffix
                 rel = fpath[len(prefix):]
                 if preserve_layout and fpath.startswith(prefix) and "/" in rel:
                     rel_dir = rel.rsplit("/", 1)[0]
@@ -157,13 +156,15 @@ def _encode_splits(spark, splits, input_dir: str, out_dir: str, columns,
                 k0 = time.perf_counter()
                 try:
                     with fs.open_write(task.stage(_u_join(out_dir, fname))) as sink:
-                        cols, nbytes = write(sink, tbl)
+                        write, close = fmt.open(sink, tbl.schema)
+                        write(tbl)
+                        cols, nbytes = close()
                     done = time.perf_counter()
                     row = {"partition": sid, "file": fname, "rows": tbl.num_rows,
                            "input_bytes": tbl.nbytes, "output_bytes": nbytes,
                            "encode_secs": done - t0, "kernel_secs": done - k0,
                            "skipped": False, "columns": json.dumps(cols)}
-                    task.commit(row)
+                    task.commit([row])
                 except BaseException:
                     task.abort()
                     raise
@@ -200,16 +201,11 @@ def encode_files(spark, input_dir: str, out_dir: str, *,
     if not splits:
         return spark.createDataFrame([], _manifest_struct())
 
-    def write(sink, tbl):
-        from fastparquet_spark.format.writer import write_file
-
-        res = write_file(sink, tbl, compression=compression,
-                         encodings=encodings, bloom_filters=bloom_filters,
-                         page_rows=page_rows, compat=compat)
-        return {c.name: c.encoding for c in res.columns}, res.file_bytes
-
+    fmt = ParquetFormat(compression=compression, encodings=encodings,
+                        bloom_filters=bloom_filters, page_rows=page_rows,
+                        compat=compat)
     return _encode_splits(spark, splits, input_dir, out_dir, columns, resume,
-                          preserve_layout, ".parquet", write)
+                          preserve_layout, fmt)
 
 
 def encode_files_fpsc(spark, input_dir: str, out_dir: str, *,
@@ -222,45 +218,25 @@ def encode_files_fpsc(spark, input_dir: str, out_dir: str, *,
     moves not data), same manifest/resume contract, but each worker
     writes an ``.fpsc`` container (FSST-enabled best-of codecs) instead
     of parquet.  FSST symbol tables are trained ONCE on the driver from
-    a small pyarrow sample and shipped through the closure, so tasks
-    never pay the training cost (fpsc_job.encode_dataset_fpsc has the
-    same option for the shuffle path)."""
+    a small pyarrow sample (``FpscFormat.trained``, as in
+    fpsc_job.encode_dataset_fpsc) and shipped through the closure, so
+    tasks never pay the training cost; ``pretrain_rows=0`` leaves the
+    training to each task."""
     splits = _prepare_split_job(spark, input_dir, out_dir, rows_per_task,
                                 resume)
     if not splits:
         return spark.createDataFrame([], _manifest_struct())
 
-    pretrained: dict = {}
-    decisions: dict = {}
+    sample = None
     if pretrain_rows:
         import pyarrow.parquet as pq_d
-
-        from fastparquet_spark.format.container import decide_string_codecs
 
         # stream only ~pretrain_rows rows — read_row_group would
         # materialize up to rows_per_task rows on the DRIVER just to
         # slice 2000
         first = pq_d.ParquetFile(splits[0]["file"])
-        batch = next(first.iter_batches(batch_size=pretrain_rows,
-                                        columns=columns,
-                                        use_threads=False))
-        head = pa.Table.from_batches([batch])
-        # one driver pass trains the FSST tables AND fixes the
-        # fsst-vs-plain choice per string column from the same sample,
-        # so tasks run only the winning codec (no per-task dual trial)
-        decisions = decide_string_codecs(head, pretrained,
-                                         compression=compression)
-
-    def write(sink, tbl):
-        from fastparquet_spark.format.container import write_container
-
-        # a copy: tables one split trains must not carry over to the
-        # next split a reused worker runs
-        blocks = write_container(sink, tbl, compression=compression,
-                                 fsst_cache=dict(pretrained),
-                                 bloom_filters=bloom_filters,
-                                 codec_decisions=decisions)
-        return {c.name: c.codec for c in blocks}, sink.tell()
-
+        sample = pa.Table.from_batches([next(first.iter_batches(
+            batch_size=pretrain_rows, columns=columns, use_threads=False))])
+    fmt = FpscFormat.trained(sample, compression, bloom_filters)
     return _encode_splits(spark, splits, input_dir, out_dir, columns, resume,
-                          False, ".fpsc", write)
+                          False, fmt)

@@ -41,13 +41,15 @@ The Python Data Source API has no column-pruning hook yet; pass
 to end, partition columns appended last (Spark's convention).
 
 Write side (``df.write.format("fps").save(dir)``): each task streams
-its Arrow batches through ``format.writer.ParquetWriter`` into one
-staged ``part-<job>-<pid>.parquet`` per task attempt; the driver's
-``commit`` publishes the one successful attempt per task with
-engine/commit.py's ``publish_job`` (publish first, then remove the old
-files on overwrite, then sweep this job's stages), then re-merges the
-``_metadata`` / ``_common_metadata`` sidecars so footer-only readers
-see the new files in one fetch.
+its Arrow batches through engine/write.py's ``write_partition`` with
+the ``ParquetFormat`` plug-in into one staged
+``part-<job>-<pid>.parquet`` per task attempt, row groups of
+``row_group_rows`` rows; the driver's ``commit`` publishes the one
+successful attempt per task with engine/commit.py's ``publish_job``
+(publish first, then remove the old files on overwrite, then sweep
+this job's stages), then re-merges the ``_metadata`` /
+``_common_metadata`` sidecars so footer-only readers see the new files
+in one fetch.
 """
 
 from __future__ import annotations
@@ -209,26 +211,61 @@ class _Committed(WriterCommitMessage):
 
 
 class StagedWriter(DataSourceArrowWriter):
-    """Driver half of a DataSource write, shared by the fps and fpsc
-    writers: tasks stage ``part-<job>-...`` files (engine/commit.py
-    names) and report them relative to ``path``; ``commit`` sees exactly
-    ONE message per task — the successful attempt — and publishes it
-    with ``publish_job``; ``abort`` removes this job's stages.  The job
-    token (minted once on the driver, shared by all attempts via
-    pickling) keeps distinct jobs — e.g. successive appends — from
-    colliding or sweeping each other's stages."""
+    """A DataSource write, shared by the fps and fpsc writers: tasks
+    stream their batches through ``write_partition`` with the
+    subclass's ``_format()``, stage ``part-<job>-<pid>...`` files
+    (engine/commit.py names) and report them relative to ``path`` (a
+    failed task removes its stages); ``commit`` sees exactly ONE message
+    per task — the successful attempt — and publishes it with
+    ``publish_job``; ``abort`` removes this job's stages.  The job token
+    (minted once on the driver, shared by all attempts via pickling)
+    keeps distinct jobs — e.g. successive appends — from colliding or
+    sweeping each other's stages."""
 
     suffix: str  # the data files ``overwrite`` replaces
 
-    def __init__(self, path: str, overwrite: bool):
+    def __init__(self, path: str, compression: str, chunk_rows: int,
+                 overwrite: bool):
         import uuid
 
         self.path = path
+        self.compression = compression
+        self.chunk_rows = chunk_rows
         self.overwrite = overwrite
         self.job = uuid.uuid4().hex[:8]
 
     def _full(self, rel: str) -> str:
         return self.path.rstrip("/") + "/" + rel
+
+    def write(self, iterator: Iterator) -> _Committed:
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        from fastparquet_spark.engine.commit import discard, stage_name
+        from fastparquet_spark.engine.write import write_partition
+        from fastparquet_spark.io import get_fs
+
+        pa.set_cpu_count(1)
+        fs = get_fs(self.path)
+        fs.makedirs(self.path)
+        ctx = TaskContext.get()
+        attempt = ctx.taskAttemptId()
+        staged: list[str] = []
+
+        def stage(final: str) -> str:
+            staged.append(stage_name(final, attempt))
+            return staged[-1]
+
+        try:
+            files = write_partition(
+                iterator, self._format(), stage, fs, self.path,
+                f"part-{self.job}-{ctx.partitionId():05d}",
+                chunk_rows=self.chunk_rows)
+        except BaseException:
+            discard(fs, staged)
+            raise
+        return _Committed(tuple((stage_name(f["file"], attempt), f["file"])
+                                for f in files))
 
     def commit(self, messages):
         from fastparquet_spark.engine.commit import publish_job
@@ -248,52 +285,14 @@ class StagedWriter(DataSourceArrowWriter):
 
 
 class FpsWriter(StagedWriter):
+    """Parquet files, one per task, row groups of ``chunk_rows`` rows."""
+
     suffix = ".parquet"
 
-    def __init__(self, path: str, compression: str, row_group_rows: int,
-                 overwrite: bool):
-        super().__init__(path, overwrite)
-        self.compression = compression
-        self.row_group_rows = row_group_rows
+    def _format(self):
+        from fastparquet_spark.engine.write import ParquetFormat
 
-    def write(self, iterator: Iterator) -> _Committed:
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        from fastparquet_spark.engine.commit import discard, stage_name
-        from fastparquet_spark.engine.fpsc_job import container_chunks
-        from fastparquet_spark.format.writer import ParquetWriter
-        from fastparquet_spark.io import get_fs
-
-        pa.set_cpu_count(1)
-        fs = get_fs(self.path)
-        fs.makedirs(self.path)
-        ctx = TaskContext.get()
-        final = f"part-{self.job}-{ctx.partitionId():05d}.parquet"
-        staged = stage_name(final, ctx.taskAttemptId())
-        # STREAM batches into row groups of row_group_rows rows (then
-        # the remainder) — memory is bounded by one row group, never
-        # the whole task partition
-        writer = out = None
-        try:
-            for tbl in container_chunks(iterator, self.row_group_rows):
-                if writer is None:
-                    out = fs.open_write(self._full(staged))
-                    writer = ParquetWriter(out, tbl.schema,
-                                           compression=self.compression)
-                writer.write_row_group(tbl)
-            if writer is None:
-                return _Committed(())  # empty partition: no file
-            writer.close()
-            out.close()
-        except BaseException:
-            try:
-                if out is not None:
-                    out.close()
-            finally:
-                discard(fs, [self._full(staged)])
-            raise
-        return _Committed(((staged, final),))
+        return ParquetFormat(compression=self.compression)
 
     def commit(self, messages):
         from fastparquet_spark.format.dataset import write_metadata_sidecar

@@ -21,11 +21,13 @@ batches (zero row-at-a-time Python).  Listing and schema come from
 ``fpsc_job.fpsc_files`` (the first container's footer), as in
 ``read_fpsc``.
 
-Write side: an Arrow writer — each task streams its batches into
-containers of ~``rows_per_container`` rows (bounded memory, FSST table
-trained once per column per task), staged under engine/commit.py's
-names; the driver's ``commit`` publishes them to deterministic final
-names ``part-<job>-<pid>-<k>.fpsc`` with ``publish_job`` and sweeps
+Write side: the fps source's ``StagedWriter`` with the ``FpscFormat``
+plug-in — each task streams its batches through engine/write.py's
+``write_partition`` into containers of ``rows_per_container`` rows
+(bounded memory, FSST table trained once per column per task), staged
+under engine/commit.py's names; the driver's ``commit`` publishes them
+to deterministic final names ``part-<job>-<pid>-<k>.fpsc`` with
+``publish_job`` and sweeps
 leftovers from failed/speculative attempts — so a task retry can never
 leave duplicate rows in the dataset.  ``mode("overwrite")`` removes
 the pre-existing containers after the new ones are published;
@@ -34,14 +36,10 @@ the pre-existing containers after the new ones are published;
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-from fastparquet_spark.sources.fps_source import (
-    StagedWriter, _Committed, _pushed_clause,
-)
+from fastparquet_spark.sources.fps_source import StagedWriter, _pushed_clause
 
 
 class FpscDataSource(DataSource):
@@ -131,37 +129,17 @@ class FpscReader(DataSourceReader):
 
 
 class FpscWriter(StagedWriter):
+    """FPSC containers of ``chunk_rows`` rows, FSST tables trained once
+    per column per task."""
+
     suffix = ".fpsc"
 
     def __init__(self, path: str, compression: str, rows_per_container: int,
                  overwrite: bool, bloom_filters: dict | None = None):
-        super().__init__(path, overwrite)
-        self.compression = compression
-        self.rows_per = rows_per_container
-        self.bloom = bloom_filters
+        super().__init__(path, compression, rows_per_container, overwrite)
+        self.bloom_filters = bloom_filters
 
-    def write(self, iterator: Iterator) -> _Committed:
-        import pyarrow as pa
-        from pyspark import TaskContext
+    def _format(self):
+        from fastparquet_spark.engine.write import FpscFormat
 
-        from fastparquet_spark.engine.commit import stage_name
-        from fastparquet_spark.engine.fpsc_job import container_chunks
-        from fastparquet_spark.format.container import write_container
-        from fastparquet_spark.io import get_fs
-
-        pa.set_cpu_count(1)
-        fs = get_fs(self.path)
-        fs.makedirs(self.path)
-        ctx = TaskContext.get()
-        pid, attempt = ctx.partitionId(), ctx.taskAttemptId()
-        fsst_cache: dict = {}
-        done: list[tuple[str, str]] = []
-        for tbl in container_chunks(iterator, self.rows_per):
-            final_rel = f"part-{self.job}-{pid:05d}-{len(done):03d}.fpsc"
-            staged_rel = stage_name(final_rel, attempt)
-            with fs.open_write(self._full(staged_rel)) as sink:
-                write_container(sink, tbl, compression=self.compression,
-                                fsst_cache=fsst_cache,
-                                bloom_filters=self.bloom)
-            done.append((staged_rel, final_rel))
-        return _Committed(tuple(done))
+        return FpscFormat(self.compression, bloom_filters=self.bloom_filters)

@@ -4,8 +4,10 @@
 ``FaultyFS`` fails the Nth ``open_write`` or ``replace`` of an otherwise
 plain ``LocalFS``.  Every write shape the engine has — one file per
 task (split encode), several files per task (shuffle encode, hive
-dirs) and the driver-side DataSource commit with and without overwrite
-— is run once per injectable call; after each failure and its abort:
+dirs), the real ``write_partition`` (parquet hive files, fpsc
+containers) and the driver-side DataSource commit with and without
+overwrite — is run once per injectable call; after each failure and
+its abort:
 
 - a task's final visible without its manifest is byte-identical to the
   clean run's and the retry replaces it (a failed attempt leaves its
@@ -21,11 +23,15 @@ import hashlib
 import os
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
 from fastparquet_spark.engine.commit import (
     TaskCommit, abort_job, begin_job, publish_job, stage_name,
+)
+from fastparquet_spark.engine.write import (
+    FpscFormat, ParquetFormat, write_partition,
 )
 from fastparquet_spark.io import LocalFS
 
@@ -73,15 +79,49 @@ def _task(files: dict[str, bytes], family: str):
     """One task attempt staging ``files`` (relative path -> bytes) and
     committing them with a manifest listing their names."""
 
+    def write(fs, root: str, task) -> list:
+        for rel, data in files.items():
+            final = os.path.join(root, rel)
+            os.makedirs(os.path.dirname(final), exist_ok=True)
+            with fs.open_write(task.stage(final)) as sink:
+                sink.write(data)
+        return sorted(files)
+
+    return _committed(write, family)
+
+
+def _partition(fmt, hive_cols=()):
+    """One task attempt streaming a fixed table through the real
+    ``write_partition`` into files of a fresh ``fmt()`` plug-in and
+    committing its manifest rows (timings dropped, so clean and retried
+    manifests compare equal)."""
+    tbl = pa.table({"k": pa.array(["a", "b", "a", "b", "a"] * 60),
+                    "v": pa.array(range(300))})
+    # key "b" is absent from the middle batch: its parquet file closes
+    # and reopens as -r1
+    batches = [tbl.slice(0, 100).to_batches()[0],
+               tbl.filter(pc.equal(tbl["k"], "a")).to_batches()[0],
+               tbl.slice(100).to_batches()[0]]
+
+    def write(fs, root: str, task) -> list:
+        rows = write_partition(iter(batches), fmt(), task.stage, fs, root,
+                               task.family, chunk_rows=40,
+                               hive_cols=hive_cols)
+        assert len(rows) >= 3, rows
+        return [{k: v for k, v in r.items() if k != "kernel_secs"}
+                for r in rows]
+
+    return _committed(write, "part-00002")
+
+
+def _committed(write, family: str):
+    """The engine task body around ``write(fs, root, task) -> manifest
+    rows``: commit on success, abort on any error."""
+
     def run(fs, root: str, attempt: int):
         task = TaskCommit(fs, root, family, attempt)
         try:
-            for rel, data in files.items():
-                final = os.path.join(root, rel)
-                os.makedirs(os.path.dirname(final), exist_ok=True)
-                with fs.open_write(task.stage(final)) as sink:
-                    sink.write(data)
-            task.commit(sorted(files))
+            task.commit(write(fs, root, task))
         except BaseException:
             task.abort()
             raise
@@ -139,6 +179,8 @@ CASES = {
     "multi_file_task": _MULTI,
     "publish_job": _job(overwrite=False),
     "publish_job_overwrite": _job(overwrite=True),
+    "write_partition_parquet_hive": _partition(ParquetFormat, ("k",)),
+    "write_partition_fpsc": _partition(FpscFormat),
 }
 
 

@@ -29,12 +29,20 @@ from typing import Any
 import pyarrow as pa
 
 from fastparquet_spark.format.dataset import (
-    _apply_row_filter_dnf,
     _iter_chunks,
     dataset_metadata,
+    schema_paths,
 )
 from fastparquet_spark.format.dataset import (
     filter_row_groups as _meta_filter_row_groups,
+)
+from fastparquet_spark.format.predicate import (
+    _apply_row_filter_dnf,
+    _chunk_may_match,
+    _eval_partition_term,
+    _file_clauses,
+    dnf,
+    may_match,
 )
 from fastparquet_spark.format.reader import (
     _arrow_type,
@@ -75,14 +83,6 @@ def _hive_key(v) -> str:
             else quote(str(v), safe=""))
 
 
-def _normalize_filters(filters):
-    if not filters:
-        return None
-    if isinstance(filters[0], tuple):
-        return [list(filters)]
-    return [list(c) for c in filters]
-
-
 class _SchemaHelper:
     """The reference's ``pf.schema`` convenience surface
     (fastparquet/schema.py:76-105, reproduced from its documented
@@ -94,22 +94,12 @@ class _SchemaHelper:
         self.root = schema_elements[0]
         self.schema_elements_by_name = {}
         self._by_path: dict[tuple, dict] = {}
-        # footers list elements preorder with num_children: rebuild the
-        # full path of every element so nested schemas with repeated
-        # names ('list'/'element' appear once per LIST column) resolve
-        # unambiguously; by-name keeps the FIRST occurrence
-        stack: list[list] = [[self.root.get("num_children") or 0, []]]
-        for e in schema_elements[1:]:
-            while stack and stack[-1][0] == 0:
-                stack.pop()
-            if not stack:
-                break
-            stack[-1][0] -= 1
-            path = stack[-1][1] + [e["name"]]
-            self._by_path[tuple(path)] = e
+        # full paths resolve nested schemas with repeated names
+        # ('list'/'element' appear once per LIST column) unambiguously;
+        # by-name keeps the FIRST occurrence
+        for path, e in schema_paths(schema_elements):
+            self._by_path[path] = e
             self.schema_elements_by_name.setdefault(e["name"], e)
-            if e.get("num_children"):
-                stack.append([e["num_children"], path])
 
     def schema_element(self, name):
         """Lookup by name, dotted path, or path list — the reference's
@@ -271,21 +261,16 @@ class ParquetFile:
     def count(self, filters=None, row_filter: bool = False) -> int:
         """Total rows; metadata-only unless both filters and row_filter
         are given (api.py:512-525)."""
-        filters = _normalize_filters(filters)
-        if filters and row_filter:
+        filters = dnf(filters)
+        if [] in filters:
+            return self.count_total
+        if row_filter:
             return len(self.to_pandas(
                 columns=[self.columns[0]], filters=filters,
                 row_filter=True))
-        if filters:
-            keep = self._surviving(filters)
-            total = 0
-            for m in self._metas:
-                ris = keep.get(m["file"])
-                if ris:
-                    total += sum(m["fmd"]["row_groups"][ri]["num_rows"]
-                                 for ri in ris)
-            return total
-        return self.count_total
+        keep = self._surviving(filters)
+        return sum(m["fmd"]["row_groups"][ri]["num_rows"]
+                   for m in self._metas for ri in keep.get(m["file"], ()))
 
     @property
     def statistics(self) -> dict:
@@ -384,15 +369,19 @@ class ParquetFile:
             return pa.null()
         return _arrow_type(e)
 
+    def _pvals(self, m) -> dict:
+        """A file's partition values in their column's resolved type:
+        a string-resolved column (mixed spellings, k=3 beside k=abc)
+        stringifies int-spelled values, so partition-term decisions
+        and the attached constants agree with the column (the engine
+        scan's plan_scan does the same)."""
+        return {k: str(v) if pa.types.is_string(self._ptypes[k])
+                and v is not None and not isinstance(v, str) else v
+                for k, v in (m.get("partitions") or {}).items()}
+
     def _pcol(self, k, v, n):
-        """Typed partition-constant column (string-resolved columns
-        stringify int-spelled values instead of raising
-        ArrowTypeError on concat)."""
-        t = self._ptypes.get(k)
-        if t is not None and pa.types.is_string(t) and v is not None \
-                and not isinstance(v, str):
-            v = str(v)
-        return pa.array([v] * n, type=t)
+        """Typed partition-constant column of a :meth:`_pvals` value."""
+        return pa.array([v] * n, type=self._ptypes.get(k))
 
     def _path(self, rel: str):
         if self._blob is not None:
@@ -410,20 +399,16 @@ class ParquetFile:
         return keep
 
     def _tables(self, columns, filters, row_filter):
-        filters = _normalize_filters(filters)
+        filters = dnf(filters)
         names = self.columns
         want = list(columns) if columns is not None else list(names)
         decode = list(want)
-        if filters and row_filter:
+        if row_filter:
             for clause in filters:
                 for col, _op, _v in clause:
                     if col in names and col not in decode:
                         decode.append(col)
-        keep = self._surviving(filters) if filters else None
-        from fastparquet_spark.engine.scan_job import (
-            _absent_clauses, _file_clauses,
-        )
-
+        keep = None if [] in filters else self._surviving(filters)
         for m in self._metas:
             if keep is None:
                 ris = list(range(len(m["fmd"]["row_groups"])))
@@ -438,17 +423,12 @@ class ParquetFile:
             # without this, a partition clause on an unprojected column
             # degenerates to match-all in the residual filter); terms
             # on columns this file predates read as all-null
-            fclauses = filters
-            if filters:
-                fclauses = _file_clauses(filters,
-                                         m.get("partitions") or {})
-                if absent and fclauses:
-                    fclauses = _absent_clauses(fclauses, set(absent))
-                if not fclauses:
-                    continue
+            pmap = self._pvals(m)
+            fclauses = _file_clauses(filters, pmap, absent)
+            if not fclauses:
+                continue
             file_cols = [c for c in decode
                          if c in names and c in present]
-            pmap = m.get("partitions") or {}
             if file_cols:
                 tbl = read_row_groups(self._path(m["file"]),
                                       _real_ris(m, ris),
@@ -478,7 +458,7 @@ class ParquetFile:
                 if not pcols:
                     continue
                 tbl = pa.table(pcols)
-            if filters and row_filter:
+            if row_filter:
                 tbl = _apply_row_filter_dnf(tbl, fclauses)
                 tbl = tbl.select([c for c in tbl.column_names
                                   if c in want or c not in names])
@@ -635,8 +615,8 @@ class ParquetFile:
     def iter_row_groups(self, filters=None, columns=None):
         """Yield one pandas DataFrame per surviving row group
         (api.py:321-337)."""
-        filters = _normalize_filters(filters)
-        keep = self._surviving(filters) if filters else None
+        filters = dnf(filters)
+        keep = None if [] in filters else self._surviving(filters)
         for m in self._metas:
             if keep is None:
                 ris = list(range(len(m["fmd"]["row_groups"])))
@@ -645,7 +625,7 @@ class ParquetFile:
             present = self._present[m["file"]]
             cols_here = columns if columns is None else \
                 [c for c in columns if c in present]
-            pmap = m.get("partitions") or {}
+            pmap = self._pvals(m)
             for ri in ris:
                 if columns is not None and not cols_here:
                     # projection has no column THIS file carries
@@ -700,7 +680,7 @@ class ParquetFile:
                         if c in self._elems and c not in present:
                             tbl = tbl.append_column(
                                 c, pa.nulls(nrows, self._atype(c)))
-                    for k, v in (m.get("partitions") or {}).items():
+                    for k, v in self._pvals(m).items():
                         if columns is None or k in want:
                             tbl = tbl.append_column(
                                 k, self._pcol(k, v, nrows))
@@ -1282,14 +1262,14 @@ def filter_row_groups(pf: ParquetFile, filters, as_idx: bool = False):
     global row-group positions (file order, groups in file order)
     instead of the row-group dicts.  Unknown filter columns raise, as
     the reference does."""
-    filters = _normalize_filters(filters)
+    filters = dnf(filters)
     known = set(pf.columns) | set(pf.cats)
-    bad = {c for clause in (filters or []) for c, _op, _v in clause
+    bad = {c for clause in filters for c, _op, _v in clause
            if c not in known}
     if bad:
         raise ValueError(
             f"No filter can be applied on nonexistent column(s) {bad}")
-    if not filters:
+    if [] in filters:
         rgs = pf.row_groups
         return list(range(len(rgs))) if as_idx else rgs
     keep = pf._surviving(filters)
@@ -1336,24 +1316,7 @@ def filter_val(op, val, vmin=None, vmax=None) -> bool:
     ``not in`` delegate to :func:`filter_in` / :func:`filter_not_in`.
     A ``None`` bound means the stat is unknown on that side and can
     never justify exclusion."""
-    if op == "in":
-        return filter_in(val, vmin, vmax)
-    if op == "not in":
-        return filter_not_in(val, vmin, vmax)
-    if vmax is not None:
-        if op in ("==", "=", ">=") and val > vmax:
-            return True
-        if op == ">" and val >= vmax:
-            return True
-    if vmin is not None:
-        if op in ("==", "=", "<=") and val < vmin:
-            return True
-        if op == "<" and val <= vmin:
-            return True
-    if (op == "!=" and vmax is not None and vmin is not None
-            and vmax == vmin and val == vmax):
-        return True
-    return False
+    return not may_match(op, val, vmin, vmax, None, None)
 
 
 def filter_in(values, vmin=None, vmax=None) -> bool:
@@ -1362,22 +1325,7 @@ def filter_in(values, vmin=None, vmax=None) -> bool:
     api.py:1084-1113): empty value set excludes everything; a constant
     group (vmin == vmax) excludes unless that constant is a member;
     otherwise binary-search the sorted members against the range."""
-    import bisect
-
-    values = list(values)
-    if len(values) == 0:
-        return True
-    if vmax == vmin and vmax is not None and vmax not in values:
-        return True
-    if vmin is None and vmax is None:
-        return False
-    sv = sorted(values)
-    if vmin is None:
-        return sv[0] > vmax
-    if vmax is None:
-        return sv[-1] < vmin
-    return (bisect.bisect_left(sv, vmin)
-            == bisect.bisect_right(sv, vmax))
+    return not may_match("in", values, vmin, vmax, None, None)
 
 
 def filter_not_in(values, vmin=None, vmax=None) -> bool:
@@ -1387,10 +1335,7 @@ def filter_not_in(values, vmin=None, vmax=None) -> bool:
     The reference (api.py:1116-1139) also drops groups when merely the
     min OR the max is a member, which discards surviving rows; this
     implementation keeps those groups (sound superset contract)."""
-    if len(list(values)) == 0:
-        return False
-    return (vmin is not None and vmax is not None
-            and vmin == vmax and vmin in values)
+    return not may_match("not in", values, vmin, vmax, None, None)
 
 
 def filter_out_stats(rg, filters, schema) -> bool:
@@ -1398,38 +1343,17 @@ def filter_out_stats(rg, filters, schema) -> bool:
     its column statistics and the AND-list ``filters`` of (col, op,
     val) tuples (reference api.py:761-820)?  ``schema`` is the footer
     schema element list (``fmd['schema']``) or a ``pf.schema`` helper.
-    Empty groups are always excluded; a filtered column whose chunk is
-    all-null excludes the group (no comparison can match)."""
-    from fastparquet_spark.format.dataset import _decode_stat, _leaf_elems
+    Empty groups are always excluded; an all-null chunk excludes the
+    group for every op but ``is_null`` (a null matches nothing else).
+    The stats are decoded and judged exactly as ``filter_row_groups``
+    judges them."""
+    from fastparquet_spark.format.dataset import _chunk_stats, _leaf_elems
 
     if rg["num_rows"] == 0:
         return True
-    if not filters:
-        return False
     elems = _leaf_elems(schema if isinstance(schema, list)
                         else schema.schema_elements)
-    for cc in rg["columns"]:
-        cmd = cc["meta_data"]
-        name = ".".join(cmd["path_in_schema"])
-        app = [(op, v) for c, op, v in filters if c == name]
-        if not app:
-            continue
-        st = cmd.get("statistics") or {}
-        if st.get("null_count") == cmd["num_values"]:
-            return True
-        elem = elems.get(name)
-        if elem is None:
-            continue
-        lo = _decode_stat(st.get("min_value") or st.get("min"),
-                          elem["type"], elem.get("converted_type"),
-                          elem.get("scale") or 0)
-        hi = _decode_stat(st.get("max_value") or st.get("max"),
-                          elem["type"], elem.get("converted_type"),
-                          elem.get("scale") or 0)
-        for op, val in app:
-            if filter_val(op, val, lo, hi):
-                return True
-    return False
+    return not _chunk_may_match(_chunk_stats(rg, elems), filters or [])
 
 
 def _partition_coerce(raw: str, meta=None):
@@ -1453,24 +1377,17 @@ def filter_out_cats(rg, filters, partition_meta=None) -> bool:
     value)."""
     from urllib.parse import unquote
 
-    if not filters:
-        return False
     fp = (rg.get("columns") or [{}])[0].get("file_path") or ""
     partition_meta = partition_meta or {}
+    pvals = {}
     for seg in fp.split("/"):
-        if "=" not in seg:
-            continue
-        cat, _, raw = seg.partition("=")
-        app = [(op, v) for c, op, v in filters if c == cat]
-        if not app:
-            continue
-        v = (None if raw == "__HIVE_DEFAULT_PARTITION__"
-             else _partition_coerce(unquote(raw),
-                                    partition_meta.get(cat)))
-        for op, val in app:
-            if filter_val(op, val, v, v):
-                return True
-    return False
+        if "=" in seg:
+            cat, _, raw = seg.partition("=")
+            pvals[cat] = (None if raw == "__HIVE_DEFAULT_PARTITION__"
+                          else _partition_coerce(unquote(raw),
+                                                 partition_meta.get(cat)))
+    return any(not _eval_partition_term(pvals[c], op, val)
+               for c, op, val in filters or [] if c in pvals)
 
 
 def paths_to_cats(paths, partition_meta=None):

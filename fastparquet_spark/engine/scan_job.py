@@ -26,74 +26,7 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from fastparquet_spark.engine.tasks import map_tasks
-
-
-def _eval_partition_term(v, op, val) -> bool:
-    """Evaluate one predicate term against a file's constant partition
-    value (full OPS set; exact, since the value is a scalar).
-
-    When the partition COLUMN resolved to string (mixed spellings like
-    k=3 beside k=abc) the stored value is a str while the filter value
-    may be numeric — equality-class ops compare stringified (matching
-    the column's resolved type); ordering ops against an incomparable
-    type raise loudly instead of silently dropping the file."""
-    if op == "is_null":
-        return v is None
-    if op == "is_not_null":
-        return v is not None
-    if v is None:
-        return False
-    if isinstance(v, str) and not isinstance(val, str):
-        if op in ("==", "=", "!="):
-            val = str(val)
-        elif op in ("in", "not in"):
-            val = [x if isinstance(x, str) else str(x) for x in val]
-        elif isinstance(val, (int, float)):
-            raise ValueError(
-                f"cannot order-compare numeric filter value {val!r} "
-                f"against string-typed partition value {v!r} — the "
-                f"column resolved to string (mixed value spellings); "
-                f"pass a string bound")
-    if op in ("==", "="):
-        return v == val
-    if op == "!=":
-        return v != val
-    if op == "<":
-        return v < val
-    if op == "<=":
-        return v <= val
-    if op == ">":
-        return v > val
-    if op == ">=":
-        return v >= val
-    if op == "in":
-        return v in val
-    if op == "not in":
-        return v not in val
-    raise ValueError(f"unsupported filter op {op!r}")
-
-
-def _file_clauses(clauses, pvals: dict):
-    """Per-file DNF rewrite: partition terms are decided HERE against
-    the file's constant values — a clause whose partition term fails is
-    dropped for this file, a passing term is stripped (already true for
-    every row).  Returns the residual clauses; an empty residual clause
-    means 'every row of this file matches that branch'."""
-    out = []
-    for clause in clauses:
-        keep, resid = True, []
-        for col, op, val in clause:
-            if col in pvals:
-                if not _eval_partition_term(pvals[col], op, val):
-                    keep = False
-                    break
-            else:
-                # file column or unknown — the reader keeps rows for
-                # columns it cannot find (conservative)
-                resid.append((col, op, val))
-        if keep:
-            out.append(resid)
-    return out
+from fastparquet_spark.format.predicate import _file_clauses, dnf
 
 
 def _logical_sig(lt):
@@ -153,22 +86,14 @@ def union_leaf_elems(metas):
     ``elems[n].get('num_children') is None``).  Returns
     (names_in_order, {path_or_name: schema_element},
     {file: set(top_level_names)})."""
+    from fastparquet_spark.format.dataset import schema_paths
+
     elems: dict[str, dict] = {}
     order: list[str] = []
     present: dict[str, set] = {}
     for m in metas:
         mine = set()
-        sch = m["fmd"]["schema"]
-        stack: list[list] = [[sch[0].get("num_children") or 0, []]]
-        for e in sch[1:]:
-            while stack and stack[-1][0] == 0:
-                stack.pop()
-            if not stack:
-                break
-            stack[-1][0] -= 1
-            path = stack[-1][1] + [e["name"]]
-            if e.get("num_children"):
-                stack.append([e["num_children"], path])
+        for path, e in schema_paths(m["fmd"]["schema"]):
             key = ".".join(path)
             if len(path) == 1:
                 mine.add(e["name"])
@@ -194,27 +119,6 @@ def union_leaf_elems(metas):
     return order, elems, present
 
 
-def _absent_clauses(clauses, absent):
-    """Rewrite a DNF for a file LACKING the ``absent`` columns (schema
-    evolution: an absent column reads as all-null).  SQL three-valued
-    logic on null: ``is_null`` terms are always true (stripped); every
-    other term — including ``!=`` and ``not in`` — evaluates unknown
-    -> false, dropping that AND-branch for this file."""
-    out = []
-    for clause in clauses:
-        keep, resid = True, []
-        for col, op, val in clause:
-            if col in absent:
-                if op == "is_null":
-                    continue
-                keep = False
-                break
-            resid.append((col, op, val))
-        if keep:
-            out.append(resid)
-    return out
-
-
 def plan_scan(root: str, metas, filters, columns, fs=None):
     """The driver plan of a pruned scan — the ONE planner behind
     ``paged_read`` and the fps data source.  Returns
@@ -229,10 +133,10 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
     - a partition-only projection still needs per-row cardinality: it
       decodes ONE file column (``drop_cols``) to carry the row count,
       dropped before the constants are attached;
-    - a truthy DNF ``filters`` prunes row groups on stats + concurrent
-      bloom probes (partition values act as pseudo-stats, so a
-      partition predicate prunes whole files); otherwise every row
-      group survives;
+    - a DNF ``filters`` prunes row groups on stats + concurrent bloom
+      probes (partition values act as pseudo-stats, so a partition
+      predicate prunes whole files); with no filter every row group
+      survives;
     - ``units`` holds one ``(path, row_groups, pvals, absent,
       fallback)`` per surviving file, in file order.  Partition values
       are coerced to the column's RESOLVED type: a string-typed column
@@ -265,11 +169,7 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
          if n not in drop_cols]
         + [(n, ptypes[n]) for n in part_cols])
 
-    if filters:
-        survivors = filter_row_groups(root, filters, fs=fs, metas=metas)
-    else:
-        survivors = [(m["file"], ri) for m in metas
-                     for ri in range(len(m["fmd"]["row_groups"]))]
+    survivors = filter_row_groups(root, filters, fs=fs, metas=metas)
     by_file: dict[str, list[int]] = {}
     for f, ri in survivors:
         by_file.setdefault(f, []).append(ri)
@@ -297,11 +197,7 @@ def scan_unit(path, ris, pvals, absent, fallback, clauses, file_cols,
     logic cannot drift between the two consumers.  Yields
     RecordBatches cast to ``arrow_schema``; nothing when no DNF branch
     can match this file."""
-    fclauses = _file_clauses(clauses, pvals)
-    if absent and fclauses:
-        # schema evolution: terms on columns this file predates
-        # evaluate as all-null
-        fclauses = _absent_clauses(fclauses, set(absent))
+    fclauses = _file_clauses(clauses, pvals, absent)
     if not fclauses:
         return
     cols_here = [c for c in file_cols if c not in absent]
@@ -409,19 +305,14 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     from fastparquet_spark.format.dataset import load_dataset_metas
     from fastparquet_spark.io import get_fs
 
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-
+    clauses = dnf(filters)
     fs = get_fs(in_dir, fs)
     in_dir, metas = load_dataset_metas(in_dir, fs=fs)
     arrow_schema, file_cols, drop_cols, part_cols, units = plan_scan(
-        in_dir, metas, filters, columns, fs=fs)
+        in_dir, metas, clauses, columns, fs=fs)
     out_schema = from_arrow_schema(arrow_schema)
     if not units:
         return spark.createDataFrame([], out_schema)
-
-    # [[]] is the match-all DNF (an empty list would mean NO branch)
-    clauses = [list(c) for c in filters] if filters else [[]]
 
     def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow as pa_w

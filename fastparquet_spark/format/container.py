@@ -589,19 +589,16 @@ def container_bloom_rules_out(path: str, meta: dict, clauses,
     bloom span is fetched with one ranged read; columns without a bloom
     or non-point operators never rule anything out."""
     from fastparquet_spark.codecs.bloom import SplitBlockBloom, xxh64
+    from fastparquet_spark.format.predicate import point_values
     from fastparquet_spark.io import get_fs
 
     by_name = {cm["name"]: cm for cm in meta["columns"]}
     wanted: dict[str, list] = {}
     for col, op, val in clauses:
         cm = by_name.get(col)
-        if cm is None or "bloom_offset" not in cm:
-            continue
-        if op in ("==", "="):
-            wanted.setdefault(col, []).append(val)
-        elif op == "in":
-            vs = wanted.setdefault(col, [])
-            vs.extend(val)
+        vals = point_values(op, val)
+        if cm is not None and "bloom_offset" in cm and vals is not None:
+            wanted.setdefault(col, []).extend(vals)
     if not wanted:
         return False
     fs = get_fs(path, fs)

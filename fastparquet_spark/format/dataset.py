@@ -11,14 +11,19 @@ Re-expresses the reference's metadata "query" surface
 - ``sorted_columns``      — columns whose row-group min/max chains are
                             globally non-overlapping in file order
                             (fastparquet/api.py:905-945);
-- ``filter_row_groups``   — DNF stats pruning ``[[(col,op,val),...],...]``
-                            (fastparquet/api.py:948-999, filter_out_stats
-                            :761-819, ops util.py:411-419);
+- ``filter_row_groups``   — DNF stats + bloom pruning of row groups
+                            (fastparquet/api.py:948-999);
+- ``filter_pages`` / ``read_pages`` — ColumnIndex page pruning and the
+                            page-skipping read below it;
 - ``filtered_read``       — Spark scan of only the surviving files, with
                             the residual predicate applied (so results
                             are exact, pruning is just I/O savings — the
                             same contract as the reference's
                             ``to_pandas(filters=...)``).
+
+Every one of them takes its filter through ``format/predicate.py``:
+``dnf`` normalizes it and ``may_match`` is the one min/max/null-count
+test behind stats, page, bloom-term and partition pruning.
 
 At cluster scale this driver-side footer pass is exactly what an
 Iceberg manifest scan does; part files are listed once and only tails
@@ -32,11 +37,11 @@ import struct
 from typing import Any
 
 from fastparquet_spark.format.metadata import ConvertedType, Type
+from fastparquet_spark.format.predicate import (
+    _apply_row_filter_dnf, _chunk_may_match, dnf, may_match, point_values,
+)
 from fastparquet_spark.format.reader import read_footer, read_footer_tail
 from fastparquet_spark.io import fetch_footers, get_fs
-
-OPS = ("==", "=", "!=", "<", "<=", ">", ">=", "in", "not in",
-       "is_null", "is_not_null")
 
 
 def _decode_stat(raw: bytes | None, ptype: int, conv: int | None,
@@ -137,6 +142,24 @@ def _partition_values(rel_path: str, scheme: str = "hive") -> dict[str, Any]:
     return out
 
 
+def schema_paths(schema: list):
+    """``(path, element)`` for every element below the root of a footer
+    schema (preorder with ``num_children``), ``path`` the tuple of names
+    from the root — the one walk behind leaf lookup, the scan planner's
+    schema union and ``pf.schema``.  Elements past the root's declared
+    subtree are ignored."""
+    stack: list[list] = [[schema[0].get("num_children") or 0, ()]]
+    for e in schema[1:]:
+        while stack and stack[-1][0] == 0:
+            stack.pop()
+        if not stack:
+            return
+        stack[-1][0] -= 1
+        path = stack[-1][1] + (e["name"],)
+        yield path, e
+        if e.get("num_children"):
+            stack.append([e["num_children"], path])
+
 
 def _leaf_elems(schema: list) -> dict:
     """Leaf schema elements keyed by FULL dotted path — bare-name keying
@@ -144,22 +167,8 @@ def _leaf_elems(schema: list) -> dict:
     (two lists' 'element' leaves, a struct field shadowing a top-level
     column): the wrong type crashes struct.unpack or silently decodes
     garbage bounds that mis-prune."""
-    out: dict[str, dict] = {}
-    pos = 1
-
-    def walk(prefix: str, count: int) -> None:
-        nonlocal pos
-        for _ in range(count):
-            e = schema[pos]
-            pos += 1
-            name = f"{prefix}.{e['name']}" if prefix else e["name"]
-            nc = e.get("num_children")
-            if nc:
-                walk(name, nc)
-            else:
-                out[name] = e
-    walk("", schema[0].get("num_children") or 0)
-    return out
+    return {".".join(path): e for path, e in schema_paths(schema)
+            if not e.get("num_children")}
 
 
 def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[dict]:
@@ -488,6 +497,26 @@ def drop_generations(out_dir: str, keep_from: int, fs=None) -> dict:
             "kept_generations": [g for g in gens if g >= keep_from]}
 
 
+def _chunk_stats(rg: dict, elems: dict) -> dict[str, tuple]:
+    """{col: (min, max, nulls, nvals)} of one row group's column chunks,
+    bounds decoded into the filter's value space (``elems`` from
+    :func:`_leaf_elems`)."""
+    cols: dict[str, tuple] = {}
+    for cc in rg["columns"]:
+        cmd = cc["meta_data"]
+        name = ".".join(cmd["path_in_schema"])
+        elem = elems.get(name)
+        if elem is None:
+            continue  # leaf the schema walk couldn't place
+        st = cmd.get("statistics") or {}
+        lo, hi = (_decode_stat(raw, elem["type"], elem.get("converted_type"),
+                               elem.get("scale") or 0)
+                  for raw in (st.get("min_value") or st.get("min"),
+                              st.get("max_value") or st.get("max")))
+        cols[name] = (lo, hi, st.get("null_count"), cmd["num_values"])
+    return cols
+
+
 def _iter_chunks(metas):
     """Yield (file, rg_index, {col: (min,max,nulls,nvals)}) per row group.
 
@@ -497,22 +526,7 @@ def _iter_chunks(metas):
     for m in metas:
         elems = _leaf_elems(m["fmd"]["schema"])
         for ri, rg in enumerate(m["fmd"]["row_groups"]):
-            cols: dict[str, tuple] = {}
-            for cc in rg["columns"]:
-                cmd = cc["meta_data"]
-                path = cmd["path_in_schema"]
-                name = ".".join(path)
-                elem = elems.get(name)
-                if elem is None:
-                    continue  # leaf the schema walk couldn't place
-                st = cmd.get("statistics") or {}
-                lo = _decode_stat(st.get("min_value") or st.get("min"),
-                                  elem["type"], elem.get("converted_type"),
-                                  elem.get("scale") or 0)
-                hi = _decode_stat(st.get("max_value") or st.get("max"),
-                                  elem["type"], elem.get("converted_type"),
-                                  elem.get("scale") or 0)
-                cols[name] = (lo, hi, st.get("null_count"), cmd["num_values"])
+            cols = _chunk_stats(rg, elems)
             for name, v in (m.get("partitions") or {}).items():
                 nvals = rg["num_rows"]
                 cols.setdefault(
@@ -566,43 +580,6 @@ def sorted_columns(out_dir: str, fs=None) -> list[str]:
                 continue
             last[name] = hi
     return sorted(n for n, good in ok.items() if good)
-
-
-def _chunk_may_match(cols, clause) -> bool:
-    """Can any row in this chunk satisfy the AND-clause? (conservative)"""
-    for col, op, val in clause:
-        if col not in cols:
-            continue
-        lo, hi, nulls, nvals = cols[col]
-        # null-count ops evaluate without min/max
-        if op == "is_null" and nulls == 0:
-            return False
-        if op == "is_not_null" and nulls is not None and nulls == nvals:
-            return False
-        if op in ("is_null", "is_not_null"):
-            continue
-        if lo is None or hi is None:
-            continue  # no stats -> cannot prune
-        try:
-            if op in ("==", "=") and not (lo <= val <= hi):
-                return False
-            if op == ">" and not (hi > val):
-                return False
-            if op == ">=" and not (hi >= val):
-                return False
-            if op == "<" and not (lo < val):
-                return False
-            if op == "<=" and not (lo <= val):
-                return False
-            if op == "in" and not any(lo <= v <= hi for v in val):
-                return False
-            if op == "!=" and lo == hi == val:
-                return False
-            if op == "not in" and lo == hi and lo in val:
-                return False
-        except TypeError:
-            continue  # incomparable stat/filter types -> cannot prune
-    return True
 
 
 def read_page_index(path: str, fs=None,
@@ -662,10 +639,7 @@ def filter_pages(path: str, filters, fs=None) -> list[tuple[int, int, int]]:
     reference's filter contract, fastparquet/api.py:948).  Metadata-only
     — footer + index spans, no data pages touched.  Chunks without an
     index keep all their pages (conservative)."""
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-    if not filters:
-        filters = [[]]  # match-all (None/[] must not crash or drop rows)
+    filters = dnf(filters)
     fs = get_fs(path, fs)
     from fastparquet_spark.io import fetch_footers
 
@@ -726,27 +700,28 @@ def _page_keep_mask(fmd: dict, idx, ri: int, clause):
         elif firsts != grid:
             continue  # unaligned page grids: skip this column
         elem = elems.get(col)
+        null_counts = ci.get("null_counts") or [None] * len(locs)
         mask = []
         for pi in range(len(locs)):
             if ci["null_pages"][pi]:
-                mask.append(op == "is_null")
-                continue
-            if not ci["min_values"][pi] or not ci["max_values"][pi]:
+                stats = (None, None, 1, 1)  # all-null: only is_null matches
+            elif not ci["min_values"][pi] or not ci["max_values"][pi]:
                 # a foreign writer may emit b"" bounds for a non-null
                 # page (spec-invalid but seen in the wild); treat as
                 # no-stats and keep the page rather than decode-crash or
                 # silently prune a "" lower bound (ADVICE r4)
                 mask.append(True)
                 continue
-            lo = _decode_stat(ci["min_values"][pi], elem["type"],
-                              elem.get("converted_type"),
-                              elem.get("scale") or 0)
-            hi = _decode_stat(ci["max_values"][pi], elem["type"],
-                              elem.get("converted_type"),
-                              elem.get("scale") or 0)
-            nulls = (ci.get("null_counts") or [None] * len(locs))[pi]
-            cols = {col: (lo, hi, nulls, None)}
-            mask.append(_chunk_may_match(cols, [(col, op, val)]))
+            else:
+                lo, hi = (_decode_stat(raw[pi], elem["type"],
+                                       elem.get("converted_type"),
+                                       elem.get("scale") or 0)
+                          for raw in (ci["min_values"], ci["max_values"]))
+                stats = (lo, hi, null_counts[pi], None)
+            try:
+                mask.append(may_match(op, val, *stats))
+            except TypeError:
+                mask.append(True)  # incomparable types: cannot prune
         keep_mask = mask if keep_mask is None else \
             [a and b for a, b in zip(keep_mask, mask)]
     if keep_mask is None:
@@ -786,11 +761,7 @@ def read_pages(path: str, filters, columns=None, fs=None,
         _to_arrow,
     )
 
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-    if not filters:
-        filters = [[]]  # match-all (None/[] must not crash or drop rows)
-    clauses = filters
+    clauses = dnf(filters)
     fs = get_fs(path, fs)
     src = _ByteSource(path, fs=fs)
     try:
@@ -896,63 +867,6 @@ def read_pages(path: str, filters, columns=None, fs=None,
         src.close()
 
 
-def _apply_row_filter_dnf(table, clauses):
-    """DNF residual: OR of the per-clause AND masks."""
-    import pyarrow as pa
-
-    if len(clauses) == 1:
-        return _apply_row_filter(table, clauses[0])
-    import numpy as np
-
-    keep = None
-    for clause in clauses:
-        m = np.zeros(table.num_rows, dtype=bool)
-        idx = _apply_row_filter(
-            table.append_column("__row__", pa.array(range(table.num_rows))),
-            clause).column("__row__").to_numpy(zero_copy_only=False)
-        m[idx] = True
-        keep = m if keep is None else (keep | m)
-    return table.filter(pa.array(keep))
-
-
-def _apply_row_filter(table, clause):
-    """AND-clause as an Arrow compute mask (the residual row predicate
-    behind read_pages(exact=True))."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    mask = None
-    for col, op, val in clause:
-        if col not in table.column_names:
-            continue
-        c = table.column(col)
-        if op in ("==", "="):
-            m = pc.equal(c, val)
-        elif op == "!=":
-            m = pc.not_equal(c, val)
-        elif op == "<":
-            m = pc.less(c, val)
-        elif op == "<=":
-            m = pc.less_equal(c, val)
-        elif op == ">":
-            m = pc.greater(c, val)
-        elif op == ">=":
-            m = pc.greater_equal(c, val)
-        elif op == "in":
-            m = pc.is_in(c, value_set=pa.array(list(val)))
-        elif op == "not in":
-            m = pc.invert(pc.is_in(c, value_set=pa.array(list(val))))
-        elif op == "is_null":
-            m = pc.is_null(c)
-        elif op == "is_not_null":
-            m = pc.is_valid(c)
-        else:
-            continue
-        m = pc.fill_null(m, False)
-        mask = m if mask is None else pc.and_(mask, m)
-    return table.filter(mask) if mask is not None else table
-
-
 def _parse_bloom_blob(blob: bytes, path: str, offset: int, fs):
     """BloomFilterHeader + bitset from a fetched blob; re-reads the tail
     when the speculative fetch (length absent from the footer — it is
@@ -1055,13 +969,8 @@ def _bloom_terms(rg: dict, elems: dict, clause):
     out = []
     for col, op, val in clause:
         cmd = by_name.get(col)
-        if cmd is None or "bloom_filter_offset" not in cmd:
-            continue
-        if op in ("==", "="):
-            vals = [val]
-        elif op == "in":
-            vals = list(val)
-        else:
+        vals = point_values(op, val)
+        if cmd is None or "bloom_filter_offset" not in cmd or vals is None:
             continue
         elem = elems.get(col)
         if elem is None:
@@ -1131,15 +1040,14 @@ def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
     then — for ==/in clauses on columns carrying a bloom filter —
     a split-block bloom membership check (one small ranged read per
     surviving chunk; the high-cardinality point-lookup path where
-    stats cannot discriminate)."""
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-    for clause in filters:
-        for col, op, _v in clause:
-            if op not in OPS:
-                raise ValueError(f"unsupported filter op {op!r}")
+    stats cannot discriminate).  No filter (``None``, ``[]`` or a DNF
+    with an empty clause) keeps every row group."""
+    filters = dnf(filters)
     if metas is None:
         metas = dataset_metadata(out_dir, fs=fs)
+    if [] in filters:
+        return [(m["file"], ri) for m in metas
+                for ri in range(len(m["fmd"]["row_groups"]))]
     by_file = {m["file"]: m for m in metas}
     root = out_dir.rstrip("/")
     # glob inputs record basenames, so the bloom's file path can't be
@@ -1238,10 +1146,7 @@ def filtered_read(spark, out_dir: str, filters):
 
     metas = dataset_metadata(out_dir)
     drill = bool(metas and "dir0" in (metas[0].get("partitions") or {}))
-    if not filters:
-        # no filters = FULL scan; an empty list must not read as an
-        # empty DNF (zero branches -> zero rows)
-        filters = [[]]
+    filters = dnf(filters)
     keep_files = sorted({f for f, _ri in
                          filter_row_groups(out_dir, filters, metas=metas)})
     if not keep_files:
@@ -1255,9 +1160,7 @@ def filtered_read(spark, out_dir: str, filters):
           .parquet(*[os.path.join(out_dir, f) for f in keep_files]))
     if drill:
         df = _attach_drill_columns(df, metas)
-    if filters and isinstance(filters[0], tuple):
-        filters = [filters]
-    if any(not clause for clause in filters):
+    if [] in filters:
         return df  # a match-all DNF branch makes the whole OR true
     ors = None
     for clause in filters:
@@ -1272,4 +1175,4 @@ def filtered_read(spark, out_dir: str, filters):
                  }[op]
             ands = e if ands is None else (ands & e)
         ors = ands if ors is None else (ors | ands)
-    return df.filter(ors) if ors is not None else df
+    return df.filter(ors)

@@ -170,8 +170,7 @@ class FpsReader(DataSourceReader):
 
         root, metas = self._plan or load_dataset_metas(self.path)
         aschema, file_cols, drop_cols, part_cols, units = plan_scan(
-            root, metas, [self._clauses] if self._clauses else None,
-            self.columns)
+            root, metas, self._clauses, self.columns)
         header = {"file_cols": file_cols, "part_cols": part_cols,
                   "drop_cols": drop_cols,
                   "schema": aschema.serialize().to_pybytes(),
@@ -187,12 +186,12 @@ class FpsReader(DataSourceReader):
         import pyarrow as pa
 
         from fastparquet_spark.engine.scan_job import scan_unit
+        from fastparquet_spark.format.predicate import dnf
 
         pa.set_cpu_count(1)
         header, units = partition.value
         aschema = pa.ipc.read_schema(pa.py_buffer(header["schema"]))
-        # [[]] is the match-all DNF (an empty list would mean NO branch)
-        clauses = [list(header["clauses"])] if header["clauses"] else [[]]
+        clauses = dnf(header["clauses"])
         for path, ris, pvals, absent, fallback in units:
             # streaming: match-all units decode batch-by-batch through
             # pyarrow's C++ reader, overlapping decode with the Arrow

@@ -87,12 +87,10 @@ class FpscReader(DataSourceReader):
             return [InputPartition(p) for p in files]
         from concurrent.futures import ThreadPoolExecutor
 
-        from fastparquet_spark.format.container import read_container_footer
-        from fastparquet_spark.format.dataset import _chunk_may_match
-
         from fastparquet_spark.format.container import (
-            container_bloom_rules_out,
+            container_bloom_rules_out, read_container_footer,
         )
+        from fastparquet_spark.format.predicate import _chunk_may_match
 
         with ThreadPoolExecutor(max_workers=min(16, max(len(files), 1))) as ex:
             metas = list(ex.map(read_container_footer, files))

@@ -50,15 +50,10 @@ def main(argv=None):
         b = b.master(f"local[{args.cpus}]")
     spark = b.getOrCreate()
 
-    raw = json.loads(args.filters)
-    if raw and isinstance(raw[0], list) and raw[0] and \
-            isinstance(raw[0][0], list):
-        filters = [[tuple(t) for t in clause] for clause in raw]
-    else:
-        filters = [tuple(t) for t in raw]
     columns = args.columns.split(",") if args.columns else None
 
-    df = paged_read(spark, args.input, filters, columns=columns)
+    df = paged_read(spark, args.input, json.loads(args.filters),
+                    columns=columns)
     if args.output:
         df.write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()

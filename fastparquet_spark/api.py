@@ -29,9 +29,16 @@ from typing import Any
 import pyarrow as pa
 
 from fastparquet_spark.format.dataset import (
+    _coerce_partition_value,
     _iter_chunks,
+    _metas,
+    _partition_dir,
+    _partition_values,
+    _split_by_key,
     dataset_metadata,
+    partition_type,
     schema_paths,
+    union_leaf_elems,
 )
 from fastparquet_spark.format.dataset import (
     filter_row_groups as _meta_filter_row_groups,
@@ -70,17 +77,6 @@ def _real_ris(m, ris):
     indices)."""
     rg_map = m.get("rg_map")
     return ris if rg_map is None else [rg_map[ri] for ri in ris]
-
-
-def _hive_key(v) -> str:
-    """One hive path value: URL-quoted, None as the hive null marker —
-    the exact inverse of the reader's parse
-    (format/dataset.py:121-136) and identical to the engine writer
-    (engine/encode_job.py:157-161)."""
-    from urllib.parse import quote
-
-    return ("__HIVE_DEFAULT_PARTITION__" if v is None
-            else quote(str(v), safe=""))
 
 
 class _SchemaHelper:
@@ -147,18 +143,17 @@ class ParquetFile:
             self.fn = getattr(fn, "name", "<file-like>")
             self._root = "."
             self._fs = get_fs(".", fs)
-            self._metas = [{"file": os.path.basename(str(self.fn)),
-                            "fmd": read_footer(blob), "partitions": {}}]
+            self._metas = _metas([os.path.basename(str(self.fn))],
+                                 [read_footer(blob)], "flat")
         elif isinstance(fn, (tuple, list)):
             from fastparquet_spark.io import common_root, relative_to
 
             self._root = common_root(list(fn)) or "."
             self._fs = get_fs(fn[0], fs)
             tails = fetch_footers(list(fn), self._fs)
-            self._metas = [
-                {"file": relative_to(p, self._root),
-                 "fmd": read_footer_tail(t), "partitions": {}}
-                for p, t in zip(fn, tails)]
+            self._metas = _metas([relative_to(p, self._root) for p in fn],
+                                 [read_footer_tail(t) for t in tails],
+                                 "flat")
         else:
             self._fs = get_fs(fn, fs)
             if any(c in fn for c in "*?["):
@@ -176,31 +171,23 @@ class ParquetFile:
                 self._metas = dataset_metadata(fn, fs=self._fs)
             else:
                 self._root = os.path.dirname(fn) or "."
-                self._metas = [{
-                    "file": os.path.basename(fn),
-                    "fmd": read_footer_tail(fetch_footers([fn],
-                                                          self._fs)[0]),
-                    "partitions": {}}]
+                self._metas = _metas(
+                    [os.path.basename(fn)],
+                    [read_footer_tail(fetch_footers([fn], self._fs)[0])],
+                    "flat")
         if not self._metas:
             raise ValueError(f"no parquet data at {fn!r}")
         self._fmd0 = self._metas[0]["fmd"]
         # schema-evolution tolerance: the dataset schema is the UNION
         # of the per-file leaf schemas (typed-null fill on read; type
         # conflicts raise) — same contract as engine.paged_read
-        from fastparquet_spark.engine.scan_job import (
-            _partition_arrow_type, union_leaf_elems,
-        )
-
-        self._names, self._elems, self._present = \
+        self._names, self._elems, self._absent = \
             union_leaf_elems(self._metas)
-        # partition columns typed from observed values across files —
-        # mixed spellings (k=3 beside k=abc) resolve to string and the
-        # int-spelled values are stringified on attach
-        pnames = {k for m in self._metas
-                  for k in (m.get("partitions") or {})}
-        self._ptypes = {k: _partition_arrow_type(
-            [(m.get("partitions") or {}).get(k) for m in self._metas])
-            for k in sorted(pnames)}
+        # the metas hold partition values in their column's resolved
+        # type (format/dataset.py _metas)
+        pnames = {k: None for m in self._metas for k in m["partitions"]}
+        self._ptypes = {k: partition_type(
+            [m["partitions"].get(k) for m in self._metas]) for k in pnames}
 
     # ---------------------------------------------------------- metadata --
     @property
@@ -231,7 +218,7 @@ class ParquetFile:
         """Partition column -> sorted observed values (api.py's cats)."""
         out: dict[str, set] = {}
         for m in self._metas:
-            for k, v in (m.get("partitions") or {}).items():
+            for k, v in m["partitions"].items():
                 out.setdefault(k, set()).add(v)
         return {k: sorted(v, key=repr) for k, v in out.items()}
 
@@ -369,20 +356,6 @@ class ParquetFile:
             return pa.null()
         return _arrow_type(e)
 
-    def _pvals(self, m) -> dict:
-        """A file's partition values in their column's resolved type:
-        a string-resolved column (mixed spellings, k=3 beside k=abc)
-        stringifies int-spelled values, so partition-term decisions
-        and the attached constants agree with the column (the engine
-        scan's plan_scan does the same)."""
-        return {k: str(v) if pa.types.is_string(self._ptypes[k])
-                and v is not None and not isinstance(v, str) else v
-                for k, v in (m.get("partitions") or {}).items()}
-
-    def _pcol(self, k, v, n):
-        """Typed partition-constant column of a :meth:`_pvals` value."""
-        return pa.array([v] * n, type=self._ptypes.get(k))
-
     def _path(self, rel: str):
         if self._blob is not None:
             return self._blob  # in-memory source (file-like open)
@@ -398,71 +371,55 @@ class ParquetFile:
             keep.setdefault(f, []).append(ri)
         return keep
 
+    def _table(self, m, ris, columns=None, clauses=None):
+        """File ``m``'s row groups ``ris`` as one Table — the one
+        per-file reader behind every facade read.  Its columns are the
+        projection's union columns (all for ``columns=None``), typed
+        null where the file lacks one (the absent rule,
+        format/dataset.py ``dataset_columns``), then the file's
+        partition constants.  With no column to decode, row cardinality
+        comes from the footer counts (the reference returns the
+        full-cardinality column here — fastparquet api.py:387-476; r5
+        ADVICE #2).  ``clauses`` (a DNF) applies the exact row filter:
+        partition terms and terms on absent columns are decided for
+        the whole file, the rest on decoded columns.  None when the
+        projection names no column of the file."""
+        want = [c for c in (self._names if columns is None else columns)
+                if c in self._names]
+        pcols = [k for k in m["partitions"] if columns is None or k in columns]
+        if not want and not pcols:
+            return None
+        cols = want + [c for clause in clauses or () for c, _op, _v in clause
+                       if c in self._names and c not in want]
+        absent = self._absent[m["file"]]
+        read = [c for c in cols if c not in absent]
+        if read:
+            tbl = read_row_groups(self._path(m["file"]), _real_ris(m, ris),
+                                  columns=read)
+            n = tbl.num_rows
+        else:
+            n = sum(m["fmd"]["row_groups"][ri]["num_rows"] for ri in ris)
+        tbl = pa.Table.from_arrays(
+            [pa.nulls(n, self._atype(c)) if c in absent else tbl.column(c)
+             for c in cols]
+            # O(1) repeated scalar, as the engine scan attaches them
+            + [pa.repeat(pa.scalar(m["partitions"][k], self._ptypes[k]), n)
+               for k in pcols],
+            names=cols + pcols)
+        if clauses is not None:
+            tbl = _apply_row_filter_dnf(tbl, _file_clauses(
+                clauses, m["partitions"], absent)).select(want + pcols)
+        return tbl
+
     def _tables(self, columns, filters, row_filter):
         filters = dnf(filters)
-        names = self.columns
-        want = list(columns) if columns is not None else list(names)
-        decode = list(want)
-        if row_filter:
-            for clause in filters:
-                for col, _op, _v in clause:
-                    if col in names and col not in decode:
-                        decode.append(col)
-        keep = None if [] in filters else self._surviving(filters)
+        keep = self._surviving(filters)
+        clauses = filters if row_filter else None
         for m in self._metas:
-            if keep is None:
-                ris = list(range(len(m["fmd"]["row_groups"])))
-            else:
-                ris = sorted(keep.get(m["file"], []))
-            if not ris:
-                continue
-            present = self._present[m["file"]]
-            absent = [c for c in decode if c in names and c not in present]
-            # partition terms are decided per file (a clause whose
-            # partition term fails is dropped for THIS file only —
-            # without this, a partition clause on an unprojected column
-            # degenerates to match-all in the residual filter); terms
-            # on columns this file predates read as all-null
-            pmap = self._pvals(m)
-            fclauses = _file_clauses(filters, pmap, absent)
-            if not fclauses:
-                continue
-            file_cols = [c for c in decode
-                         if c in names and c in present]
-            if file_cols:
-                tbl = read_row_groups(self._path(m["file"]),
-                                      _real_ris(m, ris),
-                                      columns=file_cols)
-                for c in want:
-                    if c in names and c not in present:
-                        tbl = tbl.append_column(c, pa.nulls(
-                            tbl.num_rows, self._atype(c)))
-                for k, v in pmap.items():
-                    if columns is None or k in want:
-                        tbl = tbl.append_column(
-                            k, self._pcol(k, v, tbl.num_rows))
-            else:
-                # no decodable file column (partition-only projection,
-                # or every projected column postdates this file): row
-                # cardinality comes from the footer counts (the
-                # reference returns the full-cardinality column here —
-                # fastparquet api.py:387-476; r5 ADVICE #2)
-                nrows = sum(m["fmd"]["row_groups"][ri]["num_rows"]
-                            for ri in ris)
-                pcols = {c: pa.nulls(nrows, self._atype(c))
-                         for c in want
-                         if c in names and c not in present}
-                pcols.update({k: self._pcol(k, v, nrows)
-                              for k, v in pmap.items()
-                              if columns is None or k in want})
-                if not pcols:
-                    continue
-                tbl = pa.table(pcols)
-            if row_filter:
-                tbl = _apply_row_filter_dnf(tbl, fclauses)
-                tbl = tbl.select([c for c in tbl.column_names
-                                  if c in want or c not in names])
-            yield tbl
+            ris = sorted(keep.get(m["file"], []))
+            if ris and (tbl := self._table(m, ris, columns,
+                                           clauses)) is not None:
+                yield tbl
 
     def to_pandas(self, columns=None, categories=None, filters=None,
                   index=None, row_filter: bool = False):
@@ -615,44 +572,12 @@ class ParquetFile:
     def iter_row_groups(self, filters=None, columns=None):
         """Yield one pandas DataFrame per surviving row group
         (api.py:321-337)."""
-        filters = dnf(filters)
-        keep = None if [] in filters else self._surviving(filters)
+        keep = self._surviving(dnf(filters))
         for m in self._metas:
-            if keep is None:
-                ris = list(range(len(m["fmd"]["row_groups"])))
-            else:
-                ris = sorted(keep.get(m["file"], []))
-            present = self._present[m["file"]]
-            cols_here = columns if columns is None else \
-                [c for c in columns if c in present]
-            pmap = self._pvals(m)
-            for ri in ris:
-                if columns is not None and not cols_here:
-                    # projection has no column THIS file carries
-                    # (evolved/partition-only): cardinality from the
-                    # footer, projected file columns typed-null
-                    nrows = m["fmd"]["row_groups"][ri]["num_rows"]
-                    data = {c: pa.nulls(nrows, self._atype(c))
-                            for c in columns if c in self._elems}
-                    data.update({k: self._pcol(k, v, nrows)
-                                 for k, v in pmap.items()
-                                 if k in columns})
-                    if not data:
-                        continue
-                    yield pa.table(data).to_pandas()
-                    continue
-                tbl = read_row_groups(self._path(m["file"]),
-                                      _real_ris(m, [ri]),
-                                      columns=cols_here)
-                if columns is not None:
-                    for c in columns:  # evolution: typed-null fill
-                        if c in self._elems and c not in present:
-                            tbl = tbl.append_column(c, pa.nulls(
-                                tbl.num_rows, self._atype(c)))
-                for k, v in pmap.items():
-                    if columns is None or k in columns:
-                        tbl = tbl.append_column(
-                            k, self._pcol(k, v, tbl.num_rows))
+            for ri in sorted(keep.get(m["file"], [])):
+                tbl = self._table(m, [ri], columns)
+                if tbl is None:
+                    break
                 tbl = self._restore_meta_types(tbl)
                 yield self._restore_masked_dtypes(tbl.to_pandas(), tbl)
 
@@ -665,26 +590,9 @@ class ParquetFile:
         for m in self._metas:
             for ri, r in enumerate(m["fmd"]["row_groups"]):
                 if r is rg:
-                    present = self._present[m["file"]]
-                    want = list(columns) if columns is not None \
-                        else list(self.columns)
-                    file_cols = [c for c in want if c in present]
-                    if file_cols:
-                        tbl = read_row_groups(self._path(m["file"]),
-                                              _real_ris(m, [ri]),
-                                              columns=file_cols)
-                    else:
-                        tbl = pa.table({})
-                    nrows = tbl.num_rows if file_cols else rg["num_rows"]
-                    for c in want:  # evolution: typed-null fill
-                        if c in self._elems and c not in present:
-                            tbl = tbl.append_column(
-                                c, pa.nulls(nrows, self._atype(c)))
-                    for k, v in self._pvals(m).items():
-                        if columns is None or k in want:
-                            tbl = tbl.append_column(
-                                k, self._pcol(k, v, nrows))
-                    tbl = self._restore_meta_types(tbl)
+                    tbl = self._table(m, [ri], columns)
+                    tbl = self._restore_meta_types(
+                        pa.table({}) if tbl is None else tbl)
                     df = self._restore_masked_dtypes(tbl.to_pandas(), tbl)
                     for c in self.check_categories(categories):
                         if c in df.columns:
@@ -1136,40 +1044,8 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
     n_written = start
     written_rels: list[str] = []
     if pcols:
-        import pyarrow.compute as pc
-
-        combos = table.select(pcols).group_by(pcols).aggregate([])
-        data_cols = [c for c in table.column_names if c not in pcols]
-        for combo in combos.to_pylist():
-            mask = None
-            for c in pcols:
-                m = (pc.is_null(table.column(c)) if combo[c] is None
-                     else pc.equal(table.column(c), combo[c]))
-                mask = m if mask is None else pc.and_kleene(mask, m)
-            part = table.filter(mask).select(data_cols)
-            if file_scheme == "hive":
-                # quote + null marker, matching the engine writer and
-                # the reader's unquote/__HIVE_DEFAULT_PARTITION__
-                # (format/dataset.py:121-136) — raw values would read
-                # back corrupted ('100%25' -> '100%', None -> 'None')
-                rel = "/".join(f"{c}={_hive_key(combo[c])}"
-                               for c in pcols)
-            else:  # drill: bare value directories (read back verbatim,
-                # no unquote — so no escaping on write either).  The
-                # reference writes '%s' % val unescaped (writer.py:1094),
-                # which silently corrupts the layout when a value
-                # contains '/' (phantom extra dir levels) or is None
-                # (reads back as the string 'None'); we fail loudly —
-                # the hive scheme handles both via quoting/null marker.
-                for c in pcols:
-                    v = combo[c]
-                    if v is None or "/" in str(v) or str(v) == "":
-                        raise ValueError(
-                            f"drill scheme cannot encode partition value "
-                            f"{v!r} for column {c!r} as a directory name "
-                            f"(None, empty, or contains '/'); use "
-                            f"file_scheme='hive'")
-                rel = "/".join(str(combo[c]) for c in pcols)
+        for key, part in _split_by_key(table, pcols):
+            rel = _partition_dir(pcols, key, file_scheme)
             fs.makedirs(f"{filename}/{rel}")
             _emit(f"{filename}/{rel}/part.{n_written}.parquet", part)
             written_rels.append(f"{rel}/part.{n_written}.parquet")
@@ -1262,17 +1138,7 @@ def filter_row_groups(pf: ParquetFile, filters, as_idx: bool = False):
     global row-group positions (file order, groups in file order)
     instead of the row-group dicts.  Unknown filter columns raise, as
     the reference does."""
-    filters = dnf(filters)
-    known = set(pf.columns) | set(pf.cats)
-    bad = {c for clause in filters for c, _op, _v in clause
-           if c not in known}
-    if bad:
-        raise ValueError(
-            f"No filter can be applied on nonexistent column(s) {bad}")
-    if [] in filters:
-        rgs = pf.row_groups
-        return list(range(len(rgs))) if as_idx else rgs
-    keep = pf._surviving(filters)
+    keep = pf._surviving(dnf(filters))
     out, g = [], 0
     for m in pf._metas:
         rgs = m["fmd"]["row_groups"]
@@ -1356,17 +1222,20 @@ def filter_out_stats(rg, filters, schema) -> bool:
     return not _chunk_may_match(_chunk_stats(rg, elems), filters or [])
 
 
-def _partition_coerce(raw: str, meta=None):
-    """Hive path value -> python value, honoring a pandas partition
-    meta dict (string-typed keys keep their raw text, the reference's
-    val_to_num(meta=) contract)."""
-    from fastparquet_spark.format.dataset import _coerce_partition_value
-
-    if meta:
+def _typed_values(rel_path: str, partition_meta=None,
+                  scheme: str = "hive") -> dict:
+    """One path's partition values typed per value, the reference's
+    ``val_to_num(meta=)`` contract with no dataset-wide resolution: a
+    key whose pandas partition meta is string-typed keeps its raw
+    text."""
+    out = {}
+    for k, raw in _partition_values(rel_path, scheme).items():
+        meta = (partition_meta or {}).get(k) or {}
         t = str(meta.get("numpy_type") or meta.get("pandas_type") or "")
-        if t.startswith(("object", "str", "unicode", "bytes")):
-            return raw
-    return _coerce_partition_value(raw)
+        text = raw is None or t.startswith(("object", "str", "unicode",
+                                            "bytes"))
+        out[k] = raw if text else _coerce_partition_value(raw)
+    return out
 
 
 def filter_out_cats(rg, filters, partition_meta=None) -> bool:
@@ -1375,17 +1244,8 @@ def filter_out_cats(rg, filters, partition_meta=None) -> bool:
     The partition pairs are parsed from the group's first chunk's
     ``file_path``; each behaves as a constant column (vmin == vmax ==
     value)."""
-    from urllib.parse import unquote
-
     fp = (rg.get("columns") or [{}])[0].get("file_path") or ""
-    partition_meta = partition_meta or {}
-    pvals = {}
-    for seg in fp.split("/"):
-        if "=" in seg:
-            cat, _, raw = seg.partition("=")
-            pvals[cat] = (None if raw == "__HIVE_DEFAULT_PARTITION__"
-                          else _partition_coerce(unquote(raw),
-                                                 partition_meta.get(cat)))
+    pvals = _typed_values(fp, partition_meta)
     return any(not _eval_partition_term(pvals[c], op, val)
                for c, op, val in filters or [] if c in pvals)
 
@@ -1398,7 +1258,6 @@ def paths_to_cats(paths, partition_meta=None):
     directories), ``other`` (unequal depths), ``hive`` (key=value
     segments) or ``drill`` (bare labels -> dir0..dirN)."""
     from collections import OrderedDict
-    from urllib.parse import unquote
 
     from fastparquet_spark.format.dataset import detect_scheme
 
@@ -1410,18 +1269,9 @@ def paths_to_cats(paths, partition_meta=None):
     scheme = detect_scheme([p for p in paths if p])
     if scheme in ("flat", "other"):
         return scheme, {}
-    partition_meta = partition_meta or {}
     cats: "OrderedDict[str, set]" = OrderedDict()
     for p in paths:
-        segs = p.split("/")[:-1]
-        if scheme == "drill":
-            pairs = [(f"dir{i}", s) for i, s in enumerate(segs)]
-        else:
-            pairs = [tuple(s.split("=", 1)) for s in segs if "=" in s]
-        for k, raw in pairs:
-            v = (None if raw == "__HIVE_DEFAULT_PARTITION__"
-                 else _partition_coerce(unquote(raw),
-                                        partition_meta.get(k)))
+        for k, v in _typed_values(p, partition_meta, scheme).items():
             cats.setdefault(k, set()).add(v)
     return scheme, OrderedDict(
         (k, sorted(v, key=repr)) for k, v in cats.items())

@@ -26,97 +26,10 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from fastparquet_spark.engine.tasks import map_tasks
+from fastparquet_spark.format.dataset import (
+    filter_row_groups, load_dataset_metas, partition_type, union_leaf_elems,
+)
 from fastparquet_spark.format.predicate import _file_clauses, dnf
-
-
-def _logical_sig(lt):
-    """Deterministic comparable form of a (nested-dict) LogicalType."""
-    return json.dumps(lt, sort_keys=True, default=str) if lt else None
-
-
-def _elem_sig(e):
-    """Conflict signature of a schema element: the EFFECTIVE decoded
-    type, not the raw footer fields.  Writer generations stamp the
-    same column differently — an old file may carry only
-    converted_type=UTF8 where a parquet-mr 1.11+/pyarrow file adds
-    logicalType={'STRING':{}} — and both decode identically; comparing
-    raw fields would reject that canonical evolution mix at plan time.
-    Each scan unit decodes with its OWN footer and casts to the union
-    schema, so two elements conflict exactly when their Arrow types
-    differ (scale/precision/timestamp unit/integer width are all part
-    of the Arrow type).  Group nodes have no Arrow type; they compare
-    on child count + normalized LIST/MAP annotation."""
-    from fastparquet_spark.format.metadata import ConvertedType
-    from fastparquet_spark.format.reader import _arrow_type
-
-    nc = e.get("num_children")
-    if nc:
-        lt = e.get("logicalType") or {}
-        conv = e.get("converted_type")
-        if "LIST" in lt or conv == ConvertedType.LIST:
-            ann = "LIST"
-        elif "MAP" in lt or conv in (ConvertedType.MAP,
-                                     ConvertedType.MAP_KEY_VALUE):
-            ann = "MAP"
-        else:
-            ann = None
-        return ("group", nc, ann)
-    try:
-        return ("leaf", str(_arrow_type(e)))
-    except Exception:  # unknown physical/logical combo: raw fallback
-        return ("leaf?", e.get("type"), e.get("converted_type"),
-                e.get("type_length"), e.get("scale"), e.get("precision"),
-                _logical_sig(e.get("logicalType")))
-
-
-def union_leaf_elems(metas):
-    """Union of the per-file TOP-LEVEL schemas, first-seen order — the
-    schema-evolution contract for scans (r5 VERDICT missing #1): a
-    column added mid-life appears in the union and is read as typed
-    nulls from the files that predate it.  Files must agree on the
-    physical/converted type of every element they share; a conflict is
-    an error, not a coercion (the reference's merge assumes outright
-    equality — fastparquet/util.py:115-213 — so this is strictly more
-    tolerant).
-
-    Elements are keyed by their DOTTED PATH, so two LIST columns whose
-    subtrees both contain an element named 'element' cannot
-    false-conflict; ``names`` lists top-level columns only (flat
-    leaves AND nested roots — scanners that are flat-only filter on
-    ``elems[n].get('num_children') is None``).  Returns
-    (names_in_order, {path_or_name: schema_element},
-    {file: set(top_level_names)})."""
-    from fastparquet_spark.format.dataset import schema_paths
-
-    elems: dict[str, dict] = {}
-    order: list[str] = []
-    present: dict[str, set] = {}
-    for m in metas:
-        mine = set()
-        for path, e in schema_paths(m["fmd"]["schema"]):
-            key = ".".join(path)
-            if len(path) == 1:
-                mine.add(e["name"])
-            # compare EFFECTIVE types (decimal scale/precision,
-            # timestamp unit, integer width all participate via the
-            # Arrow type) so a real divergence fails at PLAN time with
-            # the evolution message, not mid-scan in an executor Arrow
-            # cast — while writer-generation stamping differences
-            # (converted_type-only vs +logicalType) stay compatible
-            sig = _elem_sig(e)
-            if key not in elems:
-                elems[key] = e
-                if len(path) == 1:
-                    order.append(e["name"])
-            else:
-                psig = _elem_sig(elems[key])
-                if psig != sig:
-                    raise ValueError(
-                        f"schema evolution type conflict on column "
-                        f"{key!r}: {m['file']} has {sig}, earlier "
-                        f"files have {psig}")
-        present[m["file"]] = mine
-    return order, elems, present
 
 
 def plan_scan(root: str, metas, filters, columns, fs=None):
@@ -129,33 +42,32 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
       files predating a column), FLAT leaves only (the page reader
       cannot decode nested subtrees; use spark.read.parquet for nested
       datasets), then the ``columns`` projection, then the hive
-      partition columns last, typed from their observed values;
+      partition columns last, typed by ``partition_type``;
     - a partition-only projection still needs per-row cardinality: it
       decodes ONE file column (``drop_cols``) to carry the row count,
       dropped before the constants are attached;
     - a DNF ``filters`` prunes row groups on stats + concurrent bloom
-      probes (partition values act as pseudo-stats, so a partition
-      predicate prunes whole files); with no filter every row group
-      survives;
+      probes after deciding partition terms and terms on absent
+      columns per file (``filter_row_groups``), so a partition
+      predicate prunes whole files; with no filter every row group
+      survives; a term on an unknown column raises ``ValueError``;
     - ``units`` holds one ``(path, row_groups, pvals, absent,
-      fallback)`` per surviving file, in file order.  Partition values
-      are coerced to the column's RESOLVED type: a string-typed column
-      (mixed spellings, k=3 beside k=abc) stringifies int-spelled
-      values, so executor-side partition-term decisions and the
-      attached constants agree with the result schema.  ``absent``
-      lists projected columns the file predates; ``fallback`` names a
-      present column to carry row cardinality when every projected
-      column is absent."""
-    from fastparquet_spark.format.dataset import filter_row_groups
+      fallback)`` per surviving file, in file order.  ``pvals`` are the
+      metas' partition values, resolved to their column's type where
+      the metas were built (format/dataset.py ``_metas``), so
+      executor-side partition-term decisions and the attached
+      constants agree with the result schema.  ``absent`` lists every
+      union column the file lacks (the absent rule); ``fallback``
+      names a present column to carry row cardinality when every
+      projected column is absent."""
     from fastparquet_spark.format.reader import _arrow_type
 
-    names_all, elems, present = union_leaf_elems(metas)
+    names_all, elems, absent = union_leaf_elems(metas)
     names_all = [n for n in names_all
                  if elems[n].get("num_children") is None]
-    parts = {m["file"]: dict(m.get("partitions") or {}) for m in metas}
     pnames = list(metas[0].get("partitions") or {})
-    ptypes = {k: _partition_arrow_type([parts[m["file"]].get(k)
-                                        for m in metas]) for k in pnames}
+    ptypes = {k: partition_type([(m.get("partitions") or {}).get(k)
+                                 for m in metas]) for k in pnames}
     drop_cols: list[str] = []
     if columns is None:
         file_cols, part_cols = list(names_all), pnames
@@ -175,17 +87,13 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
         by_file.setdefault(f, []).append(ri)
     base = root.rstrip("/")
     units = []
+    pvals = {m["file"]: m.get("partitions") or {} for m in metas}
     for f, ris in sorted(by_file.items()):
-        pvals = parts[f]
-        for k, v in pvals.items():
-            if k in ptypes and pa.types.is_string(ptypes[k]) \
-                    and v is not None and not isinstance(v, str):
-                pvals[k] = str(v)
-        absent = [c for c in file_cols if c not in present[f]]
         fallback = ""
-        if file_cols and len(absent) == len(file_cols):
-            fallback = next((c for c in names_all if c in present[f]), "")
-        units.append((f"{base}/{f}", sorted(ris), pvals, absent, fallback))
+        if file_cols and all(c in absent[f] for c in file_cols):
+            fallback = next((c for c in names_all if c not in absent[f]), "")
+        units.append((f"{base}/{f}", sorted(ris), pvals[f], absent[f],
+                      fallback))
     return arrow_schema, file_cols, drop_cols, part_cols, units
 
 
@@ -216,14 +124,11 @@ def scan_unit(path, ris, pvals, absent, fallback, clauses, file_cols,
                 tbl = tbl.append_column(
                     c, pa.nulls(tbl.num_rows, arrow_schema.field(c).type))
         for name in part_cols:
-            ptype = arrow_schema.field(name).type
-            pval = pvals.get(name)
-            if pa.types.is_string(ptype) and pval is not None:
-                pval = str(pval)  # belt: units built by plan_scan
             # O(1) repeated scalar, not an O(rows) Python list — this
             # runs once per 131k-row batch per partition column
-            tbl = tbl.append_column(
-                name, pa.repeat(pa.scalar(pval, type=ptype), tbl.num_rows))
+            tbl = tbl.append_column(name, pa.repeat(pa.scalar(
+                pvals.get(name), type=arrow_schema.field(name).type),
+                tbl.num_rows))
         # evolution columns were appended out of order; restore order
         return tbl.select(arrow_schema.names).cast(arrow_schema)
 
@@ -263,20 +168,6 @@ def scan_unit(path, ris, pvals, absent, fallback, clauses, file_cols,
             src.close()
 
 
-def _partition_arrow_type(values):
-    """Arrow type for a hive partition column from its observed values
-    (the same val_to_num posture as drill typing)."""
-    vals = [v for v in values if v is not None]
-    if vals and all(isinstance(v, bool) for v in vals):
-        return pa.bool_()
-    if vals and all(type(v) is int for v in vals):
-        return pa.int64()
-    if vals and all(isinstance(v, (int, float))
-                    and not isinstance(v, bool) for v in vals):
-        return pa.float64()
-    return pa.string()
-
-
 def paged_read(spark, in_dir: str, filters, columns=None,
                exact: bool = True, fs=None):
     """Spark DataFrame of the rows surviving ``filters`` (a DNF filter:
@@ -302,7 +193,6 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     """
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    from fastparquet_spark.format.dataset import load_dataset_metas
     from fastparquet_spark.io import get_fs
 
     clauses = dnf(filters)

@@ -21,6 +21,7 @@ import time
 import pyarrow as pa
 
 from fastparquet_spark.engine.commit import _u_join
+from fastparquet_spark.format.dataset import _partition_dir, _split_by_key
 
 # byte cap on one key's buffered rows: fat rows cut a short chunk
 # before chunk_rows rows are buffered
@@ -114,44 +115,6 @@ class FpscFormat:
         return write, lambda: ({b.name: b.codec for b in blocks}, sink.tell())
 
 
-def _hive_dir(cols: list[str], key: tuple) -> str:
-    """``col=value`` segments (the reference's layout,
-    fastparquet/writer.py:969-1047), values URL-escaped as Spark/Hive
-    escape them; None is Hive's default partition."""
-    from urllib.parse import quote
-
-    return "/".join(f"{c}=" + ("__HIVE_DEFAULT_PARTITION__" if v is None
-                               else quote(str(v), safe=""))
-                    for c, v in zip(cols, key))
-
-
-# the one NaN every NaN key holds: NaN != NaN, so keys built from two
-# NaN objects never match across batches (a second writer on the same
-# file name), while one object matches itself by identity
-_NAN = float("nan")
-
-
-def _split_by_key(tbl: pa.Table, cols: list[str]):
-    """``(key, rows without cols)`` per distinct ``cols`` combination,
-    in first-appearance order; null and NaN keys are keys too."""
-    import pyarrow.compute as pc
-
-    combos = tbl.select(cols).group_by(cols, use_threads=False).aggregate([])
-    for combo in combos.to_pylist():
-        key, mask = [], None
-        for c in cols:
-            v, col = combo[c], tbl.column(c)
-            if v is None:
-                m = pc.is_null(col)
-            elif isinstance(v, float) and v != v:
-                v, m = _NAN, pc.is_nan(col)  # equality drops NaN rows
-            else:
-                m = pc.equal(col, v)
-            key.append(v)
-            mask = m if mask is None else pc.and_kleene(mask, m)
-        yield tuple(key), tbl.filter(mask).drop_columns(cols)
-
-
 class _Key:
     """One key's buffered rows and the file they stream into."""
 
@@ -212,7 +175,7 @@ def write_partition(batches, fmt, stage, fs, out_dir: str, family: str, *,
                 else f"{family}-r{seq}" if seq else family
             rel = base + fmt.suffix
             if hive_cols:
-                rel = f"{_hive_dir(hive_cols, k.key)}/{rel}"
+                rel = f"{_partition_dir(hive_cols, k.key)}/{rel}"
                 fs.makedirs(_u_join(out_dir, rel).rsplit("/", 1)[0])
             k.sink = fs.open_write(stage(_u_join(out_dir, rel)))
             k.row = {"file": rel, "rows": 0, "input_bytes": 0,

@@ -25,6 +25,29 @@ Every one of them takes its filter through ``format/predicate.py``:
 ``dnf`` normalizes it and ``may_match`` is the one min/max/null-count
 test behind stats, page, bloom-term and partition pruning.
 
+Dataset layout.  How a partitioned dataset is laid out is decided here
+once (the reference's ``paths_to_cats`` / ``val_to_num`` /
+``filter_out_cats``, fastparquet/api.py:700-758, util.py:59-95), and
+every writer, planner and reader takes it from here:
+
+- encode: :func:`_partition_dir` writes a key's directory — hive
+  ``col=value`` segments, URL-quoted, None as Hive's default
+  partition; drill bare values — and :func:`_split_by_key` splits a
+  table by key for it;
+- parse: :func:`_partition_values` reads a file's path back into
+  ``{col: text}``;
+- type: :func:`partition_type` is the one typing rule of a partition
+  column (all bool, else all int, else all numbers, else string);
+- resolve: :func:`_metas`, the one meta constructor, holds each value
+  in its column's type across the whole dataset (a string column keeps
+  each value's path text), so the metas ``dataset_metadata`` and
+  ``load_dataset_metas`` return carry the value every tier sees —
+  driver pruning, the scan planners, the facade and ``pf.cats``;
+- absent rule: :func:`dataset_columns` — a file lacks every union
+  column it does not carry, and reads it as the constant None: typed
+  nulls on output, and a filter term on it decided per file
+  (``is_null`` holds, every other op fails).
+
 At cluster scale this driver-side footer pass is exactly what an
 Iceberg manifest scan does; part files are listed once and only tails
 are read.
@@ -32,13 +55,15 @@ are read.
 
 from __future__ import annotations
 
+import json
 import os
 import struct
 from typing import Any
 
 from fastparquet_spark.format.metadata import ConvertedType, Type
 from fastparquet_spark.format.predicate import (
-    _apply_row_filter_dnf, _chunk_may_match, dnf, may_match, point_values,
+    _apply_row_filter_dnf, _chunk_may_match, _file_clauses, check_columns,
+    dnf, may_match, point_values,
 )
 from fastparquet_spark.format.reader import read_footer, read_footer_tail
 from fastparquet_spark.io import fetch_footers, get_fs
@@ -118,28 +143,135 @@ def detect_scheme(rel_paths: list[str]) -> str:
     return "drill"
 
 
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_dir(cols, key, scheme: str = "hive") -> str:
+    """The directory of one partition key: hive ``col=value`` segments
+    (the reference's layout, fastparquet/writer.py:969-1047), values
+    URL-escaped as Spark/Hive escape them and None as Hive's default
+    partition, so :func:`_partition_values` reads back exactly ``key``;
+    or drill bare values, read back verbatim.  The reference writes
+    drill values unescaped (writer.py:1094), which silently corrupts
+    the layout when a value contains '/' (phantom extra dir levels) or
+    is None (reads back as the string 'None'); such a value raises."""
+    from urllib.parse import quote
+
+    if scheme == "drill":
+        for c, v in zip(cols, key):
+            if v is None or "/" in str(v) or str(v) == "":
+                raise ValueError(
+                    f"drill scheme cannot encode partition value {v!r} "
+                    f"for column {c!r} as a directory name (None, empty, "
+                    f"or contains '/'); use file_scheme='hive'")
+        return "/".join(str(v) for v in key)
+    return "/".join(f"{c}=" + (_HIVE_NULL if v is None
+                               else quote(str(v), safe=""))
+                    for c, v in zip(cols, key))
+
+
+# the one NaN every NaN key holds: NaN != NaN, so keys built from two
+# NaN objects never match across batches (a second writer on the same
+# file name), while one object matches itself by identity
+_NAN = float("nan")
+
+
+def _split_by_key(tbl, cols: list[str]):
+    """``(key, rows without cols)`` per distinct ``cols`` combination,
+    in first-appearance order; null and NaN keys are keys too.  Keys
+    come from Arrow's ``group_by``, which on several key columns can
+    return a key holding a null string many times and out of order
+    (pyarrow 16, from a few hundred rows): each key is taken once, and
+    ordered by its first row."""
+    import pyarrow.compute as pc
+
+    combos = tbl.select(cols).group_by(cols, use_threads=False).aggregate([])
+    masks: dict[tuple, Any] = {}
+    for combo in combos.to_pylist():
+        key = tuple(_NAN if isinstance(v, float) and v != v else v
+                    for v in (combo[c] for c in cols))
+        if key in masks:
+            continue
+        mask = None
+        for c, v in zip(cols, key):
+            col = tbl.column(c)
+            m = (pc.is_null(col) if v is None
+                 else pc.is_nan(col) if v is _NAN  # equality drops NaN
+                 else pc.equal(col, v))
+            mask = m if mask is None else pc.and_kleene(mask, m)
+        masks[key] = mask
+    for key in sorted(masks, key=lambda k: pc.index(masks[k], True).as_py()):
+        yield key, tbl.filter(masks[key]).drop_columns(cols)
+
+
 def _partition_values(rel_path: str, scheme: str = "hive") -> dict[str, Any]:
-    """Parse one file's partition path segments into {col: value}
-    (the reference's partition parsing, fastparquet/api.py:700-758).
-    Hive values are URL-unescaped; both schemes coerce via
-    :func:`_coerce_partition_value`."""
+    """One file's partition path segments as ``{col: text}`` (the
+    reference's partition parsing, fastparquet/api.py:700-758): hive
+    values URL-unescaped, Hive's default partition None; drill
+    directories verbatim as ``dir0..dirN``; nothing for a ``flat``
+    file.  Typing is the caller's: :func:`_metas` resolves each column
+    across the dataset, the api's ``paths_to_cats`` types per value."""
     from urllib.parse import unquote
 
-    out: dict[str, Any] = {}
     segs = rel_path.split("/")[:-1]
+    if scheme == "flat":
+        return {}
     if scheme == "drill":
-        for i, seg in enumerate(segs):
-            out[f"dir{i}"] = _coerce_partition_value(seg)
-        return out
+        return {f"dir{i}": seg for i, seg in enumerate(segs)}
+    out: dict[str, Any] = {}
     for seg in segs:
-        if "=" not in seg:
-            continue
-        k, _, raw = seg.partition("=")
-        if raw == "__HIVE_DEFAULT_PARTITION__":
-            out[k] = None
-            continue
-        out[k] = _coerce_partition_value(unquote(raw))
+        if "=" in seg:
+            k, _, raw = seg.partition("=")
+            out[k] = None if raw == _HIVE_NULL else unquote(raw)
     return out
+
+
+def partition_type(values):
+    """The Arrow type of a partition column holding ``values`` (nulls
+    ignored) — the one typing rule, the reference's ``val_to_num``
+    posture: bool when every value is a bool, int64 when every value is
+    an int, float64 when every value is a number, else (and for a
+    column of nulls) string.  Resolved values keep their type."""
+    import pyarrow as pa
+
+    vals = [v for v in values if v is not None]
+    if vals and all(isinstance(v, bool) for v in vals):
+        return pa.bool_()
+    if vals and all(type(v) is int for v in vals):
+        return pa.int64()
+    if vals and all(isinstance(v, (int, float))
+                    and not isinstance(v, bool) for v in vals):
+        return pa.float64()
+    return pa.string()
+
+
+def _metas(files, fmds, scheme: str = "hive", paths=None) -> list[dict]:
+    """``[{"file", "fmd", "partitions"}]``, one per file — the one meta
+    constructor.  Partition values are parsed from ``paths`` (default
+    ``files``) under ``scheme``, typed per value, and then resolved to
+    their column's :func:`partition_type` across every file: a string
+    column (k=3 beside k=abc) keeps each value's path text, a float
+    column (k=1 beside k=1.5) holds floats.  A file whose path lacks
+    a partition column (unequal depths) holds it as null, as it holds
+    a union column it lacks."""
+    import pyarrow as pa
+
+    texts = [_partition_values(p, scheme) for p in (paths or files)]
+    names = list({k: None for t in texts for k in t})
+    texts = [{k: t.get(k) for k in names} for t in texts]
+    parts = [{k: None if v is None else _coerce_partition_value(v)
+              for k, v in t.items()} for t in texts]
+    for k in names:
+        typ = partition_type([p.get(k) for p in parts])
+        for t, p in zip(texts, parts):
+            if p.get(k) is None:
+                continue
+            if pa.types.is_string(typ):
+                p[k] = t[k]
+            elif pa.types.is_floating(typ):
+                p[k] = float(p[k])
+    return [{"file": f, "fmd": fmd, "partitions": p}
+            for f, fmd, p in zip(files, fmds, parts)]
 
 
 def schema_paths(schema: list):
@@ -171,12 +303,119 @@ def _leaf_elems(schema: list) -> dict:
             if not e.get("num_children")}
 
 
+def _logical_sig(lt):
+    """Deterministic comparable form of a (nested-dict) LogicalType."""
+    return json.dumps(lt, sort_keys=True, default=str) if lt else None
+
+
+def _elem_sig(e):
+    """Conflict signature of a schema element: the EFFECTIVE decoded
+    type, not the raw footer fields.  Writer generations stamp the
+    same column differently — an old file may carry only
+    converted_type=UTF8 where a parquet-mr 1.11+/pyarrow file adds
+    logicalType={'STRING':{}} — and both decode identically; comparing
+    raw fields would reject that canonical evolution mix at plan time.
+    Each scan unit decodes with its OWN footer and casts to the union
+    schema, so two elements conflict exactly when their Arrow types
+    differ (scale/precision/timestamp unit/integer width are all part
+    of the Arrow type).  Group nodes have no Arrow type; they compare
+    on child count + normalized LIST/MAP annotation."""
+    from fastparquet_spark.format.reader import _arrow_type
+
+    nc = e.get("num_children")
+    if nc:
+        lt = e.get("logicalType") or {}
+        conv = e.get("converted_type")
+        if "LIST" in lt or conv == ConvertedType.LIST:
+            ann = "LIST"
+        elif "MAP" in lt or conv in (ConvertedType.MAP,
+                                     ConvertedType.MAP_KEY_VALUE):
+            ann = "MAP"
+        else:
+            ann = None
+        return ("group", nc, ann)
+    try:
+        return ("leaf", str(_arrow_type(e)))
+    except Exception:  # unknown physical/logical combo: raw fallback
+        return ("leaf?", e.get("type"), e.get("converted_type"),
+                e.get("type_length"), e.get("scale"), e.get("precision"),
+                _logical_sig(e.get("logicalType")))
+
+
+def union_leaf_elems(metas):
+    """Union of the per-file TOP-LEVEL schemas, first-seen order — the
+    schema-evolution contract for scans (r5 VERDICT missing #1): a
+    column added mid-life appears in the union and is read as typed
+    nulls from the files that predate it.  Files must agree on the
+    physical/converted type of every element they share; a conflict is
+    an error, not a coercion (the reference's merge assumes outright
+    equality — fastparquet/util.py:115-213 — so this is strictly more
+    tolerant).
+
+    Elements are keyed by their DOTTED PATH, so two LIST columns whose
+    subtrees both contain an element named 'element' cannot
+    false-conflict; ``names`` lists top-level columns only (flat
+    leaves AND nested roots — scanners that are flat-only filter on
+    ``elems[n].get('num_children') is None``).  Returns
+    (names_in_order, {path_or_name: schema_element},
+    {file: [union columns it lacks]}) — the last from
+    :func:`dataset_columns`, the absent rule."""
+    elems: dict[str, dict] = {}
+    order: list[str] = []
+    for m in metas:
+        for path, e in schema_paths(m["fmd"]["schema"]):
+            key = ".".join(path)
+            # compare EFFECTIVE types (decimal scale/precision,
+            # timestamp unit, integer width all participate via the
+            # Arrow type) so a real divergence fails at PLAN time with
+            # the evolution message, not mid-scan in an executor Arrow
+            # cast — while writer-generation stamping differences
+            # (converted_type-only vs +logicalType) stay compatible
+            sig = _elem_sig(e)
+            if key not in elems:
+                elems[key] = e
+                if len(path) == 1:
+                    order.append(e["name"])
+            else:
+                psig = _elem_sig(elems[key])
+                if psig != sig:
+                    raise ValueError(
+                        f"schema evolution type conflict on column "
+                        f"{key!r}: {m['file']} has {sig}, earlier "
+                        f"files have {psig}")
+    return order, elems, dataset_columns(metas)[1]
+
+
+def dataset_columns(metas) -> tuple[set, dict[str, list[str]]]:
+    """``(known, absent)`` of a dataset.  ``known``: every column a
+    filter may name — any file's schema path (top-level or dotted) and
+    every partition column.  ``absent``: the absent rule, per file the
+    top-level union columns it lacks — the file reads each as the
+    constant None, so both scan planners fill typed nulls and decide a
+    filter term on it per file (:func:`predicate._file_clauses`)."""
+    known: set = set()
+    union: dict[str, None] = {}  # first-seen order
+    tops: dict[str, set] = {}
+    for m in metas:
+        known.update(m.get("partitions") or ())
+        mine = tops[m["file"]] = set()
+        for path, _e in schema_paths(m["fmd"]["schema"]):
+            known.add(".".join(path))
+            if len(path) == 1:
+                mine.add(path[0])
+                union[path[0]] = None
+    return known, {f: [c for c in union if c not in mine]
+                   for f, mine in tops.items()}
+
+
 def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[dict]:
     """Footer of every part file: [{file, fmd, partitions}] in
     deterministic order.  Footers are TAIL reads fetched concurrently
     (io.read_tail_footer / io.fetch_footers) — page data is never
     touched, so this stays a metadata pass at any dataset size.  Files
-    under hive ``key=value`` directories carry their partition values.
+    under hive ``key=value`` (or drill) directories carry their
+    partition values, each in its column's resolved type
+    (:func:`_metas`).
 
     When a ``_metadata`` sidecar exists (written by
     :func:`write_metadata_sidecar` / ``append_dataset``), the whole
@@ -202,11 +441,11 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
         for w in "*?[":
             out_dir = out_dir.split(w)[0]
         static = out_dir.rsplit("/", 1)[0] if "/" in out_dir else ""
-        return [{"file": os.path.basename(p), "fmd": read_footer_tail(t),
-                 "partitions": _partition_values(
-                     p[len(static) + 1:] if static and p.startswith(static)
-                     else os.path.basename(p))}
-                for p, t in zip(files, tails)]
+        return _metas([os.path.basename(p) for p in files],
+                      [read_footer_tail(t) for t in tails],
+                      paths=[p[len(static) + 1:]
+                             if static and p.startswith(static)
+                             else os.path.basename(p) for p in files])
     sidecar = _join(out_dir, "_metadata")
     if use_sidecar and fs.exists(sidecar):
         with fs.open_read(sidecar) as f:
@@ -215,9 +454,9 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
         for rg in fmd["row_groups"]:
             fp = rg["columns"][0].get("file_path") or ""
             by_file.setdefault(fp, []).append(rg)
-        scheme = detect_scheme(sorted(by_file))
-        out = []
-        for rel in sorted(by_file):
+        rels = sorted(by_file)
+        fmds = []
+        for rel in rels:
             rgs = []
             for rg in by_file[rel]:
                 rg2 = dict(rg)
@@ -225,12 +464,11 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
                     {k: v for k, v in cc.items() if k != "file_path"}
                     for cc in rg["columns"]]
                 rgs.append(rg2)
-            sub = {"version": fmd.get("version", 1), "schema": fmd["schema"],
-                   "num_rows": sum(r["num_rows"] for r in rgs),
-                   "row_groups": rgs}
-            out.append({"file": rel, "fmd": sub,
-                        "partitions": _partition_values(rel, scheme)})
-        return out
+            fmds.append({"version": fmd.get("version", 1),
+                         "schema": fmd["schema"],
+                         "num_rows": sum(r["num_rows"] for r in rgs),
+                         "row_groups": rgs})
+        return _metas(rels, fmds, detect_scheme(rels))
     prefix = out_dir.rstrip("/") + "/"
 
     def rel_of(p: str) -> str:
@@ -243,11 +481,9 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
 
     files = [p for p in fs.walk_files(out_dir) if is_data(rel_of(p))]
     rels = [rel_of(p) for p in files]
-    scheme = detect_scheme(rels)
     tails = fetch_footers(files, fs)
-    return [{"file": rel, "fmd": read_footer_tail(t),
-             "partitions": _partition_values(rel, scheme)}
-            for rel, t in zip(rels, tails)]
+    return _metas(rels, [read_footer_tail(t) for t in tails],
+                  detect_scheme(rels))
 
 
 def load_dataset_metas(path: str, fs=None) -> tuple[str, list[dict]]:
@@ -275,11 +511,8 @@ def load_dataset_metas(path: str, fs=None) -> tuple[str, list[dict]]:
             raise ValueError(f"no parquet files match {path!r}")
         base = common_root(files)
         tails = fetch_footers(files, fs)
-        metas = [{"file": relative_to(p, base),
-                  "fmd": read_footer_tail(t),
-                  "partitions": _partition_values(relative_to(p, base))}
-                 for p, t in zip(files, tails)]
-        return base or ".", metas
+        return base or ".", _metas([relative_to(p, base) for p in files],
+                                   [read_footer_tail(t) for t in tails])
     metas = dataset_metadata(path, fs=fs)
     if not metas:
         raise ValueError(f"no parquet files under {path!r}")
@@ -351,10 +584,8 @@ def write_metadata_sidecar(out_dir: str, fs=None, base: dict | None = None,
     else:
         if files is not None:
             tails = fetch_footers([_join(out_dir, f) for f in files], fs)
-            scheme = detect_scheme(list(files))
-            metas = [{"file": rel, "fmd": read_footer_tail(t),
-                      "partitions": _partition_values(rel, scheme)}
-                     for rel, t in zip(files, tails)]
+            metas = _metas(list(files), [read_footer_tail(t) for t in tails],
+                           detect_scheme(list(files)))
         else:
             metas = dataset_metadata(out_dir, fs=fs, use_sidecar=False)
         if not metas:
@@ -520,9 +751,11 @@ def _chunk_stats(rg: dict, elems: dict) -> dict[str, tuple]:
 def _iter_chunks(metas):
     """Yield (file, rg_index, {col: (min,max,nulls,nvals)}) per row group.
 
-    Hive partition values appear as pseudo-stats columns with
-    min == max == value (and null_count == nvals for the default
-    partition), so stats pruning covers them with no extra code path."""
+    Partition values appear as pseudo-stats columns with min == max ==
+    value (and null_count == nvals for the default partition).  They
+    are the metas' values, already resolved to their column's type
+    where the metas were built (:func:`_metas`), so the statistics of a
+    string-resolved column compare strings only."""
     for m in metas:
         elems = _leaf_elems(m["fmd"]["schema"])
         for ri, rg in enumerate(m["fmd"]["row_groups"]):
@@ -752,7 +985,11 @@ def read_pages(path: str, filters, columns=None, fs=None,
     ``row_groups``: optional subset of row-group indices to scan —
     the contract that lets a DRIVER-side planner (stats + bloom
     pruning, :func:`filter_row_groups`) hand each executor only its
-    surviving groups (engine.paged_read)."""
+    surviving groups (engine.paged_read).
+
+    A term on a column the file does not have raises ``ValueError``;
+    a planner decides terms on a dataset's absent columns per file
+    before it calls this (:func:`dataset_columns`)."""
     import numpy as np
     import pyarrow as pa
 
@@ -766,6 +1003,8 @@ def read_pages(path: str, filters, columns=None, fs=None,
     src = _ByteSource(path, fs=fs)
     try:
         fmd = src.footer()
+        check_columns(clauses, {".".join(p)
+                                for p, _e in schema_paths(fmd["schema"])})
         idx = read_page_index(path, fs=fs, fmd=fmd)
         bounds = _chunk_bounds(fmd, src.data_end)
         # TOP-LEVEL FLAT leaves only (dotted-path walk): this reader is
@@ -1040,59 +1279,62 @@ def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
     then — for ==/in clauses on columns carrying a bloom filter —
     a split-block bloom membership check (one small ranged read per
     surviving chunk; the high-cardinality point-lookup path where
-    stats cannot discriminate).  No filter (``None``, ``[]`` or a DNF
-    with an empty clause) keeps every row group."""
+    stats cannot discriminate).  Partition terms and terms on columns a
+    file lacks are decided per file first, against the file's resolved
+    partition values and the absent rule (:func:`_file_clauses`), so a
+    partition predicate prunes whole files.  No filter (``None``,
+    ``[]`` or a DNF with an empty clause) keeps every row group.  A
+    term on a column no file has and no partition names raises
+    ``ValueError``."""
     filters = dnf(filters)
     if metas is None:
         metas = dataset_metadata(out_dir, fs=fs)
+    known, absent = dataset_columns(metas)
+    check_columns(filters, known)
     if [] in filters:
         return [(m["file"], ri) for m in metas
                 for ri in range(len(m["fmd"]["row_groups"]))]
-    by_file = {m["file"]: m for m in metas}
     root = out_dir.rstrip("/")
     # glob inputs record basenames, so the bloom's file path can't be
     # reconstructed — stats-only pruning there
     use_bloom = use_bloom and not any(c in out_dir for c in "*?[")
-    # pass 1: min/max/null stats (metadata already in hand)
-    survivors = []
-    for f, ri, cols, _n in _iter_chunks(metas):
-        clauses = [c for c in filters if _chunk_may_match(cols, c)]
-        if clauses:
-            survivors.append((f, ri, clauses))
+    # pass 1: partition values + min/max/null stats (metadata in hand)
+    survivors = []  # (file, rg index, clauses, path, rg, elems)
+    for m in metas:
+        fclauses = _file_clauses(filters, m.get("partitions") or {},
+                                 absent[m["file"]])
+        if not fclauses:
+            continue
+        elems = _leaf_elems(m["fmd"]["schema"])
+        for ri, rg in enumerate(m["fmd"]["row_groups"]):
+            cols = _chunk_stats(rg, elems)
+            clauses = [c for c in fclauses if _chunk_may_match(cols, c)]
+            if clauses:
+                survivors.append((m["file"], ri, clauses,
+                                  f"{root}/{m['file']}", rg, elems))
     if not use_bloom:
-        return [(f, ri) for f, ri, _c in survivors]
+        return [(f, ri) for f, ri, *_rest in survivors]
     # pass 2: bloom membership for ==/in terms — spans are known from
     # the footers, so fetch them concurrently instead of one serial
     # ranged read per chunk (r4 What's-wrong #2).  Evaluation runs in
     # BATCHES of chunks so driver memory is bounded by one batch's
     # filters, not the whole dataset's (100k chunks x ~100 KB blooms
     # would otherwise pin ~10 GB on the driver).
-    ctx = []
-    elems_cache: dict[str, dict] = {}  # one schema walk per FILE
-    for f, ri, clauses in survivors:
-        m = by_file[f]
-        elems = elems_cache.get(f)
-        if elems is None:
-            elems = elems_cache[f] = _leaf_elems(m["fmd"]["schema"])
-        rg = m["fmd"]["row_groups"][ri]
-        ctx.append((f"{root}/{f}", rg, elems))
     keep = []
     BATCH = 512
     for lo in range(0, len(survivors), BATCH):
+        batch = survivors[lo:lo + BATCH]
         spans: dict = {}
-        for (f, ri, clauses), (path, rg, elems) in zip(
-                survivors[lo:lo + BATCH], ctx[lo:lo + BATCH]):
+        for _f, _ri, clauses, path, rg, elems in batch:
             for c in clauses:
                 for cmd, _enc in _bloom_terms(rg, elems, c):
                     spans.setdefault((path, cmd["bloom_filter_offset"]),
                                      cmd.get("bloom_filter_length"))
         cache = _prefetch_blooms(spans, fs)
-        for (f, ri, clauses), (path, rg, elems) in zip(
-                survivors[lo:lo + BATCH], ctx[lo:lo + BATCH]):
-            if any(not _bloom_rules_out(path, rg, elems, c, fs=fs,
-                                        cache=cache)
-                   for c in clauses):
-                keep.append((f, ri))
+        keep += [(f, ri) for f, ri, clauses, path, rg, elems in batch
+                 if any(not _bloom_rules_out(path, rg, elems, c, fs=fs,
+                                             cache=cache)
+                        for c in clauses)]
     return keep
 
 
@@ -1101,8 +1343,9 @@ def _attach_drill_columns(df, metas):
     dataset (Spark discovers hive ``k=v`` natively but ignores bare
     label dirs).  The value comes from ``input_file_name()`` segment
     arithmetic — a JVM expression, no Python in the row path — and is
-    cast to long/double/boolean when every observed directory value
-    coerces (the reference's val_to_num typing)."""
+    cast to the Spark form of the column's :func:`partition_type`
+    (the reference's val_to_num typing)."""
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
     parts = [m["partitions"] for m in metas]
@@ -1112,15 +1355,12 @@ def _attach_drill_columns(df, metas):
     segs = F.split(F.input_file_name(), "/")
     for i in range(depth):
         name = f"dir{i}"
-        vals = {p[name] for p in parts}
+        typ = partition_type([p[name] for p in parts])
         c = F.element_at(segs, -(depth - i + 1))
-        if all(type(v) is int for v in vals):
-            c = c.cast("long")
-        elif all(isinstance(v, (int, float)) and not isinstance(v, bool)
-                 for v in vals):
-            c = c.cast("double")
-        elif all(isinstance(v, bool) for v in vals):
+        if pa.types.is_boolean(typ):
             c = c == "True"
+        elif not pa.types.is_string(typ):
+            c = c.cast("long" if pa.types.is_integer(typ) else "double")
         df = df.withColumn(name, c)
     return df
 

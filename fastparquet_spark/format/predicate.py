@@ -119,6 +119,19 @@ def _chunk_may_match(cols, clause) -> bool:
     return True
 
 
+def check_columns(clauses, known) -> None:
+    """Raise ``ValueError`` for a term on a column outside ``known``
+    (the union schema's columns and the partition columns), as the
+    reference does (fastparquet/api.py:948-999): a reader that cannot
+    find a term's column would otherwise drop the term and return rows
+    it does not match."""
+    bad = {col for clause in clauses for col, _op, _v in clause
+           if col not in known}
+    if bad:
+        raise ValueError(
+            f"No filter can be applied on nonexistent column(s) {bad}")
+
+
 def _eval_partition_term(v, op, val) -> bool:
     """Evaluate one term against a file's constant partition value
     ``v`` — :func:`may_match` on a constant, which is exact.
@@ -161,8 +174,6 @@ def _file_clauses(clauses, pvals: dict, absent=()):
                     keep = False
                     break
             else:
-                # file column or unknown — the reader keeps rows for
-                # columns it cannot find (conservative)
                 resid.append((col, op, val))
         if keep:
             out.append(resid)

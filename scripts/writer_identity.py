@@ -4,9 +4,10 @@ what each path wrote, so two checkouts can be compared byte for byte.
 
     python scripts/writer_identity.py /tmp/wid > ids.jsonl
 
-The seven paths: ``encode_dataset`` flat and hive,
+The nine paths: ``encode_dataset`` flat and hive,
 ``encode_dataset_fpsc``, ``encode_files``, ``encode_files_fpsc``,
-``df.write.format("fps")`` and ``df.write.format("fpsc")``.  Each prints
+``df.write.format("fps")``, ``df.write.format("fpsc")`` and the api
+facade's ``api.write(file_scheme="hive")`` and ``"drill"``.  Each prints
 one JSON line: the sorted ``(name, sha256)`` pairs of its data files
 and, for the engine jobs, the manifest rows' ``file``, ``rows``,
 ``input_bytes``, ``output_bytes`` and ``columns``.  DataSource file
@@ -17,7 +18,9 @@ Inputs are chosen so every path writes several files, row groups or
 containers: 6000 rows, row groups and containers of 700 rows, a skewed
 repo (salted across tasks), null hive keys, three shuffle tasks.  The
 shuffle paths read a one-partition frame, so row order inside each
-task does not depend on shuffle fetch order.
+task does not depend on shuffle fetch order.  The api paths write a
+NaN-free table on two key columns, one of whose values are a null (hive
+only) and strings that need quoting (``100%25``, ``a b``).
 """
 
 from __future__ import annotations
@@ -59,6 +62,19 @@ def _input_table():
         "content": pa.array(content),
         "size": pa.array(rng.integers(0, 1 << 20, N_ROWS)),
         "score": pa.array(score),
+    })
+
+
+def _api_table():
+    import pyarrow as pa
+
+    tags = ["100%25", "a b", "plain", None]
+    return pa.table({
+        "tag": pa.array([tags[i % 4] for i in range(N_ROWS // 10)],
+                        pa.string()),
+        "year": pa.array([2020 + i % 3 for i in range(N_ROWS // 10)]),
+        "v": pa.array(range(N_ROWS // 10)),
+        "s": pa.array([f"row {i}" for i in range(N_ROWS // 10)]),
     })
 
 
@@ -148,6 +164,21 @@ def main(argv=None) -> int:
      .option("bloom_columns", "path").save(root))
     report("format_fpsc", root, ".fpsc")
     spark.stop()
+
+    import pyarrow.compute as pc
+
+    from fastparquet_spark import api
+
+    atbl = _api_table()
+    root = os.path.join(out, "api_hive")
+    api.write(root, atbl, file_scheme="hive", partition_on=["tag", "year"],
+              row_group_offsets=CHUNK // 10)
+    report("api_write_hive", root, ".parquet")
+    root = os.path.join(out, "api_drill")
+    api.write(root, atbl.filter(pc.is_valid(atbl["tag"])),
+              file_scheme="drill", partition_on=["tag", "year"],
+              row_group_offsets=CHUNK // 10)
+    report("api_write_drill", root, ".parquet")
     return 0
 
 

@@ -141,9 +141,10 @@ def test_glob_above_root_hive_dirs_are_not_partitions(tmp_path):
     pq.write_table(t, str(d / "part-0.parquet"))
     metas = dataset_metadata(f"{d}/*.parquet")
     assert metas[0]["partitions"] == {}  # no phantom 'run' column
-    keep = filter_row_groups(f"{d}/*.parquet", [("run", "==", 5)])
-    # unknown column cannot prune: chunk kept
-    assert len(keep) == 1
+    # 'run' is no column of the dataset: a filter on it raises, as on
+    # any unknown column (a phantom partition would prune instead)
+    with pytest.raises(ValueError, match="nonexistent column"):
+        filter_row_groups(f"{d}/*.parquet", [("run", "==", 5)])
 
 
 def test_rle_width_zero_bitpacked_run():

@@ -69,6 +69,20 @@ class ParquetException(Exception):
     """The reference's top-level error type (fastparquet/util.py:22)."""
 
 
+_NAN = object()
+
+
+def _distinct(values) -> list:
+    """Distinct partition values sorted by repr, NaN once.  Each file's
+    NaN is its own float object and NaN != NaN, so a set would keep one
+    per file; the reference's cats come from path text, where every
+    ``k=nan`` is one value."""
+    out = {}
+    for v in values:
+        out.setdefault(_NAN if isinstance(v, float) and v != v else v, v)
+    return sorted(out.values(), key=repr)
+
+
 def _real_ris(m, ris):
     """Translate row-group positions in a (possibly ``pf[i]``-sliced)
     meta to positions in the file's REAL footer — ``read_row_groups``
@@ -216,11 +230,11 @@ class ParquetFile:
     @property
     def cats(self) -> dict:
         """Partition column -> sorted observed values (api.py's cats)."""
-        out: dict[str, set] = {}
+        out: dict[str, list] = {}
         for m in self._metas:
             for k, v in m["partitions"].items():
-                out.setdefault(k, set()).add(v)
-        return {k: sorted(v, key=repr) for k, v in out.items()}
+                out.setdefault(k, []).append(v)
+        return {k: _distinct(v) for k, v in out.items()}
 
     @property
     def dtypes(self) -> dict:
@@ -1269,9 +1283,8 @@ def paths_to_cats(paths, partition_meta=None):
     scheme = detect_scheme([p for p in paths if p])
     if scheme in ("flat", "other"):
         return scheme, {}
-    cats: "OrderedDict[str, set]" = OrderedDict()
+    cats: "OrderedDict[str, list]" = OrderedDict()
     for p in paths:
         for k, v in _typed_values(p, partition_meta, scheme).items():
-            cats.setdefault(k, set()).add(v)
-    return scheme, OrderedDict(
-        (k, sorted(v, key=repr)) for k, v in cats.items())
+            cats.setdefault(k, []).append(v)
+    return scheme, OrderedDict((k, _distinct(v)) for k, v in cats.items())

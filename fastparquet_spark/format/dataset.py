@@ -1050,9 +1050,7 @@ def read_pages(path: str, filters, columns=None, fs=None,
                 elem = elems[name]
                 ci = idx[ri][cii]
                 required = elem.get("repetition_type", 1) == 0
-                if mask is None or ci is None or \
-                        [loc["first_row_index"]
-                         for loc in ci["locations"]] != grid:
+                if mask is None:
                     # no usable index alignment: whole chunk, sized by
                     # the NEXT chunk's start — total_compressed_size is
                     # under-reported by some writers (incl. the

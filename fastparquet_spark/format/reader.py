@@ -18,6 +18,7 @@ read plus ONE ranged fetch per column chunk through the fs seam
 from __future__ import annotations
 
 import os
+from contextlib import closing
 
 import numpy as np
 import pyarrow as pa
@@ -586,22 +587,34 @@ def _empty_table(tree, columns=None) -> pa.Table:
     return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
 
 
-def iter_row_groups(source, columns=None):
-    """Yield one pyarrow Table per row group — the reference's streaming
-    chunk iteration (fastparquet/api.py:321-337 iter_row_groups), with
-    column projection (only the selected chunks are decoded,
-    fastparquet/core.py:570-577)."""
+def _row_groups(source, indices, columns):
+    """The readers' one open-and-loop body: open ``source``, read its
+    footer and schema tree, yield ``(footer, tree)``, then decode and
+    yield one Table per row group in ``indices`` (every group when
+    None).  The source closes when the generator ends or is closed."""
     from fastparquet_spark.format.assembly import build_tree
 
     src = _ByteSource(source)
     try:
         fmd = src.footer()
         tree = build_tree(fmd["schema"])
+        yield fmd, tree
         bounds = _chunk_bounds(fmd, src.data_end)
-        for rg in fmd["row_groups"]:
-            yield _read_row_group(src, rg, tree, columns, bounds)
+        rgs = fmd["row_groups"]
+        for i in range(len(rgs)) if indices is None else indices:
+            yield _read_row_group(src, rgs[i], tree, columns, bounds)
     finally:
         src.close()
+
+
+def iter_row_groups(source, columns=None):
+    """Yield one pyarrow Table per row group — the reference's streaming
+    chunk iteration (fastparquet/api.py:321-337 iter_row_groups), with
+    column projection (only the selected chunks are decoded,
+    fastparquet/core.py:570-577)."""
+    groups = _row_groups(source, None, columns)
+    next(groups)
+    yield from groups
 
 
 def read_file(source, columns=None) -> pa.Table:
@@ -611,45 +624,24 @@ def read_file(source, columns=None) -> pa.Table:
     Paths are read through the fs seam with one ranged fetch per column
     chunk (footer tail first), so a projection of a huge file moves only
     the selected columns' bytes."""
-    from fastparquet_spark.format.assembly import build_tree
-
-    src = _ByteSource(source)
-    try:
-        fmd = src.footer()
-        tree = build_tree(fmd["schema"])
-        if not tree.children:
-            # zero-column file: rows exist only as a count
-            empty_rows = pa.array([{}] * fmd["num_rows"], type=pa.struct([]))
-            return pa.Table.from_batches(
-                [pa.RecordBatch.from_struct_array(empty_rows)])
-        bounds = _chunk_bounds(fmd, src.data_end)
-        parts = [_read_row_group(src, rg, tree, columns, bounds)
-                 for rg in fmd["row_groups"]]
-    finally:
-        src.close()
-    if not parts:
-        return _empty_table(tree, columns)
-    # permissive: a string column can promote to large_utf8 in only the
-    # row groups whose byte total crosses 2 GiB
-    return pa.concat_tables(parts, promote_options="permissive")
+    return read_row_groups(source, None, columns)
 
 
 def read_row_groups(source, indices, columns=None) -> pa.Table:
     """Read only the selected row groups (the reference's ``__getitem__``
-    slicing, fastparquet/api.py:252-276) — ranged chunk reads, so
-    unselected row groups move zero bytes."""
-    from fastparquet_spark.format.assembly import build_tree
-
-    src = _ByteSource(source)
-    try:
-        fmd = src.footer()
-        tree = build_tree(fmd["schema"])
-        bounds = _chunk_bounds(fmd, src.data_end)
-        rgs = [fmd["row_groups"][i] for i in indices]
-        parts = [_read_row_group(src, rg, tree, columns, bounds)
-                 for rg in rgs]
-    finally:
-        src.close()
+    slicing, fastparquet/api.py:252-276; ``indices`` None reads them
+    all) — ranged chunk reads, so unselected row groups move zero
+    bytes."""
+    with closing(_row_groups(source, indices, columns)) as groups:
+        fmd, tree = next(groups)
+        if not tree.children:
+            # zero-column file: rows exist only as a count
+            n = fmd["num_rows"] if indices is None else sum(
+                fmd["row_groups"][i]["num_rows"] for i in indices)
+            empty_rows = pa.array([{}] * n, type=pa.struct([]))
+            return pa.Table.from_batches(
+                [pa.RecordBatch.from_struct_array(empty_rows)])
+        parts = list(groups)
     if not parts:
         return _empty_table(tree, columns)
     # permissive: a string column can promote to large_utf8 in only the

@@ -6,6 +6,34 @@ make_part_file, :540-563 v1 page assembly, :414-641 write_column,
 chunk per column (optional dictionary page + one data page v1), then a
 thrift-compact ``FileMetaData`` footer, its length, and ``PAR1``.
 
+Chunk emitter contract.  Every column chunk (flat, paged, v2, LIST
+element, MAP key/value, STRUCT field) is written by one emitter,
+``ParquetWriter._emit_chunk``, as the reference writes every chunk in
+its one ``write_column``.  A leaf hands it an optional dictionary page
+and its data pages as ``(first_row, rows, nulls, body, levels, stats)``;
+the emitter writes them and builds the one ``ColumnChunk`` meta, the
+``ColumnResult`` and, when ``page_rows`` splits flat chunks, the
+PageIndex entry.  What varies per leaf:
+
+- flat chunks pick their encoding, may carry a dictionary page, chunk
+  stats and a bloom filter, and list their encodings sorted.  Without
+  ``page_rows`` one page covers the chunk, reuses the chunk's extracted
+  values and level bytes, and carries the chunk stats
+  (``distinct_count`` included); with it every ``page_rows`` slice is a
+  page with its own stats (no ``distinct_count``);
+- a v2 page is a flat page whose levels are written uncompressed in
+  front of the compressed body (``levels`` not None);
+- nested leaves are one v1 PLAIN page behind their rep/def levels, with
+  no stats, bloom filter or PageIndex, and list their encodings in
+  write order, ``[RLE, PLAIN]``.
+
+Every primitive leaf's schema element comes from ``_schema_leaf``; LIST
+and MAP entry levels come from ``_entry_levels``.  The file bytes are
+pinned: ``tests/test_page_golden.py`` hashes every assembly path, every
+codec and the native-off fallbacks, and ``scripts/writer_identity.py``
+prints the files of every engine and api writer path, to diff between
+two checkouts.
+
 Differences from the reference, by design:
 - encodings are AUTO-SELECTED from sampled stats (selection.py), not
   static PLAIN-unless-categorical;
@@ -292,13 +320,12 @@ def _def_levels(arr: pa.Array, n: int, v2: bool = False):
     (fastparquet/writer.py:375-408 make_definitions, :564-591 v2 layout).
 
     Zero-null fast path = single RLE run, exactly the reference's."""
-    null_count = arr.null_count
-    if null_count == 0:
+    if arr.null_count == 0:
         body = uvarint_encode(n << 1) + b"\x01"
     else:
         validity = arr.is_valid().to_numpy(zero_copy_only=False).astype(np.uint8)
         body = encode_hybrid(validity, 1)
-    return (body if v2 else _length_prefixed(body)), int(null_count)
+    return body if v2 else _length_prefixed(body)
 
 
 def _encode_values(values, ptype: int, encoding: int, head=b""):
@@ -325,6 +352,137 @@ def _encode_values(values, ptype: int, encoding: int, head=b""):
     else:
         raise ValueError(f"encoding {encoding} handled elsewhere")
     return b"".join((head, data)) if len(head) else data
+
+
+def _entry_levels(arr: pa.Array, children: list):
+    """Dremel levels of a LIST or MAP column's entries (the write-side
+    mirror of format/assembly.py's read side).  A non-null, non-empty
+    row holds one entry per element; a null or empty row holds one
+    placeholder entry.  Returns the rep levels (0 opens a row), each
+    entry's def level from its row (0 null row, 1 empty row, 2 entry)
+    and ``children`` (the flat child arrays) cut to the entries of the
+    non-null rows, in entry order."""
+    n = len(arr)
+    row_valid = arr.is_valid().to_numpy(zero_copy_only=False)
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32,
+                         count=n + 1, offset=arr.offset * 4).astype(np.int64)
+    lens = np.diff(offs)
+    entries = np.maximum(np.where(row_valid, lens, 0), 1)
+    row_start = np.zeros(n, dtype=np.int64)
+    np.cumsum(entries[:-1], out=row_start[1:])
+    reps = np.ones(int(entries.sum()), dtype=np.uint8)
+    reps[row_start] = 0
+    defs = np.full(len(reps), 2, dtype=np.uint8)
+    defs[row_start[~row_valid]] = 0
+    defs[row_start[row_valid & (lens == 0)]] = 1
+    children = [c.slice(int(offs[0]), int(offs[-1] - offs[0]))
+                for c in children]
+    if not row_valid.all():
+        # drop the child spans of null rows
+        keep = pa.array(np.repeat(row_valid, lens))
+        children = [c.filter(keep) for c in children]
+    return reps, defs, children
+
+
+def _nested_leaves(arr: pa.Array, kind: str, name: str, leaves: list):
+    """Per leaf chunk of a LIST, MAP or STRUCT column: (ColumnResult
+    name, path_in_schema, physical type, cast-to type, leaf values, def
+    levels, max def level, leading rep-level streams).
+
+    LIST: def 0 null row / 1 empty list / 2 null element / 3 value.  MAP:
+    the same entry geometry with two leaves, a REQUIRED key (max def 2)
+    and an OPTIONAL value (max def 3).  STRUCT: def 0 struct null / 1
+    field null / 2 value, no repetition."""
+    if kind == "struct":
+        svalid = arr.is_valid().to_numpy(zero_copy_only=False)
+        for leaf, ptype, cast in leaves:
+            child = arr.field(leaf)
+            cvalid = child.is_valid().to_numpy(zero_copy_only=False) & svalid
+            defs = np.where(cvalid, 2, np.where(svalid, 1, 0)).astype(np.uint8)
+            yield (f"{name}.{leaf}", [name, leaf], ptype, cast,
+                   child.filter(pa.array(cvalid)), defs, 2, ())
+        return
+    if kind == "list":
+        if pa.types.is_large_list(arr.type):
+            arr = arr.cast(pa.list_(arr.type.value_type))
+        group, children = "list", [arr.values]
+    else:
+        group, children = "key_value", [arr.keys, arr.items]
+    reps, defs, children = _entry_levels(arr, children)
+    reps = (encode_hybrid(reps, 1),)
+    for (leaf, ptype, cast), values in zip(leaves, children):
+        path = [name, group, leaf]
+        if leaf == "key":
+            yield f"{name}.key", path, ptype, cast, values, defs, 2, reps
+            continue
+        # an OPTIONAL leaf under the entries: a present entry's level 2
+        # becomes 3 for a value, stays 2 for a null value
+        vdefs = np.where(defs == 2, 3, defs).astype(np.uint8)
+        if values.null_count:
+            idx = np.nonzero(defs == 2)[0]
+            vdefs[idx[~values.is_valid().to_numpy(zero_copy_only=False)]] = 2
+        yield (name if kind == "list" else f"{name}.{leaf}", path, ptype,
+               cast, values, vdefs, 3, reps)
+
+
+def _schema_leaf(name: str, t: pa.DataType, rep: int, int96: bool = False,
+                 annotation: bytes | None = None):
+    """The SchemaElement of one primitive leaf (flat column, LIST
+    element, MAP key/value or STRUCT field), with its physical type and
+    the Arrow type its values are cast to before extraction.  Every leaf
+    carries the same annotation set: converted type, type_length,
+    decimal scale/precision and LogicalType."""
+    if int96 and pa.types.is_timestamp(t):
+        # legacy INT96 timestamps on request (the reference's
+        # times='int96', fastparquet/writer.py:192-197; behavioral
+        # spec: its Spark-interop matrix test_aroundtrips.py:
+        # 112-137).  INT96 is its own physical type — no converted
+        # type, no LogicalType annotation.
+        return ({"name": name, "type": Type.INT96, "repetition_type": rep},
+                Type.INT96, pa.timestamp("ns"))
+    ptype, conv, cast = _map_type(t)
+    # JSON/BSON annotations (reference fastparquet/writer.py:114-154
+    # object-encoding 'json'/'bson') are requested via Arrow field
+    # metadata: {"fpsc:annotation": "json"} on a string column or
+    # "bson" on a binary column
+    if ptype == Type.BYTE_ARRAY and annotation in (b"json", b"bson"):
+        conv = ConvertedType.JSON if annotation == b"json" \
+            else ConvertedType.BSON
+    elem = {"name": name, "type": ptype, "repetition_type": rep}
+    if conv is not None:
+        elem["converted_type"] = conv
+    if ptype == Type.FIXED_LEN_BYTE_ARRAY:
+        elem["type_length"] = t.byte_width
+    if conv == ConvertedType.DECIMAL:
+        elem["scale"] = t.scale
+        elem["precision"] = t.precision
+    lt = _logical_type(t)
+    if lt is not None:
+        elem["logicalType"] = lt
+    return elem, ptype, cast
+
+
+def _page_index(pages: list) -> dict:
+    """OffsetIndex and ColumnIndex of one paged chunk from its pages'
+    (location, rows, nulls, stats).  A non-null page without valid
+    bounds (NaN page, all-0xFF truncated max, unsupported stat shape)
+    cannot appear in a ColumnIndex as b"" — parquet-mr omits the whole
+    ColumnIndex for the chunk in that case, and so do we (ADVICE r4)."""
+    idx = {"offset_index": {"page_locations": [p[0] for p in pages]}}
+    null_pages, mins, maxs = [], [], []
+    for _, rows, nulls, pst in pages:
+        lo = (pst or {}).get("min_value")
+        hi = (pst or {}).get("max_value")
+        all_null = nulls == rows
+        if not all_null and (lo is None or hi is None):
+            return idx
+        null_pages.append(all_null)
+        mins.append(b"" if all_null else lo)
+        maxs.append(b"" if all_null else hi)
+    idx["column_index"] = {"null_pages": null_pages, "min_values": mins,
+                           "max_values": maxs, "boundary_order": 0,
+                           "null_counts": [p[2] for p in pages]}
+    return idx
 
 
 def write_file(sink, table: pa.Table, compression: str | int = "SNAPPY",
@@ -355,15 +513,20 @@ def write_file(sink, table: pa.Table, compression: str | int = "SNAPPY",
     min/max stats can't discriminate.
     Returns a FileResult with per-column lineage metrics.
     """
-    if data_page_version not in (1, 2):
-        raise ValueError("data_page_version must be 1 or 2")
     own = isinstance(sink, (str, bytes))
     f = open(sink, "wb") if own else sink
     try:
-        return _write(f, table, compression, encodings or {}, row_group_rows,
-                      stats, data_page_version, times, compat, bloom_filters,
-                      page_rows, custom_metadata, sorting_columns,
-                      required_cols)
+        w = ParquetWriter(f, table.schema, compression, encodings,
+                          stats=stats, data_page_version=data_page_version,
+                          times=times, compat=compat,
+                          bloom_filters=bloom_filters, page_rows=page_rows,
+                          custom_metadata=custom_metadata,
+                          sorting_columns=sorting_columns,
+                          required_cols=required_cols)
+        rg_rows = row_group_rows or max(table.num_rows, 1)
+        for start in range(0, table.num_rows, rg_rows):
+            w.write_row_group(table.slice(start, rg_rows))
+        return w.close()
     finally:
         if own:
             f.close()
@@ -445,7 +608,9 @@ class ParquetWriter:
         self.want_stats = stats
         self.page_version = data_page_version
         self.schema_elems = [{"name": "schema", "num_children": len(schema)}]
-        self.col_meta = []  # (ptype, cast-to, name); ptype "list" = nested
+        # (kind, name, [(leaf, ptype, cast-to)]): kind "flat" (one leaf),
+        # "list", "map" or "struct"
+        self.col_meta = []
         # REQUIRED flat leaves (the reference's has_nulls=False/'infer'/
         # list contract, fastparquet/writer.py:816 has_nulls): no def
         # levels are written and a null value is a loud error.  Nested
@@ -462,7 +627,8 @@ class ParquetWriter:
                 f"required_cols must name flat schema columns; invalid: "
                 f"{sorted(bad_req)}")
         for fld in schema:
-            if pa.types.is_list(fld.type) or pa.types.is_large_list(fld.type):
+            t = fld.type
+            if pa.types.is_list(t) or pa.types.is_large_list(t):
                 # LIST write — BEYOND the reference (its writer is flat
                 # only, fastparquet/writer.py:472 'No nested field
                 # handling'; only its READER does Dremel).  Standard
@@ -470,135 +636,53 @@ class ParquetWriter:
                 # group 'list' > optional 'element' leaf; max_def=3,
                 # max_rep=1.  Our assembly reader, pyarrow, DuckDB and
                 # Spark all reassemble it.
-                etype = fld.type.value_type
-                eptype, econv, ecast = _map_type(etype)
-                self.schema_elems.append(
+                kind = "list"
+                children = [("element", t.value_type, Repetition.OPTIONAL)]
+                self.schema_elems += [
                     {"name": fld.name, "repetition_type": Repetition.OPTIONAL,
-                     "converted_type": ConvertedType.LIST, "num_children": 1})
-                self.schema_elems.append(
+                     "converted_type": ConvertedType.LIST, "num_children": 1},
                     {"name": "list", "repetition_type": Repetition.REPEATED,
-                     "num_children": 1})
-                eelem = {"name": "element", "type": eptype,
-                         "repetition_type": Repetition.OPTIONAL}
-                if econv is not None:
-                    eelem["converted_type"] = econv
-                if eptype == Type.FIXED_LEN_BYTE_ARRAY:
-                    eelem["type_length"] = etype.byte_width
-                if econv == ConvertedType.DECIMAL:
-                    eelem["scale"] = etype.scale
-                    eelem["precision"] = etype.precision
-                lt = _logical_type(etype)
-                if lt is not None:
-                    eelem["logicalType"] = lt
-                self.schema_elems.append(eelem)
-                self.col_meta.append(("list", (eptype, ecast), fld.name))
-                continue
-            if pa.types.is_map(fld.type):
+                     "num_children": 1}]
+            elif pa.types.is_map(t):
                 # MAP write: optional group (MAP) > repeated key_value >
                 # required key + optional value; key max_def=2, value
                 # max_def=3, max_rep=1 — same entry geometry as LIST
                 # with two leaf chunks.
-                kptype, kconv, kcast = _map_type(fld.type.key_type)
-                vptype, vconv, vcast = _map_type(fld.type.item_type)
-                self.schema_elems.append(
+                kind = "map"
+                children = [("key", t.key_type, Repetition.REQUIRED),
+                            ("value", t.item_type, Repetition.OPTIONAL)]
+                self.schema_elems += [
                     {"name": fld.name, "repetition_type": Repetition.OPTIONAL,
-                     "converted_type": ConvertedType.MAP, "num_children": 1})
-                self.schema_elems.append(
+                     "converted_type": ConvertedType.MAP, "num_children": 1},
                     {"name": "key_value",
                      "repetition_type": Repetition.REPEATED,
-                     "num_children": 2})
-                def _leaf_elem(name, rep, t, ptype_, conv_):
-                    # same annotation set as the LIST path: omitting
-                    # type_length/scale/precision/logicalType made
-                    # decimal or fixed-size-binary map entries
-                    # unreadable
-                    e = {"name": name, "type": ptype_,
-                         "repetition_type": rep}
-                    if conv_ is not None:
-                        e["converted_type"] = conv_
-                    if ptype_ == Type.FIXED_LEN_BYTE_ARRAY:
-                        e["type_length"] = t.byte_width
-                    if conv_ == ConvertedType.DECIMAL:
-                        e["scale"] = t.scale
-                        e["precision"] = t.precision
-                    lt_ = _logical_type(t)
-                    if lt_ is not None:
-                        e["logicalType"] = lt_
-                    return e
-
-                self.schema_elems.append(_leaf_elem(
-                    "key", Repetition.REQUIRED, fld.type.key_type,
-                    kptype, kconv))
-                self.schema_elems.append(_leaf_elem(
-                    "value", Repetition.OPTIONAL, fld.type.item_type,
-                    vptype, vconv))
-                self.col_meta.append(
-                    ("map", ((kptype, kcast), (vptype, vcast)), fld.name))
-                continue
-            if pa.types.is_struct(fld.type):
+                     "num_children": 2}]
+            elif pa.types.is_struct(t):
                 # STRUCT write — also beyond the flat-only reference.
                 # One leaf chunk per field under an OPTIONAL group;
                 # max_def=2 (struct null / field null / value), no rep.
-                leaves = []
+                kind = "struct"
+                children = [(sub.name, sub.type, Repetition.OPTIONAL)
+                            for sub in t]
                 self.schema_elems.append(
                     {"name": fld.name, "repetition_type": Repetition.OPTIONAL,
-                     "num_children": fld.type.num_fields})
-                for sub in fld.type:
-                    sptype, sconv, scast = _map_type(sub.type)
-                    selem = {"name": sub.name, "type": sptype,
-                             "repetition_type": Repetition.OPTIONAL}
-                    if sconv is not None:
-                        selem["converted_type"] = sconv
-                    if sptype == Type.FIXED_LEN_BYTE_ARRAY:
-                        selem["type_length"] = sub.type.byte_width
-                    if sconv == ConvertedType.DECIMAL:
-                        selem["scale"] = sub.type.scale
-                        selem["precision"] = sub.type.precision
-                    lt = _logical_type(sub.type)
-                    if lt is not None:
-                        selem["logicalType"] = lt
-                    self.schema_elems.append(selem)
-                    leaves.append((sub.name, sptype, scast))
-                self.col_meta.append(("struct", leaves, fld.name))
+                     "num_children": t.num_fields})
+            else:
+                elem, ptype, cast = _schema_leaf(
+                    fld.name, t, Repetition.REQUIRED
+                    if fld.name in self.required else Repetition.OPTIONAL,
+                    int96=times == "int96",
+                    annotation=(fld.metadata or {}).get(b"fpsc:annotation"))
+                self.schema_elems.append(elem)
+                self.col_meta.append(("flat", fld.name,
+                                      [(fld.name, ptype, cast)]))
                 continue
-            if times == "int96" and pa.types.is_timestamp(fld.type):
-                # legacy INT96 timestamps on request (the reference's
-                # times='int96', fastparquet/writer.py:192-197; behavioral
-                # spec: its Spark-interop matrix test_aroundtrips.py:
-                # 112-137).  INT96 is its own physical type — no converted
-                # type, no LogicalType annotation.
-                self.schema_elems.append(
-                    {"name": fld.name, "type": Type.INT96,
-                     "repetition_type": Repetition.REQUIRED
-                     if fld.name in self.required
-                     else Repetition.OPTIONAL})
-                self.col_meta.append((Type.INT96, pa.timestamp("ns"), fld.name))
-                continue
-            ptype, conv, cast_to = _map_type(fld.type)
-            # JSON/BSON annotations (reference fastparquet/writer.py:114-154
-            # object-encoding 'json'/'bson') are requested via Arrow field
-            # metadata: {"fpsc:annotation": "json"} on a string column or
-            # "bson" on a binary column
-            ann = (fld.metadata or {}).get(b"fpsc:annotation")
-            if ann == b"json" and ptype == Type.BYTE_ARRAY:
-                conv = ConvertedType.JSON
-            elif ann == b"bson" and ptype == Type.BYTE_ARRAY:
-                conv = ConvertedType.BSON
-            elem = {"name": fld.name, "type": ptype,
-                    "repetition_type": Repetition.REQUIRED
-                    if fld.name in self.required else Repetition.OPTIONAL}
-            lt = _logical_type(fld.type)
-            if lt is not None:
-                elem["logicalType"] = lt
-            if conv is not None:
-                elem["converted_type"] = conv
-            if ptype == Type.FIXED_LEN_BYTE_ARRAY:
-                elem["type_length"] = fld.type.byte_width
-            if conv == ConvertedType.DECIMAL:
-                elem["scale"] = fld.type.scale
-                elem["precision"] = fld.type.precision
-            self.schema_elems.append(elem)
-            self.col_meta.append((ptype, cast_to, fld.name))
+            leaves = []
+            for leaf, leaf_type, rep in children:
+                elem, ptype, cast = _schema_leaf(leaf, leaf_type, rep)
+                self.schema_elems.append(elem)
+                leaves.append((leaf, ptype, cast))
+            self.col_meta.append((kind, fld.name, leaves))
         f.write(MAGIC)
         self.pos = len(MAGIC)
         self.row_groups: list[dict] = []
@@ -642,154 +726,6 @@ class ParquetWriter:
             name, desc, nf = (s, False, False) if isinstance(s, str) else s
             self._sorting_req.append((name, bool(desc), bool(nf)))
 
-    def _write_list_column(self, arr: pa.Array, name: str, meta, pos: int):
-        """One LIST column chunk: vectorized Dremel level GENERATION
-        (the write-side mirror of format/assembly.py's read side) + a
-        PLAIN-encoded element page.  Levels: null row -> def 0, empty
-        list -> 1, null element -> 2, value -> 3; rep 0 starts a row."""
-        import pyarrow.compute as pc
-
-        eptype, ecast = meta
-        if pa.types.is_large_list(arr.type):
-            arr = arr.cast(pa.list_(arr.type.value_type))
-        n = len(arr)
-        row_valid = arr.is_valid().to_numpy(zero_copy_only=False)
-        offs = np.frombuffer(arr.buffers()[1], dtype=np.int32,
-                             count=n + 1, offset=arr.offset * 4).astype(np.int64)
-        lens = np.diff(offs)
-        lens_v = np.where(row_valid, lens, 0)
-        entries = np.maximum(lens_v, 1)        # null/empty rows carry 1 entry
-        total = int(entries.sum())
-        row_start = np.zeros(n, dtype=np.int64)
-        np.cumsum(entries[:-1], out=row_start[1:])
-        reps = np.ones(total, dtype=np.uint8)
-        reps[row_start] = 0
-        defs = np.full(total, 3, dtype=np.uint8)
-        defs[row_start[~row_valid]] = 0
-        defs[row_start[row_valid & (lens == 0)]] = 1
-        flat = pc.list_flatten(arr)            # elements of non-null lists
-        if flat.null_count:
-            elem_mask = np.ones(total, dtype=bool)
-            elem_mask[row_start[~row_valid]] = False
-            elem_mask[row_start[row_valid & (lens == 0)]] = False
-            idx = np.nonzero(elem_mask)[0]
-            evalid = flat.is_valid().to_numpy(zero_copy_only=False)
-            defs[idx[~evalid]] = 2
-            flat = flat.drop_null()
-        if ecast is not None and flat.type != ecast:
-            flat = flat.cast(ecast)
-        head = _length_prefixed(encode_hybrid(reps, 1), encode_hybrid(defs, 2))
-        written, uncomp = self._write_data_page(
-            encode_plain(_extract(flat, eptype), eptype, head), total)
-        cmd = {"type": eptype, "encodings": [Encoding.RLE, Encoding.PLAIN],
-               "path_in_schema": [name, "list", "element"],
-               "codec": self.codec, "num_values": total,
-               "total_uncompressed_size": uncomp,
-               "total_compressed_size": written,
-               "data_page_offset": pos}
-        nulls = int((defs < 3).sum())
-        colres = ColumnResult(
-            name=name, encoding="plain", num_values=total,
-            null_count=nulls, uncompressed_size=uncomp,
-            compressed_size=written)
-        return written, {"file_offset": pos, "meta_data": cmd}, colres
-
-    def _write_map_column(self, arr: pa.Array, name: str, meta, pos: int):
-        """Two leaf chunks (key, value) sharing one LIST-shaped entry
-        geometry.  Key defs: 0 null map / 1 empty / 2 entry (REQUIRED
-        key); value defs add 3 = non-null value.  rep 0 opens a row."""
-        (kptype, kcast), (vptype, vcast) = meta
-        n = len(arr)
-        row_valid = arr.is_valid().to_numpy(zero_copy_only=False)
-        offs = np.frombuffer(arr.buffers()[1], dtype=np.int32,
-                             count=n + 1, offset=arr.offset * 4).astype(np.int64)
-        lens = np.diff(offs)
-        lens_v = np.where(row_valid, lens, 0)
-        entries = np.maximum(lens_v, 1)
-        total = int(entries.sum())
-        row_start = np.zeros(n, dtype=np.int64)
-        np.cumsum(entries[:-1], out=row_start[1:])
-        reps = np.ones(total, dtype=np.uint8)
-        reps[row_start] = 0
-        elem_mask = np.ones(total, dtype=bool)
-        elem_mask[row_start[~row_valid]] = False
-        elem_mask[row_start[row_valid & (lens == 0)]] = False
-        kdefs = np.full(total, 2, dtype=np.uint8)
-        kdefs[row_start[~row_valid]] = 0
-        kdefs[row_start[row_valid & (lens == 0)]] = 1
-        keys = arr.keys.slice(int(offs[0]), int(offs[-1] - offs[0]))
-        items = arr.items.slice(int(offs[0]), int(offs[-1] - offs[0]))
-        # non-null rows' entries in order == flattened children minus the
-        # spans of null rows
-        if not row_valid.all():
-            keep = np.repeat(row_valid, lens)
-            keys = keys.filter(pa.array(keep))
-            items = items.filter(pa.array(keep))
-        vdefs = np.where(kdefs == 2, 3, kdefs).astype(np.uint8)
-        if items.null_count:
-            idx = np.nonzero(elem_mask)[0]
-            ivalid = items.is_valid().to_numpy(zero_copy_only=False)
-            vdefs[idx[~ivalid]] = 2
-            items_nn = items.drop_null()
-        else:
-            items_nn = items
-        if kcast is not None and keys.type != kcast:
-            keys = keys.cast(kcast)
-        if vcast is not None and items_nn.type != vcast:
-            items_nn = items_nn.cast(vcast)
-        rep_b = encode_hybrid(reps, 1)
-        written_total = 0
-        entries_out = []
-        colres_out = []
-        for leaf, defs, leaf_arr, lptype in (
-                ("key", kdefs, keys, kptype),
-                ("value", vdefs, items_nn, vptype)):
-            head = _length_prefixed(rep_b, encode_hybrid(defs, 2))
-            written, uncomp = self._write_data_page(
-                encode_plain(_extract(leaf_arr, lptype), lptype, head), total)
-            cmd = {"type": lptype,
-                   "encodings": [Encoding.RLE, Encoding.PLAIN],
-                   "path_in_schema": [name, "key_value", leaf],
-                   "codec": self.codec, "num_values": total,
-                   "total_uncompressed_size": uncomp,
-                   "total_compressed_size": written,
-                   "data_page_offset": pos + written_total}
-            entries_out.append({"file_offset": pos + written_total,
-                                "meta_data": cmd})
-            colres_out.append(ColumnResult(
-                name=f"{name}.{leaf}", encoding="plain", num_values=total,
-                null_count=int((defs < (2 if leaf == "key" else 3)).sum()),
-                uncompressed_size=uncomp, compressed_size=written))
-            written_total += written
-        return written_total, entries_out, colres_out
-
-    def _write_struct_leaf(self, arr: pa.Array, name: str, leaf: str,
-                           sptype: int, scast, pos: int):
-        """One leaf chunk of a STRUCT column: def levels 0 (struct
-        null) / 1 (field null) / 2 (value), no repetition, PLAIN
-        values of the doubly-valid entries."""
-        svalid = arr.is_valid().to_numpy(zero_copy_only=False)
-        child = arr.field(leaf)
-        cvalid = child.is_valid().to_numpy(zero_copy_only=False) & svalid
-        defs = np.where(cvalid, 2, np.where(svalid, 1, 0)).astype(np.uint8)
-        leaf_nn = child.filter(pa.array(cvalid))
-        if scast is not None and leaf_nn.type != scast:
-            leaf_nn = leaf_nn.cast(scast)
-        n = len(arr)
-        written, uncomp = self._write_data_page(
-            encode_plain(_extract(leaf_nn, sptype), sptype,
-                         _length_prefixed(encode_hybrid(defs, 2))), n)
-        cmd = {"type": sptype, "encodings": [Encoding.RLE, Encoding.PLAIN],
-               "path_in_schema": [name, leaf], "codec": self.codec,
-               "num_values": n,
-               "total_uncompressed_size": uncomp,
-               "total_compressed_size": written, "data_page_offset": pos}
-        colres = ColumnResult(
-            name=f"{name}.{leaf}", encoding="plain", num_values=n,
-            null_count=int((~cvalid).sum()), uncompressed_size=uncomp,
-            compressed_size=written)
-        return written, {"file_offset": pos, "meta_data": cmd}, colres
-
     def _modern_trial(self, ptype: int, values) -> int:
         """compat='modern' admission: compress a bounded sample of the
         column both ways and keep the modern encoding only on a >2%
@@ -826,27 +762,10 @@ class ParquetWriter:
                 best, best_sz = enc, sz
         return best
 
-    def _level_bytes(self, arr, n: int, name: str,
-                     v2: bool = False) -> tuple[bytes, int]:
-        """Definition levels for one (page-)slice of ``name`` — empty
-        for REQUIRED columns (max_def=0: readers expect NO level
-        stream), where a null value is a loud error rather than silent
-        corruption."""
-        if name in self.required:
-            if arr.null_count:
-                raise ValueError(
-                    f"column {name!r} was declared non-null "
-                    f"(has_nulls/required_cols) but the data has "
-                    f"{arr.null_count} null(s)")
-            return b"", 0
-        return _def_levels(arr, n, v2=v2)
-
     def _maybe_build_bloom(self, cmd, values, name: str, ptype: int,
                            n_nonnull: int) -> None:
-        """Chunk bloom shared by the paged and single-page paths (the
-        two inline copies drifted once already): sized
-        from the chunk's ACTUAL ndv; skipped for BOOLEAN/all-null/
-        unconfigured columns."""
+        """A flat chunk's bloom filter, sized from the chunk's ACTUAL
+        ndv; skipped for BOOLEAN/all-null/unconfigured columns."""
         if name not in self.bloom_cols or n_nonnull <= 0 \
                 or ptype == Type.BOOLEAN:
             return
@@ -860,13 +779,13 @@ class ParquetWriter:
         bf.insert(h)
         self._blooms.append((cmd, bf))
 
-    def _write_page(self, header: dict, body, levels=b"") -> tuple[int, int]:
+    def _write_page(self, header: dict, body, levels=b"") -> int:
         """Compress ``body`` and write it as one page behind its header
-        (``header`` without the size and crc fields).  ``levels`` are a
-        v2 page's level bytes, written uncompressed in front of the
-        compressed values — as separate writes, so no buffer holds the
-        whole page.  Returns (bytes written, uncompressed bytes), both
-        including the page header."""
+        (``header`` without the size and crc fields), advancing
+        ``self.pos``.  ``levels`` are a v2 page's level bytes, written
+        uncompressed in front of the compressed values — as separate
+        writes, so no buffer holds the whole page.  Returns the page's
+        uncompressed bytes, page header included."""
         comp_body = comp.compress(body, self.codec, self.level)
         size = len(levels) + len(comp_body)
         ph = thrift.write_struct("PageHeader", dict(
@@ -876,127 +795,190 @@ class ParquetWriter:
         if len(levels):
             self.f.write(levels)
         self.f.write(comp_body)
-        return len(ph) + size, len(ph) + len(levels) + len(body)
+        self.pos += len(ph) + size
+        return len(ph) + len(levels) + len(body)
 
-    def _write_data_page(self, body, num_values: int,
-                         encoding: int = Encoding.PLAIN,
-                         stats: dict | None = None) -> tuple[int, int]:
-        """One v1 data page (RLE levels inside ``body``); see _write_page."""
-        dph = {"num_values": num_values, "encoding": encoding,
-               "definition_level_encoding": Encoding.RLE,
-               "repetition_level_encoding": Encoding.RLE}
+    def _emit_chunk(self, label: str, path: list, ptype: int, encoding: int,
+                    num_values: int, null_count: int, pages,
+                    dictionary=None, stats: dict | None = None) -> dict:
+        """Write one leaf's column chunk at ``self.pos`` and return its
+        ColumnChunk entry: the optional ``dictionary`` page (PLAIN label
+        bytes, label count), then each of ``pages``, an iterable of
+        ``(first_row, rows, nulls, body, levels, page stats)``.  With
+        ``levels`` None the page is v1 (its levels already lead
+        ``body``); otherwise it is v2.  Records the chunk's ColumnResult
+        as ``label`` and, for a flat chunk under ``page_rows``, its
+        PageIndex."""
+        nested = len(path) > 1  # a LIST/MAP/STRUCT leaf
+        start = self.pos
+        cmd = {"type": ptype, "path_in_schema": path, "codec": self.codec,
+               "num_values": num_values}
+        encs = [Encoding.RLE, encoding]
+        uncomp = n_dict = 0
+        if dictionary is not None:
+            labels, n_dict = dictionary
+            cmd["dictionary_page_offset"] = self.pos
+            uncomp += self._write_page(
+                {"type": PageType.DICTIONARY_PAGE,
+                 "dictionary_page_header": {
+                     "num_values": n_dict,
+                     "encoding": Encoding.PLAIN_DICTIONARY}}, labels)
+            encs.append(Encoding.PLAIN)
+        cmd["data_page_offset"] = self.pos
+        located = []  # (OffsetIndex location, rows, nulls, stats) per page
+        for first_row, rows, nulls, body, levels, pst in pages:
+            at = self.pos
+            if levels is None:
+                uncomp += self._write_page(
+                    {"type": PageType.DATA_PAGE, "data_page_header": {
+                        "num_values": rows, "encoding": encoding,
+                        "definition_level_encoding": Encoding.RLE,
+                        "repetition_level_encoding": Encoding.RLE,
+                        "statistics": pst}}, body)
+            else:
+                # v2: the levels stay uncompressed outside the compressed
+                # values (fastparquet/writer.py:564-591)
+                uncomp += self._write_page(
+                    {"type": PageType.DATA_PAGE_V2, "data_page_header_v2": {
+                        "num_values": rows, "num_nulls": nulls,
+                        "num_rows": rows, "encoding": encoding,
+                        "definition_levels_byte_length": len(levels),
+                        "repetition_levels_byte_length": 0,
+                        "is_compressed": self.codec != 0,
+                        "statistics": pst}}, body, levels)
+            located.append(({"offset": at,
+                             "compressed_page_size": self.pos - at,
+                             "first_row_index": first_row}, rows, nulls, pst))
+        written = self.pos - start
+        # flat chunks list their encodings sorted, nested leaves in write
+        # order (RLE levels, PLAIN values); uncomp counts page headers,
+        # per spec
+        cmd.update(encodings=encs if nested else sorted(set(encs)),
+                   total_uncompressed_size=uncomp,
+                   total_compressed_size=written)
         if stats:
-            dph["statistics"] = stats
-        return self._write_page(
-            {"type": PageType.DATA_PAGE, "data_page_header": dph}, body)
+            cmd["statistics"] = stats
+        entry = {"file_offset": start, "meta_data": cmd}
+        if self.page_rows and not nested:
+            self._page_index.append((entry, _page_index(located)))
+        self.result.columns.append(ColumnResult(
+            name=label, encoding=_ENC_NAMES[encoding], num_values=num_values,
+            null_count=null_count, uncompressed_size=uncomp,
+            compressed_size=written, dict_entries=n_dict))
+        return entry
 
-    def _emit_dict_page(self, dict_page_bytes, n_dict: int) -> tuple[int, int]:
-        """Compress and write one PLAIN dictionary page; see _write_page."""
-        return self._write_page(
-            {"type": PageType.DICTIONARY_PAGE,
-             "dictionary_page_header": {
-                 "num_values": n_dict,
-                 "encoding": Encoding.PLAIN_DICTIONARY}},
-            dict_page_bytes)
-
-    def _write_flat_pages(self, arr, name: str, ptype: int, encoding: int,
-                          pos: int, values):
-        """Multi-page emission of one flat column chunk (v1 pages) plus
-        the per-page metadata the PageIndex needs.  Pages are
-        independent units per the spec (DELTA/DBA chains restart), so a
-        reader can decode any subset; a dictionary page, when the chunk
-        is dict-encoded, fronts the chunk and is shared by all pages."""
+    def _flat_pages(self, arr, values, required: bool, ptype: int,
+                    encoding: int, codes, n_dict: int, stats):
+        """The data pages of one flat chunk, built one at a time as
+        ``_emit_chunk`` consumes them.  Without ``page_rows`` one page
+        covers the chunk: it reuses the chunk's ``values`` and carries
+        the chunk ``stats``.  With it each ``page_rows`` slice is its
+        own page with its own stats; pages are independent units per
+        the spec (DELTA/DBA chains restart), so a reader can decode any
+        subset, and a dictionary page fronts the chunk for all pages."""
         n = len(arr)
-        chunk_offset = pos
-        dict_off = None
-        written = 0
-        uncomp_total = 0
-        n_dict = 0
-        codes = None
-        if encoding == Encoding.PLAIN_DICTIONARY:
-            nonnull = arr.drop_null() if arr.null_count else arr
-            codes, labels = dict_build(nonnull)
-            n_dict = len(labels)
-            dict_off = pos
-            written, uncomp_total = self._emit_dict_page(
-                encode_plain(_extract_labels(labels, ptype), ptype), n_dict)
-            pos += written
-
-        locs, null_pages, mins, maxs, null_counts = [], [], [], [], []
-        index_ok = True
-        data_off = None
-        total_nulls = 0
+        step = self.page_rows or n
+        v2 = self.page_version == 2
         nn_seen = 0
-        for start in range(0, n, self.page_rows):
-            parr = arr.slice(start, self.page_rows)
-            pn = len(parr)
-            defs, nulls = self._level_bytes(parr, pn, name, v2=False)
-            total_nulls += nulls
-            pvals = None
+        for start in range(0, n, step):
+            whole = step >= n
+            parr = arr if whole else arr.slice(start, step)
+            rows, nulls = len(parr), parr.null_count
+            # REQUIRED columns (max_def=0): readers expect NO level stream
+            levels = b"" if required else _def_levels(parr, rows, v2=v2)
+            head = b"" if v2 else levels
+            pvals = values if whole else None
             if codes is not None:
-                nn = pn - nulls
-                body = b"".join((defs, dict_data_page(
+                nn = rows - nulls
+                body = b"".join((head, dict_data_page(
                     codes[nn_seen:nn_seen + nn], n_dict)))
                 nn_seen += nn
-                if self.want_stats and nn:
-                    # stats need physical values even when the page body is
-                    # dictionary indices (ADVICE r4: pvals=None crashed
-                    # _make_stats for numeric columns)
-                    pvals = _extract(parr, ptype)
             else:
-                pvals = _extract(parr, ptype)
-                body = _encode_values(pvals, ptype, encoding, head=defs)
-            pst = _make_stats(parr, pvals, ptype, nulls, 0) \
-                if self.want_stats and pn else None
-            page_bytes, page_uncomp = self._write_data_page(
-                body, pn, encoding, pst)
-            if data_off is None:
-                data_off = pos
-            locs.append({"offset": pos,
-                         "compressed_page_size": page_bytes,
-                         "first_row_index": start})
-            all_null = nulls == pn
-            null_pages.append(all_null)
-            lob = (pst or {}).get("min_value")
-            hib = (pst or {}).get("max_value")
-            if not all_null and (lob is None or hib is None):
-                # a non-null page without valid bounds (NaN page, all-0xFF
-                # truncated max, unsupported stat shape) cannot appear in a
-                # ColumnIndex as b"" — parquet-mr omits the whole index for
-                # the chunk in that case, and so do we (ADVICE r4)
-                index_ok = False
-            mins.append(b"" if all_null or lob is None else lob)
-            maxs.append(b"" if all_null or hib is None else hib)
-            null_counts.append(nulls)
-            written += page_bytes
-            uncomp_total += page_uncomp
-            pos += page_bytes
+                if pvals is None:
+                    pvals = _extract(parr, ptype)
+                body = _encode_values(pvals, ptype, encoding, head)
+            pst = stats
+            if self.page_rows:
+                # per-page stats need physical values even when the page
+                # body is dictionary indices (ADVICE r4)
+                pst = _make_stats(
+                    parr, _extract(parr, ptype) if pvals is None else pvals,
+                    ptype, nulls, 0) if self.want_stats else None
+            yield start, rows, nulls, body, levels if v2 else None, pst
 
-        st = _make_stats(arr, values, ptype, total_nulls, n_dict) \
-            if self.want_stats and n else None
-        enc_list = sorted({Encoding.RLE, encoding} |
-                          ({Encoding.PLAIN} if codes is not None else set()))
-        cmd = {"type": ptype, "encodings": enc_list,
-               "path_in_schema": [name], "codec": self.codec,
-               "num_values": n,
-               "total_uncompressed_size": uncomp_total,
-               "total_compressed_size": written,
-               "data_page_offset": data_off}
-        if dict_off is not None:
-            cmd["dictionary_page_offset"] = dict_off
-        if st:
-            cmd["statistics"] = st
-        idx = {"offset_index": {"page_locations": locs}}
-        if index_ok:
-            idx["column_index"] = {"null_pages": null_pages,
-                                   "min_values": mins, "max_values": maxs,
-                                   "boundary_order": 0,
-                                   "null_counts": null_counts}
-        colres = ColumnResult(
-            name=name, encoding=_ENC_NAMES[encoding], num_values=n,
-            null_count=total_nulls, uncompressed_size=uncomp_total,
-            compressed_size=written, dict_entries=n_dict)
-        return written, chunk_offset, cmd, idx, colres, values, total_nulls
+    def _write_flat(self, arr, name: str, ptype: int, cast_to) -> dict:
+        """One flat column chunk: cast, choose the encoding, then emit
+        the optional dictionary page and the data pages with the chunk
+        stats, and build the chunk's bloom filter."""
+        if cast_to is not None and arr.type != cast_to:
+            try:
+                arr = arr.cast(cast_to)
+            except pa.lib.ArrowInvalid:
+                if (pa.types.is_duration(cast_to)
+                        or pa.types.is_timestamp(cast_to)
+                        or pa.types.is_time64(cast_to)
+                        or pa.types.is_time32(cast_to)):
+                    # sub-target-unit components truncate like the
+                    # reference (fastparquet time_shift floors to
+                    # the stored unit) instead of crashing write()
+                    import pyarrow.compute as _pc
+
+                    arr = _pc.cast(arr, options=_pc.CastOptions(
+                        target_type=cast_to,
+                        allow_time_truncate=True))
+                else:
+                    raise
+        n, null_count = len(arr), arr.null_count
+        required = name in self.required
+        if required and null_count:
+            # a null in a REQUIRED column is a loud error rather than
+            # silent corruption
+            raise ValueError(
+                f"column {name!r} was declared non-null "
+                f"(has_nulls/required_cols) but the data has "
+                f"{null_count} null(s)")
+        # values feed encoding choice, stats, the bloom filter and a
+        # single page's body
+        values = _extract(arr, ptype)
+        enc_override = self.encodings.get(name)
+        if enc_override is not None:
+            encoding = _ENC_BY_NAME[enc_override]
+        elif ptype in (Type.FIXED_LEN_BYTE_ARRAY, Type.INT96) \
+                or pa.types.is_decimal(arr.type):
+            encoding = Encoding.PLAIN
+        elif name in self._chosen:
+            encoding = self._chosen[name]
+        else:
+            if ptype == Type.BYTE_ARRAY:
+                nonnull = arr.drop_null() if null_count else arr
+                st = column_stats_arrow(nonnull)
+            else:
+                st = column_stats(values, ptype)
+            encoding = choose_encoding(st, ptype, parquet_compat=True)
+            if self.compat == "modern" and encoding == Encoding.PLAIN:
+                encoding = self._modern_trial(ptype, values)
+            self._chosen[name] = encoding
+        if encoding in (Encoding.BYTE_STREAM_SPLIT,
+                        Encoding.DELTA_LENGTH_BYTE_ARRAY,
+                        Encoding.DELTA_BYTE_ARRAY):
+            self._modern_used = True
+        codes = dictionary = None
+        n_dict = 0
+        if encoding == Encoding.PLAIN_DICTIONARY:
+            codes, labels = dict_build(arr.drop_null() if null_count else arr)
+            n_dict = len(labels)
+            dictionary = (encode_plain(_extract(labels, ptype), ptype), n_dict)
+        # statistics over non-null values
+        stats = _make_stats(arr, values, ptype, null_count, n_dict) \
+            if self.want_stats else None
+        entry = self._emit_chunk(
+            name, [name], ptype, encoding, n, null_count,
+            self._flat_pages(arr, values, required, ptype, encoding, codes,
+                             n_dict, stats),
+            dictionary, stats)
+        self._maybe_build_bloom(entry["meta_data"], values, name, ptype,
+                                n - null_count)
+        return entry
 
     def write_row_group(self, chunk: pa.Table) -> None:
         """Encode one row group from an Arrow table/batch slice."""
@@ -1077,167 +1059,31 @@ class ParquetWriter:
         return self.result
 
     def _write_row_group(self, chunk: pa.Table) -> None:
-        encodings = self.encodings
-        want_stats = self.want_stats
-        page_version = self.page_version
-        pos = self.pos
         chunks_cols = []
-        for ci, (ptype, cast_to, name) in enumerate(self.col_meta):
+        for ci, (kind, name, leaves) in enumerate(self.col_meta):
             if self._col_comp is not None:
                 # per-column codec: every page of this chunk reads it
                 self.codec, self.level = self._col_comp.get(
                     name, self._default_comp)
             arr = _one_array(chunk.column(ci))
-            if ptype == "list":
-                written, cmd_entry, colres = self._write_list_column(
-                    arr, name, cast_to, pos)
-                chunks_cols.append(cmd_entry)
-                self.result.columns.append(colres)
-                pos += written
+            if kind == "flat":
+                _, ptype, cast_to = leaves[0]
+                chunks_cols.append(self._write_flat(arr, name, ptype, cast_to))
                 continue
-            if ptype == "map":
-                written, entries, colres_list = self._write_map_column(
-                    arr, name, cast_to, pos)
-                chunks_cols.extend(entries)
-                self.result.columns.extend(colres_list)
-                pos += written
-                continue
-            if ptype == "struct":
-                for leaf_name, sptype, scast in cast_to:
-                    written, cmd_entry, colres = self._write_struct_leaf(
-                        arr, name, leaf_name, sptype, scast, pos)
-                    chunks_cols.append(cmd_entry)
-                    self.result.columns.append(colres)
-                    pos += written
-                continue
-            if cast_to is not None and arr.type != cast_to:
-                try:
-                    arr = arr.cast(cast_to)
-                except pa.lib.ArrowInvalid:
-                    if (pa.types.is_duration(cast_to)
-                            or pa.types.is_timestamp(cast_to)
-                            or pa.types.is_time64(cast_to)
-                            or pa.types.is_time32(cast_to)):
-                        # sub-target-unit components truncate like the
-                        # reference (fastparquet time_shift floors to
-                        # the stored unit) instead of crashing write()
-                        import pyarrow.compute as _pc
-
-                        arr = _pc.cast(arr, options=_pc.CastOptions(
-                            target_type=cast_to,
-                            allow_time_truncate=True))
-                    else:
-                        raise
-            n = len(arr)
-            # values feed encoding choice / stats / blooms either way;
-            # the full-column def-level RLE is only the SINGLE-page
-            # path's — the paged branch regenerates levels per page and
-            # would throw this away (pure O(n) waste on the
-            # throughput path)
-            values = _extract(arr, ptype)
-            if not (self.page_rows and page_version == 1):
-                defs, null_count = self._level_bytes(
-                    arr, n, name, v2=page_version == 2)
-
-            enc_override = encodings.get(name)
-            if enc_override is not None:
-                encoding = _ENC_BY_NAME[enc_override]
-            elif ptype in (Type.FIXED_LEN_BYTE_ARRAY, Type.INT96) \
-                    or pa.types.is_decimal(arr.type):
-                encoding = Encoding.PLAIN
-            elif name in self._chosen:
-                encoding = self._chosen[name]
-            else:
-                if ptype == Type.BYTE_ARRAY:
-                    nonnull = arr.drop_null() if arr.null_count else arr
-                    st = column_stats_arrow(nonnull)
-                else:
-                    st = column_stats(values, ptype)
-                encoding = choose_encoding(st, ptype, parquet_compat=True)
-                if self.compat == "modern" and encoding == Encoding.PLAIN:
-                    encoding = self._modern_trial(ptype, values)
-                self._chosen[name] = encoding
-
-            if encoding in (Encoding.BYTE_STREAM_SPLIT,
-                            Encoding.DELTA_LENGTH_BYTE_ARRAY,
-                            Encoding.DELTA_BYTE_ARRAY):
-                self._modern_used = True
-            if self.page_rows and page_version == 1:
-                (written, chunk_offset, cmd, idx, colres, values,
-                 null_count) = self._write_flat_pages(
-                    arr, name, ptype, encoding, pos, values)
-                self._maybe_build_bloom(cmd, values, name, ptype,
-                                        n - null_count)
-                entry = {"file_offset": chunk_offset, "meta_data": cmd}
-                self._page_index.append((entry, idx))
-                chunks_cols.append(entry)
-                self.result.columns.append(colres)
-                pos += written
-                continue
-            # v1: the levels lead the page body and are compressed with
-            # it; v2: they stay uncompressed outside the compressed
-            # values (fastparquet/writer.py:564-591)
-            v1 = page_version == 1
-            head = defs if v1 else b""
-            n_dict = 0
-            chunk_offset = pos
-            dict_off = None
-            written = uncomp_total = 0
-            if encoding == Encoding.PLAIN_DICTIONARY:
-                nonnull = arr.drop_null() if arr.null_count else arr
-                codes, labels = dict_build(nonnull)
-                n_dict = len(labels)
-                dict_off = pos
-                written, uncomp_total = self._emit_dict_page(
-                    encode_plain(_extract_labels(labels, ptype), ptype),
-                    n_dict)
-                pos += written
-                body = b"".join((head, dict_data_page(codes, n_dict)))
-            else:
-                body = _encode_values(values, ptype, encoding, head)
-
-            # statistics over non-null values
-            st = None
-            if want_stats and n:
-                st = _make_stats(arr, values, ptype, null_count, n_dict)
-            if v1:
-                page_bytes, page_uncomp = self._write_data_page(
-                    body, n, encoding, st)
-            else:
-                dph = {"num_values": n, "num_nulls": null_count,
-                       "num_rows": n, "encoding": encoding,
-                       "definition_levels_byte_length": len(defs),
-                       "repetition_levels_byte_length": 0,
-                       "is_compressed": self.codec != 0}
-                if st:
-                    dph["statistics"] = st
-                page_bytes, page_uncomp = self._write_page(
-                    {"type": PageType.DATA_PAGE_V2,
-                     "data_page_header_v2": dph}, body, levels=defs)
-            data_off = pos
-            written += page_bytes
-            uncomp_total += page_uncomp  # incl. page headers, per spec
-            pos += page_bytes
-            enc_list = sorted({Encoding.RLE, encoding} |
-                              ({Encoding.PLAIN}
-                               if dict_off is not None else set()))
-            cmd = {"type": ptype, "encodings": enc_list,
-                   "path_in_schema": [name], "codec": self.codec,
-                   "num_values": n,
-                   "total_uncompressed_size": uncomp_total,
-                   "total_compressed_size": written,
-                   "data_page_offset": data_off}
-            if dict_off is not None:
-                cmd["dictionary_page_offset"] = dict_off
-            if st:
-                cmd["statistics"] = st
-            self._maybe_build_bloom(cmd, values, name, ptype,
-                                    n - null_count)
-            chunks_cols.append({"file_offset": chunk_offset, "meta_data": cmd})
-            self.result.columns.append(ColumnResult(
-                name=name, encoding=_ENC_NAMES[encoding], num_values=n,
-                null_count=null_count, uncompressed_size=uncomp_total,
-                compressed_size=written, dict_entries=n_dict))
+            for (label, path, ptype, cast_to, values, defs, max_def,
+                 reps) in _nested_leaves(arr, kind, name, leaves):
+                # one v1 page of PLAIN non-null values behind the levels
+                if values.null_count:
+                    values = values.drop_null()
+                if cast_to is not None and values.type != cast_to:
+                    values = values.cast(cast_to)
+                body = encode_plain(
+                    _extract(values, ptype), ptype,
+                    _length_prefixed(*reps, encode_hybrid(defs, 2)))
+                chunks_cols.append(self._emit_chunk(
+                    label, path, ptype, Encoding.PLAIN, len(defs),
+                    int((defs < max_def).sum()),
+                    [(0, len(defs), 0, body, None, None)]))
         # spec: total_byte_size is the UNCOMPRESSED column data total
         # (planners size splits/memory from it)
         rg = {"columns": chunks_cols,
@@ -1259,28 +1105,6 @@ class ParquetWriter:
             if sc:
                 rg["sorting_columns"] = sc
         self.row_groups.append(rg)
-        self.pos = pos
-
-
-def _write(f, table, compression, encodings, row_group_rows, want_stats,
-           page_version=1, times="int64", compat="reference",
-           bloom_filters=None, page_rows=None, custom_metadata=None,
-           sorting_columns=None, required_cols=None):
-    n_rows = table.num_rows
-    rg_rows = row_group_rows or max(n_rows, 1)
-    w = ParquetWriter(f, table.schema, compression, encodings,
-                      stats=want_stats, data_page_version=page_version,
-                      times=times, compat=compat, bloom_filters=bloom_filters,
-                      page_rows=page_rows, custom_metadata=custom_metadata,
-                      sorting_columns=sorting_columns,
-                      required_cols=required_cols)
-    for start in range(0, n_rows, rg_rows):
-        w.write_row_group(table.slice(start, rg_rows))
-    return w.close()
-
-
-def _extract_labels(labels: pa.Array, ptype: int):
-    return _extract(labels, ptype)
 
 
 def _make_stats(arr: pa.Array, values, ptype: int, null_count: int, n_dict: int):

@@ -229,33 +229,35 @@ def test_connected_components_chain_converges_log_rounds(spark):
 
 
 def test_connected_components_checkpoint_cadence(spark):
-    """(r5 judge #5) checkpoint_every=3 cuts lineage every 3rd round:
-    for a chain needing ~8 rounds, localCheckpoint fires ~8/3 times on
-    the label table (plus the one eager edge checkpoint) while results
-    stay identical.  (The DEFAULT stays 1 — measured faster at sf0.1,
-    see connected_components docstring — this pins the knob.)"""
+    """(r5 judge #5) The one lineage policy: one eager checkpoint of the
+    edges, then one label checkpoint per round (rounds counted by the
+    per-round convergence aggregate), with identical results."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from fastparquet_spark.analytics.dedup import connected_components
 
-    calls = []
-    orig = DataFrame.localCheckpoint
+    calls, rounds = [], []
+    orig_ckpt, orig_agg = DataFrame.localCheckpoint, DataFrame.agg
 
     def counting(self, eager=True):
         calls.append(1)
-        return orig(self, eager=eager)
+        return orig_ckpt(self, eager=eager)
 
-    DataFrame.localCheckpoint = counting
+    def counting_agg(self, *exprs):
+        rounds.append(1)
+        return orig_agg(self, *exprs)
+
+    DataFrame.localCheckpoint, DataFrame.agg = counting, counting_agg
     try:
         n = 200
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "src long, dst long")
-        labels = connected_components(edges, max_iters=12,
-                                      checkpoint_every=3)
+        labels = connected_components(edges, max_iters=12)
+        rounds_run = len(rounds)
         rows = labels.collect()
     finally:
-        DataFrame.localCheckpoint = orig
+        DataFrame.localCheckpoint, DataFrame.agg = orig_ckpt, orig_agg
     assert len(rows) == n and all(r["cluster"] == 0 for r in rows)
-    # 1 edge checkpoint + floor(rounds/3) label checkpoints; the old
-    # per-round policy fired >= rounds+1 >= 9 times
-    assert 2 <= len(calls) <= 5
+    # pointer doubling: a 200-chain converges in ~log2(200) rounds
+    assert 3 <= rounds_run <= 12
+    assert len(calls) == 1 + rounds_run

@@ -204,6 +204,26 @@ def test_nan_hive_keys_keep_their_rows(tmp_path):
         "k=nan/part.1.parquet"]
 
 
+def test_nan_hive_value_is_one_cat(tmp_path):
+    """A NaN partition value is listed once however many files hold
+    it, in ``ParquetFile.cats`` and in ``paths_to_cats``."""
+    import math
+
+    out = str(tmp_path / "nan")
+    nan = float("nan")
+    api.write(out, pa.table({"k": [1.0, nan, 2.0, nan], "v": [1, 2, 3, 4]}),
+              file_scheme="hive", partition_on=["k"])
+    api.write(out, pa.table({"k": [nan], "v": [5]}), file_scheme="hive",
+              partition_on=["k"], append=True)
+    assert len(dataset_metadata(out)) == 4
+    cats = api.ParquetFile(out).cats["k"]
+    assert cats[:2] == [1.0, 2.0] and len(cats) == 3 and math.isnan(cats[2])
+    scheme, pcats = api.paths_to_cats(["k=nan/a", "k=nan/b", "k=1.0/c"])
+    assert scheme == "hive"
+    assert pcats["k"][0] == 1.0 and len(pcats["k"]) == 2
+    assert math.isnan(pcats["k"][1])
+
+
 def test_multi_column_null_keys_split_once(tmp_path):
     """A key holding a null string on a multi-column split is one key:
     every row lands in exactly one file, in the engine writer (which

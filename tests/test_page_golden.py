@@ -92,10 +92,18 @@ PATHS = {
     "required": lambda: _write(compression="ZSTD",
                                required_cols=["id", "text", "score"]),
     "modern": lambda: _write(compression="ZSTD", compat="modern"),
+    "v1_paged_required_modern": lambda: _write(
+        compression="ZSTD", page_rows=700, compat="modern",
+        required_cols=["id", "text", "score"],
+        encodings={"small": "delta", "text": "dict"}),
+    "column_codecs": lambda: _write(
+        compression={"_default": "ZSTD", "text": "SNAPPY", "lst": None,
+                     "mp": "GZIP"}),
     "fpsc": _container,
 }
 
 GOLDEN = {
+    "column_codecs": "13060f4a101112b853230154d039f089ce8cf18ebf377c629c03224bcba9dfdd",
     "forced_encodings": "de309cac9435eac8a66cb991fa125220aedf5a2b3355a50eb53e763512dd8a46",
     "fpsc": "9de1ea6a9e274d25645c2e5b19b5cdf6e52b8058c7a79dd55a3eccf298a353aa",
     "int96": "135890a6b34ca7995bdf3d89631f07a0ce29ac356dbac3b17b0ee7401f7ba25a",
@@ -103,6 +111,7 @@ GOLDEN = {
     "required": "82db2a46701495db52da62d5b8d8ffb33c7d9de3038bf87b6f926a5d5c3ece75",
     "v1": "35bf600b112ead7c7ac2b5443397060072ad64d92c9888a2ff4033f52cb56d22",
     "v1_paged_bloom": "20038438360f2215a64e686da2a943241d4199b2568b8c9e877f8c4bed128faa",
+    "v1_paged_required_modern": "700028eca04bd93bcf439277c3b7c501e9733b0dbc397023c08676eaec76a21a",
     "v1_rowgroups": "346c64e29a27ab66dbd7f49ef5d3da5787c7ecd81375ff7bf7907f8635015624",
     "v2": "4c0b4b3ad7e95df23ceba974932334aed5cea6afbc2208491cf89ed88a89e324",
     "v2_uncompressed": "a9d7532c15b55b9b6ef1bad7cdecdcb8bae56af8b216ff609dad086a9b480fd2",
@@ -154,7 +163,7 @@ def test_golden_table_covers_every_encoding_and_reads_back():
     assert {"dict", "plain", "delta"} <= {c.encoding for c in res.columns}
     for path in ("v1", "v1_rowgroups", "v2", "v2_uncompressed",
                  "v1_paged_bloom", "forced_encodings", "required", "int96",
-                 "modern"):
+                 "modern", "v1_paged_required_modern", "column_codecs"):
         assert read_file(PATHS[path]()).cast(t.schema).equals(t), path
     back = read_container(_container())
     assert back.equals(t.drop_columns(["mp", "st"]))

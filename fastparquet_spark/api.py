@@ -391,10 +391,10 @@ class ParquetFile:
         projection's union columns (all for ``columns=None``), typed
         null where the file lacks one (the absent rule,
         format/dataset.py ``dataset_columns``), then the file's
-        partition constants.  With no column to decode, row cardinality
-        comes from the footer counts (the reference returns the
-        full-cardinality column here — fastparquet api.py:387-476; r5
-        ADVICE #2).  ``clauses`` (a DNF) applies the exact row filter:
+        partition constants.  With no column to decode, the read still
+        carries the row groups' row count (the reference returns the
+        full-cardinality column here — fastparquet api.py:387-476).
+        ``clauses`` (a DNF) applies the exact row filter:
         partition terms and terms on absent columns are decided for
         the whole file, the rest on decoded columns.  None when the
         projection names no column of the file."""
@@ -406,13 +406,9 @@ class ParquetFile:
         cols = want + [c for clause in clauses or () for c, _op, _v in clause
                        if c in self._names and c not in want]
         absent = self._absent[m["file"]]
-        read = [c for c in cols if c not in absent]
-        if read:
-            tbl = read_row_groups(self._path(m["file"]), _real_ris(m, ris),
-                                  columns=read)
-            n = tbl.num_rows
-        else:
-            n = sum(m["fmd"]["row_groups"][ri]["num_rows"] for ri in ris)
+        tbl = read_row_groups(self._path(m["file"]), _real_ris(m, ris),
+                              columns=[c for c in cols if c not in absent])
+        n = tbl.num_rows
         tbl = pa.Table.from_arrays(
             [pa.nulls(n, self._atype(c)) if c in absent else tbl.column(c)
              for c in cols]

@@ -35,7 +35,7 @@ from fastparquet_spark.format.predicate import _file_clauses, dnf
 def plan_scan(root: str, metas, filters, columns, fs=None):
     """The driver plan of a pruned scan — the ONE planner behind
     ``paged_read`` and the fps data source.  Returns
-    ``(arrow_schema, file_cols, drop_cols, part_cols, units)``:
+    ``(arrow_schema, file_cols, part_cols, units)``:
 
     - the result schema is the UNION of the per-file leaf schemas
       (metadata-only; schema-evolution-tolerant — typed-null fill for
@@ -43,23 +43,18 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
       cannot decode nested subtrees; use spark.read.parquet for nested
       datasets), then the ``columns`` projection, then the hive
       partition columns last, typed by ``partition_type``;
-    - a partition-only projection still needs per-row cardinality: it
-      decodes ONE file column (``drop_cols``) to carry the row count,
-      dropped before the constants are attached;
     - a DNF ``filters`` prunes row groups on stats + concurrent bloom
       probes after deciding partition terms and terms on absent
       columns per file (``filter_row_groups``), so a partition
       predicate prunes whole files; with no filter every row group
       survives; a term on an unknown column raises ``ValueError``;
-    - ``units`` holds one ``(path, row_groups, pvals, absent,
-      fallback)`` per surviving file, in file order.  ``pvals`` are the
-      metas' partition values, resolved to their column's type where
-      the metas were built (format/dataset.py ``_metas``), so
+    - ``units`` holds one ``(path, row_groups, pvals, absent)`` per
+      surviving file, in file order.  ``pvals`` are the metas'
+      partition values, resolved to their column's type where the
+      metas were built (format/dataset.py ``_metas``), so
       executor-side partition-term decisions and the attached
       constants agree with the result schema.  ``absent`` lists every
-      union column the file lacks (the absent rule); ``fallback``
-      names a present column to carry row cardinality when every
-      projected column is absent."""
+      union column the file lacks (the absent rule)."""
     from fastparquet_spark.format.reader import _arrow_type
 
     names_all, elems, absent = union_leaf_elems(metas)
@@ -68,17 +63,13 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
     pnames = list(metas[0].get("partitions") or {})
     ptypes = {k: partition_type([(m.get("partitions") or {}).get(k)
                                  for m in metas]) for k in pnames}
-    drop_cols: list[str] = []
     if columns is None:
         file_cols, part_cols = list(names_all), pnames
     else:
         file_cols = [c for c in columns if c in names_all]
         part_cols = [c for c in columns if c in pnames]
-        if not file_cols and names_all:
-            file_cols, drop_cols = [names_all[0]], [names_all[0]]
     arrow_schema = pa.schema(
-        [(n, _arrow_type(elems[n])) for n in file_cols
-         if n not in drop_cols]
+        [(n, _arrow_type(elems[n])) for n in file_cols]
         + [(n, ptypes[n]) for n in part_cols])
 
     survivors = filter_row_groups(root, filters, fs=fs, metas=metas)
@@ -86,41 +77,33 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
     for f, ri in survivors:
         by_file.setdefault(f, []).append(ri)
     base = root.rstrip("/")
-    units = []
     pvals = {m["file"]: m.get("partitions") or {} for m in metas}
-    for f, ris in sorted(by_file.items()):
-        fallback = ""
-        if file_cols and all(c in absent[f] for c in file_cols):
-            fallback = next((c for c in names_all if c not in absent[f]), "")
-        units.append((f"{base}/{f}", sorted(ris), pvals[f], absent[f],
-                      fallback))
-    return arrow_schema, file_cols, drop_cols, part_cols, units
+    units = [(f"{base}/{f}", sorted(ris), pvals[f], absent[f])
+             for f, ris in sorted(by_file.items())]
+    return arrow_schema, file_cols, part_cols, units
 
 
-def scan_unit(path, ris, pvals, absent, fallback, clauses, file_cols,
-              drop_cols, part_cols, arrow_schema, exact):
+def scan_unit(path, ris, pvals, absent, clauses, file_cols, part_cols,
+              arrow_schema, exact):
     """Executor-side scan of ONE (file, row-groups) unit from
     ``plan_scan`` — the generator both paged_read's mapInArrow fn and
     FpsReader.read run, so the per-file clause/evolution/partition
     logic cannot drift between the two consumers.  Yields
     RecordBatches cast to ``arrow_schema``; nothing when no DNF branch
-    can match this file."""
+    can match this file.  A unit that decodes no column (a
+    partition-only projection, or every projected column absent)
+    still reads its rows' count from either reader."""
     fclauses = _file_clauses(clauses, pvals, absent)
     if not fclauses:
         return
     cols_here = [c for c in file_cols if c not in absent]
-    drop_here = [c for c in drop_cols if c not in absent]
-    if not cols_here and fallback:
-        cols_here, drop_here = [fallback], [fallback]
 
     def finish(tbl):
-        """Projection drop, typed-null fill for evolution columns,
-        partition constants, schema-order cast — per Table or per
-        batch (wrapped as a Table, zero-copy)."""
-        if drop_here:
-            tbl = tbl.drop_columns(drop_here)
+        """Typed-null fill for evolution columns, partition constants,
+        schema-order cast — per Table or per batch (wrapped as a
+        Table, zero-copy)."""
         for c in file_cols:
-            if c in absent and c not in drop_cols:
+            if c in absent:
                 tbl = tbl.append_column(
                     c, pa.nulls(tbl.num_rows, arrow_schema.field(c).type))
         for name in part_cols:
@@ -198,7 +181,7 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     clauses = dnf(filters)
     fs = get_fs(in_dir, fs)
     in_dir, metas = load_dataset_metas(in_dir, fs=fs)
-    arrow_schema, file_cols, drop_cols, part_cols, units = plan_scan(
+    arrow_schema, file_cols, part_cols, units = plan_scan(
         in_dir, metas, clauses, columns, fs=fs)
     out_schema = from_arrow_schema(arrow_schema)
     if not units:
@@ -209,24 +192,22 @@ def paged_read(spark, in_dir: str, filters, columns=None,
 
         pa_w.set_cpu_count(1)
         for b in batches:
-            for path, rgs, pjson, absjson, fallback in zip(
+            for path, rgs, pjson, absjson in zip(
                     b.column("path").to_pylist(),
                     b.column("rgs").to_pylist(),
                     b.column("parts").to_pylist(),
-                    b.column("absent").to_pylist(),
-                    b.column("fallback").to_pylist()):
+                    b.column("absent").to_pylist()):
                 ris = [int(x) for x in rgs.split(",")] if rgs else []
                 yield from scan_unit(
                     path, ris, json.loads(pjson), json.loads(absjson),
-                    fallback, clauses, file_cols, drop_cols, part_cols,
-                    arrow_schema, exact)
+                    clauses, file_cols, part_cols, arrow_schema, exact)
 
     # several files per task (read_fpsc's granularity rule): single-file
     # tasks at 100k files are pure scheduler overhead
     rows = [(path, ",".join(map(str, ris)), json.dumps(pvals),
-             json.dumps(absent), fallback)
-            for path, ris, pvals, absent, fallback in units]
+             json.dumps(absent))
+            for path, ris, pvals, absent in units]
     return map_tasks(spark, pa.table(
         {k: pa.array(col, pa.string()) for k, col in zip(
-            ("path", "rgs", "parts", "absent", "fallback"), zip(*rows))}),
+            ("path", "rgs", "parts", "absent"), zip(*rows))}),
         4 * spark.sparkContext.defaultParallelism, scan, out_schema)

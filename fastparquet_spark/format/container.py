@@ -419,18 +419,11 @@ def read_container_footer(source, fs=None) -> dict:
         if flen > len(buf) - 8:
             raise ValueError("not an FPSC container (bad footer length)")
         return json.loads(buf[len(buf) - 8 - flen:len(buf) - 8])
-    from fastparquet_spark.io import get_fs
+    from fastparquet_spark.io import get_fs, read_tail
 
     fs = get_fs(source, fs)
-    size = fs.size(source)
     with fs.open_read(source) as f:
-        f.seek(size - 8)
-        tail = f.read(8)
-        if tail[4:] != MAGIC:
-            raise ValueError(f"{source}: not an FPSC container")
-        flen = int.from_bytes(tail[:4], "little")
-        f.seek(size - 8 - flen)
-        return json.loads(f.read(flen))
+        return json.loads(read_tail(f, fs.size(source), source, MAGIC)[:-8])
 
 
 def read_container(source, fs=None, columns=None) -> pa.Table:

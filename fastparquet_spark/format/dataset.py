@@ -58,6 +58,7 @@ from __future__ import annotations
 import json
 import os
 import struct
+from contextlib import closing
 from typing import Any
 
 from fastparquet_spark.format.metadata import ConvertedType, Type
@@ -415,7 +416,8 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
     touched, so this stays a metadata pass at any dataset size.  Files
     under hive ``key=value`` (or drill) directories carry their
     partition values, each in its column's resolved type
-    (:func:`_metas`).
+    (:func:`_metas`).  A glob is read by :func:`load_dataset_metas`'
+    rule, files keyed relative to the matches' common root.
 
     When a ``_metadata`` sidecar exists (written by
     :func:`write_metadata_sidecar` / ``append_dataset``), the whole
@@ -423,29 +425,32 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
     per-file footer reads (the reference's merged-footer trick,
     fastparquet/writer.py:1156-1193 / util.py:115-213).  Writers that
     add files must refresh the sidecar (append_dataset does)."""
+    return _dataset(out_dir, fs, use_sidecar)[1]
+
+
+def _dataset(out_dir: str, fs=None, use_sidecar: bool = True):
+    """``(root, metas)`` of a dataset directory or a glob: the body of
+    :func:`dataset_metadata` and :func:`load_dataset_metas`.  A glob
+    (the reference's ``ParquetFile(glob)``, api.py:95-162) trusts the
+    user's pattern for file suffixes (the reference opens whatever the
+    glob matches, e.g. ``*.parq``) but skips sidecar/hidden basenames
+    and DIRECTORIES (a hive ``ds/*`` glob matches ``lang=py/``); its
+    root is the matched files' common root, so files sharing a
+    basename in two hive directories keep distinct keys and their
+    ``key=value`` segments inside the glob carry partition values."""
+    from fastparquet_spark.io import common_root, relative_to
+
     fs = get_fs(out_dir, fs)
     if any(c in out_dir for c in "*?["):
-        # glob input (the reference's ParquetFile(glob), api.py:95-162);
-        # the dataset root is ambiguous here, so only hive key=value
-        # segments (position-independent) are parsed — drill columns
-        # need relative depths, i.e. a directory root
-        files = sorted(p for p in fs.glob(out_dir)
-                       if p.endswith(".parquet")
-                       and not os.path.basename(p).startswith(("_", "."))
-                       and not fs.isdir(p))
+        files = sorted(
+            p for p in fs.glob(out_dir)
+            if not os.path.basename(p).startswith(("_", "."))
+            and not fs.isdir(p))
+        base = common_root(files) if files else "."
         tails = fetch_footers(files, fs)
-        # partition segments are parsed RELATIVE to the glob's static
-        # prefix — a key=value directory ABOVE the dataset root (e.g.
-        # /data/run=3/out/*.parquet) must not become a phantom
-        # partition column whose pseudo-stats mis-prune
-        for w in "*?[":
-            out_dir = out_dir.split(w)[0]
-        static = out_dir.rsplit("/", 1)[0] if "/" in out_dir else ""
-        return _metas([os.path.basename(p) for p in files],
-                      [read_footer_tail(t) for t in tails],
-                      paths=[p[len(static) + 1:]
-                             if static and p.startswith(static)
-                             else os.path.basename(p) for p in files])
+        return base, _metas([relative_to(p, base) for p in files],
+                            [read_footer_tail(t) for t in tails])
+    root = out_dir.rstrip("/")
     sidecar = _join(out_dir, "_metadata")
     if use_sidecar and fs.exists(sidecar):
         with fs.open_read(sidecar) as f:
@@ -468,8 +473,8 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
                          "schema": fmd["schema"],
                          "num_rows": sum(r["num_rows"] for r in rgs),
                          "row_groups": rgs})
-        return _metas(rels, fmds, detect_scheme(rels))
-    prefix = out_dir.rstrip("/") + "/"
+        return root, _metas(rels, fmds, detect_scheme(rels))
+    prefix = root + "/"
 
     def rel_of(p: str) -> str:
         return p[len(prefix):] if p.startswith(prefix) else os.path.basename(p)
@@ -482,41 +487,23 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
     files = [p for p in fs.walk_files(out_dir) if is_data(rel_of(p))]
     rels = [rel_of(p) for p in files]
     tails = fetch_footers(files, fs)
-    return _metas(rels, [read_footer_tail(t) for t in tails],
-                  detect_scheme(rels))
+    return root, _metas(rels, [read_footer_tail(t) for t in tails],
+                        detect_scheme(rels))
 
 
 def load_dataset_metas(path: str, fs=None) -> tuple[str, list[dict]]:
     """(root, metas) for a dataset directory OR an explicit glob — the
     ONE shared entry for scan planners (api.ParquetFile, paged_read,
-    the fps data source), so glob semantics cannot drift between them.
-
-    Glob mode trusts the user's pattern for file suffixes (the
-    reference opens whatever the glob matches, e.g. ``*.parq``) but
-    skips sidecar/hidden basenames and DIRECTORIES (a hive ``ds/*``
-    glob matches ``lang=py/`` — passing it to a footer fetch would
-    raise IsADirectoryError).  Glob metas are keyed RELATIVE to the
-    matched files' common root, so hive ``key=value`` segments inside
-    the glob still carry partition values; directory mode is exactly
-    :func:`dataset_metadata` (sidecar-aware)."""
-    from fastparquet_spark.io import common_root, relative_to
-
-    fs = get_fs(path, fs)
-    if any(c in path for c in "*?["):
-        files = sorted(
-            p for p in fs.glob(path)
-            if not os.path.basename(p).startswith(("_", "."))
-            and not fs.isdir(p))
-        if not files:
-            raise ValueError(f"no parquet files match {path!r}")
-        base = common_root(files)
-        tails = fetch_footers(files, fs)
-        return base or ".", _metas([relative_to(p, base) for p in files],
-                                   [read_footer_tail(t) for t in tails])
-    metas = dataset_metadata(path, fs=fs)
+    the fps data source), so glob semantics cannot drift between them
+    (:func:`_dataset`); directory mode is exactly
+    :func:`dataset_metadata` (sidecar-aware).  No file raises
+    ``ValueError``."""
+    root, metas = _dataset(path, fs)
     if not metas:
-        raise ValueError(f"no parquet files under {path!r}")
-    return path.rstrip("/"), metas
+        raise ValueError(f"no parquet files match {path!r}"
+                         if any(c in path for c in "*?[")
+                         else f"no parquet files under {path!r}")
+    return root, metas
 
 
 def _join(out_dir: str, name: str) -> str:
@@ -822,17 +809,21 @@ def read_page_index(path: str, fs=None,
     ``{"locations": [...], "null_pages": [...], "min_values": [...],
     "max_values": [...], "null_counts": [...]}`` or None when the chunk
     carries no index.  Pass ``fmd`` (an already-parsed footer) to skip
-    the footer fetch — read_pages does, so a page-skipping read costs
-    ONE footer round trip per file, not two."""
+    the footer read."""
+    from fastparquet_spark.format.reader import _ByteSource
+
+    with closing(_ByteSource(path, fs)) as src:
+        return _page_index(src, src.footer() if fmd is None else fmd)
+
+
+def _page_index(src, fmd: dict) -> list[list[dict | None]]:
+    """:func:`read_page_index` through an open byte source
+    (format/reader.py ``_ByteSource``): ONE ranged read covering every
+    index span (they sit together just ahead of the footer in ours and
+    parquet-cpp/-java files alike)."""
     from fastparquet_spark.format import thrift
     from fastparquet_spark.format.metadata import SPECS
-    from fastparquet_spark.io import fetch_footers
 
-    fs = get_fs(path, fs)
-    if fmd is None:
-        fmd = read_footer_tail(fetch_footers([path], fs)[0])
-    # one ranged read covering all index spans (they sit together just
-    # ahead of the footer in ours and parquet-cpp/-java files alike)
     spans = [(cc.get("column_index_offset"), cc.get("column_index_length"))
              for rg in fmd["row_groups"] for cc in rg["columns"]] + \
             [(cc.get("offset_index_offset"), cc.get("offset_index_length"))
@@ -842,9 +833,7 @@ def read_page_index(path: str, fs=None,
         return [[None for _ in rg["columns"]] for rg in fmd["row_groups"]]
     base = min(o for o, _ln in spans)
     end = max(o + (ln or 0) for o, ln in spans)
-    with fs.open_read(path) as f:
-        f.seek(base)
-        blob = f.read(end - base)
+    blob = src.range(base, end - base)
     out = []
     for rg in fmd["row_groups"]:
         row = []
@@ -872,12 +861,12 @@ def filter_pages(path: str, filters, fs=None) -> list[tuple[int, int, int]]:
     reference's filter contract, fastparquet/api.py:948).  Metadata-only
     — footer + index spans, no data pages touched.  Chunks without an
     index keep all their pages (conservative)."""
-    filters = dnf(filters)
-    fs = get_fs(path, fs)
-    from fastparquet_spark.io import fetch_footers
+    from fastparquet_spark.format.reader import _ByteSource
 
-    fmd = read_footer_tail(fetch_footers([path], fs)[0])
-    idx = read_page_index(path, fs=fs, fmd=fmd)
+    filters = dnf(filters)
+    with closing(_ByteSource(path, fs)) as src:
+        fmd = src.footer()
+        idx = _page_index(src, fmd)
     out = []
     for ri, rg in enumerate(fmd["row_groups"]):
         grid, keep_mask = _page_keep_mask_dnf(fmd, idx, ri, filters)
@@ -974,13 +963,17 @@ def read_pages(path: str, filters, columns=None, fs=None,
     ``exact=True`` the residual predicate is applied in Arrow compute
     before returning — the reference's ``to_pandas(filters=...,
     row_filter=True)`` contract (fastparquet/api.py:276-331) on the
-    page-pruned superset.
+    page-pruned superset.  ``columns=[]`` returns the kept rows with no
+    column.
 
-    Bytes moved = footer + index spans + dictionary pages + kept pages
-    ONLY (one ranged read per span through the fs seam) — proven by
-    byte counts in tests.  Flat columns only (our paged writer is
-    flat-only); unindexed or grid-unaligned row groups fall back to
-    decoding all their pages.
+    One footer read, one page-index read and the chunk fetches, all
+    through one byte source (format/reader.py): bytes moved = footer +
+    index spans + dictionary pages + kept pages ONLY — proven by byte
+    counts in tests.  ``columns=None`` reads the top-level flat
+    columns.  Each surviving row group is decoded by the reader's one
+    row-group decoder (``_read_row_group``), which reads whole chunks
+    when a projected column has no index aligned with the kept-page
+    grid.
 
     ``row_groups``: optional subset of row-group indices to scan —
     the contract that lets a DRIVER-side planner (stats + bloom
@@ -990,118 +983,43 @@ def read_pages(path: str, filters, columns=None, fs=None,
     A term on a column the file does not have raises ``ValueError``;
     a planner decides terms on a dataset's absent columns per file
     before it calls this (:func:`dataset_columns`)."""
-    import numpy as np
-    import pyarrow as pa
-
+    from fastparquet_spark.format.assembly import build_tree
     from fastparquet_spark.format.reader import (
-        _ByteSource, _chunk_bounds, _fetch_chunk, _read_column_chunk,
-        _to_arrow,
+        _ByteSource, _chunk_bounds, _concat, _empty_table, _read_row_group,
     )
 
     clauses = dnf(filters)
-    fs = get_fs(path, fs)
-    src = _ByteSource(path, fs=fs)
-    try:
+    with closing(_ByteSource(path, get_fs(path, fs))) as src:
         fmd = src.footer()
         check_columns(clauses, {".".join(p)
                                 for p, _e in schema_paths(fmd["schema"])})
-        idx = read_page_index(path, fs=fs, fmd=fmd)
+        idx = _page_index(src, fmd)
+        tree = build_tree(fmd["schema"])
         bounds = _chunk_bounds(fmd, src.data_end)
-        # TOP-LEVEL FLAT leaves only (dotted-path walk): this reader is
-        # flat-only by contract, and bare-name keying both crashed on
-        # nested files (by_path keys are dotted) and let a struct field
-        # shadow a same-named top-level column
-        elems = {name: e for name, e in _leaf_elems(fmd["schema"]).items()
-                 if "." not in name}
-        names_all = list(elems)
-        want = list(columns) if columns is not None else names_all
-        project = list(want)
+        flat = [c.name for c in tree.children if c.is_leaf]
+        project = list(flat if columns is None else columns)
+        want = list(project)
         if exact:  # predicate columns must be decoded to filter rows
             for cl in clauses:
                 for col, _op, _v in cl:
-                    if col in names_all and col not in want:
+                    if col in flat and col not in want:
                         want.append(col)
         pieces = []
         for ri, rg in enumerate(fmd["row_groups"]):
             if row_groups is not None and ri not in row_groups:
                 continue
-            grid, mask = _page_keep_mask_dnf(fmd, idx, ri, clauses)
-            by_path = {".".join(cc["meta_data"]["path_in_schema"]):
-                       (cc["meta_data"], cii)
-                       for cii, cc in enumerate(rg["columns"])}
-            if mask is not None and not any(mask):
+            grid, keep = _page_keep_mask_dnf(fmd, idx, ri, clauses)
+            if keep is not None and not any(keep):
                 continue
-            if mask is not None:
-                # page skipping is all-or-nothing per row group: every
-                # DECODED column must share the kept-page row set, so a
-                # single wanted column without a grid-aligned index
-                # (e.g. its chunk omitted the ColumnIndex for a NaN
-                # page) forces the whole-chunk path for the group —
-                # otherwise column lengths diverge and assembly fails
-                for name in want:
-                    ci_w = idx[ri][by_path[name][1]]
-                    if ci_w is None or [loc["first_row_index"]
-                                        for loc in ci_w["locations"]] != grid:
-                        mask = None
-                        break
-            arrays, fields = [], []
-            for name in want:
-                cmd, cii = by_path[name]
-                elem = elems[name]
-                ci = idx[ri][cii]
-                required = elem.get("repetition_type", 1) == 0
-                if mask is None:
-                    # no usable index alignment: whole chunk, sized by
-                    # the NEXT chunk's start — total_compressed_size is
-                    # under-reported by some writers (incl. the
-                    # reference) and must not truncate the page loop
-                    blob, cmd2 = _fetch_chunk(src, cmd, bounds)
-                    n_keep = rg["num_rows"]
-                else:
-                    locs = ci["locations"]
-                    firsts = grid + [rg["num_rows"]]
-                    parts = []
-                    if cmd.get("dictionary_page_offset") is not None:
-                        dlen = locs[0]["offset"] - cmd["dictionary_page_offset"]
-                        parts.append(src.range(
-                            cmd["dictionary_page_offset"], dlen))
-                    dict_len = sum(len(p) for p in parts)
-                    n_keep = 0
-                    for pi, keep in enumerate(mask):
-                        if keep:
-                            parts.append(src.range(
-                                locs[pi]["offset"],
-                                locs[pi]["compressed_page_size"]))
-                            n_keep += firsts[pi + 1] - firsts[pi]
-                    blob = b"".join(parts)
-                    cmd2 = dict(cmd, num_values=n_keep,
-                                data_page_offset=dict_len)
-                    if dict_len:
-                        cmd2["dictionary_page_offset"] = 0
-                    else:
-                        cmd2.pop("dictionary_page_offset", None)
-                defs, _reps, vals = _read_column_chunk(
-                    blob, cmd2, elem.get("type_length", 0),
-                    required=required)
-                validity = defs.astype(bool) if not required else \
-                    np.ones(n_keep, dtype=bool)
-                arr = _to_arrow(validity, vals, elem)
-                arrays.append(arr)
-                fields.append(pa.field(name, arr.type))
-            pieces.append(pa.Table.from_arrays(arrays,
-                                               schema=pa.schema(fields)))
-        if not pieces:
-            from fastparquet_spark.format.reader import _arrow_type
-
-            return pa.Table.from_arrays(
-                [pa.array([], type=_arrow_type(elems[n])) for n in project],
-                names=project)
-        out = pa.concat_tables(pieces)
-        if exact:
-            out = _apply_row_filter_dnf(out, clauses).select(project)
-        return out
-    finally:
-        src.close()
+            pieces.append(_read_row_group(
+                src, rg, tree, want, bounds,
+                None if keep is None else (idx[ri], grid, keep)).select(want))
+    if not pieces:
+        return _empty_table(tree, project).select(project)
+    out = _concat(pieces)
+    if exact:
+        out = _apply_row_filter_dnf(out, clauses).select(project)
+    return out
 
 
 def _parse_bloom_blob(blob: bytes, path: str, offset: int, fs):
@@ -1271,7 +1189,10 @@ def _prefetch_blooms(spans: dict, fs, max_workers: int = 16) -> dict:
 def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
                       use_bloom: bool = True) -> list[tuple[str, int]]:
     """Surviving (file, row_group) pairs for a DNF filter — a flat
-    AND-list ``[(col,op,val),...]`` or OR-of-ANDs ``[[...],[...]]``.
+    AND-list ``[(col,op,val),...]`` or OR-of-ANDs ``[[...],[...]]`` —
+    over a dataset directory or glob (files keyed as
+    :func:`dataset_metadata` keys them), or over the given ``metas``
+    of the dataset rooted at ``out_dir``.
 
     Two pruning passes: min/max/null stats (metadata already in hand),
     then — for ==/in clauses on columns carrying a bloom filter —
@@ -1286,16 +1207,13 @@ def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
     ``ValueError``."""
     filters = dnf(filters)
     if metas is None:
-        metas = dataset_metadata(out_dir, fs=fs)
+        out_dir, metas = _dataset(out_dir, fs)
     known, absent = dataset_columns(metas)
     check_columns(filters, known)
     if [] in filters:
         return [(m["file"], ri) for m in metas
                 for ri in range(len(m["fmd"]["row_groups"]))]
     root = out_dir.rstrip("/")
-    # glob inputs record basenames, so the bloom's file path can't be
-    # reconstructed — stats-only pruning there
-    use_bloom = use_bloom and not any(c in out_dir for c in "*?[")
     # pass 1: partition values + min/max/null stats (metadata in hand)
     survivors = []  # (file, rg index, clauses, path, rg, elems)
     for m in metas:

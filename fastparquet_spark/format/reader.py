@@ -1,18 +1,34 @@
-"""Parquet reader (verification + third-party interop).
+"""The one parquet reader.
 
 Mirrors the reference's decode pipeline (fastparquet/core.py:415-555
 read_col page loop; :108-166 v1 page dispatch; api.py:164-190 footer
-parse) over numpy buffers, returning a pyarrow Table.  Production bulk
-reads go through Spark/pyarrow native scans; this reader exists so
-tests can check OUR decode of OUR bytes bit-identically and so the
-engine covers the reference's full read surface.
+parse) over numpy buffers, returning a pyarrow Table.  It serves
+``read_file`` / ``read_row_groups`` / ``iter_row_groups`` / ``head``,
+the api facade's ``ParquetFile``, the page-skipping
+``dataset.read_pages`` and the selective units of ``paged_read`` and
+the fps data source; match-all engine scans stream through pyarrow's
+C++ reader instead (engine/scan_job.py).
+
+One path behind every read:
+
+- one byte source, :class:`_ByteSource` (bytes, a path through the fs
+  seam, or a file object) with one validated footer read — a footer
+  length that does not fit raises ``ValueError``;
+- one chunk fetch, :func:`_fetch_chunk`: the whole chunk in one
+  ranged read, or its dictionary page plus the pages a ColumnIndex
+  kept, both starting where :func:`_chunk_start` says (a
+  ``dictionary_page_offset`` of 0 means no dictionary);
+- one page loop, :func:`_read_column_chunk`;
+- one row-group decoder, :func:`_read_row_group`, whose Table carries
+  the row group's (or the kept pages') row count even when no column
+  is decoded, so a zero-column projection keeps its cardinality.
 
 Covers the encodings both we and the reference emit/read — PLAIN,
-PLAIN_DICTIONARY / RLE_DICTIONARY, RLE booleans, DELTA_BINARY_PACKED —
-over v1 and v2 pages, flat AND nested schemas (LIST/MAP/struct via
-format/assembly.py Dremel assembly), with I/O done as a footer tail
-read plus ONE ranged fetch per column chunk through the fs seam
-(projections move only the selected columns' bytes).
+PLAIN_DICTIONARY / RLE_DICTIONARY, RLE booleans, DELTA_BINARY_PACKED,
+plus BYTE_STREAM_SPLIT and the DELTA byte-array encodings — over v1
+and v2 pages, flat AND nested schemas (LIST/MAP/struct via
+format/assembly.py Dremel assembly); projections move only the
+selected columns' bytes.
 """
 
 from __future__ import annotations
@@ -39,7 +55,8 @@ from fastparquet_spark.format.metadata import (
 
 
 def read_footer(buf: bytes) -> dict:
-    """Parse the FileMetaData footer (fastparquet/api.py:164-190 semantics)."""
+    """Parse the FileMetaData footer of a whole file held in memory
+    (fastparquet/api.py:164-190 semantics)."""
     if buf[:4] != MAGIC or buf[-4:] != MAGIC:
         raise ValueError("not a parquet file (missing PAR1 magic)")
     return read_footer_tail(buf)
@@ -48,10 +65,14 @@ def read_footer(buf: bytes) -> dict:
 def read_footer_tail(buf: bytes) -> dict:
     """Parse a footer from a TAIL slice (footer + u4 length + magic) —
     what :func:`fastparquet_spark.io.read_tail_footer` returns, so
-    metadata operators never load page data."""
+    metadata operators never load page data.  A footer length that
+    does not fit ``buf`` raises ``ValueError``."""
     if buf[-4:] != MAGIC:
         raise ValueError("missing trailing PAR1 magic")
     flen = int.from_bytes(buf[-8:-4], "little")
+    if flen + 8 > len(buf):
+        raise ValueError(
+            f"footer length {flen} exceeds the {len(buf)} bytes read")
     fmd, _ = thrift.read_struct("FileMetaData", buf, len(buf) - 8 - flen, SPECS)
     return fmd
 
@@ -138,11 +159,12 @@ def _arrow_type(elem: dict) -> pa.DataType:
 
 
 def _read_column_chunk(buf: bytes, cmd: dict, type_length: int = 0,
-                       required: bool = False, max_def: int = 1,
-                       max_rep: int = 0):
-    """Returns (def_levels, rep_levels_or_None, non-null decoded values).
+                       max_def: int = 1, max_rep: int = 0):
+    """Returns (def_levels, rep_levels_or_None, non-null decoded values)
+    of the ``cmd["num_values"]`` values whose pages start at byte 0 of
+    ``buf`` (what :func:`_fetch_chunk` returns).
 
-    ``required=True`` (or ``max_def=0``) -> no definition levels precede
+    ``max_def=0`` -> no definition levels precede
     the values (e.g. Impala-written REQUIRED columns,
     fastparquet/test/test_read.py:70-127 interop matrix).  ``max_rep>0``
     reads repetition levels too (nested columns — assembled by
@@ -151,12 +173,9 @@ def _read_column_chunk(buf: bytes, cmd: dict, type_length: int = 0,
     ptype = cmd["type"]
     codec = cmd["codec"]
     n_total = cmd["num_values"]
-    if required:
-        max_def = 0
     def_width = int(max_def).bit_length()
     rep_width = int(max_rep).bit_length()
-    # fastparquet sometimes stores data_page_offset < dictionary_page_offset
-    pos = min(p for p in (cmd.get("dictionary_page_offset"), cmd["data_page_offset"]) if p is not None)
+    pos = 0
 
     dictionary = None
     all_defs: list[np.ndarray] = []
@@ -443,12 +462,15 @@ def _to_arrow(validity: np.ndarray, vals, elem: dict) -> pa.Array:
 
 
 class _ByteSource:
-    """Ranged access to a parquet file: in-memory bytes, or a path read
-    through the fs seam with one ranged fetch per column chunk — so
-    reading one projected column from a 10 GB file moves only that
-    column's bytes (+ the footer), never the file."""
+    """Ranged access to one parquet file — in-memory bytes, a path read
+    through the fs seam, or an open file object — behind every read:
+    one validated footer read, then ranged fetches (page index spans,
+    whole column chunks or their kept pages), so reading one projected
+    column from a 10 GB file moves only that column's bytes (+ the
+    footer), never the file."""
 
     def __init__(self, source, fs=None):
+        self.name = getattr(source, "name", "<file-like>")
         if isinstance(source, (bytes, bytearray, memoryview)):
             # ranges are views of the one immutable copy
             self._buf = memoryview(bytes(source))
@@ -456,7 +478,7 @@ class _ByteSource:
         elif isinstance(source, (str, os.PathLike)):
             from fastparquet_spark.io import get_fs
 
-            source = os.fspath(source)
+            self.name = source = os.fspath(source)
             self._buf = None
             self._f = get_fs(source, fs).open_read(source)
         else:  # file-like: must support seek/read
@@ -470,19 +492,22 @@ class _ByteSource:
         return self._f.read(size)
 
     def footer(self) -> dict:
+        """The footer, validated (a length that does not fit the file
+        raises ``ValueError``); sets ``data_end``, the footer's start.
+        A file is read with the tail routine every footer read shares,
+        :func:`fastparquet_spark.io.read_tail`."""
         if self._buf is not None:
-            size = len(self._buf)
-            flen = int.from_bytes(self._buf[-8:-4], "little")
-            self.data_end = size - 8 - flen
-            return read_footer(self._buf)
+            fmd = read_footer(self._buf)
+            self.data_end = len(self._buf) - 8 - int.from_bytes(
+                self._buf[-8:-4], "little")
+            return fmd
+        from fastparquet_spark.io import read_tail
+
         self._f.seek(0, 2)
         size = self._f.tell()
-        self._f.seek(size - 8)
-        tail = self._f.read(8)
-        flen = int.from_bytes(tail[:4], "little")
-        self.data_end = size - 8 - flen
-        self._f.seek(size - 8 - flen)
-        return read_footer_tail(self._f.read(flen + 8))
+        tail = read_tail(self._f, size, self.name)
+        self.data_end = size - len(tail)
+        return read_footer_tail(tail)
 
     def close(self):
         if self._f is not None and hasattr(self._f, "close"):
@@ -512,55 +537,101 @@ def _chunk_bounds(fmd: dict, data_end: int) -> dict[int, int]:
     return bounds
 
 
-def _fetch_chunk(src: _ByteSource, cmd: dict,
-                 bounds: dict[int, int]) -> tuple[bytes, dict]:
-    """One ranged read covering the chunk's pages; offsets rebased."""
+def _fetch_chunk(src: _ByteSource, cmd: dict, bounds: dict[int, int],
+                 locs=None, keep=None) -> bytes:
+    """The one chunk fetch, its first page at byte 0: the whole chunk,
+    from :func:`_chunk_start` to its end in ``bounds``
+    (:func:`_chunk_bounds`) in one ranged read; or, given
+    the chunk's OffsetIndex page ``locs`` and a kept-page mask
+    ``keep``, the bytes ahead of its first indexed page (the
+    dictionary page) plus the kept pages."""
     start = _chunk_start(cmd)
-    blob = src.range(start, bounds[start] - start)
-    cmd2 = dict(cmd, data_page_offset=cmd["data_page_offset"] - start)
-    dpo = cmd.get("dictionary_page_offset")
-    if dpo is not None and dpo > 0:
-        cmd2["dictionary_page_offset"] = dpo - start
-    else:
-        cmd2.pop("dictionary_page_offset", None)  # drop the 0 sentinel
-    return blob, cmd2
+    if keep is None:
+        return src.range(start, bounds[start] - start)
+    spans = [(start, locs[0]["offset"] - start)] + [
+        (loc["offset"], loc["compressed_page_size"])
+        for loc, k in zip(locs, keep) if k]
+    return b"".join(src.range(at, size) for at, size in spans if size)
+
+
+def _table(children, arrays, num_rows: int) -> pa.Table:
+    """Table of the top-level ``children``'s decoded ``arrays``; with
+    no array, ``num_rows`` rows of no column."""
+    if not arrays:
+        return pa.table([pa.nulls(num_rows)], names=[""]).select([])
+    return pa.Table.from_arrays(arrays, schema=pa.schema(
+        [pa.field(c.name, a.type, nullable=c.repetition != 0)
+         for c, a in zip(children, arrays)]))
+
+
+def _concat(parts: list[pa.Table]) -> pa.Table:
+    """``parts`` as one Table, keeping the row count of zero-column
+    parts (``concat_tables`` drops it); permissive: a string column can
+    promote to large_utf8 in only the row groups whose byte total
+    crosses 2 GiB."""
+    if not parts[0].num_columns:
+        return _table([], [], sum(p.num_rows for p in parts))
+    return pa.concat_tables(parts, promote_options="permissive")
 
 
 def _read_row_group(src: _ByteSource, rg, tree, columns=None,
-                    bounds: dict[int, int] | None = None) -> pa.Table:
+                    bounds: dict[int, int] | None = None,
+                    pages=None) -> pa.Table:
+    """One row group as a Table — the one row-group decoder behind
+    every read: ``read_file``, ``read_row_groups``, ``iter_row_groups``,
+    ``head``, the api facade and ``dataset.read_pages``.  ``columns``
+    projects top-level columns (None: all).  ``pages`` is ``(index,
+    grid, keep)``: the group's page index (one entry or None per
+    chunk), its pages' first rows and a kept-page mask; the kept pages
+    alone are decoded when every projected column is a flat leaf whose
+    index has that grid, else every page.  The Table has the decoded
+    rows' count even when no column is projected."""
     from fastparquet_spark.format.assembly import assemble_column, leaves
 
-    lvs = leaves(tree)
-    chunks = {tuple(cc["meta_data"]["path_in_schema"]): cc["meta_data"]
-              for cc in rg["columns"]}
-    arrays, fields = [], []
-    for child in tree.children:
-        if columns is not None and child.name not in columns:
-            continue
+    pos = {tuple(cc["meta_data"]["path_in_schema"]): i
+           for i, cc in enumerate(rg["columns"])}
+    children = [c for c in tree.children
+                if columns is None or c.name in columns]
+    n = rg["num_rows"]
+    if pages is not None:
+        # every decoded column must share the kept-page row set, or
+        # column lengths diverge: one column without an index on the
+        # grid (e.g. a NaN page omitted it) decodes the whole group
+        index, grid, keep = pages
+        if all(c.is_leaf and c.r == 0
+               and (ix := index[pos[(c.name,)]]) is not None
+               and [loc["first_row_index"] for loc in ix["locations"]]
+               == grid for c in children):
+            n = sum(b - a for a, b, k in zip(grid, grid[1:] + [n], keep)
+                    if k)
+        else:
+            pages = None
+
+    def chunk(path, leaf):
+        i = pos[path]
+        cmd = rg["columns"][i]["meta_data"]
+        if pages is None:
+            blob = _fetch_chunk(src, cmd, bounds)
+        else:
+            blob = _fetch_chunk(src, cmd, bounds, index[i]["locations"],
+                                keep)
+            cmd = dict(cmd, num_values=n)
+        return _read_column_chunk(blob, cmd, leaf.elem.get("type_length", 0),
+                                  max_def=leaf.d, max_rep=leaf.r)
+
+    arrays = []
+    for child in children:
         if child.is_leaf and child.r == 0:
             # flat column: the common fast path (no assembly layer)
-            blob, cmd = _fetch_chunk(src, chunks[(child.name,)], bounds)
-            defs, _reps, vals = _read_column_chunk(
-                blob, cmd, child.elem.get("type_length", 0),
-                required=child.repetition == 0)
+            defs, _reps, vals = chunk((child.name,), child)
             validity = defs.astype(bool) if child.d else \
-                np.ones(rg["num_rows"], dtype=bool)
-            arr = _to_arrow(validity, vals, child.elem)
+                np.ones(n, dtype=bool)
+            arrays.append(_to_arrow(validity, vals, child.elem))
         else:
-            streams = {}
-            for path, leaf in lvs:
-                if path[0] != child.name:
-                    continue
-                blob, cmd = _fetch_chunk(src, chunks[path], bounds)
-                streams[path] = _read_column_chunk(
-                    blob, cmd, leaf.elem.get("type_length", 0),
-                    max_def=leaf.d, max_rep=leaf.r)
-            arr = assemble_column(child, streams, _to_arrow)
-        arrays.append(arr)
-        fields.append(pa.field(child.name, arr.type,
-                               nullable=child.repetition != 0))
-    return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
-
+            arrays.append(assemble_column(
+                child, {path: chunk(path, leaf) for path, leaf in leaves(tree)
+                        if path[0] == child.name}, _to_arrow))
+    return _table(children, arrays, n)
 
 
 def _empty_table(tree, columns=None) -> pa.Table:
@@ -569,27 +640,24 @@ def _empty_table(tree, columns=None) -> pa.Table:
     fail pa.concat_tables against populated parts)."""
     from fastparquet_spark.format.assembly import assemble_column, leaves
 
-    lvs = leaves(tree)
-    arrays, fields = [], []
-    for child in tree.children:
-        if columns is not None and child.name not in columns:
-            continue
+    children = [c for c in tree.children
+                if columns is None or c.name in columns]
+    arrays = []
+    for child in children:
         if child.is_leaf and child.r == 0:
-            arr = _to_arrow(np.zeros(0, dtype=bool), None, child.elem)
+            arrays.append(_to_arrow(np.zeros(0, dtype=bool), None,
+                                    child.elem))
         else:
-            streams = {
+            arrays.append(assemble_column(child, {
                 path: (np.zeros(0, np.int32), np.zeros(0, np.int32), None)
-                for path, leaf in lvs if path[0] == child.name}
-            arr = assemble_column(child, streams, _to_arrow)
-        arrays.append(arr)
-        fields.append(pa.field(child.name, arr.type,
-                               nullable=child.repetition != 0))
-    return pa.Table.from_arrays(arrays, schema=pa.schema(fields))
+                for path, _leaf in leaves(tree) if path[0] == child.name},
+                _to_arrow))
+    return _table(children, arrays, 0)
 
 
 def _row_groups(source, indices, columns):
     """The readers' one open-and-loop body: open ``source``, read its
-    footer and schema tree, yield ``(footer, tree)``, then decode and
+    footer and schema tree, yield the tree, then decode and
     yield one Table per row group in ``indices`` (every group when
     None).  The source closes when the generator ends or is closed."""
     from fastparquet_spark.format.assembly import build_tree
@@ -598,7 +666,7 @@ def _row_groups(source, indices, columns):
     try:
         fmd = src.footer()
         tree = build_tree(fmd["schema"])
-        yield fmd, tree
+        yield tree
         bounds = _chunk_bounds(fmd, src.data_end)
         rgs = fmd["row_groups"]
         for i in range(len(rgs)) if indices is None else indices:
@@ -633,20 +701,9 @@ def read_row_groups(source, indices, columns=None) -> pa.Table:
     all) — ranged chunk reads, so unselected row groups move zero
     bytes."""
     with closing(_row_groups(source, indices, columns)) as groups:
-        fmd, tree = next(groups)
-        if not tree.children:
-            # zero-column file: rows exist only as a count
-            n = fmd["num_rows"] if indices is None else sum(
-                fmd["row_groups"][i]["num_rows"] for i in indices)
-            empty_rows = pa.array([{}] * n, type=pa.struct([]))
-            return pa.Table.from_batches(
-                [pa.RecordBatch.from_struct_array(empty_rows)])
+        tree = next(groups)
         parts = list(groups)
-    if not parts:
-        return _empty_table(tree, columns)
-    # permissive: a string column can promote to large_utf8 in only the
-    # row groups whose byte total crosses 2 GiB
-    return pa.concat_tables(parts, promote_options="permissive")
+    return _concat(parts) if parts else _empty_table(tree, columns)
 
 
 def head(source, n: int = 5, columns=None) -> pa.Table:
@@ -661,4 +718,4 @@ def head(source, n: int = 5, columns=None) -> pa.Table:
             break
     if not got:
         return read_file(source, columns).slice(0, 0)
-    return pa.concat_tables(got, promote_options="permissive")
+    return _concat(got)

@@ -626,6 +626,13 @@ class ParquetWriter:
             raise ValueError(
                 f"required_cols must name flat schema columns; invalid: "
                 f"{sorted(bad_req)}")
+        # blooms are built per flat chunk only; silently writing none for
+        # a nested column would leave its point lookups unpruned
+        bad_bloom = set(bloom_filters or ()) & nested
+        if bad_bloom:
+            raise ValueError(
+                f"bloom_filters must name flat columns; LIST, MAP or "
+                f"STRUCT columns given: {sorted(bad_bloom)}")
         for fld in schema:
             t = fld.type
             if pa.types.is_list(t) or pa.types.is_large_list(t):

@@ -299,24 +299,34 @@ def get_fs(path: str, fs=None):
     return LocalFS()
 
 
+def read_tail(f, size: int, name: str, magic: bytes = b"PAR1") -> bytes:
+    """The footer tail — footer, u4 length, trailing magic — of the open
+    file ``f`` of ``size`` bytes, the layout parquet and FPSC files
+    share (magic, data, footer, length, magic): two tail reads, as
+    fastparquet/api.py:164-190 does, never page data.  The one footer
+    read behind every path and file object; ``ValueError`` when the
+    file is too small, lacks the magic, or declares a footer that does
+    not fit between the leading magic and the tail."""
+    kind = magic.decode()
+    if size < 12:
+        raise ValueError(f"{name}: too small to be a {kind} file")
+    f.seek(size - 8)
+    tail = f.read(8)
+    if tail[4:] != magic:
+        raise ValueError(f"{name}: missing trailing {kind} magic")
+    flen = int.from_bytes(tail[:4], "little")
+    if flen + 12 > size:
+        raise ValueError(f"{name}: footer length {flen} exceeds file")
+    f.seek(size - 8 - flen)
+    return f.read(flen + 8)
+
+
 def read_tail_footer(path: str, fs=None) -> bytes:
-    """Read ONLY a parquet file's footer: 8-byte tail for the length,
-    then the thrift footer itself (fastparquet/api.py:164-190 does the
-    same two tail reads).  Never touches page data."""
+    """Read ONLY a parquet file's footer tail (:func:`read_tail`)."""
     fs = get_fs(path, fs)
     size = fs.size(path)
-    if size < 12:
-        raise ValueError(f"{path}: too small to be a parquet file")
     with fs.open_read(path) as f:
-        f.seek(size - 8)
-        tail = f.read(8)
-        if tail[4:] != b"PAR1":
-            raise ValueError(f"{path}: missing trailing PAR1 magic")
-        flen = int.from_bytes(tail[:4], "little")
-        if flen + 8 > size:
-            raise ValueError(f"{path}: footer length {flen} exceeds file")
-        f.seek(size - 8 - flen)
-        return f.read(flen + 8)
+        return read_tail(f, size, path)
 
 
 def fetch_footers(paths: list[str], fs=None, max_workers: int = 16) -> list[bytes]:

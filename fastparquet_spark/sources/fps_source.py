@@ -169,10 +169,9 @@ class FpsReader(DataSourceReader):
         from fastparquet_spark.format.dataset import load_dataset_metas
 
         root, metas = self._plan or load_dataset_metas(self.path)
-        aschema, file_cols, drop_cols, part_cols, units = plan_scan(
+        aschema, file_cols, part_cols, units = plan_scan(
             root, metas, self._clauses, self.columns)
         header = {"file_cols": file_cols, "part_cols": part_cols,
-                  "drop_cols": drop_cols,
                   "schema": aschema.serialize().to_pybytes(),
                   "clauses": list(self._clauses)}
         per = max(1, -(-len(units) // _MAX_TASKS))  # ceil-div grouping
@@ -192,15 +191,14 @@ class FpsReader(DataSourceReader):
         header, units = partition.value
         aschema = pa.ipc.read_schema(pa.py_buffer(header["schema"]))
         clauses = dnf(header["clauses"])
-        for path, ris, pvals, absent, fallback in units:
+        for path, ris, pvals, absent in units:
             # streaming: match-all units decode batch-by-batch through
             # pyarrow's C++ reader, overlapping decode with the Arrow
             # IPC write back to the JVM (the r6 full-scan tax); the
             # default 128k rows of a ~100B content column is ~13 MB
             # per batch — peak executor memory is ONE batch, not a file
             yield from scan_unit(
-                path, ris, pvals, absent, fallback, clauses,
-                header["file_cols"], header["drop_cols"],
+                path, ris, pvals, absent, clauses, header["file_cols"],
                 header["part_cols"], aschema, exact=False)
 
 

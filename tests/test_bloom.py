@@ -205,3 +205,23 @@ def test_bloom_sized_from_real_ndv_not_row_count(tmp_path):
     assert not filter_row_groups(d, [("low", "==", 77)])
     assert filter_row_groups(d, [("high", "==", 99_999)])
     assert not filter_row_groups(d, [("high", "==", 7_777_777)])
+
+
+def test_bloom_on_a_nested_column_raises():
+    """Blooms are built per flat chunk; a LIST, MAP or STRUCT column
+    named in ``bloom_filters`` raises instead of silently getting none.
+    A name outside the schema is left alone."""
+    import io
+
+    import pytest
+
+    t = pa.table({
+        "x": pa.array([1, 2], pa.int64()),
+        "lst": pa.array([[1], [2, 3]], pa.list_(pa.int64())),
+        "mp": pa.array([[("a", 1)], []], pa.map_(pa.string(), pa.int64())),
+        "st": pa.array([{"a": 1}, {"a": 2}], pa.struct([("a", pa.int64())])),
+    })
+    for col in ("lst", "mp", "st"):
+        with pytest.raises(ValueError, match=col):
+            write_file(io.BytesIO(), t, bloom_filters={"x": True, col: True})
+    write_file(io.BytesIO(), t, bloom_filters={"x": True, "nope": True})

@@ -224,7 +224,7 @@ def test_matchall_fast_path_uses_arrow_reader(tmp_path):
          mock.patch("fastparquet_spark.format.dataset.read_pages",
                     side_effect=AssertionError("page reader on match-all")):
         tbl = pa.Table.from_batches(list(scan_job.scan_unit(
-            p, [0, 1], {}, [], None, [[]], ["k", "s"], [], [], schema,
+            p, [0, 1], {}, [], [[]], ["k", "s"], [], schema,
             exact=False)), schema=schema)
     assert tbl.column("k").to_pylist() == list(range(100))
 
@@ -235,8 +235,8 @@ def test_matchall_fast_path_uses_arrow_reader(tmp_path):
         called["yes"] = True
         return t.select(columns)
     with mock.patch("fastparquet_spark.format.dataset.read_pages", spy):
-        list(scan_job.scan_unit(p, [0, 1], {}, [], None,
-                                [[("k", ">=", 10)]], ["k", "s"], [], [],
+        list(scan_job.scan_unit(p, [0, 1], {}, [],
+                                [[("k", ">=", 10)]], ["k", "s"], [],
                                 schema, exact=False))
     assert called.get("yes")
 

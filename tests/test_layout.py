@@ -44,10 +44,10 @@ def _scan(root, filters, columns=None, exact=True):
     and the fps source's tasks run — as one Table."""
     root, metas = load_dataset_metas(root)
     clauses = dnf(filters)
-    schema, file_cols, drop_cols, part_cols, units = plan_scan(
+    schema, file_cols, part_cols, units = plan_scan(
         root, metas, clauses, columns)
     batches = [b for unit in units for b in scan_unit(
-        *unit, clauses, file_cols, drop_cols, part_cols, schema, exact)]
+        *unit, clauses, file_cols, part_cols, schema, exact)]
     return pa.Table.from_batches(batches, schema=schema), units
 
 
@@ -123,6 +123,34 @@ def test_drill_dataset_keeps_typed_dir_values(tmp_path):
     got = pf.to_pandas().sort_values("v")
     assert got["dir0"].tolist() == [2020, 2020, 2021]
     assert got["dir1"].tolist() == ["emea", "apac", "2021"]
+
+
+def test_glob_keys_files_by_their_path_under_the_common_root(tmp_path):
+    """Two hive files sharing a basename stay two files under a glob:
+    keyed relative to the matches' common root, with their partition
+    values, pruned on stats and on their bloom filters like the
+    directory they sit in."""
+    from fastparquet_spark.format.writer import write_file
+
+    root = tmp_path / "hv"
+    for key, parity in (("1", 0), ("2", 1)):
+        (root / f"k={key}").mkdir(parents=True)
+        ids = list(range(parity, 60, 2))
+        write_file(str(root / f"k={key}" / "part.0.parquet"), pa.table({
+            "v": pa.array([i + 30 * parity for i in range(30)], pa.int64()),
+            "s": pa.array([f"s{i:02d}" for i in ids])}),
+            bloom_filters={"s": 0.01})
+    glob = f"{root}/*/*.parquet"
+    files = ["k=1/part.0.parquet", "k=2/part.0.parquet"]
+    metas = dataset_metadata(glob)
+    assert [m["file"] for m in metas] == files
+    assert [m["partitions"] for m in metas] == [{"k": 1}, {"k": 2}]
+    for where in (glob, str(root)):
+        assert filter_row_groups(where, [("v", ">=", 30)]) == \
+            [(files[1], 0)]
+        # same s range in both files: only the bloom tells them apart
+        assert filter_row_groups(where, [("s", "==", "s10")]) == \
+            [(files[0], 0)]
 
 
 # --------------------------------------------------------- absent rule --

@@ -2,8 +2,9 @@
 
 Regression tests for answers the pruning tiers used to disagree on,
 a brute-force soundness matrix for ``may_match``, the Arrow residual
-filter against Python evaluation, and one file read through every
-pruning tier against a pyarrow read filtered in Python.
+filter against Python evaluation, and one file — also with its footer
+carrying the ``dictionary_page_offset == 0`` sentinel — read through
+every pruning tier against a pyarrow read filtered in Python.
 """
 
 from __future__ import annotations
@@ -233,26 +234,51 @@ def test_one_sided_stats_are_written(tiered):
     assert "min_value" in st and "max_value" not in st
 
 
+def _sentinel_copy(d):
+    """``d``'s file beside it with its footer re-serialized so every
+    chunk without a dictionary page carries ``dictionary_page_offset``
+    0 — the no-dictionary sentinel some writers emit."""
+    from fastparquet_spark.format import thrift
+    from fastparquet_spark.format.metadata import MAGIC, SPECS
+    from fastparquet_spark.format.reader import read_footer
+
+    blob = (d / "part-0.parquet").read_bytes()
+    fmd = read_footer(blob)
+    cmds = [cc["meta_data"] for rg in fmd["row_groups"]
+            for cc in rg["columns"]]
+    assert any("dictionary_page_offset" not in c for c in cmds)
+    for c in cmds:
+        c.setdefault("dictionary_page_offset", 0)
+    body = thrift.write_struct("FileMetaData", fmd, SPECS)
+    out = d.parent / (d.name + "_sentinel")
+    out.mkdir()
+    (out / "part-0.parquet").write_bytes(
+        blob[:len(blob) - 8 - int.from_bytes(blob[-8:-4], "little")]
+        + body + len(body).to_bytes(4, "little") + MAGIC)
+    return out
+
+
 @pytest.mark.parametrize("flt", FILE_FILTERS, ids=repr)
 def test_every_tier_returns_the_python_rows(tiered, flt):
     d, rows = tiered
-    path = str(d / "part-0.parquet")
+    # the pyarrow read is the reference the rows below are judged by
+    assert pq.read_table(str(d / "part-0.parquet")).to_pylist() == rows
     want = [r["i"] for r in rows if row_holds(r, flt)]
-    # row-group tier: a superset of the matching rows' groups
-    kept = {ri for _f, ri in filter_row_groups(str(d), flt)}
-    assert {i // 8 for i in want} <= kept
-    # page tier: every matching row inside a kept row range
-    ranges = filter_pages(path, flt)
-    assert all(any(rg * 8 + a <= i < rg * 8 + a + k for rg, a, k in ranges)
-               for i in want)
-    # exact readers
-    got = read_pages(path, flt, columns=["i"], exact=True)
-    assert sorted(got.column("i").to_pylist()) == want
-    df = api.ParquetFile(str(d)).to_pandas(columns=["i"], filters=flt,
-                                           row_filter=True)
-    assert sorted(df["i"].tolist()) == want
-    # the pyarrow read is the reference the rows above are judged by
-    assert pq.read_table(path).to_pylist() == rows
+    for root in (d, _sentinel_copy(d)):
+        path = str(root / "part-0.parquet")
+        # row-group tier: a superset of the matching rows' groups
+        kept = {ri for _f, ri in filter_row_groups(str(root), flt)}
+        assert {i // 8 for i in want} <= kept
+        # page tier: every matching row inside a kept row range
+        ranges = filter_pages(path, flt)
+        assert all(any(rg * 8 + a <= i < rg * 8 + a + k
+                       for rg, a, k in ranges) for i in want)
+        # exact readers
+        got = read_pages(path, flt, columns=["i"], exact=True)
+        assert sorted(got.column("i").to_pylist()) == want
+        df = api.ParquetFile(str(root)).to_pandas(
+            columns=["i"], filters=flt, row_filter=True)
+        assert sorted(df["i"].tolist()) == want
 
 
 def test_one_sided_and_all_null_stats_prune(tiered):

@@ -39,50 +39,72 @@ def hive(tmp_path):
 
 def _units(units):
     root_free = {}
-    for path, ris, pvals, absent, fallback in units:
+    for path, ris, pvals, absent in units:
         rel = path.split("/hive/", 1)[1]
-        root_free[rel] = (ris, pvals, absent, fallback)
+        root_free[rel] = (ris, pvals, absent)
     return root_free
 
 
 def test_full_plan_schema_order_and_units(hive):
     root, metas = hive
-    schema, file_cols, drop_cols, part_cols, units = plan_scan(
+    schema, file_cols, part_cols, units = plan_scan(
         root, metas, None, None)
     # file columns (union, first-seen order), then partition columns
     assert schema.names == ["id", "s", "extra", "k"]
     assert schema.field("extra").type == pa.float64()
     assert schema.field("k").type == pa.string()  # mixed spellings
-    assert (file_cols, drop_cols, part_cols) == (["id", "s", "extra"], [],
-                                                 ["k"])
+    assert (file_cols, part_cols) == (["id", "s", "extra"], ["k"])
     assert all(u[0].startswith(root.rstrip("/") + "/") for u in units)
     got = _units(units)
     assert list(got) == sorted(got)  # one unit per file, in file order
     # no filter: every row group survives
-    assert got[OLD_FILE] == ([0, 1], {"k": "abc"}, ["extra"], "")
+    assert got[OLD_FILE] == ([0, 1], {"k": "abc"}, ["extra"])
     # the int-spelled partition value is stringified to the column type
-    assert got[NEW_FILE] == ([0, 1], {"k": "3"}, [], "")
+    assert got[NEW_FILE] == ([0, 1], {"k": "3"}, [])
     assert isinstance(got[NEW_FILE][1]["k"], str)
 
 
-def test_partition_only_projection_decodes_one_dropped_column(hive):
+def _rows(units, clauses, plan, exact=True):
+    schema, file_cols, part_cols = plan
+    return pa.Table.from_batches(
+        [b for unit in units for b in scan_unit(
+            *unit, clauses, file_cols, part_cols, schema, exact)],
+        schema=schema)
+
+
+def test_partition_only_projection_keeps_row_count(hive):
+    """A partition-only projection decodes no file column, and still
+    yields one row per file row on the match-all path (pyarrow's
+    reader) and the selective path (the page reader)."""
     root, metas = hive
-    schema, file_cols, drop_cols, part_cols, _units_ = plan_scan(
+    schema, file_cols, part_cols, units = plan_scan(
         root, metas, None, ["k"])
     assert schema.names == ["k"]
-    assert (file_cols, drop_cols, part_cols) == (["id"], ["id"], ["k"])
+    assert (file_cols, part_cols) == ([], ["k"])
+    plan = (schema, file_cols, part_cols)
+    got = _rows(units, [[]], plan)
+    assert sorted(got.column("k").to_pylist()) == ["3"] * 100 + ["abc"] * 100
+    clauses = [[("id", "<", 10)]]
+    *_, units = plan_scan(root, metas, clauses, ["k"])
+    got = _rows(units, clauses, plan)
+    assert sorted(got.column("k").to_pylist()) == ["3"] * 5 + ["abc"] * 5
+    # page-granular superset: the first row group of each file
+    got = _rows(units, clauses, plan, exact=False)
+    assert got.num_rows == 100
 
 
-def test_absent_column_falls_back_to_a_present_one(hive):
+def test_absent_column_reads_as_nulls_with_the_file_row_count(hive):
     root, metas = hive
-    schema, file_cols, drop_cols, _parts, units = plan_scan(
+    schema, file_cols, _parts, units = plan_scan(
         root, metas, None, ["extra"])
-    assert schema.names == ["extra"] and drop_cols == []
+    assert schema.names == ["extra"] and file_cols == ["extra"]
     got = _units(units)
-    # the older file predates ``extra``: it reads as nulls, and ``id``
-    # (first present union column) carries the row count
-    assert got[OLD_FILE][2:] == (["extra"], "id")
-    assert got[NEW_FILE][2:] == ([], "")
+    # the older file predates ``extra``: it reads as nulls, one per row
+    assert got[OLD_FILE][2] == ["extra"]
+    assert got[NEW_FILE][2] == []
+    tbl = _rows(units, [[]], (schema, file_cols, []))
+    assert tbl.num_rows == 200
+    assert tbl.column("extra").null_count == 100
 
 
 def test_bloom_and_stats_filters_drop_units(hive):
@@ -107,24 +129,17 @@ def test_units_scan_to_the_planned_rows(hive):
     dataset in the planned schema: typed nulls for the evolved column,
     partition constants of the resolved type."""
     root, metas = hive
-    schema, file_cols, drop_cols, part_cols, units = plan_scan(
+    schema, file_cols, part_cols, units = plan_scan(
         root, metas, None, None)
-    batches = [b for path, ris, pvals, absent, fallback in units
-               for b in scan_unit(path, ris, pvals, absent, fallback, [[]],
-                                  file_cols, drop_cols, part_cols, schema,
-                                  exact=True)]
-    got = pa.Table.from_batches(batches, schema=schema).sort_by("id")
+    got = _rows(units, [[]], (schema, file_cols, part_cols)).sort_by("id")
     assert got.column("id").to_pylist() == list(range(200))
     assert got.column("k").to_pylist() == ["abc", "3"] * 100
     assert got.column("extra").to_pylist() == [
         None if i % 2 == 0 else i / 2 for i in range(200)]
 
     # a selective clause goes through the page reader, exact rows only
-    schema, file_cols, drop_cols, part_cols, units = plan_scan(
-        root, metas, [[("s", "==", "s051")]], ["id", "k"])
-    rows = [r for path, ris, pvals, absent, fallback in units
-            for b in scan_unit(path, ris, pvals, absent, fallback,
-                               [[("s", "==", "s051")]], file_cols,
-                               drop_cols, part_cols, schema, exact=True)
-            for r in b.to_pylist()]
+    clauses = [[("s", "==", "s051")]]
+    schema, file_cols, part_cols, units = plan_scan(
+        root, metas, clauses, ["id", "k"])
+    rows = _rows(units, clauses, (schema, file_cols, part_cols)).to_pylist()
     assert rows == [{"id": 51, "k": "3"}]

@@ -7,19 +7,17 @@ commit and resume as ``encode_dataset`` (``encode_job._encode_shuffled``
 over engine/commit.py), but the format plug-in is ``FpscFormat``, so
 the per-task payload is a set of FPSC containers where string columns
 may pick FSST (best-of vs plain+block codec).  Decode is ours
-alone — ``read_fpsc`` distributes container paths and inflates them
-inside Python workers (vectorized FSST expansion, no per-row Python).
+alone — ``read_fpsc`` is the scan planner's FPSC spelling
+(engine/scan_job.py, ``FpscScan``): one plan over every container's
+footer, then Python workers inflate their containers (vectorized FSST
+expansion, no per-row Python).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pyarrow as pa
-
 from fastparquet_spark.engine.commit import begin_job
 from fastparquet_spark.engine.encode_job import _encode_shuffled, _salted
-from fastparquet_spark.engine.tasks import map_tasks
+from fastparquet_spark.engine.scan_job import FpscScan, scan
 from fastparquet_spark.engine.write import FpscFormat
 
 
@@ -58,68 +56,18 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
                             chunk_rows=rows_per_container, resume=resume)
 
 
-def fpsc_files(path: str, columns=None, probe: bool = True):
-    """(files, schema) of an FPSC dataset — the one listing + schema
-    probe behind ``read_fpsc`` and the fpsc data source: the sorted
-    ``.fpsc`` containers under ``path`` (through the fs seam, so
-    ``path`` may be a URI) and, with ``probe``, the Spark schema of the
-    FIRST container's footer (footer tail only, never the data
-    blocks), projected to ``columns``.  Probing a directory with no
-    containers raises ValueError; without ``probe`` the schema is
-    None."""
-    from fastparquet_spark.io import get_fs
-
-    fs = get_fs(path)
-    files = sorted(p for p in fs.walk_files(path) if p.endswith(".fpsc"))
-    if not probe:
-        return files, None
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    from fastparquet_spark.format.container import (
-        _type_from_name, read_container_footer,
-    )
-
-    if not files:
-        raise ValueError(f"no .fpsc files under {path}")
-    cms = read_container_footer(files[0], fs=fs)["columns"]
-    if columns is not None:
-        by_name = {cm["name"]: cm for cm in cms}
-        cms = [by_name[c] for c in columns]
-    return files, from_arrow_schema(pa.schema(
-        [(cm["name"], _type_from_name(cm["arrow_type"])) for cm in cms]))
-
-
-def read_fpsc(spark, in_dir: str, schema=None, columns=None):
-    """Distributed decode of an FPSC dataset back to a DataFrame:
-    container paths fan out to tasks; each Python worker inflates its
-    file with the vectorized decoders (FSST expansion, delta prefix-sum,
-    validity reassembly).  The driver-side schema probe reads ONLY the
-    first container's footer (never the data blocks), and listing goes
-    through the fs seam so ``in_dir`` may be a URI.
+def read_fpsc(spark, in_dir: str, columns=None):
+    """Distributed decode of an FPSC dataset back to a DataFrame —
+    ``paged_read``'s body with the ``FpscScan`` plug-in
+    (engine/scan_job.py): the driver reads every container's footer
+    (tails only, never data blocks; listing goes through the fs seam
+    so ``in_dir`` may be a URI), the result schema is the union of the
+    containers' columns, and tasks inflate their containers with the
+    vectorized decoders, each cast by column name to that schema (a
+    column a container lacks reads as typed nulls).  No container
+    raises ``ValueError``.
 
     ``columns``: projection — workers make RANGED reads of only the
     requested columns' byte spans (footer offsets), the same IO
     contract as a parquet column-chunk scan."""
-    files, probed = fpsc_files(in_dir, columns, probe=schema is None)
-    if schema is None:
-        schema = probed
-
-    columns_ = list(columns) if columns is not None else None
-
-    def inflate(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow as pa_w
-
-        from fastparquet_spark.format.container import read_container
-
-        pa_w.set_cpu_count(1)
-        for b in batches:
-            for path in b.column("path").to_pylist():
-                tbl = read_container(path, columns=columns_)
-                yield from tbl.to_batches()
-
-    # task granularity: several container files per task, not one —
-    # 100k single-file tasks would be pure scheduler overhead; 4x the
-    # core count keeps every executor busy with work-stealing headroom
-    # while the inflate loop streams file-by-file (bounded memory)
-    return map_tasks(spark, pa.table({"path": pa.array(files, pa.string())}),
-                     4 * spark.sparkContext.defaultParallelism, inflate, schema)
+    return scan(spark, in_dir, None, columns, True, None, FpscScan)

@@ -1,5 +1,7 @@
 """Distributed page/bloom-pruned scan — the read-side twin of the
-file-split encode job.
+file-split encode job, and the ONE scan planner of both file formats:
+``paged_read`` and the fps data source read parquet through it,
+``read_fpsc`` and the fpsc data source read FPSC containers through it.
 
 ``format.dataset.read_pages`` is a SINGLE-PROCESS page-skipping reader
 (the reference's posture: fastparquet/api.py:440-453 filters row groups
@@ -11,6 +13,29 @@ probes for ==/in terms — and hands each EXECUTOR only its surviving
 locally (ColumnIndex page skipping, ranged reads of surviving spans
 only) and the residual row predicate, so bytes moved are footer + index
 + dictionary pages + surviving pages, never whole files.
+
+The format plug-in.  Listing, the union schema and absent-column rule
+(``dataset_columns``), partition typing, per-file clauses
+(``_file_clauses``), stats pruning, the residual row filter, the
+by-name cast of every unit to the result schema and task grouping are
+the same for both formats.  A plug-in (``ParquetScan``,
+``FpscScan``; the entry point picks it, as ``ParquetFormat`` /
+``FpscFormat`` do on the write side) holds the three decisions that
+differ:
+
+- ``footer(tail)``, footer -> meta: a parquet file's footer, or an
+  FPSC container as ONE row group whose chunks carry its footer's
+  min/max/null counts (with ``suffix``, ``magic`` and ``sidecar``,
+  the listing's inputs: ``dataset.ParquetFiles``,
+  ``container.FpscFiles``);
+- ``bloom(blob, path, offset, fs)``, the bloom probe's read of a
+  filter span (a parquet bloom header + bitset, or a container's
+  bare bitset); both hash probe values with
+  ``dataset._bloom_value_bytes``;
+- ``read(path, ris, fclauses, cols, exact)``, the unit read: Tables
+  of the rows of row groups ``ris`` in the file's own column order —
+  ``read_pages`` or pyarrow ``iter_batches`` for parquet,
+  ``read_container(columns=)`` for FPSC.
 
 At 100 TB this is the scan shape that matters: pruning decisions are
 O(metadata) on the driver (thread-pooled, no data reads), decode
@@ -26,23 +51,89 @@ from collections.abc import Iterator
 import pyarrow as pa
 
 from fastparquet_spark.engine.tasks import map_tasks
+from fastparquet_spark.format.container import FpscFiles, read_container
 from fastparquet_spark.format.dataset import (
-    filter_row_groups, load_dataset_metas, partition_type, union_leaf_elems,
+    ParquetFiles, filter_row_groups, leaf_type, load_dataset_metas,
+    partition_type, union_leaf_elems,
 )
-from fastparquet_spark.format.predicate import _file_clauses, dnf
+from fastparquet_spark.format.predicate import (
+    _apply_row_filter_dnf, _file_clauses, dnf,
+)
 
 
-def plan_scan(root: str, metas, filters, columns, fs=None):
+class ParquetScan(ParquetFiles):
+    """Parquet units: a unit with a filter left for its file goes
+    through the page-skipping ``read_pages``; a match-all unit streams
+    through pyarrow's C++ reader."""
+
+    @staticmethod
+    def read(path, ris, fclauses, cols, exact) -> Iterator[pa.Table]:
+        if all(fclauses):
+            from fastparquet_spark.format.dataset import read_pages
+
+            yield read_pages(path, fclauses, columns=cols, exact=exact,
+                             row_groups=set(ris))
+            return
+        # match-all DNF for this file (no filter survived partition
+        # substitution): ColumnIndex page skipping has nothing to skip,
+        # so the pure-Python page reader only adds decode tax — stream
+        # the surviving row groups through pyarrow's C++ reader instead
+        # (~2.7x on full scans, BENCH.md r6 scan probe).  Streaming
+        # OVERLAPS decode with the Arrow-IPC write back to the JVM (the
+        # consumer takes each batch before the next is decoded); peak
+        # memory is one batch, not one file.  The selective path above
+        # is byte-proof-tested.
+        import pyarrow.parquet as pq
+
+        from fastparquet_spark.io import _is_uri, get_fs
+
+        # local paths go to pyarrow as plain paths (OS-level reads);
+        # URIs (s3/gs/hdfs) open through the io layer's pyarrow.fs
+        # NativeFile — pq.ParquetFile itself does no URI inference
+        src = get_fs(path).open_read(path) if _is_uri(path) else path
+        try:
+            for b in pq.ParquetFile(src).iter_batches(
+                    batch_size=131_072, row_groups=sorted(ris),
+                    columns=cols, use_threads=False):
+                yield pa.Table.from_batches([b])
+        finally:
+            # close the remote handle even on partial consumption —
+            # long scan jobs leak connections/fds otherwise
+            if src is not path:
+                src.close()
+
+
+class FpscScan(FpscFiles):
+    """FPSC units: one container, its projected columns fetched with
+    ranged reads and inflated by the vectorized decoders (FSST
+    expansion, delta prefix-sum, validity reassembly); with ``exact``
+    the residual filter runs on the predicate columns too."""
+
+    @staticmethod
+    def read(path, ris, fclauses, cols, exact) -> Iterator[pa.Table]:
+        if not (exact and all(fclauses)):
+            yield read_container(path, columns=cols)
+            return
+        want = list(dict.fromkeys(
+            [*cols, *(col for cl in fclauses for col, _op, _v in cl)]))
+        yield _apply_row_filter_dnf(
+            read_container(path, columns=want), fclauses).select(cols)
+
+
+def plan_scan(root: str, metas, filters, columns, fs=None,
+              fmt=ParquetScan):
     """The driver plan of a pruned scan — the ONE planner behind
-    ``paged_read`` and the fps data source.  Returns
+    ``paged_read``, ``read_fpsc`` and the fps/fpsc data sources, over
+    the ``metas`` of ``fmt`` files.  Returns
     ``(arrow_schema, file_cols, part_cols, units)``:
 
     - the result schema is the UNION of the per-file leaf schemas
       (metadata-only; schema-evolution-tolerant — typed-null fill for
       files predating a column), FLAT leaves only (the page reader
-      cannot decode nested subtrees; use spark.read.parquet for nested
-      datasets), then the ``columns`` projection, then the hive
-      partition columns last, typed by ``partition_type``;
+      cannot decode nested parquet subtrees; use spark.read.parquet
+      for nested datasets; an FPSC LIST column is one flat leaf), then
+      the ``columns`` projection, then the hive partition columns
+      last, typed by ``partition_type``;
     - a DNF ``filters`` prunes row groups on stats + concurrent bloom
       probes after deciding partition terms and terms on absent
       columns per file (``filter_row_groups``), so a partition
@@ -55,8 +146,6 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
       executor-side partition-term decisions and the attached
       constants agree with the result schema.  ``absent`` lists every
       union column the file lacks (the absent rule)."""
-    from fastparquet_spark.format.reader import _arrow_type
-
     names_all, elems, absent = union_leaf_elems(metas)
     names_all = [n for n in names_all
                  if elems[n].get("num_children") is None]
@@ -69,10 +158,11 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
         file_cols = [c for c in columns if c in names_all]
         part_cols = [c for c in columns if c in pnames]
     arrow_schema = pa.schema(
-        [(n, _arrow_type(elems[n])) for n in file_cols]
+        [(n, leaf_type(elems[n])) for n in file_cols]
         + [(n, ptypes[n]) for n in part_cols])
 
-    survivors = filter_row_groups(root, filters, fs=fs, metas=metas)
+    survivors = filter_row_groups(root, filters, fs=fs, metas=metas,
+                                  fmt=fmt)
     by_file: dict[str, list[int]] = {}
     for f, ri in survivors:
         by_file.setdefault(f, []).append(ri)
@@ -84,15 +174,17 @@ def plan_scan(root: str, metas, filters, columns, fs=None):
 
 
 def scan_unit(path, ris, pvals, absent, clauses, file_cols, part_cols,
-              arrow_schema, exact):
+              arrow_schema, exact, fmt=ParquetScan):
     """Executor-side scan of ONE (file, row-groups) unit from
-    ``plan_scan`` — the generator both paged_read's mapInArrow fn and
-    FpsReader.read run, so the per-file clause/evolution/partition
-    logic cannot drift between the two consumers.  Yields
-    RecordBatches cast to ``arrow_schema``; nothing when no DNF branch
-    can match this file.  A unit that decodes no column (a
+    ``plan_scan`` — the generator behind every scan task of both
+    formats (paged_read's and read_fpsc's mapInArrow fn, FpsReader.read),
+    so the per-file clause/evolution/partition logic cannot drift
+    between them.  ``fmt.read`` decodes the unit; every Table it
+    yields is cast BY NAME to ``arrow_schema``, whatever the file's
+    own column order.  Yields RecordBatches; nothing when no DNF
+    branch can match this file.  A unit that decodes no column (a
     partition-only projection, or every projected column absent)
-    still reads its rows' count from either reader."""
+    still yields its rows' count."""
     fclauses = _file_clauses(clauses, pvals, absent)
     if not fclauses:
         return
@@ -115,40 +207,8 @@ def scan_unit(path, ris, pvals, absent, clauses, file_cols, part_cols,
         # evolution columns were appended out of order; restore order
         return tbl.select(arrow_schema.names).cast(arrow_schema)
 
-    if all(fclauses):
-        from fastparquet_spark.format.dataset import read_pages
-
-        tbl = read_pages(path, fclauses, columns=cols_here, exact=exact,
-                         row_groups=set(ris))
-        yield from finish(tbl).to_batches(max_chunksize=65_536)
-        return
-    # match-all DNF for this file (no filter survived partition
-    # substitution): ColumnIndex page skipping has nothing to skip, so
-    # the pure-Python page reader only adds decode tax — stream the
-    # surviving row groups through pyarrow's C++ reader instead (~2.7x
-    # on full scans, BENCH.md r6 scan probe).  Streaming OVERLAPS decode
-    # with the Arrow-IPC write back to the JVM (the consumer takes each
-    # batch before the next is decoded); peak memory is one batch, not
-    # one file.  The selective path above is byte-proof-tested.
-    import pyarrow.parquet as pq
-
-    from fastparquet_spark.io import _is_uri, get_fs
-
-    # local paths go to pyarrow as plain paths (OS-level reads); URIs
-    # (s3/gs/hdfs) open through the io layer's pyarrow.fs NativeFile —
-    # pq.ParquetFile itself does no URI inference
-    src = get_fs(path).open_read(path) if _is_uri(path) else path
-    try:
-        for b in pq.ParquetFile(src).iter_batches(
-                batch_size=131_072, row_groups=sorted(ris),
-                columns=cols_here, use_threads=False):
-            yield from finish(pa.Table.from_batches([b])).to_batches(
-                max_chunksize=131_072)
-    finally:
-        # close the remote handle even on partial consumption — long
-        # scan jobs leak connections/fds otherwise
-        if src is not path:
-            src.close()
+    for tbl in fmt.read(path, ris, fclauses, cols_here, exact):
+        yield from finish(tbl).to_batches(max_chunksize=131_072)
 
 
 def paged_read(spark, in_dir: str, filters, columns=None,
@@ -174,20 +234,28 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     ``columns``: projection (predicate columns are decoded as needed
     and dropped from the result; may include partition columns).
     """
+    return scan(spark, in_dir, filters, columns, exact, fs, ParquetScan)
+
+
+def scan(spark, in_dir: str, filters, columns, exact: bool, fs, fmt):
+    """The body of ``paged_read`` (``fmt=ParquetScan``) and
+    ``read_fpsc`` (``fmt=FpscScan``): plan on the driver, then one
+    mapInArrow job whose tasks run ``scan_unit`` over their units.  A
+    directory with no ``fmt`` file raises ``ValueError``."""
     from pyspark.sql.pandas.types import from_arrow_schema
 
     from fastparquet_spark.io import get_fs
 
     clauses = dnf(filters)
     fs = get_fs(in_dir, fs)
-    in_dir, metas = load_dataset_metas(in_dir, fs=fs)
+    in_dir, metas = load_dataset_metas(in_dir, fs=fs, fmt=fmt)
     arrow_schema, file_cols, part_cols, units = plan_scan(
-        in_dir, metas, clauses, columns, fs=fs)
+        in_dir, metas, clauses, columns, fs=fs, fmt=fmt)
     out_schema = from_arrow_schema(arrow_schema)
     if not units:
         return spark.createDataFrame([], out_schema)
 
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow as pa_w
 
         pa_w.set_cpu_count(1)
@@ -200,14 +268,16 @@ def paged_read(spark, in_dir: str, filters, columns=None,
                 ris = [int(x) for x in rgs.split(",")] if rgs else []
                 yield from scan_unit(
                     path, ris, json.loads(pjson), json.loads(absjson),
-                    clauses, file_cols, part_cols, arrow_schema, exact)
+                    clauses, file_cols, part_cols, arrow_schema, exact, fmt)
 
-    # several files per task (read_fpsc's granularity rule): single-file
-    # tasks at 100k files are pure scheduler overhead
+    # several files per task, not one — 100k single-file tasks would
+    # be pure scheduler overhead; 4x the core count keeps every
+    # executor busy with work-stealing headroom while each task streams
+    # file by file (bounded memory)
     rows = [(path, ",".join(map(str, ris)), json.dumps(pvals),
              json.dumps(absent))
             for path, ris, pvals, absent in units]
     return map_tasks(spark, pa.table(
         {k: pa.array(col, pa.string()) for k, col in zip(
             ("path", "rgs", "parts", "absent"), zip(*rows))}),
-        4 * spark.sparkContext.defaultParallelism, scan, out_schema)
+        4 * spark.sparkContext.defaultParallelism, run, out_schema)

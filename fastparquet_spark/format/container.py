@@ -27,6 +27,7 @@ Everything is numpy/Arrow-buffer vectorized; runs inside mapInArrow.
 
 from __future__ import annotations
 
+import io
 import json
 from dataclasses import dataclass
 
@@ -39,8 +40,8 @@ from fastparquet_spark.codecs.fsst import FsstTable, fsst_decode, fsst_encode, f
 from fastparquet_spark.codecs.plain import decode_plain, encode_plain
 from fastparquet_spark.codecs.rle import decode_hybrid, encode_hybrid
 from fastparquet_spark.codecs.selection import column_stats
-from fastparquet_spark.format.metadata import Type
-from fastparquet_spark.format.reader import _binary_array, _fill_rows
+from fastparquet_spark.format.metadata import ConvertedType, Type
+from fastparquet_spark.format.reader import _binary_array, _fill_rows, _table
 from fastparquet_spark.format.writer import _binary_parts, _map_type, _one_array
 
 MAGIC = b"FPSC"
@@ -150,9 +151,9 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
     ``bloom_filters`` ({column: fpp or True}): append a split-block
     bloom filter (codecs/bloom.py, the same parquet-spec structure)
     per listed string/int column and record its span in the footer —
-    the container's point-lookup pruning path, consulted by the
-    FpscReader's file-level pushdown for ==/in predicates that min/max
-    stats cannot discriminate.
+    the container's point-lookup pruning path, probed by the scan
+    planner (``dataset.filter_row_groups``) for ==/in predicates that
+    min/max stats cannot discriminate.
 
     ``codec_decisions`` ({column: 'fsst' | 'plain'}): pre-made string
     codec choices (from :func:`decide_string_codecs` on a driver-side
@@ -409,77 +410,111 @@ def _column_stats_meta(arr_nn: pa.Array, ptype: int) -> dict:
         return {}
 
 
-def read_container_footer(source, fs=None) -> dict:
-    """Footer-only read of an FPSC container (tail fetch, no data)."""
-    if isinstance(source, (bytes, bytearray)):
-        buf = bytes(source)
-        if len(buf) < 8 or buf[-4:] != MAGIC:
-            raise ValueError("not an FPSC container (missing magic)")
-        flen = int.from_bytes(buf[-8:-4], "little")
-        if flen > len(buf) - 8:
-            raise ValueError("not an FPSC container (bad footer length)")
-        return json.loads(buf[len(buf) - 8 - flen:len(buf) - 8])
-    from fastparquet_spark.io import get_fs, read_tail
+def _open(source, fs=None):
+    """``(file object, size, name)`` of a container given as bytes or
+    as a path/URI (through the fs seam)."""
+    if isinstance(source, (bytes, bytearray, memoryview)):
+        buf = bytes(source)  # bytes stay uncopied
+        return io.BytesIO(buf), len(buf), "<FPSC bytes>"
+    from fastparquet_spark.io import get_fs
 
     fs = get_fs(source, fs)
-    with fs.open_read(source) as f:
-        return json.loads(read_tail(f, fs.size(source), source, MAGIC)[:-8])
+    return fs.open_read(source), fs.size(source), source
+
+
+def _footer(f, size: int, name: str) -> dict:
+    from fastparquet_spark.io import read_tail
+
+    return json.loads(read_tail(f, size, name, MAGIC)[:-8])
+
+
+class FpscFiles:
+    """The footer side of a scan's format plug-in for FPSC containers
+    (``format.dataset.ParquetFiles`` for parquet): listing keeps
+    ``.fpsc`` files, whose tails end in the FPSC magic; no sidecar."""
+
+    name, suffix, magic, sidecar = "FPSC", ".fpsc", MAGIC, False
+
+    @staticmethod
+    def footer(tail: bytes) -> dict:
+        """footer -> meta: the container as a parquet-shaped footer of
+        ONE row group.  Each column is a flat schema element (a LIST
+        column too: the container decodes it whole) carrying its
+        physical type, the unsigned annotation the bloom probe encodes
+        by, and its container ``arrow_type`` (``dataset.leaf_type``);
+        each chunk carries the footer's min/max (already values),
+        null and value counts and bloom span."""
+        meta = json.loads(tail[:-8])
+        elems, chunks = [], []
+        for cm in meta["columns"]:
+            unsigned = cm["arrow_type"].startswith("uint")
+            elems.append({
+                "name": cm["name"], "type": cm["ptype"],
+                "converted_type": (ConvertedType.UINT_32
+                                   if cm["ptype"] == Type.INT32
+                                   else ConvertedType.UINT_64)
+                if unsigned else None,
+                "arrow_type": cm["arrow_type"]})
+            md = {"path_in_schema": [cm["name"]], "num_values": cm["n"],
+                  "statistics": {"min": cm.get("min"), "max": cm.get("max"),
+                                 "null_count": cm["null_count"]}}
+            if "bloom_offset" in cm:
+                md["bloom_filter_offset"] = cm["bloom_offset"]
+                md["bloom_filter_length"] = cm["bloom_bytes"]
+            chunks.append({"meta_data": md})
+        n = meta["nrows"]
+        return {"schema": [{"name": "schema", "num_children": len(elems)},
+                           *elems],
+                "num_rows": n, "row_groups": [{"num_rows": n,
+                                               "columns": chunks}]}
+
+    @staticmethod
+    def bloom(blob: bytes, path: str, offset: int, fs):
+        """A container bloom span is the bare bitset."""
+        from fastparquet_spark.codecs.bloom import SplitBlockBloom
+
+        return SplitBlockBloom.frombytes(blob)
+
+
+def read_container_footer(source, fs=None) -> dict:
+    """Footer-only read of an FPSC container (path/URI/bytes): the tail
+    fetch every footer read shares, ``io.read_tail``, never data."""
+    f, size, name = _open(source, fs)
+    with f:
+        return _footer(f, size, name)
 
 
 def read_container(source, fs=None, columns=None) -> pa.Table:
     """Decode an FPSC container (path/URI/bytes) into an Arrow table.
 
-    ``columns``: optional projection — the footer's per-column
-    (offset, size) makes this a RANGED read: only the requested
-    columns' byte spans are fetched and inflated (plus the footer
-    tail), never the whole container.  At scale this is the same
-    contract as parquet column chunks."""
-    if columns is not None and isinstance(source, str):
-        from fastparquet_spark.io import get_fs
-
-        fs_ = get_fs(source, fs)
-        meta = read_container_footer(source, fs=fs_)
-        wanted = [cm for cm in meta["columns"] if cm["name"] in set(columns)]
-        missing = set(columns) - {cm["name"] for cm in wanted}
+    One footer read, then one ranged read and decode per column: with
+    ``columns`` (a projection, kept in the caller's order; a name the
+    container lacks raises ``KeyError``) only those columns' byte spans
+    are fetched and inflated, never the whole container — the same
+    contract as parquet column chunks.  A projection of no column
+    returns the container's rows with no column."""
+    f, size, name = _open(source, fs)
+    with f:
+        meta = _footer(f, size, name)
+        by_name = {cm["name"]: cm for cm in meta["columns"]}
+        names = list(by_name) if columns is None else list(columns)
+        missing = set(names) - set(by_name)
         if missing:
             raise KeyError(f"columns not in container: {sorted(missing)}")
         arrays = {}
-        with fs_.open_read(source) as f:
-            for cm in wanted:
-                f.seek(cm["offset"])
-                colbuf = f.read(cm["size"])
-                arrays[cm["name"]] = _decode_column(colbuf, cm, 0)
-        # keep the caller's projection order
-        return pa.table({c: arrays[c] for c in columns})
-    if isinstance(source, str):
-        from fastparquet_spark.io import get_fs
-
-        with get_fs(source, fs).open_read(source) as f:
-            buf = f.read()
-    else:
-        buf = bytes(source)
-    if buf[:4] != MAGIC or buf[-4:] != MAGIC:
-        raise ValueError("not an FPSC container")
-    flen = int.from_bytes(buf[-8:-4], "little")
-    meta = json.loads(buf[len(buf) - 8 - flen:len(buf) - 8])
-    cols = meta["columns"]
-    if columns is not None:
-        by_name = {cm["name"]: cm for cm in cols}
-        missing = set(columns) - set(by_name)
-        if missing:
-            raise KeyError(f"columns not in container: {sorted(missing)}")
-        cols = [by_name[c] for c in columns]
-    arrays = {}
-    for cm in cols:
-        arrays[cm["name"]] = _decode_column(buf, cm, cm["offset"])
+        for n in names:
+            cm = by_name[n]
+            f.seek(cm["offset"])
+            arrays[n] = _decode_column(f.read(cm["size"]), cm)
+    if not arrays:
+        return _table([], [], meta["nrows"])
     return pa.table(arrays)
 
 
-def _decode_column(buf, cm: dict, pos: int) -> pa.Array:
-    """Inflate one column from ``buf`` starting at ``pos`` (0 when
-    ``buf`` is the column's ranged slice, the footer offset when it is
-    the whole container)."""
+def _decode_column(buf, cm: dict) -> pa.Array:
+    """Inflate one column from ``buf``, the column's byte span."""
     buf = memoryview(buf)  # block slices below are views, not copies
+    pos = 0
     n = cm["n"]
     ptype = cm["ptype"]
     null_count = cm["null_count"]
@@ -573,56 +608,3 @@ def _assemble(validity: np.ndarray, vals, cm: dict) -> pa.Array:
     full = _fill_rows(validity, vals, nulls, np_dt)
     return pa.Array.from_buffers(at, n, [vbuf, pa.py_buffer(full)],
                                  null_count=nc)
-
-
-def container_bloom_rules_out(path: str, meta: dict, clauses,
-                              fs=None) -> bool:
-    """True iff a container bloom filter PROVES some ==/in clause term
-    cannot match any row of ``path`` (definite negative only).  The
-    bloom span is fetched with one ranged read; columns without a bloom
-    or non-point operators never rule anything out."""
-    from fastparquet_spark.codecs.bloom import SplitBlockBloom, xxh64
-    from fastparquet_spark.format.predicate import point_values
-    from fastparquet_spark.io import get_fs
-
-    by_name = {cm["name"]: cm for cm in meta["columns"]}
-    wanted: dict[str, list] = {}
-    for col, op, val in clauses:
-        cm = by_name.get(col)
-        vals = point_values(op, val)
-        if cm is not None and "bloom_offset" in cm and vals is not None:
-            wanted.setdefault(col, []).extend(vals)
-    if not wanted:
-        return False
-    fs = get_fs(path, fs)
-    with fs.open_read(path) as f:
-        for col, vals in wanted.items():
-            cm = by_name[col]
-            f.seek(cm["bloom_offset"])
-            bf = SplitBlockBloom.frombytes(f.read(cm["bloom_bytes"]))
-            # probe encoding shared with the parquet path: UINT columns
-            # hash the unsigned byte layout (the writer bit-reinterprets
-            # before hashing), and an out-of-range value means "cannot
-            # rule out", never an OverflowError crash
-            from fastparquet_spark.format.dataset import _bloom_value_bytes
-            from fastparquet_spark.format.metadata import ConvertedType
-
-            unsigned = str(cm.get("arrow_type", "")).startswith("uint")
-            elem = {"type": cm["ptype"],
-                    "converted_type": (ConvertedType.UINT_32
-                                       if cm["ptype"] == Type.INT32
-                                       else ConvertedType.UINT_64)
-                    if unsigned else None}
-            hashes = []
-            for v in vals:
-                b = _bloom_value_bytes(v, elem)
-                if b is None:
-                    hashes = None
-                    break
-                hashes.append(xxh64(b, 0))
-            if hashes is None:
-                continue
-            got = bf.might_contain(np.array(hashes, dtype=np.uint64))
-            if not got.any():
-                return True  # 'in' semantics: no sought value present
-    return False

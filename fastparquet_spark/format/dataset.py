@@ -70,10 +70,12 @@ from fastparquet_spark.format.reader import read_footer, read_footer_tail
 from fastparquet_spark.io import fetch_footers, get_fs
 
 
-def _decode_stat(raw: bytes | None, ptype: int, conv: int | None,
-                 scale: int = 0):
-    if raw is None:
-        return None
+def _decode_stat(raw, ptype: int, conv: int | None, scale: int = 0):
+    """A chunk bound in the filter's value space: parquet's PLAIN stat
+    bytes decoded; a bound that is already a value (an FPSC footer's)
+    as it is."""
+    if not isinstance(raw, bytes):
+        return raw
     if ptype == Type.INT32:
         # UINT_32 stats are stored as reinterpreted bits in UNSIGNED order
         fmt = "<I" if conv == ConvertedType.UINT_32 else "<i"
@@ -321,8 +323,6 @@ def _elem_sig(e):
     differ (scale/precision/timestamp unit/integer width are all part
     of the Arrow type).  Group nodes have no Arrow type; they compare
     on child count + normalized LIST/MAP annotation."""
-    from fastparquet_spark.format.reader import _arrow_type
-
     nc = e.get("num_children")
     if nc:
         lt = e.get("logicalType") or {}
@@ -336,11 +336,24 @@ def _elem_sig(e):
             ann = None
         return ("group", nc, ann)
     try:
-        return ("leaf", str(_arrow_type(e)))
+        return ("leaf", str(leaf_type(e)))
     except Exception:  # unknown physical/logical combo: raw fallback
         return ("leaf?", e.get("type"), e.get("converted_type"),
                 e.get("type_length"), e.get("scale"), e.get("precision"),
                 _logical_sig(e.get("logicalType")))
+
+
+def leaf_type(e: dict):
+    """The Arrow type a scan reads a leaf schema element as: the type
+    an FPSC footer recorded (``arrow_type``), else the parquet
+    element's."""
+    if "arrow_type" in e:
+        from fastparquet_spark.format.container import _type_from_name
+
+        return _type_from_name(e["arrow_type"])
+    from fastparquet_spark.format.reader import _arrow_type
+
+    return _arrow_type(e)
 
 
 def union_leaf_elems(metas):
@@ -428,9 +441,29 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
     return _dataset(out_dir, fs, use_sidecar)[1]
 
 
-def _dataset(out_dir: str, fs=None, use_sidecar: bool = True):
-    """``(root, metas)`` of a dataset directory or a glob: the body of
-    :func:`dataset_metadata` and :func:`load_dataset_metas`.  A glob
+class ParquetFiles:
+    """The footer side of a scan's format plug-in, for parquet files:
+    what a dataset's files end in (``suffix``) and what their tails
+    carry (``magic``), whether a ``_metadata`` ``sidecar`` can stand in
+    for the footers, ``footer(tail)`` — the file's parquet-shaped
+    footer — and ``bloom(blob, path, offset, fs)`` — the split-block
+    bloom filter read from a bloom span.  ``container.FpscFiles`` is
+    the FPSC one; engine/scan_job.py adds each format's unit read."""
+
+    name, suffix, magic, sidecar = "parquet", ".parquet", b"PAR1", True
+
+    footer = staticmethod(read_footer_tail)
+
+    @staticmethod
+    def bloom(blob: bytes, path: str, offset: int, fs):
+        return _parse_bloom_blob(blob, path, offset, fs)
+
+
+def _dataset(out_dir: str, fs=None, use_sidecar: bool = True,
+             fmt=ParquetFiles):
+    """``(root, metas)`` of a dataset directory or a glob of ``fmt``
+    files: the body of :func:`dataset_metadata` and
+    :func:`load_dataset_metas`.  A glob
     (the reference's ``ParquetFile(glob)``, api.py:95-162) trusts the
     user's pattern for file suffixes (the reference opens whatever the
     glob matches, e.g. ``*.parq``) but skips sidecar/hidden basenames
@@ -447,12 +480,12 @@ def _dataset(out_dir: str, fs=None, use_sidecar: bool = True):
             if not os.path.basename(p).startswith(("_", "."))
             and not fs.isdir(p))
         base = common_root(files) if files else "."
-        tails = fetch_footers(files, fs)
+        tails = fetch_footers(files, fs, magic=fmt.magic)
         return base, _metas([relative_to(p, base) for p in files],
-                            [read_footer_tail(t) for t in tails])
+                            [fmt.footer(t) for t in tails])
     root = out_dir.rstrip("/")
     sidecar = _join(out_dir, "_metadata")
-    if use_sidecar and fs.exists(sidecar):
+    if use_sidecar and fmt.sidecar and fs.exists(sidecar):
         with fs.open_read(sidecar) as f:
             fmd = read_footer(f.read())
         by_file: dict[str, list] = {}
@@ -481,28 +514,30 @@ def _dataset(out_dir: str, fs=None, use_sidecar: bool = True):
 
     def is_data(rel: str) -> bool:
         segs = rel.split("/")
-        return segs[-1].endswith(".parquet") and \
+        return segs[-1].endswith(fmt.suffix) and \
             not any(s.startswith(("_", ".")) for s in segs)
 
     files = [p for p in fs.walk_files(out_dir) if is_data(rel_of(p))]
     rels = [rel_of(p) for p in files]
-    tails = fetch_footers(files, fs)
-    return root, _metas(rels, [read_footer_tail(t) for t in tails],
+    tails = fetch_footers(files, fs, magic=fmt.magic)
+    return root, _metas(rels, [fmt.footer(t) for t in tails],
                         detect_scheme(rels))
 
 
-def load_dataset_metas(path: str, fs=None) -> tuple[str, list[dict]]:
-    """(root, metas) for a dataset directory OR an explicit glob — the
-    ONE shared entry for scan planners (api.ParquetFile, paged_read,
-    the fps data source), so glob semantics cannot drift between them
-    (:func:`_dataset`); directory mode is exactly
-    :func:`dataset_metadata` (sidecar-aware).  No file raises
-    ``ValueError``."""
-    root, metas = _dataset(path, fs)
+def load_dataset_metas(path: str, fs=None,
+                       fmt=ParquetFiles) -> tuple[str, list[dict]]:
+    """(root, metas) for a dataset directory OR an explicit glob of
+    ``fmt`` files (:class:`ParquetFiles`, ``container.FpscFiles``) —
+    the ONE shared entry for scan planners (api.ParquetFile, paged_read,
+    read_fpsc, the fps and fpsc data sources), so listing and glob
+    semantics cannot drift between them (:func:`_dataset`); directory
+    mode is exactly :func:`dataset_metadata` (sidecar-aware).  No file
+    raises ``ValueError``."""
+    root, metas = _dataset(path, fs, fmt=fmt)
     if not metas:
-        raise ValueError(f"no parquet files match {path!r}"
+        raise ValueError(f"no {fmt.name} files match {path!r}"
                          if any(c in path for c in "*?[")
-                         else f"no parquet files under {path!r}")
+                         else f"no {fmt.name} files under {path!r}")
     return root, metas
 
 
@@ -1138,33 +1173,28 @@ def _bloom_terms(rg: dict, elems: dict, clause):
 
 
 def _bloom_rules_out(path: str, rg: dict, elems: dict, clause,
-                     fs=None, cache: dict | None = None) -> bool:
+                     blooms: dict) -> bool:
     """True iff a bloom filter PROVES some ==/in term of the AND-clause
     cannot match this row group (definite negative; bloom positives
-    prove nothing).  ``cache`` maps (path, offset) -> SplitBlockBloom
+    prove nothing).  ``blooms`` maps (path, offset) -> SplitBlockBloom,
     prefetched concurrently by :func:`_prefetch_blooms`."""
     import numpy as np
 
     from fastparquet_spark.codecs.bloom import xxh64
 
     for cmd, encoded in _bloom_terms(rg, elems, clause):
-        key = (path, cmd["bloom_filter_offset"])
-        bf = (cache or {}).get(key)
-        if bf is None:
-            bf = read_bloom_filter(path, cmd["bloom_filter_offset"],
-                                   cmd.get("bloom_filter_length"), fs=fs)
-            if cache is not None:
-                cache[key] = bf
+        bf = blooms[(path, cmd["bloom_filter_offset"])]
         hashes = np.array([xxh64(e, 0) for e in encoded], dtype=np.uint64)
         if not bf.might_contain(hashes).any():
             return True  # no sought value can be present
     return False
 
 
-def _prefetch_blooms(spans: dict, fs, max_workers: int = 16) -> dict:
+def _prefetch_blooms(spans: dict, fs, parse, max_workers: int = 16) -> dict:
     """Concurrent ranged fetch of bloom spans — ``spans`` maps
     (path, offset) -> length-or-None; returns (path, offset) ->
-    SplitBlockBloom.  The driver-serial probe loop was r4's named
+    SplitBlockBloom, each span read by ``parse`` (a format's
+    ``bloom``).  The driver-serial probe loop was r4's named
     scale-killer: at 100k files one sequential small read per chunk
     burns minutes of driver wall before the scan starts — the same
     failure mode :func:`io.fetch_footers` fixed for footers."""
@@ -1176,7 +1206,7 @@ def _prefetch_blooms(spans: dict, fs, max_workers: int = 16) -> dict:
         with f.open_read(path) as fh:
             fh.seek(offset)
             blob = fh.read(length if length else (1 << 20))
-        return (path, offset), _parse_bloom_blob(blob, path, offset, f)
+        return (path, offset), parse(blob, path, offset, f)
 
     if not spans:
         return {}
@@ -1187,12 +1217,14 @@ def _prefetch_blooms(spans: dict, fs, max_workers: int = 16) -> dict:
 
 
 def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
-                      use_bloom: bool = True) -> list[tuple[str, int]]:
+                      use_bloom: bool = True,
+                      fmt=ParquetFiles) -> list[tuple[str, int]]:
     """Surviving (file, row_group) pairs for a DNF filter — a flat
     AND-list ``[(col,op,val),...]`` or OR-of-ANDs ``[[...],[...]]`` —
-    over a dataset directory or glob (files keyed as
+    over a dataset directory or glob of ``fmt`` files (keyed as
     :func:`dataset_metadata` keys them), or over the given ``metas``
-    of the dataset rooted at ``out_dir``.
+    of the dataset rooted at ``out_dir``.  An FPSC container is one
+    row group (``container.FpscFiles``).
 
     Two pruning passes: min/max/null stats (metadata already in hand),
     then — for ==/in clauses on columns carrying a bloom filter —
@@ -1207,7 +1239,7 @@ def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
     ``ValueError``."""
     filters = dnf(filters)
     if metas is None:
-        out_dir, metas = _dataset(out_dir, fs)
+        out_dir, metas = _dataset(out_dir, fs, fmt=fmt)
     known, absent = dataset_columns(metas)
     check_columns(filters, known)
     if [] in filters:
@@ -1246,10 +1278,9 @@ def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
                 for cmd, _enc in _bloom_terms(rg, elems, c):
                     spans.setdefault((path, cmd["bloom_filter_offset"]),
                                      cmd.get("bloom_filter_length"))
-        cache = _prefetch_blooms(spans, fs)
+        blooms = _prefetch_blooms(spans, fs, fmt.bloom)
         keep += [(f, ri) for f, ri, clauses, path, rg, elems in batch
-                 if any(not _bloom_rules_out(path, rg, elems, c, fs=fs,
-                                             cache=cache)
+                 if any(not _bloom_rules_out(path, rg, elems, c, blooms)
                         for c in clauses)]
     return keep
 

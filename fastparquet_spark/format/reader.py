@@ -471,6 +471,7 @@ class _ByteSource:
 
     def __init__(self, source, fs=None):
         self.name = getattr(source, "name", "<file-like>")
+        self._own = False  # close only a handle opened here
         if isinstance(source, (bytes, bytearray, memoryview)):
             # ranges are views of the one immutable copy
             self._buf = memoryview(bytes(source))
@@ -481,7 +482,8 @@ class _ByteSource:
             self.name = source = os.fspath(source)
             self._buf = None
             self._f = get_fs(source, fs).open_read(source)
-        else:  # file-like: must support seek/read
+            self._own = True
+        else:  # file-like: must support seek/read; the caller's to close
             self._buf = None
             self._f = source
 
@@ -510,7 +512,7 @@ class _ByteSource:
         return read_footer_tail(tail)
 
     def close(self):
-        if self._f is not None and hasattr(self._f, "close"):
+        if self._own:
             self._f.close()
 
 

@@ -321,15 +321,17 @@ def read_tail(f, size: int, name: str, magic: bytes = b"PAR1") -> bytes:
     return f.read(flen + 8)
 
 
-def read_tail_footer(path: str, fs=None) -> bytes:
-    """Read ONLY a parquet file's footer tail (:func:`read_tail`)."""
+def read_tail_footer(path: str, fs=None, magic: bytes = b"PAR1") -> bytes:
+    """Read ONLY a parquet file's (or, with the FPSC ``magic``, a
+    container's) footer tail (:func:`read_tail`)."""
     fs = get_fs(path, fs)
     size = fs.size(path)
     with fs.open_read(path) as f:
-        return read_tail(f, size, path)
+        return read_tail(f, size, path, magic)
 
 
-def fetch_footers(paths: list[str], fs=None, max_workers: int = 16) -> list[bytes]:
+def fetch_footers(paths: list[str], fs=None, max_workers: int = 16,
+                  magic: bytes = b"PAR1") -> list[bytes]:
     """Concurrent footer fetch — the reference's metadata_from_many
     thread pool (fastparquet/util.py:146-167).  Sequential driver loops
     over 100k files burn minutes of idle cluster before a job starts."""
@@ -341,6 +343,6 @@ def fetch_footers(paths: list[str], fs=None, max_workers: int = 16) -> list[byte
         # serializing exactly the setup the thread pool exists to avoid
         fs = get_fs(paths[0])
     if len(paths) <= 1:
-        return [read_tail_footer(p, fs) for p in paths]
+        return [read_tail_footer(p, fs, magic) for p in paths]
     with ThreadPoolExecutor(max_workers=min(max_workers, len(paths))) as ex:
-        return list(ex.map(lambda p: read_tail_footer(p, fs), paths))
+        return list(ex.map(lambda p: read_tail_footer(p, fs, magic), paths))

@@ -5,7 +5,9 @@ pruning stack instead of hand-built DNF filters:
     spark.dataSource.register(FpsDataSource)
     spark.read.format("fps").load("/data/ds").filter("k = 7")
 
-is the idiomatic spelling of ``engine.scan_job.paged_read``:
+is the idiomatic spelling of ``engine.scan_job.paged_read``, and with
+the ``FpscScan`` plug-in (the ``fmt`` of ``FpscDataSource``,
+sources/fpsc_source.py) of ``read_fpsc``:
 
 1. ``pushFilters`` receives Catalyst's translated predicates and keeps
    the comparison/null/in terms as one DNF AND-clause;
@@ -74,11 +76,13 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from fastparquet_spark.engine.scan_job import ParquetScan
+
 _MAX_TASKS = 4096  # ceiling on scheduler units for 100k-file datasets
 
 
 def _pushed_clause(filters) -> list[tuple]:
-    """Catalyst -> DNF translation shared by the fps and fpsc readers:
+    """Catalyst -> DNF translation of the reader:
     the comparison / null / IN terms of Spark's pushed conjunction
     become ONE AND-clause of ``(col, op, val)`` terms for the pruning
     stack; anything else is left out (the readers return every filter
@@ -92,6 +96,8 @@ def _pushed_clause(filters) -> list[tuple]:
 
 
 class FpsDataSource(DataSource):
+    fmt = ParquetScan  # the scan's format plug-in (engine/scan_job.py)
+
     @classmethod
     def name(cls) -> str:
         return "fps"
@@ -109,7 +115,8 @@ class FpsDataSource(DataSource):
         if getattr(self, "_plan_cache", None) is None:
             from fastparquet_spark.format.dataset import load_dataset_metas
 
-            self._plan_cache = load_dataset_metas(self.options["path"])
+            self._plan_cache = load_dataset_metas(self.options["path"],
+                                                  fmt=self.fmt)
         return self._plan_cache
 
     def schema(self):
@@ -118,12 +125,12 @@ class FpsDataSource(DataSource):
         from fastparquet_spark.engine.scan_job import plan_scan
 
         root, metas = self._plan()
-        return from_arrow_schema(
-            plan_scan(root, metas, None, self._columns_opt())[0])
+        return from_arrow_schema(plan_scan(
+            root, metas, None, self._columns_opt(), fmt=self.fmt)[0])
 
     def reader(self, schema: StructType):
         return FpsReader(self.options["path"], self._columns_opt(),
-                         plan=self._plan())
+                         plan=self._plan(), fmt=self.fmt)
 
     def writer(self, schema: StructType, overwrite: bool):
         return FpsWriter(
@@ -134,10 +141,11 @@ class FpsDataSource(DataSource):
 
 
 class FpsReader(DataSourceReader):
-    def __init__(self, path: str, columns, plan=None):
+    def __init__(self, path: str, columns, plan=None, fmt=ParquetScan):
         self.path = path
         self.columns = columns
         self._plan = plan  # (root, metas) from the DataSource, if any
+        self.fmt = fmt
         self._clauses: list[tuple] = []
 
     def __getstate__(self):
@@ -168,9 +176,10 @@ class FpsReader(DataSourceReader):
         from fastparquet_spark.engine.scan_job import plan_scan
         from fastparquet_spark.format.dataset import load_dataset_metas
 
-        root, metas = self._plan or load_dataset_metas(self.path)
+        root, metas = self._plan or load_dataset_metas(self.path,
+                                                       fmt=self.fmt)
         aschema, file_cols, part_cols, units = plan_scan(
-            root, metas, self._clauses, self.columns)
+            root, metas, self._clauses, self.columns, fmt=self.fmt)
         header = {"file_cols": file_cols, "part_cols": part_cols,
                   "schema": aschema.serialize().to_pybytes(),
                   "clauses": list(self._clauses)}
@@ -199,7 +208,7 @@ class FpsReader(DataSourceReader):
             # per batch — peak executor memory is ONE batch, not a file
             yield from scan_unit(
                 path, ris, pvals, absent, clauses, header["file_cols"],
-                header["part_cols"], aschema, exact=False)
+                header["part_cols"], aschema, exact=False, fmt=self.fmt)
 
 
 @dataclass

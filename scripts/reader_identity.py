@@ -13,7 +13,10 @@ sentinel, and a two-partition hive dataset.  Calls: ``read_file``
 column), ``iter_row_groups``, ``head``, ``read_pages`` (three filters x
 exact True/False x projections None / one column / none x row-group
 subsets), ``filter_pages`` and ``api.ParquetFile`` ``to_pandas`` /
-``count``.  A Table hashes as its schema, row count and one combined
+``count``.  FPSC containers (nulls, a LIST column, fsst, plain and
+delta blocks, bloom filters, an empty container) go through
+``read_container`` (path and bytes, whole and projected, a missing
+column) and ``read_container_footer`` (path and bytes).  A Table hashes as its schema, row count and one combined
 IPC batch, a DataFrame as its dtypes and its Arrow form; a call that
 raises prints the exception's type.  ``<out>`` is emptied first; each
 file's own sha256 is printed too, so a writer difference cannot pass
@@ -128,6 +131,46 @@ def build(out: str) -> dict[str, str]:
     return files
 
 
+def build_fpsc(out: str) -> dict[str, str]:
+    """FPSC containers: one with the codecs chosen by size, one with
+    every string column pinned to fsst, one pinned to plain, and an
+    empty one."""
+    from fastparquet_spark.format.container import write_container
+
+    tbl = _flat().drop_columns(["m"]).append_column(
+        "lst", _nested().column("lst"))
+    files = {}
+    for name, kw in (
+            ("fpsc_auto", {"bloom_filters": {"s": 0.01, "i": True}}),
+            ("fpsc_fsst", {"codec_decisions": {"s": "fsst", "b": "fsst"},
+                           "compression": "SNAPPY"}),
+            ("fpsc_plain", {"codec_decisions": {"s": "plain", "b": "plain"},
+                            "bloom_filters": {"x": True}}),
+            ("fpsc_empty", {})):
+        files[name] = os.path.join(out, name + ".fpsc")
+        write_container(files[name], tbl.slice(0, 0)
+                        if name == "fpsc_empty" else tbl, **kw)
+    return files
+
+
+def fpsc_calls(path: str):
+    """(label, thunk) of every container read call on one file."""
+    from fastparquet_spark.format.container import (
+        read_container, read_container_footer,
+    )
+
+    blob = open(path, "rb").read()
+    for src, label in ((path, "path"), (blob, "bytes")):
+        yield f"read_container({label})", lambda src=src: read_container(src)
+        for cols in (["i"], ["s", "i"], ["lst", "x", "t"], ["i", "zz"],
+                     ["zz"]):
+            yield (f"read_container({label}){cols}",
+                   lambda src=src, cols=cols: read_container(src,
+                                                             columns=cols))
+        yield (f"read_container_footer({label})",
+               lambda src=src: read_container_footer(src))
+
+
 def digest(obj) -> str:
     """sha256 of a Table (schema, rows, one combined IPC batch), a
     DataFrame (dtypes, index names and its Arrow form), or anything
@@ -220,6 +263,15 @@ def main(out: str):
                 open(path, "rb").read()).hexdigest()[:16]}))
         for label, thunk in (hive_calls(path) if name == "hive"
                              else calls(path)):
+            try:
+                h = digest(thunk())
+            except Exception as e:  # noqa: BLE001 - recorded, not hidden
+                h = f"raises {type(e).__name__}"
+            print(json.dumps({"file": name, "call": label, "hash": h}))
+    for name, path in build_fpsc(out).items():
+        print(json.dumps({"file": name, "sha256": hashlib.sha256(
+            open(path, "rb").read()).hexdigest()[:16]}))
+        for label, thunk in fpsc_calls(path):
             try:
                 h = digest(thunk())
             except Exception as e:  # noqa: BLE001 - recorded, not hidden

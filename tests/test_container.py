@@ -132,9 +132,9 @@ def test_fpsc_chunked_streaming_and_resume(spark, tmp_path):
 
 def test_fpsc_job_uri_and_footer_only_probe(spark, tmp_path, monkeypatch):
     """The FPSC job runs end-to-end through the fs seam on a file://
-    URI (same contract as s3://), and read_fpsc's driver-side schema
-    probe reads ONLY the first container's footer — proved by byte
-    counting — instead of decoding a whole container."""
+    URI (same contract as s3://), and read_fpsc's driver-side plan
+    reads ONLY the containers' footers — proved by byte counting —
+    never a data block."""
     import glob as _glob
     import os
 
@@ -153,16 +153,20 @@ def test_fpsc_job_uri_and_footer_only_probe(spark, tmp_path, monkeypatch):
     assert back.count() == 1500
 
     files = sorted(_glob.glob(f"{out}/part-*.fpsc"))
-    with open(files[0], "rb") as f:
-        f.seek(os.path.getsize(files[0]) - 8)
-        flen = int.from_bytes(f.read(4), "little")
+    flens = []
+    for p in files:
+        with open(p, "rb") as f:
+            f.seek(os.path.getsize(p) - 8)
+            flens.append(int.from_bytes(f.read(4), "little"))
     counting = fio.CountingFS(fio.LocalFS())
     monkeypatch.setattr(fio, "get_fs", lambda path, fs=None: fs or counting)
-    probed = read_fpsc(spark, out)  # plan only: probe runs driver-side
+    probed = read_fpsc(spark, out)  # plan only: it runs driver-side
     assert set(probed.columns) == set(df.columns)
-    # exactly the 8-byte tail + the JSON footer, never the data blocks
-    assert counting.bytes_read <= flen + 16, \
-        f"probe read {counting.bytes_read} bytes; footer is {flen}"
+    # per container the 8-byte tail + the JSON footer with its tail,
+    # never the data blocks
+    budget = sum(flen + 16 for flen in flens)
+    assert 0 < counting.bytes_read <= budget, \
+        f"plan read {counting.bytes_read} bytes; footers are {budget}"
 
 
 def test_container_column_projection_is_ranged(tmp_path):
@@ -272,15 +276,22 @@ def test_fpsc_job_embeddings_table(spark):
 def test_container_bloom_write_probe_and_prune(tmp_path):
     """Container bloom filters: data unaffected, footer records the
     span, probe gives definite negatives for absent point values on
-    string and int columns — and the DataSource reader's file-level
-    pushdown uses them to prune whole containers where min/max stats
+    string and int columns — and the scan planner behind the data
+    source uses them to prune whole containers where min/max stats
     cannot discriminate."""
     import numpy as np
 
+    from fastparquet_spark.engine.scan_job import FpscScan
     from fastparquet_spark.format.container import (
-        container_bloom_rules_out, read_container, read_container_footer,
+        read_container, read_container_footer,
     )
-    from fastparquet_spark.sources.fpsc_source import FpscReader
+    from fastparquet_spark.sources.fps_source import FpsReader
+
+    def kept(clause):
+        """The containers the data source's planner keeps."""
+        r = FpsReader(str(tmp_path), None, fmt=FpscScan)
+        r._clauses = clause
+        return [u[0] for p in r.partitions() for u in p.value[1]]
 
     rng = np.random.default_rng(5)
     files = []
@@ -301,24 +312,13 @@ def test_container_bloom_write_probe_and_prune(tmp_path):
     assert cm["commit"]["bloom_bytes"] > 0 and cm["v"]["bloom_bytes"] > 0
     present = all_commits[0][777]
     absent = all_commits[0][0][:-4] + "beef"
-    assert not container_bloom_rules_out(files[0], meta,
-                                         [("commit", "==", present)])
-    assert container_bloom_rules_out(files[0], meta,
-                                     [("commit", "==", absent)])
+    assert files[0] in kept([("commit", "==", present)])
     # DataSource pruning: a commit present in file 1 only keeps file 1;
     # min/max stats alone cannot do this (random hashes span the range)
-    r = FpscReader(str(tmp_path))
-    r._clauses = [("commit", "==", all_commits[1][5])]
-    kept = [p.value for p in r.partitions()]
-    assert kept == [files[1]]
-    r2 = FpscReader(str(tmp_path))
-    r2._clauses = [("commit", "==", absent)]
-    assert r2.partitions() == []
+    assert kept([("commit", "==", all_commits[1][5])]) == [files[1]]
+    assert kept([("commit", "==", absent)]) == []
     # int bloom through 'in'
-    r3 = FpscReader(str(tmp_path))
-    r3._clauses = [("v", "in", [4100, 10**9])]
-    kept3 = [p.value for p in r3.partitions()]
-    assert kept3 == [files[2]]
+    assert kept([("v", "in", [4100, 10**9])]) == [files[2]]
 
 
 def test_codec_decisions_skip_dual_trial_and_stay_readable():

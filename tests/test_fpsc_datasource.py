@@ -67,10 +67,11 @@ def test_filter_pushdown_prunes_files(registered, tmp_path):
     stats (conservative: Spark still applies the exact predicate)."""
     import pyarrow as pa
 
+    from fastparquet_spark.engine.scan_job import FpscScan
     from fastparquet_spark.format.container import (
         read_container_footer, write_container,
     )
-    from fastparquet_spark.sources.fpsc_source import FpscReader
+    from fastparquet_spark.sources.fps_source import FpsReader
 
     spark = registered
     out = tmp_path / "pruned"
@@ -83,12 +84,12 @@ def test_filter_pushdown_prunes_files(registered, tmp_path):
     idc = next(c for c in meta["columns"] if c["name"] == "id")
     assert idc["min"] == 2000 and idc["max"] == 2999
 
-    r = FpscReader(str(out))
+    r = FpsReader(str(out), None, fmt=FpscScan)
     from pyspark.sql.datasource import GreaterThanOrEqual
     rest = r.pushFilters([GreaterThanOrEqual(("id",), 3100)])
     assert list(rest)  # everything returned: Spark stays exact
-    parts = r.partitions()
-    assert len(parts) == 1 and parts[0].value.endswith("part-3.fpsc")
+    units = [u for p in r.partitions() for u in p.value[1]]
+    assert len(units) == 1 and units[0][0].endswith("part-3.fpsc")
 
     # end to end: exact rows AND correct result through Spark
     got = (spark.read.format("fpsc").load(str(out))
@@ -141,3 +142,59 @@ def test_staged_leftovers_never_read_and_sweep_is_job_scoped(registered,
     others = [f for f in os.listdir(out)
               if ".stage-" in f and not f.lstrip(".").startswith("part-deadbeef-")]
     assert others == []
+
+
+MIXED = {
+    # same types, columns in a different order in the second container
+    "swapped": [{"a": [1, 2], "b": [10, 20]}, {"b": [30], "a": [3]}],
+    # the second container adds a column the first lacks
+    "added": [{"a": [1, 2], "b": [10, 20]},
+              {"a": [3, 4], "b": [30, 40], "c": ["x", None]}],
+}
+
+
+@pytest.mark.parametrize("layout", MIXED)
+def test_mixed_schema_containers_read_by_name(registered, tmp_path, layout):
+    """Containers whose columns differ in order or in number read by
+    column name, a missing column as typed nulls: every FPSC read
+    returns what ``paged_read`` returns for the same tables written as
+    parquet."""
+    import pyarrow as pa
+
+    from fastparquet_spark.engine import paged_read
+    from fastparquet_spark.engine.fpsc_job import read_fpsc
+    from fastparquet_spark.format.container import write_container
+    from fastparquet_spark.format.writer import write_file
+
+    spark = registered
+    fdir, pdir = tmp_path / "fpsc", tmp_path / "parquet"
+    fdir.mkdir()
+    pdir.mkdir()
+    for i, cols in enumerate(MIXED[layout]):
+        tbl = pa.table({k: pa.array(v, pa.string() if k == "c"
+                                    else pa.int64())
+                        for k, v in cols.items()})
+        write_container(str(fdir / f"part-{i}.fpsc"), tbl)
+        write_file(str(pdir / f"part-{i}.parquet"), tbl)
+    fsrc = spark.read.format("fpsc").load(str(fdir))
+
+    def rows(df):
+        return df.schema, sorted(
+            (tuple(sorted(r.asDict().items())) for r in df.collect()),
+            key=repr)
+
+    cases = [
+        (read_fpsc(spark, str(fdir)), paged_read(spark, str(pdir), None)),
+        (fsrc, paged_read(spark, str(pdir), None)),
+        (fsrc.filter("a >= 3"),
+         paged_read(spark, str(pdir), [("a", ">=", 3)])),
+        (read_fpsc(spark, str(fdir), columns=["b"]),
+         paged_read(spark, str(pdir), None, columns=["b"])),
+    ]
+    for got, want in cases:
+        assert rows(got) == rows(want)
+    assert dict(rows(fsrc.filter("a >= 3"))[1][0])["b"] == 30
+    if layout == "added":
+        assert rows(fsrc)[0].fieldNames() == ["a", "b", "c"]
+        assert sorted(r["c"] is None for r in fsrc.collect()) == \
+            [False, True, True, True]

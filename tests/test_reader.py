@@ -90,3 +90,14 @@ def test_zero_column_reads_keep_the_row_count(tmp_path):
     assert read_pages(path, [], columns=[], row_groups=[2]).num_rows == 50
     got = read_pages(path, flt, columns=[], exact=False)
     assert got.num_columns == 0
+
+
+def test_a_callers_file_object_stays_open():
+    """The reader closes only the handles it opened itself: a file
+    object the caller passes in can be read again afterwards."""
+    f = io.BytesIO(_parquet())
+    first = read_file(f)
+    assert not f.closed
+    assert read_file(f).equals(first)
+    assert not f.closed
+    assert first.equals(TABLE)

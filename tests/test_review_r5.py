@@ -10,7 +10,7 @@
 3. SortingColumn.column_idx indexed the top-level column list, not the
    row group's LEAF chunk list — a struct/map ahead of the sort column
    shifted the declared sort onto the wrong leaf.
-4. container_bloom_rules_out crashed with OverflowError for uint
+4. the container bloom probe crashed with OverflowError for uint
    probes above the signed range (fixed by sharing _bloom_value_bytes,
    which also now type-checks probes so a float probe of an int column
    can never hash the wrong layout into a FALSE NEGATIVE).
@@ -88,24 +88,34 @@ def test_sorting_column_indexes_leaf_chunks(tmp_path):
 
 
 def test_container_bloom_uint_overflow_and_typed_probes(tmp_path):
-    from fastparquet_spark.format.container import (
-        container_bloom_rules_out, read_container_footer, write_container,
+    from fastparquet_spark.format.container import FpscFiles, write_container
+    from fastparquet_spark.format.dataset import (
+        filter_row_groups, load_dataset_metas,
     )
 
     p = str(tmp_path / "c.fpsc")
     t = pa.table({"u": pa.array([1, 2, 2**31 + 5], pa.uint32()),
                   "k": pa.array([10, 20, 30], pa.int64())})
     write_container(p, t, bloom_filters={"u": True, "k": True})
-    meta = read_container_footer(p)
+
+    def rules_out(clause) -> bool:
+        """The planner's bloom tier alone prunes the container: its
+        min/max are dropped so stats cannot decide."""
+        root, metas = load_dataset_metas(str(tmp_path), fmt=FpscFiles)
+        for cc in metas[0]["fmd"]["row_groups"][0]["columns"]:
+            cc["meta_data"]["statistics"] = {}
+        return filter_row_groups(root, clause, metas=metas,
+                                 fmt=FpscFiles) == []
+
     # present uint value above signed range: kept, no OverflowError
-    assert not container_bloom_rules_out(p, meta, [("u", "==", 2**31 + 5)])
+    assert not rules_out([("u", "==", 2**31 + 5)])
     # unrepresentable probe: conservatively kept
-    assert not container_bloom_rules_out(p, meta, [("u", "==", 2**80)])
+    assert not rules_out([("u", "==", 2**80)])
     # absent in-range value: ruled out
-    assert container_bloom_rules_out(p, meta, [("k", "==", 12345)])
+    assert rules_out([("k", "==", 12345)])
     # float probe of an int column: 20.0 present (exact), 20.5 cannot
     # be in an int column but must NOT false-negative via wrong bytes
-    assert not container_bloom_rules_out(p, meta, [("k", "==", 20.0)])
+    assert not rules_out([("k", "==", 20.0)])
     # typed-probe unit checks on the shared encoder
     from fastparquet_spark.format.metadata import Type
 

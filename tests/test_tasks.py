@@ -49,15 +49,15 @@ def test_contiguous_even_slices_when_rows_exceed_tasks(spark, n, max_parts):
 
 
 def test_zero_rows(spark, tmp_path):
-    from pyspark.sql.types import LongType, StructField, StructType
-
+    from fastparquet_spark.engine import paged_read
     from fastparquet_spark.engine.fpsc_job import read_fpsc
 
     assert _tasks(spark, 0, 8).count() == 0
-    schema = StructType([StructField("x", LongType())])
-    df = read_fpsc(spark, str(tmp_path), schema=schema)
-    assert df.schema == schema
-    assert df.collect() == []
+    # a directory with no file to plan raises, in both formats
+    with pytest.raises(ValueError, match="no FPSC files"):
+        read_fpsc(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="no parquet files"):
+        paged_read(spark, str(tmp_path), None)
 
 
 def test_split_encode_runs_one_task_per_split(spark, tmp_path):
@@ -92,3 +92,50 @@ def test_split_encode_runs_one_task_per_split(spark, tmp_path):
     assert sorted((r["pid"], r["partition"]) for r in rows) == \
         [(i, i) for i in range(4)]
     assert all(r["rows"] == 100 for r in rows)
+
+
+def _jobs_of(spark, group: str, action) -> int:
+    """Spark jobs ``action`` runs, planning included."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "scan job count")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_scan_job_counts(spark, tmp_path):
+    """The scans of both formats, planning and read, cost the pinned
+    number of Spark jobs: the driver plans from footers without a job."""
+    from fastparquet_spark.engine import paged_read
+    from fastparquet_spark.engine.fpsc_job import read_fpsc
+    from fastparquet_spark.format.container import write_container
+    from fastparquet_spark.format.writer import write_file
+    from fastparquet_spark.sources import FpscDataSource, FpsDataSource
+
+    for src in (FpsDataSource, FpscDataSource):
+        try:
+            spark.dataSource.register(src)
+        except Exception as e:  # already registered in this session
+            if "already" not in str(e).lower():
+                raise
+    for i in range(3):
+        tbl = pa.table({"k": pa.array(range(i * 100, (i + 1) * 100)),
+                        "s": pa.array([f"v{j % 7}" for j in range(100)])})
+        write_file(str(tmp_path / f"p{i}.parquet"), tbl, row_group_rows=50)
+        write_container(str(tmp_path / f"c{i}.fpsc"), tbl)
+    d = str(tmp_path)
+    runs = {
+        "read_fpsc": lambda: read_fpsc(spark, d).count(),
+        "fpsc_source": lambda: spark.read.format("fpsc").load(d).count(),
+        "fps_source": lambda: spark.read.format("fps").load(d).count(),
+        "paged_read": lambda: paged_read(spark, d, [("k", ">=", 120)]).count(),
+    }
+    assert runs["paged_read"]() == 180
+    got = {name: _jobs_of(spark, f"scan-jobs-{name}-{tmp_path.name}", run)
+           for name, run in runs.items()}
+    # a count is two jobs under adaptive execution: the partial counts'
+    # shuffle stage, then the final count
+    assert got == {"read_fpsc": 2, "fpsc_source": 2, "fps_source": 2,
+                   "paged_read": 2}

@@ -739,12 +739,11 @@ def engine_bloom_prune(spark, sf_dir):
     UNSORTED with a bloom on doc_id — every file's min/max then spans the
     whole id range, so stats pruning keeps everything and only the bloom
     can rule files out — and read back just the sought ids via
-    filtered_read (bloom pass + exact residual predicate).  The oracle
+    paged_read (bloom pass + exact residual predicate).  The oracle
     recomputes the rows from the raw table, so bloom pruning must lose
     nothing (false NEGATIVES are impossible by construction; the gate
     proves it end-to-end)."""
-    from fastparquet_spark.engine import encode_dataset
-    from fastparquet_spark.format.dataset import filtered_read
+    from fastparquet_spark.engine import encode_dataset, paged_read
 
     docs = relational.load(spark, sf_dir, "documents")
     out = tempfile.mkdtemp(prefix="fps_bl_")
@@ -753,8 +752,8 @@ def engine_bloom_prune(spark, sf_dir):
                    sort_within=(), resume=False,
                    bloom_filters={"doc_id": 0.01}).collect()
     ids = [7, 123, 404]
-    return (filtered_read(spark, out, [("doc_id", "in", ids)])
-            .select("doc_id", "lang", "n_chars"))
+    return paged_read(spark, out, [("doc_id", "in", ids)],
+                      columns=["doc_id", "lang", "n_chars"])
 
 
 ORACLES["engine_bloom_prune"] = """

@@ -14,12 +14,10 @@ Re-expresses the reference's metadata "query" surface
 - ``filter_row_groups``   — DNF stats + bloom pruning of row groups
                             (fastparquet/api.py:948-999);
 - ``filter_pages`` / ``read_pages`` — ColumnIndex page pruning and the
-                            page-skipping read below it;
-- ``filtered_read``       — Spark scan of only the surviving files, with
-                            the residual predicate applied (so results
-                            are exact, pruning is just I/O savings — the
-                            same contract as the reference's
-                            ``to_pandas(filters=...)``).
+                            page-skipping read below it.
+
+The exact Spark-side read of a DNF filter over such a directory is
+``engine.scan_job.paged_read``, which plans through these tiers.
 
 Every one of them takes its filter through ``format/predicate.py``:
 ``dnf`` normalizes it and ``may_match`` is the one min/max/null-count
@@ -63,38 +61,55 @@ from typing import Any
 
 from fastparquet_spark.format.metadata import ConvertedType, Type
 from fastparquet_spark.format.predicate import (
-    _apply_row_filter_dnf, _chunk_may_match, _file_clauses, check_columns,
-    dnf, may_match, point_values,
+    _apply_row_filter_dnf, _chunk_may_match, _file_clauses, _stat_may_match,
+    check_columns, dnf, point_values,
 )
 from fastparquet_spark.format.reader import read_footer, read_footer_tail
 from fastparquet_spark.io import fetch_footers, get_fs
 
 
-def _decode_stat(raw, ptype: int, conv: int | None, scale: int = 0):
-    """A chunk bound in the filter's value space: parquet's PLAIN stat
-    bytes decoded; a bound that is already a value (an FPSC footer's)
-    as it is."""
-    if not isinstance(raw, bytes):
-        return raw
-    if ptype == Type.INT32:
-        # UINT_32 stats are stored as reinterpreted bits in UNSIGNED order
-        fmt = "<I" if conv == ConvertedType.UINT_32 else "<i"
+def _decode_stat(raw, elem: dict):
+    """A chunk bound in the filter's value space, the column's logical
+    value (what a row filter compares a term's value with): parquet's
+    PLAIN stat bytes decoded, DECIMAL exactly (unscaled/10^scale as
+    Decimal), and an integer bound of a DATE/TIMESTAMP/TIME column —
+    parquet's or an FPSC footer's epoch int — as its ``date`` /
+    ``datetime`` / ``time``.  A bound that is already a value (an FPSC
+    footer's) passes through."""
+    v = _decode_plain_stat(raw, elem) if isinstance(raw, bytes) else raw
+    if type(v) is int and _is_temporal(elem):
+        import pyarrow as pa
+
+        return pa.scalar(v, leaf_type(elem)).as_py()
+    return v
+
+
+_TEMPORAL_CONV = {ConvertedType.DATE, ConvertedType.TIME_MILLIS,
+                  ConvertedType.TIME_MICROS, ConvertedType.TIMESTAMP_MILLIS,
+                  ConvertedType.TIMESTAMP_MICROS}
+
+
+def _is_temporal(elem: dict) -> bool:
+    """Does a leaf element read as a date, time or timestamp?"""
+    lt = elem.get("logicalType") or {}
+    return (elem.get("converted_type") in _TEMPORAL_CONV
+            or "DATE" in lt or "TIME" in lt or "TIMESTAMP" in lt
+            or elem.get("arrow_type", "").startswith(("date", "time")))
+
+
+def _decode_plain_stat(raw: bytes, elem: dict):
+    """A parquet PLAIN-encoded stat bound as a Python value."""
+    ptype, conv = elem["type"], elem.get("converted_type")
+    if ptype in (Type.INT32, Type.INT64):
+        fmt = "<q" if ptype == Type.INT64 else "<i"
+        if conv in (ConvertedType.UINT_32, ConvertedType.UINT_64):
+            fmt = fmt.upper()  # reinterpreted bits in UNSIGNED order
         v = struct.unpack(fmt, raw)[0]
         if conv == ConvertedType.DECIMAL:
-            # LOGICAL value space, exactly (unscaled/10^scale as
-            # Decimal): filter values are logical, and comparing them
-            # against raw unscaled ints mis-prunes
+            # LOGICAL value space, exactly: filter values are logical,
+            # and comparing them against raw unscaled ints mis-prunes
             import decimal
-            return decimal.Decimal(v).scaleb(-scale)
-        return v
-    if ptype == Type.INT64:
-        fmt = "<Q" if conv == ConvertedType.UINT_64 else "<q"
-        v = struct.unpack(fmt, raw)[0]
-        if conv == ConvertedType.DECIMAL:
-            import decimal
-            return decimal.Decimal(v).scaleb(-scale)
-        if conv == ConvertedType.TIMESTAMP_MICROS:
-            return v  # compare in raw micros
+            return decimal.Decimal(v).scaleb(-(elem.get("scale") or 0))
         return v
     if ptype == Type.FLOAT:
         return struct.unpack("<f", raw)[0]
@@ -762,8 +777,7 @@ def _chunk_stats(rg: dict, elems: dict) -> dict[str, tuple]:
         if elem is None:
             continue  # leaf the schema walk couldn't place
         st = cmd.get("statistics") or {}
-        lo, hi = (_decode_stat(raw, elem["type"], elem.get("converted_type"),
-                               elem.get("scale") or 0)
+        lo, hi = (_decode_stat(raw, elem)
                   for raw in (st.get("min_value") or st.get("min"),
                               st.get("max_value") or st.get("max")))
         cols[name] = (lo, hi, st.get("null_count"), cmd["num_values"])
@@ -970,13 +984,11 @@ def _page_keep_mask(fmd: dict, idx, ri: int, clause):
                 mask.append(True)
                 continue
             else:
-                lo, hi = (_decode_stat(raw[pi], elem["type"],
-                                       elem.get("converted_type"),
-                                       elem.get("scale") or 0)
+                lo, hi = (_decode_stat(raw[pi], elem)
                           for raw in (ci["min_values"], ci["max_values"]))
                 stats = (lo, hi, null_counts[pi], None)
             try:
-                mask.append(may_match(op, val, *stats))
+                mask.append(_stat_may_match(op, val, *stats))
             except TypeError:
                 mask.append(True)  # incomparable types: cannot prune
         keep_mask = mask if keep_mask is None else \
@@ -1284,82 +1296,3 @@ def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
                         for c in clauses)]
     return keep
 
-
-def _attach_drill_columns(df, metas):
-    """Add ``dir0..dirN`` columns to a Spark scan of a drill-layout
-    dataset (Spark discovers hive ``k=v`` natively but ignores bare
-    label dirs).  The value comes from ``input_file_name()`` segment
-    arithmetic — a JVM expression, no Python in the row path — and is
-    cast to the Spark form of the column's :func:`partition_type`
-    (the reference's val_to_num typing)."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
-
-    parts = [m["partitions"] for m in metas]
-    if not parts or not parts[0] or "dir0" not in parts[0]:
-        return df
-    depth = len(parts[0])
-    segs = F.split(F.input_file_name(), "/")
-    for i in range(depth):
-        name = f"dir{i}"
-        typ = partition_type([p[name] for p in parts])
-        c = F.element_at(segs, -(depth - i + 1))
-        if pa.types.is_boolean(typ):
-            c = c == "True"
-        elif not pa.types.is_string(typ):
-            c = c.cast("long" if pa.types.is_integer(typ) else "double")
-        df = df.withColumn(name, c)
-    return df
-
-
-def drill_read(spark, out_dir: str):
-    """Spark DataFrame over a drill-layout dataset (bare value directory
-    names, the reference's 'drill' file scheme, fastparquet/util.py:
-    356-388) with ``dir0..dirN`` partition columns attached."""
-    metas = dataset_metadata(out_dir)
-    # bare label dirs aren't partition dirs to Spark, so its default
-    # listing skips them; recursive lookup scans the leaves directly
-    df = (spark.read.option("recursiveFileLookup", "true")
-          .parquet(out_dir))
-    return _attach_drill_columns(df, metas)
-
-
-def filtered_read(spark, out_dir: str, filters):
-    """Spark DataFrame over only the stats-surviving part files, with the
-    exact residual predicate applied on top.  Hive partition columns come
-    from Spark's own discovery (basePath); drill ``dirN`` columns are
-    attached from the file path."""
-    from pyspark.sql import functions as F
-
-    metas = dataset_metadata(out_dir)
-    drill = bool(metas and "dir0" in (metas[0].get("partitions") or {}))
-    filters = dnf(filters)
-    keep_files = sorted({f for f, _ri in
-                         filter_row_groups(out_dir, filters, metas=metas)})
-    if not keep_files:
-        # empty scan with the right schema (partition cols included)
-        if drill:
-            return drill_read(spark, out_dir).limit(0)
-        return spark.read.option("basePath", out_dir).parquet(out_dir).limit(0)
-    # basePath keeps hive key=value partition columns in the schema when
-    # individual files are listed explicitly
-    df = (spark.read.option("basePath", out_dir)
-          .parquet(*[os.path.join(out_dir, f) for f in keep_files]))
-    if drill:
-        df = _attach_drill_columns(df, metas)
-    if [] in filters:
-        return df  # a match-all DNF branch makes the whole OR true
-    ors = None
-    for clause in filters:
-        ands = None
-        for col, op, val in clause:
-            c = F.col(col)
-            e = {"==": c == val, "=": c == val, "!=": c != val,
-                 "<": c < val, "<=": c <= val, ">": c > val, ">=": c >= val,
-                 "in": c.isin(*val) if isinstance(val, (list, tuple, set)) else c.isin(val),
-                 "not in": ~c.isin(*val) if isinstance(val, (list, tuple, set)) else ~c.isin(val),
-                 "is_null": c.isNull(), "is_not_null": c.isNotNull(),
-                 }[op]
-            ands = e if ands is None else (ands & e)
-        ors = ands if ors is None else (ors | ands)
-    return df.filter(ors)

@@ -14,9 +14,16 @@ residual row filter live here too, so every tier reads one definition
 of what a term means:
 
 - SQL null semantics: a null matches ``is_null`` and nothing else
-  (``!=`` and ``not in`` included);
+  (``!=`` and ``not in`` included), and a ``None`` member of an
+  ``in``/``not in`` list matches no row;
+- NaN never compares: a NaN equals nothing, itself included, and
+  orders with nothing, so ``==``, ``in`` and the orderings are false
+  for it and ``!=`` and ``not in`` true (IEEE; a NaN member of a list
+  matches no row);
 - pruning is sound: False from :func:`may_match` means no value of the
-  chunk can match; True promises nothing.
+  chunk can match; True promises nothing.  A file's float bounds may
+  leave a NaN out (pyarrow's do), which :func:`_stat_may_match` allows
+  for.
 """
 
 from __future__ import annotations
@@ -75,7 +82,7 @@ def may_match(op, val, lo, hi, nulls, nvals) -> bool:
     if op == "<=":
         return lo is None or lo <= val
     if op == "in":
-        sv = sorted(val)
+        sv = sorted(_members(val))
         if not sv:
             return False
         if lo is None:
@@ -92,13 +99,31 @@ def may_match(op, val, lo, hi, nulls, nvals) -> bool:
     raise ValueError(f"unsupported filter op {op!r}")
 
 
+def _members(val) -> list:
+    """The members of an ``in``/``not in`` list a value can equal: its
+    nulls and NaNs match no row."""
+    return [v for v in val if v is not None and v == v]
+
+
+def _stat_may_match(op, val, lo, hi, nulls, nvals) -> bool:
+    """:func:`may_match` over bounds read from a file (row-group,
+    page-index or container stats).  Float bounds may leave a NaN out,
+    so a constant float chunk can still hold a NaN that ``!=`` and
+    ``not in`` keep: the chunk is judged as if its upper bound were
+    unknown."""
+    if isinstance(lo, float) and op in ("!=", "not in"):
+        hi = None
+    return may_match(op, val, lo, hi, nulls, nvals)
+
+
 def point_values(op, val):
     """The probe values of a term a bloom filter can answer (``==``:
-    the value, ``in``: its members), or None for every other op."""
+    the value, ``in``: its members a value can equal), or None for
+    every other op."""
     if op in ("==", "="):
         return [val]
     if op == "in":
-        return list(val)
+        return _members(val)
     return None
 
 
@@ -112,7 +137,7 @@ def _chunk_may_match(cols, clause) -> bool:
         if st is None:
             continue
         try:
-            if not may_match(op, val, *st):
+            if not _stat_may_match(op, val, *st):
                 return False
         except TypeError:
             continue
@@ -215,7 +240,11 @@ def _row_mask(table, clause):
         elif op == "is_not_null":
             m = pc.is_valid(c)
         elif op in ("in", "not in"):
-            m = pc.is_in(c, value_set=pa.array(list(val)))
+            members = _members(val)
+            # an empty set takes the column's type: Arrow rejects a
+            # null-typed set against a string column
+            m = pc.is_in(c, value_set=pa.array(
+                members, type=None if members else c.type))
             if op == "not in":
                 m = pc.and_(pc.invert(m), pc.is_valid(c))
         else:

@@ -86,13 +86,26 @@ def _pushed_clause(filters) -> list[tuple]:
     the comparison / null / IN terms of Spark's pushed conjunction
     become ONE AND-clause of ``(col, op, val)`` terms for the pruning
     stack; anything else is left out (the readers return every filter
-    to Spark as unsupported, so Spark re-applies the exact predicate)."""
+    to Spark as unsupported, so Spark re-applies the exact predicate).
+
+    Spark orders NaN above every double and equal to itself, while file
+    stats may leave a NaN out, so terms a NaN row can satisfy under
+    Spark's rules but the stats cannot see are left out too: ``>`` /
+    ``>=`` with a float value, and any term whose value or ``in``
+    member is NaN."""
     ops = {EqualTo: "==", GreaterThan: ">", GreaterThanOrEqual: ">=",
            LessThan: "<", LessThanOrEqual: "<=", In: "in",
            IsNull: "is_null", IsNotNull: "is_not_null"}
-    return [(f.attribute[0], ops[type(f)], getattr(f, "value", None))
-            for f in filters  # In.value is a tuple
-            if type(f) in ops and len(f.attribute) == 1]
+
+    def nan_blind(op, val) -> bool:
+        vals = val if op == "in" else (val,)
+        return (op in (">", ">=") and isinstance(val, float)) \
+            or any(v != v for v in vals)
+
+    terms = [(f.attribute[0], ops[type(f)], getattr(f, "value", None))
+             for f in filters  # In.value is a tuple
+             if type(f) in ops and len(f.attribute) == 1]
+    return [t for t in terms if not nan_blind(t[1], t[2])]
 
 
 class FpsDataSource(DataSource):

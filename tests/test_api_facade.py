@@ -209,7 +209,7 @@ def test_to_pandas_categories_and_index(tmp_path):
 def test_merge_and_drill_scheme(tmp_path):
     """merge() writes the sidecars and opens the dataset (reference
     writer.py:1156); write(file_scheme='drill') lays out bare value
-    dirs that drill_read discovers as dir0."""
+    dirs that paged_read discovers as dir0."""
     import os
 
     from fastparquet_spark.api import merge

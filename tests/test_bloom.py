@@ -87,6 +87,9 @@ def test_bloom_prunes_where_stats_cannot(tmp_path):
     keep_in = filter_row_groups(
         str(tmp_path), [("commit", "in", [absent, present])])
     assert ("a.parquet", 2) in keep_in
+    # a None member matches no row, so it does not stop the probe
+    assert filter_row_groups(
+        str(tmp_path), [("commit", "in", [absent, None])]) == []
 
 
 def test_bloom_int_and_hash_values_shapes(tmp_path):

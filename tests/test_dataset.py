@@ -1,5 +1,6 @@
 """Dataset-level metadata operators: merged footers, global statistics,
-sortedness detection, DNF row-group pruning + exact filtered reads."""
+sortedness detection, DNF row-group pruning + exact reads through
+``paged_read``."""
 
 from __future__ import annotations
 
@@ -7,12 +8,12 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from fastparquet_spark.engine import paged_read
 from fastparquet_spark.format import write_file
 from fastparquet_spark.format.dataset import (
     dataset_metadata,
     dataset_statistics,
     filter_row_groups,
-    filtered_read,
     sorted_columns,
 )
 
@@ -63,16 +64,16 @@ def test_filter_row_groups_prunes(dataset_dir):
         filter_row_groups(dataset_dir, [("k", "~", 1)])
 
 
-def test_filtered_read_exact(dataset_dir, spark):
-    got = filtered_read(spark, dataset_dir,
-                        [("k", ">=", 2500), ("k", "<=", 2600)]).collect()
+def test_paged_read_exact(dataset_dir, spark):
+    got = paged_read(spark, dataset_dir,
+                     [("k", ">=", 2500), ("k", "<=", 2600)]).collect()
     assert sorted(r["k"] for r in got) == list(range(2500, 2601))
     full = spark.read.parquet(f"{dataset_dir}/part-*.parquet")
     expected = full.filter("v > 900").count()
-    assert filtered_read(spark, dataset_dir, [("v", ">", 900)]).count() == expected
-    assert filtered_read(spark, dataset_dir, [("k", ">", 10**9)]).count() == 0
+    assert paged_read(spark, dataset_dir, [("v", ">", 900)]).count() == expected
+    assert paged_read(spark, dataset_dir, [("k", ">", 10**9)]).count() == 0
     # in / not-in ops
-    got = filtered_read(spark, dataset_dir, [("k", "in", [5, 5999])]).collect()
+    got = paged_read(spark, dataset_dir, [("k", "in", [5, 5999])]).collect()
     assert sorted(r["k"] for r in got) == [5, 5999]
 
 
@@ -112,10 +113,6 @@ def test_drill_scheme_detection_and_values(tmp_path):
 
 
 def test_drill_pruning_and_read(tmp_path, spark):
-    from fastparquet_spark.format.dataset import (
-        drill_read, filter_row_groups, filtered_read,
-    )
-
     root = _drill_fixture(tmp_path)
     # partition pruning on the inferred dir columns
     keep = filter_row_groups(root, [("dir0", "==", 2020)])
@@ -124,11 +121,12 @@ def test_drill_pruning_and_read(tmp_path, spark):
     keep = filter_row_groups(root, [("dir0", ">", 2020), ("dir1", "==", "emea")])
     assert [f for f, _ in keep] == ["2021/emea/part-0.parquet"]
     # full read attaches typed partition columns
-    df = drill_read(spark, root)
-    assert dict(df.dtypes)["dir0"] == "bigint"
+    df = paged_read(spark, root, None)
+    assert df.dtypes == [("k", "bigint"), ("dir0", "bigint"),
+                         ("dir1", "string")]
     assert df.count() == 8
-    rows = filtered_read(spark, root,
-                         [("dir0", "==", 2021), ("dir1", "==", "apac")]).collect()
+    rows = paged_read(spark, root,
+                      [("dir0", "==", 2021), ("dir1", "==", "apac")]).collect()
     assert len(rows) == 2
     assert {r["dir0"] for r in rows} == {2021}
     assert {r["dir1"] for r in rows} == {"apac"}

@@ -307,3 +307,55 @@ def test_facade_partition_terms_use_the_resolved_type(tmp_path):
                       ([("k", "!=", "abc")], [0, 1, 2])):
         df = pf.to_pandas(filters=flt, row_filter=True)
         assert sorted(df["v"]) == want, flt
+
+
+# ------------------------------------------------ date / timestamp values --
+
+def test_datetime_and_date_values_prune_every_tier(tmp_path):
+    """A ``datetime``/``date`` filter value prunes on the bounds of a
+    TIMESTAMP/DATE column — parquet stats, the page index and FPSC
+    container stats (epoch ints) alike — and the kept rows are exact."""
+    import datetime as dt
+
+    from fastparquet_spark.format.container import FpscFiles, write_container
+
+    n = 16
+    t0 = dt.datetime(2020, 1, 1)
+    ts = [t0 + dt.timedelta(days=30 * i) for i in range(n)]
+    tbl = pa.table({
+        "i": pa.array(range(n), pa.int64()),
+        "t": pa.array(ts, pa.timestamp("us")),
+        "tz": pa.array(ts, pa.timestamp("ms", "UTC")),
+        "ns": pa.array([t.replace(microsecond=1) for t in ts],
+                       pa.timestamp("ns")),
+        "d": pa.array([t.date() for t in ts], pa.date32())})
+    pq_dir, fpsc_dir = tmp_path / "pq", tmp_path / "fpsc"
+    pq_dir.mkdir()
+    fpsc_dir.mkdir()
+    write_file(str(pq_dir / "part-0.parquet"), tbl, row_group_rows=4,
+               page_rows=2)
+    for g in range(4):  # FPSC has no zoned timestamps
+        write_container(str(fpsc_dir / f"part-{g}.fpsc"),
+                        tbl.slice(4 * g, 4).drop_columns(["tz"]))
+    cut = ts[13]  # row 13: the second row of the last row group
+    utc = cut.replace(tzinfo=dt.timezone.utc)
+    for flt in ([("t", ">=", cut)], [("tz", ">=", utc)],
+                [("ns", ">", cut)], [("d", ">=", cut.date())]):
+        want = [13, 14, 15]
+        assert filter_row_groups(str(pq_dir), flt) == \
+            [("part-0.parquet", 3)], flt
+        if flt[0][0] != "tz":
+            assert filter_row_groups(str(fpsc_dir), flt, fmt=FpscFiles) \
+                == [("part-3.fpsc", 0)], flt
+        path = str(pq_dir / "part-0.parquet")
+        # page tier: the last row group's second page only (rows 14-15)
+        # survives beside row 13's page
+        assert filter_pages(path, flt) == [(3, 0, 2), (3, 2, 2)], flt
+        assert read_pages(path, flt, columns=["i"], exact=True) \
+            .column("i").to_pylist() == want, flt
+        assert api.ParquetFile(str(pq_dir)).to_pandas(
+            columns=["i"], filters=flt, row_filter=True)["i"].tolist() \
+            == want, flt
+    # a bound between rows prunes the page before it
+    assert filter_pages(str(pq_dir / "part-0.parquet"),
+                        [("t", ">=", ts[14])]) == [(3, 2, 2)]

@@ -7,7 +7,7 @@
    's3://b' to 's3:/b', silently rerouting reads to LocalFS);
 3. dataset_statistics / sorted_columns survive incomparable
    cross-chunk stat types;
-4. filtered_read with empty/None filters is a FULL scan, not an
+4. paged_read with empty/None filters is a FULL scan, not an
    empty DNF;
 5. read_pages / filter_pages accept None/[] filters and flat-read
    files that also contain nested columns;
@@ -95,15 +95,15 @@ def test_mixed_type_stats_do_not_crash(tmp_path):
     assert sorted_columns(str(d)) == []  # unsortable, not a crash
 
 
-def test_filtered_read_empty_filters_full_scan(spark, tmp_path):
-    from fastparquet_spark.format.dataset import filtered_read
+def test_paged_read_empty_filters_full_scan(spark, tmp_path):
+    from fastparquet_spark.engine import paged_read
 
     d = tmp_path / "fr"
     d.mkdir()
     write_file(str(d / "p.parquet"), pa.table({"k": pa.array(range(50))}))
-    assert filtered_read(spark, str(d), []).count() == 50
-    assert filtered_read(spark, str(d), None).count() == 50
-    assert filtered_read(spark, str(d), [("k", "<", 10)]).count() == 10
+    assert paged_read(spark, str(d), []).count() == 50
+    assert paged_read(spark, str(d), None).count() == 50
+    assert paged_read(spark, str(d), [("k", "<", 10)]).count() == 10
 
 
 def test_read_pages_none_filters_and_nested_file(tmp_path):

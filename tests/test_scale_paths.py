@@ -20,12 +20,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from fastparquet_spark.engine import paged_read
 from fastparquet_spark.format import write_file
 from fastparquet_spark.format.dataset import (
     dataset_metadata,
     dataset_statistics,
     filter_row_groups,
-    filtered_read,
 )
 from fastparquet_spark.io import CountingFS, LocalFS, read_tail_footer
 
@@ -158,8 +158,8 @@ def test_hive_layout_write_discover_prune(spark, source_df, tmp_path):
         "hive_partitioning=1) where lang='go'").fetchone()[0]
     assert n == 2000
 
-    # 4) filtered_read returns exact rows with partition cols present
-    got = filtered_read(spark, out, [("lang", "==", "python")])
+    # 4) paged_read returns exact rows with partition cols present
+    got = paged_read(spark, out, [("lang", "==", "python")])
     assert got.count() == 2000 and "lang" in got.columns
 
 

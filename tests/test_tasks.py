@@ -107,7 +107,12 @@ def _jobs_of(spark, group: str, action) -> int:
 
 def test_scan_job_counts(spark, tmp_path):
     """The scans of both formats, planning and read, cost the pinned
-    number of Spark jobs: the driver plans from footers without a job."""
+    number of Spark jobs: the driver plans from footers without a job.
+    ``engine_bloom_prune`` counts its bloom'd encode (``encode_dataset``)
+    and its ``paged_read`` lookup together."""
+    from conftest import SF_DIR
+
+    from fastparquet_spark.analytics.registry import engine_bloom_prune
     from fastparquet_spark.engine import paged_read
     from fastparquet_spark.engine.fpsc_job import read_fpsc
     from fastparquet_spark.format.container import write_container
@@ -131,6 +136,8 @@ def test_scan_job_counts(spark, tmp_path):
         "fpsc_source": lambda: spark.read.format("fpsc").load(d).count(),
         "fps_source": lambda: spark.read.format("fps").load(d).count(),
         "paged_read": lambda: paged_read(spark, d, [("k", ">=", 120)]).count(),
+        "engine_bloom_prune": lambda: engine_bloom_prune(
+            spark, SF_DIR).count(),
     }
     assert runs["paged_read"]() == 180
     got = {name: _jobs_of(spark, f"scan-jobs-{name}-{tmp_path.name}", run)
@@ -138,4 +145,4 @@ def test_scan_job_counts(spark, tmp_path):
     # a count is two jobs under adaptive execution: the partial counts'
     # shuffle stage, then the final count
     assert got == {"read_fpsc": 2, "fpsc_source": 2, "fps_source": 2,
-                   "paged_read": 2}
+                   "paged_read": 2, "engine_bloom_prune": 6}

@@ -10,7 +10,7 @@ join; no driver-side collection anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import Observation, functions as F
 
 from fastparquet_spark.analytics.relational import load
 from fastparquet_spark.analytics.text import _words  # single tokenizer
@@ -252,13 +252,15 @@ def connected_components(edges, max_iters: int = 20,
     diameter (a crawl-mirror chain A->B->C->... converges in ~log2
     rounds instead of its length).  Convergence is detected with an
     AGGREGATE (sum of labels, strictly decreasing to a fixpoint),
-    never by collecting rows.
+    never by collecting rows, and the sum is observed on the round's
+    checkpoint job (``DataFrame.observe``), so it costs no job of its
+    own.
 
     Lineage/IO policy (r5 VERDICT wrong #2): every round's labels are
     cut with an eager localCheckpoint, so each round's joins execute
     once and the next round's plan stays shallow.  Cutting only every
     third round (persisting in between) measured slower at sf0.1
-    (min-of-3, warm: 3.45 s vs 2.91 s): the convergence aggregate
+    (min-of-3, warm: 3.45 s vs 2.91 s): the convergence sum
     materializes every round anyway, so deferring the cut saves no IO
     while deepening the plans Catalyst re-analyzes.
 
@@ -300,8 +302,12 @@ def connected_components(edges, max_iters: int = 20,
                                "left")
                   .select("doc_id",
                           F.least("cluster", "c2").alias("cluster")))
-        labels = labels.localCheckpoint(eager=True)
-        cur = labels.agg(F.sum("cluster")).collect()[0][0]
+        # the convergence sum rides on the checkpoint's own job: an
+        # observation per round, not a second agg(...).collect() job
+        seen = Observation()
+        labels = (labels.observe(seen, F.sum("cluster").alias("sum"))
+                  .localCheckpoint(eager=True))
+        cur = seen.get["sum"]
         if cur == prev_sum:
             # the result is already lineage-free; release the edge
             # checkpoint now instead of waiting for GC + ContextCleaner

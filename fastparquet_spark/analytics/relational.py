@@ -21,8 +21,19 @@ from pyspark.sql.window import Window
 
 def load(spark: SparkSession, sf_dir: str, name: str,
          spread: bool = False) -> DataFrame:
+    """Spark's parquet scan of the table file ``{sf_dir}/{name}.parquet``
+    under its schema read from the file footer on the driver
+    (``engine.spark_types.parquet_schema``), so that loading a table
+    runs no Spark job: ``spark.read.parquet`` would run a one-task
+    schema-inference job per table.  The columns are typed as Spark's
+    own inference types them (``spark_types.spark_type``): a zone-less
+    TIMESTAMP is ``timestamp_ntz``, a UTC-adjusted one or INT96
+    ``timestamp``, unsigned integers widen to the next signed type
+    (uint64 to ``decimal(20,0)``), LIST/MAP/STRUCT recurse."""
+    from fastparquet_spark.engine.spark_types import parquet_schema
+
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    df = spark.read.schema(parquet_schema(path)).parquet(path)
     return _spread(spark, df, path) if spread else df
 
 

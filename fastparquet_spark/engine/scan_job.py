@@ -242,8 +242,7 @@ def scan(spark, in_dir: str, filters, columns, exact: bool, fs, fmt):
     ``read_fpsc`` (``fmt=FpscScan``): plan on the driver, then one
     mapInArrow job whose tasks run ``scan_unit`` over their units.  A
     directory with no ``fmt`` file raises ``ValueError``."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-
+    from fastparquet_spark.engine.spark_types import spark_schema
     from fastparquet_spark.io import get_fs
 
     clauses = dnf(filters)
@@ -251,7 +250,7 @@ def scan(spark, in_dir: str, filters, columns, exact: bool, fs, fmt):
     in_dir, metas = load_dataset_metas(in_dir, fs=fs, fmt=fmt)
     arrow_schema, file_cols, part_cols, units = plan_scan(
         in_dir, metas, clauses, columns, fs=fs, fmt=fmt)
-    out_schema = from_arrow_schema(arrow_schema)
+    out_schema = spark_schema(arrow_schema)
     if not units:
         return spark.createDataFrame([], out_schema)
 

@@ -75,8 +75,6 @@ _SIMPLE_TYPES = {
     "uint8": pa.uint8(), "uint16": pa.uint16(), "uint32": pa.uint32(),
     "uint64": pa.uint64(),
     "float": pa.float32(), "double": pa.float64(),
-    "timestamp[s]": pa.timestamp("s"), "timestamp[ms]": pa.timestamp("ms"),
-    "timestamp[us]": pa.timestamp("us"), "timestamp[ns]": pa.timestamp("ns"),
     "date32[day]": pa.date32(),
 }
 
@@ -86,6 +84,11 @@ def _type_from_name(name: str) -> pa.DataType:
         return _SIMPLE_TYPES[name]
     if name.startswith("list<item: ") and name.endswith(">"):
         return pa.list_(_type_from_name(name[len("list<item: "):-1]))
+    if name.startswith("timestamp[") and name.endswith("]"):
+        # "timestamp[us]" or "timestamp[us, tz=UTC]", as str() spells them
+        unit, _, tz = name[len("timestamp["):-1].partition(", tz=")
+        if unit in ("s", "ms", "us", "ns"):
+            return pa.timestamp(unit, tz or None)
     raise ValueError(f"unsupported container type {name}")
 
 

@@ -133,12 +133,11 @@ class FpsDataSource(DataSource):
         return self._plan_cache
 
     def schema(self):
-        from pyspark.sql.pandas.types import from_arrow_schema
-
         from fastparquet_spark.engine.scan_job import plan_scan
+        from fastparquet_spark.engine.spark_types import spark_schema
 
         root, metas = self._plan()
-        return from_arrow_schema(plan_scan(
+        return spark_schema(plan_scan(
             root, metas, None, self._columns_opt(), fmt=self.fmt)[0])
 
     def reader(self, schema: StructType):

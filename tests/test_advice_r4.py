@@ -231,23 +231,30 @@ def test_connected_components_chain_converges_log_rounds(spark):
 def test_connected_components_checkpoint_cadence(spark):
     """(r5 judge #5) The one lineage policy: one eager checkpoint of the
     edges, then one label checkpoint per round (rounds counted by the
-    per-round convergence aggregate), with identical results."""
+    per-round convergence sum, observed on that checkpoint rather than
+    aggregated by a job of its own), with identical results."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from fastparquet_spark.analytics.dedup import connected_components
 
-    calls, rounds = [], []
-    orig_ckpt, orig_agg = DataFrame.localCheckpoint, DataFrame.agg
+    calls, rounds, aggs = [], [], []
+    orig_ckpt, orig_observe, orig_agg = (
+        DataFrame.localCheckpoint, DataFrame.observe, DataFrame.agg)
 
     def counting(self, eager=True):
         calls.append(1)
         return orig_ckpt(self, eager=eager)
 
-    def counting_agg(self, *exprs):
+    def counting_observe(self, observation, *exprs):
         rounds.append(1)
+        return orig_observe(self, observation, *exprs)
+
+    def counting_agg(self, *exprs):
+        aggs.append(1)
         return orig_agg(self, *exprs)
 
-    DataFrame.localCheckpoint, DataFrame.agg = counting, counting_agg
+    DataFrame.localCheckpoint, DataFrame.observe, DataFrame.agg = (
+        counting, counting_observe, counting_agg)
     try:
         n = 200
         edges = spark.createDataFrame(
@@ -256,8 +263,10 @@ def test_connected_components_checkpoint_cadence(spark):
         rounds_run = len(rounds)
         rows = labels.collect()
     finally:
-        DataFrame.localCheckpoint, DataFrame.agg = orig_ckpt, orig_agg
+        DataFrame.localCheckpoint, DataFrame.observe, DataFrame.agg = (
+            orig_ckpt, orig_observe, orig_agg)
     assert len(rows) == n and all(r["cluster"] == 0 for r in rows)
+    assert aggs == []
     # pointer doubling: a 200-chain converges in ~log2(200) rounds
     assert 3 <= rounds_run <= 12
     assert len(calls) == 1 + rounds_run

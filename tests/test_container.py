@@ -387,6 +387,54 @@ def test_list_timestamp_units_roundtrip(tmp_path):
     assert back.column("ns").to_pylist() == t.column("ns").to_pylist()
 
 
+def test_zone_aware_timestamps_roundtrip(tmp_path):
+    """Timestamps with a time zone (what Spark's ``TimestampType``
+    batches carry) keep their zone and values, as columns and as list
+    members, with every unit; a stats-pruned read filters on them."""
+    import datetime
+
+    import pyarrow as pa
+
+    from fastparquet_spark.engine.scan_job import FpscScan, plan_scan
+    from fastparquet_spark.format.container import (
+        read_container, read_container_footer, write_container,
+    )
+    from fastparquet_spark.format.dataset import load_dataset_metas
+
+    utc = datetime.timezone.utc
+    t = pa.table({
+        "utc_us": pa.array([1_700_000_000_000_000, None, 0],
+                           pa.timestamp("us", tz="UTC")),
+        "la_ms": pa.array([1_700_000_000_000, 5, None],
+                          pa.timestamp("ms", tz="America/Los_Angeles")),
+        "etc_ns": pa.array([None, 1, 2], pa.timestamp("ns", tz="Etc/UTC")),
+        "plus_s": pa.array([1, 2, 3], pa.timestamp("s", tz="+05:30")),
+        "list_utc": pa.array([[1, None], None, []],
+                             pa.list_(pa.timestamp("us", tz="UTC"))),
+    })
+    p = str(tmp_path / "tz.fpsc")
+    write_container(p, t)
+    back = read_container(p)
+    assert back.schema == t.schema
+    assert back.equals(t)
+    footer = read_container_footer(p)
+    assert [c["arrow_type"] for c in footer["columns"]] == [
+        "timestamp[us, tz=UTC]", "timestamp[ms, tz=America/Los_Angeles]",
+        "timestamp[ns, tz=Etc/UTC]", "timestamp[s, tz=+05:30]",
+        "list<item: timestamp[us, tz=UTC]>"]
+    # stats pruning compares an aware datetime with the zoned bounds
+    def after(year):
+        return [[("utc_us", ">", datetime.datetime(year, 1, 1, tzinfo=utc))]]
+
+    root, metas = load_dataset_metas(str(tmp_path), fmt=FpscScan)
+    assert [len(plan_scan(root, metas, after(y), ["utc_us"],
+                          fmt=FpscScan)[3]) for y in (2000, 2024)] == [1, 0]
+    got = pa.concat_tables(FpscScan.read(p, [0], after(2000), ["utc_us"],
+                                         True))
+    assert got.column("utc_us").to_pylist() == \
+        [datetime.datetime(2023, 11, 14, 22, 13, 20, tzinfo=utc)]
+
+
 def test_container_rejects_nested_lists_and_bad_bytes(tmp_path):
     import pyarrow as pa
     import pytest as _pt

@@ -43,6 +43,26 @@ def test_write_read_roundtrip(registered, tmp_path):
     assert a == b
 
 
+def test_spark_timestamps_roundtrip(registered, tmp_path):
+    """``TimestampType`` (zone-aware Arrow batches) and
+    ``TimestampNTZType`` columns write and read back with their types
+    and rows, a pushed filter on each included."""
+    spark = registered
+    out = str(tmp_path / "fpsc_ts")
+    df = spark.sql(
+        "SELECT id, TIMESTAMP'2024-03-01 12:00:00' + make_interval(0, 0, 0, "
+        "id) AS t, TIMESTAMP_NTZ'2024-03-01 12:00:00' + make_interval(0, 0, "
+        "0, id) AS n FROM range(6)")
+    df.repartition(2).write.format("fpsc").mode("append").save(out)
+    back = spark.read.format("fpsc").load(out)
+    assert back.dtypes == [("id", "bigint"), ("t", "timestamp"),
+                           ("n", "timestamp_ntz")]
+    assert sorted(back.collect()) == sorted(df.collect())
+    for cut in ("t >= TIMESTAMP'2024-03-04 12:00:00'",
+                "n >= TIMESTAMP_NTZ'2024-03-04 12:00:00'"):
+        assert sorted(r.id for r in back.filter(cut).collect()) == [3, 4, 5]
+
+
 def test_append_accumulates(registered, tmp_path):
     spark = registered
     out = str(tmp_path / "fpsc_app")

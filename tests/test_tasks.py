@@ -109,7 +109,8 @@ def test_scan_job_counts(spark, tmp_path):
     """The scans of both formats, planning and read, cost the pinned
     number of Spark jobs: the driver plans from footers without a job.
     ``engine_bloom_prune`` counts its bloom'd encode (``encode_dataset``)
-    and its ``paged_read`` lookup together."""
+    and its ``paged_read`` lookup together; its ``relational.load`` of
+    ``documents`` runs none."""
     from conftest import SF_DIR
 
     from fastparquet_spark.analytics.registry import engine_bloom_prune
@@ -145,4 +146,26 @@ def test_scan_job_counts(spark, tmp_path):
     # a count is two jobs under adaptive execution: the partial counts'
     # shuffle stage, then the final count
     assert got == {"read_fpsc": 2, "fpsc_source": 2, "fps_source": 2,
-                   "paged_read": 2, "engine_bloom_prune": 6}
+                   "paged_read": 2, "engine_bloom_prune": 5}
+
+
+def test_analytics_job_counts(spark):
+    """Each query of the perfbench ``analytics`` workload
+    (``perfbench/wl_analytics.py``), planning included, costs its
+    pinned number of Spark jobs over the tests' tables: ``relational.load``
+    types a table from its footer (no schema-inference job) and
+    ``connected_components`` observes its convergence sum on the round's
+    checkpoint job.  A count that drops moves its pin down; one that
+    grows is fixed cost creeping in."""
+    from conftest import SF_DIR
+
+    from fastparquet_spark.analytics.registry import QUERIES
+
+    pins = {"q1_pricing_summary": 2, "q3_shipping_topk": 4,
+            "q_window_rank": 2, "q_rollup_pricing": 3,
+            "dedup_minhash_lsh_pairs": 4, "dedup_simhash": 2,
+            "dedup_clusters": 15, "text_redact_pii": 2,
+            "text_chunk_tokens": 2, "sim_cosine_topk": 4}
+    assert {q: _jobs_of(spark, f"analytics-jobs-{q}",
+                        lambda q=q: QUERIES[q](spark, SF_DIR).collect())
+            for q in pins} == pins

@@ -21,8 +21,9 @@ from pyspark.sql.window import Window
 
 def load(spark: SparkSession, sf_dir: str, name: str,
          spread: bool = False) -> DataFrame:
-    """Spark's parquet scan of the table file ``{sf_dir}/{name}.parquet``
-    under its schema read from the file footer on the driver
+    """Spark's parquet scan of the table ``{sf_dir}/{name}.parquet`` (one
+    file, or a directory of part files as Spark writes it) under its
+    schema read from one footer on the driver
     (``engine.spark_types.parquet_schema``), so that loading a table
     runs no Spark job: ``spark.read.parquet`` would run a one-task
     schema-inference job per table.  The columns are typed as Spark's

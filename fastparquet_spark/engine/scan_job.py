@@ -49,6 +49,7 @@ import json
 from collections.abc import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from fastparquet_spark.engine.tasks import map_tasks
 from fastparquet_spark.format.container import FpscFiles, read_container
@@ -181,10 +182,12 @@ def scan_unit(path, ris, pvals, absent, clauses, file_cols, part_cols,
     so the per-file clause/evolution/partition logic cannot drift
     between them.  ``fmt.read`` decodes the unit; every Table it
     yields is cast BY NAME to ``arrow_schema``, whatever the file's
-    own column order.  Yields RecordBatches; nothing when no DNF
-    branch can match this file.  A unit that decodes no column (a
-    partition-only projection, or every projected column absent)
-    still yields its rows' count."""
+    own column order: the scan's ``spark_types.served_schema``, the
+    Arrow form of the Spark schema it declares (nanoseconds truncate
+    to Spark's microseconds, every other cast is safe).  Yields
+    RecordBatches; nothing when no DNF branch can match this file.  A
+    unit that decodes no column (a partition-only projection, or every
+    projected column absent) still yields its rows' count."""
     fclauses = _file_clauses(clauses, pvals, absent)
     if not fclauses:
         return
@@ -205,7 +208,11 @@ def scan_unit(path, ris, pvals, absent, clauses, file_cols, part_cols,
                 pvals.get(name), type=arrow_schema.field(name).type),
                 tbl.num_rows))
         # evolution columns were appended out of order; restore order
-        return tbl.select(arrow_schema.names).cast(arrow_schema)
+        tbl = tbl.select(arrow_schema.names)
+        return pa.Table.from_arrays(
+            [c.cast(options=pc.CastOptions(f.type, allow_time_truncate=True))
+             for c, f in zip(tbl.columns, arrow_schema)],
+            schema=arrow_schema)
 
     for tbl in fmt.read(path, ris, fclauses, cols_here, exact):
         yield from finish(tbl).to_batches(max_chunksize=131_072)
@@ -242,7 +249,9 @@ def scan(spark, in_dir: str, filters, columns, exact: bool, fs, fmt):
     ``read_fpsc`` (``fmt=FpscScan``): plan on the driver, then one
     mapInArrow job whose tasks run ``scan_unit`` over their units.  A
     directory with no ``fmt`` file raises ``ValueError``."""
-    from fastparquet_spark.engine.spark_types import spark_schema
+    from fastparquet_spark.engine.spark_types import (
+        served_schema, spark_schema,
+    )
     from fastparquet_spark.io import get_fs
 
     clauses = dnf(filters)
@@ -251,6 +260,7 @@ def scan(spark, in_dir: str, filters, columns, exact: bool, fs, fmt):
     arrow_schema, file_cols, part_cols, units = plan_scan(
         in_dir, metas, clauses, columns, fs=fs, fmt=fmt)
     out_schema = spark_schema(arrow_schema)
+    arrow_schema = served_schema(arrow_schema)
     if not units:
         return spark.createDataFrame([], out_schema)
 

@@ -22,7 +22,9 @@ to the Arrow type our footer reader gives a column
 So ``spark.read.schema(parquet_schema(p)).parquet(p)`` is typed as
 ``spark.read.parquet(p)`` without its schema-inference job, and a
 zone-less timestamp reads back as the same wall-clock value through
-every surface.
+every surface.  A scan that hands Spark Arrow batches casts them to
+:func:`served_schema`, the Arrow form of the same Spark types, so the
+declared schema and the data come from this one rule.
 """
 
 from __future__ import annotations
@@ -63,11 +65,63 @@ def spark_schema(schema: pa.Schema):
                        for f in schema])
 
 
-def parquet_schema(path: str):
-    """The Spark schema of the parquet file at ``path``, from its footer
-    alone (one tail read on the driver, no Spark job): the file's Arrow
-    schema as our reader builds it, nested types included, typed by
-    :func:`spark_type`."""
-    from fastparquet_spark.format.reader import read_row_groups
+def served_schema(schema: pa.Schema) -> pa.Schema:
+    """The Arrow schema of the batches Spark takes for a scan it knows
+    as ``spark_schema(schema)``: each column at the Arrow form of its
+    :func:`spark_type` (uint32 as int64, uint64 as decimal128(20, 0),
+    fixed-size binary as binary, every timestamp at microseconds, INT96
+    as UTC; int64, string, double and the like keep their type)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    return to_arrow_schema(spark_schema(schema))
+
+
+def parquet_schema(path: str):
+    """The Spark schema of the parquet table at ``path``, from one
+    footer alone (one tail read on the driver, no Spark job): the
+    file's Arrow schema as our reader builds it, nested types included,
+    typed by :func:`spark_type`.
+
+    A directory (a table Spark wrote as part files, or a hive layout)
+    is typed by one of its files, as Spark's inference does without
+    ``mergeSchema``: ``_common_metadata``, else ``_metadata``, else the
+    first data file in path order.  Files and directories Spark does not
+    list (a name starting with ``.``, or with ``_`` and holding no
+    ``=``: ``_SUCCESS``, ``.crc`` files) are skipped.  Spark adds the
+    hive partition columns from the paths itself.  A directory with no
+    such file raises ``ValueError``."""
+    from fastparquet_spark.format.reader import read_row_groups
+    from fastparquet_spark.io import get_fs
+
+    fs = get_fs(path)
+    if fs.isdir(path):
+        path = _schema_file(fs, path)
     return spark_schema(read_row_groups(path, []).schema)
+
+
+_SUMMARIES = ("_common_metadata", "_metadata")
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file index lists a path component named ``name``
+    (``InMemoryFileIndex.shouldFilterOutPathName``)."""
+    if name.startswith(_SUMMARIES):
+        return True
+    return not ((name.startswith("_") and "=" not in name)
+                or name.startswith(".") or name.endswith("._COPYING_"))
+
+
+def _schema_file(fs, root: str) -> str:
+    """The file of directory ``root`` whose footer types the table."""
+    from fastparquet_spark.io import relative_to
+
+    files = [p for p in fs.walk_files(root)
+             if all(_listed(n) for n in relative_to(p, root).split("/"))]
+    if not files:
+        raise ValueError(f"no parquet file under {root}")
+
+    def rank(p):
+        name = p.rsplit("/", 1)[-1]
+        return _SUMMARIES.index(name) if name in _SUMMARIES else 2
+
+    return min(files, key=rank)  # the first of the best kind

@@ -186,6 +186,7 @@ class FpsReader(DataSourceReader):
         object before this runs, so executor-side ``read`` must not
         depend on driver-side mutations of ``self``."""
         from fastparquet_spark.engine.scan_job import plan_scan
+        from fastparquet_spark.engine.spark_types import served_schema
         from fastparquet_spark.format.dataset import load_dataset_metas
 
         root, metas = self._plan or load_dataset_metas(self.path,
@@ -193,7 +194,7 @@ class FpsReader(DataSourceReader):
         aschema, file_cols, part_cols, units = plan_scan(
             root, metas, self._clauses, self.columns, fmt=self.fmt)
         header = {"file_cols": file_cols, "part_cols": part_cols,
-                  "schema": aschema.serialize().to_pybytes(),
+                  "schema": served_schema(aschema).serialize().to_pybytes(),
                   "clauses": list(self._clauses)}
         per = max(1, -(-len(units) // _MAX_TASKS))  # ceil-div grouping
         return [InputPartition((header, units[i:i + per]))

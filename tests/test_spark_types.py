@@ -1,7 +1,8 @@
 """engine/spark_types.py: the one Arrow -> Spark type rule types every
-parquet file as Spark's own schema inference does, so
-``relational.load`` can skip the inference job, and every scan surface
-serves a zone-less timestamp as ``timestamp_ntz``."""
+parquet table, file or directory, as Spark's own schema inference
+does, so ``relational.load`` can skip the inference job; every scan
+surface serves a zone-less timestamp as ``timestamp_ntz`` and its
+batches in the Arrow form of the types it declares."""
 
 from __future__ import annotations
 
@@ -79,6 +80,40 @@ def test_spark_written_file_typed_as_spark(spark, tmp_path):
     _assert_typed_as_spark(spark, path)
 
 
+def test_directory_tables_load_as_spark(spark, tmp_path):
+    """``relational.load`` of a table stored as a directory: part files
+    as Spark writes them (``_SUCCESS``, ``.crc`` files beside them), a
+    hive layout whose partition column Spark adds from the paths, and
+    the facade's layout with ``_common_metadata``/``_metadata``."""
+    import pandas as pd
+
+    from fastparquet_spark import api
+    from fastparquet_spark.analytics.relational import load
+
+    sf = str(tmp_path)
+    (spark.sql("SELECT id AS doc_id, CAST(id % 3 AS STRING) AS lang, "
+               "TIMESTAMP_NTZ'2024-01-01 00:00:00' AS t FROM range(10)")
+     .repartition(3).write.parquet(f"{sf}/documents.parquet"))
+    assert "_SUCCESS" in os.listdir(f"{sf}/documents.parquet")
+    (spark.sql("SELECT id AS doc_id, CAST(id % 3 AS INT) AS p FROM range(10)")
+     .write.partitionBy("p").parquet(f"{sf}/hive.parquet"))
+    api.write(f"{sf}/facade.parquet",
+              pd.DataFrame({"a": [1, 2, 3], "b": ["x", "y", "z"]}),
+              file_scheme="hive")
+    assert "_metadata" in os.listdir(f"{sf}/facade.parquet")
+    for name in ("documents", "hive", "facade"):
+        want = spark.read.parquet(f"{sf}/{name}.parquet")
+        got = load(spark, sf, name)
+        assert got.schema == want.schema, name
+        assert sorted(got.collect()) == sorted(want.collect()), name
+
+
+def test_empty_directory_raises(tmp_path):
+    (tmp_path / "_SUCCESS").touch()
+    with pytest.raises(ValueError, match="no parquet file"):
+        parquet_schema(str(tmp_path))
+
+
 def _matrix() -> pa.Table:
     ts = [datetime.datetime(2024, 3, 1, 12, 30, 15, 123000), None,
           datetime.datetime(1999, 12, 31, 23, 59, 59)]
@@ -152,6 +187,48 @@ def test_int96_typed_as_spark(spark, tmp_path):
     _assert_typed_as_spark(spark, int96)
 
 
+def test_unsigned_and_int96_served_as_spark(spark, tmp_path):
+    """The scans cast their batches to the Arrow form of the Spark
+    types they declare: the matrix's flat columns (unsigned integers,
+    fixed-size binary, millisecond timestamps) and an INT96 column with
+    sub-microsecond digits read back through ``paged_read`` and
+    ``format("fps")`` with ``spark.read.parquet``'s types and values."""
+    from fastparquet_spark.engine import paged_read
+
+    _register_sources(spark)
+    flat, int96 = tmp_path / "flat", tmp_path / "int96"
+    flat.mkdir()
+    int96.mkdir()
+    m = _matrix()
+    pq.write_table(m.select([f.name for f in m.schema
+                             if not pa.types.is_nested(f.type)]),
+                   str(flat / "m.parquet"))
+    pq.write_table(pa.table({"t": pa.array([1_700_000_000_123_456_789, None],
+                                           pa.timestamp("ns")),
+                             "i": [1, 2]}),
+                   str(int96 / "t.parquet"),
+                   use_deprecated_int96_timestamps=True)
+    for d in (str(flat), str(int96)):
+        want = spark.read.parquet(d)
+        for df in (paged_read(spark, d, None),
+                   spark.read.format("fps").load(d)):
+            assert df.dtypes == want.dtypes, d
+            # str(): NaN != NaN in a Row comparison
+            assert sorted(map(str, df.collect())) == \
+                sorted(map(str, want.collect())), d
+
+
+def _register_sources(spark):
+    from fastparquet_spark.sources import FpscDataSource, FpsDataSource
+
+    for src in (FpsDataSource, FpscDataSource):
+        try:
+            spark.dataSource.register(src)
+        except Exception as e:  # already registered in this session
+            if "already" not in str(e).lower():
+                raise
+
+
 def _timestamps() -> pa.Table:
     return pa.table({
         "id": pa.array([0, 1, 2], pa.int32()),
@@ -184,14 +261,8 @@ def test_every_scan_surface_types_timestamps_as_spark(spark, tmp_path,
     from fastparquet_spark.engine.fpsc_job import read_fpsc
     from fastparquet_spark.format.container import write_container
     from fastparquet_spark.format.writer import write_file
-    from fastparquet_spark.sources import FpscDataSource, FpsDataSource
 
-    for src in (FpsDataSource, FpscDataSource):
-        try:
-            spark.dataSource.register(src)
-        except Exception as e:  # already registered in this session
-            if "already" not in str(e).lower():
-                raise
+    _register_sources(spark)
     pdir, cdir = tmp_path / "parquet", tmp_path / "fpsc"
     pdir.mkdir()
     cdir.mkdir()

@@ -56,14 +56,8 @@ def shingles_of(docs, distinct: bool = True):
 
 
 def _shingles_df(spark, sf_dir, max_doc=None, distinct: bool = True):
-    """:func:`shingles_of` over the ``documents`` table at ``sf_dir``.
-
-    Loaded with ``spread=True``: the tokenize+shingle map stage is the
-    most expensive per-row work in the whole registry, and the test
-    inputs are single-row-group files whose scan would otherwise run it
-    all in ONE task (guide §2.5 input skew; see relational._spread for
-    the scale-adaptive no-op guard)."""
-    docs = load(spark, sf_dir, "documents", spread=True)
+    """:func:`shingles_of` over the ``documents`` table at ``sf_dir``."""
+    docs = load(spark, sf_dir, "documents")
     if max_doc is not None:
         docs = docs.filter(F.col("doc_id") < max_doc)
     return shingles_of(docs, distinct=distinct)
@@ -112,13 +106,11 @@ def _minhash_wide(spark, sf_dir, n_hashes: int):
     (the groupBy(doc_id) final min).
 
     The n_hashes mins stay parallel aggregates of a single groupBy
-    (never a seeds crossJoin), and the shingle stream is spread across
-    the cluster before the md5-heavy map stage (see _shingles_df).  A
-    distinct-shingle md5 cache (broadcast hash table keyed on the
-    shingle) was prototyped for this round and measured a TIE with the
-    direct aggregation once the map side was parallel (3.65s vs 3.57s
-    at sf1.0) — rejected: it adds an extra materialization job and a
-    vocabulary-bounded broadcast for no measured gain."""
+    (never a seeds crossJoin).  A distinct-shingle md5 cache (broadcast
+    hash table keyed on the shingle) was prototyped and measured a TIE
+    with the direct aggregation once the map side was parallel (3.65s
+    vs 3.57s at sf1.0) — rejected: it adds an extra materialization
+    job and a vocabulary-bounded broadcast for no measured gain."""
     sh = _shingles_df(spark, sf_dir, distinct=False)
     mins = [F.min(F.md5(F.concat(F.lit(f"{s}:"), F.col("sh"))
                         .cast("binary"))).alias(f"m{s}")
@@ -189,13 +181,13 @@ def dedup_simhash(spark, sf_dir):
     bits with portable hex-char set membership; the Spark side parses
     the same 4 hex chars into an int and shifts — provably the same
     bits (see the inline derivation), cheaper per token.
-    One map-side pass (spread, see _shingles_df) + one groupBy(doc_id)
+    One map-side pass + one groupBy(doc_id)
     exchange carrying 16 partial integer sums.  (A distinct-word md5
     cache — broadcast hash table over the vocabulary — was prototyped
     and measured SLOWER than direct evaluation once the map stage was
     parallel: 4.0s vs 3.1s at sf1.0; the probe + extra materialization
     cost more than the md5s it saved.)"""
-    docs = load(spark, sf_dir, "documents", spread=True)
+    docs = load(spark, sf_dir, "documents")
     # the 16 simhash bits live in the first 4 hex chars of md5(w):
     # bit i = bit (i%4) of hex char (i//4).  Parse those 4 chars to an
     # int ONCE and extract bits with integer shifts — exactly the set

@@ -13,14 +13,11 @@ same bits on Spark and DuckDB regardless of partial-agg order.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 
-def load(spark: SparkSession, sf_dir: str, name: str,
-         spread: bool = False) -> DataFrame:
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Spark's parquet scan of the table ``{sf_dir}/{name}.parquet`` (one
     file, or a directory of part files as Spark writes it) under its
     schema read from one footer on the driver
@@ -34,75 +31,7 @@ def load(spark: SparkSession, sf_dir: str, name: str,
     from fastparquet_spark.engine.spark_types import parquet_schema
 
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.schema(parquet_schema(path)).parquet(path)
-    return _spread(spark, df, path) if spread else df
-
-
-def _scan_splits(path: str, max_partition_bytes: int) -> int | None:
-    """Estimated natural scan parallelism of ``path`` from file sizes
-    alone (a local metadata stat, no Spark job, no footer read).  None
-    when the size cannot be determined cheaply — callers then leave the
-    scan as-is (the conservative choice)."""
-    import glob
-    import os
-
-    try:
-        if os.path.isfile(path):
-            sizes = [os.path.getsize(path)]
-        elif os.path.isdir(path):
-            sizes = [os.path.getsize(p) for p in
-                     glob.glob(os.path.join(path, "**", "*.parquet"),
-                               recursive=True)]
-        else:
-            return None
-        if not sizes:
-            return None
-        return sum(-(-s // max_partition_bytes) for s in sizes)
-    except OSError:
-        return None
-
-
-_BYTE_UNITS = {"": 0, "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2,
-               "g": 3, "gb": 3, "t": 4, "tb": 4, "p": 5, "pb": 5}
-
-
-def _byte_size(text: str) -> int:
-    """Bytes in a Spark size setting ("134217728b", "128m", "128MB",
-    "1g"), with binary k/m/g/t/p suffixes like Spark's own
-    ``JavaUtils.byteStringAs``; ValueError for anything else."""
-    m = re.fullmatch(r"\s*(\d+)\s*([a-z]*)\s*", text.lower())
-    if m is None or m.group(2) not in _BYTE_UNITS:
-        raise ValueError(f"not a byte size: {text!r}")
-    return int(m.group(1)) << (10 * _BYTE_UNITS[m.group(2)])
-
-
-def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
-    """Scale-adaptive map-side parallelism for compute-heavy pipelines
-    (guide §2.5 'input skew' / §6 'input split size').
-
-    The analytics inputs at test scale are single small parquet files
-    (one row group), so every tokenize/md5/regex stage BEFORE the first
-    exchange runs in ONE task — the whole map side is serialized on one
-    core.  When the scan's natural split count is below the session's
-    parallelism, hash-repartition on the first column (a unique id in
-    every analytics table — deterministic, no round-robin pre-sort) so
-    the heavy per-row work fans out.  The shuffled bytes are at most the
-    input file itself (a few MB here), far below the compute saved.
-
-    At production scale this is a NO-OP by construction: total input
-    bytes >= parallelism x maxPartitionBytes means the scan already
-    yields enough splits and no shuffle is added — the adaptive guard,
-    not a constant tuned to local[32]."""
-    sc = spark.sparkContext
-    par = sc.defaultParallelism
-    try:
-        mpb = _byte_size(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    except Exception:
-        mpb = 128 * 1024 * 1024
-    splits = _scan_splits(path, mpb)
-    if splits is None or splits >= par:
-        return df
-    return df.repartition(par, F.col(df.columns[0]))
+    return spark.read.schema(parquet_schema(path)).parquet(path)
 
 
 def _dsum(col):

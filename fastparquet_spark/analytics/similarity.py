@@ -26,15 +26,13 @@ def _norm(a):
 def sim_cosine_topk(spark, sf_dir, query_id: int = 0, k: int = 10):
     """Brute-force cosine top-k vs one query vector (broadcast scalar
     subquery; single scan, TakeOrderedAndProject for the top-k)."""
-    # the query-vector lookup scans unspread (a pushed-down point read);
-    # the corpus side is spread so the per-row dot/norm HOF math fans out
     q = (load(spark, sf_dir, "embeddings")
          .filter(F.col("vec_id") == query_id)
          .select(F.col("embedding").alias("q"),
                  # ||q|| once in the broadcast row, not per corpus row —
                  # same double ops, same product, bit-identical cosine
                  _norm(F.col("embedding")).alias("qn")).limit(1))
-    emb = load(spark, sf_dir, "embeddings", spread=True)
+    emb = load(spark, sf_dir, "embeddings")
     joined = emb.filter(F.col("vec_id") != query_id).crossJoin(F.broadcast(q))
     cos = joined.select(
         "vec_id", "label",
@@ -69,7 +67,7 @@ def sim_ann_ivf(spark, sf_dir, query_id: int = 0, k: int = 5, n_probe: int = 2):
     it; at 10^9 vectors that Generate step is the stage's hot spot.
     The plan is pinned Generate-free in tests/test_plans.py."""
     DIM = 64
-    emb = load(spark, sf_dir, "embeddings", spread=True).withColumn(
+    emb = load(spark, sf_dir, "embeddings").withColumn(
         "emb_d", F.transform("embedding", lambda x: x.cast("double")))
     # centroid per label: element-wise mean as DIM parallel aggregates
     # of a single groupBy (no explode, no second shuffle)

@@ -47,7 +47,7 @@ def _words(col="text"):
 def text_langid(spark, sf_dir):
     """Marker-word language ID: argmax over per-language marker counts,
     ties broken by language name (deterministic)."""
-    docs = load(spark, sf_dir, "documents", spread=True)
+    docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(_words()).alias("w"))
     scores = toks.groupBy("doc_id").agg(*[
         F.sum(F.when(F.col("w").isin(*marks), 1).otherwise(0)).cast("long").alias(f"s_{lang}")
@@ -64,7 +64,7 @@ def text_langid(spark, sf_dir):
 def text_quality(spark, sf_dir):
     """Quality scoring: char length, word count, mean word length,
     stopword ratio, all-caps ratio -> composite score."""
-    docs = load(spark, sf_dir, "documents", spread=True)
+    docs = load(spark, sf_dir, "documents")
     stop = ("the", "a", "of", "and", "to")
     # tokenize ONCE into a materialized column: n_words and n_stop both
     # consume it, and Catalyst will not inline a non-trivial alias that
@@ -87,7 +87,7 @@ def text_quality(spark, sf_dir):
 def text_token_count(spark, sf_dir):
     """Token counting: whitespace words + a BPE-ish subword estimate
     (chars/4 heuristic, the common LLM rule of thumb)."""
-    docs = load(spark, sf_dir, "documents", spread=True)
+    docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         F.size(_words()).alias("ws_tokens"),
@@ -102,7 +102,7 @@ def text_fingerprint(spark, sf_dir):
     derived from the materialized column — interpreted-mode fallbacks
     don't do subexpression elimination, so repeating the expression would
     normalize+hash every document twice."""
-    docs = load(spark, sf_dir, "documents", spread=True)
+    docs = load(spark, sf_dir, "documents")
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), " +", " "))
     fp = docs.select("doc_id", F.md5(norm.cast("binary")).alias("fp"))
     return fp.select("doc_id", "fp", F.substring("fp", 1, 4).alias("shard"))
@@ -140,7 +140,7 @@ def text_chunk_tokens(spark, sf_dir, chunk_words: int = 40):
     packing step of a training pipeline).  Pure map-side explode of a
     higher-order sequence expression — no shuffle, no UDF; output rows
     carry (doc_id, chunk_id, chunk_text, n_words)."""
-    docs = load(spark, sf_dir, "documents", spread=True)
+    docs = load(spark, sf_dir, "documents")
     w = _words()
     d = docs.select("doc_id", w.alias("w"))
     # guard size(w) < 1 (null text -> size() = -1): Spark's sequence()
@@ -173,7 +173,7 @@ def text_redact_pii(spark, sf_dir):
     (an email + a digit run derived from doc_id) — identical
     construction on both engines; a vacuous all-zero-count gate proves
     nothing (the r4 ngram-jaccard lesson)."""
-    docs = load(spark, sf_dir, "documents", spread=True)
+    docs = load(spark, sf_dir, "documents")
     email = r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
     digits = r"[0-9]{6,}"
     aug = F.concat(F.col("text"), F.lit(" contact user"),
@@ -213,10 +213,6 @@ def text_contamination(spark, sf_dir, bench_max_doc: int = 50):
     corpus size.)"""
     from fastparquet_spark.analytics.dedup import _shingles_df, shingles_of
 
-    # the bench branch scans only `bench_max_doc` docs (the doc_id
-    # predicate pushes to the parquet scan), so it skips the spread
-    # repartition the corpus branch wants — a 50-row shuffle stage
-    # would only add latency to the broadcast build
     bench = (shingles_of(load(spark, sf_dir, "documents")
                          .filter(F.col("doc_id") < bench_max_doc),
                          distinct=False)

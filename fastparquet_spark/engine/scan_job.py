@@ -130,11 +130,13 @@ def plan_scan(root: str, metas, filters, columns, fs=None,
 
     - the result schema is the UNION of the per-file leaf schemas
       (metadata-only; schema-evolution-tolerant — typed-null fill for
-      files predating a column), FLAT leaves only (the page reader
-      cannot decode nested parquet subtrees; use spark.read.parquet
-      for nested datasets; an FPSC LIST column is one flat leaf), then
-      the ``columns`` projection, then the hive partition columns
-      last, typed by ``partition_type``;
+      files predating a column), then the ``columns`` projection, then
+      the hive partition columns last, typed by ``partition_type``; a
+      projected column that no file or partition has raises
+      ``ValueError``, and so does a projected nested parquet column
+      (LIST/MAP/STRUCT: the page reader decodes flat leaves only, so
+      project them away or read with spark.read.parquet; an FPSC LIST
+      column is one flat leaf);
     - a DNF ``filters`` prunes row groups on stats + concurrent bloom
       probes after deciding partition terms and terms on absent
       columns per file (``filter_row_groups``), so a partition
@@ -148,16 +150,26 @@ def plan_scan(root: str, metas, filters, columns, fs=None,
       constants agree with the result schema.  ``absent`` lists every
       union column the file lacks (the absent rule)."""
     names_all, elems, absent = union_leaf_elems(metas)
-    names_all = [n for n in names_all
-                 if elems[n].get("num_children") is None]
     pnames = list(metas[0].get("partitions") or {})
     ptypes = {k: partition_type([(m.get("partitions") or {}).get(k)
                                  for m in metas]) for k in pnames}
     if columns is None:
         file_cols, part_cols = list(names_all), pnames
     else:
+        unknown = [c for c in columns
+                   if c not in names_all and c not in pnames]
+        if unknown:
+            raise ValueError(
+                f"cannot project nonexistent column(s) {unknown}")
         file_cols = [c for c in columns if c in names_all]
         part_cols = [c for c in columns if c in pnames]
+    nested = [c for c in file_cols
+              if elems[c].get("num_children") is not None]
+    if nested:
+        raise ValueError(
+            f"nested (LIST/MAP/STRUCT) column(s) {nested} cannot be "
+            f"scanned: project them away with columns=, or read the "
+            f"dataset with spark.read.parquet")
     arrow_schema = pa.schema(
         [(n, leaf_type(elems[n])) for n in file_cols]
         + [(n, ptypes[n]) for n in part_cols])

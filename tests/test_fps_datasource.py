@@ -300,3 +300,42 @@ def test_concurrent_lookups_one_load_per_query(registered, tmp_path):
     with ThreadPoolExecutor(8) as ex:
         got = dict(zip(wanted, ex.map(lookup, wanted)))
     assert got == expected
+
+
+def test_projection_of_unknown_or_nested_columns_raises(registered, tmp_path):
+    """``paged_read(columns=)`` and the ``columns`` option raise on a
+    column no file holds and on a LIST/MAP/STRUCT column, naming it,
+    instead of returning the other columns; projecting the nested
+    columns away reads the flat ones."""
+    import pyarrow.parquet as pq
+
+    from fastparquet_spark.engine import paged_read
+
+    spark = registered
+    flat = _dataset(tmp_path, nfiles=1)
+    nested = tmp_path / "nested"
+    nested.mkdir()
+    pq.write_table(pa.table({
+        "k": pa.array([1, 2], pa.int64()),
+        "l": pa.array([[1, 2], None], pa.list_(pa.int32())),
+        "s": pa.array([{"a": 1}, None], pa.struct([("a", pa.int64())])),
+        "m": pa.array([[("x", 1)], []], pa.map_(pa.string(), pa.int64())),
+    }), str(nested / "n.parquet"))
+    nested = str(nested)
+
+    def fps(path, cols=None):
+        r = spark.read.format("fps")
+        return (r.option("columns", cols) if cols else r).load(path)
+
+    for read in (lambda: paged_read(spark, flat, None, columns=["k", "nope"]),
+                 lambda: fps(flat, "k,nope").collect()):
+        with pytest.raises(Exception, match="nonexistent column.*nope"):
+            read()
+    for read in (lambda: paged_read(spark, nested, None),
+                 lambda: fps(nested).collect()):
+        with pytest.raises(Exception, match=r"\['l', 's', 'm'\]"):
+            read()
+    for df in (paged_read(spark, nested, None, columns=["k"]),
+               fps(nested, "k")):
+        assert df.columns == ["k"]
+        assert sorted(r.k for r in df.collect()) == [1, 2]

@@ -8,7 +8,6 @@ from __future__ import annotations
 import contextlib
 import io
 
-import pytest
 from pyspark.sql import functions as F
 
 from fastparquet_spark.analytics import relational, text
@@ -84,39 +83,3 @@ def test_rollup_cube_preaggregate_before_expand(spark):
         first_agg = p.index("HashAggregate")
         assert first_agg < p.index("Expand") or \
             p[:p.index("Expand")].count("HashAggregate") >= 1
-
-
-def test_max_partition_bytes_parser():
-    """_spread sizes splits from spark.sql.files.maxPartitionBytes in any
-    form Spark accepts; Spark's default equals the 128 MiB fallback."""
-    from fastparquet_spark.analytics.relational import _byte_size
-
-    mib = 1024 * 1024
-    assert _byte_size("128MB") == _byte_size("134217728b") == 128 * mib
-    assert _byte_size("134217728") == 128 * mib
-    assert _byte_size("128m") == _byte_size("128M") == 128 * mib
-    assert _byte_size("1g") == _byte_size("1GB") == 1024 * mib
-    assert _byte_size("64k") == _byte_size("64kb") == 64 * 1024
-    assert _byte_size("2t") == 2 * 1024 ** 4
-    for bad in ("", "1.5g", "12x", "m", "-1m"):
-        with pytest.raises(ValueError):
-            _byte_size(bad)
-
-
-def test_spread_is_noop_at_scale(spark, tmp_path, monkeypatch):
-    """_spread adds a repartition only when the scan's natural split
-    count is below the session parallelism — a big input (or an
-    unknown size) must pass through untouched."""
-    import fastparquet_spark.analytics.relational as rel
-
-    df = spark.read.parquet(f"{SF}/documents.parquet")
-    # tiny file: spread fires
-    out = rel._spread(spark, df, f"{SF}/documents.parquet")
-    assert "Repartition" in out._jdf.queryExecution().logical().toString()
-    # pretend the file is huge: no-op
-    monkeypatch.setattr(rel, "_scan_splits", lambda p, m: 10_000)
-    out2 = rel._spread(spark, df, f"{SF}/documents.parquet")
-    assert out2 is df
-    # unknown size: conservative no-op
-    monkeypatch.setattr(rel, "_scan_splits", lambda p, m: None)
-    assert rel._spread(spark, df, f"{SF}/documents.parquet") is df

@@ -191,6 +191,20 @@ def test_ann_ivf_centroids_no_generate(spark):
     assert "Generate" not in p
 
 
+@pytest.mark.parametrize("query", [
+    "text_langid", "text_quality", "text_token_count", "text_fingerprint",
+    "text_chunk_tokens", "text_redact_pii", "sim_cosine_topk", "sim_ann_ivf",
+    "dedup_minhash_lsh_pairs", "dedup_simhash"])
+def test_analytics_scans_are_not_repartitioned(spark, query):
+    """No analytics query hash-repartitions its scan before the map
+    stage: the former fan-out of small scans won a same-window A/B at
+    none of these sites at both local[4] and local[32] (BENCH.md)."""
+    from fastparquet_spark.analytics.registry import QUERIES
+
+    plan = QUERIES[query](spark, SF)._jdf.queryExecution().optimizedPlan()
+    assert "RepartitionByExpression" not in plan.toString()
+
+
 def test_contamination_broadcasts_benchmark(spark):
     """The benchmark shingle set is small by construction — the
     membership join must broadcast it (corpus stays map-side)."""

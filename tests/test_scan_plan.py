@@ -143,3 +143,58 @@ def test_units_scan_to_the_planned_rows(hive):
         root, metas, clauses, ["id", "k"])
     rows = _rows(units, clauses, (schema, file_cols, part_cols)).to_pylist()
     assert rows == [{"id": 51, "k": "3"}]
+
+
+def test_unknown_projected_column_raises(hive):
+    """A projected column that neither a file nor the partitions hold
+    raises, as a filter term on one does."""
+    root, metas = hive
+    with pytest.raises(ValueError, match=r"nonexistent column.*'nope'"):
+        plan_scan(root, metas, None, ["id", "k", "nope"])
+
+
+def _nested_metas(tmp_path):
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "nested"
+    d.mkdir()
+    pq.write_table(pa.table({
+        "k": pa.array([1, 2], pa.int64()),
+        "l": pa.array([[1, 2], None], pa.list_(pa.int32())),
+        "s": pa.array([{"a": 1}, None], pa.struct([("a", pa.int64())])),
+        "m": pa.array([[("x", 1)], []], pa.map_(pa.string(), pa.int64())),
+    }), str(d / "n.parquet"))
+    return load_dataset_metas(str(d))
+
+
+def test_nested_columns_raise_unless_projected_away(tmp_path):
+    """LIST, MAP and STRUCT parquet columns raise, naming each, instead
+    of dropping out of the schema; a projection without them plans."""
+    root, metas = _nested_metas(tmp_path)
+    with pytest.raises(ValueError, match=r"\['l', 's', 'm'\]"):
+        plan_scan(root, metas, None, None)
+    with pytest.raises(ValueError, match=r"\['s'\]"):
+        plan_scan(root, metas, None, ["k", "s"])
+    schema = plan_scan(root, metas, None, ["k"])[0]
+    assert schema == pa.schema([("k", pa.int64())])
+
+
+def test_fpsc_list_column_is_a_flat_leaf(tmp_path):
+    """An FPSC LIST column is one flat leaf: it plans and scans."""
+    from fastparquet_spark.engine.scan_job import FpscScan
+    from fastparquet_spark.format.container import write_container
+
+    d = tmp_path / "fpsc"
+    d.mkdir()
+    tbl = pa.table({"k": pa.array([1, 2], pa.int64()),
+                    "v": pa.array([[1.0, 2.0], [3.0]],
+                                  pa.list_(pa.float32()))})
+    write_container(str(d / "c.fpsc"), tbl)
+    root, metas = load_dataset_metas(str(d), fmt=FpscScan)
+    schema, file_cols, part_cols, units = plan_scan(root, metas, None, None,
+                                                    fmt=FpscScan)
+    assert file_cols == ["k", "v"]
+    got = pa.Table.from_batches(
+        [b for u in units for b in scan_unit(*u, [[]], file_cols, part_cols,
+                                              schema, True, FpscScan)])
+    assert got.to_pydict() == tbl.to_pydict()

@@ -105,6 +105,17 @@ def _jobs_of(spark, group: str, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _register_sources(spark):
+    from fastparquet_spark.sources import FpscDataSource, FpsDataSource
+
+    for src in (FpsDataSource, FpscDataSource):
+        try:
+            spark.dataSource.register(src)
+        except Exception as e:  # already registered in this session
+            if "already" not in str(e).lower():
+                raise
+
+
 def test_scan_job_counts(spark, tmp_path):
     """The scans of both formats, planning and read, cost the pinned
     number of Spark jobs: the driver plans from footers without a job.
@@ -118,14 +129,8 @@ def test_scan_job_counts(spark, tmp_path):
     from fastparquet_spark.engine.fpsc_job import read_fpsc
     from fastparquet_spark.format.container import write_container
     from fastparquet_spark.format.writer import write_file
-    from fastparquet_spark.sources import FpscDataSource, FpsDataSource
 
-    for src in (FpsDataSource, FpscDataSource):
-        try:
-            spark.dataSource.register(src)
-        except Exception as e:  # already registered in this session
-            if "already" not in str(e).lower():
-                raise
+    _register_sources(spark)
     for i in range(3):
         tbl = pa.table({"k": pa.array(range(i * 100, (i + 1) * 100)),
                         "s": pa.array([f"v{j % 7}" for j in range(100)])})
@@ -164,8 +169,50 @@ def test_analytics_job_counts(spark):
     pins = {"q1_pricing_summary": 2, "q3_shipping_topk": 4,
             "q_window_rank": 2, "q_rollup_pricing": 3,
             "dedup_minhash_lsh_pairs": 4, "dedup_simhash": 2,
-            "dedup_clusters": 15, "text_redact_pii": 2,
-            "text_chunk_tokens": 2, "sim_cosine_topk": 4}
+            "dedup_clusters": 15, "text_redact_pii": 1,
+            "text_chunk_tokens": 1, "sim_cosine_topk": 3}
     assert {q: _jobs_of(spark, f"analytics-jobs-{q}",
                         lambda q=q: QUERIES[q](spark, SF_DIR).collect())
             for q in pins} == pins
+
+
+def test_engine_job_counts(spark, tmp_path):
+    """The engine ops of the perfbench ``encode_scan`` workload
+    (``perfbench/wl_encode_scan.py``) not pinned above cost their pinned
+    number of Spark jobs: the FPSC split encode, both shuffle encodes
+    (flat layout) and one selective ``format("fps")`` lookup.  A count
+    that drops moves its pin down; one that grows is fixed cost
+    creeping in."""
+    from fastparquet_spark.engine import encode_dataset, synthetic_source_table
+    from fastparquet_spark.engine.file_job import encode_files_fpsc
+    from fastparquet_spark.engine.fpsc_job import encode_dataset_fpsc
+    from fastparquet_spark.format.writer import write_file
+
+    _register_sources(spark)
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(2):
+        tbl = pa.table({"k": pa.array(range(i * 200, (i + 1) * 200)),
+                        "s": pa.array([f"v{j % 7}" for j in range(200)])})
+        write_file(str(src / f"p{i}.parquet"), tbl, row_group_rows=100)
+    df = synthetic_source_table(spark, 400, partitions=2).cache()
+    df.count()
+    out = str(tmp_path / "out")
+    runs = {
+        "encode_files_fpsc": lambda: encode_files_fpsc(
+            spark, str(src), f"{out}-fpsc", rows_per_task=100,
+            resume=False).collect(),
+        "encode_dataset": lambda: encode_dataset(
+            spark, df, f"{out}-shuffle", num_partitions=2,
+            resume=False).collect(),
+        "encode_dataset_fpsc": lambda: encode_dataset_fpsc(
+            spark, df, f"{out}-shuffle-fpsc", num_partitions=2,
+            resume=False).collect(),
+        "fps_lookup": lambda: spark.read.format("fps").load(str(src))
+        .filter(F.col("k") == 250).collect(),
+    }
+    got = {name: _jobs_of(spark, f"engine-jobs-{name}-{tmp_path.name}", run)
+           for name, run in runs.items()}
+    df.unpersist()
+    assert got == {"encode_files_fpsc": 1, "encode_dataset": 4,
+                   "encode_dataset_fpsc": 5, "fps_lookup": 1}

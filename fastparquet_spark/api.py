@@ -23,6 +23,7 @@ here routes through the same writer/reader kernels.
 
 from __future__ import annotations
 
+import io
 import os
 from typing import Any
 
@@ -1051,6 +1052,24 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
                 for m in [re.fullmatch(r"part\.(\d+)\.parquet",
                                        os.path.basename(p))] if m]
         start = (max(nums) + 1 if nums else len(existing))
+        # the schema is judged before any part file is written: a
+        # refused append leaves the dataset exactly as it was
+        from fastparquet_spark.format.dataset import (
+            read_sidecar, schema_signature,
+        )
+        from fastparquet_spark.format.writer import ParquetWriter
+
+        base = read_sidecar(filename, fs=fs)
+        old = base if base is not None or not existing else \
+            read_footer_tail(fetch_footers(existing[:1], fs)[0])
+        if old is not None:
+            probe = ParquetWriter(io.BytesIO(), table.drop_columns(
+                pcols).schema, times=times, **kwargs)
+            old_sig = schema_signature(old)
+            new_sig = schema_signature({"schema": probe.schema_elems})
+            if new_sig != old_sig:
+                raise ValueError(f"append schema mismatch: existing "
+                                 f"{old_sig} vs new {new_sig}")
     n_written = start
     written_rels: list[str] = []
     if pcols:
@@ -1069,9 +1088,6 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
         # prior fresh write deliberately excluded from its sidecar
         # (overwritten rows silently reappearing on read); with no
         # sidecar there was no prior exclusion, so a sweep is correct.
-        from fastparquet_spark.format.dataset import read_sidecar
-
-        base = read_sidecar(filename, fs=fs)
         if base is not None:
             # prune base entries whose part file is gone from disk
             # (deleted by the user between appends): keeping them would

@@ -128,6 +128,36 @@ def hash_values(values, ptype: int, seed: int = 0) -> np.ndarray:
     return xxh64_many(lengths, raw, seed)
 
 
+def bloom_fpps(bloom_filters: dict | None, nested=()) -> dict:
+    """A writer's ``bloom_filters`` ({column: fpp or True}, True = 1%)
+    as {column: fpp}.  Blooms are built per flat chunk: a ``nested``
+    (LIST, MAP or STRUCT) column named here raises instead of silently
+    getting none; a name outside the schema is left alone."""
+    bad = set(bloom_filters or ()) & set(nested)
+    if bad:
+        raise ValueError(
+            f"bloom_filters must name flat columns; LIST, MAP or "
+            f"STRUCT columns given: {sorted(bad)}")
+    return {k: (0.01 if v is True else float(v))
+            for k, v in (bloom_filters or {}).items()}
+
+
+def build_bloom(values, ptype: int, fpp: float) -> "SplitBlockBloom | None":
+    """One column chunk's bloom filter over its non-null ``values``
+    (``hash_values`` input), sized for the chunk's ACTUAL distinct
+    hashes at ``fpp``; None for a BOOLEAN or empty chunk."""
+    from fastparquet_spark.codecs.plain import BOOLEAN
+
+    if ptype == BOOLEAN:
+        return None
+    h = hash_values(values, ptype)
+    if not len(h):
+        return None
+    bf = SplitBlockBloom(SplitBlockBloom.optimal_bytes(len(np.unique(h)), fpp))
+    bf.insert(h)
+    return bf
+
+
 class SplitBlockBloom:
     """The spec's SBBF over a uint32 word matrix of shape (z, 8)."""
 

@@ -1,18 +1,23 @@
-"""Stats-driven per-column codec auto-selection.
+"""Per-column codec selection: every codec decision of both writers.
 
 The reference's selection is static — PLAIN always, dictionary only when
 the user already made the column pandas-categorical
-(fastparquet/writer.py:369-372,481-521).  Ours samples the column and
-picks the cheapest encoding, per the project north_star:
+(fastparquet/writer.py:369-372,481-521).  Ours picks per column chunk:
 
-- sampled distinct ratio          -> PLAIN_DICTIONARY
-- sortedness / mean delta width   -> DELTA_BINARY_PACKED (ints)
-- byte entropy + n-gram gain      -> FSST (own-format path only)
-- otherwise                       -> PLAIN
+- parquet (``parquet_encoding``), from sampled stats (``choose_encoding``):
+  - sampled distinct ratio          -> PLAIN_DICTIONARY
+  - sortedness / mean delta width   -> DELTA_BINARY_PACKED (ints,
+    ``delta_wins``)
+  - otherwise                       -> PLAIN, and under
+    ``compat='modern'`` a measured trial (``modern_trial``) may admit
+    BYTE_STREAM_SPLIT / DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY;
+- FPSC container: ints DELTA where ``delta_wins``, strings FSST vs
+  PLAIN by a measured trial (``fsst_trial``).
 
-Sampling is DETERMINISTIC (evenly strided) so re-running a partition
-reproduces the same choice — required for resumable jobs (SURVEY.md §7.4
-"seeded sampling for codec stats").
+Both trials keep the challenger only when its compressed size is under
+``GAIN`` of the baseline's.  Sampling is DETERMINISTIC (evenly strided)
+so re-running a partition reproduces the same choice — required for
+resumable jobs (SURVEY.md §7.4 "seeded sampling for codec stats").
 """
 
 from __future__ import annotations
@@ -20,26 +25,45 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
-# physical type ids (avoid importing the format package: no cycles)
-from fastparquet_spark.codecs.plain import BOOLEAN, INT32, INT64, BYTE_ARRAY
+from fastparquet_spark.codecs import compression as comp
+from fastparquet_spark.codecs.delta import delta_encode
+from fastparquet_spark.codecs.fsst import fsst_encode
+from fastparquet_spark.codecs.plain import (
+    BOOLEAN, BYTE_ARRAY, DOUBLE, FIXED, FLOAT, INT32, INT64, INT96,
+    encode_plain,
+)
 
 
 class Encoding:
-    """Parquet Encoding ids (reference parquet_thrift ttypes.py:170-177)."""
+    """Parquet Encoding ids (reference parquet_thrift ttypes.py:170-177);
+    ``format.metadata`` re-exports this table."""
     PLAIN = 0
     PLAIN_DICTIONARY = 2
+    RLE = 3
+    BIT_PACKED = 4
     DELTA_BINARY_PACKED = 5
+    DELTA_LENGTH_BYTE_ARRAY = 6
+    DELTA_BYTE_ARRAY = 7
+    RLE_DICTIONARY = 8
+    BYTE_STREAM_SPLIT = 9
 
 
 SAMPLE = 4096
+
+#: a measured challenger wins only under this share of the baseline's
+#: size.  It was 0.9 when FSST encode ran at ~20 MB/s (the decode/encode
+#: tax needed a real ratio win to pay off); with the C greedy kernel at
+#: ~600 MB/s a 2% size win is already worth taking.
+GAIN = 0.98
 
 
 @dataclass
 class ColumnStats:
     n: int
     distinct_ratio: float    # sampled distinct / sample size
-    mean_run_len: float      # contiguous-slice mean run length
     sorted_frac: float       # fraction of non-negative deltas (ints)
     delta_bits: float        # mean bit width of |deltas| (ints)
     plain_bits: int          # bits per value under PLAIN
@@ -52,99 +76,15 @@ def _sample_idx(n: int, k: int = SAMPLE) -> np.ndarray:
     return (np.arange(k, dtype=np.int64) * n) // k
 
 
-_HASH_R = np.uint64(0x100000001B3)  # FNV-ish odd multiplier
-# bytes hashed per sampled string: 128 + exact length + 8-byte tail
-# discriminates real corpora while keeping the sampling gather ~0.5 MB
-# per chunk (4 KB caps measured 2x slower for zero selection change)
-_HASH_CAP = 128
-
-
-_POWS = np.array([1], dtype=np.uint64)
-
-
-def _hash_pows(n: int) -> np.ndarray:
-    """Cached powers of the hash multiplier mod 2^64."""
-    global _POWS
-    if len(_POWS) < n:
-        p = np.empty(n, dtype=np.uint64)
-        p[0] = 1
-        with np.errstate(over="ignore"):
-            np.cumprod(np.full(n - 1, _HASH_R, np.uint64), out=p[1:])
-        _POWS = p
-    return _POWS
-
-
-def _byte_array_fingerprints(data: np.ndarray, starts: np.ndarray,
-                             lens: np.ndarray) -> np.ndarray:
-    """(k, 24) uint8 fingerprint rows per sampled string: a polynomial
-    hash of the first ``_HASH_CAP`` bytes (mod 2^64, vectorized gather +
-    segment-sum), the exact length, and the last 8 bytes — no
-    per-string Python and no copy of the column buffer (the tail window
-    gathers with clipped positions instead of padding ``data``)."""
-    k = len(starts)
-    data = np.asarray(data, np.uint8)
-    seg = np.minimum(lens, _HASH_CAP)
-    total = int(seg.sum())
-    seg_starts = np.zeros(k, np.int64)
-    np.cumsum(seg[:-1], out=seg_starts[1:])
-    within = np.arange(total, dtype=np.int64) - np.repeat(seg_starts, seg)
-    src = data[np.repeat(starts, seg) + within].astype(np.uint64)
-    pows = _hash_pows(int(seg.max()) if k else 1)
-    with np.errstate(over="ignore"):
-        prods = (src + np.uint64(1)) * pows[within]
-    h = np.zeros(k, np.uint64)
-    nz = seg > 0
-    if total:
-        h[nz] = np.add.reduceat(prods, seg_starts[nz])
-    j = np.arange(8)
-    tail_start = starts + np.maximum(lens - 8, 0)
-    if len(data):
-        pos = np.minimum(tail_start[:, None] + j, len(data) - 1)
-        tail = np.where(j < (starts + lens - tail_start)[:, None],
-                        data[pos], 0)
-    else:
-        tail = np.zeros((k, 8), np.uint8)
-    return np.concatenate([h.view(np.uint8).reshape(k, 8),
-                           lens.astype("<i8").view(np.uint8).reshape(k, 8),
-                           tail], axis=1)
-
-
 def column_stats(values, ptype: int) -> ColumnStats:
-    """Compute selection stats from a deterministic sample.
-
-    ``values`` is a numpy array, or (lengths, data) for BYTE_ARRAY.
-    """
-    if ptype == BYTE_ARRAY:
-        lengths, data = values
-        n = len(lengths)
-        if n == 0:
-            return ColumnStats(0, 1.0, 1.0, 0.0, 0.0, 8, 0.0)
-        idx = _sample_idx(n)
-        cum = np.concatenate(([0], np.cumsum(lengths.astype(np.int64))))
-        # sampled distinct ratio via a VECTORIZED 32-byte fingerprint
-        # (length + head/mid/tail 8 bytes) — a per-string Python
-        # hash() loop was 25% of single-core encode time.  Collisions
-        # only UNDERestimate distinct (worst case: dictionary chosen a
-        # bit too eagerly); selection is a heuristic, never correctness.
-        fp = _byte_array_fingerprints(data, cum[idx], lengths[idx].astype(np.int64))
-        voids = np.ascontiguousarray(fp).view(
-            np.dtype((np.void, fp.shape[1]))).ravel()
-        distinct = len(np.unique(voids)) / len(idx)
-        head_fp = fp[: min(len(fp), 1024)]
-        runs = max(1, int((head_fp[1:] != head_fp[:-1]).any(axis=1).sum()) + 1)
-        mean_run = len(head_fp) / runs
-        return ColumnStats(n, distinct, mean_run, 0.0, 0.0, 8,
-                           float(lengths.mean()))
+    """Selection stats of a numeric numpy column from a deterministic
+    sample (byte arrays: :func:`column_stats_arrow`)."""
     v = np.asarray(values)
     n = len(v)
     if n == 0:
-        return ColumnStats(0, 1.0, 1.0, 0.0, 0.0, v.dtype.itemsize * 8, 0.0)
-    idx = _sample_idx(n)
-    s = v[idx]
+        return ColumnStats(0, 1.0, 0.0, 0.0, v.dtype.itemsize * 8, 0.0)
+    s = v[_sample_idx(n)]
     distinct = len(np.unique(s)) / len(s)
-    head = v[: min(n, 4096)]
-    runs = max(1, int((np.diff(head) != 0).sum()) + 1) if len(head) > 1 else 1
-    mean_run = len(head) / runs
     sorted_frac = delta_bits = 0.0
     if v.dtype.kind in "iu" and n > 1:
         # deltas must come from CONTIGUOUS slices: a strided sample
@@ -165,44 +105,34 @@ def column_stats(values, ptype: int) -> ColumnStats:
         sorted_frac = float((d >= 0).mean())
         with np.errstate(divide="ignore"):
             delta_bits = float(np.mean(np.ceil(np.log2(np.abs(d.astype(np.float64)) + 1)) + 1))
-    return ColumnStats(n, distinct, mean_run, sorted_frac, delta_bits,
+    return ColumnStats(n, distinct, sorted_frac, delta_bits,
                        v.dtype.itemsize * 8, 0.0)
 
 
 def column_stats_arrow(arr) -> ColumnStats:
     """BYTE_ARRAY selection stats straight from an Arrow array: the
-    sample gather, distinct count and run probe all run in Arrow C++
-    (take / count_distinct / not_equal) instead of the numpy
-    fingerprint machinery — same deterministic strided sample, ~10x
-    cheaper per row group on this class of box.  Fingerprint-based
-    ``column_stats`` remains for callers holding raw (lengths, data)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+    deterministic strided sample's gather, distinct count and mean
+    length all run in Arrow C++ (take / count_distinct /
+    binary_length)."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
     if n == 0:
-        return ColumnStats(0, 1.0, 1.0, 0.0, 0.0, 8, 0.0)
-    idx = _sample_idx(n)
-    s = arr.take(pa.array(idx))
-    k = len(s)
-    distinct = pc.count_distinct(s).as_py() / k
-    head = s.slice(0, min(k, 1024))
-    if len(head) > 1:
-        ne = pc.not_equal(head.slice(1), head.slice(0, len(head) - 1))
-        runs = max(1, pc.sum(ne).as_py() or 0) + 1
-    else:
-        runs = 1
-    mean_run = len(head) / runs
+        return ColumnStats(0, 1.0, 0.0, 0.0, 8, 0.0)
+    s = arr.take(pa.array(_sample_idx(n)))
+    distinct = pc.count_distinct(s).as_py() / len(s)
     avg_len = pc.mean(pc.binary_length(s)).as_py() or 0.0
-    return ColumnStats(n, distinct, mean_run, 0.0, 0.0, 8, float(avg_len))
+    return ColumnStats(n, distinct, 0.0, 0.0, 8, float(avg_len))
 
 
-def choose_encoding(stats: ColumnStats, ptype: int, parquet_compat: bool = True) -> int:
-    """Pick the encoding for one column chunk.  Returns an Encoding id
-    (Encoding.* or the engine-internal FSST sentinel -1 when
-    ``parquet_compat=False`` and FSST is predicted to win)."""
+def delta_wins(stats: ColumnStats) -> bool:
+    """DELTA_BINARY_PACKED over PLAIN for an int column: near-sorted,
+    or deltas much narrower than the values."""
+    return stats.sorted_frac > 0.95 or stats.delta_bits < stats.plain_bits * 0.6
+
+
+def choose_encoding(stats: ColumnStats, ptype: int) -> int:
+    """The parquet stats rule for one column chunk: an Encoding id."""
     if stats.n == 0:
         return Encoding.PLAIN
     # dictionary: sampled distinct ratio low enough that codes+labels beat plain
@@ -210,19 +140,99 @@ def choose_encoding(stats: ColumnStats, ptype: int, parquet_compat: bool = True)
     if ptype == BYTE_ARRAY:
         if stats.distinct_ratio < 0.5 and stats.avg_len * 8 * (1 - stats.distinct_ratio) > dict_bits:
             return Encoding.PLAIN_DICTIONARY
-        if not parquet_compat and stats.avg_len > 4:
-            return FSST
         return Encoding.PLAIN
     if ptype == BOOLEAN:
         return Encoding.PLAIN
     if stats.distinct_ratio < 0.1 and dict_bits < stats.plain_bits / 2:
         return Encoding.PLAIN_DICTIONARY
-    if ptype in (INT32, INT64) and (
-        stats.sorted_frac > 0.95 or stats.delta_bits < stats.plain_bits * 0.6
-    ):
+    if ptype in (INT32, INT64) and delta_wins(stats):
         return Encoding.DELTA_BINARY_PACKED
     return Encoding.PLAIN
 
 
-#: engine-internal sentinel for the FSST own-format path
-FSST = -1
+def modern_trial(ptype: int, values, codec: int, level=None) -> int:
+    """compat='modern' admission for a PLAIN column: compress a bounded
+    sample of ``values`` (the writer's non-null physical values) both
+    ways and keep the modern encoding only on a ``GAIN`` compressed-size
+    win — so the choice is measured, never assumed."""
+    from fastparquet_spark.codecs.split import (
+        bss_encode, dba_encode, dlba_encode,
+    )
+
+    cap = 65_536
+    if ptype in (FLOAT, DOUBLE):
+        sample = values[:cap]
+        if len(sample) < 64:
+            return Encoding.PLAIN
+        cands = [(Encoding.BYTE_STREAM_SPLIT, bss_encode(sample, ptype))]
+        plain = encode_plain(sample, ptype)
+    elif ptype == BYTE_ARRAY:
+        lengths, data = values
+        if len(lengths) < 64:
+            return Encoding.PLAIN
+        ln = np.asarray(lengths[:cap])
+        dt = np.asarray(data[: int(ln.sum())])
+        plain = encode_plain((ln, dt), ptype)
+        cands = [(Encoding.DELTA_LENGTH_BYTE_ARRAY, dlba_encode(ln, dt)),
+                 (Encoding.DELTA_BYTE_ARRAY, dba_encode(ln, dt))]
+    else:
+        return Encoding.PLAIN
+    base = len(comp.compress(plain, codec, level))
+    best, best_sz = Encoding.PLAIN, base
+    for enc, alt in cands:
+        sz = len(comp.compress(alt, codec, level))
+        if sz < GAIN * base and sz < best_sz:
+            best, best_sz = enc, sz
+    return best
+
+
+def parquet_encoding(arr, values, ptype: int, modern: bool, codec: int,
+                     level=None) -> int:
+    """The parquet writer's encoding for a flat column chunk ``arr``
+    (``values``: its non-null physical values).  Fixed-width byte rows,
+    INT96 and decimals stay PLAIN; otherwise the stats rule decides,
+    and under ``modern`` a PLAIN outcome goes to :func:`modern_trial`."""
+    if ptype in (FIXED, INT96) or pa.types.is_decimal(arr.type):
+        return Encoding.PLAIN
+    if ptype == BYTE_ARRAY:
+        st = column_stats_arrow(arr.drop_null() if arr.null_count else arr)
+    else:
+        st = column_stats(values, ptype)
+    encoding = choose_encoding(st, ptype)
+    if modern and encoding == Encoding.PLAIN:
+        encoding = modern_trial(ptype, values, codec, level)
+    return encoding
+
+
+def fsst_trial(lengths, data, codec: int, ftab=None,
+               decision: str | None = None) -> tuple[str, list]:
+    """FSST vs PLAIN for one string column of an FPSC container.
+
+    Encodes the column both ways — PLAIN under the block ``codec``, and
+    FSST under the symbol table ``ftab`` (its code stream
+    block-compressed only where that shrinks it) — and keeps FSST only
+    when all its sections total under ``GAIN`` of the compressed PLAIN
+    body.  A ``decision`` ('fsst' | 'plain', this same trial's outcome
+    on a driver-side sample) encodes only the named path.  Returns the
+    codec name and the column's container sections, in write order."""
+    if decision != "fsst":
+        raw = encode_plain((lengths, data), BYTE_ARRAY)
+        body = comp.compress(raw, codec)
+        plain = [len(raw).to_bytes(8, "little"),
+                 len(body).to_bytes(8, "little"), body]
+    if decision != "plain":
+        blob = fsst_encode(data, ftab)
+        blob_z = comp.compress(blob, codec)
+        blob_codec, stored = (codec, blob_z) if len(blob_z) < len(blob) \
+            else (0, blob)
+        tab = ftab.serialize()
+        lens = delta_encode(lengths)
+        fsst = [len(tab).to_bytes(4, "little"), tab,
+                len(lens).to_bytes(4, "little"), lens,
+                len(blob).to_bytes(8, "little"),    # code stream length
+                len(stored).to_bytes(8, "little"),
+                blob_codec.to_bytes(4, "little"), stored]
+    if decision == "fsst" or (decision is None and
+                              sum(map(len, fsst)) < len(body) * GAIN):
+        return "fsst", fsst
+    return "plain", plain

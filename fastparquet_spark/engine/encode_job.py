@@ -251,13 +251,7 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
         arrow_schema = pa_s.schema(
             [f for f in arrow_schema if f.name not in pcols])
     probe = ParquetWriter(_io.BytesIO(), arrow_schema)
-    # LEAVES only, matching schema_signature(): group elements (LIST/
-    # MAP/STRUCT roots) have no physical type and made every nested
-    # append a spurious mismatch
-    new_sig = [(e["name"], e.get("type"), e.get("converted_type"),
-                e.get("type_length"))
-               for e in probe.schema_elems[1:]
-               if e.get("num_children") is None]
+    new_sig = schema_signature({"schema": probe.schema_elems})
     old_sig = schema_signature(existing[0]["fmd"])
     # order-insensitive: the salting repartition fronts the partition
     # columns, so physical column order is an artifact, not the contract

@@ -230,8 +230,7 @@ def scan_unit(path, ris, pvals, absent, clauses, file_cols, part_cols,
         yield from finish(tbl).to_batches(max_chunksize=131_072)
 
 
-def paged_read(spark, in_dir: str, filters, columns=None,
-               exact: bool = True, fs=None):
+def paged_read(spark, in_dir: str, filters, columns=None, fs=None):
     """Spark DataFrame of the rows surviving ``filters`` (a DNF filter:
     a flat AND-list ``[(col, op, val), ...]`` or OR-of-ANDs
     ``[[...], [...]]`` — the reference's filter contract) under
@@ -242,9 +241,8 @@ def paged_read(spark, in_dir: str, filters, columns=None,
        pseudo-stats) -> surviving (file, row-group) units;
     2. executor: ColumnIndex page skipping inside each surviving group
        (``read_pages`` — ranged reads of surviving spans only);
-    3. executor: residual row filter in Arrow compute (``exact=True``,
-       the default) so the result is exact, not a page-granular
-       superset.
+    3. executor: residual row filter in Arrow compute, so the result is
+       exact, not a page-granular superset.
 
     Hive ``key=value`` datasets work end to end: partition predicates
     prune whole files on the driver, and partition columns are attached
@@ -253,7 +251,7 @@ def paged_read(spark, in_dir: str, filters, columns=None,
     ``columns``: projection (predicate columns are decoded as needed
     and dropped from the result; may include partition columns).
     """
-    return scan(spark, in_dir, filters, columns, exact, fs, ParquetScan)
+    return scan(spark, in_dir, filters, columns, True, fs, ParquetScan)
 
 
 def scan(spark, in_dir: str, filters, columns, exact: bool, fs, fmt):

@@ -35,11 +35,12 @@ import numpy as np
 import pyarrow as pa
 
 from fastparquet_spark.codecs import compression as comp
+from fastparquet_spark.codecs.bloom import bloom_fpps, build_bloom
 from fastparquet_spark.codecs.delta import delta_decode, delta_encode
-from fastparquet_spark.codecs.fsst import FsstTable, fsst_decode, fsst_encode, fsst_train
+from fastparquet_spark.codecs.fsst import FsstTable, fsst_decode, fsst_train
 from fastparquet_spark.codecs.plain import decode_plain, encode_plain
 from fastparquet_spark.codecs.rle import decode_hybrid, encode_hybrid
-from fastparquet_spark.codecs.selection import column_stats
+from fastparquet_spark.codecs.selection import column_stats, delta_wins, fsst_trial
 from fastparquet_spark.format.metadata import ConvertedType, Type
 from fastparquet_spark.format.reader import _binary_array, _fill_rows, _table
 from fastparquet_spark.format.writer import _binary_parts, _map_type, _one_array
@@ -92,17 +93,28 @@ def _type_from_name(name: str) -> pa.DataType:
     raise ValueError(f"unsupported container type {name}")
 
 
+def _fsst_table(fsst_cache: dict | None, name: str, data) -> FsstTable:
+    """``name``'s symbol table: from ``fsst_cache`` when it holds one,
+    else trained on ``data`` (and cached)."""
+    ftab = None if fsst_cache is None else fsst_cache.get(name)
+    if ftab is None:
+        ftab = fsst_train(data)
+        if fsst_cache is not None:
+            fsst_cache[name] = ftab
+    return ftab
+
+
 def decide_string_codecs(table: pa.Table, fsst_cache: dict,
-                         compression: str = "ZSTD",
-                         min_fsst_gain: float = 0.98) -> dict:
-    """Sampled fsst-vs-plain decision per string/binary column — run
-    ONCE on the driver over a small head sample (the same sample that
-    pretrains the FSST tables), shipped to every encode task so workers
-    never pay the losing codec's full-column trial.  Mirrors
-    write_container's selection rule exactly (same hysteresis, same
-    size accounting) on the sample; the escape byte makes a 'fsst'
-    decision safe for unseen data, and a sample-vs-full flip costs only
-    ratio, never correctness."""
+                         compression: str = "ZSTD") -> dict:
+    """The fsst-vs-plain decision per string/binary column — run ONCE
+    on the driver over a small head sample (the same sample that
+    pretrains the FSST tables, cached in ``fsst_cache``), shipped to
+    every encode task so workers never pay the losing codec's
+    full-column trial.  It is ``selection.fsst_trial``, the trial
+    ``write_container`` runs on an undecided column, with only the
+    decision kept; the escape byte makes a 'fsst' decision safe for
+    unseen data, and a sample-vs-full flip costs only ratio, never
+    correctness."""
     codec = comp.codec_id(compression)
     out: dict[str, str] = {}
     for field in table.schema:
@@ -117,23 +129,12 @@ def decide_string_codecs(table: pa.Table, fsst_cache: dict,
         if len(arr) == 0:
             continue
         lengths, data = _binary_parts(arr)
-        body_plain = comp.compress(encode_plain((lengths, data),
-                                                Type.BYTE_ARRAY), codec)
-        ftab = fsst_cache.get(field.name)
-        if ftab is None:
-            ftab = fsst_cache[field.name] = fsst_train(data)
-        blob = fsst_encode(data, ftab)
-        blob_z = comp.compress(blob, codec)
-        stored = min(len(blob_z), len(blob))
-        fsst_total = len(ftab.serialize()) + len(delta_encode(lengths)) \
-            + stored + 28
-        out[field.name] = "fsst" \
-            if fsst_total < len(body_plain) * min_fsst_gain else "plain"
+        out[field.name], _ = fsst_trial(
+            lengths, data, codec, _fsst_table(fsst_cache, field.name, data))
     return out
 
 
 def write_container(sink, table: pa.Table, compression: str = "ZSTD",
-                    min_fsst_gain: float = 0.98,
                     fsst_cache: dict | None = None,
                     bloom_filters: dict | None = None,
                     codec_decisions: dict | None = None) -> list[ColumnBlock]:
@@ -145,18 +146,16 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
     chunks (the escape byte covers anything unseen; only the ratio can
     drift).  The cache is consulted AND populated.
 
-    ``min_fsst_gain`` is the selection hysteresis: FSST wins only when
-    its total beats plain+codec by this factor.  It was 0.9 when
-    encode ran at ~20 MB/s (the decode/encode tax needed a real ratio
-    win to pay off); with the C greedy kernel at ~600 MB/s a 2%
-    size win is already worth taking.
+    Every codec choice is ``codecs/selection.py``'s: int columns go
+    DELTA where ``delta_wins``, string columns through ``fsst_trial``.
 
     ``bloom_filters`` ({column: fpp or True}): append a split-block
-    bloom filter (codecs/bloom.py, the same parquet-spec structure)
-    per listed string/int column and record its span in the footer —
-    the container's point-lookup pruning path, probed by the scan
-    planner (``dataset.filter_row_groups``) for ==/in predicates that
-    min/max stats cannot discriminate.
+    bloom filter (codecs/bloom.py, the same parquet-spec structure and
+    the same builder as the parquet writer's) per listed non-boolean
+    column and record its span in the footer — the container's
+    point-lookup pruning path, probed by the scan planner
+    (``dataset.filter_row_groups``) for ==/in predicates that min/max
+    stats cannot discriminate.  A LIST column raises.
 
     ``codec_decisions`` ({column: 'fsst' | 'plain'}): pre-made string
     codec choices (from :func:`decide_string_codecs` on a driver-side
@@ -174,9 +173,9 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
         pos = 4
         cols_meta = []
         blocks: list[ColumnBlock] = []
-        blooms = {k: (0.01 if v is True else float(v))
-                  for k, v in (bloom_filters or {}).items()}
-        bloom_inputs: dict[str, tuple] = {}  # name -> (values, ptype)
+        blooms = bloom_fpps(bloom_filters, [
+            fld.name for fld in table.schema if pa.types.is_list(fld.type)])
+        built: dict[str, object] = {}  # name -> bloom filter
         for field in table.schema:
             arr = _one_array(table.column(field.name))
             # fail fast: anything the read path can't restore is rejected at
@@ -226,68 +225,30 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
             parts = [validity_b]
             if ptype == Type.BYTE_ARRAY:
                 lengths, data = _binary_parts(arr_nn)
-                if field.name in blooms:
-                    bloom_inputs[field.name] = ((lengths, data), ptype)
+                values = (lengths, data)
                 raw_bytes = int(lengths.sum()) + 8 * len(lengths)
-                # candidates: plain+block codec vs FSST (optionally +block
-                # codec on the symbol stream) — pick the smallest, per the
-                # auto-selection mandate; a pre-made decision skips the
-                # losing path's full-column encode+compress entirely
+                # a pre-made decision skips the losing path's
+                # full-column encode+compress entirely
                 decision = (codec_decisions or {}).get(field.name)
-                if decision != "fsst":
-                    raw_plain = encode_plain((lengths, data), ptype)
-                    body_plain = comp.compress(raw_plain, codec)
-                if decision != "plain":
-                    if fsst_cache is not None and field.name in fsst_cache:
-                        ftab = fsst_cache[field.name]
-                    else:
-                        ftab = fsst_train(data)
-                        if fsst_cache is not None:
-                            fsst_cache[field.name] = ftab
-                    blob = fsst_encode(data, ftab)
-                    blob_z = comp.compress(blob, codec)
-                    blob_codec, blob_stored = (codec, blob_z) \
-                        if len(blob_z) < len(blob) else (0, blob)
-                    tab_b = ftab.serialize()
-                    lens_b = delta_encode(lengths)
-                    fsst_total = len(tab_b) + len(lens_b) \
-                        + len(blob_stored) + 28
-                if decision == "fsst" or (
-                        decision is None
-                        and fsst_total < len(body_plain) * min_fsst_gain):
-                    codec_name = "fsst"
-                    parts += [len(tab_b).to_bytes(4, "little"), tab_b,
-                              len(lens_b).to_bytes(4, "little"), lens_b,
-                              len(blob).to_bytes(8, "little"),      # fsst stream len
-                              len(blob_stored).to_bytes(8, "little"),
-                              blob_codec.to_bytes(4, "little"), blob_stored]
-                else:
-                    codec_name = "plain"
-                    parts += [len(raw_plain).to_bytes(8, "little"),
-                              len(body_plain).to_bytes(8, "little"), body_plain]
+                codec_name, sections = fsst_trial(
+                    lengths, data, codec,
+                    None if decision == "plain"
+                    else _fsst_table(fsst_cache, field.name, data),
+                    decision)
+                parts += sections
             else:
                 if pa.types.is_timestamp(arr_nn.type):
                     arr_nn = arr_nn.cast(pa.int64())
                 elif pa.types.is_date32(arr_nn.type):
                     arr_nn = arr_nn.cast(pa.int32())
-                vals = arr_nn.to_numpy(zero_copy_only=False)
-                if field.name in blooms and ptype in (Type.INT32, Type.INT64):
-                    bloom_inputs[field.name] = (vals, ptype)
+                values = vals = arr_nn.to_numpy(zero_copy_only=False)
                 if vals.dtype == np.uint32:
                     vals = vals.view(np.int32)  # bit-reinterpret, like parquet
                 elif vals.dtype == np.uint64:
                     vals = vals.view(np.int64)
                 raw_bytes = vals.nbytes
-                # stats only where they are consulted: the sampling
-                # pass (unique sort + run probe) was paid for float/
-                # bool columns whose result was discarded
-                if ptype in (Type.INT32, Type.INT64):
-                    st = column_stats(vals, ptype)
-                    use_delta = (st.sorted_frac > 0.95
-                                 or st.delta_bits < st.plain_bits * 0.6)
-                else:
-                    use_delta = False
-                if use_delta:
+                if ptype in (Type.INT32, Type.INT64) \
+                        and delta_wins(column_stats(vals, ptype)):
                     codec_name = "delta"
                     raw = delta_encode(vals, bit_width=32 if ptype == Type.INT32 else 64)
                 else:
@@ -296,6 +257,10 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
                 body = comp.compress(raw, codec)
                 parts += [len(raw).to_bytes(8, "little"),
                           len(body).to_bytes(8, "little"), body]
+            if field.name in blooms:
+                bf = build_bloom(values, ptype, blooms[field.name])
+                if bf is not None:
+                    built[field.name] = bf
 
             size = _write_parts(f, parts)
             cols_meta.append({"name": field.name, "codec": codec_name,
@@ -308,17 +273,9 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
                                       _arrow_type_name(field.type), n,
                                       null_count, raw_bytes, size))
             pos += size
-        if bloom_inputs:
-            from fastparquet_spark.codecs.bloom import (
-                SplitBlockBloom, hash_values,
-            )
-
+        if built:
             by_name = {m["name"]: m for m in cols_meta}
-            for name, (values, bptype) in bloom_inputs.items():
-                h = hash_values(values, bptype)
-                bf = SplitBlockBloom(SplitBlockBloom.optimal_bytes(
-                    len(np.unique(h)), blooms[name]))
-                bf.insert(h)
+            for name, bf in built.items():
                 raw = bf.tobytes()
                 f.write(raw)
                 by_name[name]["bloom_offset"] = pos
@@ -349,8 +306,6 @@ def _write_list_block(arr_nn: pa.Array, validity_b,
     validity]> <u8 raw + u8 comp + plain child values>."""
     import pyarrow.compute as pc
 
-    from fastparquet_spark.codecs.delta import delta_encode
-    from fastparquet_spark.codecs.plain import encode_plain
     from fastparquet_spark.format.writer import _extract
 
     offs = np.frombuffer(arr_nn.buffers()[1], dtype=np.int32,

@@ -8,21 +8,13 @@ Only the fields our writer/reader use are declared; the thrift reader
 skips anything else.
 """
 
+# Encoding ids live with the codec selection that returns them
+from fastparquet_spark.codecs.selection import Encoding  # noqa: F401
+
+
 # ---- enums -----------------------------------------------------------------
 class Type:
     BOOLEAN, INT32, INT64, INT96, FLOAT, DOUBLE, BYTE_ARRAY, FIXED_LEN_BYTE_ARRAY = range(8)
-
-
-class Encoding:
-    PLAIN = 0
-    PLAIN_DICTIONARY = 2
-    RLE = 3
-    BIT_PACKED = 4
-    DELTA_BINARY_PACKED = 5
-    DELTA_LENGTH_BYTE_ARRAY = 6
-    DELTA_BYTE_ARRAY = 7
-    RLE_DICTIONARY = 8
-    BYTE_STREAM_SPLIT = 9
 
 
 class Codec:

@@ -56,15 +56,12 @@ import numpy as np
 import pyarrow as pa
 
 from fastparquet_spark.codecs import compression as comp
+from fastparquet_spark.codecs.bloom import bloom_fpps, build_bloom
 from fastparquet_spark.codecs.delta import delta_encode
 from fastparquet_spark.codecs.dictionary import dict_build, dict_data_page
 from fastparquet_spark.codecs.plain import encode_plain
 from fastparquet_spark.codecs.rle import encode_hybrid
-from fastparquet_spark.codecs.selection import (
-    choose_encoding,
-    column_stats,
-    column_stats_arrow,
-)
+from fastparquet_spark.codecs.selection import parquet_encoding
 from fastparquet_spark.codecs.varint import uvarint_encode
 from fastparquet_spark.format import thrift
 from fastparquet_spark.format.metadata import (
@@ -626,13 +623,7 @@ class ParquetWriter:
             raise ValueError(
                 f"required_cols must name flat schema columns; invalid: "
                 f"{sorted(bad_req)}")
-        # blooms are built per flat chunk only; silently writing none for
-        # a nested column would leave its point lookups unpruned
-        bad_bloom = set(bloom_filters or ()) & nested
-        if bad_bloom:
-            raise ValueError(
-                f"bloom_filters must name flat columns; LIST, MAP or "
-                f"STRUCT columns given: {sorted(bad_bloom)}")
+        self.bloom_cols = bloom_fpps(bloom_filters, nested)
         for fld in schema:
             t = fld.type
             if pa.types.is_list(t) or pa.types.is_large_list(t):
@@ -697,17 +688,14 @@ class ParquetWriter:
         self._closed = False
         # encoding choice per column, made on the FIRST row group and
         # reused for the rest of the file: the sampling pass
-        # (selection.column_stats) costs ~30% of kernel time, and later
+        # (codecs/selection.py) costs ~30% of kernel time, and later
         # row groups of one task share the first's distribution
         self._chosen: dict[str, int] = {}
         self._modern_used = False  # any BSS/DELTA_LENGTH page written
         # split-block bloom filters (parquet spec; parquet-java-compatible,
-        # the reference has none): {column: fpp or True}.  Built per column
-        # CHUNK from the non-null value hashes, serialized before the
-        # footer at close, referenced via bloom_filter_offset/length.
-        self.bloom_cols = {
-            k: (0.01 if v is True else float(v))
-            for k, v in (bloom_filters or {}).items()}
+        # the reference has none), per column CHUNK (``bloom_cols``),
+        # serialized before the footer at close, referenced via
+        # bloom_filter_offset/length
         self._blooms: list[tuple[dict, object]] = []  # (cmd, filter)
         # page splitting + PageIndex (parquet spec; the reference writes
         # neither): with page_rows set, each flat column chunk becomes
@@ -732,59 +720,6 @@ class ParquetWriter:
         for s in (sorting_columns or []):
             name, desc, nf = (s, False, False) if isinstance(s, str) else s
             self._sorting_req.append((name, bool(desc), bool(nf)))
-
-    def _modern_trial(self, ptype: int, values) -> int:
-        """compat='modern' admission: compress a bounded sample of the
-        column both ways and keep the modern encoding only on a >2%
-        compressed-size win (the same hysteresis the FSST selection
-        uses) — so the choice is measured, never assumed.  Runs once per
-        column per file (the result lands in ``_chosen``)."""
-        from fastparquet_spark.codecs.split import (
-            bss_encode, dba_encode, dlba_encode,
-        )
-
-        cap = 65_536
-        if ptype in (Type.FLOAT, Type.DOUBLE):
-            sample = values[:cap]
-            if len(sample) < 64:
-                return Encoding.PLAIN
-            cands = [(Encoding.BYTE_STREAM_SPLIT, bss_encode(sample, ptype))]
-            plain = encode_plain(sample, ptype)
-        elif ptype == Type.BYTE_ARRAY:
-            lengths, data = values
-            if len(lengths) < 64:
-                return Encoding.PLAIN
-            ln = np.asarray(lengths[:cap])
-            dt = np.asarray(data[: int(ln.sum())])
-            plain = encode_plain((ln, dt), ptype)
-            cands = [(Encoding.DELTA_LENGTH_BYTE_ARRAY, dlba_encode(ln, dt)),
-                     (Encoding.DELTA_BYTE_ARRAY, dba_encode(ln, dt))]
-        else:
-            return Encoding.PLAIN
-        base = len(comp.compress(plain, self.codec, self.level))
-        best, best_sz = Encoding.PLAIN, base
-        for enc, alt in cands:
-            sz = len(comp.compress(alt, self.codec, self.level))
-            if sz < 0.98 * base and sz < best_sz:
-                best, best_sz = enc, sz
-        return best
-
-    def _maybe_build_bloom(self, cmd, values, name: str, ptype: int,
-                           n_nonnull: int) -> None:
-        """A flat chunk's bloom filter, sized from the chunk's ACTUAL
-        ndv; skipped for BOOLEAN/all-null/unconfigured columns."""
-        if name not in self.bloom_cols or n_nonnull <= 0 \
-                or ptype == Type.BOOLEAN:
-            return
-        from fastparquet_spark.codecs.bloom import (
-            SplitBlockBloom, hash_values,
-        )
-
-        h = hash_values(values, ptype)
-        bf = SplitBlockBloom(SplitBlockBloom.optimal_bytes(
-            len(np.unique(h)), self.bloom_cols[name]))
-        bf.insert(h)
-        self._blooms.append((cmd, bf))
 
     def _write_page(self, header: dict, body, levels=b"") -> int:
         """Compress ``body`` and write it as one page behind its header
@@ -950,21 +885,12 @@ class ParquetWriter:
         enc_override = self.encodings.get(name)
         if enc_override is not None:
             encoding = _ENC_BY_NAME[enc_override]
-        elif ptype in (Type.FIXED_LEN_BYTE_ARRAY, Type.INT96) \
-                or pa.types.is_decimal(arr.type):
-            encoding = Encoding.PLAIN
-        elif name in self._chosen:
-            encoding = self._chosen[name]
         else:
-            if ptype == Type.BYTE_ARRAY:
-                nonnull = arr.drop_null() if null_count else arr
-                st = column_stats_arrow(nonnull)
-            else:
-                st = column_stats(values, ptype)
-            encoding = choose_encoding(st, ptype, parquet_compat=True)
-            if self.compat == "modern" and encoding == Encoding.PLAIN:
-                encoding = self._modern_trial(ptype, values)
-            self._chosen[name] = encoding
+            if name not in self._chosen:
+                self._chosen[name] = parquet_encoding(
+                    arr, values, ptype, self.compat == "modern",
+                    self.codec, self.level)
+            encoding = self._chosen[name]
         if encoding in (Encoding.BYTE_STREAM_SPLIT,
                         Encoding.DELTA_LENGTH_BYTE_ARRAY,
                         Encoding.DELTA_BYTE_ARRAY):
@@ -983,8 +909,10 @@ class ParquetWriter:
             self._flat_pages(arr, values, required, ptype, encoding, codes,
                              n_dict, stats),
             dictionary, stats)
-        self._maybe_build_bloom(entry["meta_data"], values, name, ptype,
-                                n - null_count)
+        if name in self.bloom_cols:
+            bf = build_bloom(values, ptype, self.bloom_cols[name])
+            if bf is not None:
+                self._blooms.append((entry["meta_data"], bf))
         return entry
 
     def write_row_group(self, chunk: pa.Table) -> None:

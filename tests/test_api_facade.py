@@ -514,6 +514,33 @@ def test_append_does_not_resurrect_stale_parts(tmp_path):
     assert list(got["g"]) == ["a", "c"]
 
 
+def test_refused_append_writes_no_file(tmp_path):
+    """An append whose schema does not match the dataset raises before
+    any part file is written, with or without the ``_metadata``
+    sidecar: the directory holds exactly the files it held, and the
+    dataset still reads."""
+    import os
+
+    out = str(tmp_path / "ds")
+    write(out, pd.DataFrame({"k": ["a", "b"], "v": [1, 2]}),
+          file_scheme="hive", partition_on=["k"])
+
+    def files():
+        return sorted(os.path.relpath(os.path.join(r, f), out)
+                      for r, _, fs in os.walk(out) for f in fs)
+
+    bad = pd.DataFrame({"k": ["c"], "v": ["x"]})
+    for sidecar in (True, False):
+        if not sidecar:
+            os.remove(os.path.join(out, "_metadata"))
+        before = files()
+        with pytest.raises(ValueError, match="schema mismatch"):
+            write(out, bad, file_scheme="hive", partition_on=["k"],
+                  append=True)
+        assert files() == before
+        assert sorted(ParquetFile(out).to_pandas()["v"]) == [1, 2]
+
+
 def test_drill_rejects_structure_breaking_partition_values(tmp_path):
     """drill directories are bare unescaped labels; a value containing
     '/' or None would write a structurally corrupt layout (phantom dir

@@ -228,3 +228,64 @@ def test_bloom_on_a_nested_column_raises():
         with pytest.raises(ValueError, match=col):
             write_file(io.BytesIO(), t, bloom_filters={"x": True, col: True})
     write_file(io.BytesIO(), t, bloom_filters={"x": True, "nope": True})
+
+
+def test_both_writers_build_the_same_blooms(tmp_path):
+    """The parquet writer and the FPSC container build their blooms
+    through one builder and one column rule: the same named columns get
+    one (a double too, not a boolean), with the same bitset, and a LIST
+    column named raises in both.  A name outside the table is left
+    alone."""
+    import io
+
+    import pytest
+
+    from fastparquet_spark.format.container import (
+        read_container_footer, write_container,
+    )
+    from fastparquet_spark.format.reader import read_footer
+
+    rng = np.random.default_rng(9)
+    n = 3000
+    t = pa.table({
+        "f": pa.array(rng.normal(0, 1, n)),
+        "i": pa.array(rng.integers(0, 500, n)),
+        "s": pa.array([f"v{x}" for x in rng.integers(0, 900, n)],
+                      mask=rng.random(n) < 0.1),
+        "b": pa.array(rng.random(n) < 0.5),
+        "lst": pa.array([[int(x)] for x in range(n)], pa.list_(pa.int64())),
+    })
+    wanted = {"f": True, "i": 0.05, "s": True, "b": True, "nope": True}
+    for writer in (write_file, write_container):
+        with pytest.raises(ValueError, match="lst"):
+            writer(io.BytesIO(), t, bloom_filters={**wanted, "lst": True})
+
+    pq_path, fpsc_path = str(tmp_path / "t.parquet"), str(tmp_path / "t.fpsc")
+    write_file(pq_path, t, bloom_filters=wanted)
+    write_container(fpsc_path, t, bloom_filters=wanted)
+    with open(pq_path, "rb") as fh:
+        fmd = read_footer(fh.read())
+    pq_blooms = {
+        c["meta_data"]["path_in_schema"][0]: read_bloom_filter(
+            pq_path, c["meta_data"]["bloom_filter_offset"],
+            c["meta_data"]["bloom_filter_length"]).words
+        for c in fmd["row_groups"][0]["columns"]
+        if "bloom_filter_offset" in c["meta_data"]}
+    with open(fpsc_path, "rb") as fh:
+        raw = fh.read()
+    fpsc_blooms = {
+        cm["name"]: SplitBlockBloom.frombytes(raw[
+            cm["bloom_offset"]:cm["bloom_offset"] + cm["bloom_bytes"]]).words
+        for cm in read_container_footer(fpsc_path)["columns"]
+        if "bloom_offset" in cm}
+    assert sorted(pq_blooms) == sorted(fpsc_blooms) == ["f", "i", "s"]
+    for name in pq_blooms:
+        np.testing.assert_array_equal(pq_blooms[name], fpsc_blooms[name])
+    # the container's double bloom prunes a point lookup stats cannot
+    from fastparquet_spark.format.container import FpscFiles
+
+    srt = np.sort(t.column("f").to_numpy())
+    inside = float((srt[n // 2] + srt[n // 2 + 1]) / 2)
+    d = str(tmp_path)
+    assert filter_row_groups(d, [("f", "==", float(srt[7]))], fmt=FpscFiles)
+    assert filter_row_groups(d, [("f", "==", inside)], fmt=FpscFiles) == []

@@ -448,3 +448,34 @@ def test_container_rejects_nested_lists_and_bad_bytes(tmp_path):
             "ll": pa.array([[[1]]], pa.list_(pa.list_(pa.int64())))}))
     with _pt.raises(ValueError, match="FPSC"):
         read_container_footer(b"PAR1 not a container PAR1")
+
+
+def test_decided_codecs_equal_the_undecided_trial():
+    """``decide_string_codecs`` runs the trial ``write_container`` runs
+    on an undecided string column: on one table, each column's decision
+    is the codec ``write_container`` picks for it undecided."""
+    import io as _io
+
+    import numpy as np
+
+    from fastparquet_spark.format.container import (
+        decide_string_codecs, write_container,
+    )
+
+    n = 4000
+    rng = np.random.default_rng(3)
+    t = pa.table({
+        "code": pa.array(["def fn_%d(x):\n    return x * %d\n" % (i, i)
+                          for i in range(n)]),
+        "hex": pa.array([hashlib_md5_hex(i) for i in range(n)]),
+        "words": pa.array([f"w{x % 7}" for x in rng.integers(0, 99, n)],
+                          mask=rng.random(n) < 0.2),
+        "blob": pa.array([bytes(rng.integers(0, 256, 12, np.uint8))
+                          for _ in range(n)]),
+        "k": pa.array(range(n)),
+    })
+    dec = decide_string_codecs(t, {})
+    picked = {b.name: b.codec for b in write_container(_io.BytesIO(), t)}
+    assert sorted(dec) == ["blob", "code", "hex", "words"]
+    assert dec == {c: picked[c] for c in dec}
+    assert set(dec.values()) == {"fsst", "plain"}

@@ -75,6 +75,20 @@ def _container() -> bytes:
     return buf.getvalue()
 
 
+def _container_pretrained() -> bytes:
+    """A container written as an engine task writes it: FSST tables and
+    string codec decisions fixed on a head sample, then applied."""
+    from fastparquet_spark.engine.write import FpscFormat
+
+    t = _table().drop_columns(["mp", "st"])
+    fmt = FpscFormat.trained(t.slice(0, 500))
+    buf = io.BytesIO()
+    write_container(buf, t, compression="ZSTD", fsst_cache=fmt.fsst_cache,
+                    codec_decisions=fmt.decisions,
+                    bloom_filters={"cat": 0.05})
+    return buf.getvalue()
+
+
 # one entry per page-assembly path; the codec matrix is below
 PATHS = {
     "v1": lambda: _write(compression="ZSTD"),
@@ -100,12 +114,14 @@ PATHS = {
         compression={"_default": "ZSTD", "text": "SNAPPY", "lst": None,
                      "mp": "GZIP"}),
     "fpsc": _container,
+    "fpsc_pretrained": _container_pretrained,
 }
 
 GOLDEN = {
     "column_codecs": "13060f4a101112b853230154d039f089ce8cf18ebf377c629c03224bcba9dfdd",
     "forced_encodings": "de309cac9435eac8a66cb991fa125220aedf5a2b3355a50eb53e763512dd8a46",
     "fpsc": "9de1ea6a9e274d25645c2e5b19b5cdf6e52b8058c7a79dd55a3eccf298a353aa",
+    "fpsc_pretrained": "0408a68130b69e37a991224170eccd1690c60d36409989fe1892b41c5d26b398",
     "int96": "135890a6b34ca7995bdf3d89631f07a0ce29ac356dbac3b17b0ee7401f7ba25a",
     "modern": "92b6ec664a91a9b66fdeba81979aac30d664c3cdaa755844387e4b57236d2ee8",
     "required": "82db2a46701495db52da62d5b8d8ffb33c7d9de3038bf87b6f926a5d5c3ece75",

@@ -23,6 +23,7 @@ here routes through the same writer/reader kernels.
 
 from __future__ import annotations
 
+import functools
 import io
 import os
 from typing import Any
@@ -44,6 +45,7 @@ from fastparquet_spark.format.dataset import (
 from fastparquet_spark.format.dataset import (
     filter_row_groups as _meta_filter_row_groups,
 )
+from fastparquet_spark.format.metadata import Encoding
 from fastparquet_spark.format.predicate import (
     _apply_row_filter_dnf,
     _chunk_may_match,
@@ -82,6 +84,13 @@ def _distinct(values) -> list:
     for v in values:
         out.setdefault(_NAN if isinstance(v, float) and v != v else v, v)
     return sorted(out.values(), key=repr)
+
+
+def _is_bytes(t: pa.DataType) -> bool:
+    """Whether pandas gets ``t``'s values as str/bytes objects."""
+    return (pa.types.is_string(t) or pa.types.is_large_string(t)
+            or pa.types.is_binary(t) or pa.types.is_large_binary(t)
+            or pa.types.is_fixed_size_binary(t))
 
 
 def _real_ris(m, ris):
@@ -267,9 +276,13 @@ class ParquetFile:
         if [] in filters:
             return self.count_total
         if row_filter:
-            return len(self.to_pandas(
-                columns=[self.columns[0]], filters=filters,
-                row_filter=True))
+            # decode only the filter's columns; a filter on partition
+            # keys alone still needs one column, so that every file
+            # carries its row count
+            cols = [c for clause in filters for c, _op, _v in clause
+                    if c in self._names] or self.columns[:1]
+            return sum(t.num_rows for t in self._tables(
+                list(dict.fromkeys(cols)), filters, True))
         keep = self._surviving(filters)
         return sum(m["fmd"]["row_groups"][ri]["num_rows"]
                    for m in self._metas for ri in keep.get(m["file"], ()))
@@ -440,7 +453,16 @@ class ParquetFile:
         groups (a superset of the matching rows); ``row_filter=True``
         applies the exact residual predicate; ``categories`` names
         columns returned as pandas Categoricals; ``index`` promotes a
-        column to the frame index."""
+        column to the frame index.
+
+        String and binary values come back as Python objects, shared
+        the way the file stores them: a column whose every chunk is
+        dictionary-encoded, and a partition column, return one object
+        per distinct value (as the reference's dictionary pages become
+        shared labels), while any other column returns a fresh object
+        per row.  The writer stores a column PLAIN when its values are
+        nearly all distinct, so sharing them would hash every value to
+        save no memory."""
         parts = list(self._tables(columns, filters, row_filter))
         if not parts:
             names = columns if columns is not None else self.columns
@@ -450,21 +472,57 @@ class ParquetFile:
                 [], type=self._atype(n) if n in self._elems
                 else (self._ptypes.get(n) or pa.string()))
                 for n in names}
-            df = pa.table(empty).to_pandas()
+            tbl = pa.table(empty)
         else:
             tbl = pa.concat_tables(parts, promote_options="default")
-            tbl = self._restore_meta_types(tbl)
-            df = self._restore_masked_dtypes(tbl.to_pandas(), tbl)
-        # default categories from the pandas metadata, the reference's
-        # check_categories path (api.py:534-545): a frame written with
-        # Categorical columns reads back Categorical
-        for c in self.check_categories(categories):
-            if c in df.columns:
-                df[c] = df[c].astype("category")
+        df = self._frame(tbl, categories)
         if index is not None and index in df.columns:
             df = df.set_index(index)
         elif index is None:
             df = self._restore_pandas_index(df, columns)
+        return df
+
+    @functools.cached_property
+    def _dict_columns(self) -> frozenset:
+        """Flat columns whose every chunk the footers list as
+        dictionary-encoded."""
+        dict_encs = {Encoding.PLAIN_DICTIONARY, Encoding.RLE_DICTIONARY}
+        dicts, others = set(), set()
+        for m in self._metas:
+            for rg in m["fmd"]["row_groups"]:
+                for ch in rg["columns"]:
+                    md = ch.get("meta_data") or {}
+                    path = md.get("path_in_schema") or ()
+                    if len(path) == 1:
+                        is_dict = dict_encs & set(md.get("encodings") or ())
+                        (dicts if is_dict else others).add(path[0])
+        return frozenset(dicts - others)
+
+    def _frame(self, tbl: pa.Table, categories=None):
+        """The one Arrow -> pandas conversion behind every read
+        surface: the pandas-level types restored (``_restore_meta_types``,
+        ``_restore_masked_dtypes``, then ``categories``, by default the
+        columns written as Categoricals — the reference's
+        check_categories path, api.py:534-545), and string/binary
+        objects shared only where the file shares them (see
+        ``to_pandas``).  pyarrow's object dedup hashes every value of a
+        column, so it runs on the dictionary-encoded and partition
+        columns alone."""
+        tbl = self._restore_meta_types(tbl)
+        shared = self._dict_columns | self._ptypes.keys()
+        names = tbl.column_names
+        dedup = [i for i, f in enumerate(tbl.schema)
+                 if f.name in shared and _is_bytes(f.type)]
+        df = tbl.select([i for i in range(len(names)) if i not in dedup]) \
+            .to_pandas(deduplicate_objects=False)
+        # ascending positions: each insert lands at its final place
+        for i in dedup:
+            df.insert(i, names[i], tbl.column(i).to_pandas(),
+                      allow_duplicates=True)
+        df = self._restore_masked_dtypes(df, tbl)
+        for c in self.check_categories(categories):
+            if c in df.columns:
+                df[c] = df[c].astype("category")
         return df
 
     def _restore_meta_types(self, tbl: pa.Table) -> pa.Table:
@@ -589,8 +647,7 @@ class ParquetFile:
                 tbl = self._table(m, [ri], columns)
                 if tbl is None:
                     break
-                tbl = self._restore_meta_types(tbl)
-                yield self._restore_masked_dtypes(tbl.to_pandas(), tbl)
+                yield self._frame(tbl)
 
     def read_row_group_file(self, rg, columns=None, categories=None,
                             index=None):
@@ -602,12 +659,8 @@ class ParquetFile:
             for ri, r in enumerate(m["fmd"]["row_groups"]):
                 if r is rg:
                     tbl = self._table(m, [ri], columns)
-                    tbl = self._restore_meta_types(
-                        pa.table({}) if tbl is None else tbl)
-                    df = self._restore_masked_dtypes(tbl.to_pandas(), tbl)
-                    for c in self.check_categories(categories):
-                        if c in df.columns:
-                            df[c] = df[c].astype("category")
+                    df = self._frame(pa.table({}) if tbl is None else tbl,
+                                     categories)
                     if index is not None and index in df.columns:
                         df = df.set_index(index)
                     return df

@@ -70,4 +70,4 @@ def read_fpsc(spark, in_dir: str, columns=None):
     ``columns``: projection — workers make RANGED reads of only the
     requested columns' byte spans (footer offsets), the same IO
     contract as a parquet column-chunk scan."""
-    return scan(spark, in_dir, None, columns, True, None, FpscScan)
+    return scan(spark, in_dir, None, columns, None, FpscScan)

@@ -251,14 +251,15 @@ def paged_read(spark, in_dir: str, filters, columns=None, fs=None):
     ``columns``: projection (predicate columns are decoded as needed
     and dropped from the result; may include partition columns).
     """
-    return scan(spark, in_dir, filters, columns, True, fs, ParquetScan)
+    return scan(spark, in_dir, filters, columns, fs, ParquetScan)
 
 
-def scan(spark, in_dir: str, filters, columns, exact: bool, fs, fmt):
+def scan(spark, in_dir: str, filters, columns, fs, fmt):
     """The body of ``paged_read`` (``fmt=ParquetScan``) and
     ``read_fpsc`` (``fmt=FpscScan``): plan on the driver, then one
-    mapInArrow job whose tasks run ``scan_unit`` over their units.  A
-    directory with no ``fmt`` file raises ``ValueError``."""
+    mapInArrow job whose tasks run ``scan_unit`` over their units, each
+    filtered exactly.  A directory with no ``fmt`` file raises
+    ``ValueError``."""
     from fastparquet_spark.engine.spark_types import (
         served_schema, spark_schema,
     )
@@ -287,7 +288,7 @@ def scan(spark, in_dir: str, filters, columns, exact: bool, fs, fmt):
                 ris = [int(x) for x in rgs.split(",")] if rgs else []
                 yield from scan_unit(
                     path, ris, json.loads(pjson), json.loads(absjson),
-                    clauses, file_cols, part_cols, arrow_schema, exact, fmt)
+                    clauses, file_cols, part_cols, arrow_schema, True, fmt)
 
     # several files per task, not one — 100k single-file tasks would
     # be pure scheduler overhead; 4x the core count keeps every

@@ -976,7 +976,7 @@ QUERIES["sim_neardup_lsh"] = \
 # Driver-gate ordering.  The correctness driver records at most 50 query
 # rows per round (r6: 51 registry keys -> 50 rows, silently dropping the
 # LAST key).  Two defenses: (a) the registry stays at exactly <=50 keys
-# (q_head folded into q_sort_topk coverage), and (b) the dict is
+# (head(n) is covered by q_sort_topk's order-by + limit), and (b) the dict is
 # re-ordered so the operators most likely to regress — engine encode/
 # scan paths and the LSH/ANN analytics — sit FIRST, and only trivial
 # always-green relational queries occupy the truncatable tail.

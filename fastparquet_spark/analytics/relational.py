@@ -144,13 +144,6 @@ def q_count_filters(spark, sf_dir):
             .groupBy().agg(F.count("*").alias("n_rows")))
 
 
-def q_head(spark, sf_dir):
-    """head(n) — fastparquet/api.py:231-250 analog (deterministic order)."""
-    orders = load(spark, sf_dir, "orders")
-    return (orders.orderBy("o_orderkey").limit(5)
-            .select("o_orderkey", "o_custkey", "o_orderstatus"))
-
-
 def q_partition_values(spark, sf_dir):
     """hive partition discovery analog (fastparquet/api.py:700-758):
     the distinct key=value combinations a partitioned write would create."""

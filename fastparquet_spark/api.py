@@ -59,7 +59,7 @@ from fastparquet_spark.format.reader import (
     read_footer_tail,
     read_row_groups,
 )
-from fastparquet_spark.format.writer import write_file
+from fastparquet_spark.format.writer import ParquetWriter
 from fastparquet_spark.io import fetch_footers, get_fs
 
 __all__ = ["ParquetFile", "ParquetException", "filter_in",
@@ -955,7 +955,7 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
     ``compression``: None => UNCOMPRESSED; a codec name or the
     reference's ``{'type': ..., 'args': {'level': N}}`` spec.
     ``append=True`` (hive only) adds new part files and re-merges the
-    sidecars.  Extra ``write_file`` options (``page_rows``,
+    sidecars.  Extra ``ParquetWriter`` options (``page_rows``,
     ``bloom_filters``, ``encodings``, ``compat``, ``sorting_columns``)
     pass through ``**kwargs``."""
     import pandas as pd
@@ -1052,31 +1052,29 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
     if req:
         kwargs.setdefault("required_cols", req)
 
+    # row-group start offsets: an explicit list applies to the whole
+    # table (each partition of a split write is then one row group);
+    # an int is rows per row group everywhere
     if isinstance(row_group_offsets, (list, tuple)):
-        bounds = list(row_group_offsets) + [table.num_rows]
-        slices = [table.slice(a, b - a)
-                  for a, b in zip(bounds, bounds[1:]) if b > a]
-        rg_rows = None
+        offsets, rg_rows = list(row_group_offsets), None
     else:
-        slices = None
+        offsets = None
         rg_rows = min(int(row_group_offsets), max(table.num_rows, 1))
 
     def _emit(path: str, tbl: pa.Table):
-        if slices is not None and tbl is table:
-            from fastparquet_spark.format.writer import ParquetWriter
-
-            with open(path, "wb") as f:
-                w = ParquetWriter(f, tbl.schema, compression=comp,
-                                  stats=stats, times=times,
-                                  custom_metadata=custom_metadata,
-                                  **kwargs)
-                for s in slices:
-                    w.write_row_group(s)
-                w.close()
+        if offsets is not None and tbl is table:
+            starts = offsets
         else:
-            write_file(path, tbl, compression=comp,
-                       row_group_rows=rg_rows, stats=stats, times=times,
-                       custom_metadata=custom_metadata, **kwargs)
+            starts = range(0, tbl.num_rows, rg_rows or max(tbl.num_rows, 1))
+        bounds = [*starts, tbl.num_rows]
+        with open(path, "wb") as f:
+            w = ParquetWriter(f, tbl.schema, compression=comp, stats=stats,
+                              times=times, custom_metadata=custom_metadata,
+                              **kwargs)
+            for a, b in zip(bounds, bounds[1:]):
+                if b > a:
+                    w.write_row_group(tbl.slice(a, b - a))
+            w.close()
 
     if file_scheme == "simple":
         if append:
@@ -1110,7 +1108,6 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
         from fastparquet_spark.format.dataset import (
             read_sidecar, schema_signature,
         )
-        from fastparquet_spark.format.writer import ParquetWriter
 
         base = read_sidecar(filename, fs=fs)
         old = base if base is not None or not existing else \
@@ -1136,25 +1133,13 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
         _emit(f"{filename}/part.{n_written}.parquet", table)
         written_rels.append(f"part.{n_written}.parquet")
     if append:
-        # incremental: base sidecar + the files THIS call wrote.  A
-        # full-directory re-merge here would resurrect stale parts a
-        # prior fresh write deliberately excluded from its sidecar
-        # (overwritten rows silently reappearing on read); with no
-        # sidecar there was no prior exclusion, so a sweep is correct.
+        # incremental: base sidecar (less the entries whose part file
+        # is gone) + the files THIS call wrote.  A full-directory
+        # re-merge here would resurrect stale parts a prior fresh write
+        # deliberately excluded from its sidecar (overwritten rows
+        # silently reappearing on read); with no sidecar there was no
+        # prior exclusion, so a sweep is correct.
         if base is not None:
-            # prune base entries whose part file is gone from disk
-            # (deleted by the user between appends): keeping them would
-            # make every subsequent read fail on the missing file.
-            # Exclusion stays intact — excluded-but-present files are
-            # simply not in the base and never re-swept.
-            from fastparquet_spark.io import relative_to
-
-            live = {relative_to(p, filename) for p in existing}
-            kept = [rg for rg in base["row_groups"]
-                    if rg["columns"][0].get("file_path") in live]
-            if len(kept) != len(base["row_groups"]):
-                base = dict(base, row_groups=kept,
-                            num_rows=sum(rg["num_rows"] for rg in kept))
             write_metadata_sidecar(filename, fs=fs, base=base,
                                    add_files=written_rels)
         else:

@@ -112,11 +112,9 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
                    partition_cols=("repo", "lang"), num_partitions: int | None = None,
                    salt_rows: int = 250_000, sort_within: tuple = ("repo", "path"),
                    row_group_rows: int = 1_000_000, resume: bool = True,
-                   encodings: dict | None = None, layout: str = "flat",
-                   file_prefix: str = "part",
+                   layout: str = "flat", file_prefix: str = "part",
                    bloom_filters: dict | None = None,
-                   page_rows: int | None = None,
-                   compat: str = "reference"):
+                   page_rows: int | None = None):
     """Encode ``df`` into ``out_dir`` as parquet files + lineage manifests.
 
     Returns the manifest DataFrame (one row per written file).  Designed
@@ -155,9 +153,8 @@ def encode_dataset(spark, df, out_dir: str, *, compression: str = "ZSTD",
     if sort_cols:
         work = work.sortWithinPartitions(*sort_cols)
 
-    fmt = ParquetFormat(compression=compression, encodings=encodings,
+    fmt = ParquetFormat(compression=compression,
                         bloom_filters=bloom_filters, page_rows=page_rows,
-                        compat=compat,
                         # stamped as footer SortingColumn metadata
                         sorting_columns=list(sort_cols))
     return _encode_shuffled(work, out_dir, fmt, file_prefix=file_prefix,
@@ -215,7 +212,8 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
     ``write(..., append=True)``, fastparquet/writer.py:773-807):
 
     - schema compatibility is checked against the existing footers
-      (same leaf names/physical types/converted types);
+      (same leaf names/physical types/converted types, in the same
+      order) before any file is written;
     - new files get a fresh generation prefix ``part-g{N}``, so nothing
       collides and resume stays per-generation idempotent;
     - on success the ``_metadata`` sidecar is re-merged, so footer-only
@@ -253,9 +251,9 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
     probe = ParquetWriter(_io.BytesIO(), arrow_schema)
     new_sig = schema_signature({"schema": probe.schema_elems})
     old_sig = schema_signature(existing[0]["fmd"])
-    # order-insensitive: the salting repartition fronts the partition
-    # columns, so physical column order is an artifact, not the contract
-    if set(new_sig) != set(old_sig):
+    # the sidecar merge compares the same ordered signature, so this
+    # check refuses every append the merge would, before any task runs
+    if new_sig != old_sig:
         raise ValueError(
             f"append schema mismatch: existing {old_sig} vs new {new_sig}")
     # next generation: one past the highest existing g-prefix — UNLESS

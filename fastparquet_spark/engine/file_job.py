@@ -62,8 +62,7 @@ def _prepare_split_job(spark, input_dir: str, out_dir: str,
     return splits
 
 
-def plan_splits(input_dir: str, rows_per_task: int = 2_000_000,
-                fs=None) -> list[dict]:
+def plan_splits(input_dir: str, rows_per_task: int = 2_000_000) -> list[dict]:
     """Footer-only planning: pack row groups of all parquet files under
     ``input_dir`` into splits of ~rows_per_task rows.  Only metadata is
     read (the reference's `_metadata` trick, fastparquet/util.py:115-213,
@@ -74,7 +73,7 @@ def plan_splits(input_dir: str, rows_per_task: int = 2_000_000,
     from fastparquet_spark.format.reader import read_footer_tail
     from fastparquet_spark.io import fetch_footers, get_fs
 
-    fs = get_fs(input_dir, fs)
+    fs = get_fs(input_dir)
     if any(c in input_dir for c in "*?["):
         files = [p for p in fs.glob(input_dir) if p.endswith(".parquet")]
     else:
@@ -110,13 +109,12 @@ def plan_splits(input_dir: str, rows_per_task: int = 2_000_000,
     return splits
 
 
-def _encode_splits(spark, splits, input_dir: str, out_dir: str, columns,
+def _encode_splits(spark, splits, input_dir: str, out_dir: str,
                    resume: bool, preserve_layout: bool, fmt):
     """The split-encode task body both formats share, one split per
     task: each split reads its row groups with pyarrow, writes them as
     one ``part-{split}{fmt.suffix}`` file of the format plug-in
     (engine/write.py) and commits it with its manifest."""
-    columns = list(columns) if columns else None
     prefix = input_dir.rstrip("/") + "/"
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -152,7 +150,7 @@ def _encode_splits(spark, splits, input_dir: str, out_dir: str, columns,
                     continue
                 t0 = time.perf_counter()
                 tbl = pq.ParquetFile(fpath).read_row_groups(
-                    json.loads(rgs_json), columns=columns, use_threads=False)
+                    json.loads(rgs_json), use_threads=False)
                 k0 = time.perf_counter()
                 try:
                     with fs.open_write(task.stage(_u_join(out_dir, fname))) as sink:
@@ -182,12 +180,8 @@ def _encode_splits(spark, splits, input_dir: str, out_dir: str, columns,
 
 
 def encode_files(spark, input_dir: str, out_dir: str, *,
-                 compression: str = "ZSTD", columns=None,
-                 rows_per_task: int = 2_000_000, resume: bool = True,
-                 encodings: dict | None = None, preserve_layout: bool = False,
-                 bloom_filters: dict | None = None,
-                 page_rows: int | None = None,
-                 compat: str = "reference"):
+                 compression: str = "ZSTD", rows_per_task: int = 2_000_000,
+                 resume: bool = True, preserve_layout: bool = False):
     """Encode every parquet file under ``input_dir`` into ``out_dir``
     (our writer, auto-selected codecs), distributing (file, row-group)
     splits.  Returns the manifest DataFrame.
@@ -201,18 +195,14 @@ def encode_files(spark, input_dir: str, out_dir: str, *,
     if not splits:
         return spark.createDataFrame([], _manifest_struct())
 
-    fmt = ParquetFormat(compression=compression, encodings=encodings,
-                        bloom_filters=bloom_filters, page_rows=page_rows,
-                        compat=compat)
-    return _encode_splits(spark, splits, input_dir, out_dir, columns, resume,
-                          preserve_layout, fmt)
+    return _encode_splits(spark, splits, input_dir, out_dir, resume,
+                          preserve_layout, ParquetFormat(compression=compression))
 
 
 def encode_files_fpsc(spark, input_dir: str, out_dir: str, *,
-                      compression: str = "ZSTD", columns=None,
+                      compression: str = "ZSTD",
                       rows_per_task: int = 2_000_000, resume: bool = True,
-                      pretrain_rows: int = 2_000,
-                      bloom_filters: dict | None = None):
+                      pretrain_rows: int = 2_000):
     """FPSC-container twin of :func:`encode_files` — the container
     format's THROUGHPUT path.  Same split planning (footer-only, plan
     moves not data), same manifest/resume contract, but each worker
@@ -236,7 +226,6 @@ def encode_files_fpsc(spark, input_dir: str, out_dir: str, *,
         # slice 2000
         first = pq_d.ParquetFile(splits[0]["file"])
         sample = pa.Table.from_batches([next(first.iter_batches(
-            batch_size=pretrain_rows, columns=columns, use_threads=False))])
-    fmt = FpscFormat.trained(sample, compression, bloom_filters)
-    return _encode_splits(spark, splits, input_dir, out_dir, columns, resume,
-                          False, fmt)
+            batch_size=pretrain_rows, use_threads=False))])
+    return _encode_splits(spark, splits, input_dir, out_dir, resume, False,
+                          FpscFormat.trained(sample, compression))

@@ -26,8 +26,7 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
                         num_partitions: int | None = None,
                         salt_rows: int = 250_000, resume: bool = True,
                         rows_per_container: int = 1_000_000,
-                        pretrain_rows: int = 2_000,
-                        bloom_filters: dict | None = None):
+                        pretrain_rows: int = 2_000):
     """Encode ``df`` into FPSC containers + manifests: the shuffle task
     body of ``encode_dataset`` with the ``FpscFormat`` plug-in, so each
     task writes ``part-{pid:05d}-NNN.fpsc`` containers of
@@ -51,7 +50,7 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
 
     fmt = FpscFormat.trained(
         df.limit(pretrain_rows).toArrow() if pretrain_rows else None,
-        compression, bloom_filters)
+        compression)
     return _encode_shuffled(work, out_dir, fmt, file_prefix="part",
                             chunk_rows=rows_per_container, resume=resume)
 
@@ -70,4 +69,4 @@ def read_fpsc(spark, in_dir: str, columns=None):
     ``columns``: projection — workers make RANGED reads of only the
     requested columns' byte spans (footer offsets), the same IO
     contract as a parquet column-chunk scan."""
-    return scan(spark, in_dir, None, columns, None, FpscScan)
+    return scan(spark, in_dir, None, columns, FpscScan)

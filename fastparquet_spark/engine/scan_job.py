@@ -230,7 +230,7 @@ def scan_unit(path, ris, pvals, absent, clauses, file_cols, part_cols,
         yield from finish(tbl).to_batches(max_chunksize=131_072)
 
 
-def paged_read(spark, in_dir: str, filters, columns=None, fs=None):
+def paged_read(spark, in_dir: str, filters, columns=None):
     """Spark DataFrame of the rows surviving ``filters`` (a DNF filter:
     a flat AND-list ``[(col, op, val), ...]`` or OR-of-ANDs
     ``[[...], [...]]`` — the reference's filter contract) under
@@ -251,10 +251,10 @@ def paged_read(spark, in_dir: str, filters, columns=None, fs=None):
     ``columns``: projection (predicate columns are decoded as needed
     and dropped from the result; may include partition columns).
     """
-    return scan(spark, in_dir, filters, columns, fs, ParquetScan)
+    return scan(spark, in_dir, filters, columns, ParquetScan)
 
 
-def scan(spark, in_dir: str, filters, columns, fs, fmt):
+def scan(spark, in_dir: str, filters, columns, fmt):
     """The body of ``paged_read`` (``fmt=ParquetScan``) and
     ``read_fpsc`` (``fmt=FpscScan``): plan on the driver, then one
     mapInArrow job whose tasks run ``scan_unit`` over their units, each
@@ -266,7 +266,7 @@ def scan(spark, in_dir: str, filters, columns, fs, fmt):
     from fastparquet_spark.io import get_fs
 
     clauses = dnf(filters)
-    fs = get_fs(in_dir, fs)
+    fs = get_fs(in_dir)
     in_dir, metas = load_dataset_metas(in_dir, fs=fs, fmt=fmt)
     arrow_schema, file_cols, part_cols, units = plan_scan(
         in_dir, metas, clauses, columns, fs=fs, fmt=fmt)

@@ -88,8 +88,8 @@ class FpscFormat:
         self.bloom_filters = bloom_filters
 
     @classmethod
-    def trained(cls, sample: pa.Table | None, compression: str = "ZSTD",
-                bloom_filters: dict | None = None) -> FpscFormat:
+    def trained(cls, sample: pa.Table | None,
+                compression: str = "ZSTD") -> FpscFormat:
         """The one pretrain step: tables trained and fsst-vs-plain fixed
         on a driver ``sample``, so tasks skip training and the losing
         codec's trial (the escape byte keeps unseen bytes correct; only
@@ -100,7 +100,7 @@ class FpscFormat:
         pretrained: dict = {}
         decisions = {} if sample is None else decide_string_codecs(
             sample, pretrained, compression=compression)
-        return cls(compression, pretrained, decisions, bloom_filters)
+        return cls(compression, pretrained, decisions)
 
     def open(self, sink, schema: pa.Schema):
         from fastparquet_spark.format.container import write_container

@@ -520,7 +520,8 @@ def _dataset(out_dir: str, fs=None, use_sidecar: bool = True,
             fmds.append({"version": fmd.get("version", 1),
                          "schema": fmd["schema"],
                          "num_rows": sum(r["num_rows"] for r in rgs),
-                         "row_groups": rgs})
+                         "row_groups": rgs,
+                         "key_value_metadata": fmd.get("key_value_metadata")})
         return root, _metas(rels, fmds, detect_scheme(rels))
     prefix = root + "/"
 
@@ -590,22 +591,33 @@ def write_metadata_sidecar(out_dir: str, fs=None, base: dict | None = None,
     + ``add_files`` = relative paths of the NEW part files): only the
     new files' footers are fetched and appended to ``base`` — an
     append touches O(new files), not O(dataset), unlike the
-    reference's full re-merge.
+    reference's full re-merge.  One listing drops the ``base`` row
+    groups whose part file is gone (deleted between appends), which
+    every later read would otherwise fail on; a file on disk that
+    ``base`` left out stays out.
 
     EXPLICIT mode (``files`` = relative paths): merge exactly those
     files, in that order — the reference's ``merge(file_list)``
     contract (writer.py:1156-1193), which must NOT sweep in other
-    parquet files that happen to live under ``out_dir``."""
+    parquet files that happen to live under ``out_dir``.
+
+    Both sidecars carry the key-value metadata of ``base`` (or of the
+    first merged footer), so a dataset read restores the pandas dtypes
+    its part files record."""
     from fastparquet_spark.format import thrift
     from fastparquet_spark.format.metadata import MAGIC, SPECS
     from fastparquet_spark.format.writer import CREATED_BY
 
     fs = get_fs(out_dir, fs)
     if base is not None and add_files is not None:
-        schema = base["schema"]
+        from fastparquet_spark.io import relative_to
+
+        schema, kv = base["schema"], base.get("key_value_metadata")
         sig0 = schema_signature(base)
-        rgs = list(base["row_groups"])
-        num_rows = base["num_rows"]
+        live = {relative_to(p, out_dir) for p in fs.walk_files(out_dir)}
+        rgs = [rg for rg in base["row_groups"]
+               if rg["columns"][0].get("file_path") in live]
+        num_rows = sum(rg["num_rows"] for rg in rgs)
         tails = fetch_footers([_join(out_dir, f) for f in add_files], fs)
         for rel, tail in zip(add_files, tails):
             sub = read_footer_tail(tail)
@@ -628,6 +640,7 @@ def write_metadata_sidecar(out_dir: str, fs=None, base: dict | None = None,
         if not metas:
             raise ValueError(f"no part files under {out_dir}")
         schema = metas[0]["fmd"]["schema"]
+        kv = metas[0]["fmd"].get("key_value_metadata")
         sig0 = schema_signature(metas[0]["fmd"])
         rgs, num_rows = [], 0
         for m in metas:
@@ -640,8 +653,8 @@ def write_metadata_sidecar(out_dir: str, fs=None, base: dict | None = None,
                                   for cc in rg["columns"]]
                 rgs.append(rg2)
                 num_rows += rg["num_rows"]
-    fmd = {"version": 1, "schema": schema, "num_rows": num_rows,
-           "row_groups": rgs, "created_by": CREATED_BY}
+    head = {"version": 1, "schema": schema, "created_by": CREATED_BY,
+            "key_value_metadata": kv}
 
     def _emit(payload: dict, name: str):
         body = thrift.write_struct("FileMetaData", payload, SPECS)
@@ -653,15 +666,13 @@ def write_metadata_sidecar(out_dir: str, fs=None, base: dict | None = None,
             f.write(MAGIC)
         fs.replace(tmp, _join(out_dir, name))
 
-    _emit(fmd, "_metadata")
+    _emit(dict(head, num_rows=num_rows, row_groups=rgs), "_metadata")
     # _common_metadata: schema-only twin (no row groups) — the cheap
     # open ecosystem tools (dask/pyarrow discovery) look for; the
     # reference writes both (fastparquet/writer.py:1045-1046,1108).
     # Appends keep it in sync for free: the schema cannot drift
     # (signature-checked above) and the file carries no row groups.
-    _emit({"version": 1, "schema": schema, "num_rows": 0,
-           "row_groups": [], "created_by": CREATED_BY},
-          "_common_metadata")
+    _emit(dict(head, num_rows=0, row_groups=[]), "_common_metadata")
     return len(rgs)
 
 
@@ -680,28 +691,6 @@ def _file_generation(rel_path: str) -> int:
     return 0
 
 
-def dataset_snapshots(out_dir: str, fs=None) -> list[dict]:
-    """Snapshot listing, one row per generation (Iceberg's snapshot
-    log analog over the `part-g{N}` naming + `_manifests/` lineage):
-    {generation, files, rows, bytes, cumulative_rows}.  Metadata-only
-    — footers (or the single `_metadata` sidecar) are the source."""
-    gens: dict[int, dict] = {}
-    for m in dataset_metadata(out_dir, fs=fs):
-        g = _file_generation(m["file"])
-        slot = gens.setdefault(g, {"generation": g, "files": 0,
-                                   "rows": 0, "bytes": 0})
-        slot["files"] += 1
-        slot["rows"] += m["fmd"]["num_rows"]
-        slot["bytes"] += sum(rg["total_byte_size"]
-                             for rg in m["fmd"]["row_groups"])
-    out = [gens[g] for g in sorted(gens)]
-    cum = 0
-    for s in out:
-        cum += s["rows"]
-        s["cumulative_rows"] = cum
-    return out
-
-
 def read_snapshot(spark, out_dir: str, generation: int, fs=None):
     """Time travel: DataFrame over the dataset AS OF ``generation`` —
     every part file with generation <= the requested one (appends are
@@ -717,52 +706,6 @@ def read_snapshot(spark, out_dir: str, generation: int, fs=None):
             if _file_generation(m["file"]) <= generation]
     return (spark.read.option("basePath", out_dir)
             .parquet(*[out_dir.rstrip("/") + "/" + f for f in keep]))
-
-
-def drop_generations(out_dir: str, keep_from: int, fs=None) -> dict:
-    """Data RETENTION over append generations (a TTL drop, NOT Iceberg's
-    expire_snapshots — in this append-only model every generation's
-    files are referenced by all later snapshots, so removing them
-    removes those ROWS from the table): delete every data file of
-    generations BEFORE ``keep_from`` with their lineage manifests, then
-    rewrite the ``_metadata`` sidecar over the survivors.  Time travel
-    to a dropped generation raises; the dataset afterwards contains
-    exactly generations >= keep_from.
-
-    Refuses to drop the newest generation (that would empty the
-    dataset).  Returns {"removed_files", "removed_rows",
-    "kept_generations"}."""
-    fs = get_fs(out_dir, fs)
-    metas = dataset_metadata(out_dir, fs=fs, use_sidecar=False)
-    if not metas:
-        raise ValueError(f"no dataset under {out_dir}")
-    gens = sorted({_file_generation(m["file"]) for m in metas})
-    if keep_from > gens[-1]:
-        raise ValueError(
-            f"keep_from={keep_from} would delete every generation "
-            f"(dataset has {gens})")
-    doomed = [m for m in metas if _file_generation(m["file"]) < keep_from]
-    removed_rows = sum(m["fmd"]["num_rows"] for m in doomed)
-    for m in doomed:
-        fs.remove(_join(out_dir, m["file"]))
-    # manifests of removed generations (their part prefix matches the
-    # data file's first two dash segments)
-    man_dir = _join(out_dir, "_manifests")
-    if fs.isdir(man_dir):
-        dead_prefixes = {os.path.basename(m["file"]).rsplit(".", 1)[0]
-                         for m in doomed}
-        for p in fs.listdir(man_dir):
-            base = os.path.basename(p)
-            if base.endswith(".json") and base[:-5] in dead_prefixes:
-                fs.remove(p)
-    for name in ("_metadata", "_common_metadata"):
-        sidecar = _join(out_dir, name)
-        if fs.exists(sidecar):
-            fs.remove(sidecar)
-    if len(doomed) < len(metas):
-        write_metadata_sidecar(out_dir, fs=fs)
-    return {"removed_files": len(doomed), "removed_rows": removed_rows,
-            "kept_generations": [g for g in gens if g >= keep_from]}
 
 
 def _chunk_stats(rg: dict, elems: dict) -> dict[str, tuple]:

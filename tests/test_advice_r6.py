@@ -5,12 +5,9 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
 def _page_header_bytes(def_enc: int) -> bytes:
@@ -135,15 +132,3 @@ def test_registry_fits_driver_gate_and_orders_risk_first():
         assert keys.index(risky) < len(keys) // 2, risky
     assert keys[-1].startswith("q_")
 
-
-def test_q_head_operator_still_correct(spark):
-    """q_head was retired from the driver gate (to fit <=50 keys) but
-    the facade operator keeps direct coverage here."""
-    from fastparquet_spark.analytics.relational import q_head
-
-    rows = [tuple(r) for r in q_head(spark, SF_DIR).collect()]
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW orders AS SELECT * FROM '{SF_DIR}/orders.parquet'")
-    oracle = con.sql("SELECT o_orderkey, o_custkey, o_orderstatus "
-                     "FROM orders ORDER BY o_orderkey LIMIT 5").fetchall()
-    assert rows == [tuple(r) for r in oracle]

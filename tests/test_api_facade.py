@@ -1005,3 +1005,36 @@ def test_per_column_compression_dict(tmp_path):
     md = pq.ParquetFile(fn).metadata.row_group(0)
     assert md.column(0).compression == "ZSTD"
     assert md.column(1).compression == "UNCOMPRESSED"
+
+
+def test_hive_dataset_read_restores_pandas_dtypes(tmp_path):
+    """A partitioned dataset read through its ``_metadata`` sidecar
+    restores the pandas dtypes its part files record (masked Int64, a
+    tz-aware zone, Categorical, timedelta), as a read of one part file
+    does — after a fresh write and after an ``append=True``."""
+    import os
+
+    def frame(ks):
+        n = len(ks)
+        return pd.DataFrame({
+            "k": ks,
+            "i": pd.array([1, None, 3, 4][:n], dtype="Int64"),
+            "t": pd.date_range("2020-01-01", periods=n, tz="US/Eastern"),
+            "c": pd.Categorical(["a", "b", "a", "b"][:n]),
+            "d": pd.to_timedelta(range(n), unit="s"),
+        })
+
+    out = str(tmp_path / "ds")
+    write(out, frame([1, 1, 2, 2]), file_scheme="hive", partition_on=["k"])
+    want = ParquetFile(os.path.join(out, "k=1", "part.0.parquet")) \
+        .to_pandas().dtypes
+    assert str(want["i"]) == "Int64" and str(want["c"]) == "category"
+    got = ParquetFile(out).to_pandas()
+    assert dict(got.dtypes.drop("k")) == dict(want)
+    assert got["i"].isna().tolist() == [False, True, False, False]
+
+    write(out, frame([3, 3]), file_scheme="hive", partition_on=["k"],
+          append=True)
+    got = ParquetFile(out).to_pandas()
+    assert len(got) == 6
+    assert dict(got.dtypes.drop("k")) == dict(want)

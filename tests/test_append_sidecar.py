@@ -194,14 +194,11 @@ def test_hive_many_keys_bounded_writers(spark, tmp_path):
 
 
 def test_snapshots_and_time_travel(spark, tmp_path):
-    """Generations are queryable snapshots: dataset_snapshots lists one
-    row per append (metadata-only), read_snapshot(g) reads the dataset
-    AS OF that generation — the Iceberg snapshot-log/time-travel analog
-    over part-g{N} naming."""
+    """Generations are queryable snapshots: read_snapshot(g) reads the
+    dataset AS OF that generation — the Iceberg time-travel analog over
+    part-g{N} naming."""
     from fastparquet_spark.engine import append_dataset, encode_dataset
-    from fastparquet_spark.format.dataset import (
-        dataset_snapshots, read_snapshot,
-    )
+    from fastparquet_spark.format.dataset import read_snapshot
 
     out = str(tmp_path / "tt")
     encode_dataset(spark, _df(spark, 0, 1000), out, num_partitions=2,
@@ -211,10 +208,6 @@ def test_snapshots_and_time_travel(spark, tmp_path):
                    num_partitions=2, salt_rows=10**9, resume=False)
     append_dataset(spark, _df(spark, 1600, 1900), out,
                    num_partitions=2, salt_rows=10**9, resume=False)
-    snaps = dataset_snapshots(out)
-    assert [s["generation"] for s in snaps] == [0, 1, 2]
-    assert [s["rows"] for s in snaps] == [1000, 600, 300]
-    assert [s["cumulative_rows"] for s in snaps] == [1000, 1600, 1900]
     assert read_snapshot(spark, out, 0).count() == 1000
     assert read_snapshot(spark, out, 1).count() == 1600
     df2 = read_snapshot(spark, out, 2)
@@ -347,3 +340,58 @@ def test_append_never_resumes_completed_generation(spark, tmp_path):
     n = sum(rg["num_rows"] for m in dataset_metadata(out)
             for rg in m["fmd"]["row_groups"])
     assert n == 2000
+
+
+def test_append_refuses_reordered_columns_before_any_task(spark, tmp_path):
+    """The append check uses the sidecar merge's ordered schema rule:
+    the same columns in another order are refused before any task
+    runs, so no file, marker or sidecar change is left behind (a
+    looser check let the job commit its files and then raise in the
+    merge, and every re-run resumed into the same failure)."""
+    from fastparquet_spark.engine import append_dataset, encode_dataset
+
+    out = str(tmp_path / "ds")
+    encode_dataset(spark, _df(spark, 0, 600), out, num_partitions=2,
+                   salt_rows=10**9, resume=False).collect()
+    write_metadata_sidecar(out)
+
+    def files():
+        return sorted(os.path.relpath(os.path.join(r, f), out)
+                      for r, _, fs in os.walk(out) for f in fs)
+
+    def sidecar():
+        with open(os.path.join(out, "_metadata"), "rb") as fh:
+            return fh.read()
+
+    before, side = files(), sidecar()
+    df = _df(spark, 600, 900)
+    reordered = df.select(*reversed(df.columns))
+    with pytest.raises(ValueError, match="schema mismatch"):
+        append_dataset(spark, reordered, out, num_partitions=2,
+                       salt_rows=10**9)
+    assert files() == before
+    assert sidecar() == side
+    assert spark.read.parquet(out).count() == 600
+
+
+def test_append_drops_sidecar_entries_of_deleted_files(spark, tmp_path):
+    """Both appenders share one stale-entry rule: a part file deleted
+    after the sidecar was written leaves the appended sidecar, so the
+    dataset reads again instead of failing on the missing file."""
+    from fastparquet_spark.engine import append_dataset, encode_dataset
+
+    out = str(tmp_path / "ds")
+    encode_dataset(spark, _df(spark, 0, 900), out, num_partitions=3,
+                   salt_rows=10**9, resume=False).collect()
+    write_metadata_sidecar(out)
+    gone = sorted(glob.glob(f"{out}/part-*.parquet"))[0]
+    lost = pq.read_metadata(gone).num_rows
+    os.remove(gone)
+    append_dataset(spark, _df(spark, 900, 1200), out, num_partitions=2,
+                   salt_rows=10**9, resume=False)
+    listed = [m["file"] for m in dataset_metadata(out)]
+    assert os.path.basename(gone) not in listed
+    assert all(os.path.exists(os.path.join(out, f)) for f in listed)
+    assert sum(rg["num_rows"] for m in dataset_metadata(out)
+               for rg in m["fmd"]["row_groups"]) == 1200 - lost
+    assert dataset_statistics(out)["content"]["num_values"] == 1200 - lost

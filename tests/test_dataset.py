@@ -131,55 +131,3 @@ def test_drill_pruning_and_read(tmp_path, spark):
     assert {r["dir0"] for r in rows} == {2021}
     assert {r["dir1"] for r in rows} == {"apac"}
     assert sorted(r["k"] for r in rows) == [6, 7]
-
-
-def test_drop_generations_retention(tmp_path, spark):
-    """TTL retention over append generations: dropped generations'
-    files + manifests disappear, the sidecar is rewritten, later data
-    survives, time travel to dropped generations raises."""
-    import glob
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from fastparquet_spark.engine.encode_job import (
-        append_dataset, encode_dataset,
-    )
-    from fastparquet_spark.format.dataset import (
-        dataset_snapshots, drop_generations, read_snapshot,
-    )
-
-    def batch(lo, hi):
-        return (spark.range(lo, hi).withColumn(
-            "lang", (F.col("id") % 2).cast("string"))
-            .withColumn("text", F.concat(F.lit("d"), F.col("id"))))
-
-    out = str(tmp_path / "ds")
-    encode_dataset(spark, batch(0, 1000), out, partition_cols=("lang",),
-                   num_partitions=2, resume=False).collect()
-    from fastparquet_spark.format.dataset import write_metadata_sidecar
-    write_metadata_sidecar(out)
-    append_dataset(spark, batch(1000, 1500), out, partition_cols=("lang",),
-                   num_partitions=2, resume=False)
-    append_dataset(spark, batch(1500, 1800), out, partition_cols=("lang",),
-                   num_partitions=2, resume=False)
-    assert [s["generation"] for s in dataset_snapshots(out)] == [0, 1, 2]
-    assert spark.read.parquet(f"{out}/part-*.parquet").count() == 1800
-
-    res = drop_generations(out, keep_from=1)
-    assert res["removed_rows"] == 1000
-    assert res["kept_generations"] == [1, 2]
-    # rows of generations >= 1 survive; gen-0 files and manifests gone
-    assert spark.read.parquet(f"{out}/part-*.parquet").count() == 800
-    assert not glob.glob(f"{out}/part-0*.parquet")
-    assert [s["generation"] for s in dataset_snapshots(out)] == [1, 2]
-    with pytest.raises(ValueError, match="unknown generation"):
-        read_snapshot(spark, out, 0)
-    assert read_snapshot(spark, out, 1).count() == 500
-    # sidecar rewritten consistently (single-fetch metadata still right)
-    from fastparquet_spark.format.dataset import dataset_statistics
-    st = dataset_statistics(out)
-    assert st["id"]["min"] == 1000 and st["id"]["max"] == 1799
-    # refusing to empty the dataset
-    with pytest.raises(ValueError, match="every generation"):
-        drop_generations(out, keep_from=99)

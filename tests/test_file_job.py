@@ -78,17 +78,6 @@ def test_encode_files_roundtrip_and_resume(spark, src_dir, tmp_path):
     assert all(r["skipped"] for p, r in m3.items() if p != victim)
 
 
-def test_encode_files_column_projection(spark, src_dir, tmp_path):
-    _materialize(spark, src_dir)
-    out = str(tmp_path / "enc_proj")
-    m = encode_files(spark, src_dir, out, columns=["repo", "lang"],
-                     rows_per_task=2000, resume=False).collect()
-    back = spark.read.parquet(f"{out}/part-*.parquet")
-    assert set(back.columns) == {"repo", "lang"}
-    assert back.count() == 3000
-    assert sum(r["rows"] for r in m) == 3000
-
-
 def test_encode_files_preserves_hive_layout(spark, tmp_path):
     """A hive-partitioned input re-encodes into hive-partitioned output
     through the file-split path — no shuffle, clustering preserved,
@@ -151,36 +140,6 @@ def test_encode_files_fpsc_roundtrip_and_resume(spark, tmp_path):
     m3 = encode_files_fpsc(spark, src_dir, out2, rows_per_task=3000,
                            resume=False, pretrain_rows=0).collect()
     assert sum(r["rows"] for r in m3) == 6000
-
-
-def test_encode_files_modern_compat(spark, tmp_path):
-    """compat='modern' on the distributed path: the embedding-like float
-    column comes out BYTE_STREAM_SPLIT (trial-admitted) and DuckDB/pyarrow
-    read the output value-equal; the default path stays reference-set."""
-    import json
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    rng = np.random.default_rng(8)
-    t = pa.table({"f": pa.array(rng.normal(0, 1, 80_000).astype(np.float32)),
-                  "k": pa.array(range(80_000))})
-    src = str(tmp_path / "src")
-    pq.write_table(t, src + ".parquet") or None
-    import os
-    os.makedirs(src, exist_ok=True)
-    pq.write_table(t, f"{src}/a.parquet")
-    from fastparquet_spark.engine.file_job import encode_files
-
-    out = str(tmp_path / "out")
-    m = encode_files(spark, src, out, compression="ZSTD",
-                     rows_per_task=80_000, resume=False,
-                     compat="modern").collect()
-    encs = json.loads(m[0]["columns"])
-    assert encs["f"] == "bss"
-    back = pq.read_table(f"{out}/part-00000.parquet")
-    assert back.column("f").to_pylist() == t.column("f").to_pylist()
 
 
 def test_staged_commit_protocol(spark, src_dir, tmp_path):

@@ -1,4 +1,4 @@
-"""Structured Streaming: encode sink idempotence + watermarked windows."""
+"""Structured Streaming: the encode sink's idempotence in both formats."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import shutil
 
 import pytest
 
-from fastparquet_spark.streaming import encode_stream, windowed_event_counts
+from fastparquet_spark.streaming import encode_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -42,69 +42,6 @@ def test_encode_stream_availablenow(spark, doc_stream_dir, tmp_path):
     q2.awaitTermination(120)
     back2 = spark.read.parquet(f"{out}/epoch=*/part-*.parquet")
     assert back2.count() == 500  # manifests made the replay idempotent
-
-
-def test_windowed_event_counts_matches_batch(spark, tmp_path):
-    d = str(tmp_path / "ev")
-    spark.read.parquet(f"{SF}/events.parquet") \
-        .write.mode("overwrite").parquet(d)
-    schema = spark.read.parquet(d).schema
-    stream = spark.readStream.schema(schema).parquet(d)
-    agg = windowed_event_counts(spark, stream, window="1 day", watermark="2 days")
-    q = (agg.writeStream.format("memory").queryName("wincounts")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {(r["window_start"], r["event_type"]): r["n_events"]
-           for r in spark.sql("select * from wincounts").collect()}
-    from pyspark.sql import functions as F
-    batch = spark.read.parquet(d) \
-        .groupBy(F.window("ts", "1 day").alias("w"), "event_type") \
-        .agg(F.count("*").alias("n")).collect()
-    exp = {(r["w"]["start"], r["event_type"]): r["n"] for r in batch}
-    # append mode emits only watermark-closed windows; all emitted rows
-    # must match the batch truth and cover most of it
-    assert got
-    for k, v in got.items():
-        assert exp[k] == v
-    # append mode holds back windows newer than max_ts - watermark:
-    # with a 2-day watermark and 1-day windows, up to ~3 trailing days
-    # (x event types) stay open — everything older must have flushed
-    n_types = len({k[1] for k in exp})
-    assert len(got) >= len(exp) - 3 * n_types
-
-
-def test_stateful_running_totals_across_batches(spark, tmp_path):
-    """applyInPandasWithState keeps per-user state across micro-batches:
-    two input files processed one per trigger must yield CUMULATIVE
-    totals whose final values equal the batch ground truth."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from fastparquet_spark.streaming.jobs import running_user_totals
-
-    src = tmp_path / "src"
-    src.mkdir()
-    rows1 = [(1, 10.0), (2, 5.0), (1, 2.5)]
-    rows2 = [(1, 1.0), (3, 7.0), (2, 0.5)]
-    for i, rows in enumerate([rows1, rows2]):
-        pq.write_table(pa.table({
-            "user_id": pa.array([r[0] for r in rows], pa.int64()),
-            "value": pa.array([r[1] for r in rows], pa.float64()),
-        }), str(src / f"batch-{i}.parquet"))
-
-    stream = (spark.readStream.schema("user_id long, value double")
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    q = (running_user_totals(spark, stream)
-         .writeStream.format("memory").queryName("totals")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = {r["user_id"]: (r["n_events"], r["total_value"])
-           for r in spark.sql(
-               "select * from totals order by n_events").collect()}
-    # last emitted row per user is the cumulative total
-    assert got[1] == (3, 13.5)
-    assert got[2] == (2, 5.5)
-    assert got[3] == (1, 7.0)
 
 
 def test_encode_stream_fpsc_epochs(spark, tmp_path):

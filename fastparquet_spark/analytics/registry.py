@@ -11,9 +11,44 @@ tests/test_queries_vs_oracle.py) — no rows-only checks.
 
 from __future__ import annotations
 
+import atexit
+import shutil
 import tempfile
 
 from fastparquet_spark.analytics import dedup, multimodal, relational, similarity, text
+
+# the engine queries return lazy DataFrames over the files they encode,
+# so every encoded copy lives under one per-process parent directory,
+# removed when the process exits
+_scratch_root: str | None = None
+
+
+def _scratch_dir() -> str:
+    """A fresh directory under the scratch parent (made on first use)."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="fps_registry_")
+        atexit.register(remove_scratch)
+    return tempfile.mkdtemp(dir=_scratch_root)
+
+
+def remove_scratch() -> None:
+    """Remove every encoded copy (the exit hook)."""
+    global _scratch_root
+    if _scratch_root is not None:
+        shutil.rmtree(_scratch_root, ignore_errors=True)
+        _scratch_root = None
+
+
+def _encoded(spark, df, **kw) -> str:
+    """Encode ``df`` with ``encode_dataset(**kw)`` into a fresh scratch
+    directory; returns the directory."""
+    from fastparquet_spark.engine import encode_dataset
+
+    out = _scratch_dir()
+    encode_dataset(spark, df, out, resume=False, **kw).collect()
+    return out
+
 
 # ---------------------------------------------------------------- helpers ---
 _WORDS_SQL = ("string_split_regex(trim(regexp_replace(lower({col}), "
@@ -487,13 +522,9 @@ def engine_roundtrip_hashes(spark, sf_dir):
     the encoded files back with Spark's scan, emit per-row md5(text).
     The oracle computes the same hashes from the ORIGINAL table — any
     bit flip anywhere in the engine fails the value-hash compare."""
-    from fastparquet_spark.engine import encode_dataset
-
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_rt_")
-    encode_dataset(spark, docs, out, compression="ZSTD",
-                   partition_cols=("lang",), num_partitions=4,
-                   sort_within=("doc_id",), resume=False).collect()
+    out = _encoded(spark, docs, compression="ZSTD", partition_cols=("lang",),
+                   num_partitions=4, sort_within=("doc_id",))
     back = spark.read.parquet(f"{out}/part-*.parquet")
     from pyspark.sql import functions as F
     return back.select("doc_id", F.md5(F.col("text").cast("binary")).alias("h"))
@@ -506,13 +537,10 @@ def engine_roundtrip_agg(spark, sf_dir):
     """Aggregate over engine-encoded files must equal the source."""
     from pyspark.sql import functions as F
 
-    from fastparquet_spark.engine import encode_dataset
-
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_ra_")
-    encode_dataset(spark, docs, out, compression="SNAPPY",
+    out = _encoded(spark, docs, compression="SNAPPY",
                    partition_cols=("source",), num_partitions=4,
-                   sort_within=("doc_id",), resume=False).collect()
+                   sort_within=("doc_id",))
     back = spark.read.parquet(f"{out}/part-*.parquet")
     return (back.groupBy("lang")
             .agg(F.count("*").alias("n_docs"),
@@ -537,14 +565,9 @@ def engine_hive_prune(spark, sf_dir):
     the layout and the values must be exactly right."""
     from pyspark.sql import functions as F
 
-    from fastparquet_spark.engine import encode_dataset
-
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_hv_")
-    encode_dataset(spark, docs, out, compression="ZSTD",
-                   partition_cols=("lang",), layout="hive",
-                   num_partitions=4, sort_within=("doc_id",),
-                   resume=False).collect()
+    out = _encoded(spark, docs, compression="ZSTD", partition_cols=("lang",),
+                   layout="hive", num_partitions=4, sort_within=("doc_id",))
     back = spark.read.parquet(out)
     return (back.filter(F.col("lang").isin("en", "zh"))
             .groupBy("lang", "source")
@@ -576,15 +599,12 @@ def engine_decimal38_roundtrip(spark, sf_dir):
     to the last of the 10 fractional digits."""
     from pyspark.sql import functions as F
 
-    from fastparquet_spark.engine import encode_dataset
-
     li = relational.load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber",
         F.col("l_extendedprice").cast("decimal(38,10)").alias("dec"))
-    out = tempfile.mkdtemp(prefix="fps_d38_")
-    encode_dataset(spark, li, out, compression="ZSTD",
+    out = _encoded(spark, li, compression="ZSTD",
                    partition_cols=("l_linenumber",), num_partitions=4,
-                   sort_within=("l_orderkey",), resume=False).collect()
+                   sort_within=("l_orderkey",))
     back = spark.read.parquet(f"{out}/part-*.parquet")
     # Decimal math stays exact; the SURFACE is canonicalized to STRING so
     # the harness hash is representation-independent (Spark's
@@ -621,13 +641,9 @@ def engine_embeddings_roundtrip(spark, sf_dir):
     the level generation and reassembly bit-exact."""
     from pyspark.sql import functions as F
 
-    from fastparquet_spark.engine import encode_dataset
-
     emb = relational.load(spark, sf_dir, "embeddings")
-    out = tempfile.mkdtemp(prefix="fps_el_")
-    encode_dataset(spark, emb, out, compression="ZSTD",
-                   num_partitions=4, sort_within=("vec_id",),
-                   resume=False).collect()
+    out = _encoded(spark, emb, compression="ZSTD", num_partitions=4,
+                   sort_within=("vec_id",))
     back = spark.read.parquet(f"{out}/part-*.parquet")
     pos = back.select("vec_id", "label",
                       F.posexplode("embedding").alias("pos", "v"))
@@ -656,17 +672,15 @@ def engine_snapshot_travel(spark, sf_dir):
     file set (no leakage either way)."""
     from pyspark.sql import functions as F
 
-    from fastparquet_spark.engine import append_dataset, encode_dataset
+    from fastparquet_spark.engine import append_dataset
     from fastparquet_spark.format.dataset import (
         read_snapshot, write_metadata_sidecar,
     )
 
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_tt_")
-    encode_dataset(spark, docs.filter(F.col("doc_id") < 300), out,
+    out = _encoded(spark, docs.filter(F.col("doc_id") < 300),
                    compression="ZSTD", partition_cols=("lang",),
-                   num_partitions=4, sort_within=("doc_id",),
-                   resume=False).collect()
+                   num_partitions=4, sort_within=("doc_id",))
     write_metadata_sidecar(out)
     append_dataset(spark, docs.filter(F.col("doc_id") >= 300), out,
                    compression="ZSTD", partition_cols=("lang",),
@@ -714,7 +728,7 @@ def engine_manifest(spark, sf_dir):
     from fastparquet_spark.engine import encode_dataset
 
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_mf_")
+    out = _scratch_dir()
     man = encode_dataset(spark, docs, out, compression="ZSTD",
                          partition_cols=("lang",), layout="hive",
                          num_partitions=4, resume=False)
@@ -743,14 +757,12 @@ def engine_bloom_prune(spark, sf_dir):
     recomputes the rows from the raw table, so bloom pruning must lose
     nothing (false NEGATIVES are impossible by construction; the gate
     proves it end-to-end)."""
-    from fastparquet_spark.engine import encode_dataset, paged_read
+    from fastparquet_spark.engine import paged_read
 
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_bl_")
-    encode_dataset(spark, docs, out, compression="ZSTD",
-                   partition_cols=("lang",), num_partitions=4,
-                   sort_within=(), resume=False,
-                   bloom_filters={"doc_id": 0.01}).collect()
+    out = _encoded(spark, docs, compression="ZSTD", partition_cols=("lang",),
+                   num_partitions=4, sort_within=(),
+                   bloom_filters={"doc_id": 0.01})
     ids = [7, 123, 404]
     return paged_read(spark, out, [("doc_id", "in", ids)],
                       columns=["doc_id", "lang", "n_chars"])
@@ -771,15 +783,11 @@ def engine_page_read(spark, sf_dir):
     recomputes the rows from the raw table, so the per-page stats, the
     OffsetIndex spans and the residual Arrow filter must all be exactly
     right."""
-    from fastparquet_spark.engine import encode_dataset
     from fastparquet_spark.format.dataset import read_pages
 
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_pr_")
-    encode_dataset(spark, docs, out, compression="ZSTD",
-                   partition_cols=(), num_partitions=2,
-                   sort_within=("doc_id",), resume=False,
-                   page_rows=100).collect()
+    out = _encoded(spark, docs, compression="ZSTD", partition_cols=(),
+                   num_partitions=2, sort_within=("doc_id",), page_rows=100)
     import glob as _glob
 
     import pyarrow as pa_c
@@ -812,14 +820,12 @@ def engine_paged_scan(spark, sf_dir):
     from the raw table."""
     from pyspark.sql import functions as F
 
-    from fastparquet_spark.engine import encode_dataset, paged_read
+    from fastparquet_spark.engine import paged_read
 
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_ps_")
-    encode_dataset(spark, docs, out, compression="ZSTD",
-                   partition_cols=(), num_partitions=4,
-                   sort_within=("doc_id",), resume=False,
-                   page_rows=100, bloom_filters={"doc_id": 0.01}).collect()
+    out = _encoded(spark, docs, compression="ZSTD", partition_cols=(),
+                   num_partitions=4, sort_within=("doc_id",), page_rows=100,
+                   bloom_filters={"doc_id": 0.01})
     df = paged_read(spark, out, [("doc_id", ">=", 300), ("doc_id", "<", 420)],
                     columns=["doc_id", "lang", "n_chars"])
     return df.withColumn("n_chars", F.col("n_chars").cast("bigint"))
@@ -842,15 +848,12 @@ def engine_fps_scan(spark, sf_dir):
     from the raw table (round-5 judge's top-next item)."""
     from pyspark.sql import functions as F
 
-    from fastparquet_spark.engine import encode_dataset
     from fastparquet_spark.sources import FpsDataSource
 
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_ds_")
-    encode_dataset(spark, docs, out, compression="ZSTD",
-                   partition_cols=(), num_partitions=4,
-                   sort_within=("doc_id",), resume=False,
-                   page_rows=100, bloom_filters={"doc_id": 0.01}).collect()
+    out = _encoded(spark, docs, compression="ZSTD", partition_cols=(),
+                   num_partitions=4, sort_within=("doc_id",), page_rows=100,
+                   bloom_filters={"doc_id": 0.01})
     spark.dataSource.register(FpsDataSource)  # idempotent (replaces)
     # Spark REFUSES a reader that implements pushFilters when this conf
     # is off (DATA_SOURCE_PUSHDOWN_DISABLED) — it is runtime-settable
@@ -919,16 +922,12 @@ def engine_dataset_stats(spark, sf_dir):
     `statistics` operator, fastparquet/api.py:822-902).  The oracle
     computes the same numbers from the raw data — so our footer stats
     must be exactly right."""
-    import pyarrow as pa
-
-    from fastparquet_spark.engine import encode_dataset
     from fastparquet_spark.format.dataset import dataset_statistics
 
     docs = relational.load(spark, sf_dir, "documents")
-    out = tempfile.mkdtemp(prefix="fps_ds_")
-    encode_dataset(spark, docs, out, compression="SNAPPY",
+    out = _encoded(spark, docs, compression="SNAPPY",
                    partition_cols=("lang",), num_partitions=4,
-                   sort_within=("doc_id",), resume=False).collect()
+                   sort_within=("doc_id",))
     st = dataset_statistics(out)
     row = [(int(st["doc_id"]["min"]), int(st["doc_id"]["max"]),
             int(st["doc_id"]["num_values"]), int(st["doc_id"]["null_count"]),

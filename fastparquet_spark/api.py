@@ -24,7 +24,6 @@ here routes through the same writer/reader kernels.
 from __future__ import annotations
 
 import functools
-import io
 import os
 from typing import Any
 
@@ -957,10 +956,22 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
     ``append=True`` (hive only) adds new part files and re-merges the
     sidecars.  Extra ``ParquetWriter`` options (``page_rows``,
     ``bloom_filters``, ``encodings``, ``compat``, ``sorting_columns``)
-    pass through ``**kwargs``."""
+    pass through ``**kwargs``.
+
+    ``filename`` is a path or a URI.  Files are staged and published
+    together, then the sidecars rewritten (engine/commit.py): a failed
+    write leaves the target's files and sidecars as they were."""
+    import uuid
+
     import pandas as pd
 
-    from fastparquet_spark.format.dataset import write_metadata_sidecar
+    from fastparquet_spark.engine.commit import (
+        discard, drop_sidecars, publish_all, stage_name,
+    )
+    from fastparquet_spark.format.dataset import (
+        check_append, data_files, write_metadata_sidecar,
+    )
+    from fastparquet_spark.io import relative_to
 
     if fixed_text:
         # the reference's fixed_text pads/truncates through numpy 'S'
@@ -1061,13 +1072,18 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
         offsets = None
         rg_rows = min(int(row_group_offsets), max(table.num_rows, 1))
 
+    fs = get_fs(filename)
+    token = uuid.uuid4().hex[:8]
+    pending: list[tuple[str, str]] = []  # (staged, final) per file
+
     def _emit(path: str, tbl: pa.Table):
         if offsets is not None and tbl is table:
             starts = offsets
         else:
             starts = range(0, tbl.num_rows, rg_rows or max(tbl.num_rows, 1))
         bounds = [*starts, tbl.num_rows]
-        with open(path, "wb") as f:
+        pending.append((stage_name(path, token), path))
+        with fs.open_write(pending[-1][0]) as f:
             w = ParquetWriter(f, tbl.schema, compression=comp, stats=stats,
                               times=times, custom_metadata=custom_metadata,
                               **kwargs)
@@ -1081,73 +1097,52 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
             raise ValueError(
                 "append=True needs file_scheme='hive' (the reference "
                 "raises for simple files too, writer.py:976-979)")
-        _emit(filename, table)
-        return
-
-    if file_scheme not in ("hive", "drill"):
+    elif file_scheme not in ("hive", "drill"):
         raise ValueError(f"unknown file_scheme {file_scheme!r}")
     pcols = list(partition_on)
-    fs = get_fs(filename)
-    fs.makedirs(filename)
+    base = None
     start = 0
+    if file_scheme != "simple":
+        fs.makedirs(filename)
     if append:
         import re
 
-        existing = [p for p in fs.walk_files(filename)
-                    if p.endswith(".parquet")
-                    and not os.path.basename(p).startswith((".", "_"))]
-        # next index = max existing part number + 1, NOT len(existing):
-        # naming gaps (deleted part.0, interrupted prior append) must
-        # not make a new part.N silently overwrite a live file
+        # next index = max existing part number + 1, NOT the file
+        # count: naming gaps (deleted part.0, interrupted prior append)
+        # must not make a new part.N silently overwrite a live file
+        existing = data_files(filename, fs)
         nums = [int(m.group(1)) for p in existing
                 for m in [re.fullmatch(r"part\.(\d+)\.parquet",
                                        os.path.basename(p))] if m]
         start = (max(nums) + 1 if nums else len(existing))
-        # the schema is judged before any part file is written: a
-        # refused append leaves the dataset exactly as it was
-        from fastparquet_spark.format.dataset import (
-            read_sidecar, schema_signature,
-        )
-
-        base = read_sidecar(filename, fs=fs)
-        old = base if base is not None or not existing else \
-            read_footer_tail(fetch_footers(existing[:1], fs)[0])
-        if old is not None:
-            probe = ParquetWriter(io.BytesIO(), table.drop_columns(
-                pcols).schema, times=times, **kwargs)
-            old_sig = schema_signature(old)
-            new_sig = schema_signature({"schema": probe.schema_elems})
-            if new_sig != old_sig:
-                raise ValueError(f"append schema mismatch: existing "
-                                 f"{old_sig} vs new {new_sig}")
-    n_written = start
-    written_rels: list[str] = []
-    if pcols:
-        for key, part in _split_by_key(table, pcols):
-            rel = _partition_dir(pcols, key, file_scheme)
-            fs.makedirs(f"{filename}/{rel}")
-            _emit(f"{filename}/{rel}/part.{n_written}.parquet", part)
-            written_rels.append(f"{rel}/part.{n_written}.parquet")
-            n_written += 1
-    else:
-        _emit(f"{filename}/part.{n_written}.parquet", table)
-        written_rels.append(f"part.{n_written}.parquet")
-    if append:
-        # incremental: base sidecar (less the entries whose part file
-        # is gone) + the files THIS call wrote.  A full-directory
-        # re-merge here would resurrect stale parts a prior fresh write
-        # deliberately excluded from its sidecar (overwritten rows
-        # silently reappearing on read); with no sidecar there was no
-        # prior exclusion, so a sweep is correct.
-        if base is not None:
-            write_metadata_sidecar(filename, fs=fs, base=base,
-                                   add_files=written_rels)
+        base = check_append(filename, table.drop_columns(pcols).schema,
+                            fs=fs, times=times, **kwargs)
+    try:
+        if file_scheme == "simple":
+            _emit(filename, table)
+        elif pcols:
+            for n, (key, part) in enumerate(_split_by_key(table, pcols),
+                                            start):
+                rel = _partition_dir(pcols, key, file_scheme)
+                fs.makedirs(f"{filename}/{rel}")
+                _emit(f"{filename}/{rel}/part.{n}.parquet", part)
         else:
-            write_metadata_sidecar(filename, fs=fs)
-    else:
-        # explicit file list: a fresh (non-append) write must not sweep
-        # pre-existing parquet files under the target into its sidecar
-        write_metadata_sidecar(filename, fs=fs, files=written_rels)
+            _emit(f"{filename}/part.{start}.parquet", table)
+        if file_scheme != "simple":
+            drop_sidecars(fs, filename)
+        publish_all(fs, pending)
+    except BaseException:
+        discard(fs, [st for st, _f in pending])
+        raise
+    if file_scheme == "simple":
+        return
+    # the files written, on the base sidecar if any: a full re-merge
+    # would resurrect stale parts a prior fresh write left out of its
+    # sidecar; an append with no base sidecar merges every part file
+    written = [relative_to(f, filename) for _s, f in pending]
+    write_metadata_sidecar(
+        filename, fs=fs, base=base,
+        files=None if append and base is None else written)
 
 
 def merge(file_list, verify_schema: bool = True) -> ParquetFile:
@@ -1155,12 +1150,11 @@ def merge(file_list, verify_schema: bool = True) -> ParquetFile:
     reference's ``fastparquet.writer.merge`` (writer.py:1156-1193):
     writes a merged ``_metadata`` (+ ``_common_metadata``) sidecar in
     the files' common directory and returns the opened ParquetFile.
-    Files must share one directory level; schemas must match
-    (``verify_schema``)."""
-    from fastparquet_spark.format.dataset import (
-        schema_signature, write_metadata_sidecar,
-    )
-    from fastparquet_spark.format.reader import read_footer_tail
+    Files must share one directory level and one schema: files whose
+    schemas differ raise ``ValueError`` whatever ``verify_schema``
+    says, since one sidecar holds one schema (the parameter stays for
+    drop-in compatibility).  Each footer is fetched once."""
+    from fastparquet_spark.format.dataset import write_metadata_sidecar
 
     paths = [f.fn if isinstance(f, ParquetFile) else f for f in file_list]
     if not paths:
@@ -1176,12 +1170,6 @@ def merge(file_list, verify_schema: bool = True) -> ParquetFile:
             "merge: files must share one directory, or sit at most one "
             f"level below {root}")
     fs = get_fs(paths[0])
-    if verify_schema:
-        tails = fetch_footers(list(paths), fs)
-        sigs = {tuple(schema_signature(read_footer_tail(t)))
-                for t in tails}
-        if len(sigs) > 1:
-            raise ValueError("merge: schemas differ across input files")
     # the sidecar covers EXACTLY file_list — parquet files under root
     # that were not passed in must not be swept into _metadata
     write_metadata_sidecar(root, fs=fs,

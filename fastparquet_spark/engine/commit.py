@@ -1,11 +1,12 @@
 """The staged-commit protocol: the one module that knows how a writer's
 output becomes visible.  Every writer follows it — the split and
 shuffle encode jobs (``TaskCommit`` on the executors, ``begin_job`` on
-the driver) and both DataSource writers (``publish_job`` /
-``abort_job`` on the driver).  The files themselves come from one
-writer, engine/write.py: ``write_partition`` (or, for the split jobs'
-one file per task, a format plug-in directly) writes each file to the
-path ``TaskCommit.stage`` or the DataSource's ``stage_name`` gives it:
+the driver), both DataSource writers (``publish_job`` / ``abort_job``
+on the driver) and the facade's one-process ``api.write``
+(``stage_name`` per file, then ``publish_all``).  The engine's files
+come from one writer, engine/write.py: ``write_partition`` (or, for
+the split jobs' one file per task, a format plug-in directly) writes
+each file to the path ``TaskCommit.stage`` or ``stage_name`` gives it:
 
 1. **stage** — a task attempt writes each output under
    ``.{final}.stage-{attempt}``: dot-hidden, so Spark/Hive listers
@@ -30,6 +31,10 @@ path ``TaskCommit.stage`` or the DataSource's ``stage_name`` gives it:
    writes, and a retry overwrites it.  A failed attempt does not take
    its finals back: a twin may have swept our stage or matched our
    final's size, counting that final as its own durable output.
+
+A driver-side publish (``publish_all``) has no twins, so a failed
+rename takes back the finals it renamed — for the facade's fresh hive
+write, which reuses ``part.N`` names, the files those replaced too.
 
 The driver, before any task runs, drops the ``_metadata`` /
 ``_common_metadata`` sidecars (they cannot see the files a job adds,
@@ -112,6 +117,17 @@ def publish(fs, pending, published: list | None = None) -> None:
                 published.append(final)
 
 
+def publish_all(fs, pending) -> None:
+    """Publish every pair of ``pending`` or, taking back the finals
+    already renamed, none.  The stages stay for the caller to remove."""
+    published: list[str] = []
+    try:
+        publish(fs, pending, published)
+    except BaseException:
+        discard(fs, published)
+        raise
+
+
 def sweep(fs, finals, family: str) -> None:
     """Remove ``family``'s entries other than ``finals`` from every
     directory the finals live in."""
@@ -168,7 +184,8 @@ class TaskCommit:
         discard(self.fs, [s for s, _f in self.pending] + [self.manifest_tmp])
 
 
-def _drop_sidecars(fs, out_dir: str) -> None:
+def drop_sidecars(fs, out_dir: str) -> None:
+    """Remove ``out_dir``'s ``_metadata`` / ``_common_metadata``."""
     for name in ("_metadata", "_common_metadata"):
         sidecar = _u_join(out_dir, name)
         if fs.exists(sidecar):
@@ -185,7 +202,7 @@ def begin_job(out_dir: str, name: str, plan: dict, resume: bool) -> None:
     fs = get_fs(out_dir)
     fs.makedirs(out_dir)
     fs.makedirs(_u_join(out_dir, MANIFEST_DIR))
-    _drop_sidecars(fs, out_dir)
+    drop_sidecars(fs, out_dir)
     marker = _u_join(out_dir, f"{MANIFEST_DIR}/_plan_{name}.json")
     if resume and fs.exists(marker):
         with fs.open_read(marker) as fh:
@@ -218,13 +235,8 @@ def publish_job(fs, root: str, pending, family: str, suffix: str,
     old = [p for p in fs.walk_files(root)
            if p.endswith(suffix) and not p.rsplit("/", 1)[1].startswith(".")
            ] if overwrite else []
-    _drop_sidecars(fs, root)
-    published: list[str] = []
-    try:
-        publish(fs, pending, published)
-    except BaseException:
-        discard(fs, published)
-        raise
+    drop_sidecars(fs, root)
+    publish_all(fs, pending)
     for p in old:
         fs.remove(p)
     finals = {f for _s, f in pending}

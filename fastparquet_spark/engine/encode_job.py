@@ -211,51 +211,40 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
     """Append ``df`` to an EXISTING dataset (the reference's
     ``write(..., append=True)``, fastparquet/writer.py:773-807):
 
-    - schema compatibility is checked against the existing footers
-      (same leaf names/physical types/converted types, in the same
-      order) before any file is written;
+    - ``format/dataset.check_append`` judges the schema against the
+      existing sidecar or first footer (same leaf names/physical
+      types/converted types, in the same order) before any task runs;
     - new files get a fresh generation prefix ``part-g{N}``, so nothing
       collides and resume stays per-generation idempotent;
-    - on success the ``_metadata`` sidecar is re-merged, so footer-only
-      readers see old+new in one fetch.
+    - on success the ``_metadata`` sidecar is re-merged (the base
+      sidecar plus the new generation's files), so footer-only readers
+      see old+new in one fetch.
 
     EAGER (runs the job) — append is a commit, not a plan.  Returns the
     collected manifest rows."""
     import pyarrow as pa_s
-
-    from fastparquet_spark.format.dataset import (
-        dataset_metadata, read_sidecar, schema_signature,
-        write_metadata_sidecar,
-    )
-    from fastparquet_spark.format.writer import ParquetWriter
-
-    # hold the current sidecar in memory: encode_dataset invalidates it
-    # on disk, and the post-append re-merge then only has to fetch the
-    # NEW generation's footers (O(new files), not O(dataset))
-    old_sidecar = read_sidecar(out_dir)
-    existing = dataset_metadata(out_dir)
-    if not existing:
-        raise ValueError(f"append target {out_dir} has no existing dataset")
-    # the schema our writer WOULD produce for df, minus hive partition cols
-    layout = kwargs.get("layout", "flat")
-    pcols = [c for c in kwargs.get("partition_cols", ("repo", "lang"))
-             if c in df.columns]
-    import io as _io
-
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    from fastparquet_spark.format.dataset import (
+        check_append, data_files, write_metadata_sidecar,
+    )
+    from fastparquet_spark.io import get_fs
+
+    fs = get_fs(out_dir)
+    existing = data_files(out_dir, fs)
+    if not existing:
+        raise ValueError(f"append target {out_dir} has no existing dataset")
+    # the schema our writer WOULD produce for df, minus hive partition
+    # cols, judged before any task runs.  The current sidecar is held
+    # in memory: encode_dataset invalidates it on disk, and the
+    # post-append re-merge then only has to fetch the NEW generation's
+    # footers (O(new files), not O(dataset))
     arrow_schema = to_arrow_schema(df.schema)
-    if layout == "hive" and pcols:
+    if kwargs.get("layout", "flat") == "hive":
+        pcols = kwargs.get("partition_cols", ("repo", "lang"))
         arrow_schema = pa_s.schema(
             [f for f in arrow_schema if f.name not in pcols])
-    probe = ParquetWriter(_io.BytesIO(), arrow_schema)
-    new_sig = schema_signature({"schema": probe.schema_elems})
-    old_sig = schema_signature(existing[0]["fmd"])
-    # the sidecar merge compares the same ordered signature, so this
-    # check refuses every append the merge would, before any task runs
-    if new_sig != old_sig:
-        raise ValueError(
-            f"append schema mismatch: existing {old_sig} vs new {new_sig}")
+    old_sidecar = check_append(out_dir, arrow_schema, fs=fs)
     # next generation: one past the highest existing g-prefix — UNLESS
     # the highest generation came from an INTERRUPTED append, in which
     # case re-running must RESUME it (same prefix; committed partitions
@@ -270,9 +259,6 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
     # and decrementing onto the earlier COMPLETED generation would make
     # every partition skip and silently drop the new rows — r5 ADVICE
     # #1.)
-    from fastparquet_spark.io import get_fs
-
-    fs = get_fs(out_dir)
     if old_sidecar is not None:
         # a valid sidecar proves the last append COMPLETED: any marker
         # still on disk is stale (removal raced/failed) and must not
@@ -283,8 +269,8 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
             except OSError:
                 pass
     gens = [0]
-    for m in existing:
-        base = os.path.basename(m["file"])
+    for p in existing:
+        base = os.path.basename(p)
         if base.startswith("part-g"):
             try:
                 gens.append(int(base.split("-")[1][1:]) + 1)
@@ -309,11 +295,10 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
     have = {rg["columns"][0].get("file_path")
             for rg in old_sidecar["row_groups"]} if old_sidecar else set()
     new_files = sorted({r["file"] for r in rows if r["file"]} - have)
-    if old_sidecar is not None and new_files:
-        write_metadata_sidecar(out_dir, base=old_sidecar,
-                               add_files=new_files)
-    else:
-        write_metadata_sidecar(out_dir)
+    # with no base sidecar there was no prior exclusion: every part
+    # file is merged
+    write_metadata_sidecar(out_dir, fs=fs, base=old_sidecar,
+                           files=None if old_sidecar is None else new_files)
     try:  # completion: the generation is now published in the sidecar
         fs.remove(marker)
     except OSError:

@@ -8,13 +8,13 @@ Re-expresses the reference's metadata "query" surface
                             util.py:115-213): footers only, no data reads;
 - ``dataset_statistics``  — per-column min/max/null_count across all row
                             groups (fastparquet/api.py:822-902);
-- ``sorted_columns``      — columns whose row-group min/max chains are
-                            globally non-overlapping in file order
-                            (fastparquet/api.py:905-945);
 - ``filter_row_groups``   — DNF stats + bloom pruning of row groups
                             (fastparquet/api.py:948-999);
 - ``filter_pages`` / ``read_pages`` — ColumnIndex page pruning and the
                             page-skipping read below it.
+- ``check_append`` / ``write_metadata_sidecar`` — the one append schema
+                            check and the one ``_metadata`` merge of every
+                            parquet appender (writer.py:773-807).
 
 The exact Spark-side read of a DNF filter over such a directory is
 ``engine.scan_job.paged_read``, which plans through these tiers.
@@ -499,10 +499,8 @@ def _dataset(out_dir: str, fs=None, use_sidecar: bool = True,
         return base, _metas([relative_to(p, base) for p in files],
                             [fmt.footer(t) for t in tails])
     root = out_dir.rstrip("/")
-    sidecar = _join(out_dir, "_metadata")
-    if use_sidecar and fmt.sidecar and fs.exists(sidecar):
-        with fs.open_read(sidecar) as f:
-            fmd = read_footer(f.read())
+    fmd = read_sidecar(out_dir, fs) if use_sidecar and fmt.sidecar else None
+    if fmd is not None:
         by_file: dict[str, list] = {}
         for rg in fmd["row_groups"]:
             fp = rg["columns"][0].get("file_path") or ""
@@ -523,21 +521,24 @@ def _dataset(out_dir: str, fs=None, use_sidecar: bool = True,
                          "row_groups": rgs,
                          "key_value_metadata": fmd.get("key_value_metadata")})
         return root, _metas(rels, fmds, detect_scheme(rels))
-    prefix = root + "/"
-
-    def rel_of(p: str) -> str:
-        return p[len(prefix):] if p.startswith(prefix) else os.path.basename(p)
-
-    def is_data(rel: str) -> bool:
-        segs = rel.split("/")
-        return segs[-1].endswith(fmt.suffix) and \
-            not any(s.startswith(("_", ".")) for s in segs)
-
-    files = [p for p in fs.walk_files(out_dir) if is_data(rel_of(p))]
-    rels = [rel_of(p) for p in files]
+    files = data_files(out_dir, fs, fmt.suffix)
+    rels = [relative_to(p, root) for p in files]
     tails = fetch_footers(files, fs, magic=fmt.magic)
     return root, _metas(rels, [fmt.footer(t) for t in tails],
                         detect_scheme(rels))
+
+
+def data_files(root: str, fs, suffix: str = ".parquet") -> list[str]:
+    """The data files of the dataset directory ``root``, sorted: every
+    ``suffix`` file below it with no hidden (``.``) or metadata
+    (``_``) segment in its path relative to ``root`` — so staged files,
+    manifests and sidecars are never data."""
+    from fastparquet_spark.io import relative_to
+
+    root = root.rstrip("/")
+    return [p for p in fs.walk_files(root)
+            if (rel := relative_to(p, root)).endswith(suffix)
+            and not any(s.startswith(("_", ".")) for s in rel.split("/"))]
 
 
 def load_dataset_metas(path: str, fs=None,
@@ -579,82 +580,92 @@ def read_sidecar(out_dir: str, fs=None) -> dict | None:
         return read_footer(f.read())
 
 
+def check_append(out_dir: str, schema, fs=None, **writer_opts) -> dict | None:
+    """The append check of every parquet appender (``api.write``,
+    ``append_dataset``, ``format("fps")``): the ordered
+    :func:`schema_signature` of what ``ParquetWriter(schema,
+    **writer_opts)`` writes must equal the dataset's (its sidecar, else
+    its first footer), or ``ValueError`` is raised.  The sidecar merge
+    judges the same signature.  A directory with no data file takes any
+    schema.  Returns the sidecar (or None), the append's merge base."""
+    import io
+
+    from fastparquet_spark.format.writer import ParquetWriter
+
+    fs = get_fs(out_dir, fs)
+    base = old = read_sidecar(out_dir, fs)
+    if old is None and fs.isdir(out_dir):
+        first = data_files(out_dir, fs)[:1]
+        old = read_footer_tail(fetch_footers(first, fs)[0]) if first else None
+    if old is not None:
+        probe = ParquetWriter(io.BytesIO(), schema, **writer_opts)
+        old_sig = schema_signature(old)
+        new_sig = schema_signature({"schema": probe.schema_elems})
+        if new_sig != old_sig:
+            raise ValueError(f"append schema mismatch: existing {old_sig} "
+                             f"vs new {new_sig}")
+    return base
+
+
 def write_metadata_sidecar(out_dir: str, fs=None, base: dict | None = None,
-                           add_files: list[str] | None = None,
                            files: list[str] | None = None) -> int:
     """Merge part footers into a ``_metadata`` sidecar (the reference's
     ``merge``, fastparquet/writer.py:1156-1193): one FileMetaData whose
     row groups carry ``file_path`` relative to the dataset root.
     Atomic publish via temp + rename.  Returns the row groups merged.
 
-    INCREMENTAL mode (``base`` = a previously-read sidecar FileMetaData
-    + ``add_files`` = relative paths of the NEW part files): only the
-    new files' footers are fetched and appended to ``base`` — an
-    append touches O(new files), not O(dataset), unlike the
-    reference's full re-merge.  One listing drops the ``base`` row
-    groups whose part file is gone (deleted between appends), which
-    every later read would otherwise fail on; a file on disk that
-    ``base`` left out stays out.
+    The merged row groups are those of ``base`` (a sidecar read before
+    the write) whose part file still exists, then the footers of
+    ``files`` (paths relative to ``out_dir``), in that order:
 
-    EXPLICIT mode (``files`` = relative paths): merge exactly those
-    files, in that order — the reference's ``merge(file_list)``
-    contract (writer.py:1156-1193), which must NOT sweep in other
-    parquet files that happen to live under ``out_dir``.
+    - an append passes its base sidecar and the files it wrote, so it
+      fetches O(new files) footers, not O(dataset), unlike the
+      reference's full re-merge; a ``base`` row group whose file was
+      deleted since would fail every later read, and is dropped; a
+      file on disk that ``base`` left out stays out;
+    - ``files`` alone merges exactly those files — the reference's
+      ``merge(file_list)`` contract, which must NOT sweep in other
+      parquet files under ``out_dir``;
+    - with neither, every data file under ``out_dir`` is merged.
 
-    Both sidecars carry the key-value metadata of ``base`` (or of the
-    first merged footer), so a dataset read restores the pandas dtypes
+    Every merged footer must carry the schema signature of ``base``
+    (else of the first footer), or ``ValueError`` is raised and no
+    sidecar is written.  Both sidecars carry that same footer's
+    key-value metadata, so a dataset read restores the pandas dtypes
     its part files record."""
     from fastparquet_spark.format import thrift
     from fastparquet_spark.format.metadata import MAGIC, SPECS
     from fastparquet_spark.format.writer import CREATED_BY
+    from fastparquet_spark.io import relative_to
 
     fs = get_fs(out_dir, fs)
-    if base is not None and add_files is not None:
-        from fastparquet_spark.io import relative_to
-
-        schema, kv = base["schema"], base.get("key_value_metadata")
-        sig0 = schema_signature(base)
+    if base is None and files is None:
+        metas = dataset_metadata(out_dir, fs=fs, use_sidecar=False)
+        files, fmds = [m["file"] for m in metas], [m["fmd"] for m in metas]
+    else:
+        files = list(files or ())
+        fmds = [read_footer_tail(t) for t in fetch_footers(
+            [_join(out_dir, f) for f in files], fs)]
+    rgs = []
+    if base is not None:
         live = {relative_to(p, out_dir) for p in fs.walk_files(out_dir)}
         rgs = [rg for rg in base["row_groups"]
                if rg["columns"][0].get("file_path") in live]
-        num_rows = sum(rg["num_rows"] for rg in rgs)
-        tails = fetch_footers([_join(out_dir, f) for f in add_files], fs)
-        for rel, tail in zip(add_files, tails):
-            sub = read_footer_tail(tail)
-            if schema_signature(sub) != sig0:
-                raise ValueError(
-                    f"schema mismatch appending {rel} to existing sidecar")
-            for rg in sub["row_groups"]:
-                rg2 = dict(rg)
-                rg2["columns"] = [dict(cc, file_path=rel)
-                                  for cc in rg["columns"]]
-                rgs.append(rg2)
-                num_rows += rg["num_rows"]
-    else:
-        if files is not None:
-            tails = fetch_footers([_join(out_dir, f) for f in files], fs)
-            metas = _metas(list(files), [read_footer_tail(t) for t in tails],
-                           detect_scheme(list(files)))
-        else:
-            metas = dataset_metadata(out_dir, fs=fs, use_sidecar=False)
-        if not metas:
-            raise ValueError(f"no part files under {out_dir}")
-        schema = metas[0]["fmd"]["schema"]
-        kv = metas[0]["fmd"].get("key_value_metadata")
-        sig0 = schema_signature(metas[0]["fmd"])
-        rgs, num_rows = [], 0
-        for m in metas:
-            if schema_signature(m["fmd"]) != sig0:
-                raise ValueError(
-                    f"schema mismatch across parts: {m['file']} != {metas[0]['file']}")
-            for rg in m["fmd"]["row_groups"]:
-                rg2 = dict(rg)
-                rg2["columns"] = [dict(cc, file_path=m["file"])
-                                  for cc in rg["columns"]]
-                rgs.append(rg2)
-                num_rows += rg["num_rows"]
-    head = {"version": 1, "schema": schema, "created_by": CREATED_BY,
-            "key_value_metadata": kv}
+    first = base if base is not None else fmds[0] if fmds else None
+    if first is None:
+        raise ValueError(f"no part files under {out_dir}")
+    sig0 = schema_signature(first)
+    for rel, fmd in zip(files, fmds):
+        if schema_signature(fmd) != sig0:
+            raise ValueError(
+                f"schemas differ across parts: {rel} vs "
+                f"{'the base sidecar' if base is not None else files[0]}")
+        rgs.extend(dict(rg, columns=[dict(cc, file_path=rel)
+                                     for cc in rg["columns"]])
+                   for rg in fmd["row_groups"])
+    head = {"version": 1, "schema": first["schema"],
+            "created_by": CREATED_BY,
+            "key_value_metadata": first.get("key_value_metadata")}
 
     def _emit(payload: dict, name: str):
         body = thrift.write_struct("FileMetaData", payload, SPECS)
@@ -666,7 +677,8 @@ def write_metadata_sidecar(out_dir: str, fs=None, base: dict | None = None,
             f.write(MAGIC)
         fs.replace(tmp, _join(out_dir, name))
 
-    _emit(dict(head, num_rows=num_rows, row_groups=rgs), "_metadata")
+    _emit(dict(head, num_rows=sum(rg["num_rows"] for rg in rgs),
+               row_groups=rgs), "_metadata")
     # _common_metadata: schema-only twin (no row groups) — the cheap
     # open ecosystem tools (dask/pyarrow discovery) look for; the
     # reference writes both (fastparquet/writer.py:1045-1046,1108).
@@ -768,30 +780,6 @@ def dataset_statistics(out_dir: str, fs=None) -> dict[str, dict[str, Any]]:
                 a["null_count"] += nulls
             a["num_values"] += nvals
     return agg
-
-
-def sorted_columns(out_dir: str, fs=None) -> list[str]:
-    """Columns globally sorted across row groups in file order: every
-    chunk's min >= previous chunk's max, no nulls, stats present."""
-    last: dict[str, Any] = {}
-    ok: dict[str, bool] = {}
-    for _f, _ri, cols, _n in _iter_chunks(dataset_metadata(out_dir, fs=fs)):
-        for name, (lo, hi, nulls, _nv) in cols.items():
-            if name not in ok:
-                ok[name] = True
-            try:
-                if lo is None or hi is None or (nulls or 0) > 0 \
-                        or lo > hi:
-                    ok[name] = False
-                    continue
-                if name in last and lo < last[name]:
-                    ok[name] = False
-            except TypeError:
-                # incomparable stat types -> cannot prove sortedness
-                ok[name] = False
-                continue
-            last[name] = hi
-    return sorted(n for n, good in ok.items() if good)
 
 
 def read_page_index(path: str, fs=None,

@@ -51,7 +51,8 @@ successful attempt per task with engine/commit.py's ``publish_job``
 (publish first, then remove the old files on overwrite, then sweep
 this job's stages), then re-merges the ``_metadata`` /
 ``_common_metadata`` sidecars so footer-only readers see the new files
-in one fetch.
+in one fetch.  An append is judged by ``format/dataset.check_append``
+on the driver, before any task runs.
 """
 
 from __future__ import annotations
@@ -145,6 +146,12 @@ class FpsDataSource(DataSource):
                          plan=self._plan(), fmt=self.fmt)
 
     def writer(self, schema: StructType, overwrite: bool):
+        if not overwrite:  # refused before any task runs
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            from fastparquet_spark.format.dataset import check_append
+
+            check_append(self.options["path"], to_arrow_schema(schema))
         return FpsWriter(
             self.options["path"],
             self.options.get("compression", "ZSTD"),
@@ -314,7 +321,15 @@ class FpsWriter(StagedWriter):
         return ParquetFormat(compression=self.compression)
 
     def commit(self, messages):
-        from fastparquet_spark.format.dataset import write_metadata_sidecar
+        from fastparquet_spark.format.dataset import (
+            read_sidecar, write_metadata_sidecar,
+        )
 
+        # an append merges its files on the base sidecar, as every
+        # parquet appender does; with no base every part file is merged
+        base = None if self.overwrite else read_sidecar(self.path)
         super().commit(messages)
-        write_metadata_sidecar(self.path)
+        write_metadata_sidecar(
+            self.path, base=base,
+            files=None if base is None else
+            [f for m in messages for _s, f in m.files])

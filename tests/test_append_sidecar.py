@@ -154,7 +154,7 @@ def test_incremental_sidecar_touches_only_new_files(spark, tmp_path):
     new_files = sorted(os.path.basename(p)
                        for p in glob.glob(f"{out}/part-g001-*.parquet"))
     counting = CountingFS(LocalFS())
-    write_metadata_sidecar(out, fs=counting, base=base, add_files=new_files)
+    write_metadata_sidecar(out, fs=counting, base=base, files=new_files)
     assert counting.opens == len(new_files)  # tail reads of new files only
     st = dataset_statistics(out)
     assert st["content"]["num_values"] == 4000

@@ -8,13 +8,13 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
+from fastparquet_spark.api import ParquetFile, sorted_partitioned_columns
 from fastparquet_spark.engine import paged_read
 from fastparquet_spark.format import write_file
 from fastparquet_spark.format.dataset import (
     dataset_metadata,
     dataset_statistics,
     filter_row_groups,
-    sorted_columns,
 )
 
 
@@ -44,7 +44,7 @@ def test_dataset_metadata_and_statistics(dataset_dir):
 
 
 def test_sorted_columns_detection(dataset_dir):
-    cols = sorted_columns(dataset_dir)
+    cols = sorted_partitioned_columns(ParquetFile(dataset_dir))
     assert "k" in cols      # globally ascending across files
     assert "v" not in cols  # random
 

@@ -2,7 +2,8 @@
 
 Every option doubles the configurations the tests and the benchmark
 have to cover, so each parameter here is one that a contract uses (the
-registry, ``bench.py``, perfbench or ``scripts/``).  Adding one fails
+registry, ``bench.py``, perfbench or ``scripts/``; the facade's write
+surface mirrors the reference's ``write`` and ``merge``).  Adding one fails
 this test until the pin moves with it, as the job-count pins in
 tests/test_tasks.py catch fixed-cost creep.  Spark-free: only the
 signatures are read.
@@ -12,6 +13,7 @@ from __future__ import annotations
 
 import inspect
 
+from fastparquet_spark.api import merge, write
 from fastparquet_spark.engine.encode_job import append_dataset, encode_dataset
 from fastparquet_spark.engine.file_job import (
     encode_files, encode_files_fpsc, plan_splits,
@@ -42,6 +44,12 @@ PINS = {
     encode_stream: [
         "spark", "stream_df", "out_dir", "checkpoint_dir", "compression",
         "partition_cols", "num_partitions", "available_now", "fmt"],
+    write: [
+        "filename", "data", "row_group_offsets", "compression",
+        "file_scheme", "partition_on", "append", "times", "custom_metadata",
+        "stats", "has_nulls", "write_index", "object_encoding", "fixed_text",
+        "kwargs"],
+    merge: ["file_list", "verify_schema"],
 }
 
 

@@ -179,3 +179,19 @@ def test_lsh_clusters_production_params_vs_oracle(spark, duck):
     duck_rows = {tuple(r) for r in duck.sql(dedup_clusters_sql(64, 8))
                  .fetchall()}
     assert spark_rows == duck_rows
+
+
+def test_engine_query_copies_removed_at_exit(spark):
+    """The engine queries encode into one per-process scratch parent;
+    its exit hook removes every copy (the queries return lazy
+    DataFrames, so the files must outlive the call)."""
+    import os
+
+    from fastparquet_spark.analytics import registry
+
+    registry.QUERIES["engine_roundtrip_agg"](spark, SF_DIR).collect()
+    root = registry._scratch_root
+    assert root is not None and os.listdir(root)
+    registry.remove_scratch()
+    assert not os.path.exists(root)
+    assert registry._scratch_root is None

@@ -5,8 +5,8 @@
    value into the unscaled layout the writer hashed);
 2. common_root keeps URI schemes (os.path.commonpath collapses
    's3://b' to 's3:/b', silently rerouting reads to LocalFS);
-3. dataset_statistics / sorted_columns survive incomparable
-   cross-chunk stat types;
+3. dataset_statistics / sorted_partitioned_columns survive
+   incomparable cross-chunk stat types;
 4. paged_read with empty/None filters is a FULL scan, not an
    empty DNF;
 5. read_pages / filter_pages accept None/[] filters and flat-read
@@ -23,12 +23,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from fastparquet_spark.api import ParquetFile, sorted_partitioned_columns
 from fastparquet_spark.format.dataset import (
     dataset_statistics,
     filter_pages,
     filter_row_groups,
     read_pages,
-    sorted_columns,
 )
 from fastparquet_spark.format.writer import write_file
 from fastparquet_spark.io import common_root, relative_to
@@ -92,7 +92,8 @@ def test_mixed_type_stats_do_not_crash(tmp_path):
                                        pa.binary())}))
     st = dataset_statistics(str(d))  # must not raise TypeError
     assert st["b"]["num_values"] == 4
-    assert sorted_columns(str(d)) == []  # unsortable, not a crash
+    # unsortable, not a crash
+    assert sorted_partitioned_columns(ParquetFile(str(d))) == {}
 
 
 def test_paged_read_empty_filters_full_scan(spark, tmp_path):

@@ -1102,7 +1102,21 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
     pcols = list(partition_on)
     base = None
     start = 0
+    created: list[str] = []  # directories this call made, parents first
+
+    def _key_dir(rel: str) -> str:
+        """Make ``filename/rel``, noting the directories it adds."""
+        path = filename
+        for seg in rel.split("/"):
+            path = f"{path}/{seg}"
+            if not fs.exists(path):
+                created.append(path)
+        fs.makedirs(path)
+        return path
+
     if file_scheme != "simple":
+        if not fs.exists(filename):
+            created.append(filename)
         fs.makedirs(filename)
     if append:
         import re
@@ -1123,9 +1137,8 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
         elif pcols:
             for n, (key, part) in enumerate(_split_by_key(table, pcols),
                                             start):
-                rel = _partition_dir(pcols, key, file_scheme)
-                fs.makedirs(f"{filename}/{rel}")
-                _emit(f"{filename}/{rel}/part.{n}.parquet", part)
+                d = _key_dir(_partition_dir(pcols, key, file_scheme))
+                _emit(f"{d}/part.{n}.parquet", part)
         else:
             _emit(f"{filename}/part.{start}.parquet", table)
         if file_scheme != "simple":
@@ -1133,6 +1146,11 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
         publish_all(fs, pending)
     except BaseException:
         discard(fs, [st for st, _f in pending])
+        for d in reversed(created):  # those still empty
+            try:
+                fs.rmdir(d)
+            except OSError:
+                pass
         raise
     if file_scheme == "simple":
         return

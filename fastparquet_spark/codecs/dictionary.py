@@ -44,9 +44,11 @@ def dict_data_page(codes: np.ndarray, num_labels: int) -> bytes:
 
 
 def dict_decode_page(buf, count: int, offset: int = 0, length: int | None = None) -> np.ndarray:
-    """Decode a PLAIN_DICTIONARY data page body back to int32 codes."""
+    """Decode a PLAIN_/RLE_DICTIONARY data page body (from ``offset``,
+    ``length`` bytes after the width byte, else to the end) back to
+    int64 codes, the dtype a dictionary is indexed with."""
     width = buf[offset]
     if length is None:
         length = len(buf) - offset - 1
     codes, _ = decode_hybrid(buf, width, count, offset=offset + 1, length=length)
-    return codes.astype(np.int32)
+    return codes.view(np.int64)

@@ -5,7 +5,7 @@ the driver), both DataSource writers (``publish_job`` / ``abort_job``
 on the driver) and the facade's one-process ``api.write``
 (``stage_name`` per file, then ``publish_all``).  The engine's files
 come from one writer, engine/write.py: ``write_partition`` (or, for
-the split jobs' one file per task, a format plug-in directly) writes
+the split jobs' one file per task, a format object directly) writes
 each file to the path ``TaskCommit.stage`` or ``stage_name`` gives it:
 
 1. **stage** — a task attempt writes each output under
@@ -227,14 +227,13 @@ def publish_job(fs, root: str, pending, family: str, suffix: str,
     ``(staged, final)`` pairs of the one successful attempt per task.
     Publish first — a failed rename takes back the finals already
     renamed, leaving the old files alone — then (overwrite) remove the
-    ``suffix`` files that were there before, then sweep the job
+    data files that were there before (``dataset.data_files`` of
+    ``suffix``, the listing every reader uses), then sweep the job
     ``family``'s leftovers.  A failure at any step leaves the old rows,
     the new rows, or both — never neither."""
-    # a walk, not a listing of root: hive key=value data lives in
-    # subdirectories
-    old = [p for p in fs.walk_files(root)
-           if p.endswith(suffix) and not p.rsplit("/", 1)[1].startswith(".")
-           ] if overwrite else []
+    from fastparquet_spark.format.dataset import data_files
+
+    old = data_files(root, fs, suffix) if overwrite else []
     drop_sidecars(fs, root)
     publish_all(fs, pending)
     for p in old:

@@ -11,8 +11,8 @@ Spark translation of the reference's ``write()`` pipeline
 - each executor task streams its Arrow batches inside ``mapInArrow``
   (no per-row Python) through engine/write.py's ``write_partition``
   into deterministic ``part-{pid:05d}.parquet`` files, one per task or
-  per hive key (fpsc_job runs the same task body with the fpsc
-  plug-in).  The reference writes uuid+time names
+  per hive key (fpsc_job runs the same task body with the FPSC
+  format object).  The reference writes uuid+time names
   (fastparquet/writer.py:1002) — we must not, or resume breaks;
 - each task also writes a JSON lineage manifest (input rows, bytes
   in/out, per-column codec chosen, encode seconds) to
@@ -34,7 +34,6 @@ Iceberg-shaped.
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Iterator
 
@@ -43,8 +42,9 @@ import pyarrow as pa
 # MANIFEST_DIR is re-exported: scripts and tests import it from here
 from fastparquet_spark.engine.commit import MANIFEST_DIR, _u_join, begin_job  # noqa: F401
 from fastparquet_spark.engine.write import (
-    ParquetFormat, _arrow_manifest_batch, _manifest_struct, write_partition,
+    _arrow_manifest_batch, _manifest_struct, write_partition,
 )
+from fastparquet_spark.format.dataset import ParquetFormat
 
 # payload-ish columns are excluded from the salt hash: hashing the full
 # content column would touch every byte of a 100 TB table just to pick a
@@ -226,7 +226,7 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from fastparquet_spark.format.dataset import (
-        check_append, data_files, write_metadata_sidecar,
+        _file_generation, check_append, data_files, write_metadata_sidecar,
     )
     from fastparquet_spark.io import get_fs
 
@@ -268,17 +268,7 @@ def append_dataset(spark, df, out_dir: str, **kwargs):
                 fs.remove(p)
             except OSError:
                 pass
-    gens = [0]
-    for p in existing:
-        base = os.path.basename(p)
-        if base.startswith("part-g"):
-            try:
-                gens.append(int(base.split("-")[1][1:]) + 1)
-            except ValueError:
-                pass
-        else:
-            gens.append(1)
-    gen = max(gens)
+    gen = max(_file_generation(p) + 1 for p in existing)
     resume = kwargs.get("resume", True)
     if (resume and gen > 1 and old_sidecar is None
             and fs.exists(_u_join(out_dir, f"_g{gen - 1:03d}_INPROGRESS"))):

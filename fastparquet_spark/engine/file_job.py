@@ -21,7 +21,8 @@ the task closure.  No Python RDD carries the table, so each task starts
 exactly one Python worker, the one that encodes its split.
 
 Both formats run one task body (``_encode_splits``) with a format
-plug-in of engine/write.py, the plug-ins every writer uses.  Each split
+object (``format.dataset.ParquetFormat``, ``format.container.FpscFormat``),
+the objects every writer uses.  Each split
 is one commit of engine/commit.py's protocol: deterministic split ids,
 one staged part file + one JSON manifest per split, manifest rename =
 commit, resume skips committed splits.
@@ -38,8 +39,10 @@ import pyarrow as pa
 from fastparquet_spark.engine.commit import TaskCommit, _u_join, begin_job
 from fastparquet_spark.engine.tasks import map_tasks
 from fastparquet_spark.engine.write import (
-    FpscFormat, ParquetFormat, _arrow_manifest_batch, _manifest_struct,
+    _arrow_manifest_batch, _manifest_struct,
 )
+from fastparquet_spark.format.container import FpscFormat
+from fastparquet_spark.format.dataset import ParquetFormat
 
 
 def _prepare_split_job(spark, input_dir: str, out_dir: str,
@@ -70,19 +73,17 @@ def plan_splits(input_dir: str, rows_per_task: int = 2_000_000) -> list[dict]:
     CONCURRENTLY (fastparquet/util.py:146-167) — a sequential driver
     loop over 100k object-store files burns minutes of idle cluster
     before the first task launches."""
+    from fastparquet_spark.format.dataset import data_files
     from fastparquet_spark.format.reader import read_footer_tail
     from fastparquet_spark.io import fetch_footers, get_fs
 
     fs = get_fs(input_dir)
     if any(c in input_dir for c in "*?["):
-        files = [p for p in fs.glob(input_dir) if p.endswith(".parquet")]
+        files = [p for p in fs.glob(input_dir)
+                 if p.endswith(ParquetFormat.suffix)]
     else:
         # recursive walk: hive key=value inputs live in subdirectories
-        prefix = input_dir.rstrip("/") + "/"
-        files = [p for p in fs.walk_files(input_dir)
-                 if p.endswith(".parquet")
-                 and not any(seg.startswith(("_", "."))
-                             for seg in p[len(prefix):].split("/"))]
+        files = data_files(input_dir, fs)
     tails = fetch_footers(files, fs)
     splits: list[dict] = []
     cur_file, cur_rgs, cur_rows = None, [], 0
@@ -113,8 +114,8 @@ def _encode_splits(spark, splits, input_dir: str, out_dir: str,
                    resume: bool, preserve_layout: bool, fmt):
     """The split-encode task body both formats share, one split per
     task: each split reads its row groups with pyarrow, writes them as
-    one ``part-{split}{fmt.suffix}`` file of the format plug-in
-    (engine/write.py) and commits it with its manifest."""
+    one ``part-{split}{fmt.suffix}`` file of the format object ``fmt``
+    and commits it with its manifest."""
     prefix = input_dir.rstrip("/") + "/"
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

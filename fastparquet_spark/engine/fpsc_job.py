@@ -4,11 +4,11 @@ The parquet-compat jobs must stay inside the standard encoding set so
 third-party readers accept the files (SURVEY.md §7.4); this job is the
 other half of the dual-mode design: the same plan marker, task body,
 commit and resume as ``encode_dataset`` (``encode_job._encode_shuffled``
-over engine/commit.py), but the format plug-in is ``FpscFormat``, so
+over engine/commit.py), but the format object is ``FpscFormat``, so
 the per-task payload is a set of FPSC containers where string columns
 may pick FSST (best-of vs plain+block codec).  Decode is ours
 alone — ``read_fpsc`` is the scan planner's FPSC spelling
-(engine/scan_job.py, ``FpscScan``): one plan over every container's
+(engine/scan_job.py, ``FpscFormat``): one plan over every container's
 footer, then Python workers inflate their containers (vectorized FSST
 expansion, no per-row Python).
 """
@@ -17,8 +17,8 @@ from __future__ import annotations
 
 from fastparquet_spark.engine.commit import begin_job
 from fastparquet_spark.engine.encode_job import _encode_shuffled, _salted
-from fastparquet_spark.engine.scan_job import FpscScan, scan
-from fastparquet_spark.engine.write import FpscFormat
+from fastparquet_spark.engine.scan_job import scan
+from fastparquet_spark.format.container import FpscFormat
 
 
 def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
@@ -28,7 +28,7 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
                         rows_per_container: int = 1_000_000,
                         pretrain_rows: int = 2_000):
     """Encode ``df`` into FPSC containers + manifests: the shuffle task
-    body of ``encode_dataset`` with the ``FpscFormat`` plug-in, so each
+    body of ``encode_dataset`` with the ``FpscFormat`` format, so each
     task writes ``part-{pid:05d}-NNN.fpsc`` containers of
     ``rows_per_container`` rows (fewer at the byte cap) and task memory
     is bounded by the chunk, not the partition.
@@ -57,7 +57,7 @@ def encode_dataset_fpsc(spark, df, out_dir: str, *, compression: str = "ZSTD",
 
 def read_fpsc(spark, in_dir: str, columns=None):
     """Distributed decode of an FPSC dataset back to a DataFrame —
-    ``paged_read``'s body with the ``FpscScan`` plug-in
+    ``paged_read``'s body with the ``FpscFormat`` format
     (engine/scan_job.py): the driver reads every container's footer
     (tails only, never data blocks; listing goes through the fs seam
     so ``in_dir`` may be a URI), the result schema is the union of the
@@ -69,4 +69,4 @@ def read_fpsc(spark, in_dir: str, columns=None):
     ``columns``: projection — workers make RANGED reads of only the
     requested columns' byte spans (footer offsets), the same IO
     contract as a parquet column-chunk scan."""
-    return scan(spark, in_dir, None, columns, FpscScan)
+    return scan(spark, in_dir, None, columns, FpscFormat)

@@ -14,28 +14,14 @@ locally (ColumnIndex page skipping, ranged reads of surviving spans
 only) and the residual row predicate, so bytes moved are footer + index
 + dictionary pages + surviving pages, never whole files.
 
-The format plug-in.  Listing, the union schema and absent-column rule
+The format object.  Listing, the union schema and absent-column rule
 (``dataset_columns``), partition typing, per-file clauses
 (``_file_clauses``), stats pruning, the residual row filter, the
 by-name cast of every unit to the result schema and task grouping are
-the same for both formats.  A plug-in (``ParquetScan``,
-``FpscScan``; the entry point picks it, as ``ParquetFormat`` /
-``FpscFormat`` do on the write side) holds the three decisions that
-differ:
-
-- ``footer(tail)``, footer -> meta: a parquet file's footer, or an
-  FPSC container as ONE row group whose chunks carry its footer's
-  min/max/null counts (with ``suffix``, ``magic`` and ``sidecar``,
-  the listing's inputs: ``dataset.ParquetFiles``,
-  ``container.FpscFiles``);
-- ``bloom(blob, path, offset, fs)``, the bloom probe's read of a
-  filter span (a parquet bloom header + bitset, or a container's
-  bare bitset); both hash probe values with
-  ``dataset._bloom_value_bytes``;
-- ``read(path, ris, fclauses, cols, exact)``, the unit read: Tables
-  of the rows of row groups ``ris`` in the file's own column order —
-  ``read_pages`` or pyarrow ``iter_batches`` for parquet,
-  ``read_container(columns=)`` for FPSC.
+the same for both formats.  What differs — footer, bloom span and unit
+read — is the format object's (``format.dataset.ParquetFormat``,
+``format.container.FpscFormat``; their docstrings hold the contract),
+and the entry point picks it.
 
 At 100 TB this is the scan shape that matters: pruning decisions are
 O(metadata) on the driver (thread-pooled, no data reads), decode
@@ -52,77 +38,15 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from fastparquet_spark.engine.tasks import map_tasks
-from fastparquet_spark.format.container import FpscFiles, read_container
 from fastparquet_spark.format.dataset import (
-    ParquetFiles, filter_row_groups, leaf_type, load_dataset_metas,
+    ParquetFormat, filter_row_groups, leaf_type, load_dataset_metas,
     partition_type, union_leaf_elems,
 )
-from fastparquet_spark.format.predicate import (
-    _apply_row_filter_dnf, _file_clauses, dnf,
-)
-
-
-class ParquetScan(ParquetFiles):
-    """Parquet units: a unit with a filter left for its file goes
-    through the page-skipping ``read_pages``; a match-all unit streams
-    through pyarrow's C++ reader."""
-
-    @staticmethod
-    def read(path, ris, fclauses, cols, exact) -> Iterator[pa.Table]:
-        if all(fclauses):
-            from fastparquet_spark.format.dataset import read_pages
-
-            yield read_pages(path, fclauses, columns=cols, exact=exact,
-                             row_groups=set(ris))
-            return
-        # match-all DNF for this file (no filter survived partition
-        # substitution): ColumnIndex page skipping has nothing to skip,
-        # so the pure-Python page reader only adds decode tax — stream
-        # the surviving row groups through pyarrow's C++ reader instead
-        # (~2.7x on full scans, BENCH.md r6 scan probe).  Streaming
-        # OVERLAPS decode with the Arrow-IPC write back to the JVM (the
-        # consumer takes each batch before the next is decoded); peak
-        # memory is one batch, not one file.  The selective path above
-        # is byte-proof-tested.
-        import pyarrow.parquet as pq
-
-        from fastparquet_spark.io import _is_uri, get_fs
-
-        # local paths go to pyarrow as plain paths (OS-level reads);
-        # URIs (s3/gs/hdfs) open through the io layer's pyarrow.fs
-        # NativeFile — pq.ParquetFile itself does no URI inference
-        src = get_fs(path).open_read(path) if _is_uri(path) else path
-        try:
-            for b in pq.ParquetFile(src).iter_batches(
-                    batch_size=131_072, row_groups=sorted(ris),
-                    columns=cols, use_threads=False):
-                yield pa.Table.from_batches([b])
-        finally:
-            # close the remote handle even on partial consumption —
-            # long scan jobs leak connections/fds otherwise
-            if src is not path:
-                src.close()
-
-
-class FpscScan(FpscFiles):
-    """FPSC units: one container, its projected columns fetched with
-    ranged reads and inflated by the vectorized decoders (FSST
-    expansion, delta prefix-sum, validity reassembly); with ``exact``
-    the residual filter runs on the predicate columns too."""
-
-    @staticmethod
-    def read(path, ris, fclauses, cols, exact) -> Iterator[pa.Table]:
-        if not (exact and all(fclauses)):
-            yield read_container(path, columns=cols)
-            return
-        want = list(dict.fromkeys(
-            [*cols, *(col for cl in fclauses for col, _op, _v in cl)]))
-        yield _apply_row_filter_dnf(
-            read_container(path, columns=want), fclauses).select(cols)
+from fastparquet_spark.format.predicate import _file_clauses, dnf
 
 
 def plan_scan(root: str, metas, filters, columns, fs=None,
-              fmt=ParquetScan):
+              fmt=ParquetFormat):
     """The driver plan of a pruned scan — the ONE planner behind
     ``paged_read``, ``read_fpsc`` and the fps/fpsc data sources, over
     the ``metas`` of ``fmt`` files.  Returns
@@ -187,7 +111,7 @@ def plan_scan(root: str, metas, filters, columns, fs=None,
 
 
 def scan_unit(path, ris, pvals, absent, clauses, file_cols, part_cols,
-              arrow_schema, exact, fmt=ParquetScan):
+              arrow_schema, exact, fmt=ParquetFormat):
     """Executor-side scan of ONE (file, row-groups) unit from
     ``plan_scan`` — the generator behind every scan task of both
     formats (paged_read's and read_fpsc's mapInArrow fn, FpsReader.read),
@@ -251,12 +175,12 @@ def paged_read(spark, in_dir: str, filters, columns=None):
     ``columns``: projection (predicate columns are decoded as needed
     and dropped from the result; may include partition columns).
     """
-    return scan(spark, in_dir, filters, columns, ParquetScan)
+    return scan(spark, in_dir, filters, columns, ParquetFormat)
 
 
 def scan(spark, in_dir: str, filters, columns, fmt):
-    """The body of ``paged_read`` (``fmt=ParquetScan``) and
-    ``read_fpsc`` (``fmt=FpscScan``): plan on the driver, then one
+    """The body of ``paged_read`` (``fmt=ParquetFormat``) and
+    ``read_fpsc`` (``fmt=FpscFormat``): plan on the driver, then one
     mapInArrow job whose tasks run ``scan_unit`` over their units, each
     filtered exactly.  A directory with no ``fmt`` file raises
     ``ValueError``."""

@@ -1,13 +1,12 @@
 """The one partition writer: every engine and DataSource writer streams
-its rows through ``write_partition`` into the files of a format plug-in,
+its rows through ``write_partition`` into the files of a format object,
 as the reference writes every dataset through ``partition_on_columns``
 (the hive split, fastparquet/writer.py:1066-1105) and ``make_part_file``
 (each file, :672-695; SURVEY.md §3.1).
 
-A format plug-in (``ParquetFormat``, ``FpscFormat``) has a ``suffix``,
-``file_per_chunk`` (each chunk its own file, or a row group of one file
-per key) and ``open(sink, schema) -> (write, close)``: ``write(chunk)``
-adds a chunk, ``close()`` returns ``({column: codec}, output_bytes)``.
+The format objects are ``format.dataset.ParquetFormat`` and
+``format.container.FpscFormat``; their docstrings hold the format
+contract this writer uses (``suffix``, ``file_per_chunk``, ``open``).
 Staging, publishing and the manifest follow engine/commit.py and stay
 with the caller.  ``MANIFEST_SCHEMA`` is the one schema of the manifest
 rows every encode job returns.
@@ -52,69 +51,6 @@ def _arrow_manifest_batch(row: dict) -> pa.RecordBatch:
                                       schema=MANIFEST_SCHEMA)
 
 
-class ParquetFormat:
-    """``format.writer.ParquetWriter(**opts)`` files: one per key, one
-    row group per chunk."""
-
-    suffix, file_per_chunk = ".parquet", False
-
-    def __init__(self, **opts):
-        self.opts = opts
-
-    def open(self, sink, schema: pa.Schema):
-        from fastparquet_spark.format.writer import ParquetWriter
-
-        writer = ParquetWriter(sink, schema, **self.opts)
-
-        def close():
-            res = writer.close()
-            return {c.name: c.encoding for c in res.columns}, res.file_bytes
-        return writer.write_row_group, close
-
-
-class FpscFormat:
-    """FPSC containers, one per chunk.  FSST tables start from
-    ``pretrained`` and are reused across the containers of one instance
-    (one task: each task unpickles its own); ``decisions`` fixes
-    fsst-vs-plain per string column."""
-
-    suffix, file_per_chunk = ".fpsc", True
-
-    def __init__(self, compression: str = "ZSTD", pretrained=None,
-                 decisions=None, bloom_filters: dict | None = None):
-        self.compression = compression
-        self.fsst_cache = dict(pretrained or {})
-        self.decisions = decisions
-        self.bloom_filters = bloom_filters
-
-    @classmethod
-    def trained(cls, sample: pa.Table | None,
-                compression: str = "ZSTD") -> FpscFormat:
-        """The one pretrain step: tables trained and fsst-vs-plain fixed
-        on a driver ``sample``, so tasks skip training and the losing
-        codec's trial (the escape byte keeps unseen bytes correct; only
-        the ratio can drift).  ``sample=None`` leaves both to each
-        task."""
-        from fastparquet_spark.format.container import decide_string_codecs
-
-        pretrained: dict = {}
-        decisions = {} if sample is None else decide_string_codecs(
-            sample, pretrained, compression=compression)
-        return cls(compression, pretrained, decisions)
-
-    def open(self, sink, schema: pa.Schema):
-        from fastparquet_spark.format.container import write_container
-
-        blocks = []
-
-        def write(chunk: pa.Table):
-            blocks.extend(write_container(
-                sink, chunk, compression=self.compression,
-                fsst_cache=self.fsst_cache, bloom_filters=self.bloom_filters,
-                codec_decisions=self.decisions))
-        return write, lambda: ({b.name: b.codec for b in blocks}, sink.tell())
-
-
 class _Key:
     """One key's buffered rows and the file they stream into."""
 
@@ -153,10 +89,10 @@ def write_partition(batches, fmt, stage, fs, out_dir: str, family: str, *,
     ``input_bytes``, ``kernel_secs``, ``output_bytes``, ``columns``) per
     file, in close order.  An empty stream writes nothing.
 
-    Files are ``{family}.parquet`` (one per key; a key that comes back
-    after its file closed gets ``{family}-rN.parquet``, so no file is
-    clobbered) or ``{family}-NNN.fpsc`` (one per chunk, numbered across
-    the task), in ``col=value/`` directories when ``hive_cols`` is set,
+    Files are ``{family}{fmt.suffix}`` (one per key; a key that comes
+    back after its file closed gets ``{family}-rN``, so no file is
+    clobbered) or, with ``fmt.file_per_chunk``, ``{family}-NNN`` (one
+    per chunk, numbered across the task), in ``col=value/`` directories when ``hive_cols`` is set,
     the key columns dropped from the data.  A chunk is ``chunk_rows``
     rows, or fewer when a key's buffer reaches ``_MAX_BUFFER_BYTES`` or
     the key ends.  Each file is written to ``stage(final)``; on an error

@@ -42,6 +42,7 @@ from fastparquet_spark.codecs.plain import decode_plain, encode_plain
 from fastparquet_spark.codecs.rle import decode_hybrid, encode_hybrid
 from fastparquet_spark.codecs.selection import column_stats, delta_wins, fsst_trial
 from fastparquet_spark.format.metadata import ConvertedType, Type
+from fastparquet_spark.format.predicate import _apply_row_filter_dnf
 from fastparquet_spark.format.reader import _binary_array, _fill_rows, _table
 from fastparquet_spark.format.writer import _binary_parts, _map_type, _one_array
 
@@ -386,12 +387,42 @@ def _footer(f, size: int, name: str) -> dict:
     return json.loads(read_tail(f, size, name, MAGIC)[:-8])
 
 
-class FpscFiles:
-    """The footer side of a scan's format plug-in for FPSC containers
-    (``format.dataset.ParquetFiles`` for parquet): listing keeps
-    ``.fpsc`` files, whose tails end in the FPSC magic; no sidecar."""
+class FpscFormat:
+    """The FPSC container format, under the format contract of
+    ``format.dataset.ParquetFormat``: ``.fpsc`` files whose tails end
+    in the FPSC magic, no sidecar, each chunk its own container.
+
+    A container reads as ONE row group (``footer``); ``read`` fetches
+    the projected columns with ranged reads and inflates them with the
+    vectorized decoders (FSST expansion, delta prefix-sum, validity
+    reassembly), and with ``exact`` runs the residual filter on the
+    predicate columns too.  An instance writes: its FSST tables start
+    from ``pretrained`` and are reused across the containers it writes
+    (one task: each task unpickles its own); ``decisions`` fixes
+    fsst-vs-plain per string column."""
 
     name, suffix, magic, sidecar = "FPSC", ".fpsc", MAGIC, False
+    file_per_chunk = True
+
+    def __init__(self, compression: str = "ZSTD", pretrained=None,
+                 decisions=None, bloom_filters: dict | None = None):
+        self.compression = compression
+        self.fsst_cache = dict(pretrained or {})
+        self.decisions = decisions
+        self.bloom_filters = bloom_filters
+
+    @classmethod
+    def trained(cls, sample: pa.Table | None,
+                compression: str = "ZSTD") -> FpscFormat:
+        """The one pretrain step: tables trained and fsst-vs-plain fixed
+        on a driver ``sample``, so tasks skip training and the losing
+        codec's trial (the escape byte keeps unseen bytes correct; only
+        the ratio can drift).  ``sample=None`` leaves both to each
+        task."""
+        pretrained: dict = {}
+        decisions = {} if sample is None else decide_string_codecs(
+            sample, pretrained, compression=compression)
+        return cls(compression, pretrained, decisions)
 
     @staticmethod
     def footer(tail: bytes) -> dict:
@@ -432,6 +463,26 @@ class FpscFiles:
         from fastparquet_spark.codecs.bloom import SplitBlockBloom
 
         return SplitBlockBloom.frombytes(blob)
+
+    @staticmethod
+    def read(path, ris, fclauses, cols, exact):
+        if not (exact and all(fclauses)):
+            yield read_container(path, columns=cols)
+            return
+        want = list(dict.fromkeys(
+            [*cols, *(col for cl in fclauses for col, _op, _v in cl)]))
+        yield _apply_row_filter_dnf(
+            read_container(path, columns=want), fclauses).select(cols)
+
+    def open(self, sink, schema):
+        blocks = []
+
+        def write(chunk: pa.Table):
+            blocks.extend(write_container(
+                sink, chunk, compression=self.compression,
+                fsst_cache=self.fsst_cache, bloom_filters=self.bloom_filters,
+                codec_decisions=self.decisions))
+        return write, lambda: ({b.name: b.codec for b in blocks}, sink.tell())
 
 
 def read_container_footer(source, fs=None) -> dict:

@@ -456,26 +456,96 @@ def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[di
     return _dataset(out_dir, fs, use_sidecar)[1]
 
 
-class ParquetFiles:
-    """The footer side of a scan's format plug-in, for parquet files:
-    what a dataset's files end in (``suffix``) and what their tails
-    carry (``magic``), whether a ``_metadata`` ``sidecar`` can stand in
-    for the footers, ``footer(tail)`` — the file's parquet-shaped
-    footer — and ``bloom(blob, path, offset, fs)`` — the split-block
-    bloom filter read from a bloom span.  ``container.FpscFiles`` is
-    the FPSC one; engine/scan_job.py adds each format's unit read."""
+class ParquetFormat:
+    """The parquet file format.  A format object is everything the
+    engine knows about one file format, and every lister, planner,
+    scan and writer takes one (``container.FpscFormat`` is the FPSC
+    one):
+
+    - ``name``; ``suffix``, what a dataset's data files end in
+      (:func:`data_files` lists them); ``magic``, what their tails end
+      in; ``sidecar``, whether a ``_metadata`` sidecar stands in for
+      the footers on a read and is merged on a DataSource commit;
+      ``file_per_chunk``, whether ``write_partition`` gives each chunk
+      its own file or each key one file of one row group per chunk;
+    - ``footer(tail)`` -> the file's parquet-shaped footer;
+    - ``bloom(blob, path, offset, fs)`` -> the split-block bloom filter
+      of a fetched bloom span (both formats hash probe values with
+      :func:`_bloom_value_bytes`);
+    - ``read(path, ris, fclauses, cols, exact)`` -> Tables of the rows
+      of row groups ``ris`` in the file's own column order, the unit
+      read of ``engine.scan_job.scan_unit``;
+    - ``open(sink, schema)`` -> ``(write, close)``: ``write(chunk)``
+      adds a chunk, ``close()`` returns ``({column: codec},
+      output_bytes)``.
+
+    The read side is static, so the class itself serves readers; the
+    writer options live on an instance.  Here ``format.writer.
+    ParquetWriter(**opts)`` writes each file, one row group per chunk,
+    and a unit with a filter left for its file goes through the
+    page-skipping :func:`read_pages`, a match-all unit through
+    pyarrow's C++ reader."""
 
     name, suffix, magic, sidecar = "parquet", ".parquet", b"PAR1", True
+    file_per_chunk = False
 
     footer = staticmethod(read_footer_tail)
+
+    def __init__(self, **opts):
+        self.opts = opts
 
     @staticmethod
     def bloom(blob: bytes, path: str, offset: int, fs):
         return _parse_bloom_blob(blob, path, offset, fs)
 
+    @staticmethod
+    def read(path, ris, fclauses, cols, exact):
+        if all(fclauses):
+            yield read_pages(path, fclauses, columns=cols, exact=exact,
+                             row_groups=set(ris))
+            return
+        # match-all DNF for this file (no filter survived partition
+        # substitution): ColumnIndex page skipping has nothing to skip,
+        # so the pure-Python page reader only adds decode tax — stream
+        # the surviving row groups through pyarrow's C++ reader instead
+        # (~2.7x on full scans, BENCH.md r6 scan probe).  Streaming
+        # OVERLAPS decode with the Arrow-IPC write back to the JVM (the
+        # consumer takes each batch before the next is decoded); peak
+        # memory is one batch, not one file.  The selective path above
+        # is byte-proof-tested.
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from fastparquet_spark.io import _is_uri
+
+        # local paths go to pyarrow as plain paths (OS-level reads);
+        # URIs (s3/gs/hdfs) open through the io layer's pyarrow.fs
+        # NativeFile — pq.ParquetFile itself does no URI inference
+        src = get_fs(path).open_read(path) if _is_uri(path) else path
+        try:
+            for b in pq.ParquetFile(src).iter_batches(
+                    batch_size=131_072, row_groups=sorted(ris),
+                    columns=cols, use_threads=False):
+                yield pa.Table.from_batches([b])
+        finally:
+            # close the remote handle even on partial consumption —
+            # long scan jobs leak connections/fds otherwise
+            if src is not path:
+                src.close()
+
+    def open(self, sink, schema):
+        from fastparquet_spark.format.writer import ParquetWriter
+
+        writer = ParquetWriter(sink, schema, **self.opts)
+
+        def close():
+            res = writer.close()
+            return {c.name: c.encoding for c in res.columns}, res.file_bytes
+        return writer.write_row_group, close
+
 
 def _dataset(out_dir: str, fs=None, use_sidecar: bool = True,
-             fmt=ParquetFiles):
+             fmt=ParquetFormat):
     """``(root, metas)`` of a dataset directory or a glob of ``fmt``
     files: the body of :func:`dataset_metadata` and
     :func:`load_dataset_metas`.  A glob
@@ -528,7 +598,7 @@ def _dataset(out_dir: str, fs=None, use_sidecar: bool = True,
                         detect_scheme(rels))
 
 
-def data_files(root: str, fs, suffix: str = ".parquet") -> list[str]:
+def data_files(root: str, fs, suffix: str = ParquetFormat.suffix) -> list[str]:
     """The data files of the dataset directory ``root``, sorted: every
     ``suffix`` file below it with no hidden (``.``) or metadata
     (``_``) segment in its path relative to ``root`` — so staged files,
@@ -542,9 +612,9 @@ def data_files(root: str, fs, suffix: str = ".parquet") -> list[str]:
 
 
 def load_dataset_metas(path: str, fs=None,
-                       fmt=ParquetFiles) -> tuple[str, list[dict]]:
+                       fmt=ParquetFormat) -> tuple[str, list[dict]]:
     """(root, metas) for a dataset directory OR an explicit glob of
-    ``fmt`` files (:class:`ParquetFiles`, ``container.FpscFiles``) —
+    ``fmt`` files (:class:`ParquetFormat`, ``container.FpscFormat``) —
     the ONE shared entry for scan planners (api.ParquetFile, paged_read,
     read_fpsc, the fps and fpsc data sources), so listing and glob
     semantics cannot drift between them (:func:`_dataset`); directory
@@ -1161,13 +1231,13 @@ def _prefetch_blooms(spans: dict, fs, parse, max_workers: int = 16) -> dict:
 
 def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
                       use_bloom: bool = True,
-                      fmt=ParquetFiles) -> list[tuple[str, int]]:
+                      fmt=ParquetFormat) -> list[tuple[str, int]]:
     """Surviving (file, row_group) pairs for a DNF filter — a flat
     AND-list ``[(col,op,val),...]`` or OR-of-ANDs ``[[...],[...]]`` —
     over a dataset directory or glob of ``fmt`` files (keyed as
     :func:`dataset_metadata` keys them), or over the given ``metas``
     of the dataset rooted at ``out_dir``.  An FPSC container is one
-    row group (``container.FpscFiles``).
+    row group (``container.FpscFormat``).
 
     Two pruning passes: min/max/null stats (metadata already in hand),
     then — for ==/in clauses on columns carrying a bloom filter —

@@ -41,6 +41,7 @@ import pyarrow as pa
 
 from fastparquet_spark.codecs import compression as comp
 from fastparquet_spark.codecs.delta import delta_decode
+from fastparquet_spark.codecs.dictionary import dict_decode_page
 from fastparquet_spark.codecs.plain import decode_plain
 from fastparquet_spark.codecs.rle import decode_hybrid
 from fastparquet_spark.format import thrift
@@ -249,14 +250,7 @@ def _read_column_chunk(buf: bytes, cmd: dict, type_length: int = 0,
             vals, off = decode_plain(raw, ptype, n_nonnull, offset=off,
                                      type_length=type_length)
         elif enc in (Encoding.PLAIN_DICTIONARY, Encoding.RLE_DICTIONARY):
-            width = raw[off]
-            if width == 0:
-                # single-entry dictionary: every code is 0
-                codes = np.zeros(n_nonnull, dtype=np.uint64)
-            else:
-                codes, _ = decode_hybrid(raw, width, n_nonnull, offset=off + 1,
-                                         length=len(raw) - off - 1)
-            vals = ("codes", codes.astype(np.int64))
+            vals = ("codes", dict_decode_page(raw, n_nonnull, offset=off))
         elif enc == Encoding.DELTA_BINARY_PACKED:
             vals, off = delta_decode(raw, offset=off, count=n_nonnull,
                                      bit_width=32 if ptype == Type.INT32 else 64)

@@ -107,6 +107,10 @@ class LocalFS:
     def remove(self, path: str) -> None:
         os.remove(path)
 
+    def rmdir(self, path: str) -> None:
+        """Remove the directory ``path``; ``OSError`` unless empty."""
+        os.rmdir(path)
+
     def isdir(self, path: str) -> bool:
         return os.path.isdir(path)
 
@@ -210,6 +214,12 @@ class ArrowFS:
 
     def remove(self, path: str) -> None:
         self._fs.delete_file(self._strip(path))
+
+    def rmdir(self, path: str) -> None:
+        """Remove the directory ``path``; ``OSError`` unless empty."""
+        if self.listdir(path):
+            raise OSError(f"directory not empty: {path}")
+        self._fs.delete_dir(self._strip(path))
 
     def isdir(self, path: str) -> bool:
         from pyarrow.fs import FileType

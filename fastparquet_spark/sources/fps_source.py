@@ -6,7 +6,7 @@ pruning stack instead of hand-built DNF filters:
     spark.read.format("fps").load("/data/ds").filter("k = 7")
 
 is the idiomatic spelling of ``engine.scan_job.paged_read``, and with
-the ``FpscScan`` plug-in (the ``fmt`` of ``FpscDataSource``,
+the ``FpscFormat`` format object (the ``fmt`` of ``FpscDataSource``,
 sources/fpsc_source.py) of ``read_fpsc``:
 
 1. ``pushFilters`` receives Catalyst's translated predicates and keeps
@@ -42,17 +42,15 @@ The Python Data Source API has no column-pruning hook yet; pass
 ``plan_scan`` as ``paged_read``).  Hive ``key=value`` datasets work end
 to end, partition columns appended last (Spark's convention).
 
-Write side (``df.write.format("fps").save(dir)``): each task streams
-its Arrow batches through engine/write.py's ``write_partition`` with
-the ``ParquetFormat`` plug-in into one staged
-``part-<job>-<pid>.parquet`` per task attempt, row groups of
-``row_group_rows`` rows; the driver's ``commit`` publishes the one
-successful attempt per task with engine/commit.py's ``publish_job``
-(publish first, then remove the old files on overwrite, then sweep
-this job's stages), then re-merges the ``_metadata`` /
-``_common_metadata`` sidecars so footer-only readers see the new files
-in one fetch.  An append is judged by ``format/dataset.check_append``
-on the driver, before any task runs.
+Write side (``df.write.format("fps").save(dir)``): ``StagedWriter``
+with a ``ParquetFormat`` (the format contract is in its docstring,
+format/dataset.py): one staged part file per task attempt, row groups
+of ``row_group_rows`` rows, published by the driver's ``commit`` with
+engine/commit.py's ``publish_job`` (publish first, then remove the old
+data files on overwrite, then sweep this job's stages), then the
+``_metadata`` / ``_common_metadata`` sidecars re-merged so footer-only
+readers see the new files in one fetch.  An append is judged by
+``format/dataset.check_append`` on the driver, before any task runs.
 """
 
 from __future__ import annotations
@@ -77,7 +75,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from fastparquet_spark.engine.scan_job import ParquetScan
+from fastparquet_spark.format.dataset import ParquetFormat
 
 _MAX_TASKS = 4096  # ceiling on scheduler units for 100k-file datasets
 
@@ -110,7 +108,7 @@ def _pushed_clause(filters) -> list[tuple]:
 
 
 class FpsDataSource(DataSource):
-    fmt = ParquetScan  # the scan's format plug-in (engine/scan_job.py)
+    fmt = ParquetFormat  # the format object of the scan and the write
 
     @classmethod
     def name(cls) -> str:
@@ -152,15 +150,15 @@ class FpsDataSource(DataSource):
             from fastparquet_spark.format.dataset import check_append
 
             check_append(self.options["path"], to_arrow_schema(schema))
-        return FpsWriter(
+        return StagedWriter(
             self.options["path"],
-            self.options.get("compression", "ZSTD"),
+            ParquetFormat(compression=self.options.get("compression", "ZSTD")),
             int(self.options.get("row_group_rows", 1_000_000)),
             overwrite)
 
 
 class FpsReader(DataSourceReader):
-    def __init__(self, path: str, columns, plan=None, fmt=ParquetScan):
+    def __init__(self, path: str, columns, plan=None, fmt=ParquetFormat):
         self.path = path
         self.columns = columns
         self._plan = plan  # (root, metas) from the DataSource, if any
@@ -237,25 +235,24 @@ class _Committed(WriterCommitMessage):
 
 
 class StagedWriter(DataSourceArrowWriter):
-    """A DataSource write, shared by the fps and fpsc writers: tasks
-    stream their batches through ``write_partition`` with the
-    subclass's ``_format()``, stage ``part-<job>-<pid>...`` files
-    (engine/commit.py names) and report them relative to ``path`` (a
-    failed task removes its stages); ``commit`` sees exactly ONE message
-    per task — the successful attempt — and publishes it with
-    ``publish_job``; ``abort`` removes this job's stages.  The job token
-    (minted once on the driver, shared by all attempts via pickling)
-    keeps distinct jobs — e.g. successive appends — from colliding or
-    sweeping each other's stages."""
+    """The DataSource write of both sources: tasks stream their batches
+    through ``write_partition`` into files of the format object ``fmt``
+    (each task unpickles its own copy, so FSST tables are per task),
+    stage ``part-<job>-<pid>...`` files (engine/commit.py names) and
+    report them relative to ``path`` (a failed task removes its
+    stages); ``commit`` sees exactly ONE message per task — the
+    successful attempt — publishes it with ``publish_job`` and, when
+    ``fmt.sidecar``, merges the ``_metadata`` sidecar; ``abort``
+    removes this job's stages.  The job token (minted once on the
+    driver, shared by all attempts via pickling) keeps distinct jobs —
+    e.g. successive appends — from colliding or sweeping each other's
+    stages."""
 
-    suffix: str  # the data files ``overwrite`` replaces
-
-    def __init__(self, path: str, compression: str, chunk_rows: int,
-                 overwrite: bool):
+    def __init__(self, path: str, fmt, chunk_rows: int, overwrite: bool):
         import uuid
 
         self.path = path
-        self.compression = compression
+        self.fmt = fmt
         self.chunk_rows = chunk_rows
         self.overwrite = overwrite
         self.job = uuid.uuid4().hex[:8]
@@ -284,7 +281,7 @@ class StagedWriter(DataSourceArrowWriter):
 
         try:
             files = write_partition(
-                iterator, self._format(), stage, fs, self.path,
+                iterator, self.fmt, stage, fs, self.path,
                 f"part-{self.job}-{ctx.partitionId():05d}",
                 chunk_rows=self.chunk_rows)
         except BaseException:
@@ -295,12 +292,24 @@ class StagedWriter(DataSourceArrowWriter):
 
     def commit(self, messages):
         from fastparquet_spark.engine.commit import publish_job
+        from fastparquet_spark.format.dataset import (
+            read_sidecar, write_metadata_sidecar,
+        )
         from fastparquet_spark.io import get_fs
 
-        pending = [(self._full(s), self._full(f))
-                   for m in messages for s, f in m.files]
-        publish_job(get_fs(self.path), self.path.rstrip("/"), pending,
-                    f"part-{self.job}", self.suffix, self.overwrite)
+        fs = get_fs(self.path)
+        root = self.path.rstrip("/")
+        # an append merges its files on the base sidecar, as every
+        # parquet appender does; with no base every part file is merged
+        base = read_sidecar(root, fs) \
+            if self.fmt.sidecar and not self.overwrite else None
+        publish_job(fs, root, [(self._full(s), self._full(f))
+                               for m in messages for s, f in m.files],
+                    f"part-{self.job}", self.fmt.suffix, self.overwrite)
+        if self.fmt.sidecar:
+            write_metadata_sidecar(
+                root, fs, base=base, files=None if base is None else
+                [f for m in messages for _s, f in m.files])
 
     def abort(self, messages):
         from fastparquet_spark.engine.commit import abort_job
@@ -308,28 +317,3 @@ class StagedWriter(DataSourceArrowWriter):
 
         abort_job(get_fs(self.path), self.path.rstrip("/"),
                   f"part-{self.job}")
-
-
-class FpsWriter(StagedWriter):
-    """Parquet files, one per task, row groups of ``chunk_rows`` rows."""
-
-    suffix = ".parquet"
-
-    def _format(self):
-        from fastparquet_spark.engine.write import ParquetFormat
-
-        return ParquetFormat(compression=self.compression)
-
-    def commit(self, messages):
-        from fastparquet_spark.format.dataset import (
-            read_sidecar, write_metadata_sidecar,
-        )
-
-        # an append merges its files on the base sidecar, as every
-        # parquet appender does; with no base every part file is merged
-        base = None if self.overwrite else read_sidecar(self.path)
-        super().commit(messages)
-        write_metadata_sidecar(
-            self.path, base=base,
-            files=None if base is None else
-            [f for m in messages for _s, f in m.files])

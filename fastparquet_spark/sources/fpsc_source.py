@@ -9,7 +9,7 @@ DataFrame reader/writer API instead of engine-specific helpers:
     spark.read.format("fpsc").load("/data/cache")
 
 Read side: the fps source's reader (``FpsDataSource`` / ``FpsReader``)
-with the ``FpscScan`` plug-in, i.e. ``read_fpsc``'s planner,
+with the ``FpscFormat`` format object (format/container.py), i.e. ``read_fpsc``'s planner,
 engine/scan_job.py's ``plan_scan`` and ``scan_unit``.  The schema is
 the union of every container's footer columns, read by name: a column
 a container lacks reads as typed nulls.  Pushed filters prune whole
@@ -21,29 +21,26 @@ As with the fps source, run concurrent filtered queries on one
 source relation, so queries planned at the same time on a shared
 DataFrame can swap their pruned partitions.
 
-Write side: the fps source's ``StagedWriter`` with the ``FpscFormat``
-plug-in — each task streams its batches through engine/write.py's
-``write_partition`` into containers of ``rows_per_container`` rows
-(bounded memory, FSST table trained once per column per task), staged
-under engine/commit.py's names; the driver's ``commit`` publishes them
-to deterministic final names ``part-<job>-<pid>-<k>.fpsc`` with
-``publish_job`` and sweeps
+Write side: the fps source's ``StagedWriter`` with an ``FpscFormat``:
+containers of ``rows_per_container`` rows (bounded memory, FSST table
+trained once per column per task) published to deterministic final
+names ``part-<job>-<pid>-<k>`` by the driver's ``commit``, which sweeps
 leftovers from failed/speculative attempts — so a task retry can never
-leave duplicate rows in the dataset.  ``mode("overwrite")`` removes
-the pre-existing containers after the new ones are published;
-``abort`` removes this job's staged files.
+leave duplicate rows in the dataset.  ``mode("overwrite")`` removes the
+pre-existing containers after the new ones are published; no sidecar
+is written.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import StructType
 
-from fastparquet_spark.engine.scan_job import FpscScan
+from fastparquet_spark.format.container import FpscFormat
 from fastparquet_spark.sources.fps_source import FpsDataSource, StagedWriter
 
 
 class FpscDataSource(FpsDataSource):
-    fmt = FpscScan
+    fmt = FpscFormat
 
     @classmethod
     def name(cls) -> str:
@@ -53,25 +50,9 @@ class FpscDataSource(FpsDataSource):
         bloom = self.options.get("bloom_columns")  # "col1,col2"
         bloom_d = {c.strip(): 0.01 for c in bloom.split(",") if c.strip()} \
             if bloom else None
-        return FpscWriter(self.options["path"],
-                          self.options.get("compression", "ZSTD"),
-                          int(self.options.get("rows_per_container",
-                                               1_000_000)),
-                          overwrite, bloom_d)
-
-
-class FpscWriter(StagedWriter):
-    """FPSC containers of ``chunk_rows`` rows, FSST tables trained once
-    per column per task."""
-
-    suffix = ".fpsc"
-
-    def __init__(self, path: str, compression: str, rows_per_container: int,
-                 overwrite: bool, bloom_filters: dict | None = None):
-        super().__init__(path, compression, rows_per_container, overwrite)
-        self.bloom_filters = bloom_filters
-
-    def _format(self):
-        from fastparquet_spark.engine.write import FpscFormat
-
-        return FpscFormat(self.compression, bloom_filters=self.bloom_filters)
+        return StagedWriter(
+            self.options["path"],
+            FpscFormat(self.options.get("compression", "ZSTD"),
+                       bloom_filters=bloom_d),
+            int(self.options.get("rows_per_container", 1_000_000)),
+            overwrite)

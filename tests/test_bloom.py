@@ -282,10 +282,10 @@ def test_both_writers_build_the_same_blooms(tmp_path):
     for name in pq_blooms:
         np.testing.assert_array_equal(pq_blooms[name], fpsc_blooms[name])
     # the container's double bloom prunes a point lookup stats cannot
-    from fastparquet_spark.format.container import FpscFiles
+    from fastparquet_spark.format.container import FpscFormat
 
     srt = np.sort(t.column("f").to_numpy())
     inside = float((srt[n // 2] + srt[n // 2 + 1]) / 2)
     d = str(tmp_path)
-    assert filter_row_groups(d, [("f", "==", float(srt[7]))], fmt=FpscFiles)
-    assert filter_row_groups(d, [("f", "==", inside)], fmt=FpscFiles) == []
+    assert filter_row_groups(d, [("f", "==", float(srt[7]))], fmt=FpscFormat)
+    assert filter_row_groups(d, [("f", "==", inside)], fmt=FpscFormat) == []

@@ -211,6 +211,11 @@ def test_dict_roundtrip(rng):
     page = dict_data_page(codes, len(labels))
     got = dict_decode_page(page, len(codes))
     np.testing.assert_array_equal(got, codes)
+    assert got.dtype == np.int64  # the reader indexes with them as is
+    # a one-label page as parquet-java writes it: bit width 0, then a
+    # bit-packed run with no data bytes; every code is 0
+    np.testing.assert_array_equal(dict_decode_page(b"\x00\x03", 5),
+                                  np.zeros(5, np.int64))
 
 
 def test_compression_all_codecs():

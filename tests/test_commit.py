@@ -30,9 +30,9 @@ import pytest
 from fastparquet_spark.engine.commit import (
     TaskCommit, abort_job, begin_job, publish_job, stage_name,
 )
-from fastparquet_spark.engine.write import (
-    FpscFormat, ParquetFormat, write_partition,
-)
+from fastparquet_spark.engine.write import write_partition
+from fastparquet_spark.format.container import FpscFormat
+from fastparquet_spark.format.dataset import ParquetFormat
 from fastparquet_spark.io import LocalFS
 
 
@@ -243,25 +243,35 @@ def test_failed_rename_over_stale_final_of_other_size_raises(tmp_path):
 def test_fps_overwrite_keeps_old_rows_when_first_replace_fails(tmp_path,
                                                                monkeypatch):
     """An fps overwrite whose first publish rename fails must leave the
-    old dataset readable: old files go only after the new ones are in."""
+    old dataset readable: old files go only after the new ones are in.
+    Overwrite removes the data files every reader lists, so a parquet
+    file under a ``_`` directory is not one and stays."""
     import fastparquet_spark.io as fio
     from fastparquet_spark.format.writer import write_file
-    from fastparquet_spark.sources.fps_source import FpsWriter, _Committed
+    from fastparquet_spark.sources.fps_source import StagedWriter, _Committed
 
     root = tmp_path / "ds"
-    root.mkdir()
+    (root / "_backup").mkdir(parents=True)
     old = pa.table({"k": pa.array(range(50))})
     write_file(str(root / "part-old-00000.parquet"), old)
-    writer = FpsWriter(str(root), "ZSTD", 1000, overwrite=True)
+    write_file(str(root / "_backup" / "x.parquet"), old)
+    writer = StagedWriter(str(root), ParquetFormat(compression="ZSTD"), 1000,
+                          overwrite=True)
     final = f"part-{writer.job}-00000.parquet"
     staged = f".{final}.stage-7"
     write_file(str(root / staged), pa.table({"k": pa.array(range(5))}))
+    get_fs = fio.get_fs
     monkeypatch.setattr(fio, "get_fs",
                         lambda path, fs=None: FaultyFS("replace", 1))
     with pytest.raises(OSError, match="injected"):
         writer.commit([_Committed(((staged, final),))])
     assert pq.read_table(str(root / "part-old-00000.parquet")).equals(old)
     assert not (root / final).exists()
+    monkeypatch.setattr(fio, "get_fs", get_fs)
+    writer.commit([_Committed(((staged, final),))])  # the retry
+    assert sorted(p for p in os.listdir(root) if not p.startswith(".")) == \
+        ["_backup", "_common_metadata", "_metadata", final]
+    assert pq.read_table(str(root / "_backup" / "x.parquet")).equals(old)
 
 
 def test_failed_twin_keeps_the_final_a_published_twin_counts_on(tmp_path):

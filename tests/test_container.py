@@ -281,15 +281,14 @@ def test_container_bloom_write_probe_and_prune(tmp_path):
     cannot discriminate."""
     import numpy as np
 
-    from fastparquet_spark.engine.scan_job import FpscScan
     from fastparquet_spark.format.container import (
-        read_container, read_container_footer,
+        FpscFormat, read_container, read_container_footer,
     )
     from fastparquet_spark.sources.fps_source import FpsReader
 
     def kept(clause):
         """The containers the data source's planner keeps."""
-        r = FpsReader(str(tmp_path), None, fmt=FpscScan)
+        r = FpsReader(str(tmp_path), None, fmt=FpscFormat)
         r._clauses = clause
         return [u[0] for p in r.partitions() for u in p.value[1]]
 
@@ -395,9 +394,9 @@ def test_zone_aware_timestamps_roundtrip(tmp_path):
 
     import pyarrow as pa
 
-    from fastparquet_spark.engine.scan_job import FpscScan, plan_scan
+    from fastparquet_spark.engine.scan_job import plan_scan
     from fastparquet_spark.format.container import (
-        read_container, read_container_footer, write_container,
+        FpscFormat, read_container, read_container_footer, write_container,
     )
     from fastparquet_spark.format.dataset import load_dataset_metas
 
@@ -426,11 +425,11 @@ def test_zone_aware_timestamps_roundtrip(tmp_path):
     def after(year):
         return [[("utc_us", ">", datetime.datetime(year, 1, 1, tzinfo=utc))]]
 
-    root, metas = load_dataset_metas(str(tmp_path), fmt=FpscScan)
+    root, metas = load_dataset_metas(str(tmp_path), fmt=FpscFormat)
     assert [len(plan_scan(root, metas, after(y), ["utc_us"],
-                          fmt=FpscScan)[3]) for y in (2000, 2024)] == [1, 0]
-    got = pa.concat_tables(FpscScan.read(p, [0], after(2000), ["utc_us"],
-                                         True))
+                          fmt=FpscFormat)[3]) for y in (2000, 2024)] == [1, 0]
+    got = pa.concat_tables(FpscFormat.read(p, [0], after(2000), ["utc_us"],
+                                           True))
     assert got.column("utc_us").to_pylist() == \
         [datetime.datetime(2023, 11, 14, 22, 13, 20, tzinfo=utc)]
 

@@ -5,7 +5,9 @@ one footer fetch per file.
 Every ``api.write`` file is written to a stage name and published only
 once all of them are written, so a write that raises leaves the
 target's file list and sidecar bytes as they were: a simple overwrite,
-a fresh hive write and a hive append.  Paths may be ``file://`` URIs.
+a fresh hive write and a hive append.  Its directory listing stays as it was too: the key
+directories the write made are removed again.  Paths may be ``file://``
+URIs.
 """
 
 from __future__ import annotations
@@ -32,6 +34,12 @@ def _state(root: str):
         return files, fh.read()
 
 
+def _listing(root) -> list[str]:
+    """Every directory and file under ``root``, relative, sorted."""
+    return sorted(os.path.relpath(os.path.join(r, n), root)
+                  for r, ds, fs in os.walk(root) for n in ds + fs)
+
+
 def _frame(keys, values):
     return pd.DataFrame({"k": keys, "v": values})
 
@@ -54,13 +62,22 @@ def test_failed_write_leaves_target_unchanged(tmp_path, case):
               partition_on=["k"], has_nulls=False)
         kw = {"file_scheme": "hive", "partition_on": ["k"],
               "append": case == "hive_append"}
-    before = _state(out)
+    before, listed = _state(out), _listing(tmp_path)
     with pytest.raises(ValueError, match="declared non-null"):
         write(out, _BAD, has_nulls=False, **kw)
     assert _state(out) == before  # no stage, no stub, same sidecar
+    assert _listing(tmp_path) == listed  # no empty k=3/, k=4/
     assert sorted(ParquetFile(out).to_pandas()["v"]) == ["a", "b"]
     if case != "simple_overwrite":
         assert pds.dataset(out, partitioning="hive").count_rows() == 2
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_failed_write_to_new_directory_leaves_nothing(tmp_path, scheme):
+    with pytest.raises(ValueError, match="declared non-null"):
+        write(f"{scheme}{tmp_path}/ds", _BAD, has_nulls=False,
+              file_scheme="hive", partition_on=["k"])
+    assert os.listdir(tmp_path) == []
 
 
 def test_failed_publish_takes_back_the_renamed_finals(tmp_path, monkeypatch):

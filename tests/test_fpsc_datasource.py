@@ -35,6 +35,7 @@ def test_write_read_roundtrip(registered, tmp_path):
     df.repartition(3).write.format("fpsc").mode("append").save(out)
     files = glob.glob(f"{out}/part-*.fpsc")
     assert files and not glob.glob(f"{out}/*.inprogress")
+    assert not glob.glob(f"{out}/_*metadata")  # FPSC has no sidecar
     back = spark.read.format("fpsc").load(out)
     assert back.count() == 3000
     assert {f.name for f in back.schema.fields} == {"id", "repo", "content"}
@@ -87,7 +88,7 @@ def test_filter_pushdown_prunes_files(registered, tmp_path):
     stats (conservative: Spark still applies the exact predicate)."""
     import pyarrow as pa
 
-    from fastparquet_spark.engine.scan_job import FpscScan
+    from fastparquet_spark.format.container import FpscFormat
     from fastparquet_spark.format.container import (
         read_container_footer, write_container,
     )
@@ -104,7 +105,7 @@ def test_filter_pushdown_prunes_files(registered, tmp_path):
     idc = next(c for c in meta["columns"] if c["name"] == "id")
     assert idc["min"] == 2000 and idc["max"] == 2999
 
-    r = FpsReader(str(out), None, fmt=FpscScan)
+    r = FpsReader(str(out), None, fmt=FpscFormat)
     from pyspark.sql.datasource import GreaterThanOrEqual
     rest = r.pushFilters([GreaterThanOrEqual(("id",), 3100)])
     assert list(rest)  # everything returned: Spark stays exact

@@ -78,7 +78,7 @@ def _container() -> bytes:
 def _container_pretrained() -> bytes:
     """A container written as an engine task writes it: FSST tables and
     string codec decisions fixed on a head sample, then applied."""
-    from fastparquet_spark.engine.write import FpscFormat
+    from fastparquet_spark.format.container import FpscFormat
 
     t = _table().drop_columns(["mp", "st"])
     fmt = FpscFormat.trained(t.slice(0, 500))

@@ -317,7 +317,7 @@ def test_datetime_and_date_values_prune_every_tier(tmp_path):
     container stats (epoch ints) alike — and the kept rows are exact."""
     import datetime as dt
 
-    from fastparquet_spark.format.container import FpscFiles, write_container
+    from fastparquet_spark.format.container import FpscFormat, write_container
 
     n = 16
     t0 = dt.datetime(2020, 1, 1)
@@ -345,7 +345,7 @@ def test_datetime_and_date_values_prune_every_tier(tmp_path):
         assert filter_row_groups(str(pq_dir), flt) == \
             [("part-0.parquet", 3)], flt
         if flt[0][0] != "tz":
-            assert filter_row_groups(str(fpsc_dir), flt, fmt=FpscFiles) \
+            assert filter_row_groups(str(fpsc_dir), flt, fmt=FpscFormat) \
                 == [("part-3.fpsc", 0)], flt
         path = str(pq_dir / "part-0.parquet")
         # page tier: the last row group's second page only (rows 14-15)

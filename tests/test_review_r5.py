@@ -88,7 +88,7 @@ def test_sorting_column_indexes_leaf_chunks(tmp_path):
 
 
 def test_container_bloom_uint_overflow_and_typed_probes(tmp_path):
-    from fastparquet_spark.format.container import FpscFiles, write_container
+    from fastparquet_spark.format.container import FpscFormat, write_container
     from fastparquet_spark.format.dataset import (
         filter_row_groups, load_dataset_metas,
     )
@@ -101,11 +101,11 @@ def test_container_bloom_uint_overflow_and_typed_probes(tmp_path):
     def rules_out(clause) -> bool:
         """The planner's bloom tier alone prunes the container: its
         min/max are dropped so stats cannot decide."""
-        root, metas = load_dataset_metas(str(tmp_path), fmt=FpscFiles)
+        root, metas = load_dataset_metas(str(tmp_path), fmt=FpscFormat)
         for cc in metas[0]["fmd"]["row_groups"][0]["columns"]:
             cc["meta_data"]["statistics"] = {}
         return filter_row_groups(root, clause, metas=metas,
-                                 fmt=FpscFiles) == []
+                                 fmt=FpscFormat) == []
 
     # present uint value above signed range: kept, no OverflowError
     assert not rules_out([("u", "==", 2**31 + 5)])

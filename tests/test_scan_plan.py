@@ -181,8 +181,7 @@ def test_nested_columns_raise_unless_projected_away(tmp_path):
 
 def test_fpsc_list_column_is_a_flat_leaf(tmp_path):
     """An FPSC LIST column is one flat leaf: it plans and scans."""
-    from fastparquet_spark.engine.scan_job import FpscScan
-    from fastparquet_spark.format.container import write_container
+    from fastparquet_spark.format.container import FpscFormat, write_container
 
     d = tmp_path / "fpsc"
     d.mkdir()
@@ -190,11 +189,11 @@ def test_fpsc_list_column_is_a_flat_leaf(tmp_path):
                     "v": pa.array([[1.0, 2.0], [3.0]],
                                   pa.list_(pa.float32()))})
     write_container(str(d / "c.fpsc"), tbl)
-    root, metas = load_dataset_metas(str(d), fmt=FpscScan)
+    root, metas = load_dataset_metas(str(d), fmt=FpscFormat)
     schema, file_cols, part_cols, units = plan_scan(root, metas, None, None,
-                                                    fmt=FpscScan)
+                                                    fmt=FpscFormat)
     assert file_cols == ["k", "v"]
     got = pa.Table.from_batches(
         [b for u in units for b in scan_unit(*u, [[]], file_cols, part_cols,
-                                              schema, True, FpscScan)])
+                                              schema, True, FpscFormat)])
     assert got.to_pydict() == tbl.to_pydict()

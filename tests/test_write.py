@@ -1,6 +1,7 @@
 """Spark-free tests of the one partition writer (engine/write.py):
 chunking, the byte cap, hive keys (null, NaN, reopened) and key order,
-through both format plug-ins and a real ``TaskCommit``."""
+through both format objects and a real ``TaskCommit``; what each
+format writes reads back through the same object's scan."""
 
 from __future__ import annotations
 
@@ -13,10 +14,10 @@ import pytest
 
 from fastparquet_spark.engine import write as write_mod
 from fastparquet_spark.engine.commit import TaskCommit, begin_job
-from fastparquet_spark.engine.write import (
-    FpscFormat, ParquetFormat, write_partition,
-)
-from fastparquet_spark.format.container import read_container
+from fastparquet_spark.engine.scan_job import plan_scan, scan_unit
+from fastparquet_spark.engine.write import write_partition
+from fastparquet_spark.format.container import FpscFormat, read_container
+from fastparquet_spark.format.dataset import ParquetFormat, load_dataset_metas
 from fastparquet_spark.io import LocalFS
 
 
@@ -36,6 +37,17 @@ def _write(root, batches, fmt, *, chunk_rows, hive_cols=(), family="part-00000")
 def _read(root, row) -> pa.Table:
     path = os.path.join(str(root), row["file"])
     return read_container(path) if path.endswith(".fpsc") else pq.read_table(path)
+
+
+def _scan(root, fmt) -> pa.Table:
+    """Every row under ``root``, read through the format object
+    ``fmt``: its listing and footers, the scan planner, its unit read."""
+    root, metas = load_dataset_metas(str(root), fmt=fmt)
+    schema, file_cols, part_cols, units = plan_scan(root, metas, None, None,
+                                                    fmt=fmt)
+    return pa.Table.from_batches(
+        [b for u in units for b in scan_unit(*u, [[]], file_cols, part_cols,
+                                              schema, True, fmt)], schema)
 
 
 def _batches(tbl: pa.Table, size: int) -> list[pa.RecordBatch]:
@@ -62,6 +74,7 @@ def test_chunks_of_chunk_rows_then_remainder(tmp_path, fmt):
         assert [md.row_group(i).num_rows for i in range(md.num_row_groups)] \
             == [1000, 1000, 500]
     assert pa.concat_tables(_read(tmp_path, r) for r in rows).equals(tbl)
+    assert _scan(tmp_path, fmt).equals(tbl)
     assert sum(r["rows"] for r in rows) == tbl.num_rows
     assert all(r["output_bytes"] == os.path.getsize(tmp_path / r["file"])
                for r in rows)
@@ -83,6 +96,7 @@ def test_byte_cap_cuts_short_chunks(tmp_path, monkeypatch, fmt):
         sizes = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
     assert sizes == [300] * 6 + [200]
     assert pa.concat_tables(_read(tmp_path, r) for r in rows).equals(tbl)
+    assert _scan(tmp_path, fmt).equals(tbl)
 
 
 def test_empty_stream_writes_nothing(tmp_path):
@@ -127,6 +141,14 @@ def test_hive_nan_null_and_reopened_keys(tmp_path, fmt):
         "k=__HIVE_DEFAULT_PARTITION__": [2, 8]}
     for d in got:  # only finals: every stage was published
         assert all(not n.startswith(".") for n in os.listdir(tmp_path / d))
+    scanned = _scan(tmp_path, fmt)
+    assert scanned.column_names == ["v", "k"]
+
+    def key(k):
+        return "nan" if k != k else k
+    assert sorted(zip(scanned["v"].to_pylist(),
+                      map(key, scanned["k"].to_pylist()))) == \
+        [(v, key(k)) for v, k in enumerate(sum(keys, []))]
 
 
 def test_hive_keys_in_first_appearance_order(tmp_path):

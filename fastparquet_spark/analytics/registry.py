@@ -871,51 +871,6 @@ FROM documents WHERE doc_id >= 120 AND doc_id < 270
 """
 
 
-# ------------------------------------------------------------------ registry -
-QUERIES = {
-    "q1_pricing_summary": relational.q1_pricing_summary,
-    "q3_shipping_topk": relational.q3_shipping_topk,
-    "q_filter_project": relational.q_filter_project,
-    "q_window_rank": relational.q_window_rank,
-    "q_sort_topk": relational.q_sort_topk,
-    "q_join_agg_nation": relational.q_join_agg_nation,
-    "q_column_stats": relational.q_column_stats,
-    "q_count_filters": relational.q_count_filters,
-    "q_partition_values": relational.q_partition_values,
-    "q_rollup_pricing": relational.q_rollup_pricing,
-    "q_cube_volumes": relational.q_cube_volumes,
-    "q_dict_codes": relational.q_dict_codes,
-    "q_rle_runs": relational.q_rle_runs,
-    "q_delta_stats": relational.q_delta_stats,
-    "q_cardinality_stats": relational.q_cardinality_stats,
-    "dedup_exact": dedup.dedup_exact,
-    "dedup_minhash_signatures": dedup.dedup_minhash_signatures,
-    "dedup_minhash_lsh_pairs": dedup.dedup_minhash_lsh_pairs,
-    "dedup_simhash": dedup.dedup_simhash,
-    "dedup_clusters": dedup.dedup_clusters,
-    "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,
-    "text_langid": text.text_langid,
-    "text_quality": text.text_quality,
-    "text_token_count": text.text_token_count,
-    "text_fingerprint": text.text_fingerprint,
-    "text_sample_stratified": text.text_sample_stratified,
-    "text_chunk_tokens": text.text_chunk_tokens,
-    "text_redact_pii": text.text_redact_pii,
-    "text_contamination": text.text_contamination,
-    "text_pack_sequences": text.text_pack_sequences,
-    "sim_cosine_topk": similarity.sim_cosine_topk,
-    "sim_lsh_buckets": similarity.sim_lsh_buckets,
-    "sim_ann_ivf": similarity.sim_ann_ivf,
-    "mm_binary_meta": multimodal.mm_binary_meta,
-    "mm_decode_features": multimodal.mm_decode_features,
-    "mm_frame_sample": multimodal.mm_frame_sample,
-    "engine_roundtrip_hashes": engine_roundtrip_hashes,
-    "engine_roundtrip_agg": engine_roundtrip_agg,
-    "engine_hive_prune": engine_hive_prune,
-    "engine_manifest": engine_manifest,
-}
-
-
 def engine_dataset_stats(spark, sf_dir):
     """Metadata-only statistics over engine output: encode documents,
     then read ONLY our footers (dataset_statistics — the reference's
@@ -957,55 +912,71 @@ WHERE round(list_dot_product(a.e, b.e)
             / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))), 6) >= 0.4
 """
 
-QUERIES["engine_dataset_stats"] = engine_dataset_stats
-QUERIES["engine_bloom_prune"] = engine_bloom_prune
-QUERIES["engine_page_read"] = engine_page_read
-QUERIES["engine_paged_scan"] = engine_paged_scan
-QUERIES["engine_fps_scan"] = engine_fps_scan
-QUERIES["engine_decimal38_roundtrip"] = engine_decimal38_roundtrip
-QUERIES["engine_embeddings_roundtrip"] = engine_embeddings_roundtrip
-QUERIES["engine_snapshot_travel"] = engine_snapshot_travel
-QUERIES["sim_neardup_pairs"] = \
-    lambda spark, sf: similarity.sim_neardup_pairs(spark, sf, threshold=0.4)
-QUERIES["sim_neardup_lsh"] = \
-    lambda spark, sf: similarity.sim_neardup_lsh(spark, sf, threshold=0.45)
-
-
-# ---------------------------------------------------------------------
+# ------------------------------------------------------------------ registry -
 # Driver-gate ordering.  The correctness driver records at most 50 query
 # rows per round (r6: 51 registry keys -> 50 rows, silently dropping the
 # LAST key).  Two defenses: (a) the registry stays at exactly <=50 keys
-# (head(n) is covered by q_sort_topk's order-by + limit), and (b) the dict is
-# re-ordered so the operators most likely to regress — engine encode/
-# scan paths and the LSH/ANN analytics — sit FIRST, and only trivial
-# always-green relational queries occupy the truncatable tail.
-_GATE_ORDER = [
+# (head(n) is covered by q_sort_topk's order-by + limit), and (b) the
+# queries are listed so the operators most likely to regress — engine
+# encode/scan paths and the LSH/ANN analytics — sit FIRST, and only
+# trivial always-green relational queries occupy the truncatable tail.
+QUERIES = {
     # engine write/read paths (the north-star surface — never truncate)
-    "engine_roundtrip_hashes", "engine_roundtrip_agg",
-    "engine_fps_scan", "engine_paged_scan", "engine_page_read",
-    "engine_bloom_prune", "engine_hive_prune", "engine_manifest",
-    "engine_snapshot_travel", "engine_dataset_stats",
-    "engine_decimal38_roundtrip", "engine_embeddings_roundtrip",
+    "engine_roundtrip_hashes": engine_roundtrip_hashes,
+    "engine_roundtrip_agg": engine_roundtrip_agg,
+    "engine_fps_scan": engine_fps_scan,
+    "engine_paged_scan": engine_paged_scan,
+    "engine_page_read": engine_page_read,
+    "engine_bloom_prune": engine_bloom_prune,
+    "engine_hive_prune": engine_hive_prune,
+    "engine_manifest": engine_manifest,
+    "engine_snapshot_travel": engine_snapshot_travel,
+    "engine_dataset_stats": engine_dataset_stats,
+    "engine_decimal38_roundtrip": engine_decimal38_roundtrip,
+    "engine_embeddings_roundtrip": engine_embeddings_roundtrip,
     # LLM-pipeline analytics: dedup / similarity (bucketed paths)
-    "sim_neardup_lsh", "sim_neardup_pairs", "sim_ann_ivf",
-    "sim_cosine_topk", "sim_lsh_buckets",
-    "dedup_minhash_lsh_pairs", "dedup_clusters",
-    "dedup_minhash_signatures", "dedup_simhash", "dedup_ngram_jaccard",
-    "dedup_exact",
+    "sim_neardup_lsh":
+        lambda spark, sf: similarity.sim_neardup_lsh(spark, sf, threshold=0.45),
+    "sim_neardup_pairs":
+        lambda spark, sf: similarity.sim_neardup_pairs(spark, sf, threshold=0.4),
+    "sim_ann_ivf": similarity.sim_ann_ivf,
+    "sim_cosine_topk": similarity.sim_cosine_topk,
+    "sim_lsh_buckets": similarity.sim_lsh_buckets,
+    "dedup_minhash_lsh_pairs": dedup.dedup_minhash_lsh_pairs,
+    "dedup_clusters": dedup.dedup_clusters,
+    "dedup_minhash_signatures": dedup.dedup_minhash_signatures,
+    "dedup_simhash": dedup.dedup_simhash,
+    "dedup_ngram_jaccard": dedup.dedup_ngram_jaccard,
+    "dedup_exact": dedup.dedup_exact,
     # text / multimodal pipeline
-    "text_contamination", "text_pack_sequences", "text_chunk_tokens",
-    "text_sample_stratified", "text_redact_pii", "text_langid",
-    "text_quality", "text_token_count", "text_fingerprint",
-    "mm_binary_meta", "mm_decode_features", "mm_frame_sample",
+    "text_contamination": text.text_contamination,
+    "text_pack_sequences": text.text_pack_sequences,
+    "text_chunk_tokens": text.text_chunk_tokens,
+    "text_sample_stratified": text.text_sample_stratified,
+    "text_redact_pii": text.text_redact_pii,
+    "text_langid": text.text_langid,
+    "text_quality": text.text_quality,
+    "text_token_count": text.text_token_count,
+    "text_fingerprint": text.text_fingerprint,
+    "mm_binary_meta": multimodal.mm_binary_meta,
+    "mm_decode_features": multimodal.mm_decode_features,
+    "mm_frame_sample": multimodal.mm_frame_sample,
     # encoding-shape queries
-    "q_dict_codes", "q_rle_runs", "q_delta_stats", "q_cardinality_stats",
+    "q_dict_codes": relational.q_dict_codes,
+    "q_rle_runs": relational.q_rle_runs,
+    "q_delta_stats": relational.q_delta_stats,
+    "q_cardinality_stats": relational.q_cardinality_stats,
     # relational (pure-Spark, least likely to regress)
-    "q1_pricing_summary", "q3_shipping_topk", "q_join_agg_nation",
-    "q_window_rank", "q_rollup_pricing", "q_cube_volumes",
-    "q_sort_topk", "q_filter_project", "q_column_stats",
-    "q_count_filters", "q_partition_values",
-]
-assert set(_GATE_ORDER) == set(QUERIES), (
-    set(_GATE_ORDER) ^ set(QUERIES))
-assert len(_GATE_ORDER) <= 50, len(_GATE_ORDER)
-QUERIES = {k: QUERIES[k] for k in _GATE_ORDER}
+    "q1_pricing_summary": relational.q1_pricing_summary,
+    "q3_shipping_topk": relational.q3_shipping_topk,
+    "q_join_agg_nation": relational.q_join_agg_nation,
+    "q_window_rank": relational.q_window_rank,
+    "q_rollup_pricing": relational.q_rollup_pricing,
+    "q_cube_volumes": relational.q_cube_volumes,
+    "q_sort_topk": relational.q_sort_topk,
+    "q_filter_project": relational.q_filter_project,
+    "q_column_stats": relational.q_column_stats,
+    "q_count_filters": relational.q_count_filters,
+    "q_partition_values": relational.q_partition_values,
+}
+assert len(QUERIES) <= 50, len(QUERIES)

@@ -113,20 +113,13 @@ LSH_TARGET_BUCKET = 64  # aimed-for mean bucket membership
 def footer_row_count(path_or_dir: str) -> int:
     """Exact dataset row count from parquet FOOTERS only (concurrent
     tail reads, no data pages, no Spark job) — the metadata answer to
-    ``df.count()`` for raw parquet inputs.  Accepts a single file, a
-    directory (``_metadata`` sidecar honored: ONE fetch), or a glob."""
-    from fastparquet_spark.io import fetch_footers, get_fs
+    ``df.count()`` for raw parquet inputs.  ``path_or_dir`` is whatever
+    ``dataset.load_dataset_metas`` opens: a file, a directory
+    (``_metadata`` sidecar honored: ONE fetch; a Spark-written
+    ``t.parquet/`` table too), a glob or a list."""
+    from fastparquet_spark.format.dataset import load_dataset_metas
 
-    if path_or_dir.endswith(".parquet") \
-            and not any(c in path_or_dir for c in "*?["):
-        from fastparquet_spark.format.reader import read_footer_tail
-
-        fs = get_fs(path_or_dir)
-        return read_footer_tail(fetch_footers([path_or_dir],
-                                              fs)[0])["num_rows"]
-    from fastparquet_spark.format.dataset import dataset_metadata
-
-    return sum(m["fmd"]["num_rows"] for m in dataset_metadata(path_or_dir))
+    return sum(m["fmd"]["num_rows"] for m in load_dataset_metas(path_or_dir)[1])
 
 
 def derive_n_bits(n_rows: int, target_bucket: int = LSH_TARGET_BUCKET,

@@ -36,7 +36,7 @@ from fastparquet_spark.format.dataset import (
     _partition_dir,
     _partition_values,
     _split_by_key,
-    dataset_metadata,
+    load_dataset_metas,
     partition_type,
     schema_paths,
     union_leaf_elems,
@@ -53,13 +53,9 @@ from fastparquet_spark.format.predicate import (
     dnf,
     may_match,
 )
-from fastparquet_spark.format.reader import (
-    _arrow_type,
-    read_footer_tail,
-    read_row_groups,
-)
+from fastparquet_spark.format.reader import _arrow_type, read_row_groups
 from fastparquet_spark.format.writer import ParquetWriter
-from fastparquet_spark.io import fetch_footers, get_fs
+from fastparquet_spark.io import get_fs
 
 __all__ = ["ParquetFile", "ParquetException", "filter_in",
            "filter_not_in", "filter_out_cats", "filter_out_stats",
@@ -149,7 +145,9 @@ class _SchemaHelper:
 
 class ParquetFile:
     """Open a parquet file, directory, glob, or list of files — the
-    reference's entry object (fastparquet/api.py:95-162)."""
+    reference's entry object (fastparquet/api.py:95-162) — through the
+    one dataset opener, ``dataset.load_dataset_metas``; an open file
+    object is buffered and read from memory."""
 
     def __init__(self, fn, fs=None):
         self.fn = fn
@@ -168,36 +166,9 @@ class ParquetFile:
             self._fs = get_fs(".", fs)
             self._metas = _metas([os.path.basename(str(self.fn))],
                                  [read_footer(blob)], "flat")
-        elif isinstance(fn, (tuple, list)):
-            from fastparquet_spark.io import common_root, relative_to
-
-            self._root = common_root(list(fn)) or "."
-            self._fs = get_fs(fn[0], fs)
-            tails = fetch_footers(list(fn), self._fs)
-            self._metas = _metas([relative_to(p, self._root) for p in fn],
-                                 [read_footer_tail(t) for t in tails],
-                                 "flat")
         else:
-            self._fs = get_fs(fn, fs)
-            if any(c in fn for c in "*?["):
-                # shared glob semantics (load_dataset_metas): trust the
-                # user's suffix pattern, skip sidecar/hidden basenames
-                # AND directories, key metas relative to the common root
-                from fastparquet_spark.format.dataset import (
-                    load_dataset_metas,
-                )
-
-                self._root, self._metas = load_dataset_metas(
-                    fn, fs=self._fs)
-            elif self._fs.isdir(fn):
-                self._root = fn
-                self._metas = dataset_metadata(fn, fs=self._fs)
-            else:
-                self._root = os.path.dirname(fn) or "."
-                self._metas = _metas(
-                    [os.path.basename(fn)],
-                    [read_footer_tail(fetch_footers([fn], self._fs)[0])],
-                    "flat")
+            self._root, self._metas = load_dataset_metas(fn, fs)
+            self._fs = get_fs(self._root, fs)
         if not self._metas:
             raise ValueError(f"no parquet data at {fn!r}")
         self._fmd0 = self._metas[0]["fmd"]
@@ -1104,20 +1075,18 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
     start = 0
     created: list[str] = []  # directories this call made, parents first
 
-    def _key_dir(rel: str) -> str:
-        """Make ``filename/rel``, noting the directories it adds."""
-        path = filename
-        for seg in rel.split("/"):
-            path = f"{path}/{seg}"
-            if not fs.exists(path):
-                created.append(path)
+    def _makedirs(path: str) -> str:
+        """Make ``path`` and its missing ancestors, noting each one."""
+        new, p = [], path
+        while p and not fs.exists(p):
+            new.append(p)
+            p = p.rpartition("/")[0]
         fs.makedirs(path)
+        created.extend(reversed(new))
         return path
 
     if file_scheme != "simple":
-        if not fs.exists(filename):
-            created.append(filename)
-        fs.makedirs(filename)
+        _makedirs(filename)
     if append:
         import re
 
@@ -1137,7 +1106,8 @@ def write(filename, data, row_group_offsets: int | list = 50_000_000,
         elif pcols:
             for n, (key, part) in enumerate(_split_by_key(table, pcols),
                                             start):
-                d = _key_dir(_partition_dir(pcols, key, file_scheme))
+                d = _makedirs(
+                    f"{filename}/{_partition_dir(pcols, key, file_scheme)}")
                 _emit(f"{d}/part.{n}.parquet", part)
         else:
             _emit(f"{filename}/part.{start}.parquet", table)

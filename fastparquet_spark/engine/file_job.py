@@ -66,47 +66,37 @@ def _prepare_split_job(spark, input_dir: str, out_dir: str,
 
 
 def plan_splits(input_dir: str, rows_per_task: int = 2_000_000) -> list[dict]:
-    """Footer-only planning: pack row groups of all parquet files under
-    ``input_dir`` into splits of ~rows_per_task rows.  Only metadata is
-    read (the reference's `_metadata` trick, fastparquet/util.py:115-213,
-    done with footers instead of a sidecar), and footers are fetched
-    CONCURRENTLY (fastparquet/util.py:146-167) — a sequential driver
-    loop over 100k object-store files burns minutes of idle cluster
-    before the first task launches."""
-    from fastparquet_spark.format.dataset import data_files
-    from fastparquet_spark.format.reader import read_footer_tail
-    from fastparquet_spark.io import fetch_footers, get_fs
+    """Footer-only planning: pack the row groups of the parquet files
+    at ``input_dir`` (a directory, glob, list or single file, opened by
+    ``dataset.load_dataset_metas``) into splits of ~rows_per_task rows.
+    Only footers are read, concurrently (fastparquet/util.py:146-167):
+    a sequential driver loop over 100k object-store files burns minutes
+    of idle cluster before the first task launches.  A directory is
+    listed, never read through its ``_metadata`` sidecar, so the split
+    list (and the resume fingerprint built on it) follows the files on
+    disk."""
+    from fastparquet_spark.format.dataset import _join, load_dataset_metas
 
-    fs = get_fs(input_dir)
-    if any(c in input_dir for c in "*?["):
-        files = [p for p in fs.glob(input_dir)
-                 if p.endswith(ParquetFormat.suffix)]
-    else:
-        # recursive walk: hive key=value inputs live in subdirectories
-        files = data_files(input_dir, fs)
-    tails = fetch_footers(files, fs)
+    root, metas = load_dataset_metas(input_dir, use_sidecar=False)
     splits: list[dict] = []
-    cur_file, cur_rgs, cur_rows = None, [], 0
+    cur_rgs, cur_rows = [], 0
 
-    def flush():
+    def flush(path):
         nonlocal cur_rgs, cur_rows
         if cur_rgs:
-            splits.append({"split": len(splits), "file": cur_file,
+            splits.append({"split": len(splits), "file": path,
                            "row_groups": list(cur_rgs), "rows": cur_rows})
             cur_rgs, cur_rows = [], 0
 
-    for path, tail in zip(files, tails):
-        fmd = read_footer_tail(tail)
-        if cur_file != path:
-            flush()
-            cur_file = path
-        for rgi, rg in enumerate(fmd["row_groups"]):
+    for m in metas:
+        path = _join(root, m["file"])
+        for rgi, rg in enumerate(m["fmd"]["row_groups"]):
             n = rg["num_rows"]
             if cur_rows and cur_rows + n > rows_per_task:
-                flush()
+                flush(path)
             cur_rgs.append(rgi)
             cur_rows += n
-    flush()
+        flush(path)
     return splits
 
 

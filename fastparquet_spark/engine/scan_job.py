@@ -45,6 +45,18 @@ from fastparquet_spark.format.dataset import (
 from fastparquet_spark.format.predicate import _file_clauses, dnf
 
 
+def open_scan(path, fs=None, fmt=ParquetFormat) -> tuple[str, list[dict]]:
+    """``dataset.load_dataset_metas`` of a scan's input, which must
+    hold a ``fmt`` file: the open of ``scan`` and the fps/fpsc
+    sources.  No file raises ``ValueError``."""
+    root, metas = load_dataset_metas(path, fs, fmt)
+    if not metas:
+        raise ValueError(f"no {fmt.name} files match {path!r}"
+                         if any(c in str(path) for c in "*?[")
+                         else f"no {fmt.name} files under {path!r}")
+    return root, metas
+
+
 def plan_scan(root: str, metas, filters, columns, fs=None,
               fmt=ParquetFormat):
     """The driver plan of a pruned scan — the ONE planner behind
@@ -182,7 +194,8 @@ def scan(spark, in_dir: str, filters, columns, fmt):
     """The body of ``paged_read`` (``fmt=ParquetFormat``) and
     ``read_fpsc`` (``fmt=FpscFormat``): plan on the driver, then one
     mapInArrow job whose tasks run ``scan_unit`` over their units, each
-    filtered exactly.  A directory with no ``fmt`` file raises
+    filtered exactly.  ``in_dir`` is a directory, glob, list or file
+    (:func:`open_scan`); one with no ``fmt`` file raises
     ``ValueError``."""
     from fastparquet_spark.engine.spark_types import (
         served_schema, spark_schema,
@@ -191,7 +204,7 @@ def scan(spark, in_dir: str, filters, columns, fmt):
 
     clauses = dnf(filters)
     fs = get_fs(in_dir)
-    in_dir, metas = load_dataset_metas(in_dir, fs=fs, fmt=fmt)
+    in_dir, metas = open_scan(in_dir, fs, fmt)
     arrow_schema, file_cols, part_cols, units = plan_scan(
         in_dir, metas, clauses, columns, fs=fs, fmt=fmt)
     out_schema = spark_schema(arrow_schema)

@@ -485,6 +485,38 @@ class FpscFormat:
         return write, lambda: ({b.name: b.codec for b in blocks}, sink.tell())
 
 
+def check_container_append(path: str, schema: pa.Schema) -> None:
+    """The append check of ``format("fpsc")``: the containers under
+    ``path`` plus one written with ``schema`` must pass the read's own
+    union rule (``dataset.union_leaf_elems``), so a column that a
+    container holds with another type raises ``ValueError`` before any
+    task runs, and a new column is accepted (reads fill it with typed
+    nulls).  A zone-aware timestamp is written in the task's session
+    zone, which is unknown here: it meets a zone-aware column of the
+    same unit in whatever zone that holds.  A path that is no directory
+    takes any schema."""
+    from fastparquet_spark.format.dataset import (
+        load_dataset_metas, union_leaf_elems,
+    )
+    from fastparquet_spark.io import get_fs
+
+    fs = get_fs(path)
+    if not fs.isdir(path):
+        return
+    metas = load_dataset_metas(path, fs, FpscFormat)[1]
+    old = union_leaf_elems(metas)[1]
+    new = []
+    for f in schema:
+        name = _arrow_type_name(f.type)
+        held = old.get(f.name, {}).get("arrow_type", "")
+        if pa.types.is_timestamp(f.type) and f.type.tz \
+                and held.startswith(f"timestamp[{f.type.unit}, tz="):
+            name = held
+        new.append({"name": f.name, "arrow_type": name})
+    union_leaf_elems([*metas, {"file": "the append", "fmd": {"schema": [
+        {"name": "schema", "num_children": len(new)}, *new]}}])
+
+
 def read_container_footer(source, fs=None) -> dict:
     """Footer-only read of an FPSC container (path/URI/bytes): the tail
     fetch every footer read shares, ``io.read_tail``, never data."""

@@ -3,9 +3,17 @@
 Re-expresses the reference's metadata "query" surface
 (fastparquet/api.py) against a directory of our part files:
 
-- ``dataset_metadata``    — merged footer view, the `_metadata` /
-                            ``merge`` analog (fastparquet/writer.py:1156-1193,
-                            util.py:115-213): footers only, no data reads;
+- ``load_dataset_metas``  — the one dataset opener: ``(root, metas)``
+                            of a file, a list of files, a glob or a
+                            directory (its ``_metadata`` sidecar, the
+                            ``merge`` analog, fastparquet/writer.py:
+                            1156-1193, util.py:115-213, stands in for
+                            the footers); footers only, no data reads.
+                            Every reader opens its input here:
+                            ``api.ParquetFile``, ``plan_splits``, the
+                            scans and the fps/fpsc sources,
+                            ``footer_row_count`` and every function
+                            below that takes a dataset path;
 - ``dataset_statistics``  — per-column min/max/null_count across all row
                             groups (fastparquet/api.py:822-902);
 - ``filter_row_groups``   — DNF stats + bloom pruning of row groups
@@ -38,8 +46,8 @@ every writer, planner and reader takes it from here:
   column (all bool, else all int, else all numbers, else string);
 - resolve: :func:`_metas`, the one meta constructor, holds each value
   in its column's type across the whole dataset (a string column keeps
-  each value's path text), so the metas ``dataset_metadata`` and
-  ``load_dataset_metas`` return carry the value every tier sees —
+  each value's path text), so the metas ``load_dataset_metas``
+  returns carry the value every tier sees —
   driver pruning, the scan planners, the facade and ``pf.cats``;
 - absent rule: :func:`dataset_columns` — a file lacks every union
   column it does not carry, and reads it as the constant None: typed
@@ -437,25 +445,6 @@ def dataset_columns(metas) -> tuple[set, dict[str, list[str]]]:
                    for f, mine in tops.items()}
 
 
-def dataset_metadata(out_dir: str, fs=None, use_sidecar: bool = True) -> list[dict]:
-    """Footer of every part file: [{file, fmd, partitions}] in
-    deterministic order.  Footers are TAIL reads fetched concurrently
-    (io.read_tail_footer / io.fetch_footers) — page data is never
-    touched, so this stays a metadata pass at any dataset size.  Files
-    under hive ``key=value`` (or drill) directories carry their
-    partition values, each in its column's resolved type
-    (:func:`_metas`).  A glob is read by :func:`load_dataset_metas`'
-    rule, files keyed relative to the matches' common root.
-
-    When a ``_metadata`` sidecar exists (written by
-    :func:`write_metadata_sidecar` / ``append_dataset``), the whole
-    dataset's metadata comes from that ONE fetch — no listing, no
-    per-file footer reads (the reference's merged-footer trick,
-    fastparquet/writer.py:1156-1193 / util.py:115-213).  Writers that
-    add files must refresh the sidecar (append_dataset does)."""
-    return _dataset(out_dir, fs, use_sidecar)[1]
-
-
 class ParquetFormat:
     """The parquet file format.  A format object is everything the
     engine knows about one file format, and every lister, planner,
@@ -544,32 +533,72 @@ class ParquetFormat:
         return writer.write_row_group, close
 
 
-def _dataset(out_dir: str, fs=None, use_sidecar: bool = True,
-             fmt=ParquetFormat):
-    """``(root, metas)`` of a dataset directory or a glob of ``fmt``
-    files: the body of :func:`dataset_metadata` and
-    :func:`load_dataset_metas`.  A glob
-    (the reference's ``ParquetFile(glob)``, api.py:95-162) trusts the
-    user's pattern for file suffixes (the reference opens whatever the
-    glob matches, e.g. ``*.parq``) but skips sidecar/hidden basenames
-    and DIRECTORIES (a hive ``ds/*`` glob matches ``lang=py/``); its
-    root is the matched files' common root, so files sharing a
-    basename in two hive directories keep distinct keys and their
-    ``key=value`` segments inside the glob carry partition values."""
+def data_files(root: str, fs, suffix: str = ParquetFormat.suffix) -> list[str]:
+    """The data files of the dataset directory ``root``, sorted: every
+    ``suffix`` file below it with no hidden (``.``) or metadata
+    (``_``) segment in its path relative to ``root`` — so staged files,
+    manifests and sidecars are never data."""
+    from fastparquet_spark.io import relative_to
+
+    root = root.rstrip("/")
+    return [p for p in fs.walk_files(root)
+            if (rel := relative_to(p, root)).endswith(suffix)
+            and not any(s.startswith(("_", ".")) for s in rel.split("/"))]
+
+
+def load_dataset_metas(path, fs=None, fmt=ParquetFormat,
+                       use_sidecar: bool = True) -> tuple[str, list[dict]]:
+    """``(root, metas)`` of the ``fmt`` files at ``path`` — the one
+    dataset opener (the reference's ``ParquetFile``, api.py:95-162,
+    util.py:115-213).  ``path`` is:
+
+    - a directory: its ``_metadata`` sidecar stands in for every footer
+      (ONE fetch, no listing) when ``use_sidecar`` and ``fmt.sidecar``,
+      else the footers of its :func:`data_files`; files are keyed
+      relative to the directory, and their partition scheme is
+      detected (:func:`detect_scheme`);
+    - a glob: it trusts the user's pattern for file suffixes (the
+      reference opens whatever it matches, e.g. ``*.parq``) but skips
+      sidecar/hidden basenames and directories (a hive ``ds/*`` glob
+      matches ``lang=py/``);
+    - a list of files;
+    - any other path: one file, read as a one-file glob.
+
+    A glob, a list and a file are keyed relative to the files' common
+    root, so files sharing a basename in two hive directories keep
+    distinct keys, and the hive ``key=value`` segments below the root
+    carry partition values.  Footers are tail reads fetched
+    concurrently (``io.fetch_footers``): page data is never touched.
+    Partition values are resolved to their column's type
+    (:func:`_metas`).  No file gives empty metas; a caller that needs
+    data raises."""
     from fastparquet_spark.io import common_root, relative_to
 
-    fs = get_fs(out_dir, fs)
-    if any(c in out_dir for c in "*?["):
-        files = sorted(
-            p for p in fs.glob(out_dir)
-            if not os.path.basename(p).startswith(("_", "."))
-            and not fs.isdir(p))
-        base = common_root(files) if files else "."
-        tails = fetch_footers(files, fs, magic=fmt.magic)
-        return base, _metas([relative_to(p, base) for p in files],
-                            [fmt.footer(t) for t in tails])
-    root = out_dir.rstrip("/")
-    fmd = read_sidecar(out_dir, fs) if use_sidecar and fmt.sidecar else None
+    if isinstance(path, (list, tuple)):
+        files = list(path)
+        fs = get_fs(files[0] if files else ".", fs)
+    else:
+        fs = get_fs(path, fs)
+        if any(c in path for c in "*?["):
+            files = sorted(
+                p for p in fs.glob(path)
+                if not os.path.basename(p).startswith(("_", "."))
+                and not fs.isdir(p))
+        elif fs.isdir(path):
+            return _directory_metas(path.rstrip("/"), fs, fmt, use_sidecar)
+        else:
+            files = [path]
+    root = common_root(files) if files else "."
+    tails = fetch_footers(files, fs, magic=fmt.magic)
+    return root, _metas([relative_to(p, root) for p in files],
+                        [fmt.footer(t) for t in tails])
+
+
+def _directory_metas(root: str, fs, fmt, use_sidecar: bool):
+    """:func:`load_dataset_metas` of the directory ``root``."""
+    from fastparquet_spark.io import relative_to
+
+    fmd = read_sidecar(root, fs) if use_sidecar and fmt.sidecar else None
     if fmd is not None:
         by_file: dict[str, list] = {}
         for rg in fmd["row_groups"]:
@@ -591,41 +620,11 @@ def _dataset(out_dir: str, fs=None, use_sidecar: bool = True,
                          "row_groups": rgs,
                          "key_value_metadata": fmd.get("key_value_metadata")})
         return root, _metas(rels, fmds, detect_scheme(rels))
-    files = data_files(out_dir, fs, fmt.suffix)
+    files = data_files(root, fs, fmt.suffix)
     rels = [relative_to(p, root) for p in files]
     tails = fetch_footers(files, fs, magic=fmt.magic)
     return root, _metas(rels, [fmt.footer(t) for t in tails],
                         detect_scheme(rels))
-
-
-def data_files(root: str, fs, suffix: str = ParquetFormat.suffix) -> list[str]:
-    """The data files of the dataset directory ``root``, sorted: every
-    ``suffix`` file below it with no hidden (``.``) or metadata
-    (``_``) segment in its path relative to ``root`` — so staged files,
-    manifests and sidecars are never data."""
-    from fastparquet_spark.io import relative_to
-
-    root = root.rstrip("/")
-    return [p for p in fs.walk_files(root)
-            if (rel := relative_to(p, root)).endswith(suffix)
-            and not any(s.startswith(("_", ".")) for s in rel.split("/"))]
-
-
-def load_dataset_metas(path: str, fs=None,
-                       fmt=ParquetFormat) -> tuple[str, list[dict]]:
-    """(root, metas) for a dataset directory OR an explicit glob of
-    ``fmt`` files (:class:`ParquetFormat`, ``container.FpscFormat``) —
-    the ONE shared entry for scan planners (api.ParquetFile, paged_read,
-    read_fpsc, the fps and fpsc data sources), so listing and glob
-    semantics cannot drift between them (:func:`_dataset`); directory
-    mode is exactly :func:`dataset_metadata` (sidecar-aware).  No file
-    raises ``ValueError``."""
-    root, metas = _dataset(path, fs, fmt=fmt)
-    if not metas:
-        raise ValueError(f"no {fmt.name} files match {path!r}"
-                         if any(c in path for c in "*?[")
-                         else f"no {fmt.name} files under {path!r}")
-    return root, metas
 
 
 def _join(out_dir: str, name: str) -> str:
@@ -710,7 +709,7 @@ def write_metadata_sidecar(out_dir: str, fs=None, base: dict | None = None,
 
     fs = get_fs(out_dir, fs)
     if base is None and files is None:
-        metas = dataset_metadata(out_dir, fs=fs, use_sidecar=False)
+        metas = load_dataset_metas(out_dir, fs, use_sidecar=False)[1]
         files, fmds = [m["file"] for m in metas], [m["fmd"] for m in metas]
     else:
         files = list(files or ())
@@ -779,7 +778,7 @@ def read_snapshot(spark, out_dir: str, generation: int, fs=None):
     the only mutation, so a snapshot is a prefix of the file set).
     Raises on an unknown generation so a typo can't silently read the
     full dataset."""
-    metas = dataset_metadata(out_dir, fs=fs)
+    metas = load_dataset_metas(out_dir, fs)[1]
     gens = {_file_generation(m["file"]) for m in metas}
     if generation not in gens:
         raise ValueError(
@@ -832,7 +831,7 @@ def _iter_chunks(metas):
 def dataset_statistics(out_dir: str, fs=None) -> dict[str, dict[str, Any]]:
     """Global per-column stats across every row group of the dataset."""
     agg: dict[str, dict[str, Any]] = {}
-    for _f, _ri, cols, _n in _iter_chunks(dataset_metadata(out_dir, fs=fs)):
+    for _f, _ri, cols, _n in _iter_chunks(load_dataset_metas(out_dir, fs)[1]):
         for name, (lo, hi, nulls, nvals) in cols.items():
             a = agg.setdefault(name, {"min": None, "max": None,
                                       "null_count": 0, "num_values": 0})
@@ -1235,7 +1234,7 @@ def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
     """Surviving (file, row_group) pairs for a DNF filter — a flat
     AND-list ``[(col,op,val),...]`` or OR-of-ANDs ``[[...],[...]]`` —
     over a dataset directory or glob of ``fmt`` files (keyed as
-    :func:`dataset_metadata` keys them), or over the given ``metas``
+    :func:`load_dataset_metas` keys them), or over the given ``metas``
     of the dataset rooted at ``out_dir``.  An FPSC container is one
     row group (``container.FpscFormat``).
 
@@ -1252,7 +1251,7 @@ def filter_row_groups(out_dir: str, filters, fs=None, metas=None,
     ``ValueError``."""
     filters = dnf(filters)
     if metas is None:
-        out_dir, metas = _dataset(out_dir, fs, fmt=fmt)
+        out_dir, metas = load_dataset_metas(out_dir, fs, fmt)
     known, absent = dataset_columns(metas)
     check_columns(filters, known)
     if [] in filters:

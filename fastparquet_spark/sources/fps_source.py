@@ -125,10 +125,9 @@ class FpsDataSource(DataSource):
         every read plans with two full metadata sweeps (2x the
         planning IO on a 100k-file dataset)."""
         if getattr(self, "_plan_cache", None) is None:
-            from fastparquet_spark.format.dataset import load_dataset_metas
+            from fastparquet_spark.engine.scan_job import open_scan
 
-            self._plan_cache = load_dataset_metas(self.options["path"],
-                                                  fmt=self.fmt)
+            self._plan_cache = open_scan(self.options["path"], fmt=self.fmt)
         return self._plan_cache
 
     def schema(self):
@@ -190,12 +189,10 @@ class FpsReader(DataSourceReader):
         clauses / result schema header): Spark pickles the reader
         object before this runs, so executor-side ``read`` must not
         depend on driver-side mutations of ``self``."""
-        from fastparquet_spark.engine.scan_job import plan_scan
+        from fastparquet_spark.engine.scan_job import open_scan, plan_scan
         from fastparquet_spark.engine.spark_types import served_schema
-        from fastparquet_spark.format.dataset import load_dataset_metas
 
-        root, metas = self._plan or load_dataset_metas(self.path,
-                                                       fmt=self.fmt)
+        root, metas = self._plan or open_scan(self.path, fmt=self.fmt)
         aschema, file_cols, part_cols, units = plan_scan(
             root, metas, self._clauses, self.columns, fmt=self.fmt)
         header = {"file_cols": file_cols, "part_cols": part_cols,

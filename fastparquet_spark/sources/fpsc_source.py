@@ -28,14 +28,17 @@ names ``part-<job>-<pid>-<k>`` by the driver's ``commit``, which sweeps
 leftovers from failed/speculative attempts — so a task retry can never
 leave duplicate rows in the dataset.  ``mode("overwrite")`` removes the
 pre-existing containers after the new ones are published; no sidecar
-is written.
+is written.  An append is checked on the driver before any task runs
+(``container.check_container_append``, the read's union rule): a
+column whose type conflicts with the containers' raises, a new column
+is accepted.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import StructType
 
-from fastparquet_spark.format.container import FpscFormat
+from fastparquet_spark.format.container import FpscFormat, check_container_append
 from fastparquet_spark.sources.fps_source import FpsDataSource, StagedWriter
 
 
@@ -47,6 +50,11 @@ class FpscDataSource(FpsDataSource):
         return "fpsc"
 
     def writer(self, schema: StructType, overwrite: bool):
+        if not overwrite:  # refused before any task runs
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            check_container_append(self.options["path"],
+                                   to_arrow_schema(schema))
         bloom = self.options.get("bloom_columns")  # "col1,col2"
         bloom_d = {c.strip(): 0.01 for c in bloom.split(",") if c.strip()} \
             if bloom else None

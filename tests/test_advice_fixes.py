@@ -24,7 +24,7 @@ import pytest
 from fastparquet_spark.codecs.delta import delta_decode, delta_encode
 from fastparquet_spark.format import read_file, write_file
 from fastparquet_spark.format.container import read_container, write_container
-from fastparquet_spark.format.dataset import dataset_metadata, filter_row_groups
+from fastparquet_spark.format.dataset import filter_row_groups
 
 
 def _roundtrip_all_readers(table: pa.Table, path: str) -> None:

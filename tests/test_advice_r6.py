@@ -132,3 +132,32 @@ def test_registry_fits_driver_gate_and_orders_risk_first():
         assert keys.index(risky) < len(keys) // 2, risky
     assert keys[-1].startswith("q_")
 
+
+def test_registry_order_pinned():
+    """The registry lists its queries once, in driver-gate order; a
+    query added, dropped or moved has to move this pin."""
+    from fastparquet_spark.analytics.registry import ORACLES, QUERIES
+
+    assert list(QUERIES) == [
+        "engine_roundtrip_hashes", "engine_roundtrip_agg",
+        "engine_fps_scan", "engine_paged_scan", "engine_page_read",
+        "engine_bloom_prune", "engine_hive_prune", "engine_manifest",
+        "engine_snapshot_travel", "engine_dataset_stats",
+        "engine_decimal38_roundtrip", "engine_embeddings_roundtrip",
+        "sim_neardup_lsh", "sim_neardup_pairs", "sim_ann_ivf",
+        "sim_cosine_topk", "sim_lsh_buckets",
+        "dedup_minhash_lsh_pairs", "dedup_clusters",
+        "dedup_minhash_signatures", "dedup_simhash", "dedup_ngram_jaccard",
+        "dedup_exact",
+        "text_contamination", "text_pack_sequences", "text_chunk_tokens",
+        "text_sample_stratified", "text_redact_pii", "text_langid",
+        "text_quality", "text_token_count", "text_fingerprint",
+        "mm_binary_meta", "mm_decode_features", "mm_frame_sample",
+        "q_dict_codes", "q_rle_runs", "q_delta_stats", "q_cardinality_stats",
+        "q1_pricing_summary", "q3_shipping_topk", "q_join_agg_nation",
+        "q_window_rank", "q_rollup_pricing", "q_cube_volumes",
+        "q_sort_topk", "q_filter_project", "q_column_stats",
+        "q_count_filters", "q_partition_values",
+    ]
+    assert set(QUERIES) == set(ORACLES)
+

@@ -239,9 +239,9 @@ def test_merge_and_drill_scheme(tmp_path):
     subdirs = sorted(p for p in os.listdir(out)
                      if not p.startswith("_"))
     assert subdirs == ["go", "py", "rs"]  # bare label dirs
-    from fastparquet_spark.format.dataset import dataset_metadata
+    from fastparquet_spark.format.dataset import load_dataset_metas
 
-    metas = dataset_metadata(out, use_sidecar=False)
+    metas = load_dataset_metas(out, use_sidecar=False)[1]
     assert all(m["partitions"].get("dir0") in ("go", "py", "rs")
                for m in metas)
 

@@ -2,7 +2,7 @@
 append, :1156-1193 merge):
 
 - write_metadata_sidecar merges every part footer with file_path set;
-- dataset_metadata reads the WHOLE dataset's metadata from that one
+- load_dataset_metas reads the WHOLE dataset's metadata from that one
   file (proved by open/read counting);
 - append_dataset adds a new generation, re-merges the sidecar, and
   statistics reflect old+new;
@@ -18,9 +18,9 @@ import pyarrow.parquet as pq
 import pytest
 
 from fastparquet_spark.format.dataset import (
-    dataset_metadata,
     dataset_statistics,
     filter_row_groups,
+    load_dataset_metas,
     write_metadata_sidecar,
 )
 from fastparquet_spark.io import CountingFS, LocalFS
@@ -233,7 +233,7 @@ def test_common_metadata_sidecar_written_and_opens(spark, tmp_path):
 
     from fastparquet_spark.engine import append_dataset, encode_dataset, synthetic_source_table
     from fastparquet_spark.format.dataset import (
-        dataset_metadata, write_metadata_sidecar,
+        load_dataset_metas, write_metadata_sidecar,
     )
 
     out = str(tmp_path / "cm")
@@ -249,15 +249,15 @@ def test_common_metadata_sidecar_written_and_opens(spark, tmp_path):
     full = pq.ParquetFile(os.path.join(out, "_metadata"))
     assert cm.schema_arrow.names == full.schema_arrow.names
     assert cm.metadata.num_row_groups == 0
-    # our own dataset_metadata path still works
-    assert sum(rg["num_rows"] for m in dataset_metadata(out)
+    # our own load_dataset_metas path still works
+    assert sum(rg["num_rows"] for m in load_dataset_metas(out)[1]
                for rg in m["fmd"]["row_groups"]) == 600
     # append refreshes both sidecars (same mtime generation)
     append_dataset(spark, synthetic_source_table(spark, 100, partitions=1),
                    out, partition_cols=(), num_partitions=1, resume=False)
     cm2 = pq.ParquetFile(os.path.join(out, "_common_metadata"))
     assert cm2.metadata.num_row_groups == 0
-    assert sum(rg["num_rows"] for m in dataset_metadata(out)
+    assert sum(rg["num_rows"] for m in load_dataset_metas(out)[1]
                for rg in m["fmd"]["row_groups"]) == 700
 
 
@@ -300,7 +300,7 @@ def test_append_resume_reuses_interrupted_generation(spark, tmp_path):
     # total rows exactly once
     assert spark.read.parquet(out).count() == 1600
     # and the sidecar is consistent again
-    n = sum(rg["num_rows"] for m in dataset_metadata(out)
+    n = sum(rg["num_rows"] for m in load_dataset_metas(out)[1]
             for rg in m["fmd"]["row_groups"])
     assert n == 1600
     # the completed resume cleared its marker
@@ -337,7 +337,7 @@ def test_append_never_resumes_completed_generation(spark, tmp_path):
     assert glob.glob(f"{out}/part-g002-*.parquet")
     assert not any(r["skipped"] for r in rows)
     assert spark.read.parquet(out).count() == 2000
-    n = sum(rg["num_rows"] for m in dataset_metadata(out)
+    n = sum(rg["num_rows"] for m in load_dataset_metas(out)[1]
             for rg in m["fmd"]["row_groups"])
     assert n == 2000
 
@@ -389,9 +389,9 @@ def test_append_drops_sidecar_entries_of_deleted_files(spark, tmp_path):
     os.remove(gone)
     append_dataset(spark, _df(spark, 900, 1200), out, num_partitions=2,
                    salt_rows=10**9, resume=False)
-    listed = [m["file"] for m in dataset_metadata(out)]
+    listed = [m["file"] for m in load_dataset_metas(out)[1]]
     assert os.path.basename(gone) not in listed
     assert all(os.path.exists(os.path.join(out, f)) for f in listed)
-    assert sum(rg["num_rows"] for m in dataset_metadata(out)
+    assert sum(rg["num_rows"] for m in load_dataset_metas(out)[1]
                for rg in m["fmd"]["row_groups"]) == 1200 - lost
     assert dataset_statistics(out)["content"]["num_values"] == 1200 - lost

@@ -141,9 +141,9 @@ def test_parquet_java_differential(spark, tmp_path):
      .option("parquet.bloom.filter.enabled#n", "true")
      .option("parquet.bloom.filter.expected.ndv#n", "30000")
      .parquet(out))
-    from fastparquet_spark.format.dataset import dataset_metadata
+    from fastparquet_spark.format.dataset import load_dataset_metas
 
-    metas = [m for m in dataset_metadata(out)]
+    metas = [m for m in load_dataset_metas(out)[1]]
     cmds = {".".join(cc["meta_data"]["path_in_schema"]): cc["meta_data"]
             for cc in metas[0]["fmd"]["row_groups"][0]["columns"]}
     assert cmds["k"].get("bloom_filter_offset") is not None

@@ -9,7 +9,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from fastparquet_spark.format import read_file, write_file
-from fastparquet_spark.format.dataset import dataset_metadata
+from fastparquet_spark.format.dataset import load_dataset_metas
 from fastparquet_spark.engine.file_job import plan_splits
 
 
@@ -54,7 +54,7 @@ def test_glob_inputs(tmp_path):
                    pa.table({"a": pa.array(range(i * 10, i * 10 + 10))}))
     write_file(str(tmp_path / "other.parquet"),
                pa.table({"a": pa.array([99])}))
-    metas = dataset_metadata(str(tmp_path / "x-*.parquet"))
+    metas = load_dataset_metas(str(tmp_path / "x-*.parquet"))[1]
     assert [m["file"] for m in metas] == [f"x-{i}.parquet" for i in range(3)]
     splits = plan_splits(str(tmp_path / "x-*.parquet"))
     assert sum(s["rows"] for s in splits) == 30
@@ -79,8 +79,8 @@ def test_arrowfs_multisegment_glob(tmp_path):
     assert got == sorted(got)
     # final-segment-only globs still work (flat listing path)
     assert len(fs.glob(f"file://{tmp_path}/lang=py/part-*.parquet")) == 2
-    # and dataset_metadata accepts the multi-segment URI glob end to end
-    metas = dataset_metadata(pattern)
+    # and load_dataset_metas accepts the multi-segment URI glob end to end
+    metas = load_dataset_metas(pattern)[1]
     assert len(metas) == 4
 
 
@@ -102,7 +102,7 @@ def test_file_uri_roundtrip_through_arrowfs(spark, tmp_path):
     man2 = encode_dataset(spark, df, uri, num_partitions=2,
                           salt_rows=10**9).collect()
     assert all(m.skipped for m in man2)
-    metas = dataset_metadata(uri)
+    metas = load_dataset_metas(uri)[1]
     assert sum(m["fmd"]["num_rows"] for m in metas) == 500
     assert spark.read.parquet(f"{tmp_path}/ds").count() == 500
     # match-all paged_read takes the STREAMING scan-unit path

@@ -12,9 +12,9 @@ from fastparquet_spark.api import ParquetFile, sorted_partitioned_columns
 from fastparquet_spark.engine import paged_read
 from fastparquet_spark.format import write_file
 from fastparquet_spark.format.dataset import (
-    dataset_metadata,
     dataset_statistics,
     filter_row_groups,
+    load_dataset_metas,
 )
 
 
@@ -34,7 +34,7 @@ def dataset_dir(tmp_path, rng):
 
 
 def test_dataset_metadata_and_statistics(dataset_dir):
-    metas = dataset_metadata(dataset_dir)
+    metas = load_dataset_metas(dataset_dir)[1]
     assert len(metas) == 3
     assert sum(m["fmd"]["num_rows"] for m in metas) == 6000
     stats = dataset_statistics(dataset_dir)
@@ -97,11 +97,11 @@ def _drill_fixture(tmp_path):
 
 def test_drill_scheme_detection_and_values(tmp_path):
     from fastparquet_spark.format.dataset import (
-        dataset_metadata, detect_scheme,
+        detect_scheme, load_dataset_metas,
     )
 
     root = _drill_fixture(tmp_path)
-    metas = dataset_metadata(root)
+    metas = load_dataset_metas(root)[1]
     assert detect_scheme([m["file"] for m in metas]) == "drill"
     parts = {m["file"]: m["partitions"] for m in metas}
     assert parts["2020/emea/part-0.parquet"] == {"dir0": 2020, "dir1": "emea"}

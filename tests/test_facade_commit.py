@@ -74,10 +74,13 @@ def test_failed_write_leaves_target_unchanged(tmp_path, case):
 
 @pytest.mark.parametrize("scheme", ["", "file://"])
 def test_failed_write_to_new_directory_leaves_nothing(tmp_path, scheme):
-    with pytest.raises(ValueError, match="declared non-null"):
-        write(f"{scheme}{tmp_path}/ds", _BAD, has_nulls=False,
-              file_scheme="hive", partition_on=["k"])
-    assert os.listdir(tmp_path) == []
+    """A failed hive write removes every directory it made: the target,
+    its key directories and the target's missing ancestors."""
+    for target in ("ds", "new/ds", "new/deeper/ds"):
+        with pytest.raises(ValueError, match="declared non-null"):
+            write(f"{scheme}{tmp_path}/{target}", _BAD, has_nulls=False,
+                  file_scheme="hive", partition_on=["k"])
+        assert os.listdir(tmp_path) == []
 
 
 def test_failed_publish_takes_back_the_renamed_finals(tmp_path, monkeypatch):
@@ -145,7 +148,6 @@ def test_merge_fetches_each_footer_once(tmp_path, monkeypatch):
         return fetch_footers(ps, fs, **kw)
 
     monkeypatch.setattr(dataset, "fetch_footers", counting)
-    monkeypatch.setattr(api, "fetch_footers", counting)
     pf = api.merge(paths)
     assert sorted(fetched) == sorted(paths)
     assert pf.count() == 3

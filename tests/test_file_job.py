@@ -263,3 +263,31 @@ def test_publish_three_twins_hammer(tmp_path):
             (trial, os.listdir(d), errs)
         assert not errs, (trial, errs)
         assert pq.read_table(opath).num_rows == 200
+
+
+def test_one_file_reads_and_encodes(spark, src_dir, tmp_path):
+    """A single parquet file is an input like a directory: ``encode_files``
+    encodes all its rows (it planned no split and wrote nothing), and
+    ``paged_read`` and ``format("fps")`` return the rows
+    ``spark.read.parquet`` does (they raised ``no parquet files``)."""
+    import glob
+
+    from fastparquet_spark.engine import paged_read
+    from fastparquet_spark.sources import FpsDataSource
+
+    _materialize(spark, src_dir)
+    one = sorted(glob.glob(f"{src_dir}/part-*.parquet"))[0]
+    want = sorted(spark.read.parquet(one).collect())
+    assert want
+    man = encode_files(spark, one, str(tmp_path / "enc"),
+                       rows_per_task=800, resume=False).collect()
+    assert sum(r["rows"] for r in man) == len(want)
+    assert sorted(spark.read.parquet(
+        str(tmp_path / "enc" / "part-*.parquet")).collect()) == want
+    assert sorted(paged_read(spark, one, None).collect()) == want
+    try:
+        spark.dataSource.register(FpsDataSource)
+    except Exception as e:  # already registered in this session
+        if "already" not in str(e).lower():
+            raise
+    assert sorted(spark.read.format("fps").load(one).collect()) == want

@@ -74,6 +74,47 @@ def test_append_accumulates(registered, tmp_path):
     assert spark.read.format("fpsc").load(out).count() == 1500
 
 
+def test_append_type_conflict_refused(registered, tmp_path):
+    """An append whose column type conflicts with the containers' is
+    refused before any task runs, and the dataset still reads; a new
+    column is accepted and reads as typed nulls in the old rows."""
+    spark = registered
+    out = str(tmp_path / "fpsc_conflict")
+    spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string") \
+        .write.format("fpsc").mode("append").save(out)
+    files = sorted(glob.glob(f"{out}/*"))
+    with pytest.raises(Exception, match="type conflict on column 'v'"):
+        spark.createDataFrame([(3, 1.5)], "id long, v double") \
+            .write.format("fpsc").mode("append").save(out)
+    assert sorted(glob.glob(f"{out}/*")) == files
+    assert sorted(spark.read.format("fpsc").load(out).collect()) == [
+        (1, "a"), (2, "b")]
+    spark.createDataFrame([(3, "c", 7)], "id long, v string, w int") \
+        .write.format("fpsc").mode("append").save(out)
+    back = spark.read.format("fpsc").load(out)
+    assert back.dtypes == [("id", "bigint"), ("v", "string"), ("w", "int")]
+    assert sorted(back.collect(), key=lambda r: r.id) == [
+        (1, "a", None), (2, "b", None), (3, "c", 7)]
+
+
+def test_timestamp_append_in_session_zone(registered, tmp_path):
+    """A zone-aware timestamp is written in the session's zone, which
+    the driver-side append check cannot see: an append of the same
+    column in a non-UTC session is accepted and reads back."""
+    spark = registered
+    out = str(tmp_path / "fpsc_tz")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        for day in (1, 2):
+            spark.sql(f"SELECT {day} AS id, TIMESTAMP'2024-03-0{day} "
+                      f"12:00:00' AS t").write.format("fpsc") \
+                .mode("append").save(out)
+        assert spark.read.format("fpsc").load(out).count() == 2
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
 def test_chunked_containers(registered, tmp_path):
     spark = registered
     out = str(tmp_path / "fpsc_chunks")

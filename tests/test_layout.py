@@ -18,7 +18,6 @@ from fastparquet_spark import api
 from fastparquet_spark.engine.scan_job import plan_scan, scan_unit
 from fastparquet_spark.format.dataset import (
     _split_by_key,
-    dataset_metadata,
     filter_row_groups,
     load_dataset_metas,
     read_pages,
@@ -99,7 +98,7 @@ def test_numeric_partition_values_resolve_to_one_type(tmp_path):
     root = _hive(tmp_path, ["1", "1.5"])
     pf = api.ParquetFile(root)
     assert [type(v) for v in pf.cats["k"]] == [float, float]
-    assert sorted(m["partitions"]["k"] for m in dataset_metadata(root)) \
+    assert sorted(m["partitions"]["k"] for m in load_dataset_metas(root)[1]) \
         == [1.0, 1.5]
     got, _units = _scan(root, None)
     assert got.schema.field("k").type == pa.float64()
@@ -116,7 +115,7 @@ def test_drill_dataset_keeps_typed_dir_values(tmp_path):
                                                               "2021"],
                        "v": [1, 2, 3]})
     api.write(out, df, file_scheme="drill", partition_on=["year", "region"])
-    metas = dataset_metadata(out)
+    metas = load_dataset_metas(out)[1]
     assert {"dir0": 2020, "dir1": "emea"} in [m["partitions"] for m in metas]
     pf = api.ParquetFile(out)
     assert pf.cats == {"dir0": [2020, 2021], "dir1": ["2021", "apac", "emea"]}
@@ -142,7 +141,7 @@ def test_glob_keys_files_by_their_path_under_the_common_root(tmp_path):
             bloom_filters={"s": 0.01})
     glob = f"{root}/*/*.parquet"
     files = ["k=1/part.0.parquet", "k=2/part.0.parquet"]
-    metas = dataset_metadata(glob)
+    metas = load_dataset_metas(glob)[1]
     assert [m["file"] for m in metas] == files
     assert [m["partitions"] for m in metas] == [{"k": 1}, {"k": 2}]
     for where in (glob, str(root)):
@@ -227,7 +226,7 @@ def test_nan_hive_keys_keep_their_rows(tmp_path):
     df = api.ParquetFile(out).to_pandas()
     assert sorted(df["v"]) == [1, 2, 3, 4]
     assert sorted(df[df["k"].isna()]["v"]) == [2, 4]
-    assert sorted(m["file"] for m in dataset_metadata(out)) == [
+    assert sorted(m["file"] for m in load_dataset_metas(out)[1]) == [
         "k=1.0/part.0.parquet", "k=2.0/part.2.parquet",
         "k=nan/part.1.parquet"]
 
@@ -243,7 +242,7 @@ def test_nan_hive_value_is_one_cat(tmp_path):
               file_scheme="hive", partition_on=["k"])
     api.write(out, pa.table({"k": [nan], "v": [5]}), file_scheme="hive",
               partition_on=["k"], append=True)
-    assert len(dataset_metadata(out)) == 4
+    assert len(load_dataset_metas(out)[1]) == 4
     cats = api.ParquetFile(out).cats["k"]
     assert cats[:2] == [1.0, 2.0] and len(cats) == 3 and math.isnan(cats[2])
     scheme, pcats = api.paths_to_cats(["k=nan/a", "k=nan/b", "k=1.0/c"])
@@ -268,7 +267,7 @@ def test_multi_column_null_keys_split_once(tmp_path):
     assert [p.num_rows for _k, p in pieces] == [100] * 6
     out = str(tmp_path / "ds")
     api.write(out, tbl, file_scheme="hive", partition_on=["tag", "year"])
-    assert len(dataset_metadata(out)) == 6
+    assert len(load_dataset_metas(out)[1]) == 6
     assert sorted(api.ParquetFile(out).to_pandas()["v"]) == list(range(n))
 
 

@@ -20,6 +20,7 @@ from fastparquet_spark.engine.file_job import (
 )
 from fastparquet_spark.engine.fpsc_job import encode_dataset_fpsc, read_fpsc
 from fastparquet_spark.engine.scan_job import paged_read
+from fastparquet_spark.format.dataset import load_dataset_metas
 from fastparquet_spark.streaming import encode_stream
 
 PINS = {
@@ -41,6 +42,7 @@ PINS = {
     paged_read: ["spark", "in_dir", "filters", "columns"],
     read_fpsc: ["spark", "in_dir", "columns"],
     plan_splits: ["input_dir", "rows_per_task"],
+    load_dataset_metas: ["path", "fs", "fmt", "use_sidecar"],
     encode_stream: [
         "spark", "stream_df", "out_dir", "checkpoint_dir", "compression",
         "partition_cols", "num_partitions", "available_now", "fmt"],

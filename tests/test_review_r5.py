@@ -34,9 +34,9 @@ import pytest
 from fastparquet_spark.format import read_file, write_file
 from fastparquet_spark.format.dataset import (
     _bloom_value_bytes,
-    dataset_metadata,
     dataset_statistics,
     filter_row_groups,
+    load_dataset_metas,
 )
 
 
@@ -149,7 +149,7 @@ def test_glob_above_root_hive_dirs_are_not_partitions(tmp_path):
     d.mkdir(parents=True)
     t = pa.table({"k": pa.array(range(10))})
     pq.write_table(t, str(d / "part-0.parquet"))
-    metas = dataset_metadata(f"{d}/*.parquet")
+    metas = load_dataset_metas(f"{d}/*.parquet")[1]
     assert metas[0]["partitions"] == {}  # no phantom 'run' column
     # 'run' is no column of the dataset: a filter on it raises, as on
     # any unknown column (a phantom partition would prune instead)

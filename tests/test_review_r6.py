@@ -12,7 +12,7 @@
 5. read_pages / filter_pages accept None/[] filters and flat-read
    files that also contain nested columns;
 6. a glob matching a directory named *.parquet is skipped by
-   dataset_metadata (not crashed on).
+   load_dataset_metas (not crashed on).
 """
 
 from __future__ import annotations
@@ -126,7 +126,7 @@ def test_read_pages_none_filters_and_nested_file(tmp_path):
 
 
 def test_glob_dataset_metadata_skips_directories(tmp_path):
-    from fastparquet_spark.format.dataset import dataset_metadata
+    from fastparquet_spark.format.dataset import load_dataset_metas
 
     d = tmp_path / "g"
     (d / "out.parquet").mkdir(parents=True)  # Spark-style dir dataset
@@ -134,7 +134,7 @@ def test_glob_dataset_metadata_skips_directories(tmp_path):
                    str(d / "out.parquet" / "part-0.parquet"))
     pq.write_table(pa.table({"v": pa.array(range(3))}),
                    str(d / "loose.parquet"))
-    metas = dataset_metadata(str(d / "*.parquet"))
+    metas = load_dataset_metas(str(d / "*.parquet"))[1]
     assert [m["file"] for m in metas] == ["loose.parquet"]
 
 

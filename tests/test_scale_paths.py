@@ -23,9 +23,9 @@ import pytest
 from fastparquet_spark.engine import paged_read
 from fastparquet_spark.format import write_file
 from fastparquet_spark.format.dataset import (
-    dataset_metadata,
     dataset_statistics,
     filter_row_groups,
+    load_dataset_metas,
 )
 from fastparquet_spark.io import CountingFS, LocalFS, read_tail_footer
 
@@ -47,7 +47,7 @@ def test_dataset_metadata_reads_only_footers(tmp_path):
     data_bytes = sum(os.path.getsize(p)
                      for p in glob.glob(str(tmp_path / "*.parquet")))
     counting = CountingFS(LocalFS())
-    metas = dataset_metadata(str(tmp_path), fs=counting)
+    metas = load_dataset_metas(str(tmp_path), fs=counting)[1]
     assert len(metas) == 4
     assert sum(len(m["fmd"]["row_groups"]) for m in metas) == 4 * 3
     # each footer is ~KBs; the proof: metadata never touches page data.

@@ -783,18 +783,17 @@ def engine_page_read(spark, sf_dir):
     recomputes the rows from the raw table, so the per-page stats, the
     OffsetIndex spans and the residual Arrow filter must all be exactly
     right."""
-    from fastparquet_spark.format.dataset import read_pages
+    import pyarrow as pa_c
+
+    from fastparquet_spark.format.dataset import data_files, read_pages
+    from fastparquet_spark.io import get_fs
 
     docs = relational.load(spark, sf_dir, "documents")
     out = _encoded(spark, docs, compression="ZSTD", partition_cols=(),
                    num_partitions=2, sort_within=("doc_id",), page_rows=100)
-    import glob as _glob
-
-    import pyarrow as pa_c
-
     pieces = [read_pages(p, [("doc_id", ">=", 150), ("doc_id", "<", 260)],
                          columns=["doc_id", "lang", "n_chars"], exact=True)
-              for p in sorted(_glob.glob(f"{out}/part-*.parquet"))]
+              for p in data_files(out, get_fs(out))]
     tbl = pa_c.concat_tables([p for p in pieces if p.num_rows],
                              promote_options="default") \
         if any(p.num_rows for p in pieces) else pieces[0]

@@ -43,6 +43,7 @@ from fastparquet_spark.format.dataset import (
     partition_type, union_leaf_elems,
 )
 from fastparquet_spark.format.predicate import _file_clauses, dnf
+from fastparquet_spark.io import is_glob
 
 
 def open_scan(path, fs=None, fmt=ParquetFormat) -> tuple[str, list[dict]]:
@@ -52,7 +53,7 @@ def open_scan(path, fs=None, fmt=ParquetFormat) -> tuple[str, list[dict]]:
     root, metas = load_dataset_metas(path, fs, fmt)
     if not metas:
         raise ValueError(f"no {fmt.name} files match {path!r}"
-                         if any(c in str(path) for c in "*?[")
+                         if is_glob(str(path))
                          else f"no {fmt.name} files under {path!r}")
     return root, metas
 

@@ -45,6 +45,7 @@ from fastparquet_spark.format.metadata import ConvertedType, Type
 from fastparquet_spark.format.predicate import _apply_row_filter_dnf
 from fastparquet_spark.format.reader import _binary_array, _fill_rows, _table
 from fastparquet_spark.format.writer import _binary_parts, _map_type, _one_array
+from fastparquet_spark.io import get_fs, read_tail
 
 MAGIC = b"FPSC"
 
@@ -167,7 +168,7 @@ def write_container(sink, table: pa.Table, compression: str = "ZSTD",
     parquet 2.59 on identical input).  Undecided columns keep the
     measured dual trial."""
     own = isinstance(sink, str)
-    f = open(sink, "wb") if own else sink
+    f = get_fs(sink).open_write(sink) if own else sink
     codec = comp.codec_id(compression)
     try:
         f.write(MAGIC)
@@ -375,15 +376,11 @@ def _open(source, fs=None):
     if isinstance(source, (bytes, bytearray, memoryview)):
         buf = bytes(source)  # bytes stay uncopied
         return io.BytesIO(buf), len(buf), "<FPSC bytes>"
-    from fastparquet_spark.io import get_fs
-
     fs = get_fs(source, fs)
     return fs.open_read(source), fs.size(source), source
 
 
 def _footer(f, size: int, name: str) -> dict:
-    from fastparquet_spark.io import read_tail
-
     return json.loads(read_tail(f, size, name, MAGIC)[:-8])
 
 
@@ -492,27 +489,18 @@ def check_container_append(path: str, schema: pa.Schema) -> None:
     container holds with another type raises ``ValueError`` before any
     task runs, and a new column is accepted (reads fill it with typed
     nulls).  A zone-aware timestamp is written in the task's session
-    zone, which is unknown here: it meets a zone-aware column of the
-    same unit in whatever zone that holds.  A path that is no directory
-    takes any schema."""
+    zone, unknown here; the union rule takes every zone of one unit as
+    one type.  A path that is no directory takes any schema."""
     from fastparquet_spark.format.dataset import (
         load_dataset_metas, union_leaf_elems,
     )
-    from fastparquet_spark.io import get_fs
 
     fs = get_fs(path)
     if not fs.isdir(path):
         return
     metas = load_dataset_metas(path, fs, FpscFormat)[1]
-    old = union_leaf_elems(metas)[1]
-    new = []
-    for f in schema:
-        name = _arrow_type_name(f.type)
-        held = old.get(f.name, {}).get("arrow_type", "")
-        if pa.types.is_timestamp(f.type) and f.type.tz \
-                and held.startswith(f"timestamp[{f.type.unit}, tz="):
-            name = held
-        new.append({"name": f.name, "arrow_type": name})
+    new = [{"name": f.name, "arrow_type": _arrow_type_name(f.type)}
+           for f in schema]
     union_leaf_elems([*metas, {"file": "the append", "fmd": {"schema": [
         {"name": "schema", "num_children": len(new)}, *new]}}])
 

@@ -67,13 +67,17 @@ import struct
 from contextlib import closing
 from typing import Any
 
+import pyarrow as pa
+
 from fastparquet_spark.format.metadata import ConvertedType, Type
 from fastparquet_spark.format.predicate import (
     _apply_row_filter_dnf, _chunk_may_match, _file_clauses, _stat_may_match,
     check_columns, dnf, point_values,
 )
 from fastparquet_spark.format.reader import read_footer, read_footer_tail
-from fastparquet_spark.io import fetch_footers, get_fs
+from fastparquet_spark.io import (
+    common_root, fetch_footers, get_fs, is_glob, relative_to,
+)
 
 
 def _decode_stat(raw, elem: dict):
@@ -86,8 +90,6 @@ def _decode_stat(raw, elem: dict):
     footer's) passes through."""
     v = _decode_plain_stat(raw, elem) if isinstance(raw, bytes) else raw
     if type(v) is int and _is_temporal(elem):
-        import pyarrow as pa
-
         return pa.scalar(v, leaf_type(elem)).as_py()
     return v
 
@@ -258,8 +260,6 @@ def partition_type(values):
     posture: bool when every value is a bool, int64 when every value is
     an int, float64 when every value is a number, else (and for a
     column of nulls) string.  Resolved values keep their type."""
-    import pyarrow as pa
-
     vals = [v for v in values if v is not None]
     if vals and all(isinstance(v, bool) for v in vals):
         return pa.bool_()
@@ -280,8 +280,6 @@ def _metas(files, fmds, scheme: str = "hive", paths=None) -> list[dict]:
     column (k=1 beside k=1.5) holds floats.  A file whose path lacks
     a partition column (unequal depths) holds it as null, as it holds
     a union column it lacks."""
-    import pyarrow as pa
-
     texts = [_partition_values(p, scheme) for p in (paths or files)]
     names = list({k: None for t in texts for k in t})
     texts = [{k: t.get(k) for k in names} for t in texts]
@@ -344,8 +342,12 @@ def _elem_sig(e):
     Each scan unit decodes with its OWN footer and casts to the union
     schema, so two elements conflict exactly when their Arrow types
     differ (scale/precision/timestamp unit/integer width are all part
-    of the Arrow type).  Group nodes have no Arrow type; they compare
-    on child count + normalized LIST/MAP annotation."""
+    of the Arrow type) — except a zone-aware timestamp's zone, which
+    only labels the UTC instants it holds (an FPSC footer records the
+    writing session's zone): one unit is one type, and the by-name cast
+    relabels without touching the instants.  Group nodes have no Arrow
+    type; they compare on child count + normalized LIST/MAP
+    annotation."""
     nc = e.get("num_children")
     if nc:
         lt = e.get("logicalType") or {}
@@ -359,11 +361,14 @@ def _elem_sig(e):
             ann = None
         return ("group", nc, ann)
     try:
-        return ("leaf", str(leaf_type(e)))
+        t = leaf_type(e)
     except Exception:  # unknown physical/logical combo: raw fallback
         return ("leaf?", e.get("type"), e.get("converted_type"),
                 e.get("type_length"), e.get("scale"), e.get("precision"),
                 _logical_sig(e.get("logicalType")))
+    if pa.types.is_timestamp(t) and t.tz:
+        return ("leaf", f"timestamp[{t.unit}, zone-aware]")
+    return ("leaf", str(t))
 
 
 def leaf_type(e: dict):
@@ -502,25 +507,16 @@ class ParquetFormat:
         # consumer takes each batch before the next is decoded); peak
         # memory is one batch, not one file.  The selective path above
         # is byte-proof-tested.
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from fastparquet_spark.io import _is_uri
-
-        # local paths go to pyarrow as plain paths (OS-level reads);
-        # URIs (s3/gs/hdfs) open through the io layer's pyarrow.fs
-        # NativeFile — pq.ParquetFile itself does no URI inference
-        src = get_fs(path).open_read(path) if _is_uri(path) else path
-        try:
+        # the seam's file, local or remote (pq.ParquetFile does no URI
+        # inference); closed even on partial consumption — long scan
+        # jobs leak connections/fds otherwise
+        with get_fs(path).open_read(path) as src:
             for b in pq.ParquetFile(src).iter_batches(
                     batch_size=131_072, row_groups=sorted(ris),
                     columns=cols, use_threads=False):
                 yield pa.Table.from_batches([b])
-        finally:
-            # close the remote handle even on partial consumption —
-            # long scan jobs leak connections/fds otherwise
-            if src is not path:
-                src.close()
 
     def open(self, sink, schema):
         from fastparquet_spark.format.writer import ParquetWriter
@@ -538,8 +534,6 @@ def data_files(root: str, fs, suffix: str = ParquetFormat.suffix) -> list[str]:
     ``suffix`` file below it with no hidden (``.``) or metadata
     (``_``) segment in its path relative to ``root`` — so staged files,
     manifests and sidecars are never data."""
-    from fastparquet_spark.io import relative_to
-
     root = root.rstrip("/")
     return [p for p in fs.walk_files(root)
             if (rel := relative_to(p, root)).endswith(suffix)
@@ -572,14 +566,12 @@ def load_dataset_metas(path, fs=None, fmt=ParquetFormat,
     Partition values are resolved to their column's type
     (:func:`_metas`).  No file gives empty metas; a caller that needs
     data raises."""
-    from fastparquet_spark.io import common_root, relative_to
-
     if isinstance(path, (list, tuple)):
         files = list(path)
         fs = get_fs(files[0] if files else ".", fs)
     else:
         fs = get_fs(path, fs)
-        if any(c in path for c in "*?["):
+        if is_glob(path):
             files = sorted(
                 p for p in fs.glob(path)
                 if not os.path.basename(p).startswith(("_", "."))
@@ -596,8 +588,6 @@ def load_dataset_metas(path, fs=None, fmt=ParquetFormat,
 
 def _directory_metas(root: str, fs, fmt, use_sidecar: bool):
     """:func:`load_dataset_metas` of the directory ``root``."""
-    from fastparquet_spark.io import relative_to
-
     fmd = read_sidecar(root, fs) if use_sidecar and fmt.sidecar else None
     if fmd is not None:
         by_file: dict[str, list] = {}
@@ -705,7 +695,6 @@ def write_metadata_sidecar(out_dir: str, fs=None, base: dict | None = None,
     from fastparquet_spark.format import thrift
     from fastparquet_spark.format.metadata import MAGIC, SPECS
     from fastparquet_spark.format.writer import CREATED_BY
-    from fastparquet_spark.io import relative_to
 
     fs = get_fs(out_dir, fs)
     if base is None and files is None:

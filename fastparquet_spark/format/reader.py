@@ -53,6 +53,7 @@ from fastparquet_spark.format.metadata import (
     PageType,
     Type,
 )
+from fastparquet_spark.io import get_fs, read_tail
 
 
 def read_footer(buf: bytes) -> dict:
@@ -471,8 +472,6 @@ class _ByteSource:
             self._buf = memoryview(bytes(source))
             self._f = None
         elif isinstance(source, (str, os.PathLike)):
-            from fastparquet_spark.io import get_fs
-
             self.name = source = os.fspath(source)
             self._buf = None
             self._f = get_fs(source, fs).open_read(source)
@@ -497,8 +496,6 @@ class _ByteSource:
             self.data_end = len(self._buf) - 8 - int.from_bytes(
                 self._buf[-8:-4], "little")
             return fmd
-        from fastparquet_spark.io import read_tail
-
         self._f.seek(0, 2)
         size = self._f.tell()
         tail = read_tail(self._f, size, self.name)

@@ -73,6 +73,7 @@ from fastparquet_spark.format.metadata import (
     Repetition,
     Type,
 )
+from fastparquet_spark.io import get_fs
 
 CREATED_BY = "fastparquet_spark 0.1.0"
 
@@ -510,8 +511,8 @@ def write_file(sink, table: pa.Table, compression: str | int = "SNAPPY",
     min/max stats can't discriminate.
     Returns a FileResult with per-column lineage metrics.
     """
-    own = isinstance(sink, (str, bytes))
-    f = open(sink, "wb") if own else sink
+    own = isinstance(sink, str)
+    f = get_fs(sink).open_write(sink) if own else sink
     try:
         w = ParquetWriter(f, table.schema, compression, encodings,
                           stats=stats, data_page_version=data_page_version,

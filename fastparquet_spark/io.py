@@ -4,10 +4,12 @@ The reference routes every open/list through fsspec so the same code
 reads local disk, S3, GCS or HDFS (fastparquet/api.py:95-162 open_with,
 fastparquet/util.py:146-167).  fsspec is not available in this sandbox,
 so the seam is built on ``pyarrow.fs`` — the public, baked-in
-equivalent: ``FileSystem.from_uri`` resolves ``s3://``/``gs://``/
-``hdfs://``/``file://`` URIs to the matching C++ filesystem, and plain
-paths fall back to a thin local implementation (os + open) with true
-atomic rename.
+equivalent — and has ONE implementation, :class:`ArrowFS`: plain paths
+get ``pyarrow.fs.LocalFileSystem`` (cwd-relative paths stay relative),
+and ``FileSystem.from_uri`` resolves ``s3://``/``gs://``/``hdfs://``/
+``file://`` URIs to the matching C++ filesystem.  Local runs therefore
+exercise the code object-store runs take; on the local disk ``replace``
+is an atomic rename and ``rmdir`` the kernel's (never recursive).
 
 Every engine module resolves paths through :func:`get_fs` and talks to
 the small ``FS`` protocol below, so pointing a job at object storage is
@@ -24,19 +26,27 @@ idempotence the reference's overwrite path relies on).
 
 from __future__ import annotations
 
-import glob as _glob
+import fnmatch
 import os
+import posixpath
+
+from pyarrow.fs import FileSelector, FileSystem, FileType, LocalFileSystem
 
 
 def _is_uri(path: str) -> bool:
     return "://" in path
 
 
+def is_glob(path: str) -> bool:
+    """Whether ``path`` holds a ``glob.glob`` wildcard."""
+    return any(c in path for c in "*?[")
+
+
 def common_root(paths: list[str]) -> str:
     """Deepest common DIRECTORY of the given file paths, URI-safe:
     ``os.path.commonpath`` normalizes ``s3://b/x`` to ``s3:/b/x``
     (collapsing the scheme's double slash), after which ``get_fs``
-    routes every downstream read to LocalFS — so the scheme prefix is
+    routes every downstream read to the local disk — so the scheme is
     split off before commonpath and re-attached.
 
     cwd-relative inputs resolve to ``"."`` (a bare ``a.parquet`` has
@@ -77,55 +87,18 @@ def relative_to(path: str, base: str) -> str:
     return path[len(b):] if path.startswith(b) else os.path.basename(path)
 
 
-class LocalFS:
-    """Plain-local FS: zero overhead over os/open, atomic os.replace."""
-
-    def open_read(self, path: str):
-        return open(path, "rb")
-
-    def open_write(self, path: str):
-        return open(path, "wb")
-
-    def size(self, path: str) -> int:
-        return os.stat(path).st_size
-
-    def listdir(self, path: str) -> list[str]:
-        return sorted(os.path.join(path, f) for f in os.listdir(path))
-
-    def glob(self, pattern: str) -> list[str]:
-        return sorted(_glob.glob(pattern))
-
-    def exists(self, path: str) -> bool:
-        return os.path.exists(path)
-
-    def makedirs(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-
-    def replace(self, src: str, dst: str) -> None:
-        os.replace(src, dst)
-
-    def remove(self, path: str) -> None:
-        os.remove(path)
-
-    def rmdir(self, path: str) -> None:
-        """Remove the directory ``path``; ``OSError`` unless empty."""
-        os.rmdir(path)
-
-    def isdir(self, path: str) -> bool:
-        return os.path.isdir(path)
-
-    def walk_files(self, path: str) -> list[str]:
-        out = []
-        for root, _dirs, files in os.walk(path):
-            out.extend(os.path.join(root, f) for f in files)
-        return sorted(out)
-
-
 class ArrowFS:
-    """pyarrow.fs-backed FS for URIs (s3://, gs://, hdfs://, file://).
+    """The one FS: a ``pyarrow.fs`` filesystem behind the small protocol
+    every engine module talks to.  ``get_fs`` gives plain paths the
+    local filesystem with an empty prefix and URIs (s3://, gs://,
+    hdfs://, file://) the filesystem ``FileSystem.from_uri`` resolves,
+    so local runs take the code object-store runs take.
 
-    Paths passed in/out keep their scheme so downstream code (Spark
-    reads, manifests) sees the same address space the caller used.
+    Paths passed in and out keep the caller's spelling: a URI keeps its
+    ``scheme`` prefix, and a cwd-relative path stays relative, so
+    downstream code (Spark reads, manifests) sees the address space the
+    caller used.  A missing path raises ``FileNotFoundError``; any
+    other failure an ``OSError``.
     """
 
     def __init__(self, fs, scheme: str):
@@ -142,97 +115,101 @@ class ArrowFS:
         return self._fs.open_input_file(self._strip(path))
 
     def open_write(self, path: str):
-        return self._fs.open_output_stream(self._strip(path))
+        # no compression sniffing: a name ending in .gz is still bytes
+        return self._fs.open_output_stream(self._strip(path),
+                                           compression=None)
 
     def size(self, path: str) -> int:
         info = self._fs.get_file_info(self._strip(path))
-        if info.size is None:
-            # NotFound infos carry size=None — surfacing it produced a
-            # TypeError downstream instead of the real error
+        if info.type == FileType.NotFound:
             raise FileNotFoundError(path)
+        if info.type != FileType.File:
+            raise IsADirectoryError(path)
         return info.size
 
     def listdir(self, path: str) -> list[str]:
-        from pyarrow.fs import FileSelector
-
         infos = self._fs.get_file_info(FileSelector(self._strip(path)))
-        return sorted(self._unstrip(i.path) for i in infos)
+        return sorted(posixpath.join(path, i.base_name) for i in infos)
 
     def glob(self, pattern: str) -> list[str]:
-        # object stores have no server-side glob; emulate by listing from
-        # the deepest wildcard-free prefix and fnmatching full paths —
-        # wildcards may sit in ANY segment (s3://b/ds/lang=*/part-*.pq),
-        # matching LocalFS/glob.glob semantics
-        import fnmatch
-
-        if not any(c in pattern for c in "*?["):
-            # wildcard-free pattern: glob.glob semantics ([path] / [])
+        """``glob.glob`` semantics on any store, which has no
+        server-side glob: the pattern is matched segment by segment
+        (a wildcard never crosses '/', and never matches a dot-hidden
+        name unless its segment starts with '.', so in-flight .stage
+        files are never input), listing only the directories the
+        pattern reaches.  Wildcards may sit in ANY segment
+        (s3://b/ds/lang=*/part-*.pq); a cwd-relative pattern returns
+        cwd-relative paths."""
+        if not is_glob(pattern):
             return [pattern] if self.exists(pattern) else []
-        segs = pattern.split("/")
-        first_wild = next((i for i, s in enumerate(segs)
-                           if any(c in s for c in "*?[")), len(segs))
-        base = "/".join(segs[:first_wild]) or "/"
-        try:
-            if first_wild == len(segs) - 1:
-                cands = self.listdir(base)  # final-segment-only: flat
-            else:
-                cands = self.walk_files(base)
-        except (OSError, FileNotFoundError):
-            return []  # nonexistent prefix: glob.glob returns []
-
-        # match per path SEGMENT ('*' must not cross '/'), the LocalFS /
-        # glob.glob semantics — a naive full-path fnmatch would let
-        # ds/lang=*/part-*.pq swallow files in deeper subdirectories
-        def _seg_match(path: str) -> bool:
-            ps = path.split("/")
-            if len(ps) != len(segs):
-                return False
-            for p, sgm in zip(ps, segs):
-                # glob.glob parity: a wildcard segment never matches a
-                # dot-hidden name (in-flight .stage files must not be
-                # swept into object-store input sets)
-                if p.startswith(".") and not sgm.startswith("."):
-                    return False
-                if not fnmatch.fnmatch(p, sgm):
-                    return False
-            return True
-
-        return sorted(p for p in cands if _seg_match(p))
+        segs = self._strip(pattern).split("/")
+        first = next(i for i, s in enumerate(segs) if is_glob(s))
+        # "" is the cwd; a leading "" segment is the root "/"
+        cands = ["/".join(segs[:first]) or ("/" if first else "")]
+        for i in range(first, len(segs)):
+            seg, last = segs[i], i == len(segs) - 1
+            if not is_glob(seg):
+                cands = [posixpath.join(c, seg) for c in cands]
+                if last:  # listed names exist; a literal one may not
+                    cands = [c for c in cands if self._fs.get_file_info(
+                        c).type != FileType.NotFound]
+                continue
+            nxt = []
+            for c in cands:
+                try:
+                    infos = self._fs.get_file_info(FileSelector(c or "."))
+                except OSError:  # missing, or not a directory
+                    continue
+                nxt.extend(
+                    posixpath.join(c, f.base_name) for f in infos
+                    if (last or f.type == FileType.Directory)
+                    and (seg.startswith(".")
+                         or not f.base_name.startswith("."))
+                    and fnmatch.fnmatchcase(f.base_name, seg))
+            cands = nxt
+        return sorted(self._unstrip(c) for c in cands)
 
     def exists(self, path: str) -> bool:
-        from pyarrow.fs import FileType
-
         return self._fs.get_file_info(self._strip(path)).type != FileType.NotFound
 
     def makedirs(self, path: str) -> None:
         self._fs.create_dir(self._strip(path), recursive=True)
 
     def replace(self, src: str, dst: str) -> None:
-        # atomic where the store supports it (local/HDFS); copy+delete
-        # semantics on S3-likes — see module docstring
+        # an atomic rename where the store has one (local: rename(2),
+        # HDFS); copy+delete on S3-likes — see module docstring
         self._fs.move(self._strip(src), self._strip(dst))
 
     def remove(self, path: str) -> None:
         self._fs.delete_file(self._strip(path))
 
     def rmdir(self, path: str) -> None:
-        """Remove the directory ``path``; ``OSError`` unless empty."""
+        """Remove the directory ``path``; ``OSError`` unless empty.
+        ``delete_dir`` is recursive, so the local disk keeps the
+        kernel's atomic rmdir, and a store lists first."""
+        if self._fs.type_name == "local":
+            os.rmdir(self._strip(path))
+            return
         if self.listdir(path):
             raise OSError(f"directory not empty: {path}")
         self._fs.delete_dir(self._strip(path))
 
     def isdir(self, path: str) -> bool:
-        from pyarrow.fs import FileType
-
         return self._fs.get_file_info(self._strip(path)).type == FileType.Directory
 
     def walk_files(self, path: str) -> list[str]:
-        from pyarrow.fs import FileSelector, FileType
-
-        infos = self._fs.get_file_info(
-            FileSelector(self._strip(path), recursive=True))
+        """Every file below the directory ``path``, sorted; none for a
+        missing one."""
+        infos = self._fs.get_file_info(FileSelector(
+            self._strip(path), recursive=True, allow_not_found=True))
         return sorted(self._unstrip(i.path) for i in infos
                       if i.type == FileType.File)
+
+
+def LocalFS() -> ArrowFS:
+    """The one FS over the local disk, as :func:`get_fs` resolves a
+    plain path (the benchmark harness imports it by this name)."""
+    return ArrowFS(LocalFileSystem(), "")
 
 
 class CountingFS:
@@ -263,7 +240,7 @@ class _CountingFile:
         self._f = f
         self._c = counter
 
-    def read(self, n=-1):
+    def read(self, n=None):  # a NativeFile reads all on None, not -1
         data = self._f.read(n)
         with self._c._lock:
             self._c.bytes_read += len(data)
@@ -279,34 +256,40 @@ class _CountingFile:
         self._f.close()
 
 
-def get_fs(path: str, fs=None):
-    """Resolve a path (or URI) to an FS. An explicit ``fs`` wins."""
+def get_fs(path: str, fs=None) -> ArrowFS:
+    """Resolve a path, URI or glob of either to the one FS.  An
+    explicit ``fs`` wins."""
     if fs is not None:
         return fs
-    if _is_uri(path):
-        from pyarrow.fs import FileSystem
-
-        arrow_fs, inner = FileSystem.from_uri(path)
-        # prefix = everything from_uri consumed BEYOND the inner path —
-        # for hdfs://nn:8020/x this includes the authority (nn:8020);
-        # stripping only the scheme handed HadoopFileSystem a relative
-        # 'nn:8020/x' path.  s3/gs keep their bucket in the
-        # inner path, so their prefix stays just 'scheme://'.
-        if inner and path.rstrip("/").endswith(inner.rstrip("/")):
-            p2, i2 = path.rstrip("/"), inner.rstrip("/")
-            prefix = p2[:len(p2) - len(i2)]
-        elif inner.startswith("/"):
-            # from_uri NORMALIZED the inner path (e.g. trailing slash),
-            # so suffix-matching failed; an absolute inner means the
-            # authority was consumed — scheme://authority is the prefix
-            # (scheme-only would hand HadoopFS a relative 'nn:8020/x'
-            # path, the r5 authority bug)
-            scheme_, rest = path.split("://", 1)
-            prefix = scheme_ + "://" + rest.split("/", 1)[0]
-        else:
-            prefix = path.split("://", 1)[0] + "://"
-        return ArrowFS(arrow_fs, prefix)
-    return LocalFS()
+    if not _is_uri(path):
+        return LocalFS()
+    scheme, rest = path.split("://", 1)
+    if is_glob(rest):
+        # from_uri cannot parse a [...] class: resolve the pattern's
+        # wildcard-free directory prefix instead
+        segs = rest.split("/")
+        rest = "/".join(segs[:next(
+            i for i, s in enumerate(segs) if is_glob(s))]) or "/"
+        path = f"{scheme}://{rest}"
+    arrow_fs, inner = FileSystem.from_uri(path)
+    # prefix = everything from_uri consumed BEYOND the inner path —
+    # for hdfs://nn:8020/x this includes the authority (nn:8020);
+    # stripping only the scheme handed HadoopFileSystem a relative
+    # 'nn:8020/x' path.  s3/gs keep their bucket in the
+    # inner path, so their prefix stays just 'scheme://'.
+    if inner and path.rstrip("/").endswith(inner.rstrip("/")):
+        p2, i2 = path.rstrip("/"), inner.rstrip("/")
+        prefix = p2[:len(p2) - len(i2)]
+    elif inner.startswith("/"):
+        # from_uri NORMALIZED the inner path (e.g. trailing slash),
+        # so suffix-matching failed; an absolute inner means the
+        # authority was consumed — scheme://authority is the prefix
+        # (scheme-only would hand HadoopFS a relative 'nn:8020/x'
+        # path, the r5 authority bug)
+        prefix = scheme + "://" + rest.split("/", 1)[0]
+    else:
+        prefix = scheme + "://"
+    return ArrowFS(arrow_fs, prefix)
 
 
 def read_tail(f, size: int, name: str, magic: bytes = b"PAR1") -> bytes:

@@ -87,14 +87,16 @@ def test_failed_publish_takes_back_the_renamed_finals(tmp_path, monkeypatch):
     """A hive append whose second publish rename fails takes back the
     first final: the target holds exactly its old data files and no
     stage."""
-    from fastparquet_spark.io import LocalFS
+    from pyarrow.fs import LocalFileSystem
+
+    from fastparquet_spark.io import ArrowFS
 
     out = str(tmp_path / "ds")
     write(out, _frame([1, 2], ["a", "b"]), file_scheme="hive",
           partition_on=["k"])
     data_before = [f for f in _state(out)[0] if not f.startswith("_")]
 
-    class FailSecondReplace(LocalFS):
+    class FailSecondReplace(ArrowFS):
         calls = 0
 
         def replace(self, src, dst):
@@ -103,7 +105,8 @@ def test_failed_publish_takes_back_the_renamed_finals(tmp_path, monkeypatch):
                 raise OSError("injected rename failure")
             super().replace(src, dst)
 
-    monkeypatch.setattr(api, "get_fs", lambda path, fs=None: FailSecondReplace())
+    monkeypatch.setattr(api, "get_fs", lambda path, fs=None:
+                        FailSecondReplace(LocalFileSystem(), ""))
     with pytest.raises(OSError, match="injected"):
         write(out, _frame([3, 4], ["c", "d"]), file_scheme="hive",
               partition_on=["k"], append=True)

@@ -115,6 +115,33 @@ def test_timestamp_append_in_session_zone(registered, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", zone)
 
 
+def test_timestamp_appends_across_session_zones(registered, tmp_path):
+    """Appends from sessions in different zones record the column as
+    ``timestamp[us, tz=<zone>]`` of each session; both hold UTC
+    instants, so the union takes them as one type and every read
+    returns each row with the instant that was written."""
+    from fastparquet_spark.engine.fpsc_job import read_fpsc
+
+    spark = registered
+    out = str(tmp_path / "fpsc_zones")
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for day, tz in ((1, "UTC"), (2, "America/New_York")):
+            spark.conf.set("spark.sql.session.timeZone", tz)
+            spark.sql(f"SELECT {day} AS id, TIMESTAMP'2024-03-0{day} "
+                      f"12:00:00' AS t").write.format("fpsc") \
+                .mode("append").save(out)
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        want = [(1, "2024-03-01 12:00:00"), (2, "2024-03-02 17:00:00")]
+        for df in (spark.read.format("fpsc").load(out),
+                   read_fpsc(spark, out)):
+            got = df.selectExpr(
+                "id", "date_format(t, 'yyyy-MM-dd HH:mm:ss')").collect()
+            assert sorted(map(tuple, got)) == want
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
 def test_chunked_containers(registered, tmp_path):
     spark = registered
     out = str(tmp_path / "fpsc_chunks")

@@ -57,6 +57,9 @@ def _inputs(dirs):
                  [f"{plain}/p1.parquet", f"{plain}/q.parquet"]),
         "glob": (f"{plain}/p*.parquet",
                  [f"{plain}/p1.parquet", f"{plain}/p2.parquet"]),
+        "glob_class": (f"{plain}/[pq]1.parquet", [f"{plain}/p1.parquet"]),
+        "glob_qmark": (f"{plain}/p?.parquet",
+                       [f"{plain}/p1.parquet", f"{plain}/p2.parquet"]),
         "dir_sidecar": (side, [f"{side}/{s}.parquet" for s in ROWS]),
         "dir_listed": (plain, [f"{plain}/{s}.parquet" for s in ROWS]),
     }
@@ -67,9 +70,9 @@ def _inputs(dirs):
     return cases
 
 
-CASES = ["file", "list", "glob", "dir_sidecar", "dir_listed",
-         "uri_file", "uri_list", "uri_glob", "uri_dir_sidecar",
-         "uri_dir_listed"]
+CASES = ["file", "list", "glob", "glob_class", "glob_qmark", "dir_sidecar",
+         "dir_listed", "uri_file", "uri_list", "uri_glob", "uri_glob_class",
+         "uri_glob_qmark", "uri_dir_sidecar", "uri_dir_listed"]
 
 
 def _local(path: str) -> str:
